@@ -326,7 +326,7 @@ def main() -> None:
         "sf": sf,
         "env": {
             "cpus_visible": os.cpu_count(),
-            "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+            "cpus": spark.sparkContext.defaultParallelism,
             "loadavg1_start": LOAD_START,
             "loadavg1_headline_end": load_headline_end,
             "loadavg1_end": load_end,

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 
 from fireball_data_processing_spark.functions.text import normalize_text  # noqa: E402
+from fireball_data_processing_spark.session import conf_bytes, estimated_bytes  # noqa: E402
 
 __all__ = [
     "normalize_text", "exact_dedup_groups", "word_shingles",
@@ -102,9 +103,16 @@ def capped_shingles(sh: Column, max_shingles: int) -> Column:
     return F.when(F.size(sh) > max_shingles, sampled).otherwise(sh)
 
 
+def _corpus_bytes(spark) -> int:
+    """The input size from which the scan alone yields at least
+    ``shuffle.partitions`` splits of ``spark.sql.files.maxPartitionBytes``."""
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return parts * conf_bytes(spark, "spark.sql.files.maxPartitionBytes", "128MB")
+
+
 def _spread_words(pre: DataFrame, id_col: str) -> DataFrame:
     """Scale-gated parallelism spreader for pre-explode (id, words)
-    frames (guide §2.4/§2.5 — r12).
+    frames.
 
     Small/local inputs arrive as one or two scan partitions (a file
     only splits above ``spark.sql.files.maxPartitionBytes``), so the
@@ -116,63 +124,35 @@ def _spread_words(pre: DataFrame, id_col: str) -> DataFrame:
     shuffle of the word arrays: the scan's byte-based splits already
     provide the parallelism, and doc-grain aggregates are cheaper
     unpartitioned (map-side partial combine + a tiny post-combine
-    exchange of per-doc rows instead of a corpus-bytes exchange —
-    guide §2.3, aggregate before you shuffle). So the repartition is
-    GATED on the frame's Catalyst size estimate: applied only while
-    the input could not have produced at least ``shuffle.partitions``
-    scan splits. The probe is driver-side plan metadata — no job runs
-    — and at bench scale the gate always fires, keeping the local plan
-    byte-identical to the unconditional form."""
+    exchange of per-doc rows instead of a corpus-bytes exchange). So
+    the repartition is applied only when the size estimate is known to
+    be below :func:`_corpus_bytes`; an unknown estimate keeps the scan's
+    own splits."""
     spark = pre.sparkSession
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    jvm = spark.sparkContext._jvm
-    max_pb = int(
-        jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")
-        )
-    )
-    est = int(pre._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if est >= parts * max_pb:
+    est = estimated_bytes(pre)
+    if est is None or est >= _corpus_bytes(spark):
         return pre
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return pre.repartition(parts, F.col(id_col))
 
 
 def _pin_if_large(df: DataFrame) -> DataFrame:
     """Scale-gated persist for a frame with MULTIPLE physical consumers
     (both sides of a self-join, a broadcast build + probe) whose
-    upstream pipeline is expensive at corpus scale (guide §2.4 —
-    duplicated subtrees; the r12 ``prefix_candidates`` lesson).
+    upstream pipeline is expensive at corpus scale.
 
     At corpus scale, re-executing the upstream per consumer doubles
     full-corpus passes, so sharing one materialization is the only
-    sane plan. At LOCAL/bench scale the trade inverts: the upstream is
-    seconds of work, the consumers' subtrees execute CONCURRENTLY
+    sane plan. At local scale the trade inverts: the upstream is
+    seconds of work, the consumers' subtrees execute concurrently
     (broadcast stages overlap the probe-side scan), and a persist
     serializes them behind one cache-materialization job plus the
     cache write (measured +50% on the LSH pair queries at sf0.1). So
-    the pin is GATED on the frame's Catalyst size estimate, the same
-    driver-side metadata probe (no job) as :func:`_spread_words`, with
-    the same threshold: pin only when the input is big enough that the
-    scan alone would have produced at least ``shuffle.partitions``
-    splits — i.e. when the duplicated pass would be corpus-sized. At
-    bench scale the gate always declines, keeping the local plan
-    byte-identical to the unpinned form."""
-    if df.isStreaming:
-        return df
-    spark = df.sparkSession
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    jvm = spark.sparkContext._jvm
-    max_pb = int(
-        jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")
-        )
-    )
-    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    # Estimates above ~1 EiB are propagated UNKNOWNS, not measurements
-    # (local relations under explode/aggregate multiply out to ~2^65;
-    # file sources always carry real byte counts) — treat unknown as
-    # small rather than pinning every in-memory test frame.
-    if parts * max_pb <= est < (1 << 60):
+    the pin is applied only when the size estimate is known to reach
+    :func:`_corpus_bytes`, the threshold :func:`_spread_words` uses; an
+    unknown estimate leaves the frame unpinned."""
+    est = estimated_bytes(df)
+    if est is not None and est >= _corpus_bytes(df.sparkSession):
         return df.persist()
     return df
 
@@ -413,7 +393,7 @@ def lsh_candidate_pairs(
         )
     # Both sides of the self-join read the banded table; at corpus
     # scale pin it so the upstream signature pipeline executes once
-    # (guide §2.4; gate rationale in _pin_if_large).
+    # (gate rationale in _pin_if_large).
     banded = _pin_if_large(banded)
     a = banded.alias("a")
     b = banded.alias("b")

@@ -230,7 +230,6 @@ def dawid_skene(
     n_iter: int = 2,
     beta: float = 0.01,
     round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Dawid-Skene (1979) EM label aggregation: infer each item's true
     label from redundant noisy annotations by jointly estimating
@@ -258,7 +257,11 @@ def dawid_skene(
     max-subtracted softmax, so vote multiplicities never underflow.
 
     Returns ``(item, map_label, posterior)``: the MAP label (posterior
-    ties break to label-lexicographic order) and its rounded posterior.
+    ties break to label-lexicographic order) and its posterior exactly as
+    the last E-step rounded it. It is not rounded again: a second, coarser
+    round of a ``round_dp`` value is a decimal tie one time in a hundred,
+    and engines break a tie on a double differently (Spark rounds the
+    shortest decimal form half-up, DuckDB the binary value).
     """
     K = len(labels)
     lab_arr = F.array(*[F.lit(x) for x in labels])
@@ -385,7 +388,7 @@ def dawid_skene(
         .select(
             "item",
             F.col("c").alias("map_label"),
-            F.round(F.col("t"), out_dp).alias("posterior"),
+            F.col("t").alias("posterior"),
         )
     )
 

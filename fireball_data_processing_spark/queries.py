@@ -948,22 +948,9 @@ def q_ingest_gate_near_new(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id")
 
 
-@query(
-    "streaming_ingest_pipeline",
-    """
-WITH corpus AS (
-  SELECT DISTINCT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS content_hash
-  FROM documents WHERE doc_id % 4 = 0
-),
-inc AS (
-  SELECT doc_id, source, lang, text,
-    md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS content_hash
-  FROM documents WHERE doc_id % 4 <> 0
-),
-fresh AS (
-  SELECT i.* FROM inc i ANTI JOIN corpus c ON c.content_hash = i.content_hash
-),
-w AS (
+# Gopher quality gate + (source, lang) totals shared by both capstone
+# oracles: ``fresh`` (the docs past the dedup gate) is defined by the head.
+_CAPSTONE_GOPHER_TAIL = """w AS (
   SELECT doc_id, source, lang, text,
     regexp_split_to_array(trim(text), '\\s+') AS words,
     string_split(text, chr(10)) AS lines
@@ -993,13 +980,94 @@ WHERE n_words >= 50 AND n_words <= 100000
   AND mwl >= 3.0 AND mwl <= 10.0 AND sym <= 0.1 AND alpha >= 0.8
   AND stop_hits >= 2 AND bul <= 0.9 AND ell <= 0.3
 GROUP BY source, lang
-""",
+"""
+
+
+def _ingest_capstone(
+    spark: SparkSession,
+    sf_dir: str,
+    gate: str,
+    build_index: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Shared body of the two streaming capstones: stage the incoming
+    docs (doc_id % 4 != 0) as slice files, gate them against an index
+    built from the corpus docs (doc_id % 4 == 0) by ``build_index``, run
+    the stream, and return the merged final table.
+
+    One workspace per (process, sf_dir, gate), wiped at call start, so
+    repeated runs reuse one tree instead of accumulating staging copies.
+    The wipe is safe with an earlier returned frame outstanding: the
+    totals are localCheckpoint-materialized, so no returned frame ever
+    lazily reads the tree."""
+    import hashlib
+    import os
+    import shutil
+    import tempfile
+    from concurrent.futures import ThreadPoolExecutor
+
+    from fireball_data_processing_spark.streaming.capstone import (
+        read_pipeline_totals,
+        run_ingest_pipeline,
+        stage_incoming_slices,
+    )
+
+    d = load_table(spark, sf_dir, "documents")
+    corpus = d.filter(F.pmod(F.col("doc_id"), F.lit(4)) == 0)
+    incoming = d.filter(F.pmod(F.col("doc_id"), F.lit(4)) != 0)
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    base = os.path.join(
+        tempfile.gettempdir(), f"fb_ingest_{gate}_capstone_{os.getpid()}_{tag}"
+    )
+    shutil.rmtree(base, ignore_errors=True)
+    staging = f"{base}/staging"
+    # The staging write and the index pin are independent Spark actions:
+    # overlap them from two driver threads so the index build back-fills
+    # executors the staging write's tail leaves idle. The pin itself is
+    # the foreachBatch contract: without it every epoch would rebuild the
+    # index from the corpus scan (the materialized index is tiny).
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        staged = pool.submit(stage_incoming_slices, incoming, staging, 4)
+        index_f = pool.submit(lambda: build_index(corpus).localCheckpoint())
+        staged.result()
+        index = index_f.result()
+    # Near gate: each staged slice is ONE small file and so one input
+    # partition, while the per-row MinHash is the cost center (3x when
+    # fanned to the core count). The caller knows its slices are small,
+    # so the floor is a constructor flag, not a per-epoch probe.
+    run_ingest_pipeline(
+        spark, staging, incoming.schema, index,
+        f"{base}/out", f"{base}/ckpt", gate=gate,
+        min_parallelism=(
+            spark.sparkContext.defaultParallelism if gate == "near" else None
+        ),
+    )
+    # eager (source, lang)-grain materialization detaches the returned
+    # frame from the workspace (the table is a handful of rows)
+    return read_pipeline_totals(spark, f"{base}/out").localCheckpoint()
+
+
+@query(
+    "streaming_ingest_pipeline",
+    """
+WITH corpus AS (
+  SELECT DISTINCT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS content_hash
+  FROM documents WHERE doc_id % 4 = 0
+),
+inc AS (
+  SELECT doc_id, source, lang, text,
+    md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS content_hash
+  FROM documents WHERE doc_id % 4 <> 0
+),
+fresh AS (
+  SELECT i.* FROM inc i ANTI JOIN corpus c ON c.content_hash = i.content_hash
+),
+""" + _CAPSTONE_GOPHER_TAIL,
 )
 def q_streaming_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming capstone, end to end and oracle-checked
     (streaming/capstone.py): documents arriving as parquet slice files
     run through a REAL Structured Streaming job — exact-dup ingest gate
-    (broadcast anti-join vs the frozen corpus hash index) → Gopher
+    (size-aware anti-join vs the frozen corpus hash index) → Gopher
     quality gate → per-(source, lang) partial aggregation → exactly-once
     epoch-partitioned sink — and the returned frame is the merged final
     table. Because replayed epochs overwrite their own partition and the
@@ -1007,63 +1075,11 @@ def q_streaming_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     input set, independent of micro-batch boundaries (restart/replay
     pinned in tests/test_capstone_stream.py) — which is exactly what
     lets ONE batch SQL statement oracle the whole pipeline."""
-    import hashlib
-    import shutil
-    import tempfile
-
-    from fireball_data_processing_spark.streaming.capstone import (
-        read_pipeline_totals,
-        run_ingest_pipeline,
-        stage_incoming_slices,
-    )
     from fireball_data_processing_spark.streaming.dedup_stream import (
         corpus_hash_index,
     )
 
-    d = load_table(spark, sf_dir, "documents")
-    corpus = d.filter(F.pmod(F.col("doc_id"), F.lit(4)) == 0)
-    incoming = d.filter(F.pmod(F.col("doc_id"), F.lit(4)) != 0)
-    # ONE workspace per (process, sf_dir), wiped at call start: repeated
-    # bench/verify runs reuse the same tree instead of accumulating a
-    # fresh mkdtemp (staging holds a parquet copy of 75% of documents).
-    # Safe to wipe even with an earlier returned frame outstanding: the
-    # totals are localCheckpoint-materialized below, so no returned
-    # frame ever lazily reads this tree.
-    import os
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"fb_ingest_capstone_{os.getpid()}_{tag}"
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    staging = f"{base}/staging"
-    # staging write and index materialization are INDEPENDENT Spark
-    # actions — overlap them from two driver threads (guide §2.6) so
-    # the index build back-fills executors the staging write's tail
-    # leaves idle. The index pin itself is the foreachBatch contract:
-    # without it each of the 4 epochs would re-run the corpus scan +
-    # distinct (corpus_hash_index's own docstring; the checkpoint is
-    # distinct-hash-sized, tiny).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        staged = pool.submit(
-            stage_incoming_slices, incoming, staging, 4
-        )
-        index_f = pool.submit(
-            lambda: corpus_hash_index(corpus).localCheckpoint()
-        )
-        staged.result()
-        index = index_f.result()
-    run_ingest_pipeline(
-        spark, staging, incoming.schema, index,
-        f"{base}/out", f"{base}/ckpt",
-    )
-    # eager (source, lang)-grain materialization: detaches the returned
-    # frame from the workspace, so constructing this query again — or
-    # any future wipe — cannot invalidate a frame a caller still holds
-    # (the r10-advice hazard; the table is a handful of rows)
-    return read_pipeline_totals(spark, f"{base}/out").localCheckpoint()
+    return _ingest_capstone(spark, sf_dir, "exact", corpus_hash_index)
 
 
 @query(
@@ -1103,110 +1119,31 @@ fresh AS (
   SELECT doc_id, source, lang, text FROM documents d
   WHERE d.doc_id % 4 <> 0 AND d.doc_id NOT IN (SELECT doc_id FROM hits)
 ),
-w AS (
-  SELECT doc_id, source, lang, text,
-    regexp_split_to_array(trim(text), '\\s+') AS words,
-    string_split(text, chr(10)) AS lines
-  FROM fresh
-),
-m AS (
-  SELECT doc_id, source, lang,
-    len(words) AS n_words,
-    list_sum(list_transform(words, x -> length(x)))::DOUBLE / len(words) AS mwl,
-    ((length(text) - length(replace(text, '#', '')))
-     + (length(text) - length(replace(text, '...', ''))) / 3)::DOUBLE
-      / len(words) AS sym,
-    len(list_filter(words, x -> regexp_matches(x, '[A-Za-z]')))::DOUBLE
-      / len(words) AS alpha,
-    len(list_filter(words, x -> list_contains(
-      ['the','a','of','and','to','in','is','it','that','for'], lower(x))))
-      AS stop_hits,
-    len(list_filter(lines, l -> starts_with(l, '- ') OR starts_with(l, '* ')
-      OR starts_with(l, chr(8226))))::DOUBLE / len(lines) AS bul,
-    len(list_filter(lines, l -> l LIKE '%...'))::DOUBLE / len(lines) AS ell
-  FROM w
-)
-SELECT source, lang, COUNT(*)::BIGINT AS n_docs,
-  SUM(n_words)::BIGINT AS n_tokens
-FROM m
-WHERE n_words >= 50 AND n_words <= 100000
-  AND mwl >= 3.0 AND mwl <= 10.0 AND sym <= 0.1 AND alpha >= 0.8
-  AND stop_hits >= 2 AND bul <= 0.9 AND ell <= 0.3
-GROUP BY source, lang
-""",
+""" + _CAPSTONE_GOPHER_TAIL,
 )
 def q_streaming_ingest_near_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Capstone v2 — the TRUE-corpus-scale form the v1 docstring names:
-    same REAL Structured Streaming job (slice files → gate → Gopher →
-    (source, lang) partials → exactly-once epoch-partitioned sink →
-    additive merge), with the exact-hash ingest gate swapped for the
-    NEAR-dup gate — per-row MinHash signature → LSH band keys → one
-    stateless lookup per band against the frozen corpus band index
-    (streaming/dedup_stream.py `near_new_documents` over
-    `corpus_band_index`). A doc near-duplicating ANY corpus doc under
+    """The streaming capstone with the TRUE-corpus-scale gate: the exact
+    hash gate swapped for the NEAR-dup gate — per-row MinHash signature →
+    LSH band keys → one stateless lookup per band against the frozen
+    corpus band index (streaming/dedup_stream.py `near_new_documents`
+    over `corpus_band_index`). A doc near-duplicating ANY corpus doc under
     the banding scheme is rejected, not just byte-identical repeats.
     Every gate stage is stateless per micro-batch, so the final table
     stays a pure function of the input set (restart/slicing tests
     parameterize over both gates in tests/test_capstone_stream.py) —
     which is what lets ONE batch SQL statement oracle the LIVE stream's
     output."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from fireball_data_processing_spark.operators.dedup import minhash_signature
-    from fireball_data_processing_spark.streaming.capstone import (
-        read_pipeline_totals,
-        run_ingest_pipeline,
-        stage_incoming_slices,
-    )
     from fireball_data_processing_spark.streaming.dedup_stream import (
         corpus_band_index,
     )
 
-    d = load_table(spark, sf_dir, "documents")
-    corpus = d.filter(F.pmod(F.col("doc_id"), F.lit(4)) == 0)
-    incoming = d.filter(F.pmod(F.col("doc_id"), F.lit(4)) != 0)
-    # workspace discipline as in v1: one tree per (process, sf_dir),
-    # wiped at call start, returned frame detached via localCheckpoint
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"fb_ingest_near_capstone_{os.getpid()}_{tag}"
+    return _ingest_capstone(
+        spark, sf_dir, "near",
+        lambda corpus: corpus_band_index(
+            minhash_signature(corpus), num_hashes=8, band_size=2
+        ),
     )
-    shutil.rmtree(base, ignore_errors=True)
-    staging = f"{base}/staging"
-    # staging write and band-index materialization are INDEPENDENT
-    # Spark actions — overlap them from two driver threads (guide
-    # §2.6; the index build is the costlier leg here: corpus scan +
-    # shingle explode + distinct). The pin itself is the foreachBatch
-    # contract — the materialized form is one row per occupied LSH
-    # bucket, tiny.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        staged = pool.submit(
-            stage_incoming_slices, incoming, staging, 4
-        )
-        index_f = pool.submit(
-            lambda: corpus_band_index(
-                minhash_signature(corpus), num_hashes=8, band_size=2
-            ).localCheckpoint()
-        )
-        staged.result()
-        index = index_f.result()
-    # parallelism floor: each staged slice is ONE small file (one file
-    # per slice dir by stage_incoming_slices) and thus one input partition; the near
-    # gate's per-row MinHash expression is the cost center — measured 3x
-    # when fanned to the core count. Passed as a constructor flag (the
-    # caller KNOWS its slices are small) instead of a per-epoch
-    # rdd.getNumPartitions() probe.
-    run_ingest_pipeline(
-        spark, staging, incoming.schema, index,
-        f"{base}/out", f"{base}/ckpt", gate="near",
-        min_parallelism=spark.sparkContext.defaultParallelism,
-    )
-    return read_pipeline_totals(spark, f"{base}/out").localCheckpoint()
 
 
 @query(
@@ -9674,7 +9611,7 @@ t{it} AS (
         )
     parts.append(
         f"""
-SELECT item, c AS map_label, ROUND(t, 6) AS posterior
+SELECT item, c AS map_label, t AS posterior
 FROM t{n_iter}
 QUALIFY ROW_NUMBER() OVER (PARTITION BY item ORDER BY t DESC, c ASC) = 1
 """

@@ -17,10 +17,17 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-# Defaults match the driver harness: local[$SPARK_GRAFT_CPUS].
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# local[$SPARK_GRAFT_CPUS] when set, else every core this process may run on.
+_DEFAULT_CPUS = os.environ.get(
+    "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+)
+
+# Catalyst propagates an unknown size as a huge product (local relations
+# under explode/aggregate multiply out to ~2^65); file sources always carry
+# real byte counts, so anything above ~1 EiB is treated as unknown.
+_UNKNOWN_SIZE = 1 << 60
 
 
 def get_spark(
@@ -65,3 +72,32 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def conf_bytes(spark: SparkSession, key: str, default: str) -> int:
+    """A byte-size conf (``"128MB"``, ``"10485760b"``, ``"-1"``) in bytes,
+    parsed the way Spark parses it; a negative value (``-1`` = disabled)
+    stays negative."""
+    raw = spark.conf.get(key, default).strip()
+    sign = -1 if raw.startswith("-") else 1
+    util = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    return sign * int(util.byteStringAsBytes(raw.lstrip("-")))
+
+
+def estimated_bytes(df: DataFrame) -> int | None:
+    """Catalyst's optimized-plan ``sizeInBytes`` for ``df``: driver-side
+    plan metadata, no job runs (``localCheckpoint`` keeps the origin
+    plan's stats, so a pinned frame still reports its true estimate).
+
+    ``None`` when the size is not known: a streaming frame, a propagated
+    unknown, or a failing probe (it goes through a private API). Every
+    size gate treats ``None`` as "decline" and keeps the distributed
+    plan, so a broken probe costs speed at small scale, never a
+    serialized or broadcast corpus at large scale."""
+    if df.isStreaming:
+        return None
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # noqa: BLE001 - private API: fail safe, never raise
+        return None
+    return est if est < _UNKNOWN_SIZE else None

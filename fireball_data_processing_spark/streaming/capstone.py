@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fireball_data_processing_spark.functions.textstats import gopher_rules
+from fireball_data_processing_spark.session import conf_bytes, estimated_bytes
 from fireball_data_processing_spark.streaming.dedup_stream import (
     content_hash,
     corpus_hash_index,
@@ -72,8 +73,7 @@ __all__ = [
 # the Gopher rule columns and the content-hash column can be built ONCE per
 # (min_words) and reused by every micro-batch. Without this, every epoch
 # re-ran the whole py4j expression-construction chatter (~0.3-0.5 s/epoch
-# measured driver-side at sf0.1 — pure plan BUILD cost, before any job ran;
-# guide §1.1: find where the time actually goes, here the driver).
+# measured driver-side at sf0.1 — pure plan BUILD cost, before any job ran).
 _GATE_EXPR_CACHE: dict[int, tuple[F.Column, F.Column, F.Column]] = {}
 
 
@@ -90,57 +90,37 @@ def _gate_exprs(min_words: int) -> tuple[F.Column, F.Column, F.Column]:
 
 
 def should_broadcast_index(index: DataFrame) -> bool:
-    """Size-aware broadcast decision for the static gate index: compare
-    Catalyst's optimized-plan size estimate against the session's
-    ``spark.sql.autoBroadcastJoinThreshold``. Driver-side metadata only
-    — no job runs (``localCheckpoint`` preserves the origin plan's
-    stats, so a pinned index still reports its true estimate).
+    """Size-aware broadcast decision for the static gate index: hint only
+    while Catalyst's size estimate (:func:`~...session.estimated_bytes`)
+    fits the session's ``spark.sql.autoBroadcastJoinThreshold``.
 
     Why not hint unconditionally: at true corpus scale the exact-dup
     hash index is billions of 32-byte hashes — an unconditional
     ``F.broadcast`` would OOM every executor. Below the threshold the
     hint is kept (the index is known-compact, don't make AQE guess);
-    above it — or when broadcasting is disabled with ``-1`` — the gate
-    degrades to a plain left-anti join and Catalyst/AQE pick a shuffled
-    strategy sized to reality."""
-    spark = index.sparkSession
-    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    if raw.strip().startswith("-"):  # -1 = broadcasting disabled
-        return False
-    jvm = spark.sparkContext._jvm
-    threshold = int(
-        jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
+    above it, with broadcasting disabled (``-1``) or with an unknown
+    estimate, the gate degrades to a plain left-anti join and
+    Catalyst/AQE pick a shuffled strategy sized to reality."""
+    est = estimated_bytes(index)
+    threshold = conf_bytes(
+        index.sparkSession, "spark.sql.autoBroadcastJoinThreshold", "10MB"
     )
-    est = int(
-        index._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    return est <= threshold
+    return est is not None and est <= threshold
 
 
 def _single_split_batch(batch_df: DataFrame) -> bool:
-    """True when the micro-batch's Catalyst size estimate fits ONE scan
-    split (``spark.sql.files.maxPartitionBytes``) — i.e. the batch
-    already executes as a single task, so collapsing the per-batch
-    aggregate to one partition costs no parallelism and removes its
-    shuffle exchange outright (guide §2.4). Driver-side metadata probe
-    only — no job, no plan→RDD conversion (the ``_pin_if_large`` /
-    ``should_broadcast_index`` idiom). A file-source micro-batch always
-    carries real byte counts; estimates above ~1 EiB are propagated
-    unknowns — treat as LARGE (decline the fast path) rather than
-    serializing a corpus-sized batch through one task."""
-    if batch_df.isStreaming:  # only meaningful for materialized batches
-        return False
-    spark = batch_df.sparkSession
-    jvm = spark.sparkContext._jvm
-    max_pb = int(
-        jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")
-        )
+    """True when the micro-batch's size estimate fits ONE scan split
+    (``spark.sql.files.maxPartitionBytes``) — i.e. the batch already
+    executes as a single task, so collapsing the per-batch aggregate to
+    one partition costs no parallelism and removes its shuffle exchange
+    outright. A streaming frame or an unknown estimate declines the
+    fast path rather than serializing a corpus-sized batch through one
+    task."""
+    est = estimated_bytes(batch_df)
+    max_pb = conf_bytes(
+        batch_df.sparkSession, "spark.sql.files.maxPartitionBytes", "128MB"
     )
-    est = int(
-        batch_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    return est <= max_pb  # unknowns (~2^64) always exceed max_pb
+    return est is not None and est <= max_pb
 
 
 def stage_incoming_slices(
@@ -233,27 +213,24 @@ def ingest_pipeline_batch(
     parallelism.
     """
     n_words_col, passes_col, hash_col = _gate_exprs(min_words)
-    # Single-split fast path (exact gate only): a staged slice file below
-    # maxPartitionBytes arrives as ONE scan partition, so the per-batch
-    # (source, lang) aggregate's shuffle exchange moves zero-parallelism
-    # data — coalesce(1) before the groupBy satisfies the aggregate's
-    # clustering requirement with SinglePartition and the planner drops
-    # the Exchange (and with it one AQE query-stage job PER EPOCH; plan
-    # fact in plans/r13/streaming_ingest_pipeline_after.txt). Gated on
-    # the batch's size estimate: a corpus-scale batch keeps the
-    # distributed aggregate (its partial-agg shuffle is taxonomy-sized
-    # and its map side needs every scan split). The near gate never
-    # takes this path — its min_parallelism repartition exists to fan
-    # the per-row MinHash out, and a pre-aggregate coalesce(1) would
-    # fuse upstream and serialize exactly that work.
-    single_task = gate == "exact" and _single_split_batch(batch_df)
+    single_task = False
     if gate == "exact":
         keyed = batch_df.withColumn("content_hash", hash_col)
         if broadcast_index is None:
             broadcast_index = should_broadcast_index(index)
         right = F.broadcast(index) if broadcast_index else index
         fresh = keyed.join(right, "content_hash", "left_anti")
+        # Single-split fast path: a staged slice below maxPartitionBytes
+        # arrives as ONE scan partition, so coalesce(1) before the
+        # (source, lang) groupBy satisfies the aggregate's clustering
+        # requirement and the planner drops its Exchange (one AQE
+        # query-stage job per epoch). Safe only with a broadcast index:
+        # a shuffled anti-join upstream would fuse into the same single
+        # task. A corpus-scale batch keeps the distributed aggregate.
+        single_task = broadcast_index and _single_split_batch(batch_df)
     elif gate == "near":
+        # never the single-task path: min_parallelism fans out the
+        # per-row MinHash, which a coalesce(1) would serialize again
         if min_parallelism is not None and min_parallelism > 1:
             batch_df = batch_df.repartition(min_parallelism)
         fresh = near_new_documents(batch_df, index)

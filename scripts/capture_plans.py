@@ -1,12 +1,13 @@
-"""Capture .explain("formatted") for the round-12 optimization targets.
+"""Capture .explain("formatted") for a round's optimization targets.
 
-Writes plans/r12/<query>_<tag>.txt for each named query (tag = before/after).
+Writes plans/<round>/<query>_<tag>.txt for each named query (tag =
+before/after; default: the headline suite plus the heavy extras).
 For the two streaming capstones the returned frame is a localCheckpoint of
 the final table (the stream already ran), so the meaningful plan is the
 PER-EPOCH batch plan — captured via ingest_pipeline_batch over one staged
-slice plus the staging write plan.
+slice.
 
-Usage: python scripts/capture_plans_r12.py <tag> [query ...]
+Usage: python scripts/capture_plans.py <round> <tag> [query ...]
 """
 
 from __future__ import annotations
@@ -19,8 +20,9 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                       "plans", "r12")
+PLANS_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans"
+)
 
 DEFAULT_TARGETS = [
     # headline legacy suite
@@ -48,30 +50,29 @@ def explain_str(df) -> str:
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:] or DEFAULT_TARGETS
-    os.makedirs(OUT_DIR, exist_ok=True)
-
-    from pyspark.sql import functions as F
+    round_, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or DEFAULT_TARGETS
+    out_dir = os.path.join(PLANS_DIR, round_)
+    os.makedirs(out_dir, exist_ok=True)
 
     from fireball_data_processing_spark import queries as catalog
     from fireball_data_processing_spark.session import get_spark
-    from fireball_data_processing_spark.sources.tables import load_table
 
-    spark = get_spark(app_name="plan-capture-r12")
+    spark = get_spark(app_name=f"plan-capture-{round_}")
     spark.sparkContext.setLogLevel("ERROR")
 
     for name in names:
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
         if name in ("streaming_ingest_pipeline", "streaming_ingest_near_pipeline"):
-            _capture_capstone(spark, name, tag)
+            _capture_capstone(spark, name, path)
             continue
         df = catalog.REGISTRY[name].fn(spark, SF_DIR)
-        with open(os.path.join(OUT_DIR, f"{name}_{tag}.txt"), "w") as f:
+        with open(path, "w") as f:
             f.write(explain_str(df))
         print("captured", name, flush=True)
 
 
-def _capture_capstone(spark, name: str, tag: str) -> None:
+def _capture_capstone(spark, name: str, path: str) -> None:
     """Per-epoch batch plan + staging plan for a capstone (the query fn
     itself runs the whole stream; its returned frame is a checkpoint scan)."""
     from pyspark.sql import functions as F
@@ -103,7 +104,7 @@ def _capture_capstone(spark, name: str, tag: str) -> None:
             slice0, index, gate="near",
             min_parallelism=spark.sparkContext.defaultParallelism,
         )
-    with open(os.path.join(OUT_DIR, f"{name}_{tag}.txt"), "w") as f:
+    with open(path, "w") as f:
         f.write("== per-epoch batch plan (one staged slice) ==\n")
         f.write(explain_str(batch))
     print("captured", name, flush=True)

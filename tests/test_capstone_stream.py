@@ -3,6 +3,9 @@ parity, micro-batch-boundary independence, and restart/replay safety."""
 
 from __future__ import annotations
 
+import contextlib
+import io
+
 from pyspark.sql import functions as F
 
 from fireball_data_processing_spark.sources.tables import load_table
@@ -20,8 +23,8 @@ from fireball_data_processing_spark.streaming.dedup_stream import (
 
 import pytest
 
-pytestmark = pytest.mark.slow  # driver-budget split (r13): long
-# end-to-end runs excluded from the default suite; run with -m slow
+# End-to-end stream runs are marked `slow` one by one (run with -m slow);
+# the plan-shape tests of the size gates run in the default suite.
 
 SMOKE = "/root/testdata/sf0.001"
 MIN_WORDS = 10  # sf0.001 docs are short; the CATALOG query gates at the
@@ -53,6 +56,13 @@ def _batch_truth(corpus, incoming, gate="exact"):
     )
 
 
+def _plan(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
 def _rows(df):
     return sorted(
         (r["source"], r["lang"], r["n_docs"], r["n_tokens"])
@@ -60,6 +70,7 @@ def _rows(df):
     )
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("gate", ["exact", "near"])
 def test_stream_matches_batch_plan(spark, tmp_path, gate):
     corpus, incoming = _fixture(spark)
@@ -79,6 +90,7 @@ def test_stream_matches_batch_plan(spark, tmp_path, gate):
     assert parts.select("batch_id").distinct().count() >= 2
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("gate", ["exact", "near"])
 def test_final_table_independent_of_slicing(spark, tmp_path, gate):
     """2 slices vs 5 slices: different micro-batch boundaries, same
@@ -100,6 +112,7 @@ def test_final_table_independent_of_slicing(spark, tmp_path, gate):
     assert results[0] == results[1]
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("gate", ["exact", "near"])
 def test_restart_resumes_without_double_counting(spark, tmp_path, gate):
     """Run the stream over the first slices, then stage more and resume
@@ -147,6 +160,7 @@ def test_restart_resumes_without_double_counting(spark, tmp_path, gate):
     )
 
 
+@pytest.mark.slow
 def test_gate_rejects_corpus_duplicates_and_low_quality(spark):
     """Unit-level semantics of the composed per-batch plan: a doc whose
     normalized content is already in the corpus index never reaches the
@@ -175,6 +189,7 @@ def test_gate_rejects_corpus_duplicates_and_low_quality(spark):
     assert got == [("b", "en", 1, len(good.split()))]
 
 
+@pytest.mark.slow
 def test_near_gate_rejects_what_exact_gate_admits(spark):
     """The v2 distinction in one fixture: a NEAR-duplicate of a corpus
     doc (one word changed → identical MinHash under 3-shingles except
@@ -210,6 +225,7 @@ def test_near_gate_rejects_what_exact_gate_admits(spark):
     assert [r[:2] for r in near] == [("c", "en")]
 
 
+@pytest.mark.slow
 def test_capstone_query_earlier_frame_survives_reconstruction(spark):
     """ADVICE r10 regression: constructing the catalog query twice
     before collecting the first result must not invalidate the first
@@ -224,6 +240,7 @@ def test_capstone_query_earlier_frame_survives_reconstruction(spark):
     assert _rows(first) == _rows(second)  # first frame still readable
 
 
+@pytest.mark.slow
 def test_ingest_pipeline_batch_rejects_unknown_gate(spark):
     corpus, incoming = _fixture(spark)
     with pytest.raises(ValueError, match="unknown gate"):
@@ -231,24 +248,15 @@ def test_ingest_pipeline_batch_rejects_unknown_gate(spark):
 
 
 def test_exact_gate_is_size_aware_not_broadcast_pinned(spark):
-    """Judge r11 ask #2: the exact gate must degrade gracefully when the
-    corpus hash index outgrows the broadcast threshold — at 100 TB the
-    index is billions of hashes and an unconditional F.broadcast hint
-    would OOM executors. Below the threshold the hint is kept; above it
-    (or with broadcasting disabled, -1) the plan falls back to a
-    shuffled left-anti join."""
-    import contextlib
-    import io
-
+    """The exact gate must degrade gracefully when the corpus hash index
+    outgrows the broadcast threshold — at 100 TB the index is billions
+    of hashes and an unconditional F.broadcast hint would OOM executors.
+    Below the threshold the hint is kept; above it (or with broadcasting
+    disabled, -1) the plan falls back to a shuffled left-anti join and
+    leaves out the single-task fast path."""
     from fireball_data_processing_spark.streaming.capstone import (
         should_broadcast_index,
     )
-
-    def _plan(df) -> str:
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("extended")
-        return buf.getvalue()
 
     corpus, incoming = _fixture(spark)
     idx = _index(corpus, "exact").localCheckpoint()  # stats survive the pin
@@ -267,6 +275,9 @@ def test_exact_gate_is_size_aware_not_broadcast_pinned(spark):
         plan = _plan(ingest_pipeline_batch(incoming, idx, min_words=MIN_WORDS))
         assert "BroadcastHashJoin" not in plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+        # no single-task fast path either: a coalesce(1) would pull the
+        # whole shuffled anti-join through one task
+        assert "Coalesce" not in plan
 
         # broadcasting disabled outright behaves the same
         spark.conf.set(key, "-1")
@@ -290,9 +301,12 @@ def test_exact_gate_is_size_aware_not_broadcast_pinned(spark):
     broadcasted = ingest_pipeline_batch(
         incoming, idx, min_words=MIN_WORDS, broadcast_index=True
     )
+    assert "Coalesce" not in _plan(shuffled)
+    assert "Coalesce" in _plan(broadcasted)
     assert _rows(shuffled) == _rows(broadcasted)
 
 
+@pytest.mark.slow
 def test_live_stream_exact_gate_correct_above_broadcast_threshold(spark, tmp_path):
     """The size-aware decision through the REAL stream: with the
     broadcast threshold floored (the 100 TB shape — index 'too big' to
@@ -319,6 +333,7 @@ def test_live_stream_exact_gate_correct_above_broadcast_threshold(spark, tmp_pat
     assert len(got) > 0
 
 
+@pytest.mark.slow
 def test_near_gate_parallelism_floor_preserves_results(spark):
     """Judge r11 ask #7: the small-slice parallelism floor is a
     constructor flag (split-metadata signal hoisted to stream
@@ -342,16 +357,7 @@ def test_exact_gate_single_split_agg_is_exchange_free(spark):
     satisfies the groupBy's clustering requirement), a too-big/unknown
     estimate keeps the distributed aggregate, and the rows are identical
     either way (r13; guide §2.4 — remove shuffles outright)."""
-    import contextlib
-    import io
-
     from fireball_data_processing_spark.streaming import capstone
-
-    def _plan(df) -> str:
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue()
 
     corpus, incoming = _fixture(spark)
     idx = _index(corpus, "exact").localCheckpoint()

@@ -421,6 +421,42 @@ def test_dawid_skene_symmetric_tie_breaks_lexicographic(spark):
     assert got[0][0] == "a"
 
 
+def test_dawid_skene_posterior_tie_matches_oracle(spark):
+    """Item 2 of this fixed panel ends EM at t = 0.5088185, a tie at 6 dp
+    whose binary double lies just below the tie: Spark's round (half-up
+    on the decimal form) and DuckDB's (on the binary value) would part
+    ways there, so the query and its oracle both emit the 8-dp posterior
+    the last E-step produced, and must agree on every item."""
+    import duckdb
+
+    from fireball_data_processing_spark.plans.agreement import dawid_skene
+    from fireball_data_processing_spark.queries import _dawid_skene_oracle
+
+    labels = ["view", "click", "purchase", "signup", "error"]
+    events, x = [], 5097  # a linear-congruential panel: 20 items, 60 votes
+    for j in range(60):
+        x = (x * 1103515245 + 12345) % 2**31
+        events.append(((x >> 8) % 20 + 200 * j, (x >> 4) % 4, labels[(x >> 16) % 5]))
+    ratings = spark.createDataFrame(
+        events, "event_id bigint, user_id bigint, event_type string"
+    ).select(
+        (F.col("event_id") % 200).alias("item"),
+        (F.col("user_id") % 4).cast("string").alias("rater"),
+        F.col("event_type").alias("label"),
+    )
+    got = sorted(tuple(r) for r in dawid_skene(ratings, labels, n_iter=2).collect())
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE events(event_id BIGINT, user_id BIGINT, event_type VARCHAR)"
+    )
+    con.executemany("INSERT INTO events VALUES (?, ?, ?)", events)
+    want = sorted(con.execute(_dawid_skene_oracle(n_iter=2)).fetchall())
+    con.close()
+    assert (2, "error", 0.5088185) in got
+    assert got == want
+
+
 def test_f8_hash_duckdb_replay_parity(duck):
     """The oracle-side F8 rendering (`_F8_H18_SQL`: reversed md5 bytes
     -> UHUGEINT -> first 18 decimal digits, zero-padded) must equal the

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 
 from pyspark.sql import functions as F
@@ -79,12 +80,16 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         write_bucketed,
     )
 
+    import shutil
+    from urllib.parse import urlparse
+
     spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
+    # a stale table dir left by an earlier session fails the write with
+    # LOCATION_ALREADY_EXISTS: clear it in this session's warehouse
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     for t in ("ev_bucketed_a", "ev_bucketed_agg"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-    import shutil
-
-    shutil.rmtree("/root/repo/spark-warehouse", ignore_errors=True)
+        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
     ev = load_table(spark, SMOKE, "events").select(
         "event_id", "user_id", "event_type", "value"
     )

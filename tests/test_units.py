@@ -1769,22 +1769,57 @@ def test_automation_oracle_replays_python_walk(duck):
     assert got == want
 
 
-def test_pin_if_large_gates_on_size_estimate(spark):
-    """_pin_if_large (r12): the multi-consumer pin must DECLINE at local
-    scale (plan byte-identical, no cache) and APPLY on a corpus-sized
-    estimate — the scale-adaptive persist behind lsh_candidate_pairs'
-    band self-join and winnow_copy_pairs' fingerprint self-join."""
-    from fireball_data_processing_spark.operators.dedup import _pin_if_large
+class _BrokenProbe:
+    """A frame's JVM handle whose plan-stats call raises, as the private
+    API would on a Spark build without it; everything else delegates."""
 
-    small = spark.range(10)
-    assert _pin_if_large(small) is small  # gate declines: frame untouched
+    def __init__(self, jdf):
+        self._jdf = jdf
 
-    big = spark.range(1 << 33)  # ~64 GiB Catalyst estimate (8 B/row)
-    pinned = _pin_if_large(big)
-    try:
-        assert pinned.storageLevel.useMemory or pinned.storageLevel.useDisk
-    finally:
-        pinned.unpersist()
+    def __getattr__(self, name):
+        return getattr(self._jdf, name)
+
+    def queryExecution(self):
+        raise RuntimeError("plan stats unavailable")
+
+
+def test_estimated_bytes_drives_every_size_gate(spark, monkeypatch):
+    """One size probe behind four gates: a real estimate (small or
+    corpus-sized) drives each gate; a streaming frame or a probe that
+    raises gives ``None``, and every gate then declines — no repartition,
+    no pin, no broadcast hint, no single-task fast path."""
+    from fireball_data_processing_spark.operators.dedup import (
+        _pin_if_large,
+        _spread_words,
+    )
+    from fireball_data_processing_spark.session import estimated_bytes
+    from fireball_data_processing_spark.streaming.capstone import (
+        _single_split_batch,
+        should_broadcast_index,
+    )
+
+    broken = spark.range(10)
+    monkeypatch.setattr(broken, "_jdf", _BrokenProbe(broken._jdf))
+    # name -> (frame, estimate check, spread, pin, broadcast, single split)
+    table = {
+        "small": (spark.range(10), lambda e: 0 < e < 1 << 20,
+                  True, False, True, True),
+        "large": (spark.range(1 << 33), lambda e: e >= 1 << 36,  # 8 B/row
+                  False, True, False, False),
+        "streaming": (spark.readStream.format("rate").load(),
+                      lambda e: e is None, False, False, False, False),
+        "broken": (broken, lambda e: e is None, False, False, False, False),
+    }
+    for name, (df, est_ok, spread, pin, bcast, single) in table.items():
+        assert est_ok(estimated_bytes(df)), name
+        assert (_spread_words(df, "id") is not df) is spread, name
+        pinned = _pin_if_large(df)
+        try:
+            assert pinned.is_cached is pin, name
+        finally:
+            pinned.unpersist()
+        assert should_broadcast_index(df) is bcast, name
+        assert _single_split_batch(df) is single, name
 
 
 def test_lsh_candidate_pairs_local_plan_unpinned(spark):
