@@ -15,7 +15,7 @@ exposes the same surface over the engine:
 Heuristic results are memoized under ``results_dir`` keyed by the dataset
 checksum, mirroring the reference's skip-if-unchanged flow
 (``heuristic_worker.py:95-110``) — recompute happens only when the corpus
-listing changes or ``force_recompute`` is passed.
+listing changes.
 """
 
 from __future__ import annotations
@@ -41,19 +41,16 @@ class FireballDataset:
         spark: SparkSession,
         data_dir: str,
         results_dir: str | None = None,
-        stream: StreamSchema | None = None,
-        schema=EVENT_SCHEMA,
     ) -> None:
         self.spark = spark
         self.data_dir = data_dir
         self.results_dir = results_dir or os.path.join(data_dir, "_results")
-        self.stream = stream or StreamSchema(
+        self.stream = StreamSchema(
             instance_col="instance_id",
             seq_col=FIREBALL_STREAM.seq_col,
             ts_col=FIREBALL_STREAM.ts_col,
             type_col=FIREBALL_STREAM.type_col,
         )
-        self._schema = schema
         self._events: DataFrame | None = None
         self._checksum: str | None = None
 
@@ -61,7 +58,7 @@ class FireballDataset:
     def events_df(self) -> DataFrame:
         if self._events is None:
             self._events = load_event_stream(
-                self.spark, self.data_dir, schema=self._schema
+                self.spark, self.data_dir, schema=EVENT_SCHEMA
             )
         return self._events
 
@@ -90,11 +87,7 @@ class FireballDataset:
         return [r["instance_id"] for r in ids]
 
     # -- heuristics (memoized) ----------------------------------------
-    def heuristics(
-        self,
-        names: tuple[str, ...] | None = None,
-        force_recompute: bool = False,
-    ) -> DataFrame:
+    def heuristics(self, names: tuple[str, ...] | None = None) -> DataFrame:
         names = names or HEURISTICS
         out = os.path.join(self.results_dir, "heuristics")
         # the memo key covers the heuristic set, not just the corpus: a
@@ -104,7 +97,7 @@ class FireballDataset:
         cs = hashlib.md5(
             (self.checksum() + "|" + ",".join(names)).encode()
         ).hexdigest()
-        if sinks.memoized(out, cs, force_recompute=force_recompute):
+        if sinks.memoized(out, cs):
             # header-only CSV reads come back all-string; infer numerics so
             # cache hits return the same dtypes as a fresh compute
             return self.spark.read.options(header=True, inferSchema=True).csv(out)
@@ -199,5 +192,5 @@ class FireballDataset:
         frame should rank through
         ``operators.windows.two_phase_global_rank`` (quantile-bucketed
         exact global rank, no single-partition window) rather than
-        ``orderBy`` — the r9 `heuristics_long_sorted` re-plan precedent."""
+        ``orderBy``, as `heuristics_long_sorted` does."""
         sinks.write_results_csv(self.heuristics(), path, checksum=self.checksum())

@@ -22,19 +22,13 @@ def _sql_literal(v) -> str:
     return repr(v)
 
 
-def values_sql(rows: list[tuple], columns: list[str], casts: dict[str, str] | None = None) -> str:
-    """Render rows as ``(VALUES ...) AS t(c1, c2, ...)`` for DuckDB, with
-    optional per-column CAST applied in a wrapping projection."""
+def values_sql(rows: list[tuple], columns: list[str]) -> str:
+    """Render rows as ``(VALUES ...) AS t(c1, c2, ...)`` for DuckDB."""
     body = ",\n    ".join(
         "(" + ", ".join(_sql_literal(v) for v in row) + ")" for row in rows
     )
     cols = ", ".join(columns)
-    if not casts:
-        return f"(VALUES\n    {body}\n) AS t({cols})"
-    proj = ", ".join(
-        f"CAST({c} AS {casts[c]}) AS {c}" if c in casts else c for c in columns
-    )
-    return f"(SELECT {proj} FROM (VALUES\n    {body}\n) AS t({cols}))"
+    return f"(VALUES\n    {body}\n) AS t({cols})"
 
 
 def spark_df(

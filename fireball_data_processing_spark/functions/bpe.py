@@ -40,7 +40,6 @@ END = "</w>"  # end-of-word marker, per the original BPE formulation
 
 def word_frequencies(
     docs: DataFrame,
-    text_col: str = "text",
     min_count: int = 2,
     top_n: int | None = None,
 ) -> DataFrame:
@@ -59,7 +58,7 @@ def word_frequencies(
     regardless of corpus shape. Pass ``min_count=1, top_n=None`` to get
     the raw unbounded table when the corpus is known-small."""
     wf = (
-        docs.select(F.explode(tokens(F.col(text_col))).alias("word"))
+        docs.select(F.explode(tokens(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
     )

@@ -22,11 +22,11 @@ from pyspark.sql import functions as F
 DEFAULT_BAD_PHRASES = ("lorem ipsum", "javascript")
 
 
-def split_segments(c: Column, sep: str = "\n") -> Column:
+def split_segments(c: Column) -> Column:
     """Document -> trimmed segments (lines by default). Empty segments are
     dropped here so every downstream rule sees real content."""
     return F.filter(
-        F.transform(F.split(c, sep), lambda s: F.trim(s)),
+        F.transform(F.split(c, "\n"), lambda s: F.trim(s)),
         lambda s: s != "",
     )
 
@@ -46,22 +46,21 @@ def segment_keep(
 
 def clean_segments(
     c: Column,
-    sep: str = "\n",
     min_words: int = 5,
     require_terminal_punct: bool = True,
 ) -> dict[str, Column]:
     """Apply the segment rule over a document; returns the surviving text
-    (segments re-joined with ``sep``) plus audit counts. Per-row array
+    (segments re-joined with newlines) plus audit counts. Per-row array
     math only — the segment filter never leaves the row, unlike an
     explode+filter+re-group formulation which would shuffle on doc id."""
-    segs = split_segments(c, sep)
+    segs = split_segments(c)
     kept = F.filter(
         segs, lambda s: segment_keep(s, min_words, require_terminal_punct)
     )
     return {
         "n_segments": F.size(segs).cast("bigint"),
         "n_kept_segments": F.size(kept).cast("bigint"),
-        "kept_text": F.array_join(kept, sep),
+        "kept_text": F.array_join(kept, "\n"),
     }
 
 

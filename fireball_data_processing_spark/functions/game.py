@@ -63,8 +63,8 @@ def actor_long_str(
     return F.array_join(F.filter(lines, lambda p: p.isNotNull()), "\n")
 
 
-def assemble_prompt(*parts: Column, sep: str = "\n\n", suffix: str = "<|asep|>") -> Column:
+def assemble_prompt(*parts: Column) -> Column:
     """F13 (reference prompts.py:1-3,55-103): join non-null parts with blank
     lines and append the separator token."""
     arr = F.filter(F.array(*parts), lambda p: p.isNotNull() & (p != ""))
-    return F.concat(F.array_join(arr, sep), F.lit(sep), F.lit(suffix))
+    return F.concat(F.array_join(arr, "\n\n"), F.lit("\n\n"), F.lit("<|asep|>"))

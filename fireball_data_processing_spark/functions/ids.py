@@ -67,11 +67,11 @@ def anonymize_value(v, name_map: dict[str, str] | None = None):
     return v
 
 
-def anonymize_json_str(s: str | None, name_map: dict[str, str] | None = None) -> str | None:
+def anonymize_json_str(s: str | None) -> str | None:
     if s is None:
         return None
     try:
-        return json.dumps(anonymize_value(json.loads(s), name_map))
+        return json.dumps(anonymize_value(json.loads(s)))
     except (ValueError, TypeError):
         return _SNOWFLAKE_RE.sub(lambda m: hashed_id(m.group(0)), s)
 

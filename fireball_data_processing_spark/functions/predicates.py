@@ -26,10 +26,10 @@ def is_command_invocation(content: Column) -> Column:
     return content.rlike(COMMAND_PREFIX_RE)
 
 
-def is_short_message(content: Column, min_words: int = 5) -> Column:
-    """P4 (reference distill1_time_group.py:56-58): fewer than ``min_words``
+def is_short_message(content: Column) -> Column:
+    """P4 (reference distill1_time_group.py:56-58): fewer than 5
     ' '-split words (the reference's exact split semantics)."""
-    return F.size(F.split(content, " ")) < min_words
+    return F.size(F.split(content, " ")) < 5
 
 
 def is_blank(content: Column) -> Column:
@@ -50,15 +50,15 @@ def is_ooc(content: Column) -> Column:
     )
 
 
-def clamp_abnormal_array(c: Column, max_len: int = 5) -> Column:
+def clamp_abnormal_array(c: Column) -> Column:
     """P7 (reference distill4_normalize.py:387-391): arrays longer than
-    ``max_len`` are treated as empty. ``F.filter(c, false)`` produces an
+    5 are treated as empty. ``F.filter(c, false)`` produces an
     empty array of the same element type without naming it."""
     return F.when(
-        F.size(c) > max_len, F.filter(c, lambda _: F.lit(False))
+        F.size(c) > 5, F.filter(c, lambda _: F.lit(False))
     ).otherwise(c)
 
 
-def within_prompt_budget(c: Column, max_chars: int = 8000) -> Column:
+def within_prompt_budget(c: Column) -> Column:
     """P10 (reference utt_cmd_test_predictions.py:44-46)."""
-    return F.length(c) <= max_chars
+    return F.length(c) <= 8000

@@ -57,12 +57,12 @@ def strip_markdown(c: Column) -> Column:
     return out
 
 
-def censor_words(c: Column, words: tuple[str, ...] = CENSOR_WORDS) -> Column:
+def censor_words(c: Column) -> Column:
     """Profanity mask: each listed word (case-insensitive, word-bounded)
     becomes censor-chars of the same length, as the reference's
     ProfanityFilter with ``set_censor("-")`` does."""
     out = c
-    for w in words:
+    for w in CENSOR_WORDS:
         out = F.regexp_replace(out, r"(?i)\b" + re.escape(w) + r"\b", "-" * len(w))
     return out
 

@@ -193,9 +193,10 @@ def gopher_rules(
 # ---------------------------------------------------------------------
 
 
-def rolling_hash(c: Column, base: int = 31, mod: int = 1_000_000_007) -> Column:
+def rolling_hash(c: Column) -> Column:
     """Polynomial rolling hash over normalized words (shift-resistant
-    document fingerprint): fold ``acc*B + h(word) mod M`` left-to-right.
+    document fingerprint): fold ``acc*31 + h(word) mod 1_000_000_007``
+    left-to-right.
 
     ``h(word)`` is the first 8 md5 hex digits as an int, so the fold is
     bit-identical in any engine with md5 (DuckDB: list_reduce with a
@@ -212,7 +213,7 @@ def rolling_hash(c: Column, base: int = 31, mod: int = 1_000_000_007) -> Column:
     return F.aggregate(
         hashes,
         F.lit(0).cast("bigint"),
-        lambda acc, x: (acc * base + x) % F.lit(mod).cast("bigint"),
+        lambda acc, x: (acc * 31 + x) % F.lit(1_000_000_007).cast("bigint"),
     )
 
 
@@ -225,20 +226,15 @@ def content_fingerprint(c: Column) -> Column:
     return F.md5(normalize_text(c))
 
 
-def unigram_logprob(
-    docs,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    round_dp: int | None = 6,
-):
+def unigram_logprob(docs):
     """Corpus-unigram cross-entropy per document — the classic LM-based
     quality signal for pretraining corpora (CCNet-style): documents whose
     tokens are improbable under the corpus's own unigram distribution are
     boilerplate/garbage candidates; ultra-low entropy means repetitive
-    text. Output: ``(id_col, avg_neg_log2_prob, n_tokens)``; token-less
+    text. Output: ``(doc_id, avg_neg_log2_prob, n_tokens)``; token-less
     docs are absent (no distribution to score under).
 
-    Plan (r12 re-plan): one token explode feeds the vocabulary count,
+    Plan: one token explode feeds the vocabulary count,
     the grand total, and the scoring join. The vocabulary's count
     aggregate sits over a token-keyed Exchange that BOTH its consumers
     (the scoring join's build side and the grand-total rollup) contain
@@ -246,9 +242,8 @@ def unigram_logprob(
     instead PERSISTED the vocab, which paid the same tokenize pass
     under a separate cache-materialization job (one extra job barrier
     + a cache write for a frame whose exchange was already shareable;
-    guide §2.4 — share one exchange, and §5 — persist only when
-    recompute beats the cache cost). The probe-side tokenize runs
-    CONCURRENTLY with the build side inside the one job. (An id-keyed
+    persist only when recompute beats the cache cost). The probe-side
+    tokenize runs CONCURRENTLY with the build side inside the one job. (An id-keyed
     pre-explode repartition à la bigram_logprob was A/B'd and rejected
     here: it deduplicates the regex pass but full-corpus-shuffles the
     word arrays — measured slower locally and strictly more corpus
@@ -262,16 +257,15 @@ def unigram_logprob(
     from fireball_data_processing_spark.functions.text import normalize_text
 
     toks = docs.select(
-        F.col(id_col),
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("token"),
+        F.col("doc_id"),
+        F.explode(F.split(normalize_text(F.col("text")), " ")).alias("token"),
     ).filter(F.col("token") != "")
     vocab = toks.groupBy("token").agg(F.count(F.lit(1)).alias("__c"))
     total = vocab.agg(F.sum("__c").cast("double").alias("__total"))
     scored = toks.join(vocab, "token").crossJoin(F.broadcast(total))
     avg = F.avg(-F.log2(F.col("__c").cast("double") / F.col("__total")))
-    if round_dp is not None:
-        avg = F.round(avg, round_dp)
-    return scored.groupBy(id_col).agg(
+    avg = F.round(avg, 6)
+    return scored.groupBy("doc_id").agg(
         avg.alias("avg_neg_log2_prob"),
         F.count(F.lit(1)).alias("n_tokens"),
     )
@@ -335,13 +329,7 @@ def repetition_features(c: Column, n: int = 2) -> dict[str, Column]:
     }
 
 
-def chunk_documents(
-    docs,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_tokens: int = 256,
-    overlap: int = 32,
-):
+def chunk_documents(docs, chunk_tokens: int = 256, overlap: int = 32):
     """Sliding-window document chunking — the embedding/RAG prep stage:
     long documents become overlapping fixed-budget chunks, each row
     ``(id, chunk_idx, chunk_text, n_chunk_tokens)``.
@@ -360,7 +348,7 @@ def chunk_documents(
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be smaller than chunk_tokens")
     stride = chunk_tokens - overlap
-    words = F.split(normalize_text(F.col(text_col)), " ")
+    words = F.split(normalize_text(F.col("text")), " ")
     n = F.size(words)
     starts = F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(stride))
     chunks = F.transform(
@@ -375,15 +363,12 @@ def chunk_documents(
             ),
         ),
     )
-    return docs.select(F.col(id_col), F.explode(chunks).alias("c")).select(
-        id_col, "c.chunk_idx", "c.chunk_text", "c.n_chunk_tokens"
+    return docs.select(F.col("doc_id"), F.explode(chunks).alias("c")).select(
+        "doc_id", "c.chunk_idx", "c.chunk_text", "c.n_chunk_tokens"
     )
 
 
-def script_counts(
-    c: Column,
-    scripts: tuple[str, ...] = ("Latin", "Cyrillic", "Han", "Arabic"),
-) -> dict[str, Column]:
+def script_counts(c: Column) -> dict[str, Column]:
     """Per-script character counts — the writing-system complement to the
     marker-lexicon language ID (a multilingual crawl needs both: script
     tells Cyrillic from Latin for free; the lexicon separates languages
@@ -392,7 +377,7 @@ def script_counts(
     RE2-portable (Java ``\\p{IsX}`` == RE2 ``\\p{X}``, which is what the
     DuckDB oracle uses)."""
     out: dict[str, Column] = {}
-    for s in scripts:
+    for s in ("Latin", "Cyrillic", "Han", "Arabic"):
         out[s.lower()] = F.length(c) - F.length(
             F.regexp_replace(c, f"\\p{{Is{s}}}", "")
         )
@@ -413,13 +398,7 @@ def dominant_script(counts: dict[str, Column]) -> Column:
     return expr
 
 
-def bigram_logprob(
-    docs,
-    alpha: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    round_dp: int | None = 6,
-):
+def bigram_logprob(docs, alpha: float = 0.5, text_col: str = "text"):
     """Corpus-bigram cross-entropy per document — the order-2 upgrade of
     :func:`unigram_logprob` (CCNet scores with a 5-gram KenLM; a
     self-trained smoothed bigram model is the engine-native analog):
@@ -431,7 +410,7 @@ def bigram_logprob(
     word TRANSITIONS (word salad, shuffled boilerplate) that a unigram
     model cannot see; ultra-high probability = repetitive text.
 
-    Output: ``(id_col, avg_neg_log2_bigram_prob, n_bigrams)``; docs with
+    Output: ``(doc_id, avg_neg_log2_bigram_prob, n_bigrams)``; docs with
     fewer than two tokens are absent (no transition to score).
 
     Plan: ONE bigram explode feeds everything — corpus bigram counts and
@@ -450,11 +429,11 @@ def bigram_logprob(
 
     parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     pre = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.filter(
             F.split(normalize_text(F.col(text_col)), " "), lambda s: s != ""
         ).alias("__words"),
-    ).repartition(parts, F.col(id_col))
+    ).repartition(parts, F.col("doc_id"))
     words = F.col("__words")
     bigrams = F.when(
         F.size(words) >= 2,
@@ -466,8 +445,8 @@ def bigram_logprob(
             ),
         ),
     ).otherwise(F.array().cast("array<struct<prev:string,cur:string>>"))
-    occ = pre.select(F.col(id_col), F.explode(bigrams).alias("bg")).select(
-        id_col, F.col("bg.prev").alias("__prev"), F.col("bg.cur").alias("__cur")
+    occ = pre.select(F.col("doc_id"), F.explode(bigrams).alias("bg")).select(
+        "doc_id", F.col("bg.prev").alias("__prev"), F.col("bg.cur").alias("__cur")
     )
     vocab_size = (
         pre.select(F.explode(words).alias("__t"))
@@ -481,9 +460,9 @@ def bigram_logprob(
     # and the (prev, cur) sort the first window installs prefix-satisfies
     # the second window's (prev) sort — so the explicit repartition
     # (AQE-coalescible: no partition count pinned) replaces the planner's
-    # two back-to-back corpus-sized exchanges (guide §2.1: remove
-    # shuffles by partitioning once for several consumers; measured on
-    # doc_bigram_logprob: 3 occurrence-grain exchanges -> 2).
+    # two back-to-back corpus-sized exchanges (partition once for
+    # several consumers; measured on doc_bigram_logprob: 3
+    # occurrence-grain exchanges -> 2).
     counted = (
         occ.repartition(F.col("__prev"))
         .withColumn("__cb", F.count(F.lit(1)).over(w_bigram).cast("double"))
@@ -494,21 +473,14 @@ def bigram_logprob(
         (F.col("__cb") + alpha) / (F.col("__cp") + alpha * F.col("__v"))
     )
     avg = F.avg(neg_log2)
-    if round_dp is not None:
-        avg = F.round(avg, round_dp)
-    return scored.groupBy(id_col).agg(
+    avg = F.round(avg, 6)
+    return scored.groupBy("doc_id").agg(
         avg.alias("avg_neg_log2_bigram_prob"),
         F.count(F.lit(1)).alias("n_bigrams"),
     )
 
 
-def winnow_fingerprints(
-    docs,
-    k: int = 4,
-    window: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def winnow_fingerprints(docs, k: int = 4, window: int = 4):
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken 2003,
     the MOSS algorithm): the distinct minima of every ``window``-wide
     span of word-``k``-gram hashes. The selection guarantee: any two
@@ -518,7 +490,7 @@ def winnow_fingerprints(
     count instead of every gram (the full-gram form is
     :func:`rolling_hash`/the MinHash path).
 
-    Output: ``(id_col, fingerprint)`` distinct rows — the posting list a
+    Output: ``(doc_id, fingerprint)`` distinct rows — the posting list a
     copy-detection index stores. Docs shorter than ``k`` words emit
     nothing (no gram to fingerprint); docs with fewer than ``window``
     grams emit the single global minimum.
@@ -538,29 +510,29 @@ def winnow_fingerprints(
     from fireball_data_processing_spark.functions.text import normalize_text
 
     toks = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.filter(
-                F.split(normalize_text(F.col(text_col)), " "), lambda s: s != ""
+                F.split(normalize_text(F.col("text")), " "), lambda s: s != ""
             )
         ).alias("__pos", "__w"),
     )
-    w_doc = Window.partitionBy(id_col).orderBy("__pos")
+    w_doc = Window.partitionBy("doc_id").orderBy("__pos")
     gram_txt = F.concat_ws(
         " ", F.col("__w"), *[F.lead("__w", j).over(w_doc) for j in range(1, k)]
     )
     grams = toks.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("__pos").alias("__gpos"),
         F.when(
             F.lead("__w", k - 1).over(w_doc).isNotNull(), F.md5(gram_txt)
         ).alias("__gh"),
     ).filter(F.col("__gh").isNotNull())
-    w_gram = Window.partitionBy(id_col).orderBy("__gpos")
+    w_gram = Window.partitionBy("doc_id").orderBy("__gpos")
     win_min = F.min("__gh").over(w_gram.rowsBetween(0, window - 1))
-    n_grams = F.count(F.lit(1)).over(Window.partitionBy(id_col))
+    n_grams = F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
     fps = grams.select(
-        F.col(id_col),
+        F.col("doc_id"),
         win_min.alias("fingerprint"),
         F.col("__gpos"),
         n_grams.alias("__n"),
@@ -568,10 +540,10 @@ def winnow_fingerprints(
         (F.col("__gpos") + window <= F.col("__n"))
         | ((F.col("__n") < window) & (F.col("__gpos") == 0))
     )
-    return fps.select(id_col, "fingerprint").distinct()
+    return fps.select("doc_id", "fingerprint").distinct()
 
 
-def flesch_features(c: Column, round_dp: int = 6) -> dict[str, Column]:
+def flesch_features(c: Column) -> dict[str, Column]:
     """Flesch reading-ease features (Flesch 1948; Kincaid et al. 1975 —
     the readability screen classic web-corpus pipelines run beside the
     Gopher gate): counts of words, sentences, and syllables, plus
@@ -587,7 +559,7 @@ def flesch_features(c: Column, round_dp: int = 6) -> dict[str, Column]:
 
     Everything is a pure per-row expression (two regexp_extract_all
     passes + one split — zero shuffles, codegen-resident, same shape at
-    100 TB) and rounds to ``round_dp``, so the score replays exactly in
+    100 TB) and rounds to 6 dp, so the score replays exactly in
     any engine with POSIX regexes (DuckDB-oracle-checked). Returns
     ``n_words``, ``n_sentences``, ``n_syllables``, ``reading_ease``;
     empty/whitespace docs get null reading_ease (no words to rate)."""
@@ -607,7 +579,7 @@ def flesch_features(c: Column, round_dp: int = 6) -> dict[str, Column]:
             F.lit(206.835)
             - F.lit(1.015) * n_words / n_sent
             - F.lit(84.6) * n_syll / n_words,
-            round_dp,
+            6,
         ),
     )
     return {
@@ -618,14 +590,7 @@ def flesch_features(c: Column, round_dp: int = 6) -> dict[str, Column]:
     }
 
 
-def kneser_ney_logprob(
-    docs,
-    discount: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    round_dp: int = 8,
-    out_dp: int = 6,
-):
+def kneser_ney_logprob(docs):
     """Per-document cross-entropy under an interpolated Kneser-Ney
     bigram model — the smoothing the KenLM models CCNet actually scores
     with use (add-alpha, :func:`bigram_logprob`, over-penalizes rare but
@@ -636,7 +601,7 @@ def kneser_ney_logprob(
         P(w|v) = max(c(v,w) - D, 0)/c(v)
                + (D * N1+(v,.)/c(v)) * N1+(.,w)/N1+(.,.)
 
-    Output: ``(id_col, n_bigrams, kn_bits_per_token)`` (mean
+    Output: ``(doc_id, n_bigrams, kn_bits_per_token)`` (mean
     ``-log2 P``), docs with fewer than two tokens absent.
 
     Plan (the table form bigram_logprob documents as its at-scale
@@ -653,11 +618,11 @@ def kneser_ney_logprob(
 
     from fireball_data_processing_spark.functions.text import normalize_text
 
-    d = float(discount)
+    d = 0.75
     pre = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.filter(
-            F.split(normalize_text(F.col(text_col)), " "), lambda s: s != ""
+            F.split(normalize_text(F.col("text")), " "), lambda s: s != ""
         ).alias("__words"),
     )
     words = F.col("__words")
@@ -671,8 +636,8 @@ def kneser_ney_logprob(
             ),
         ),
     ).otherwise(F.array().cast("array<struct<prev:string,cur:string>>"))
-    occ = pre.select(F.col(id_col), F.explode(bigrams).alias("bg")).select(
-        id_col, F.col("bg.prev").alias("__prev"), F.col("bg.cur").alias("__cur")
+    occ = pre.select(F.col("doc_id"), F.explode(bigrams).alias("bg")).select(
+        "doc_id", F.col("bg.prev").alias("__prev"), F.col("bg.cur").alias("__cur")
     )
     types = occ.groupBy("__prev", "__cur").agg(F.count(F.lit(1)).alias("__c"))
     left = types.groupBy("__prev").agg(
@@ -693,16 +658,16 @@ def kneser_ney_logprob(
                 / F.col("__cprev")
                 + (F.lit(d) * F.col("__n1_left") / F.col("__cprev"))
                 * (F.col("__n1_right") / F.col("__n1_tot")),
-                round_dp,
+                8,
             ).alias("__p"),
         )
     )
     return (
         occ.join(prob, ["__prev", "__cur"])
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
-            F.round(F.avg(-F.log2(F.col("__p"))), out_dp).alias(
+            F.round(F.avg(-F.log2(F.col("__p"))), 6).alias(
                 "kn_bits_per_token"
             ),
         )

@@ -99,7 +99,6 @@ def bootstrap_mean_ci(
     n_replicates: int = 32,
     level: float = 0.95,
     salt: str = "boot",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Percentile-bootstrap CI for the mean of ``value_col``: ONE row
     ``(n, mean, ci_lo, ci_hi, n_replicates)``. Each replicate's weighted
@@ -136,14 +135,14 @@ def bootstrap_mean_ci(
         *[F.col(f"__h{h}") for h in range(n_hashes)],
     )
     k = poisson_count_expr(_chunk_uniform(n_hashes, per)).cast("double")
-    # ONE pass for replicates AND point stats (guide §2.4: the old
-    # point-estimate branch was a second full execution of the source
-    # scan, crossJoined back at the end). Every replicate group contains
+    # ONE pass for replicates AND point stats (a separate point-estimate
+    # branch would be a second full execution of the source scan,
+    # crossJoined back at the end). Every replicate group contains
     # every base row, so the unweighted (n, mean) ride the same
     # per-replicate aggregate — read off replicate 1's group in the
     # final one-row rollup. Summation order inside a group differs from
     # the old global agg only by partial-combine grouping, the same
-    # reassociation noise round_dp already absorbs cross-engine.
+    # reassociation noise the 6-dp rounding already absorbs cross-engine.
     reps = (
         exploded.select(
             "__b",
@@ -158,10 +157,10 @@ def bootstrap_mean_ci(
             # instead of tripping ANSI divide-by-zero
             F.round(
                 F.sum("__kx") / F.when(F.sum("__kw") > 0, F.sum("__kw")),
-                round_dp + 2,
+                8,
             ).alias("__m"),
             F.count(F.lit(1)).cast("bigint").alias("__n"),
-            F.round(F.avg("__x"), round_dp).alias("__mean"),
+            F.round(F.avg("__x"), 6).alias("__mean"),
         )
     )
     alpha = (1.0 - level) / 2.0
@@ -174,11 +173,11 @@ def bootstrap_mean_ci(
         .cast("bigint")
         .alias("n"),
         F.max(F.when(F.col("__b") == 1, F.col("__mean"))).alias("mean"),
-        F.round(F.percentile(F.col("__m"), F.lit(alpha)), round_dp).alias(
+        F.round(F.percentile(F.col("__m"), F.lit(alpha)), 6).alias(
             "ci_lo"
         ),
         F.round(
-            F.percentile(F.col("__m"), F.lit(1.0 - alpha)), round_dp
+            F.percentile(F.col("__m"), F.lit(1.0 - alpha)), 6
         ).alias("ci_hi"),
         F.count("__m").cast("bigint").alias("n_replicates"),
     ).select("n", "mean", "ci_lo", "ci_hi", "n_replicates")
@@ -192,9 +191,6 @@ def bootstrap_delta_ci(
     variant_a: str,
     variant_b: str,
     n_replicates: int = 32,
-    level: float = 0.95,
-    salt: str = "boot",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Two-sample (A/B) uncertainty: percentile-bootstrap CI for the
     difference of means ``mean(B) - mean(A)`` — ONE row ``(n_a, n_b,
@@ -208,7 +204,7 @@ def bootstrap_delta_ci(
     each replicate group — the old (variant, replicate) keying needed a
     B-row self-join whose two filter branches re-executed the whole
     explode pipeline once each, and a third full pass computed the
-    point stats (guide §2.4); now replicates, deltas and point stats
+    point stats; now replicates, deltas and point stats
     all come out of one pass and one one-row rollup. Each row keeps its
     own Poisson draw independent of its variant, which is exactly the
     two-sample bootstrap's independence requirement.
@@ -222,7 +218,7 @@ def bootstrap_delta_ci(
         F.col(variant_col).alias("__g"),
     ).where(F.col("__g").isin([variant_a, variant_b]))
     hcols = [
-        F.md5(F.concat(F.lit(f"{salt}{h}#"), F.col("__k"))).alias(f"__h{h}")
+        F.md5(F.concat(F.lit(f"boot{h}#"), F.col("__k"))).alias(f"__h{h}")
         for h in range(n_hashes)
     ]
     pre = base.select("__x", "__g", *hcols)
@@ -252,10 +248,10 @@ def bootstrap_delta_ci(
         .agg(
             F.round(
                 F.sum("__kx") / F.when(F.sum("__kw") > 0, F.sum("__kw")),
-                round_dp + 2,
+                8,
             ).alias("__m"),
             F.count(F.lit(1)).cast("bigint").alias("__n"),
-            F.round(F.avg("__x"), round_dp).alias("__mean"),
+            F.round(F.avg("__x"), 6).alias("__mean"),
         )
     )
     # variant split WITHOUT the old B-row self-join: its two filter
@@ -276,10 +272,10 @@ def bootstrap_delta_ci(
             F.max(F.when(is_b, F.col("__mean"))).alias("__meanb"),
         )
         .withColumn(
-            "__d", F.round(F.col("__mb") - F.col("__ma"), round_dp + 2)
+            "__d", F.round(F.col("__mb") - F.col("__ma"), 8)
         )
     )
-    alpha = (1.0 - level) / 2.0
+    alpha = (1.0 - 0.95) / 2.0
     first = F.col("__b") == 1
 
     def _count(col: str) -> Column:
@@ -301,12 +297,12 @@ def bootstrap_delta_ci(
         _count("__nb").alias("n_b"),
         mean_a.alias("mean_a"),
         mean_b.alias("mean_b"),
-        F.round(mean_b - mean_a, round_dp).alias("delta"),
-        F.round(F.percentile(F.col("__d"), F.lit(alpha)), round_dp).alias(
+        F.round(mean_b - mean_a, 6).alias("delta"),
+        F.round(F.percentile(F.col("__d"), F.lit(alpha)), 6).alias(
             "ci_lo"
         ),
         F.round(
-            F.percentile(F.col("__d"), F.lit(1.0 - alpha)), round_dp
+            F.percentile(F.col("__d"), F.lit(1.0 - alpha)), 6
         ).alias("ci_hi"),
         F.count("__d").cast("bigint").alias("n_replicates"),
     ).select(
@@ -327,8 +323,6 @@ def jackknife_se(
     key: Column,
     n_groups: int = 32,
     salt: str = "jk",
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Delete-one-GROUP jackknife standard error of the mean (the
     block-jackknife of survey statistics): hash rows into ``n_groups``
@@ -344,7 +338,7 @@ def jackknife_se(
 
     ONE grouped aggregate to the shard grain (g rows); everything after
     is window arithmetic over the shard frame. Per-shard sums and each
-    leave-one-out mean are rounded to ``round_dp`` for oracle replay.
+    leave-one-out mean are rounded to 8 dp for oracle replay.
     """
     from pyspark.sql.window import Window
 
@@ -357,7 +351,7 @@ def jackknife_se(
         )
         .groupBy("__shard")
         .agg(
-            F.round(F.sum("__v"), round_dp).alias("__s"),
+            F.round(F.sum("__v"), 8).alias("__s"),
             F.count(F.lit(1)).cast("bigint").alias("__n"),
         )
     )
@@ -371,7 +365,7 @@ def jackknife_se(
         N.alias("__N"),
         G.alias("__ng"),
         F.round(
-            (S - F.col("__s")) / (N - F.col("__n")).cast("double"), round_dp
+            (S - F.col("__s")) / (N - F.col("__n")).cast("double"), 8
         ).alias("__theta"),
     )
     w2 = Window.partitionBy()
@@ -381,7 +375,7 @@ def jackknife_se(
         "__N",
         "__ng",
         "__theta",
-        F.round(tbar, round_dp).alias("__tbar"),
+        F.round(tbar, 8).alias("__tbar"),
     )
     dev = F.col("__theta") - F.col("__tbar")
     return scored.agg(
@@ -392,12 +386,12 @@ def jackknife_se(
             F.sqrt(
                 (F.max("__ng") - 1.0) / F.max("__ng") * F.sum(dev * dev)
             ),
-            out_dp,
+            6,
         ).alias("jackknife_se"),
     ).select(
         F.col("__n").alias("n"),
         F.col("__g2").cast("bigint").alias("n_groups"),
-        F.round(F.col("__s2") / F.col("__n").cast("double"), out_dp).alias(
+        F.round(F.col("__s2") / F.col("__n").cast("double"), 6).alias(
             "mean"
         ),
         "jackknife_se",

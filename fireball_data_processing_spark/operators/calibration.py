@@ -92,26 +92,24 @@ def logistic_fit_2param(
     x_col: str,
     y_col: str,
     n_iter: int = 2,
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Newton-Raphson fit of ``P(y=1|x) = sigmoid(b0 + b1*x)`` from
     ``(0, 0)``, exactly ``n_iter`` steps. Returns ONE row:
     ``(intercept, slope, n, logloss)`` with the coefficients rounded to
-    ``out_dp`` and logloss (mean negative log-likelihood at the final
+    6 dp and logloss (mean negative log-likelihood at the final
     parameters) rounded likewise.
 
     Per step, with ``p = sigmoid(b0 + b1*x)`` and ``w = p*(1-p)``:
     gradient ``(g0, g1) = (sum(y-p), sum((y-p)*x))``, Hessian
     ``[[h00, h01], [h01, h11]] = [[sum(w), sum(w*x)], [sum(w*x),
     sum(w*x^2)]]``, update = Hessian^-1 @ gradient via the closed-form
-    2x2 inverse. Sums are rounded to ``round_dp`` before the solve and
+    2x2 inverse. Sums are rounded to 8 dp before the solve and
     the updated coefficients are rounded again — both engines then feed
     identical doubles into the next iteration.
     """
     x = F.col(x_col).cast("double")
     y = F.col(y_col).cast("double")
-    params = _newton_params(df, x, y, n_iter, round_dp)
+    params = _newton_params(df, x, y, n_iter, 8)
     p = _sigmoid(F.col("b0") + F.col("b1") * x)
     return (
         df.crossJoin(F.broadcast(params))
@@ -121,12 +119,12 @@ def logistic_fit_2param(
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.round(
                 -F.avg(y * F.log(p) + (F.lit(1.0) - y) * F.log(F.lit(1.0) - p)),
-                out_dp,
+                6,
             ).alias("logloss"),
         )
         .select(
-            F.round(F.col("__b0"), out_dp).alias("intercept"),
-            F.round(F.col("__b1"), out_dp).alias("slope"),
+            F.round(F.col("__b0"), 6).alias("intercept"),
+            F.round(F.col("__b1"), 6).alias("slope"),
             "n",
             "logloss",
         )
@@ -140,7 +138,6 @@ def conformal_threshold(
     alpha: float = 0.1,
     cal_fraction: float = 0.25,
     salt: str = "cal",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Split-conformal cutoff selection: hash ``cal_fraction`` of the
     rows into a calibration split (operators/sampling.py hash_rank — the
@@ -164,7 +161,7 @@ def conformal_threshold(
         (hash_rank(key, salt) < F.lit(cal_fraction)).alias("__is_cal"),
     )
     cal = tagged.filter(F.col("__is_cal")).agg(
-        F.round(F.percentile(F.col("__s"), F.lit(alpha)), round_dp).alias(
+        F.round(F.percentile(F.col("__s"), F.lit(alpha)), 6).alias(
             "threshold"
         ),
         F.count(F.lit(1)).cast("bigint").alias("n_cal"),
@@ -182,7 +179,7 @@ def conformal_threshold(
                         0.0
                     )
                 ),
-                round_dp,
+                6,
             ).alias("test_pass_rate"),
         )
         .select(
@@ -202,8 +199,6 @@ def reliability_diagram(
     key_col: str | None = None,
     n_iter: int = 2,
     n_bins: int = 10,
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Reliability diagram + Expected Calibration Error for the
     ``n_iter``-step logistic fit of ``P(y=1|x)`` — the diagnostic that
@@ -211,7 +206,7 @@ def reliability_diagram(
     neither the fit's logloss nor the conformal pass rate answers
     (Guo et al. 2017's ECE, computed distributed).
 
-    Predicted probabilities (rounded to ``round_dp`` so both engines bin
+    Predicted probabilities (rounded to 8 dp so both engines bin
     identical doubles) are cut into ``n_bins`` bins; per bin the mean
     confidence, mean observed rate, and their absolute gap; ECE is the
     support-weighted mean gap, attached to every row via a window over
@@ -236,8 +231,8 @@ def reliability_diagram(
     y = F.col(y_col).cast("double")
     from pyspark.sql.window import Window
 
-    params = _newton_params(df, x, y, n_iter, round_dp)
-    p = F.round(_sigmoid(F.col("b0") + F.col("b1") * x), round_dp)
+    params = _newton_params(df, x, y, n_iter, 8)
+    p = F.round(_sigmoid(F.col("b0") + F.col("b1") * x), 8)
     if key_col is not None:
         scored = df.crossJoin(F.broadcast(params)).select(
             p.alias("__p"), y.alias("__y"), F.col(key_col).alias("__k")
@@ -261,12 +256,12 @@ def reliability_diagram(
         scored.groupBy("bin")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.round(F.avg("__p"), out_dp).alias("avg_conf"),
-            F.round(F.avg("__y"), out_dp).alias("avg_acc"),
+            F.round(F.avg("__p"), 6).alias("avg_conf"),
+            F.round(F.avg("__y"), 6).alias("avg_acc"),
         )
         .withColumn(
             "gap",
-            F.round(F.abs(F.col("avg_conf") - F.col("avg_acc")), out_dp),
+            F.round(F.abs(F.col("avg_conf") - F.col("avg_acc")), 6),
         )
     )
     w = Window.partitionBy()
@@ -279,7 +274,7 @@ def reliability_diagram(
         F.round(
             F.sum(F.col("n") * F.col("gap")).over(w)
             / F.sum(F.col("n")).over(w),
-            out_dp,
+            6,
         ).alias("ece"),
     ).orderBy("bin")
 
@@ -290,8 +285,6 @@ def isotonic_bucket_fit(
     y_col: str,
     key_col: str,
     n_buckets: int = 20,
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Isotonic (monotone) calibration at bucket grain — the
     non-parametric partner of the logistic fit: no sigmoid shape
@@ -326,8 +319,8 @@ def isotonic_bucket_fit(
     )
     per = bucketed.groupBy("bucket").agg(
         F.count(F.lit(1)).cast("double").alias("__n"),
-        F.round(F.avg("__x"), out_dp).alias("avg_x"),
-        F.round(F.sum("__y"), round_dp).alias("__sy"),
+        F.round(F.avg("__x"), 6).alias("avg_x"),
+        F.round(F.sum("__y"), 8).alias("__sy"),
     )
     wc = Window.orderBy("bucket").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -360,7 +353,7 @@ def isotonic_bucket_fit(
             F.round(
                 (F.col("__csj") - F.col("__cs0"))
                 / (F.col("__cnj") - F.col("__cn0")),
-                round_dp,
+                8,
             ).alias("m"),
         )
     )
@@ -370,10 +363,10 @@ def isotonic_bucket_fit(
         .filter((F.col("i") <= F.col("t")) & (F.col("t") <= F.col("j")))
     )
     inner = triple.groupBy("t", "i").agg(
-        F.round(F.min("m"), round_dp).alias("mm")
+        F.round(F.min("m"), 8).alias("mm")
     )
     iso = inner.groupBy("t").agg(
-        F.round(F.max("mm"), round_dp).alias("__iso")
+        F.round(F.max("mm"), 8).alias("__iso")
     )
     return (
         per.join(iso, per["bucket"] == iso["t"])
@@ -381,8 +374,8 @@ def isotonic_bucket_fit(
             "bucket",
             F.col("__n").cast("bigint").alias("n"),
             "avg_x",
-            F.round(F.col("__sy") / F.col("__n"), out_dp).alias("raw_rate"),
-            F.round(F.col("__iso"), out_dp).alias("iso_rate"),
+            F.round(F.col("__sy") / F.col("__n"), 6).alias("raw_rate"),
+            F.round(F.col("__iso"), 6).alias("iso_rate"),
         )
         .orderBy("bucket")
     )

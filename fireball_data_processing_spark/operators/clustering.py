@@ -269,7 +269,6 @@ def kmeans_fit(
     n_iter: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    round_dp: int = 6,
 ) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
     """Lloyd's k-means with deterministic initialization (the ``k``
     lowest-``id_col`` vectors seed clusters 0..k-1 — reproducible and
@@ -291,7 +290,7 @@ def kmeans_fit(
         df.select(
             F.col(id_col).alias("__id"),
             F.expr(
-                f"transform({vec_sql},sr_x->round(sr_x,{int(round_dp)}))"
+                f"transform({vec_sql},sr_x->round(sr_x,6))"
             ).alias("__v"),
         )
         .orderBy("__id")
@@ -316,7 +315,7 @@ def kmeans_fit(
             )
             .select("cluster_id", F.posexplode("__v").alias("__pos", "__x"))
             .groupBy("cluster_id", "__pos")
-            .agg(F.round(F.avg("__x"), round_dp).alias("__m"))
+            .agg(F.round(F.avg("__x"), 6).alias("__m"))
             .groupBy("cluster_id")
             .agg(
                 F.sort_array(
@@ -333,22 +332,19 @@ def kmeans_fit(
     return kmeans_assign(df, centroids, vec_col, id_col), centroids
 
 
-def kmeans_summary(assigned: DataFrame, round_dp: int = 6) -> DataFrame:
+def kmeans_summary(assigned: DataFrame) -> DataFrame:
     """Per-cluster footprint: ``(cluster_id, n_points, inertia)`` with
     inertia = sum of squared distances, rounded (sum order across rows is
     engine-dependent; rounding absorbs the reassociation noise)."""
     return assigned.groupBy("cluster_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_points"),
-        F.round(F.sum("dist2"), round_dp).alias("inertia"),
+        F.round(F.sum("dist2"), 6).alias("inertia"),
     )
 
 
 def kcenter_fit(
     df: DataFrame,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_dp: int = 6,
 ) -> list[tuple[int, int, float, list[float]]]:
     """Greedy k-center selection (Gonzalez's 2-approximation), the
     coreset / facility-location primitive for diversity-first data
@@ -359,8 +355,8 @@ def kcenter_fit(
     what a "cover the long tail" selection pass wants.
 
     Deterministic and oracle-replayable, per the house clustering
-    contract: the seed is the lowest-``id_col`` vector, the running
-    min-distance column is ROUNDED to ``round_dp`` each iteration
+    contract: the seed is the lowest-``vec_id`` vector, the running
+    min-distance column is ROUNDED to 6 dp each iteration
     (absorbing any engine float-noise before it can flip an argmax), and
     the pick tie-breaks to the lowest id via a lexicographic struct max
     over ``(dist, -id)``. Distances use the sequential-fold ``_dist2``.
@@ -376,9 +372,9 @@ def kcenter_fit(
     picked point's distance to the previously chosen centers (0.0 for
     the seed) — the coverage-radius curve, monotonically nonincreasing.
     """
-    vec_sql = _cast_vec_sql(vec_col)
+    vec_sql = _cast_vec_sql("embedding")
     seed = (
-        df.select(F.col(id_col).alias("__id"), F.expr(vec_sql).alias("__v"))
+        df.select(F.col("vec_id").alias("__id"), F.expr(vec_sql).alias("__v"))
         .orderBy("__id")
         .limit(1)
         .collect()[0]
@@ -386,17 +382,14 @@ def kcenter_fit(
     centers = [(0, int(seed["__id"]), 0.0, [float(x) for x in seed["__v"]])]
     # the running min-distance grows as SQL TEXT (py4j-free; the text
     # twin of round(least(md, dist2)) — identical expression tree)
-    md_sql = (
-        f"round({_dist2_sql(vec_sql, _vec_sql(centers[0][3]))},"
-        f"{int(round_dp)})"
-    )
+    md_sql = f"round({_dist2_sql(vec_sql, _vec_sql(centers[0][3]))},6)"
     for t in range(1, k):
         pick = (
             df.select(
                 F.struct(
                     F.expr(md_sql).alias("d"),
-                    (-F.col(id_col)).alias("negid"),
-                    F.col(id_col).alias("id"),
+                    (-F.col("vec_id")).alias("negid"),
+                    F.col("vec_id").alias("id"),
                     F.expr(vec_sql).alias("v"),
                 ).alias("__cand")
             )
@@ -405,25 +398,20 @@ def kcenter_fit(
         )
         v = [float(x) for x in pick["v"]]
         centers.append((t, int(pick["id"]), float(pick["d"]), v))
-        md_sql = (
-            f"round(least({md_sql},{_dist2_sql(vec_sql, _vec_sql(v))}),"
-            f"{int(round_dp)})"
-        )
+        md_sql = f"round(least({md_sql},{_dist2_sql(vec_sql, _vec_sql(v))}),6)"
     return centers
 
 
 def kcenter_radius(
     df: DataFrame,
     centers: list[tuple[int, int, float, list[float]]],
-    vec_col: str = "embedding",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Coverage radius of a chosen center set: the max over points of
     the (rounded) distance to the nearest center — one aggregate, the
     selection-quality number the k-center guarantee bounds."""
     best = nearest_centroid_expr(
-        [(idx, v) for idx, _, _, v in centers], _cast_vec_sql(vec_col)
+        [(idx, v) for idx, _, _, v in centers], _cast_vec_sql("embedding")
     )
-    return df.select(F.round(best["d"], round_dp).alias("__d")).agg(
+    return df.select(F.round(best["d"], 6).alias("__d")).agg(
         F.max("__d").alias("radius")
     )

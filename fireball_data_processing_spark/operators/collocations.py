@@ -56,7 +56,6 @@ def doc_pmi(
     docs: DataFrame,
     min_pair_count: int = 5,
     max_terms: int = 128,
-    text_col: str = "text",
 ) -> DataFrame:
     """(ta, tb, n_ab, df_a, df_b, pmi) for every term pair co-occurring
     in at least ``min_pair_count`` documents; pmi rounded to 6 decimals.
@@ -68,7 +67,7 @@ def doc_pmi(
     """
     base = docs.select(
         F.slice(
-            F.array_sort(F.array_distinct(tokens(F.col(text_col)))),
+            F.array_sort(F.array_distinct(tokens(F.col("text")))),
             1,
             max_terms,
         ).alias("terms")

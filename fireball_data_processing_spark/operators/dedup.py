@@ -42,17 +42,15 @@ __all__ = [
 ]
 
 
-def exact_dedup_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """Exact duplicate groups: one row per distinct normalized text with the
     canonical (min) id and the duplicate count."""
-    h = F.md5(normalize_text(F.col(text_col))).alias("content_hash")
+    h = F.md5(normalize_text(F.col("text"))).alias("content_hash")
     return (
-        df.select(h, F.col(id_col))
+        df.select(h, F.col("doc_id"))
         .groupBy("content_hash")
         .agg(
-            F.min(id_col).alias("canonical_id"),
+            F.min("doc_id").alias("canonical_id"),
             F.count(F.lit(1)).alias("n_docs"),
         )
     )
@@ -198,7 +196,6 @@ def _exploded_shingles(
 
 def minhash_signature(
     df: DataFrame,
-    text_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = 8,
     shingle_k: int = 3,
@@ -225,7 +222,7 @@ def minhash_signature(
     bottom-k-sample estimate for docs above the cap (see
     :func:`capped_shingles`).
     """
-    exploded = _exploded_shingles(df, text_col, id_col, shingle_k, max_shingles)
+    exploded = _exploded_shingles(df, "text", id_col, shingle_k, max_shingles)
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}#"), F.col("shingle")))).alias(f"mh{i}")
         for i in range(num_hashes)
@@ -265,20 +262,21 @@ def minhash_sig_expr(sh: Column, num_hashes: int) -> Column:
     )
 
 
-def band_structs(num_hashes: int, band_size: int, mh=None) -> Column:
-    """``array<struct<band_idx,band_key>>`` banding expression — the ONE
-    definition of how signatures map to LSH buckets, shared by the batch
-    self-join, the grouped bucket form, and the streaming gate's index.
-    ``mh`` maps hash index -> Column (default: the ``mh{i}`` columns of
-    :func:`minhash_signature`)."""
-    if mh is None:
-        mh = lambda i: F.col(f"mh{i}")  # noqa: E731
+def band_structs(num_hashes: int, band_size: int) -> Column:
+    """``array<struct<band_idx,band_key>>`` banding expression over the
+    ``mh{i}`` columns of :func:`minhash_signature` — the ONE definition of
+    how signatures map to LSH buckets, shared by the batch self-join, the
+    grouped bucket form, and the streaming gate's index."""
     return F.array(
         *[
             F.struct(
                 F.lit(b).alias("band_idx"),
                 F.concat_ws(
-                    "|", *[mh(i) for i in range(b * band_size, (b + 1) * band_size)]
+                    "|",
+                    *[
+                        F.col(f"mh{i}")
+                        for i in range(b * band_size, (b + 1) * band_size)
+                    ],
                 ).alias("band_key"),
             )
             for b in range(num_hashes // band_size)
@@ -286,15 +284,7 @@ def band_structs(num_hashes: int, band_size: int, mh=None) -> Column:
     )
 
 
-def build_minhash_index(
-    df: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    shingle_k: int = 3,
-    max_shingles: int | None = 50_000,
-) -> DataFrame:
+def build_minhash_index(df: DataFrame, path: str) -> DataFrame:
     """Near-dedup build phase — run ONCE per corpus, amortized over every
     candidate-generation + verification pass (the same build/query split as
     ``similarity.build_ivf_index``).
@@ -306,19 +296,15 @@ def build_minhash_index(
     Jaccard verification via ``jaccard_pairs(shingle_sets=...)``) reads the
     compact index instead of re-executing the shingling pipeline.
 
-    Because the index persists whole shingle sets, ``max_shingles`` defaults
-    ON here (50k shingles ≈ a few MB/doc worst case) — an unguarded 250 MB
+    Because the index persists whole shingle sets, ``max_shingles`` is ON
+    here (50k shingles ≈ a few MB/doc worst case) — an unguarded 250 MB
     document would otherwise write a multi-GB parquet row and blow the
-    aggregation buffer long before that. Pass ``None`` to disable.
+    aggregation buffer long before that.
     """
     sigs = minhash_signature(
         df,
-        text_col,
-        id_col,
-        num_hashes,
-        shingle_k,
         with_shingles=True,
-        max_shingles=max_shingles,
+        max_shingles=50_000,
     )
     sigs.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.parquet(path)
@@ -415,16 +401,11 @@ def lsh_candidate_pairs(
 def jaccard_pairs(
     df: DataFrame,
     pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_k: int = 3,
     shingle_sets: DataFrame | None = None,
-    max_shingles: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard for candidate pairs: |A ∩ B| / |A ∪ B| over
     distinct word shingles. Verification stage of the LSH pipeline.
-    ``max_shingles``: see :func:`minhash_signature` (estimate-for-capped-docs
-    trade; only used when ``shingle_sets`` is not supplied).
 
     Shingle sets are built through the exploded+grouped path: the exchange
     is a materialization barrier, so Catalyst cannot collapse the projection
@@ -438,16 +419,16 @@ def jaccard_pairs(
         sh = shingle_sets
     else:
         sh = (
-            _exploded_shingles(df, text_col, id_col, shingle_k, max_shingles)
-            .groupBy(id_col)
+            _exploded_shingles(df, "text", "doc_id", shingle_k)
+            .groupBy("doc_id")
             .agg(F.collect_list("shingle").alias("sh"))
         )
     j = (
         pairs.join(
-            sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"),
+            sh.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sh", "sh_a"),
             "id_a",
         ).join(
-            sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"),
+            sh.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sh", "sh_b"),
             "id_b",
         )
     )
@@ -462,12 +443,7 @@ def jaccard_pairs(
     )
 
 
-def simhash(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 16,
-) -> DataFrame:
+def simhash(df: DataFrame, bits: int = 16) -> DataFrame:
     """SimHash fingerprint over normalized words.
 
     Bit i of the fingerprint is the majority vote of bit i across the md5
@@ -481,9 +457,9 @@ def simhash(
     if not 1 <= bits <= 48:
         raise ValueError(f"bits must be in [1, 48], got {bits}")
     nibbles = (bits + 3) // 4
-    words = F.array_distinct(F.split(normalize_text(F.col(text_col)), " "))
-    ex = df.select(F.col(id_col), F.explode(words).alias("w")).select(
-        F.col(id_col),
+    words = F.array_distinct(F.split(normalize_text(F.col("text")), " "))
+    ex = df.select(F.col("doc_id"), F.explode(words).alias("w")).select(
+        F.col("doc_id"),
         # first `nibbles` hex digits of md5(w) as an integer wide enough
         # for all `bits` positions
         F.conv(F.substring(F.md5(F.col("w")), 1, nibbles), 16, 10)
@@ -496,23 +472,19 @@ def simhash(
         ).alias(f"b{i}")
         for i in range(bits)
     ]
-    agg = ex.groupBy(id_col).agg(*votes)
+    agg = ex.groupBy("doc_id").agg(*votes)
     fp = sum(
         (F.when(F.col(f"b{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0)))
         for i in range(bits)
     )
-    return agg.select(F.col(id_col), fp.cast("bigint").alias("simhash"))
+    return agg.select(F.col("doc_id"), fp.cast("bigint").alias("simhash"))
 
 
 def ngram_overlap(
     docs: DataFrame,
     benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_id_col: str = "bench_id",
     k: int = 8,
     min_overlap: int = 1,
-    max_shingles: int | None = None,
 ) -> DataFrame:
     """Benchmark decontamination: (doc, benchmark-doc) pairs sharing at
     least ``min_overlap`` distinct k-word shingles, with the shared count.
@@ -526,17 +498,17 @@ def ngram_overlap(
     string, count per pair. Contact is confined to literally-shared
     n-grams — never |docs| x |benchmark| — and the benchmark side is small
     by nature, so its exploded table broadcasts; the docs side streams
-    through one shuffle-free map + join. Output: ``(id_col,
-    bench_id_col, n_shared)``.
+    through one shuffle-free map + join. Output: ``(doc_id,
+    bench_id, n_shared)``.
     """
-    d = _exploded_shingles(docs, text_col, id_col, k, max_shingles)
+    d = _exploded_shingles(docs, "text", "doc_id", k)
     b = (
-        _exploded_shingles(benchmark, text_col, id_col, k, max_shingles)
-        .withColumnRenamed(id_col, bench_id_col)
+        _exploded_shingles(benchmark, "text", "doc_id", k)
+        .withColumnRenamed("doc_id", "bench_id")
     )
     return (
         d.join(b, "shingle")
-        .groupBy(id_col, bench_id_col)
+        .groupBy("doc_id", "bench_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_overlap)
     )
@@ -544,8 +516,6 @@ def ngram_overlap(
 
 def connected_components(
     pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
     max_iter: int = 25,
     shortcut: bool = False,
 ) -> DataFrame:
@@ -569,7 +539,7 @@ def connected_components(
     data. ``max_iter`` guards pathological chain graphs; raises if
     unconverged.
 
-    Action economics (guide §1.1): the checkpoints after the edge frame
+    Action economics: the checkpoints after the edge frame
     are LAZY (``eager=False``), so each round runs exactly ONE Spark
     action — the convergence probe — which materializes that round's
     checkpoint as a side effect; the self-loop union and initial labels
@@ -607,16 +577,16 @@ def connected_components(
     # ONE traversal of the pairs subtree: both edge directions come out of
     # a single explode instead of a two-branch union that re-executed the
     # (possibly expensive — LSH candidate generation) pair pipeline twice
-    # per action (guide §2.4: remove duplicated subtrees feeding a shuffle).
+    # per action.
     e = (
         pairs.select(
             F.explode(
                 F.array(
                     F.struct(
-                        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+                        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
                     ),
                     F.struct(
-                        F.col(id_b).alias("src"), F.col(id_a).alias("dst")
+                        F.col("id_b").alias("src"), F.col("id_a").alias("dst")
                     ),
                 )
             ).alias("__e")
@@ -635,7 +605,7 @@ def connected_components(
     # Self-loop edges fold each vertex's OWN label into the neighbor-min
     # aggregate, collapsing the old two-join round (neighbor-min join +
     # least()-merge join) into ONE join + ONE aggregate per round
-    # (guide §2.4). Every vertex appears as src in `e` (both directions
+    # Every vertex appears as src in `e` (both directions
     # are present), so groupBy(src) still emits every vertex.
     e_all = e.unionByName(
         verts.select(
@@ -702,8 +672,6 @@ def duplicate_spans(
     docs: DataFrame,
     k: int = 8,
     min_docs: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Cross-document exact-substring spans (the ExactSubstr dedup mode of
     Lee et al., "Deduplicating Training Data Makes Language Models
@@ -712,7 +680,7 @@ def duplicate_spans(
     spans. Downstream pipelines cut the spans out (suffix-array semantics
     at n-gram resolution) instead of dropping whole near-dup documents.
 
-    Output: ``(id_col, span_start, span_end, span_words)`` — word offsets
+    Output: ``(doc_id, span_start, span_end, span_words)`` — word offsets
     over the normalized text, ``end`` exclusive; overlapping AND
     contiguous gram hits merge into one span.
 
@@ -736,10 +704,10 @@ def duplicate_spans(
     # exactly, with no per-group set buffer.
     pre = _spread_words(
         docs.select(
-            F.col(id_col),
-            F.split(normalize_text(F.col(text_col)), " ").alias("__words"),
+            F.col("doc_id"),
+            F.split(normalize_text(F.col("text")), " ").alias("__words"),
         ),
-        id_col,
+        "doc_id",
     )
     words = F.col("__words")
     grams = F.when(
@@ -749,22 +717,22 @@ def duplicate_spans(
             lambda i: F.md5(F.concat_ws(" ", F.slice(words, i + 1, k))),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    hits = pre.select(F.col(id_col), F.posexplode(grams).alias("pos", "gram"))
-    w_gram_rank = Window.partitionBy("gram").orderBy(id_col)
+    hits = pre.select(F.col("doc_id"), F.posexplode(grams).alias("pos", "gram"))
+    w_gram_rank = Window.partitionBy("gram").orderBy("doc_id")
     w_gram = Window.partitionBy("gram")
     nd = F.max(F.dense_rank().over(w_gram_rank)).over(w_gram)
     dup_hits = (
         hits.withColumn("__nd", nd)
         .filter(F.col("__nd") >= min_docs)
-        .select(id_col, "pos")
+        .select("doc_id", "pos")
     )
     w_prev = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     w_run = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
@@ -772,13 +740,13 @@ def duplicate_spans(
     brk = F.when(F.col("pos") > prev_end, 1).otherwise(0)
     islands = dup_hits.withColumn("__island", F.sum(brk).over(w_run))
     return (
-        islands.groupBy(id_col, "__island")
+        islands.groupBy("doc_id", "__island")
         .agg(
             F.min("pos").cast("bigint").alias("span_start"),
             (F.max("pos") + k).cast("bigint").alias("span_end"),
         )
         .select(
-            id_col,
+            "doc_id",
             "span_start",
             "span_end",
             (F.col("span_end") - F.col("span_start")).alias("span_words"),
@@ -786,18 +754,13 @@ def duplicate_spans(
     )
 
 
-def remove_duplicate_spans(
-    docs: DataFrame,
-    spans: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def remove_duplicate_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
     """Cut :func:`duplicate_spans` hits out of the text — the second half
     of the ExactSubstr recipe (Lee et al.: remove the duplicated
     substring, KEEP the document; dropping whole near-dup docs loses the
     unique remainder).
 
-    Output: ``(id_col, clean_text, n_words, n_removed_words)`` where
+    Output: ``(doc_id, clean_text, n_words, n_removed_words)`` where
     ``clean_text`` is the normalized text with every span's words
     removed and ``n_words`` counts the pre-removal words. Word offsets
     follow the same normalization ``duplicate_spans`` used, so spans
@@ -810,15 +773,15 @@ def remove_duplicate_spans(
     (per-row array math, zero extra shuffles beyond the span rollup's
     doc-key exchange, which co-partitions the join).
     """
-    per_doc = spans.groupBy(id_col).agg(
+    per_doc = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("__spans")
     )
     # materialize the split BEFORE the HOF consumes it (house rule: HOF
     # lambdas get no subexpression elimination)
     pre = docs.select(
-        F.col(id_col),
-        F.split(normalize_text(F.col(text_col)), " ").alias("__words"),
-    ).join(per_doc, on=id_col, how="left")
+        F.col("doc_id"),
+        F.split(normalize_text(F.col("text")), " ").alias("__words"),
+    ).join(per_doc, on="doc_id", how="left")
     words = F.col("__words")
     covered = lambda _w, i: F.exists(  # noqa: E731
         F.col("__spans"),
@@ -828,12 +791,12 @@ def remove_duplicate_spans(
         F.filter(words, lambda w, i: ~covered(w, i))
     )
     sized = pre.select(
-        F.col(id_col),
+        F.col("doc_id"),
         words.alias("__words"),
         kept.alias("__kept"),
     )
     return sized.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.concat_ws(" ", F.col("__kept")).alias("clean_text"),
         F.size("__words").cast("bigint").alias("n_words"),
         (F.size("__words") - F.size("__kept"))
@@ -846,7 +809,6 @@ def aligned_segments(
     docs: DataFrame,
     seg_words: int = 8,
     text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic segmentation for cross-document line dedup: the
     normalized text cut into NON-overlapping ``seg_words``-word windows
@@ -855,7 +817,7 @@ def aligned_segments(
     :func:`fireball_data_processing_spark.functions.clean.split_segments`
     instead; this word-aligned form is the fallback for single-line text.
 
-    Output: ``(id_col, seg_idx, segment)``. Per-row array math + one
+    Output: ``(doc_id, seg_idx, segment)``. Per-row array math + one
     explode; the words array is materialized behind an id-keyed exchange
     (house rule: HOF lambdas get no subexpression elimination, so the
     slice lambda must reference a materialized column — and the explode
@@ -863,13 +825,13 @@ def aligned_segments(
     """
     pre = _spread_words(
         docs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.filter(
                 F.split(normalize_text(F.col(text_col)), " "),
                 lambda s: s != "",
             ).alias("__words"),
         ),
-        id_col,
+        "doc_id",
     )
     words = F.col("__words")
     segs = F.transform(
@@ -877,7 +839,7 @@ def aligned_segments(
         lambda st: F.concat_ws(" ", F.slice(words, st + 1, seg_words)),
     )
     return pre.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(segs).alias("seg_idx", "segment"),
     ).withColumn("seg_idx", F.col("seg_idx").cast("bigint"))
 
@@ -888,7 +850,6 @@ def line_dedup(
     min_docs: int = 2,
     keep_first: bool = True,
     text_col: str = "text",
-    id_col: str = "doc_id",
     skew_safe: bool = False,
 ) -> DataFrame:
     """Cross-document line/segment deduplication — the C4 / RefinedWeb
@@ -896,10 +857,10 @@ def line_dedup(
     occurring more than once in C4; RefinedWeb drops repeated lines):
     a segment occurring in at least ``min_docs`` DISTINCT documents is
     removed from every document — except, when ``keep_first``, from the
-    lowest-``id_col`` document holding it (C4 keeps one occurrence;
+    lowest-``doc_id`` document holding it (C4 keeps one occurrence;
     ``keep_first=False`` is the RefinedWeb remove-everywhere form).
 
-    Output: ``(id_col, n_segments, n_removed_segments, kept_text)`` —
+    Output: ``(doc_id, n_segments, n_removed_segments, kept_text)`` —
     ``kept_text`` re-joins the surviving segments in document order, so
     unique content inside mostly-boilerplate documents survives (the
     whole point vs doc-level dedup).
@@ -921,29 +882,29 @@ def line_dedup(
     one extra exchange; the window form stays the default because it
     avoids the join on normal corpora.
     """
-    segs = aligned_segments(docs, seg_words, text_col, id_col).withColumn(
+    segs = aligned_segments(docs, seg_words, text_col).withColumn(
         "__h", F.md5(F.col("segment"))
     )
     if skew_safe:
         stats = (
-            segs.select("__h", id_col)
+            segs.select("__h", "doc_id")
             .distinct()
             .groupBy("__h")
             .agg(
                 F.count(F.lit(1)).alias("__nd"),
-                F.min(id_col).alias("__keeper"),
+                F.min("doc_id").alias("__keeper"),
             )
         )
         marked = segs.join(stats, "__h", "left")
     else:
-        w_rank = Window.partitionBy("__h").orderBy(id_col)
+        w_rank = Window.partitionBy("__h").orderBy("doc_id")
         w_seg = Window.partitionBy("__h")
         n_docs = F.max(F.dense_rank().over(w_rank)).over(w_seg)
-        keeper = F.min(id_col).over(w_seg)
+        keeper = F.min("doc_id").over(w_seg)
         marked = segs.withColumn("__nd", n_docs).withColumn("__keeper", keeper)
     removed = F.col("__nd") >= min_docs
     if keep_first:
-        removed = removed & (F.col(id_col) != F.col("__keeper"))
+        removed = removed & (F.col("doc_id") != F.col("__keeper"))
     marked = marked.withColumn("__removed", removed)
     kept_structs = F.sort_array(
         F.collect_list(
@@ -952,7 +913,7 @@ def line_dedup(
             )
         )
     )
-    return marked.groupBy(id_col).agg(
+    return marked.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_segments"),
         F.sum(F.col("__removed").cast("bigint")).alias("n_removed_segments"),
         F.concat_ws(
@@ -964,12 +925,8 @@ def line_dedup(
 def ngram_containment(
     docs: DataFrame,
     benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_id_col: str = "bench_id",
     k: int = 8,
     min_containment: float = 0.0,
-    max_shingles: int | None = None,
 ) -> DataFrame:
     """Asymmetric contamination score — the normalized form of
     :func:`ngram_overlap` used by published decontamination protocols
@@ -979,7 +936,7 @@ def ngram_containment(
     that swallows a short benchmark item whole scores 1.0 even though
     its Jaccard is tiny, which is exactly the leak being hunted.
 
-    Output: ``(id_col, bench_id_col, n_bench_grams, n_shared,
+    Output: ``(doc_id, bench_id, n_bench_grams, n_shared,
     containment)`` with containment rounded 6dp (the filter runs on the
     unrounded single division, cross-engine exact).
 
@@ -988,21 +945,19 @@ def ngram_containment(
     (the benchmark is small by nature). Contact stays confined to
     literally-shared n-grams.
     """
-    shared = ngram_overlap(
-        docs, benchmark, text_col, id_col, bench_id_col, k, 1, max_shingles
-    )
+    shared = ngram_overlap(docs, benchmark, k=k)
     bench_sizes = (
-        _exploded_shingles(benchmark, text_col, id_col, k, max_shingles)
-        .groupBy(F.col(id_col).alias(bench_id_col))
+        _exploded_shingles(benchmark, "text", "doc_id", k)
+        .groupBy(F.col("doc_id").alias("bench_id"))
         .agg(F.count(F.lit(1)).alias("n_bench_grams"))
     )
     cont = F.col("n_shared") / F.col("n_bench_grams")
     return (
-        shared.join(F.broadcast(bench_sizes), bench_id_col)
+        shared.join(F.broadcast(bench_sizes), "bench_id")
         .filter(cont >= min_containment)
         .select(
-            id_col,
-            bench_id_col,
+            "doc_id",
+            "bench_id",
             F.col("n_bench_grams").cast("bigint").alias("n_bench_grams"),
             F.col("n_shared").cast("bigint").alias("n_shared"),
             F.round(F.col("n_shared") / F.col("n_bench_grams"), 6).alias(
@@ -1016,9 +971,6 @@ def contamination_spans(
     docs: DataFrame,
     benchmark: DataFrame,
     k: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_shingles: int | None = None,
 ) -> DataFrame:
     """Span-level decontamination — the surgical complement of
     :func:`ngram_overlap`/:func:`ngram_containment`: the maximal word
@@ -1028,7 +980,7 @@ def contamination_spans(
     and keep the document — dropping whole docs for one leaked paragraph
     wastes the unique remainder.
 
-    Output: ``(id_col, span_start, span_end, span_words)`` — word
+    Output: ``(doc_id, span_start, span_end, span_words)`` — word
     offsets over the normalized text, end exclusive, contiguous/
     overlapping gram hits merged (identical shape to
     :func:`duplicate_spans`, so the removal step is shared).
@@ -1041,10 +993,10 @@ def contamination_spans(
     """
     pre = _spread_words(
         docs.select(
-            F.col(id_col),
-            F.split(normalize_text(F.col(text_col)), " ").alias("__words"),
+            F.col("doc_id"),
+            F.split(normalize_text(F.col("text")), " ").alias("__words"),
         ),
-        id_col,
+        "doc_id",
     )
     words = F.col("__words")
     grams = F.when(
@@ -1054,22 +1006,22 @@ def contamination_spans(
             lambda i: F.md5(F.concat_ws(" ", F.slice(words, i + 1, k))),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    hits = pre.select(F.col(id_col), F.posexplode(grams).alias("pos", "gram"))
+    hits = pre.select(F.col("doc_id"), F.posexplode(grams).alias("pos", "gram"))
     bench_grams = (
-        _exploded_shingles(benchmark, text_col, id_col, k, max_shingles)
+        _exploded_shingles(benchmark, "text", "doc_id", k)
         .select(F.md5(F.col("shingle")).alias("gram"))
         .distinct()
     )
     dirty = hits.join(F.broadcast(bench_grams), "gram", "left_semi").select(
-        id_col, "pos"
+        "doc_id", "pos"
     )
     w_prev = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     w_run = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
@@ -1077,13 +1029,13 @@ def contamination_spans(
     brk = F.when(F.col("pos") > prev_end, 1).otherwise(0)
     islands = dirty.withColumn("__island", F.sum(brk).over(w_run))
     return (
-        islands.groupBy(id_col, "__island")
+        islands.groupBy("doc_id", "__island")
         .agg(
             F.min("pos").cast("bigint").alias("span_start"),
             (F.max("pos") + k).cast("bigint").alias("span_end"),
         )
         .select(
-            id_col,
+            "doc_id",
             "span_start",
             "span_end",
             (F.col("span_end") - F.col("span_start")).alias("span_words"),
@@ -1094,8 +1046,6 @@ def contamination_spans(
 def content_defined_chunks(
     docs: DataFrame,
     boundary_mod: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Content-defined chunking (the rolling-hash boundary idea behind
     LBFS/rsync and FastCDC, applied at word granularity): cut each
@@ -1109,7 +1059,7 @@ def content_defined_chunks(
     (licence headers, templated pages, version-bumped docs); expected
     chunk length is geometric with mean ``boundary_mod`` words.
 
-    Output: ``(id_col, chunk_idx, chunk_text, chunk_md5, n_words)``, one
+    Output: ``(doc_id, chunk_idx, chunk_text, chunk_md5, n_words)``, one
     row per chunk, ``chunk_idx`` counting from 0 in document order.
 
     Plan shape: explode words with position -> boundary flag as a pure
@@ -1126,16 +1076,16 @@ def content_defined_chunks(
     """
     pre = _spread_words(
         docs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.filter(
-                F.split(normalize_text(F.col(text_col)), " "),
+                F.split(normalize_text(F.col("text")), " "),
                 lambda s: s != "",
             ).alias("__words"),
         ),
-        id_col,
+        "doc_id",
     )
     occ = pre.select(
-        F.col(id_col), F.posexplode("__words").alias("pos", "word")
+        F.col("doc_id"), F.posexplode("__words").alias("pos", "word")
     ).withColumn(
         "__brk",
         (
@@ -1149,7 +1099,7 @@ def content_defined_chunks(
         ).cast("int"),
     )
     w_prior = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -1157,12 +1107,12 @@ def content_defined_chunks(
         "chunk_idx", F.coalesce(F.sum("__brk").over(w_prior), F.lit(0)).cast("int")
     )
     return (
-        chunked.groupBy(id_col, "chunk_idx")
+        chunked.groupBy("doc_id", "chunk_idx")
         .agg(
             F.sort_array(F.collect_list(F.struct("pos", "word"))).alias("__ws")
         )
         .select(
-            id_col,
+            "doc_id",
             "chunk_idx",
             F.concat_ws(
                 " ", F.transform(F.col("__ws"), lambda s: s["word"])
@@ -1170,7 +1120,7 @@ def content_defined_chunks(
             F.size("__ws").cast("bigint").alias("n_words"),
         )
         .withColumn("chunk_md5", F.md5(F.col("chunk_text")))
-        .select(id_col, "chunk_idx", "chunk_text", "chunk_md5", "n_words")
+        .select("doc_id", "chunk_idx", "chunk_text", "chunk_md5", "n_words")
     )
 
 
@@ -1178,8 +1128,6 @@ def cdc_duplicate_chunks(
     docs: DataFrame,
     boundary_mod: int = 16,
     min_docs: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Cross-document duplicate CDC chunks: which content-defined chunks
     appear in >= ``min_docs`` distinct documents, and how often — the
@@ -1191,11 +1139,11 @@ def cdc_duplicate_chunks(
     frame); raw chunk text never enters the shuffle (md5 + the word
     count are carried; re-join :func:`content_defined_chunks` on
     chunk_md5 to recover text)."""
-    chunks = content_defined_chunks(docs, boundary_mod, text_col, id_col)
+    chunks = content_defined_chunks(docs, boundary_mod)
     return (
         chunks.groupBy("chunk_md5")
         .agg(
-            F.countDistinct(id_col).cast("bigint").alias("n_docs"),
+            F.countDistinct("doc_id").cast("bigint").alias("n_docs"),
             F.count(F.lit(1)).cast("bigint").alias("n_occurrences"),
             F.first("n_words").alias("n_words"),
         )
@@ -1203,14 +1151,7 @@ def cdc_duplicate_chunks(
     )
 
 
-def score_threshold_sweep(
-    pairs: DataFrame,
-    score_col: str = "jaccard",
-    thresholds_pct: tuple[int, ...] = (10, 20, 30, 40, 50, 60, 70, 80, 90),
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    round_dp: int = 6,
-) -> DataFrame:
+def score_threshold_sweep(pairs: DataFrame) -> DataFrame:
     """Dedup-threshold sweep: for each candidate cutoff, how many verified
     pairs and how many distinct documents the dedup pass would touch —
     the datasheet a pipeline owner reads BEFORE committing to a Jaccard
@@ -1223,12 +1164,12 @@ def score_threshold_sweep(
     Input: any scored pair frame — n-gram Jaccard from
     :func:`jaccard_pairs`, embedding cosine pairs, SimHash similarity.
     Output: one row per threshold, ``(threshold_pct, n_pairs, n_docs)``
-    with ``n_pairs = |{pairs: round(score, round_dp) >= pct/100}|`` and
+    with ``n_pairs = |{pairs: round(score, 6) >= pct/100}|`` and
     ``n_docs`` the distinct documents appearing in those pairs (an upper
     bound on removals: survivors are picked per connected cluster, one
     kept each, so removals fall between ``n_docs/2`` and ``n_docs - 1``
     per component). Thresholds with no qualifying pair emit a zero row —
-    the curve always has ``len(thresholds_pct)`` points.
+    the curve always has one point per 10% step from 10 to 90.
 
     Plan shape: the 9-row threshold grid is the BROADCAST side of a
     nested-loop join against the pair frame (already candidate-bounded
@@ -1243,18 +1184,18 @@ def score_threshold_sweep(
     spark = pairs.sparkSession
     grid = spark.range(1).select(
         F.explode(
-            F.array(*[F.lit(int(p)).cast("long") for p in thresholds_pct])
+            F.array(*[F.lit(p).cast("long") for p in range(10, 100, 10)])
         ).alias("threshold_pct")
     )
     exploded = (
         pairs.crossJoin(F.broadcast(grid))
         .filter(
-            F.round(F.col(score_col), round_dp)
+            F.round(F.col("jaccard"), 6)
             >= F.col("threshold_pct").cast("double") / F.lit(100.0)
         )
         .select(
             "threshold_pct",
-            F.explode(F.array(id_a, id_b)).alias("__doc"),
+            F.explode(F.array("id_a", "id_b")).alias("__doc"),
         )
     )
     counts = exploded.groupBy("threshold_pct").agg(
@@ -1271,8 +1212,6 @@ def score_threshold_sweep(
 def cluster_size_histogram(
     components: DataFrame,
     n_total_docs: DataFrame | None = None,
-    vertex_col: str = "vertex",
-    component_col: str = "component",
 ) -> DataFrame:
     """Duplicate-cluster size distribution — the other half of the dedup
     datasheet: how much of the corpus sits in clusters of each size, i.e.
@@ -1295,7 +1234,7 @@ def cluster_size_histogram(
     count), both over component-label frames that are pair-bounded, never
     corpus-bounded; the singleton row is a 1-row broadcast-merged
     aggregate (bounded driver-side scalar, no collect)."""
-    sizes = components.groupBy(component_col).agg(
+    sizes = components.groupBy("component").agg(
         F.count(F.lit(1)).cast("bigint").alias("cluster_size")
     )
     hist = sizes.groupBy("cluster_size").agg(
@@ -1322,14 +1261,7 @@ def cluster_size_histogram(
     return out
 
 
-def threshold_doc_hits(
-    pairs: DataFrame,
-    score_col: str = "jaccard",
-    thresholds_pct: tuple[int, ...] = (10, 20, 30, 40, 50, 60, 70, 80, 90),
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    round_dp: int = 6,
-) -> DataFrame:
+def threshold_doc_hits(pairs: DataFrame) -> DataFrame:
     """The sweep's per-document form: ``(threshold_pct, doc_id)`` — each
     document touched by at least one qualifying pair at each cutoff,
     deduplicated. The join-ready complement to
@@ -1344,30 +1276,23 @@ def threshold_doc_hits(
     spark = pairs.sparkSession
     grid = spark.range(1).select(
         F.explode(
-            F.array(*[F.lit(int(p)).cast("long") for p in thresholds_pct])
+            F.array(*[F.lit(p).cast("long") for p in range(10, 100, 10)])
         ).alias("threshold_pct")
     )
     return (
         pairs.crossJoin(F.broadcast(grid))
         .filter(
-            F.round(F.col(score_col), round_dp)
+            F.round(F.col("jaccard"), 6)
             >= F.col("threshold_pct").cast("double") / F.lit(100.0)
         )
         .select(
-            "threshold_pct", F.explode(F.array(id_a, id_b)).alias("doc_id")
+            "threshold_pct", F.explode(F.array("id_a", "id_b")).alias("doc_id")
         )
         .distinct()
     )
 
 
-def quality_survivors(
-    components: DataFrame,
-    scores: DataFrame,
-    id_col: str = "doc_id",
-    score_col: str = "score",
-    vertex_col: str = "vertex",
-    component_col: str = "component",
-) -> DataFrame:
+def quality_survivors(components: DataFrame, scores: DataFrame) -> DataFrame:
     """Quality-aware survivor selection: ONE survivor per duplicate
     cluster, chosen by ``(score desc, id asc)`` instead of the min-id
     default — the form production dedup actually ships (keep the
@@ -1376,7 +1301,7 @@ def quality_survivors(
     degenerate case ``score = const``.
 
     Input: the ``(vertex, component)`` frame from
-    :func:`connected_components` plus a ``(id_col, score_col)`` frame
+    :func:`connected_components` plus a ``(doc_id, score)`` frame
     (word counts, Gopher quality, LM logprob — any orderable signal).
     Output: one row per cluster,
     ``(cluster_id, survivor_id, survivor_score, cluster_size)``.
@@ -1386,7 +1311,7 @@ def quality_survivors(
     ordered LAST (``desc_nulls_last``), and ``cluster_size`` counts
     ALL members — so a partially-scored cluster still elects its best
     scored copy (or, fully unscored, the lowest id) instead of
-    silently vanishing from the output (ADVICE r6).
+    silently vanishing from the output.
 
     Plan shape: the corpus-sized score frame STREAMS against a
     broadcast semi-join on the (pair-bounded) member set — a left outer
@@ -1399,28 +1324,28 @@ def quality_survivors(
     before the exchange, so only one candidate row per cluster per
     input partition shuffles."""
     member_scores = scores.select(
-        F.col(id_col).alias(vertex_col), F.col(score_col).alias("__s")
+        F.col("doc_id").alias("vertex"), F.col("score").alias("__s")
     ).join(
-        F.broadcast(components.select(vertex_col)), vertex_col, "semi"
+        F.broadcast(components.select("vertex")), "vertex", "semi"
     )
-    joined = components.join(F.broadcast(member_scores), vertex_col, "left")
-    w = Window.partitionBy(component_col).orderBy(
-        F.col("__s").desc_nulls_last(), F.col(vertex_col).asc()
+    joined = components.join(F.broadcast(member_scores), "vertex", "left")
+    w = Window.partitionBy("component").orderBy(
+        F.col("__s").desc_nulls_last(), F.col("vertex").asc()
     )
-    sizes = components.groupBy(component_col).agg(
+    sizes = components.groupBy("component").agg(
         F.count(F.lit(1)).cast("bigint").alias("cluster_size")
     )
     top = (
         joined.withColumn("__rk", F.row_number().over(w))
         .filter(F.col("__rk") == 1)
         .select(
-            F.col(component_col).alias("cluster_id"),
-            F.col(vertex_col).alias("survivor_id"),
+            F.col("component").alias("cluster_id"),
+            F.col("vertex").alias("survivor_id"),
             F.col("__s").alias("survivor_score"),
         )
     )
     return top.join(
-        F.broadcast(sizes.withColumnRenamed(component_col, "cluster_id")),
+        F.broadcast(sizes.withColumnRenamed("component", "cluster_id")),
         "cluster_id",
     )
 
@@ -1428,20 +1353,16 @@ def quality_survivors(
 def edit_distance_pairs(
     df: DataFrame,
     pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    normalize: bool = True,
     max_chars: int | None = 2000,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Character-level edit-distance verification for candidate pairs —
     the fuzzy-dedup family's finest granularity (exact hash, MinHash/
     Jaccard shingles, SimHash bits, embedding cosine, CDC chunks, line
     and substring dedup all see TOKENS or coarser; typo-level mirror
     detection needs characters): per candidate pair, Levenshtein
-    distance over dedup-normalized text, optionally as the
-    length-normalized ratio ``dist / max(len_a, len_b)`` (0 identical,
-    1 disjoint) — threshold at ~0.2 for near-dup verification.
+    distance over dedup-normalized text and the length-normalized ratio
+    ``dist / max(len_a, len_b)`` (0 identical, 1 disjoint) — threshold
+    at ~0.2 for near-dup verification.
 
     Levenshtein is O(len_a x len_b) PER PAIR, which is exactly why this
     is a VERIFICATION stage, never a generation stage: candidates come
@@ -1454,21 +1375,21 @@ def edit_distance_pairs(
     anywhere — and DuckDB's ``levenshtein`` replays it exactly, so the
     verification is oracle-checkable.
 
-    Output: ``(id_a, id_b, edit_dist, edit_ratio?)`` — ratio only when
-    ``normalize`` (empty-vs-empty pairs get ratio 0.0)."""
-    norm = normalize_text(F.col(text_col))
+    Output: ``(id_a, id_b, edit_dist, edit_ratio)`` (empty-vs-empty pairs
+    get ratio 0.0)."""
+    norm = normalize_text(F.col("text"))
     if max_chars is not None:
         norm = F.substring(norm, 1, max_chars)
-    t = df.select(F.col(id_col), norm.alias("__t"))
+    t = df.select(F.col("doc_id"), norm.alias("__t"))
     j = (
         pairs.join(
             t.select(
-                F.col(id_col).alias("id_a"), F.col("__t").alias("__ta")
+                F.col("doc_id").alias("id_a"), F.col("__t").alias("__ta")
             ),
             "id_a",
         ).join(
             t.select(
-                F.col(id_col).alias("id_b"), F.col("__t").alias("__tb")
+                F.col("doc_id").alias("id_b"), F.col("__t").alias("__tb")
             ),
             "id_b",
         )
@@ -1478,12 +1399,10 @@ def edit_distance_pairs(
         "id_a", "id_b", dist.cast("bigint").alias("edit_dist"),
         F.length("__ta").alias("__la"), F.length("__tb").alias("__lb"),
     )
-    if not normalize:
-        return out.select("id_a", "id_b", "edit_dist")
     longest = F.greatest(F.col("__la"), F.col("__lb"))
     ratio = F.when(
         longest > 0,
-        F.round(F.col("edit_dist").cast("double") / longest, round_dp),
+        F.round(F.col("edit_dist").cast("double") / longest, 6),
     ).otherwise(F.lit(0.0))
     return out.select(
         "id_a", "id_b", "edit_dist", ratio.alias("edit_ratio")
@@ -1495,7 +1414,6 @@ def lsh_tuning_curve(
     num_hashes: int = 8,
     band_size: int = 2,
     step_pct: int = 5,
-    round_dp: int = 6,
 ) -> DataFrame:
     """The LSH banding S-curve — the planner's datasheet for
     :func:`lsh_candidate_pairs`: with ``b = num_hashes // band_size``
@@ -1534,8 +1452,8 @@ def lsh_tuning_curve(
         F.lit(float(b)),
     )
     return grid.select(
-        F.round("similarity", round_dp).alias("similarity"),
-        F.round(p, round_dp).alias("p_candidate"),
+        F.round("similarity", 6).alias("similarity"),
+        F.round(p, 6).alias("p_candidate"),
         F.lit(b).cast("int").alias("n_bands"),
         F.lit(int(band_size)).cast("int").alias("band_size"),
     )

@@ -81,13 +81,7 @@ def distribution_drift(
     )
 
 
-def jsd_matrix(
-    df: DataFrame,
-    domain_col: str,
-    token_col: str,
-    round_dp: int = 8,
-    out_dp: int = 6,
-) -> DataFrame:
+def jsd_matrix(df: DataFrame, domain_col: str, token_col: str) -> DataFrame:
     """Pairwise Jensen-Shannon divergence (bits) between the per-domain
     unigram distributions of ``token_col`` — the k-way corpus-composition
     scorecard ("which domains are token-level redundant, which add
@@ -122,11 +116,11 @@ def jsd_matrix(
     probs = counts.join(F.broadcast(totals), "d").select(
         "d",
         "t",
-        F.round(F.col("n").cast("double") / F.col("tot"), round_dp).alias(
+        F.round(F.col("n").cast("double") / F.col("tot"), 8).alias(
             "p"
         ),
     )
-    mass = probs.groupBy("d").agg(F.round(F.sum("p"), round_dp).alias("mass"))
+    mass = probs.groupBy("d").agg(F.round(F.sum("p"), 8).alias("mass"))
     a = probs.select(
         F.col("d").alias("domain_a"), "t", F.col("p").alias("pa")
     )
@@ -140,8 +134,8 @@ def jsd_matrix(
         .groupBy("domain_a", "domain_b")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_shared_tokens"),
-            F.round(F.sum("pa"), round_dp).alias("sp"),
-            F.round(F.sum("pb"), round_dp).alias("sq"),
+            F.round(F.sum("pa"), 8).alias("sp"),
+            F.round(F.sum("pb"), 8).alias("sq"),
             F.round(
                 F.sum(
                     half
@@ -157,7 +151,7 @@ def jsd_matrix(
                         / (F.col("pa") + F.col("pb"))
                     )
                 ),
-                round_dp,
+                8,
             ).alias("shared_term"),
         )
     )
@@ -182,7 +176,7 @@ def jsd_matrix(
                 half * (F.col("ma") - F.coalesce(F.col("sp"), F.lit(0.0)))
                 + half * (F.col("mb") - F.coalesce(F.col("sq"), F.lit(0.0)))
                 + F.coalesce(F.col("shared_term"), F.lit(0.0)),
-                out_dp,
+                6,
             ).alias("jsd_bits"),
         )
         .orderBy("domain_a", "domain_b")
@@ -256,8 +250,6 @@ def ewma_chart(
     sigma0: float,
     lam: float = 0.2,
     width: float = 3.0,
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """EWMA control chart (Roberts 1959) over a time-grain series — the
     small-shift monitor tuned the opposite way from CUSUM (geometric
@@ -283,19 +275,19 @@ def ewma_chart(
     )
     t = F.row_number().over(w_rank).cast("double")
     scaled = F.round(
-        F.col(value_col).cast("double") * F.pow(F.lit(one_m), -t), round_dp
+        F.col(value_col).cast("double") * F.pow(F.lit(one_m), -t), 8
     )
     staged = series.select(
         F.col(time_col).alias("time"),
-        F.round(F.col(value_col).cast("double"), out_dp).alias("x"),
+        F.round(F.col(value_col).cast("double"), 6).alias("x"),
         t.alias("__t"),
         scaled.alias("__a"),
     )
-    cum = F.round(F.sum("__a").over(w_cum), round_dp)
+    cum = F.round(F.sum("__a").over(w_cum), 8)
     e = F.round(
         F.pow(F.lit(one_m), F.col("__t"))
         * (F.lit(float(mu0)) + F.lit(float(lam)) * cum),
-        round_dp,
+        8,
     )
     band = F.round(
         F.lit(float(width) * float(sigma0))
@@ -306,13 +298,13 @@ def ewma_chart(
                 - F.pow(F.lit(one_m), F.lit(2.0) * F.col("__t"))
             )
         ),
-        round_dp,
+        8,
     )
     return staged.select(
         "time",
         "x",
-        F.round(e, out_dp).alias("ewma"),
-        F.round(band, out_dp).alias("band"),
+        F.round(e, 6).alias("ewma"),
+        F.round(band, 6).alias("band"),
         (F.abs(e - F.lit(float(mu0))) > band).alias("alarm"),
     ).orderBy("time")
 
@@ -322,8 +314,6 @@ def theil_sen(
     time_col: str,
     value_col: str,
     group_col: str | None = None,
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Theil-Sen robust trend over a TIME-GRAIN series: the median of
     all pairwise slopes (breakdown point ~29%, vs 0% for OLS — one
@@ -355,13 +345,13 @@ def theil_sen(
         F.round(
             (F.col("__v2") - F.col("__v1"))
             / (F.col("__t2") - F.col("__t1")),
-            round_dp,
+            8,
         ).alias("__slope"),
     )
     grp = slope_rows.groupBy(*gcols) if gcols else slope_rows.groupBy()
     med_slope = grp.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-        F.round(F.percentile(F.col("__slope"), F.lit(0.5)), round_dp).alias(
+        F.round(F.percentile(F.col("__slope"), F.lit(0.5)), 8).alias(
             "slope"
         ),
     )
@@ -375,19 +365,19 @@ def theil_sen(
         "n_pairs",
         "slope",
         F.round(
-            F.col("__v1") - F.col("slope") * F.col("__t1"), round_dp
+            F.col("__v1") - F.col("slope") * F.col("__t1"), 8
         ).alias("__r"),
     )
     grp2 = resid.groupBy(*gcols, "n_pairs", "slope")
     out = grp2.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_points"),
-        F.round(F.percentile(F.col("__r"), F.lit(0.5)), out_dp).alias(
+        F.round(F.percentile(F.col("__r"), F.lit(0.5)), 6).alias(
             "intercept"
         ),
     )
     cols = (
         [*gcols, "n_points", "n_pairs",
-         F.round(F.col("slope"), out_dp).alias("slope"), "intercept"]
+         F.round(F.col("slope"), 6).alias("slope"), "intercept"]
     )
     result = out.select(*cols)
     return result.orderBy(group_col) if group_col else result
@@ -399,8 +389,6 @@ def acf_profile(
     value_col: str,
     group_col: str | None = None,
     max_lag: int = 7,
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Sample autocorrelation function of a TIME-GRAIN series at lags
     1..``max_lag`` plus the cumulative Ljung-Box Q statistic — is a
@@ -419,7 +407,7 @@ def acf_profile(
     (``0 < t2 - t1 <= max_lag``, group-keyed; gaps in the grid simply
     contribute no pair at the affected lags), one grouped aggregate
     per (group, lag), and the cumulative Q rides a window over the
-    lag-grain frame. Per-aggregate ``round_dp`` rounding keeps the
+    lag-grain frame. Per-aggregate 8-dp rounding keeps the
     unrolled SQL oracle exact."""
     gcols = [group_col] if group_col else []
     # eager lineage truncation at the time-grain boundary (the kruskal
@@ -437,7 +425,7 @@ def acf_profile(
     ).localCheckpoint()
     stats = base.groupBy(*gcols).agg(
         F.count(F.lit(1)).cast("double").alias("__n"),
-        F.round(F.avg("__v"), round_dp).alias("__mu"),
+        F.round(F.avg("__v"), 8).alias("__mu"),
     )
     cent = (
         base.join(F.broadcast(stats), gcols)
@@ -445,7 +433,7 @@ def acf_profile(
         else base.crossJoin(F.broadcast(stats))
     ).select(*gcols, "__t", "__n", (F.col("__v") - F.col("__mu")).alias("__e"))
     denom = cent.groupBy(*gcols).agg(
-        F.round(F.sum(F.col("__e") * F.col("__e")), round_dp).alias("__den")
+        F.round(F.sum(F.col("__e") * F.col("__e")), 8).alias("__den")
     )
     a = cent.select(
         *gcols, F.col("__t").alias("__t1"), F.col("__e").alias("__e1"),
@@ -461,7 +449,7 @@ def acf_profile(
         .groupBy(*gcols, lag.alias("lag"))
         .agg(
             F.max("__n").alias("__n"),
-            F.round(F.sum(F.col("__e1") * F.col("__e2")), round_dp).alias(
+            F.round(F.sum(F.col("__e1") * F.col("__e2")), 8).alias(
                 "__num"
             ),
         )
@@ -476,7 +464,7 @@ def acf_profile(
         F.col("__n"),
         F.round(
             F.when(F.col("__den") > 0, F.col("__num") / F.col("__den")),
-            round_dp,
+            8,
         ).alias("__rho"),
     )
     w = (
@@ -486,14 +474,14 @@ def acf_profile(
     ).rowsBetween(Window.unboundedPreceding, 0)
     n = F.col("__n")
     qterm = F.round(
-        F.col("__rho") * F.col("__rho") / (n - F.col("lag")), round_dp
+        F.col("__rho") * F.col("__rho") / (n - F.col("lag")), 8
     )
     return rho.select(
         *gcols,
         "lag",
         n.cast("bigint").alias("n_points"),
-        F.round(F.col("__rho"), out_dp).alias("rho"),
-        F.round(n * (n + 2.0) * F.sum(qterm).over(w), out_dp).alias(
+        F.round(F.col("__rho"), 6).alias("rho"),
+        F.round(n * (n + 2.0) * F.sum(qterm).over(w), 6).alias(
             "q_stat"
         ),
     ).orderBy(*gcols, "lag")

@@ -93,29 +93,22 @@ def _occurrence_rows(
     )
 
 
-def bleu_pairs(
-    pairs: DataFrame,
-    pred_col: str = "prediction",
-    ref_col: str = "reference",
-    pair_col: str = "pair_id",
-    max_n: int = 2,
-    round_dp: int | None = 6,
-) -> DataFrame:
+def bleu_pairs(pairs: DataFrame, max_n: int = 2) -> DataFrame:
     """Smoothed BLEU-``max_n`` per (prediction, reference) pair.
 
-    Output: ``(pair_col, pred_len, ref_len, p1..p{max_n}, bleu)`` —
-    precisions and bleu rounded ``round_dp``; pairs whose prediction has
+    Output: ``(pair_id, pred_len, ref_len, p1..p{max_n}, bleu)`` —
+    precisions and bleu rounded 6 dp; pairs whose prediction has
     no unigram (empty text) are absent (nothing to score).
     """
-    occ = _occurrence_rows(pairs, pred_col, ref_col, pair_col, max_n)
+    occ = _occurrence_rows(pairs, "prediction", "reference", "pair_id", max_n)
     counts = (
-        occ.groupBy(pair_col, "n", "gram")
+        occ.groupBy("pair_id", "n", "gram")
         .agg(
             F.sum(F.when(F.col("side") == "p", 1).otherwise(0)).alias("cp"),
             F.sum(F.when(F.col("side") == "r", 1).otherwise(0)).alias("cr"),
         )
     )
-    per_n = counts.groupBy(pair_col, "n").agg(
+    per_n = counts.groupBy("pair_id", "n").agg(
         F.sum(F.least("cp", "cr")).alias("clipped"),
         F.sum("cp").alias("denom"),
         F.sum("cr").alias("rdenom"),
@@ -123,7 +116,7 @@ def bleu_pairs(
     # smoothed log-precision; a pair with no order-n pred grams (short
     # text) contributes ln((0+1)/(0+1)) = 0 for that order — neutral
     logp = F.log((F.col("clipped") + 1) / (F.col("denom") + 1))
-    rolled = per_n.groupBy(pair_col).agg(
+    rolled = per_n.groupBy("pair_id").agg(
         F.sum(F.when(F.col("n") == 1, F.col("denom")).otherwise(0)).alias(
             "pred_len"
         ),
@@ -138,7 +131,7 @@ def bleu_pairs(
                 F.exp(
                     F.sum(F.when(F.col("n") == i, logp).otherwise(None))
                 ),
-                round_dp if round_dp is not None else 12,
+                6,
             ).alias(f"p{i}")
             for i in range(1, max_n + 1)
         ],
@@ -147,12 +140,11 @@ def bleu_pairs(
         F.lit(1.0), F.exp(1.0 - F.col("ref_len") / F.col("pred_len"))
     )
     bleu = bp * F.exp(F.col("__mean_logp"))
-    if round_dp is not None:
-        bleu = F.round(bleu, round_dp)
+    bleu = F.round(bleu, 6)
     return (
         rolled.filter(F.col("pred_len") > 0)
         .select(
-            pair_col,
+            "pair_id",
             F.col("pred_len").cast("bigint").alias("pred_len"),
             F.col("ref_len").cast("bigint").alias("ref_len"),
             *[f"p{i}" for i in range(1, max_n + 1)],
@@ -161,14 +153,14 @@ def bleu_pairs(
     )
 
 
-def py_bleu(pred: str, ref: str, max_n: int = 2) -> float | None:
+def py_bleu(pred: str, ref: str) -> float | None:
     """Literal-Python twin for tests (same smoothing/BP definitions)."""
     pw = pred.lower().split()
     rw = ref.lower().split()
     if not pw:
         return None
     logs = []
-    for n in range(1, max_n + 1):
+    for n in range(1, 3):
         pg: dict[tuple[str, ...], int] = {}
         rg: dict[tuple[str, ...], int] = {}
         for i in range(len(pw) - n + 1):
@@ -181,17 +173,14 @@ def py_bleu(pred: str, ref: str, max_n: int = 2) -> float | None:
         denom = sum(pg.values())
         logs.append(math.log((clipped + 1) / (denom + 1)))
     bp = min(1.0, math.exp(1 - len(rw) / len(pw)))
-    return round(bp * math.exp(sum(logs) / max_n), 6)
+    return round(bp * math.exp(sum(logs) / 2), 6)
 
 
 def rbo_at_k(
     ranked_a: DataFrame,
     ranked_b: DataFrame,
-    id_col: str = "doc_id",
-    rank_col: str = "rank",
     k: int = 50,
     p: float = 0.9,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Rank-biased overlap between two top-k rankings (Webber et al.
     2010), truncated at depth ``k``:
@@ -221,10 +210,10 @@ def rbo_at_k(
     contract), and the weighted sum is over k rounded terms.
     """
     a = ranked_a.select(
-        F.col(id_col).alias("__id"), F.col(rank_col).alias("__ra")
+        F.col("doc_id").alias("__id"), F.col("rank").alias("__ra")
     )
     b = ranked_b.select(
-        F.col(id_col).alias("__id"), F.col(rank_col).alias("__rb")
+        F.col("doc_id").alias("__id"), F.col("rank").alias("__rb")
     )
     joined = a.join(b, "__id", "full").select(
         F.greatest(
@@ -253,9 +242,9 @@ def rbo_at_k(
     return xd.agg(
         F.lit(int(k)).alias("k"),
         F.lit(float(p)).alias("p"),
-        F.round(F.lit(1.0 - p) * F.sum(term), round_dp).alias("rbo"),
+        F.round(F.lit(1.0 - p) * F.sum(term), 6).alias("rbo"),
         F.round(
             F.max(F.when(F.col("__d") == k, F.col("__xd"))) / F.lit(float(k)),
-            round_dp,
+            6,
         ).alias("overlap_at_k"),
     )

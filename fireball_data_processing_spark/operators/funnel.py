@@ -37,14 +37,7 @@ __all__ = ["funnel_steps", "cohort_retention"]
 WEEK_NS = 7 * 86400 * 1_000_000_000
 
 
-def funnel_steps(
-    events: DataFrame,
-    steps: Sequence[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    round_dp: int = 6,
-) -> DataFrame:
+def funnel_steps(events: DataFrame, steps: Sequence[str]) -> DataFrame:
     """First-touch ordered funnel: a user completes step k at the
     EARLIEST event of type ``steps[k]`` at-or-after their step k-1
     completion time (ties allowed — simultaneous events count, matching
@@ -53,19 +46,19 @@ def funnel_steps(
     with null conversions where the denominator step has no users (and
     for step 1's conv_from_prev).
     """
-    w = Window.partitionBy(user_col)
-    df = events.select(user_col, type_col, ts_col)
+    w = Window.partitionBy("user_id")
+    df = events.select("user_id", "event_type", "ts")
     prev_t: F.Column | None = None
     tcols = []
     for i, step in enumerate(steps):
-        cond = F.col(type_col) == step
+        cond = F.col("event_type") == step
         if prev_t is not None:
-            cond = cond & (F.col(ts_col) >= prev_t)
+            cond = cond & (F.col("ts") >= prev_t)
         tname = f"__t{i}"
-        df = df.withColumn(tname, F.min(F.when(cond, F.col(ts_col))).over(w))
+        df = df.withColumn(tname, F.min(F.when(cond, F.col("ts"))).over(w))
         prev_t = F.col(tname)
         tcols.append(tname)
-    per_user = df.groupBy(user_col).agg(
+    per_user = df.groupBy("user_id").agg(
         *[F.max(t).alias(t) for t in tcols]
     )
     counts = per_user.agg(
@@ -73,7 +66,7 @@ def funnel_steps(
     )
     n = lambda i: F.col(f"__n{i}")  # noqa: E731
     rate = lambda num, den: F.round(  # noqa: E731
-        num.cast("double") / F.when(den > 0, den), round_dp
+        num.cast("double") / F.when(den > 0, den), 6
     )
     rows = [
         F.struct(
@@ -92,20 +85,14 @@ def funnel_steps(
     return counts.select(F.explode(F.array(*rows)).alias("r")).select("r.*")
 
 
-def cohort_retention(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    period_ns: int = WEEK_NS,
-    round_dp: int = 6,
-) -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """Cohort-retention matrix: cohort = the period of a user's first
     event; a cell counts the cohort's distinct users active
     ``period_offset`` periods later. Returns ``(cohort_period,
     period_offset, n_active, cohort_size, retention)``; offset 0 rows
     are the cohort sizes themselves (retention 1.0)."""
-    wk = F.expr(f"{ts_col} div {int(period_ns)}")
-    e = events.select(F.col(user_col).alias("u"), wk.alias("wk"))
+    wk = F.expr(f"ts div {WEEK_NS}")
+    e = events.select(F.col("user_id").alias("u"), wk.alias("wk"))
     first = e.groupBy("u").agg(F.min("wk").alias("cohort_period"))
     sizes = first.groupBy("cohort_period").agg(
         F.count(F.lit(1)).cast("bigint").alias("cohort_size")
@@ -127,6 +114,6 @@ def cohort_retention(
         "n_active",
         "cohort_size",
         F.round(
-            F.col("n_active").cast("double") / F.col("cohort_size"), round_dp
+            F.col("n_active").cast("double") / F.col("cohort_size"), 6
         ).alias("retention"),
     )

@@ -46,13 +46,7 @@ __all__ = [
 ]
 
 
-def mann_whitney_u(
-    df: DataFrame,
-    value_col: str,
-    is_b: Column,
-    round_dp: int = 8,
-    out_dp: int = 6,
-) -> DataFrame:
+def mann_whitney_u(df: DataFrame, value_col: str, is_b: Column) -> DataFrame:
     """Two-sample Mann-Whitney U with midrank tie handling and the
     tie-corrected normal approximation. ``is_b`` marks the B sample.
     Returns ONE row ``(n_a, n_b, u_a, z)`` where ``u_a`` is the U
@@ -76,12 +70,12 @@ def mann_whitney_u(
     )
     agg = ranked.agg(
         F.round(F.sum((F.col("t") - F.col("tb")) * F.col("avg_rank")),
-                round_dp).alias("ra"),
+                8).alias("ra"),
         F.sum(F.col("t") - F.col("tb")).alias("na"),
         F.sum("tb").alias("nb"),
         F.round(
             F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t")),
-            round_dp,
+            8,
         ).alias("tie_mass"),
     )
     na, nb = F.col("na"), F.col("nb")
@@ -93,18 +87,12 @@ def mann_whitney_u(
     return agg.select(
         na.cast("bigint").alias("n_a"),
         nb.cast("bigint").alias("n_b"),
-        F.round(u_a, out_dp).alias("u_a"),
-        F.round((u_a - na * nb / 2.0) / F.sqrt(var), out_dp).alias("z"),
+        F.round(u_a, 6).alias("u_a"),
+        F.round((u_a - na * nb / 2.0) / F.sqrt(var), 6).alias("z"),
     )
 
 
-def chi2_association(
-    df: DataFrame,
-    a_col: str,
-    b_col: str,
-    round_dp: int = 8,
-    out_dp: int = 6,
-) -> DataFrame:
+def chi2_association(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
     """Pearson chi-squared test of independence between two categorical
     columns plus Cramér's V effect size. Returns ONE row
     ``(n, n_rows, n_cols, chi2, dof, cramers_v)``. The cell frame is
@@ -137,7 +125,7 @@ def chi2_association(
         F.round(
             F.sum((F.col("o") - F.col("e")) * (F.col("o") - F.col("e"))
                   / F.col("e")),
-            round_dp,
+            8,
         ).alias("chi2"),
     )
     dof = (F.col("n_rows") - 1) * (F.col("n_cols") - 1)
@@ -146,11 +134,11 @@ def chi2_association(
         F.col("n").cast("bigint").alias("n"),
         "n_rows",
         "n_cols",
-        F.round(F.col("chi2"), out_dp).alias("chi2"),
+        F.round(F.col("chi2"), 6).alias("chi2"),
         dof.cast("bigint").alias("dof"),
         F.round(
             F.sqrt(F.col("chi2") / (F.col("n") * mindim.cast("double"))),
-            out_dp,
+            6,
         ).alias("cramers_v"),
     )
 
@@ -216,13 +204,7 @@ def bh_significant(
     return ranked.withColumn("significant", F.col("bh_rank") <= kmax)
 
 
-def kruskal_wallis(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    round_dp: int = 8,
-    out_dp: int = 6,
-) -> DataFrame:
+def kruskal_wallis(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
     """Kruskal-Wallis H test — the k-group generalization of
     :func:`mann_whitney_u` (Kruskal & Wallis 1952): do ANY of the
     groups' value distributions differ, judged on ranks (robust to
@@ -274,7 +256,7 @@ def kruskal_wallis(
         .groupBy("g")
         .agg(
             F.sum("tg").alias("n_g"),
-            F.round(F.sum(F.col("tg") * F.col("avg_rank")), round_dp).alias(
+            F.round(F.sum(F.col("tg") * F.col("avg_rank")), 8).alias(
                 "r_g"
             ),
         )
@@ -283,13 +265,13 @@ def kruskal_wallis(
         F.count(F.lit(1)).cast("double").alias("k"),
         F.sum("n_g").alias("n"),
         F.round(
-            F.sum(F.col("r_g") * F.col("r_g") / F.col("n_g")), round_dp
+            F.sum(F.col("r_g") * F.col("r_g") / F.col("n_g")), 8
         ).alias("s"),
     )
     tstats = ranked.agg(
         F.round(
             F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t")),
-            round_dp,
+            8,
         ).alias("tie_mass")
     )
     n, k, s = F.col("n"), F.col("k"), F.col("s")
@@ -298,11 +280,11 @@ def kruskal_wallis(
     return gstats.crossJoin(F.broadcast(tstats)).select(
         n.cast("bigint").alias("n"),
         k.cast("bigint").alias("n_groups"),
-        F.round(h, out_dp).alias("h"),
+        F.round(h, 6).alias("h"),
         (k - 1.0).cast("bigint").alias("dof"),
-        F.round(c, out_dp).alias("tie_correction"),
-        F.round(h / c, out_dp).alias("h_adj"),
-        F.round(h / c / (n - 1.0), out_dp).alias("epsilon_sq"),
+        F.round(c, 6).alias("tie_correction"),
+        F.round(h / c, 6).alias("h_adj"),
+        F.round(h / c / (n - 1.0), 6).alias("epsilon_sq"),
     )
 
 
@@ -310,8 +292,6 @@ def spearman_matrix(
     df: DataFrame,
     id_col: str,
     metrics: dict[str, Column],
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Pairwise Spearman rank correlation between the given per-row
     ``metrics`` (name -> numeric Column): Pearson's formula on MIDRANKS
@@ -366,7 +346,7 @@ def spearman_matrix(
     # the melt feeds TWO physical consumers (the rank table and the
     # join-back); unpinned, each would re-evaluate the metric
     # expressions — often regex/split-heavy document features — over the
-    # full source scan (guide §2.4: duplicated subtrees). The cached
+    # full source scan. The cached
     # frame is |metrics| doubles per row, far narrower than the source.
     long = long.persist()
     per_mx = long.groupBy("metric", "x").agg(
@@ -396,13 +376,13 @@ def spearman_matrix(
     # 2k + k(k-1)/2 + 1 aggregate columns, one combine
     aggs = [F.count(F.lit(1)).cast("double").alias("__n")]
     for m in names:
-        aggs.append(F.round(F.sum(F.col(m)), round_dp).alias(f"__s_{m}"))
+        aggs.append(F.round(F.sum(F.col(m)), 8).alias(f"__s_{m}"))
         aggs.append(
-            F.round(F.sum(F.col(m) * F.col(m)), round_dp).alias(f"__ss_{m}")
+            F.round(F.sum(F.col(m) * F.col(m)), 8).alias(f"__ss_{m}")
         )
     for a, b in pair_list:
         aggs.append(
-            F.round(F.sum(F.col(a) * F.col(b)), round_dp).alias(
+            F.round(F.sum(F.col(a) * F.col(b)), 8).alias(
                 f"__sp_{a}__{b}"
             )
         )
@@ -420,7 +400,7 @@ def spearman_matrix(
                 F.lit(a).alias("metric_a"),
                 F.lit(b).alias("metric_b"),
                 n.cast("bigint").alias("n"),
-                F.round(F.when(den > 0, num / den), out_dp).alias("rho"),
+                F.round(F.when(den > 0, num / den), 6).alias("rho"),
             )
         )
     return (
@@ -477,12 +457,7 @@ def mcnemar_paired(
     )
 
 
-def cochran_q(
-    df: DataFrame,
-    gates: dict[str, Column],
-    round_dp: int = 8,
-    out_dp: int = 6,
-) -> DataFrame:
+def cochran_q(df: DataFrame, gates: dict[str, Column]) -> DataFrame:
     """Cochran's Q test (Cochran 1950) — the k-gate generalization of
     :func:`mcnemar_paired`: do k boolean gates scored on the SAME rows
     pass at the same rate, accounting for the pairing? (For k = 2 it
@@ -528,7 +503,7 @@ def cochran_q(
     return stats.select(
         F.col("__n").cast("bigint").alias("n"),
         F.lit(int(k)).cast("bigint").alias("k"),
-        F.round(F.when(den > 0, q), out_dp).alias("q"),
+        F.round(F.when(den > 0, q), 6).alias("q"),
         F.lit(int(k) - 1).cast("bigint").alias("dof"),
         *[
             F.col(f"__s_{m}").cast("bigint").alias(f"pass_{m}")

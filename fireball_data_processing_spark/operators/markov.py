@@ -59,14 +59,13 @@ def transition_matrix(
     key_col: str,
     order_col: str,
     state_col: str,
-    round_dp: int = 8,
 ) -> DataFrame:
     """Empirical first-order transition matrix of ``state_col`` along
     ``order_col`` within each ``key_col`` sequence. Returns one row per
     observed (src, dst) pair restricted to dst-states that also occur
     as src (see module note on dangling states):
     ``(src, dst, n, p)`` with ``p`` row-normalized over the kept
-    destinations and rounded to ``round_dp``.
+    destinations and rounded to 8 dp.
 
     One hash exchange on ``key_col`` for the lead window, one
     partial-combining pair count, then arithmetic on the matrix frame.
@@ -89,7 +88,7 @@ def transition_matrix(
         "dst",
         "n",
         F.round(
-            F.col("n").cast("double") / F.sum("n").over(tot), round_dp
+            F.col("n").cast("double") / F.sum("n").over(tot), 8
         ).alias("p"),
     )
 
@@ -99,7 +98,6 @@ def _collected_matrix(
     key_col: str,
     order_col: str,
     state_col: str,
-    round_dp: int = 8,
 ) -> list:
     """The :func:`transition_matrix` rows as a collected
     ``[(src, dst, n, p), ...]`` list, in ONE distributed job: the lead
@@ -107,11 +105,11 @@ def _collected_matrix(
     destinations included), and the dangling-dst restriction +
     row renormalization run driver-side. The frame form's broadcast
     semi-join on the source set re-executes the whole window+aggregate
-    subtree as the broadcast side (guide §2.4: a duplicated subtree per
-    action), which doubled the data-proportional work of every
+    subtree as the broadcast side (a duplicated subtree per action),
+    which doubled the data-proportional work of every
     profile/entropy run; driver-side restriction over integer counts is
     EXACT (the per-src totals are integer sums — no float
-    reassociation), so ``p = round(n / total, round_dp)`` is
+    reassociation), so ``p = round(n / total, 8)`` is
     bit-identical to the frame form's window division."""
     w = Window.partitionBy(key_col).orderBy(order_col)
     raw = (
@@ -134,34 +132,30 @@ def _collected_matrix(
             r["src"],
             r["dst"],
             r["n"],
-            _spark_round(r["n"] / totals[r["src"]], round_dp),
+            _spark_round(r["n"] / totals[r["src"]], 8),
         )
         for r in kept
     ]
 
 
-def stationary_distribution(
-    matrix: DataFrame,
-    n_iter: int = 12,
-    round_dp: int = 8,
-) -> DataFrame:
+def stationary_distribution(matrix: DataFrame, n_iter: int = 12) -> DataFrame:
     """Power iteration ``pi <- pi @ P`` from the uniform start, exactly
-    ``n_iter`` steps, each iterate rounded to ``round_dp`` (engine
+    ``n_iter`` steps, each iterate rounded to 8 dp (engine
     replay). ``matrix`` is the (src, dst, p) frame from
     transition_matrix. Returns ``(state, pi)`` — a |states|-row frame
     consumers join back to distributed data (Spark broadcasts it).
 
     The matrix is |states|^2-bounded BY CONSTRUCTION, so the iteration
     runs DRIVER-SIDE on the collected table (the operators/raking.py
-    contract, applied to removal_attribution in r9 and here for the
-    same measured reason: a frame-resident loop spends seconds of
+    contract, applied to removal_attribution and here for the same
+    measured reason: a frame-resident loop spends seconds of
     stage-launch overhead per query on sub-kilobyte joins — at every
     SF — while IEEE-double driver arithmetic with ``_spark_round``
     replicating the engine's per-iterate rounding is value-identical
     and free). Join/group semantics mirror the frame form: states with
     no incoming transition drop out of the iterate after step 1, and
     per-destination sums run in sorted-source order (reassociation
-    noise absorbed by ``round_dp``, the cross-engine oracle contract).
+    noise absorbed by the 8-dp rounding, the cross-engine oracle contract).
     """
     state_type = matrix.schema["src"].dataType
     out_schema = StructType(
@@ -176,7 +170,7 @@ def stationary_distribution(
             for r in matrix.select("src", "dst", "p").collect()
         ],
         n_iter,
-        round_dp,
+        8,
     )
     if not pi:
         return matrix.sparkSession.createDataFrame([], out_schema)
@@ -219,8 +213,6 @@ def markov_profile(
     order_col: str,
     state_col: str,
     n_iter: int = 12,
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Per-state chain profile: out-transition count, self-loop
     probability, and the ``n_iter``-step power-iterate of the stationary
@@ -243,9 +235,9 @@ def markov_profile(
     Arithmetic is value-identical: integer out-counts, and every
     rounded value goes through ``_spark_round`` exactly where the frame
     form rounded."""
-    mat_rows = _collected_matrix(df, key_col, order_col, state_col, round_dp)
+    mat_rows = _collected_matrix(df, key_col, order_col, state_col)
     pi = _stationary_from_rows(
-        [(s, d, p) for s, d, _, p in mat_rows], n_iter, round_dp
+        [(s, d, p) for s, d, _, p in mat_rows], n_iter, 8
     )
     n_out: dict = {}
     self_p: dict = {}
@@ -266,8 +258,8 @@ def markov_profile(
         (
             s,
             int(n_out[s]),
-            _spark_round(self_p.get(s, 0.0), out_dp),
-            _spark_round(pi[s], out_dp),
+            _spark_round(self_p.get(s, 0.0), 6),
+            _spark_round(pi[s], 6),
         )
         for s in sorted(n_out, key=_sort_key)
         if s in pi  # inner-join semantics of the frame form
@@ -275,7 +267,7 @@ def markov_profile(
     # rows are built in state order, so the local relation already IS
     # the ordered-by-state output; an orderBy here would re-sort 5 rows
     # through a range exchange — a whole extra job at the measured
-    # ~0.2 s/job floor (guide §5: driver/fixed costs)
+    # ~0.2 s/job floor
     return df.sparkSession.createDataFrame(rows, out_schema)
 
 
@@ -284,7 +276,6 @@ def raw_transition_probs(
     key_col: str,
     order_col: str,
     state_col: str,
-    round_dp: int = 8,
 ) -> DataFrame:
     """Un-renormalized empirical transition probabilities: one row per
     observed (src, dst) with ``p = n / total_out(src)`` over ALL
@@ -308,7 +299,7 @@ def raw_transition_probs(
         "dst",
         "n",
         F.round(
-            F.col("n").cast("double") / F.sum("n").over(tot), round_dp
+            F.col("n").cast("double") / F.sum("n").over(tot), 8
         ).alias("p"),
     )
 
@@ -385,8 +376,6 @@ def removal_attribution(
     state_col: str,
     conv_state: str,
     n_iter: int = 12,
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Markov removal-effect attribution (Anderl et al. 2014, the
     standard data-driven alternative to last-touch credit): model each
@@ -417,8 +406,8 @@ def removal_attribution(
     pure stage-launch + deep-plan overhead on sub-kilobyte frames; the
     collected form keeps only the data-proportional 1-2 s.
 
-    The matrix and the start mix collect in ONE job (r12, guide §1.1
-    driver round-trips): ``lead`` and ``row_number`` ride the same
+    The matrix and the start mix collect in ONE job (one driver
+    round-trip): ``lead`` and ``row_number`` ride the same
     window spec in one projection, and the two bounded aggregates come
     back as one tagged union — the per-user exchange is planned once
     and the branches execute inside a single action instead of two
@@ -441,7 +430,7 @@ def removal_attribution(
             F.col("src").alias("a"),
             F.col("dst").alias("b"),
             F.round(
-                F.col("n").cast("double") / F.sum("n").over(tot), round_dp
+                F.col("n").cast("double") / F.sum("n").over(tot), 8
             ).alias("v"),
         )
     )
@@ -455,7 +444,7 @@ def removal_attribution(
             F.col("state").alias("a"),
             F.lit(None).cast(state_type).alias("b"),
             F.round(
-                F.col("__c") / F.sum("__c").over(tot_all), round_dp
+                F.col("__c") / F.sum("__c").over(tot_all), 8
             ).alias("v"),
         )
     )
@@ -501,26 +490,26 @@ def removal_attribution(
         )
         if conv_state in pi0:
             v += pi0[conv_state]
-        return _spark_round(v, round_dp)
+        return _spark_round(v, 8)
 
     conv_full = conv_of(
-        _absorption(matrix, conv_state, None, n_iter, round_dp)
+        _absorption(matrix, conv_state, None, n_iter, 8)
     )
     rows = []
     for c in transient:
         conv_c = conv_of(
-            _absorption(matrix, conv_state, c, n_iter, round_dp)
+            _absorption(matrix, conv_state, c, n_iter, 8)
         )
         rows.append(
             (
                 c,
-                _spark_round(pi0.get(c, 0.0), out_dp),
-                _spark_round(conv_full, out_dp),
-                _spark_round(conv_c, out_dp),
+                _spark_round(pi0.get(c, 0.0), 6),
+                _spark_round(conv_full, 6),
+                _spark_round(conv_c, 6),
                 # degenerate zero-conversion chain: no credit to assign
                 None
                 if conv_full == 0.0
-                else _spark_round(1.0 - conv_c / conv_full, out_dp),
+                else _spark_round(1.0 - conv_c / conv_full, 6),
             )
         )
     # rows are built iterating sorted(transient), so the local relation

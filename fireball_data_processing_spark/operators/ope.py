@@ -33,7 +33,6 @@ def empirical_propensities(
     df: DataFrame,
     context_col: str,
     action_col: str,
-    round_dp: int = 8,
 ) -> DataFrame:
     """Logged-policy propensity estimates ``pi_l(a|x)`` as empirical
     conditional frequencies: one (context, action) count plus per-
@@ -53,7 +52,7 @@ def empirical_propensities(
         "action",
         F.col("n").cast("bigint").alias("n"),
         F.round(
-            F.col("n").cast("double") / F.col("tot").cast("double"), round_dp
+            F.col("n").cast("double") / F.col("tot").cast("double"), 8
         ).alias("pi_logged"),
     )
 
@@ -64,8 +63,6 @@ def snips_value(
     action_col: str,
     reward_col: str,
     target_probs: dict[str, float] | None = None,
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """IPS and self-normalized IPS estimate of the value a TARGET policy
     would earn on the logged traffic. ``target_probs`` maps action ->
@@ -80,13 +77,13 @@ def snips_value(
     actions that WERE logged), so the estimate is over the logged
     support, the standard IPS caveat."""
     props = F.broadcast(
-        empirical_propensities(df, context_col, action_col, round_dp)
+        empirical_propensities(df, context_col, action_col)
         .drop("n")
     )
     n_actions = props.select("action").distinct()
     if target_probs is None:
         k = n_actions.count()  # |actions|: tiny, known pre-plan by design
-        pi_t = F.round(F.lit(1.0) / F.lit(float(k)), round_dp)
+        pi_t = F.round(F.lit(1.0) / F.lit(float(k)), 8)
     else:
         mapping = F.create_map(
             *[
@@ -95,7 +92,7 @@ def snips_value(
                 for v in kv
             ]
         )
-        pi_t = F.round(mapping[F.col("action")], round_dp)
+        pi_t = F.round(mapping[F.col("action")], 8)
     joined = df.select(
         F.col(context_col).alias("context"),
         F.col(action_col).alias("action"),
@@ -104,10 +101,10 @@ def snips_value(
     w = pi_t / F.col("pi_logged")
     agg = joined.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.round(F.avg("r"), round_dp).alias("logged_value"),
-        F.round(F.sum(w * F.col("r")), round_dp).alias("swr"),
-        F.round(F.sum(w), round_dp).alias("sw"),
-        F.round(F.sum(w * w), round_dp).alias("sww"),
+        F.round(F.avg("r"), 8).alias("logged_value"),
+        F.round(F.sum(w * F.col("r")), 8).alias("swr"),
+        F.round(F.sum(w), 8).alias("sw"),
+        F.round(F.sum(w * w), 8).alias("sww"),
     )
     n_act = F.broadcast(
         n_actions.agg(F.count(F.lit(1)).cast("bigint").alias("n_actions"))
@@ -115,11 +112,11 @@ def snips_value(
     return agg.crossJoin(n_act).select(
         "n",
         "n_actions",
-        F.round(F.col("logged_value"), out_dp).alias("logged_value"),
-        F.round(F.col("swr") / F.col("n"), out_dp).alias("ips_value"),
-        F.round(F.col("swr") / F.col("sw"), out_dp).alias("snips_value"),
+        F.round(F.col("logged_value"), 6).alias("logged_value"),
+        F.round(F.col("swr") / F.col("n"), 6).alias("ips_value"),
+        F.round(F.col("swr") / F.col("sw"), 6).alias("snips_value"),
         F.round(
-            F.col("sw") * F.col("sw") / F.col("sww"), out_dp
+            F.col("sw") * F.col("sw") / F.col("sww"), 6
         ).alias("ess"),
     )
 
@@ -130,8 +127,6 @@ def dr_value(
     action_col: str,
     reward_col: str,
     target_probs: dict[str, float],
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Doubly-robust off-policy value (Dudik, Langford & Li 2011): the
     direct-method baseline plus an importance-weighted residual
@@ -150,24 +145,24 @@ def dr_value(
     and re-enter the scan as broadcast joins; the per-context direct-
     method term ``sum_a pi_t(a) q(x, a)`` is itself one tiny aggregate
     of the reward table. One final four-sum pass; zero collects."""
-    props = empirical_propensities(df, context_col, action_col, round_dp)
+    props = empirical_propensities(df, context_col, action_col)
     base = df.select(
         F.col(context_col).alias("context"),
         F.col(action_col).alias("action"),
         F.col(reward_col).cast("double").alias("r"),
     )
     qhat = base.groupBy("context", "action").agg(
-        F.round(F.avg("r"), round_dp).alias("q")
+        F.round(F.avg("r"), 8).alias("q")
     )
     mapping = F.create_map(
         *[F.lit(v) for kv in target_probs.items() for v in kv]
     )
-    pi_t = F.round(mapping[F.col("action")], round_dp)
+    pi_t = F.round(mapping[F.col("action")], 8)
     # direct-method term per context: sum_a pi_t(a) * q(x, a) over the
     # LOGGED actions of that context (unlogged actions have no q —
     # standard DM-on-logged-support caveat, same as snips_value)
     dm = qhat.groupBy("context").agg(
-        F.round(F.sum(pi_t * F.col("q")), round_dp).alias("dm_term")
+        F.round(F.sum(pi_t * F.col("q")), 8).alias("dm_term")
     )
     joined = (
         base.join(F.broadcast(props.drop("n")), ["context", "action"])
@@ -177,16 +172,16 @@ def dr_value(
     w = pi_t / F.col("pi_logged")
     agg = joined.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.round(F.sum("dm_term"), round_dp).alias("sdm"),
-        F.round(F.sum(w * F.col("r")), round_dp).alias("swr"),
+        F.round(F.sum("dm_term"), 8).alias("sdm"),
+        F.round(F.sum(w * F.col("r")), 8).alias("swr"),
         F.round(
             F.sum(F.col("dm_term") + w * (F.col("r") - F.col("q"))),
-            round_dp,
+            8,
         ).alias("sdr"),
     )
     return agg.select(
         "n",
-        F.round(F.col("sdm") / F.col("n"), out_dp).alias("dm_value"),
-        F.round(F.col("swr") / F.col("n"), out_dp).alias("ips_value"),
-        F.round(F.col("sdr") / F.col("n"), out_dp).alias("dr_value"),
+        F.round(F.col("sdm") / F.col("n"), 6).alias("dm_value"),
+        F.round(F.col("swr") / F.col("n"), 6).alias("ips_value"),
+        F.round(F.col("sdr") / F.col("n"), 6).alias("dr_value"),
     )

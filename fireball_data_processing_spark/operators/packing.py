@@ -39,12 +39,11 @@ def pack_sequences(
     shard_col: str,
     order_col: str,
     n_tokens: Column | str,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-shard concat-and-chunk packing plan: one output row per
     (document, bin) intersection —
 
-    ``(shard_col, id_col, bin_idx, tok_start, tok_end, offset_in_bin)``
+    ``(shard_col, doc_id, bin_idx, tok_start, tok_end, offset_in_bin)``
 
     meaning: tokens ``[tok_start, tok_end)`` of the document land in bin
     ``bin_idx`` at offset ``offset_in_bin``. Zero-token documents are
@@ -66,7 +65,7 @@ def pack_sequences(
     )
     sized = docs.select(
         F.col(shard_col),
-        F.col(id_col),
+        F.col("doc_id"),
         n.alias("__n"),
     ).filter(F.col("__n") > 0)
     cum = sized.withColumn("__end", F.sum("__n").over(w)).withColumn(
@@ -77,7 +76,7 @@ def pack_sequences(
     last_bin = ((F.col("__end") - 1) / m).cast("bigint")
     exploded = cum.select(
         shard_col,
-        id_col,
+        "doc_id",
         "__start",
         "__end",
         F.explode(F.sequence(first_bin, last_bin)).alias("bin_idx"),
@@ -85,7 +84,7 @@ def pack_sequences(
     bin_lo = F.col("bin_idx") * m
     return exploded.select(
         shard_col,
-        id_col,
+        "doc_id",
         "bin_idx",
         F.greatest(bin_lo - F.col("__start"), F.lit(0)).alias("tok_start"),
         (

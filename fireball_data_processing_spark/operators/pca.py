@@ -20,7 +20,7 @@ aggregate and every derived scalar is rounded to ``round_dp``, so an
 unrolled SQL oracle (dim-exploded joins — same arithmetic, different
 shape) replays the trajectory exactly.
 
-Fit-floor design (r9 re-plan): the first cut kept the centered vector
+Fit-floor design: the first cut kept the centered vector
 as d SEPARATE double columns so every expression stayed in wide
 codegen — correct, but each of the 8 sequential driver jobs spent
 ~1.5 s in CATALYST ANALYSIS of 64-column expression trees (measured:
@@ -105,25 +105,22 @@ def pca_fit(
     vec_col: str,
     dim: int,
     n_iter: int = 6,
-    round_dp: int = 8,
 ) -> tuple[list[float], list[float], float, float]:
     """Fit the top component and return the bounded model state as
     plain lists — ``(mu, v, nrm, total_scatter)`` — for callers that
     project with :func:`pca_project_expr` (the centroid-literal pattern
     of operators/clustering.py: model re-enters the plan as codegen
     constants, so projection adds ZERO joins/exchanges)."""
-    mu = _mean(df, vec_col, dim, round_dp)
+    mu = _mean(df, vec_col, dim, 8)
     v, nrm, total = _component(
-        df, _centered_expr(vec_col, mu), dim, n_iter, round_dp, with_total=True
+        df, _centered_expr(vec_col, mu), dim, n_iter, 8, with_total=True
     )
     return mu, v, nrm, total
 
 
-def pca_project_expr(
-    vec_col: str, mu: list[float], v: list[float], round_dp: int = 8
-):
+def pca_project_expr(vec_col: str, mu: list[float], v: list[float]):
     """The projection ``(x - mu) . v`` as a single codegen Column —
-    literal model state, no joins. Rounded to ``round_dp`` so an
+    literal model state, no joins. Rounded to 8 dp so an
     oracle's join-form projection reproduces it."""
     dim = len(mu)
     x = [F.col(vec_col)[i].cast("double") for i in range(dim)]
@@ -132,7 +129,7 @@ def pca_project_expr(
             ((x[i] - F.lit(mu[i])) * F.lit(v[i]) for i in range(dim)),
             F.lit(0.0),
         ),
-        round_dp,
+        8,
     )
 
 
@@ -207,8 +204,6 @@ def power_iteration_pca_k(
     dim: int,
     n_components: int = 2,
     n_iter: int = 6,
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Top ``n_components`` principal components via power iteration
     with HOTELLING DEFLATION: after extracting component v, the
@@ -224,7 +219,7 @@ def power_iteration_pca_k(
     scatter, so shares across components are comparable and sum below
     1. Same bounded-collect contract and per-value rounding as
     :func:`power_iteration_pca`."""
-    mu = _mean(df, vec_col, dim, round_dp)
+    mu = _mean(df, vec_col, dim, 8)
     carr = _centered_expr(vec_col, mu)
     total_scatter = None
 
@@ -232,18 +227,18 @@ def power_iteration_pca_k(
     for comp in range(1, n_components + 1):
         if comp == 1:
             v, nrm, total_scatter = _component(
-                df, carr, dim, n_iter, round_dp, with_total=True
+                df, carr, dim, n_iter, 8, with_total=True
             )
         else:
-            v, nrm = _component(df, carr, dim, n_iter, round_dp)
+            v, nrm = _component(df, carr, dim, n_iter, 8)
         for i in range(dim):
             rows.append(
                 (
                     comp,
                     i + 1,
-                    spark_round(v[i], out_dp),
-                    spark_round(nrm, out_dp),
-                    spark_round(nrm / total_scatter, out_dp),
+                    spark_round(v[i], 6),
+                    spark_round(nrm, 6),
+                    spark_round(nrm / total_scatter, 6),
                 )
             )
         # projection (c . v) as the same left-fold as the power step
@@ -253,14 +248,13 @@ def power_iteration_pca_k(
                 F.lit(0.0),
                 lambda acc, e: acc + e,
             ),
-            round_dp,
+            8,
         )
         carr = F.zip_with(carr, F.lit(v), lambda a, b: a - proj * b)
     # rows are appended comp-ascending, dim-ascending — the local
     # relation is ALREADY in (component, dim) order, so no orderBy();
     # sorting here would spend a whole range-exchange job on a
-    # (n_components * d)-row frame (r12, the markov stationary-profile
-    # precedent; row sequence unchanged)
+    # (n_components * d)-row frame (row sequence unchanged)
     return df.sparkSession.createDataFrame(
         rows,
         "component bigint, dim bigint, loading double, "
@@ -273,8 +267,6 @@ def power_iteration_pca(
     vec_col: str,
     dim: int,
     n_iter: int = 6,
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Top principal component of ``vec_col`` (array<float/double>,
     ``dim`` entries). Returns ``dim`` rows
@@ -285,14 +277,14 @@ def power_iteration_pca(
     steps, the scatter eigenvalue estimate ``||S v||`` of the final
     step, and its share of total scatter (= fraction of embedding
     variance the component explains)."""
-    mu = _mean(df, vec_col, dim, round_dp)
+    mu = _mean(df, vec_col, dim, 8)
     v, nrm, total_scatter = _component(
-        df, _centered_expr(vec_col, mu), dim, n_iter, round_dp, with_total=True
+        df, _centered_expr(vec_col, mu), dim, n_iter, 8, with_total=True
     )
 
     spark = df.sparkSession
     rows = [
-        (i + 1, spark_round(v[i], out_dp))
+        (i + 1, spark_round(v[i], 6))
         for i in range(dim)
     ]
     # rows are built dim-ascending — already in output order; see the
@@ -301,6 +293,6 @@ def power_iteration_pca(
     return out.select(
         "dim",
         "loading",
-        F.lit(spark_round(nrm, out_dp)).alias("eigenvalue"),
-        F.lit(spark_round(nrm / total_scatter, out_dp)).alias("var_share"),
+        F.lit(spark_round(nrm, 6)).alias("eigenvalue"),
+        F.lit(spark_round(nrm / total_scatter, 6)).alias("var_share"),
     )

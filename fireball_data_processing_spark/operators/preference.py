@@ -39,25 +39,18 @@ from fireball_data_processing_spark.functions.rounding import spark_round
 __all__ = ["comparison_matrix", "bradley_terry_scores", "bt_ranking"]
 
 
-def comparison_matrix(
-    outcomes: DataFrame, winner_col: str = "winner", loser_col: str = "loser"
-) -> DataFrame:
+def comparison_matrix(outcomes: DataFrame) -> DataFrame:
     """Reduce an outcome stream to the (winner, loser, n) matrix — the
     one distributed pass; everything after is item²-bounded."""
     return outcomes.groupBy(
-        F.col(winner_col).alias("winner"), F.col(loser_col).alias("loser")
+        F.col("winner"), F.col("loser")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
 
 
-def bradley_terry_scores(
-    matrix: DataFrame,
-    n_iter: int = 16,
-    round_dp: int = 8,
-    out_dp: int = 6,
-) -> DataFrame:
+def bradley_terry_scores(matrix: DataFrame, n_iter: int = 16) -> DataFrame:
     """Fit Bradley–Terry scores by ``n_iter`` MM updates from the
     uniform start, each iterate sum-normalized and rounded to
-    ``round_dp`` (engine replay). ``matrix`` is the
+    8 dp (engine replay). ``matrix`` is the
     :func:`comparison_matrix` output, collected here (item²-bounded by
     contract). Returns ``(item, bt_score, n_wins, n_comparisons,
     rank)`` — rank 1 = strongest, (score DESC, item ASC) tie-break.
@@ -90,7 +83,7 @@ def bradley_terry_scores(
         nn[(w, l)] = nn.get((w, l), 0) + n
         nn[(l, w)] = nn.get((l, w), 0) + n
     opponents = {i: sorted(j for (a, j) in nn if a == i) for i in items}
-    start = spark_round(1.0 / len(items), round_dp)
+    start = spark_round(1.0 / len(items), 8)
     s = {i: start for i in items}
     for _ in range(n_iter):
         raw = {}
@@ -103,14 +96,14 @@ def bradley_terry_scores(
             raw[i] = wins[i] / den if den > 0 else s[i]
         total = sum(raw[i] for i in items)
         if total > 0:
-            s = {i: spark_round(raw[i] / total, round_dp) for i in items}
+            s = {i: spark_round(raw[i] / total, 8) for i in items}
         else:
-            s = {i: spark_round(raw[i], round_dp) for i in items}
+            s = {i: spark_round(raw[i], 8) for i in items}
     ranked = sorted(items, key=lambda i: (-s[i], i))
     out = [
         (
             i,
-            spark_round(s[i], out_dp),
+            spark_round(s[i], 6),
             wins[i],
             sum(nn[(i, j)] for j in opponents[i]),
             ranked.index(i) + 1,
@@ -120,19 +113,9 @@ def bradley_terry_scores(
     return matrix.sparkSession.createDataFrame(out, out_schema)
 
 
-def bt_ranking(
-    outcomes: DataFrame,
-    winner_col: str = "winner",
-    loser_col: str = "loser",
-    n_iter: int = 16,
-    round_dp: int = 8,
-    out_dp: int = 6,
-) -> DataFrame:
+def bt_ranking(outcomes: DataFrame, n_iter: int = 16) -> DataFrame:
     """Convenience: outcome stream → comparison matrix → fitted
     ranking. The matrix has exactly ONE consumer (the bounded collect
     inside :func:`bradley_terry_scores`), so no pin/checkpoint — the
     aggregation runs once by construction."""
-    return bradley_terry_scores(
-        comparison_matrix(outcomes, winner_col, loser_col),
-        n_iter=n_iter, round_dp=round_dp, out_dp=out_dp,
-    )
+    return bradley_terry_scores(comparison_matrix(outcomes), n_iter=n_iter)

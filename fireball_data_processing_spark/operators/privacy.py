@@ -113,10 +113,9 @@ def k_anonymity_audit(classes: DataFrame) -> DataFrame:
 
 def laplace_noise(
     cell_key: Column, epsilon: float = 1.0, sensitivity: float = 1.0,
-    salt: str = "dp",
 ) -> Column:
     """Deterministic Laplace(b = sensitivity/epsilon) noise seeded from
-    the cell key: u = first 12 md5 hex digits of ``salt#key`` as a
+    the cell key: u = first 12 md5 hex digits of ``dp#key`` as a
     48-bit uniform in [0, 1), then the standard inverse CDF
     ``-b * sign(u - 1/2) * ln(1 - 2*|u - 1/2|)``. Pure built-in
     expression (md5 / conv / ln) built on the catalog's one canonical
@@ -130,7 +129,7 @@ def laplace_noise(
     sentinel in BOTH engines (see ``dp_event_count_release``)."""
     from fireball_data_processing_spark.operators.sampling import hash_rank
 
-    u = hash_rank(F.concat(F.lit(f"{salt}#"), cell_key), hex_digits=12)
+    u = hash_rank(F.concat(F.lit("dp#"), cell_key), hex_digits=12)
     c = u - F.lit(0.5)
     mag = F.greatest(F.lit(1.0) - F.lit(2.0) * F.abs(c), F.lit(_MAG_FLOOR))
     return (

@@ -85,14 +85,9 @@ def profile_columns(
     )
 
 
-def vocab_growth(
-    docs: DataFrame,
-    n_shards: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def vocab_growth(docs: DataFrame, n_shards: int = 8) -> DataFrame:
     """Vocabulary growth curve (Heaps'-law probe): split the corpus into
-    ``n_shards`` deterministic shards (``id_col % n_shards``) and report,
+    ``n_shards`` deterministic shards (``doc_id % n_shards``) and report,
     per shard ordinal, how many NEW token types the shard contributes and
     the cumulative type/occurrence totals as shards accrete in order —
     the standard corpus-diversity datasheet curve (a flattening curve
@@ -116,8 +111,8 @@ def vocab_growth(
     from fireball_data_processing_spark.operators.retrieval import tokens
 
     occ = docs.select(
-        F.pmod(F.col(id_col), F.lit(n_shards)).cast("int").alias("__shard"),
-        F.explode(tokens(F.col(text_col))).alias("__tok"),
+        F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int").alias("__shard"),
+        F.explode(tokens(F.col("text"))).alias("__tok"),
     )
     first_seen = (
         occ.groupBy("__tok")
@@ -141,12 +136,7 @@ def vocab_growth(
     )
 
 
-def zipf_fit(
-    docs: DataFrame,
-    text_col: str = "text",
-    max_rank: int = 1000,
-    round_dp: int = 6,
-) -> DataFrame:
+def zipf_fit(docs: DataFrame, max_rank: int = 1000) -> DataFrame:
     """Zipf power-law fit of the corpus token-frequency curve — the
     one-row vocabulary datasheet (Zipf 1949; the standard corpus sanity
     check next to the Heaps'-law growth curve :func:`vocab_growth`):
@@ -163,7 +153,7 @@ def zipf_fit(
 
     Output (one row): ``(n_terms, zipf_exponent, intercept, r2)``,
     rounded — the sums behind the closed-form OLS accumulate in
-    engine-specific order, and ``round_dp`` absorbs that float noise
+    engine-specific order, and the 6-dp rounding absorbs that float noise
     (DuckDB-oracle-checked).
 
     Scale shape: one token explode → vocabulary-bounded count table
@@ -178,7 +168,7 @@ def zipf_fit(
 
     toks = docs.select(
         F.explode(
-            F.split(normalize_text(F.col(text_col)), " ")
+            F.split(normalize_text(F.col("text")), " ")
         ).alias("__tok")
     ).filter(F.col("__tok") != "")
     counts = toks.groupBy("__tok").agg(
@@ -212,9 +202,9 @@ def zipf_fit(
     )
     return agg.select(
         F.col("n").cast("bigint").alias("n_terms"),
-        F.round(-slope, round_dp).alias("zipf_exponent"),
-        F.round(intercept, round_dp).alias("intercept"),
-        F.round(r2, round_dp).alias("r2"),
+        F.round(-slope, 6).alias("zipf_exponent"),
+        F.round(intercept, 6).alias("intercept"),
+        F.round(r2, 6).alias("r2"),
     )
 
 
@@ -223,7 +213,6 @@ def audience_overlap(
     entity_col: str,
     category_col: str,
     categories: list[str],
-    round_dp: int = 6,
 ) -> DataFrame:
     """Exact pairwise audience overlap ("how many users do segments A
     and B share?") without any pairwise distinct-count join: fold each
@@ -290,16 +279,12 @@ def audience_overlap(
                 (F.col("n_a") + F.col("n_b") - F.col("n_both")) > 0,
                 F.col("n_a") + F.col("n_b") - F.col("n_both"),
             ),
-            round_dp,
+            6,
         ).alias("jaccard"),
     )
 
 
-def vocab_richness(
-    tokens: DataFrame,
-    token_col: str,
-    round_dp: int = 6,
-) -> DataFrame:
+def vocab_richness(tokens: DataFrame, token_col: str) -> DataFrame:
     """Species-richness estimators for the corpus vocabulary, off the
     frequency-of-frequencies alone: how many types does the FULL
     population hold, given what this sample shows? Complements the
@@ -347,12 +332,12 @@ def vocab_richness(
             + F.col("f1").cast("double")
             * (F.col("f1") - 1).cast("double")
             / (F.lit(2.0) * (F.col("f2") + 1).cast("double")),
-            round_dp,
+            6,
         ).alias("chao1"),
         F.round(
             F.lit(1.0)
             - F.col("f1").cast("double") / F.col("n_tokens").cast("double"),
-            round_dp,
+            6,
         ).alias("good_coverage"),
         F.round(
             F.when(
@@ -361,7 +346,7 @@ def vocab_richness(
                 * F.col("f2").cast("double")
                 / F.col("f1").cast("double"),
             ),
-            round_dp,
+            6,
         ).alias("gt_singleton_rate"),
     )
 
@@ -371,7 +356,6 @@ def lorenz_gini(
     value_col: str,
     key_col: str,
     n_buckets: int = 10,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Lorenz curve (at ``n_buckets`` equal-count points) + Gini
     coefficient of how ``value_col`` mass distributes across rows —
@@ -424,9 +408,9 @@ def lorenz_gini(
     return per.select(
         F.col("bucket").cast("bigint").alias("bucket"),
         "n",
-        F.round(F.col("__mass") / mass_all, out_dp).alias("value_share"),
-        F.round(F.sum("__mass").over(cum) / mass_all, out_dp).alias(
+        F.round(F.col("__mass") / mass_all, 6).alias("value_share"),
+        F.round(F.sum("__mass").over(cum) / mass_all, 6).alias(
             "cum_value_share"
         ),
-        F.round(gini, out_dp).alias("gini"),
+        F.round(gini, 6).alias("gini"),
     ).orderBy("bucket")

@@ -128,12 +128,7 @@ def propagate_scores(
     )
 
 
-def graph_triangle_stats(
-    edges: DataFrame,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    round_dp: int = 6,
-) -> DataFrame:
+def graph_triangle_stats(edges: DataFrame) -> DataFrame:
     """Global triangle census of an undirected graph — ONE row
     ``(n_vertices, n_edges, n_wedges, n_triangles, transitivity)`` with
     transitivity = 3T / W (the global clustering coefficient). On the
@@ -159,8 +154,8 @@ def graph_triangle_stats(
     # the edge count, and all three legs of the triangle join.
     e = (
         edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
+            F.least(F.col("id_a"), F.col("id_b")).alias("a"),
+            F.greatest(F.col("id_a"), F.col("id_b")).alias("b"),
         )
         .where(F.col("a") < F.col("b"))
         .distinct()
@@ -202,7 +197,7 @@ def graph_triangle_stats(
                 F.lit(3.0)
                 * F.col("n_triangles")
                 / F.when(F.col("n_wedges") > 0, F.col("n_wedges")),
-                round_dp,
+                6,
             ).alias("transitivity"),
         )
     )

@@ -41,8 +41,6 @@ def raking_weights(
     row_targets: dict[str, float],
     col_targets: dict[str, float],
     n_iter: int = 8,
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Per-cell raking weights matching ``row_targets`` /
     ``col_targets`` (maps category -> target SHARE; each should sum to
@@ -84,8 +82,8 @@ def raking_weights(
         margins: dict[str, float] = {}
         for key, n in n_of.items():
             margins[key[axis]] = margins.get(key[axis], 0.0) + n * w[key]
-        margins = {k: spark_round(v, round_dp) for k, v in margins.items()}
-        tot = spark_round(sum(n * w[key] for key, n in n_of.items()), round_dp)
+        margins = {k: spark_round(v, 8) for k, v in margins.items()}
+        tot = spark_round(sum(n * w[key] for key, n in n_of.items()), 8)
         for key in w:
             t = targets.get(key[axis])
             # zero-margin guard: a target share of 0.0 zeroes its
@@ -97,31 +95,31 @@ def raking_weights(
                 if t is None or margins[key[axis]] == 0.0
                 else t * tot / margins[key[axis]]
             )
-            w[key] = spark_round(w[key] * factor, round_dp)
+            w[key] = spark_round(w[key] * factor, 8)
 
     for _ in range(n_iter):
         _scale(0, row_targets)
         _scale(1, col_targets)
 
-    final_tot = spark_round(sum(n * w[key] for key, n in n_of.items()), round_dp)
+    final_tot = spark_round(sum(n * w[key] for key, n in n_of.items()), 8)
     rows = [
         (
             rc,
             cc,
             int(n),
-            spark_round(w[(rc, cc)], out_dp),
+            spark_round(w[(rc, cc)], 6),
             # all-zero-weight table (every category targeted at 0.0):
             # shares are vacuously 0 rather than a ZeroDivisionError
             0.0
             if final_tot == 0.0
-            else spark_round(n * w[(rc, cc)] / final_tot, out_dp),
+            else spark_round(n * w[(rc, cc)] / final_tot, 6),
         )
         for rc, cc, n in cells  # already sorted (None-tolerant) above
     ]
     # rows iterate sorted(cells), so the local relation is ALREADY in
     # (row_cat, col_cat) order — an orderBy() here would spend a whole
-    # range-exchange job re-sorting a |cells|-row frame (r12, the
-    # markov stationary-profile precedent; row sequence unchanged)
+    # range-exchange job re-sorting a |cells|-row frame (row sequence
+    # unchanged)
     return df.sparkSession.createDataFrame(
         rows,
         "row_cat string, col_cat string, n bigint, weight double, "

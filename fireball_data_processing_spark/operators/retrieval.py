@@ -85,7 +85,7 @@ def _postings(
     BEFORE the tf aggregation: hash(term) satisfies the aggregate's
     (doc_id, dl, term) clustering, so the aggregate runs in place and a
     downstream term-partitioned consumer (the df window, a per-term df
-    aggregate) needs no further exchange (guide §2.1). Only sensible
+    aggregate) needs no further exchange. Only sensible
     when the stream is already term-pruned (search) or the consumer
     needs term partitioning anyway (tf_idf_top_terms): the trade is one
     repartition of occurrence-grain rows against the aggregate's own
@@ -124,12 +124,6 @@ def bm25_search(
     docs: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    query_id_col: str = "query_id",
-    query_text_col: str = "query_text",
     stats: DataFrame | None = None,
 ) -> DataFrame:
     """Okapi BM25 top-k documents per query, as one declarative plan.
@@ -150,8 +144,8 @@ def bm25_search(
     re-deriving per query batch.
     """
     q_terms = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.explode(F.array_distinct(tokens(F.col(query_text_col)))).alias("term"),
+        F.col("query_id").alias("query_id"),
+        F.explode(F.array_distinct(tokens(F.col("query_text")))).alias("term"),
     )
     distinct_terms = q_terms.select("term").distinct()
 
@@ -159,14 +153,14 @@ def bm25_search(
     # query-term-filtered postings stream on `term` alone satisfies the
     # clustering requirement of BOTH the tf aggregate (term is a subset
     # of its (doc_id, dl, term) keys) and the df count-window, so the
-    # planner inserts no further shuffle for either (guide §2.1 —
-    # partition once for several consumers; was: one exchange per). The
+    # planner inserts no further shuffle for either (partition once for
+    # several consumers, not one exchange per consumer). The
     # stream is already pruned to query-term postings by the broadcast
     # filter below, so the repartition carries matching postings only —
     # never the corpus vocabulary; no pinned partition count, AQE
     # coalesces.
     post = _postings(
-        docs, text_col, id_col, term_filter=distinct_terms, by_term=True
+        docs, "text", "doc_id", term_filter=distinct_terms, by_term=True
     )
     # df as a count-over-window on the SAME postings subtree (postings
     # have one row per (doc, term), so count over the term partition IS
@@ -176,11 +170,11 @@ def bm25_search(
     df_t = F.count(F.lit(1)).over(Window.partitionBy("term"))
 
     if stats is None:
-        stats = _corpus_stats(docs, text_col)
+        stats = _corpus_stats(docs, "text")
     scored = (
         post.withColumn("df", df_t)
         .join(F.broadcast(stats))
-        .withColumn("contrib", _bm25_contrib(k1, b))
+        .withColumn("contrib", _bm25_contrib(1.2, 0.75))
         .join(F.broadcast(q_terms), "term")
         # same trick on the query grain: one repartition on query_id
         # satisfies the score aggregate's (query_id, doc_id) clustering
@@ -205,8 +199,6 @@ def bm25_search(
 def tf_idf_top_terms(
     docs: DataFrame,
     top_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_df: int = 2,
 ) -> DataFrame:
     """The ``top_n`` highest TF-IDF terms of every document — the
@@ -219,7 +211,7 @@ def tf_idf_top_terms(
     single self-aggregation of the postings — unlike search there is no
     query side, so nothing is broadcast except N.
     """
-    post = _postings(docs, text_col, id_col)
+    post = _postings(docs, "text", "doc_id")
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     # df via count-over-window keeps ONE postings subtree (a groupBy +
     # join-back would tokenize the corpus twice); min_df then filters
@@ -287,8 +279,6 @@ def build_postings_index(
     docs: DataFrame,
     path: str,
     n_buckets: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> None:
     """Materialize the inverted index: postings parquet hash-bucketed by
     term (``term_bucket = pmod(hash(term), n_buckets)`` partition
@@ -300,7 +290,7 @@ def build_postings_index(
     its query terms (PartitionFilters prune the rest), which is what
     makes repeated search affordable on a 100 TB corpus.
     """
-    post = _postings(docs, text_col, id_col).withColumn(
+    post = _postings(docs, "text", "doc_id").withColumn(
         "term_bucket", F.pmod(F.hash("term"), F.lit(n_buckets))
     )
     post.write.mode("overwrite").partitionBy("term_bucket").parquet(
@@ -313,7 +303,7 @@ def build_postings_index(
     ).agg(F.count(F.lit(1)).alias("df")).write.mode("overwrite").partitionBy(
         "term_bucket"
     ).parquet(os.path.join(path, "df"))
-    _corpus_stats(docs, text_col).write.mode("overwrite").parquet(
+    _corpus_stats(docs, "text").write.mode("overwrite").parquet(
         os.path.join(path, "stats")
     )
 
@@ -323,11 +313,7 @@ def bm25_search_from_index(
     path: str,
     queries: DataFrame,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     n_buckets: int = 64,
-    query_id_col: str = "query_id",
-    query_text_col: str = "query_text",
 ) -> DataFrame:
     """BM25 top-k against a materialized :func:`build_postings_index`.
 
@@ -338,8 +324,8 @@ def bm25_search_from_index(
     fraction holding the query vocabulary is read.
     """
     q_terms = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.explode(F.array_distinct(tokens(F.col(query_text_col)))).alias("term"),
+        F.col("query_id").alias("query_id"),
+        F.explode(F.array_distinct(tokens(F.col("query_text")))).alias("term"),
     ).withColumn("term_bucket", F.pmod(F.hash("term"), F.lit(n_buckets)))
     buckets = q_terms.select("term_bucket").distinct()
     distinct_terms = q_terms.select("term_bucket", "term").distinct()
@@ -360,7 +346,7 @@ def bm25_search_from_index(
         # the (much larger) postings stream on term for no reason
         post.join(F.broadcast(df_t.select("term", "df")), "term")
         .join(F.broadcast(stats))
-        .withColumn("contrib", _bm25_contrib(k1, b))
+        .withColumn("contrib", _bm25_contrib(1.2, 0.75))
         .join(F.broadcast(q_terms.select("query_id", "term")), "term")
         .groupBy("query_id", "doc_id")
         # rank on the ROUNDED score, same contract as bm25_search: tied

@@ -22,9 +22,8 @@ def with_run_ids(
     partition_cols: Sequence[str],
     order_col: str,
     key_cols: Sequence[str | Column],
-    run_col: str = "run_id",
 ) -> DataFrame:
-    """Add ``run_col``: 1-based index of the consecutive run of equal
+    """Add ``run_id``: 1-based index of the consecutive run of equal
     ``key_cols`` values within each partition (ordered by ``order_col``)."""
     keys = [F.col(k) if isinstance(k, str) else k for k in key_cols]
     w = Window.partitionBy(*partition_cols).orderBy(order_col)
@@ -34,4 +33,4 @@ def with_run_ids(
     # first row of each partition: lag is null -> eqNullSafe False -> True
     flag = F.when(changed, 1).otherwise(0)
     run = F.sum(flag).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    return df.withColumn(run_col, run)
+    return df.withColumn("run_id", run)

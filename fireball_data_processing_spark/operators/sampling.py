@@ -42,13 +42,12 @@ def deterministic_sample(
 
 def deterministic_split(
     df: DataFrame, key: Column, test_fraction: float, salt: str = "",
-    split_col: str = "split",
 ) -> DataFrame:
     """Train/test split by hashed key (O8): every row with the same key
     lands in the same split (the reference splits by instance so pairs from
     one instance never straddle train/test)."""
     return df.withColumn(
-        split_col,
+        "split",
         F.when(hash_rank(key, salt) < test_fraction, F.lit("test")).otherwise(
             F.lit("train")
         ),
@@ -91,8 +90,6 @@ def stratified_sample(
     strata: Column,
     fraction: Column | float,
     key: Column,
-    salt: str = "",
-    keep_col: str | None = None,
 ) -> DataFrame:
     """Deterministic stratified sampling: keep ~``fraction`` of each
     stratum, selected by hash threshold.
@@ -111,17 +108,12 @@ def stratified_sample(
     i.e. 0.1% relative error at a billion rows — and, unlike
     ``DataFrame.sampleBy``, identical across retries, repartitioning and
     engines (DuckDB-oracle-checkable).
-
-    With ``keep_col`` set, returns all rows with a boolean flag instead
-    of filtering (for audit queries that count kept vs total).
     """
     frac = fraction if isinstance(fraction, Column) else F.lit(float(fraction))
-    keep = hash_rank(key, salt) < frac
+    keep = hash_rank(key) < frac
     # strata only documents intent when fraction is a float; when it is a
     # Column the caller has already folded the stratum into the rate.
     _ = strata
-    if keep_col is not None:
-        return df.withColumn(keep_col, keep)
     return df.filter(keep)
 
 
@@ -214,8 +206,6 @@ def weighted_sample_topn(
     n: int,
     key: Column,
     salt: str = "",
-    round_dp: int = 12,
-    key_col: str = "es_key",
 ) -> DataFrame:
     """Weighted sampling WITHOUT replacement, per bucket: keep the ``n``
     rows with the largest ``u ** (1/w)`` where ``u`` is the row's
@@ -229,8 +219,8 @@ def weighted_sample_topn(
 
     Rows with non-positive or null weight are excluded (zero-weight
     items are never sampled, and ``1/w`` is undefined there). The ES
-    key is ROUNDED to ``round_dp`` (default 12 dp) before ordering and
-    emitted as ``key_col``: ``pow`` may differ between engines in the
+    key is ROUNDED to 12 dp before ordering and
+    emitted as ``es_key``: ``pow`` may differ between engines in the
     last ulp, and rounding absorbs that while ties (astronomically
     rare post-rounding) break on the sampling key ascending — so the
     selection is bit-reproducible cross-engine (DuckDB-oracle-checked).
@@ -244,14 +234,14 @@ def weighted_sample_topn(
     from pyspark.sql import Window
 
     es = F.round(
-        F.pow(hash_rank(key, salt), F.lit(1.0) / weight), round_dp
+        F.pow(hash_rank(key, salt), F.lit(1.0) / weight), 12
     )
     w = Window.partitionBy(bucket).orderBy(
-        F.col(key_col).desc(), key.asc()
+        F.col("es_key").desc(), key.asc()
     )
     return (
         df.filter(weight > 0)
-        .withColumn(key_col, es)
+        .withColumn("es_key", es)
         .withColumn("__wr", F.row_number().over(w))
         .filter(F.col("__wr") <= n)
         .drop("__wr")
@@ -263,7 +253,6 @@ def neyman_allocation(
     stratum_col: str,
     value_col: str,
     n_total: int,
-    round_dp: int = 8,
 ) -> DataFrame:
     """Variance-optimal (Neyman) allocation of an ``n_total``-row sample
     budget across strata: ``n_h ∝ N_h * sigma_h``, the allocation that
@@ -296,7 +285,7 @@ def neyman_allocation(
                 F.coalesce(
                     F.stddev_pop(F.col(value_col).cast("double")), F.lit(0.0)
                 ),
-                round_dp,
+                8,
             ).alias("sigma"),
         )
     )
@@ -304,7 +293,7 @@ def neyman_allocation(
     share = F.round(
         (F.col("n_pop") * F.col("sigma"))
         / F.sum(F.col("n_pop") * F.col("sigma")).over(w),
-        round_dp,
+        8,
     )
     out = stats.select("stratum", "n_pop", "sigma", share.alias("share"))
     n_target = F.least(
@@ -320,6 +309,6 @@ def neyman_allocation(
         "share",
         n_target.alias("n_target"),
         F.round(
-            n_target.cast("double") / F.col("n_pop").cast("double"), round_dp
+            n_target.cast("double") / F.col("n_pop").cast("double"), 8
         ).alias("rate"),
     )

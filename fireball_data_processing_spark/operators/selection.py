@@ -105,10 +105,9 @@ def budget_fill(
     # aggregate and the per-row join probe); without a pin each branch
     # re-executes the caller's whole upstream pipeline — for the
     # domain_budget_fill composition that upstream includes regex-heavy
-    # per-row feature math (guide §2.4: persist a subtree with multiple
-    # consumers). Bucket-projection-sized, LRU-evictable.
+    # per-row feature math. Bucket-projection-sized, LRU-evictable.
     #
-    # r13 note: the score_percentile_gate bucketed path now pre-partitions
+    # The score_percentile_gate bucketed path now pre-partitions
     # its pin on the consumers' clustering key (see there); the same
     # rewrite was A/B'd HERE and rejected — domain_budget_fill read
     # +0.0/+0.4 s and token_budget_fill +0.05/+0.18 s across two
@@ -219,7 +218,6 @@ def dsir_log_weights(
     n_buckets: int = 4096,
     gram_n: int = 2,
     text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, n_grams, log_weight) for every raw document with at
     least one gram (zero-gram docs have no distribution evidence and no
@@ -262,7 +260,7 @@ def dsir_log_weights(
     ratios = merged.select("bucket", log_ratio.alias("log_ratio"))
 
     per_gram = raw.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.explode(gram_buckets(F.col(text_col), n_buckets, gram_n)).alias(
             "bucket"
         ),
@@ -283,7 +281,6 @@ def score_percentile_gate(
     group_col: str,
     keep_frac: float = 0.75,
     ascending: bool = True,
-    round_dp: int = 6,
     bucketed: bool = False,
     n_buckets: int = 64,
     score_lo: float = 0.0,
@@ -325,7 +322,7 @@ def score_percentile_gate(
         w = Window.partitionBy(group_col).orderBy(order)
         return (
             scored.withColumn(
-                "pctl", F.round(F.percent_rank().over(w), round_dp)
+                "pctl", F.round(F.percent_rank().over(w), 6)
             )
             .filter(F.col("pctl") <= keep_frac)
         )
@@ -359,11 +356,9 @@ def score_percentile_gate(
     # aggregate and the phase-2 join probe); without a pin each branch
     # re-executes the caller's whole upstream pipeline — for
     # curriculum_stages that upstream is the full bigram-LM score plan
-    # (guide §2.4: persist a subtree with multiple consumers; measured
-    # 2.6 s -> 1.6 s on curriculum_stages at sf0.1).
+    # (measured 2.6 s -> 1.6 s on curriculum_stages at sf0.1).
     #
-    # r13 (guide §2.1/§2.4, the bm25/budget_fill exchange-sharing
-    # pattern): the pinned frame is hash-partitioned on (group, __b) —
+    # The pinned frame is hash-partitioned on (group, __b) —
     # the key BOTH consumers cluster by (phase-1 groupBy and phase-2
     # in-bucket rank window) — so neither adds its own exchange; the
     # row-grain stream is shuffled once, into the cache fill (plan
@@ -420,7 +415,7 @@ def score_percentile_gate(
             F.col(group_col).eqNullSafe(F.col("__og"))
             & (F.col("__b") == F.col("__ob")),
         )
-        .withColumn("pctl", F.round(pctl, round_dp))
+        .withColumn("pctl", F.round(pctl, 6))
         .filter(F.col("pctl") <= keep_frac)
         .select(*scored.columns, "pctl")
     )
@@ -432,7 +427,6 @@ def doremi_mixture_weights(
     excess_col: str,
     eta: float = 1.0,
     smoothing: float = 0.1,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Excess-loss-driven domain reweighting — the one-step DoReMi
     update (Xie et al. 2023, "DoReMi: Optimizing Data Mixtures Speeds
@@ -464,13 +458,13 @@ def doremi_mixture_weights(
     Scale shape: ONE groupBy(domain) aggregate over the corpus-sized
     score frame (map-side partial combine), then softmax/smoothing as
     unpartitioned windows over the DOMAIN-sized table only. Weights
-    round to ``round_dp`` for cross-engine replay (DuckDB-oracle-
+    round to 6 dp for cross-engine replay (DuckDB-oracle-
     checked)."""
     per_domain = scored.groupBy(
         F.col(domain_col).alias("domain")
     ).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.round(F.avg(excess_col), round_dp).alias("avg_excess"),
+        F.round(F.avg(excess_col), 6).alias("avg_excess"),
     )
     w_all = Window.partitionBy()
     expw = F.exp(F.lit(float(eta)) * F.col("avg_excess"))
@@ -484,7 +478,7 @@ def doremi_mixture_weights(
         "domain",
         "n_docs",
         "avg_excess",
-        F.round(weight, round_dp).alias("weight"),
+        F.round(weight, 6).alias("weight"),
     )
 
 
@@ -493,7 +487,6 @@ def mad_outlier_stats(
     value_col: str,
     group_cols: Sequence[str],
     k: float = 3.0,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Per-group robust-outlier profile via the median absolute
     deviation: ``(group..., median, mad, cutoff, n, n_outliers,
@@ -536,14 +529,14 @@ def mad_outlier_stats(
         )
         .groupBy(*gcols)
         .agg(
-            F.round(F.max("__med"), round_dp).alias("median"),
-            F.round(F.max("__mad"), round_dp).alias("mad"),
-            F.round(F.lit(k * 1.4826) * F.max("__mad"), round_dp).alias(
+            F.round(F.max("__med"), 6).alias("median"),
+            F.round(F.max("__mad"), 6).alias("mad"),
+            F.round(F.lit(k * 1.4826) * F.max("__mad"), 6).alias(
                 "cutoff"
             ),
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum("__out").cast("bigint").alias("n_outliers"),
-            F.round(F.avg(F.col("__out").cast("double")), round_dp).alias(
+            F.round(F.avg(F.col("__out").cast("double")), 6).alias(
                 "outlier_rate"
             ),
         )
@@ -555,7 +548,6 @@ def exp_decay_weight(
     ts_ns: Column,
     ref_ns: Column,
     half_life_days: float,
-    round_dp: int = 8,
 ) -> Column:
     """Exponential freshness weight ``0.5 ** (age_days / half_life)``
     for recency-weighted curation — stale training data should count
@@ -567,5 +559,5 @@ def exp_decay_weight(
     """
     age_days = (ref_ns - ts_ns).cast("double") / F.lit(86400.0 * 1e9)
     return F.round(
-        F.pow(F.lit(0.5), age_days / F.lit(float(half_life_days))), round_dp
+        F.pow(F.lit(0.5), age_days / F.lit(float(half_life_days))), 8
     )

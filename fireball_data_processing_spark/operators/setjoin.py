@@ -55,23 +55,17 @@ from fireball_data_processing_spark.operators.dedup import _exploded_shingles
 __all__ = ["shingle_sets", "prefix_candidates", "set_similarity_join"]
 
 
-def shingle_sets(
-    docs: DataFrame,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Distinct ``(id_col, shingle)`` rows — the set representation the
+def shingle_sets(docs: DataFrame, k: int = 3) -> DataFrame:
+    """Distinct ``(doc_id, shingle)`` rows — the set representation the
     join runs on. Reuses the dedup family's explode helper (words
     materialized behind an exchange so the shingle HOF never re-splits;
     ``shingles_of_words`` already emits per-doc-distinct shingles)."""
-    return _exploded_shingles(docs, text_col, id_col, k)
+    return _exploded_shingles(docs, "text", "doc_id", k)
 
 
 def prefix_candidates(
     sets: DataFrame,
     threshold: float,
-    id_col: str = "doc_id",
     positional: bool = False,
     pins: list[DataFrame] | None = None,
 ) -> DataFrame:
@@ -87,12 +81,12 @@ def prefix_candidates(
 
     The prefix table feeds BOTH sides of the pair self-join, so it is
     persisted — without the pin each side re-executes the whole
-    df-count + rank-window pipeline (guide §2.4: duplicated subtrees;
-    measured ~2x on the sf0.1 candidate stage: 5.2 s -> 2.8 s warm).
+    df-count + rank-window pipeline (measured ~2x on the sf0.1
+    candidate stage: 5.2 s -> 2.8 s warm).
 
-    Pin policy (r13, VERDICT r12 ask #4): the persist stays
-    UNCONDITIONAL, unlike the ``_pin_if_large``-gated LSH/winnow pins —
-    re-A/B'd this round (interleaved, min-of-4): gated = unpinned
+    Pin policy: the persist stays UNCONDITIONAL, unlike the
+    ``_pin_if_large``-gated LSH/winnow pins — A/B'd (interleaved,
+    min-of-4): gated = unpinned
     locally = 4.41 s vs pinned 3.86 s. The gate's decline-at-local-scale
     rationale is that a broadcast BUILD subtree overlaps the PROBE-side
     scan concurrently, so duplication is partly free; this self-join is
@@ -105,10 +99,10 @@ def prefix_candidates(
     """
     df_tok = sets.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
     ordered = sets.join(df_tok, "shingle")
-    w_doc = Window.partitionBy(id_col)
+    w_doc = Window.partitionBy("doc_id")
     w_rank = w_doc.orderBy("__df", "shingle")
     ranked = ordered.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "shingle",
         F.row_number().over(w_rank).alias("__rn"),
         F.count(F.lit(1)).over(w_doc).alias("__n"),
@@ -124,18 +118,18 @@ def prefix_candidates(
         + 1
     )
     pre = ranked.filter(F.col("__rn") <= prefix_len).select(
-        id_col, "shingle", "__rn", "__n"
+        "doc_id", "shingle", "__rn", "__n"
     ).persist()
     if pins is not None:
         pins.append(pre)
     a = pre.select(
-        F.col(id_col).alias("id_a"),
+        F.col("doc_id").alias("id_a"),
         F.col("shingle"),
         F.col("__rn").alias("__ra"),
         F.col("__n").alias("__na"),
     )
     b = pre.select(
-        F.col(id_col).alias("id_b"),
+        F.col("doc_id").alias("id_b"),
         F.col("shingle"),
         F.col("__rn").alias("__rb"),
         F.col("__n").alias("__nb"),
@@ -171,8 +165,6 @@ def set_similarity_join(
     docs: DataFrame,
     threshold: float = 0.5,
     k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     positional: bool = False,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -203,7 +195,7 @@ def set_similarity_join(
     the result is materialized as parquet there and read back — survives
     executor loss and lets downstream stages partition-prune it.
 
-    Local-bench cost profile (r10 profiling pass, sf0.1 = 5k docs /
+    Local-bench cost profile (sf0.1 = 5k docs /
     260k shingle rows / 310k candidate pairs, measured warm ×3): the
     pins are NOT the cost — the fully-lazy unpinned plan times the same
     as this pinned+checkpointed one (4.4-5.3 s vs 4.3-6.4 s, within
@@ -216,9 +208,9 @@ def set_similarity_join(
     data-proportional and shuffle-shaped the way a 100 TB run needs it
     (candidates confined to shared prefix tokens, never all-pairs), so
     the local seconds are the algorithm's real cost, not overhead to
-    engineer away — the markov-fusion documentation precedent.
+    engineer away.
 
-    Amplified-scale probe (r11, ``scripts/amplify_probe.py --setjoin``,
+    Amplified-scale probe (``scripts/amplify_probe.py --setjoin``,
     README "data-dominated probe" section): with token-disjoint
     amplification (per-copy df structure identical to base) candidates
     grow EXACTLY linearly — 310k/4.96M/19.8M at ×1/×16/×64 — and wall
@@ -231,7 +223,7 @@ def set_similarity_join(
     """
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    sets = shingle_sets(docs, k, text_col, id_col).persist()
+    sets = shingle_sets(docs, k).persist()
     cands = None
     pins: list[DataFrame] = []
     try:
@@ -239,7 +231,7 @@ def set_similarity_join(
         # the verification join) and is pair-count-sized — pin it, or the
         # whole prefix pipeline re-executes per consumer
         cands = prefix_candidates(
-            sets, threshold, id_col, positional, pins=pins
+            sets, threshold, positional=positional, pins=pins
         ).persist()
         # verification arrays ONLY for docs that appear in some candidate
         # pair — at corpus scale candidates are a sliver of the corpus
@@ -249,19 +241,19 @@ def set_similarity_join(
         # no .distinct(): a left_semi probe side needs no dedup, and the
         # skipped exchange is one less stage on the critical path
         cand_ids = cands.select(
-            F.explode(F.array("id_a", "id_b")).alias(id_col)
+            F.explode(F.array("id_a", "id_b")).alias("doc_id")
         )
-        arrs = sets.join(cand_ids, id_col, "left_semi").groupBy(id_col).agg(
+        arrs = sets.join(cand_ids, "doc_id", "left_semi").groupBy("doc_id").agg(
             F.sort_array(F.collect_list("shingle")).alias("__toks"),
             F.count(F.lit(1)).alias("__n"),
         )
         a = arrs.select(
-            F.col(id_col).alias("id_a"),
+            F.col("doc_id").alias("id_a"),
             F.col("__toks").alias("__ta"),
             F.col("__n").alias("n_a"),
         )
         b = arrs.select(
-            F.col(id_col).alias("id_b"),
+            F.col("doc_id").alias("id_b"),
             F.col("__toks").alias("__tb"),
             F.col("__n").alias("n_b"),
         )

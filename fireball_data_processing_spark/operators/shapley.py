@@ -49,8 +49,6 @@ def shapley_attribution(
     channel_col: str,
     converted: Column,
     channels: list[str],
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Exact Shapley conversion credit per channel. ``df`` is one row
     per (user, touched channel) for PRE-conversion touches, restricted
@@ -83,12 +81,12 @@ def shapley_attribution(
     # the touched branch used to re-run the events->per-user pipeline
     # at USER grain; it now derives from this 2^k-row table's n_users
     # (touched(ci) = sum of n_users over masks with bit ci set), so
-    # every downstream consumer is mask-grain (guide §2.3: decide on
-    # the small proxy). The v subtree still appears in more than one
+    # every downstream consumer is mask-grain (decide on the small
+    # proxy). The v subtree still appears in more than one
     # plan branch, but its two broadcast builds dedupe via exchange
     # reuse and the remaining duplicate is one exchange of <=2^k rows.
     v = per_user.groupBy("mask").agg(
-        F.round(F.avg("conv"), round_dp).alias("v"),
+        F.round(F.avg("conv"), 8).alias("v"),
         F.count(F.lit(1)).cast("bigint").alias("n_users"),
     )
     spark = df.sparkSession
@@ -115,7 +113,7 @@ def shapley_attribution(
                     - F.coalesce(F.col("v_without"), F.lit(0.0))
                 )
             ),
-            round_dp,
+            8,
         ).alias("credit")
     )
     names = spark.createDataFrame(
@@ -134,7 +132,7 @@ def shapley_attribution(
         .join(touched, "ci", "left")
         .select(
             "channel",
-            F.round(F.col("credit"), out_dp).alias("shapley_credit"),
+            F.round(F.col("credit"), 6).alias("shapley_credit"),
             F.coalesce(F.col("touched_users"), F.lit(0).cast("bigint")).alias(
                 "touched_users"
             ),

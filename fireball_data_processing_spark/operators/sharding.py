@@ -47,16 +47,14 @@ def shuffle_shards(
     key: Column,
     n_shards: int,
     salt: str = "",
-    shard_col: str = "shard",
-    order_col: str = "shard_order",
 ) -> DataFrame:
     """Assign every row a shard id and a within-shard order key.
 
     Lazy column-only transform (no exchange); writers call
     :func:`write_shards` to materialize the layout.
     """
-    return df.withColumn(shard_col, shard_id(key, n_shards, salt)).withColumn(
-        order_col, shard_key(key, salt)
+    return df.withColumn("shard", shard_id(key, n_shards, salt)).withColumn(
+        "shard_order", shard_key(key, salt)
     )
 
 

@@ -14,7 +14,7 @@ The retrieval ladder, cheapest-candidates first:
   reproducible across engines and runs.
 - **IVF top-k** (``build_ivf_index``/``ivf_query``) — MLlib-KMeans coarse
   cells, path-backed partition pruning for the probe filter.
-- **JL sketch family** (round 5-6): ``rp_sketch_expr`` shrinks vectors
+- **JL sketch family**: ``rp_sketch_expr`` shrinks vectors
   through an md5-derived Achlioptas matrix (engine-replayable, unlike
   seeded RNG); ``rp_ann_topk`` is sketch-shortlist-then-exact-rerank with
   the query side broadcast and the corpus streamed; ``rp_ivf_topk`` trains
@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 # see the clustering module's fast-path note). Leaf helpers only — the
 # heavier clustering operators stay function-local imports.
 from fireball_data_processing_spark.operators.clustering import (
+    _cast_vec_sql,
     _dist2_sql,
     _double_sql,
     _ident_sql,
@@ -107,8 +108,6 @@ def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     round_dp: int | None = 6,
 ) -> DataFrame:
     """Exact cosine top-k: for each query vector, the k nearest corpus
@@ -124,14 +123,14 @@ def brute_force_topk(
     end-to-end at 128k corpus vectors (5.2-5.5 -> 3.3-3.6 s, stable
     across interleaved A/B runs)."""
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        norm(F.col(vec_col)).alias("__qn"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qv"),
+        norm(F.col("embedding")).alias("__qn"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        norm(F.col(vec_col)).alias("__cn"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("__cv"),
+        norm(F.col("embedding")).alias("__cn"),
     )
     sim = dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn"))
     if round_dp is not None:
@@ -287,9 +286,6 @@ class IvfIndex(NamedTuple):
 def build_ivf_index(
     corpus: DataFrame,
     n_centroids: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     path: str | None = None,
     fit: str = "mllib",
     n_iter: int = 2,
@@ -297,7 +293,7 @@ def build_ivf_index(
     """IVF build phase — run ONCE per corpus, amortized over all queries.
 
     ``fit="mllib"`` (default): one MLlib KMeans job clusters the corpus
-    (kmeans|| init, ``seed``-controlled) and ``model.transform`` assigns
+    (kmeans|| init, seed 42) and ``model.transform`` assigns
     each vector to its nearest centroid's cell — the production path
     when the coarse quantizer should come from the battle-tested
     scalable fit.
@@ -325,9 +321,9 @@ def build_ivf_index(
         )
 
         base = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cv"),
-            F.col(vec_col).cast("array<double>").alias("__fv"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("__cv"),
+            F.col("embedding").cast("array<double>").alias("__fv"),
         )
         _, cents = kmeans_fit(
             base, k=n_centroids, n_iter=n_iter, vec_col="__fv",
@@ -346,11 +342,11 @@ def build_ivf_index(
         from pyspark.ml.functions import array_to_vector
 
         c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cv"),
-            array_to_vector(F.col(vec_col)).alias("features"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("__cv"),
+            array_to_vector(F.col("embedding")).alias("features"),
         )
-        km = KMeans(k=n_centroids, seed=seed, featuresCol="features",
+        km = KMeans(k=n_centroids, seed=42, featuresCol="features",
                     predictionCol="cell")
         model = km.fit(c)
         centroids = [list(map(float, ctr)) for ctr in model.clusterCenters()]
@@ -368,9 +364,6 @@ def ivf_query(
     queries: DataFrame,
     k: int,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int | None = 6,
 ) -> DataFrame:
     """IVF query phase: each query scans only its ``n_probe`` nearest cells
     of a prebuilt index — no clustering work here.
@@ -391,7 +384,7 @@ def ivf_query(
     returned frame's input when done.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
     )
     cents = _matrix_literal(index.centroids)
     qv = F.col("__qv")
@@ -416,8 +409,7 @@ def ivf_query(
 
     qq = q.select("query_id", "__qv", F.explode("cells").alias("cell"))
     sim = cosine(F.col("__qv"), F.col("__cv"))
-    if round_dp is not None:
-        sim = F.round(sim, round_dp)
+    sim = F.round(sim, 6)
     scored = (
         qq.join(assigned, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -436,40 +428,25 @@ def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
-    round_dp: int | None = 6,
-    index: IvfIndex | None = None,
 ) -> DataFrame:
     """One-shot convenience over ``build_ivf_index`` + ``ivf_query``.
 
-    Re-fits KMeans on every call when no ``index`` is passed — fine for
-    small interactive use; the scale path is the explicit two-phase API
-    (build once, path-backed, query many times with partition pruning).
+    Re-fits KMeans on every call — fine for small interactive use; the
+    scale path is the explicit two-phase API (build once, path-backed,
+    query many times with partition pruning).
     """
-    if index is None:
-        index = build_ivf_index(
-            corpus, n_centroids=n_centroids, seed=seed,
-            id_col=id_col, vec_col=vec_col,
-        )
-    return ivf_query(
-        index, queries, k, n_probe=n_probe,
-        id_col=id_col, vec_col=vec_col, round_dp=round_dp,
-    )
+    index = build_ivf_index(corpus, n_centroids=n_centroids)
+    return ivf_query(index, queries, k, n_probe=n_probe)
 
 
 def lsh_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     num_planes: int = 8,
     dim: int | None = None,
-    round_dp: int | None = 6,
 ) -> DataFrame:
     """Approximate cosine top-k: candidates share the random-hyperplane
     bucket; exact cosine re-ranks within buckets. Recall rises with fewer
@@ -479,18 +456,21 @@ def lsh_topk(
     inferred value is shared by both signature stages so the corpus is
     peeked at most once. Pass ``dim`` explicitly for full laziness."""
     if dim is None:
-        dim = _infer_dim(corpus, vec_col)
+        dim = _infer_dim(corpus, "embedding")
     qs = rh_signature(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")),
+        queries.select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
+        ),
         num_planes, dim, "__qv", "sig",
     )
     cs = rh_signature(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")),
+        corpus.select(
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv")
+        ),
         num_planes, dim, "__cv", "sig",
     )
     sim = cosine(F.col("__qv"), F.col("__cv"))
-    if round_dp is not None:
-        sim = F.round(sim, round_dp)
+    sim = F.round(sim, 6)
     scored = (
         qs.join(cs, "sig")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -510,16 +490,14 @@ def lsh_topk(
 # ---------------------------------------------------------------------
 
 
-def quantize_embedding(
-    vec: Column, levels: int = 255
-) -> dict[str, Column]:
-    """Per-vector min/max scalar quantization to ``levels+1`` integer codes
-    (default 0..255, i.e. uint8 storage) — the standard 4x memory
+def quantize_embedding(vec: Column) -> dict[str, Column]:
+    """Per-vector min/max scalar quantization to 256 integer codes
+    (0..255, i.e. uint8 storage) — the standard 4x memory
     compression for embedding indexes; IVF/LSH bucket keys are unaffected
     and exact re-rank can dequantize in place.
 
     ``code_i = round((x_i - vmin) / scale)`` with
-    ``scale = (vmax - vmin) / levels``; constant vectors (scale 0) map to
+    ``scale = (vmax - vmin) / 255``; constant vectors (scale 0) map to
     all-zero codes. Everything is per-row ``transform``/``aggregate`` array
     math in whole-stage codegen — no UDF, no shuffle. All arithmetic is
     double-precision (inputs cast up front) so codes are bit-identical
@@ -532,7 +510,7 @@ def quantize_embedding(
     v = F.transform(vec, lambda x: x.cast("double"))
     vmin = F.array_min(v)
     vmax = F.array_max(v)
-    scale = (vmax - vmin) / F.lit(float(levels))
+    scale = (vmax - vmin) / F.lit(255.0)
     codes = F.transform(
         v,
         lambda x: F.when(scale > 0, F.round((x - vmin) / scale, 0))
@@ -554,18 +532,18 @@ def quantize_embedding(
     return {"codes": codes, "vmin": vmin, "vmax": vmax, "mse": mse}
 
 
-def dequantize_embedding(codes: Column, vmin: Column, vmax: Column, levels: int = 255) -> Column:
+def dequantize_embedding(codes: Column, vmin: Column, vmax: Column) -> Column:
     """Inverse of :func:`quantize_embedding`: ``x_hat_i = vmin + code_i*scale``."""
-    scale = (vmax - vmin) / F.lit(float(levels))
+    scale = (vmax - vmin) / F.lit(255.0)
     return F.transform(codes, lambda q: vmin + q.cast("double") * scale)
 
 
-def sign_bucket(vec: Column, bits: int = 8) -> Column:
+def sign_bucket(vec: Column) -> Column:
     """Deterministic hyperplane bucket for semantic dedup.
 
-    Bit ``i`` (0-based) is 1 iff ``vec[i+1] >= vec[bits+i+1]`` (1-based
+    Bit ``i`` (0-based) is 1 iff ``vec[i+1] >= vec[i+9]`` (1-based
     element access) — i.e. the sign of the dot product with the
-    axis-pair hyperplane ``e_i - e_{i+bits}``. For embeddings with
+    axis-pair hyperplane ``e_i - e_{i+8}``. For embeddings with
     roughly isotropic coordinates this behaves like random-hyperplane
     LSH (near-identical vectors agree on every bit), while staying pure
     arithmetic that any engine reproduces exactly — unlike
@@ -576,23 +554,18 @@ def sign_bucket(vec: Column, bits: int = 8) -> Column:
     """
     bit = lambda i: F.when(
         F.element_at(vec, i + 1).cast("double")
-        >= F.element_at(vec, bits + i + 1).cast("double"),
+        >= F.element_at(vec, i + 9).cast("double"),
         F.lit(1),
     ).otherwise(F.lit(0))
     out = F.lit(0)
-    for i in range(bits):
+    for i in range(8):
         out = out + bit(i) * F.lit(1 << i)
     return out
 
 
 def semantic_dedup(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int = 8,
     tau: float = 0.9,
-    bucket_col: str = "bucket",
-    cos_col: str = "cos_to_rep",
     bucket_expr: Column | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication, Spark-first.
@@ -609,7 +582,7 @@ def semantic_dedup(
     both whole-partition window aggregates (``min`` / ``min_by``) over
     the bucket key, so rep election and member comparison ride the same
     hash partitioning — no join, no second shuffle, no driver collect.
-    At 100 TB the bucket count (2^bits) is chosen so a bucket fits a
+    At 100 TB the bucket count (2^8 here) is chosen so a bucket fits a
     task comfortably; skewed buckets degrade gracefully (the window is
     an aggregate, not a sort).
 
@@ -628,24 +601,24 @@ def semantic_dedup(
     bucket = (
         bucket_expr
         if bucket_expr is not None
-        else sign_bucket(F.col(vec_col), bits)
+        else sign_bucket(F.col("embedding"))
     )
-    b = embeddings.withColumn(bucket_col, bucket)
-    w = Window.partitionBy(bucket_col)
-    rep_id = F.min(id_col).over(w)
-    rep_vec = F.expr(f"min_by({vec_col}, {id_col})").over(w)
-    cos = cosine(F.col(vec_col), rep_vec)
+    b = embeddings.withColumn("bucket", bucket)
+    w = Window.partitionBy("bucket")
+    rep_id = F.min("vec_id").over(w)
+    rep_vec = F.expr("min_by(embedding, vec_id)").over(w)
+    cos = cosine(F.col("embedding"), rep_vec)
     scored = b.select(
-        F.col(id_col),
-        F.col(bucket_col),
+        F.col("vec_id"),
+        F.col("bucket"),
         rep_id.alias("__rep_id"),
-        F.round(cos, 6).alias(cos_col),
+        F.round(cos, 6).alias("cos_to_rep"),
     )
-    is_rep = F.col(id_col) == F.col("__rep_id")
-    return scored.filter(is_rep | (F.col(cos_col) <= tau)).select(
-        id_col,
-        bucket_col,
-        F.when(~is_rep, F.col(cos_col)).alias(cos_col),
+    is_rep = F.col("vec_id") == F.col("__rep_id")
+    return scored.filter(is_rep | (F.col("cos_to_rep") <= tau)).select(
+        "vec_id",
+        "bucket",
+        F.when(~is_rep, F.col("cos_to_rep")).alias("cos_to_rep"),
     )
 
 
@@ -653,11 +626,6 @@ def mmr_rerank(
     candidates: DataFrame,
     k: int = 10,
     lam: float = 0.7,
-    query_col: str = "query_id",
-    id_col: str = "neighbor_id",
-    score_col: str = "cosine_sim",
-    vec_col: str = "embedding",
-    round_dp: int | None = 6,
 ) -> DataFrame:
     """Maximal Marginal Relevance rerank (Carbonell & Goldstein 1998) —
     the diversity-aware selection stage after any top-k retrieval: pick
@@ -676,20 +644,18 @@ def mmr_rerank(
     batch per query group, numpy inside, never a corpus-sized collect).
     Ties break on ascending id (deterministic, engine-independent).
 
-    With ``round_dp`` set (the default), the greedy trajectory is
-    ENGINE-REPLAYABLE, the k-means-replay recipe applied to greedy
-    selection: the pairwise candidate similarities and each step's
-    marginal score are rounded HALF_UP (``functions.rounding.spark_round``
-    — Spark's own double-round semantics) BEFORE the argmax, so every
+    The greedy trajectory is ENGINE-REPLAYABLE, the k-means-replay
+    recipe applied to greedy selection: the pairwise candidate
+    similarities and each step's marginal score are rounded HALF_UP
+    (``functions.rounding.spark_round`` — Spark's own double-round
+    semantics) BEFORE the argmax, so every
     pick is a pure function of rounded decimals and a SQL engine that
     unrolls the k steps (round → argmax with id tie-break → accumulate
     max-sim penalty) reproduces the selection bit-for-bit — rounding at
     every step is what absorbs the engines' float-summation-order noise
-    before it can cascade through later picks. ``round_dp=None`` keeps
-    the raw-float greedy (argmax at 9 dp) for callers who want the
-    classical scores.
+    before it can cascade through later picks.
 
-    Output: ``(query_col, id_col, mmr_rank, relevance, mmr_score)``;
+    Output: ``(query_id, neighbor_id, mmr_rank, relevance, mmr_score)``;
     ``mmr_score`` of the first pick is ``lam * relevance`` (nothing
     selected yet to repel from).
     """
@@ -732,37 +698,31 @@ def mmr_rerank(
 
         pdf = pdf.sort_values("__id", ignore_index=True)
         vecs = np.stack(pdf["__vec"].to_numpy())
-        if round_dp is not None:
-            # Replayable pair sims: the exact op sequence of the SQL
-            # cosine — sequential left-to-right folds (list_sum ~ the
-            # engines' fold), then dot / (norm_a * norm_b), then HALF_UP
-            # round. BLAS (unit @ unit.T) sums pairwise, which differs in
-            # the last ulp and flips 6-dp boundaries often enough to
-            # break a greedy replay (observed at sf0.1); candidate lists
-            # are shortlist-sized, so the pure-Python folds are cheap.
-            lists = [[float(x) for x in v] for v in vecs.tolist()]
+        # Replayable pair sims: the exact op sequence of the SQL
+        # cosine — sequential left-to-right folds (list_sum ~ the
+        # engines' fold), then dot / (norm_a * norm_b), then HALF_UP
+        # round. BLAS (unit @ unit.T) sums pairwise, which differs in
+        # the last ulp and flips 6-dp boundaries often enough to
+        # break a greedy replay (observed at sf0.1); candidate lists
+        # are shortlist-sized, so the pure-Python folds are cheap.
+        lists = [[float(x) for x in v] for v in vecs.tolist()]
 
-            def _fold(a: list, b: list) -> float:
-                s = 0.0
-                for x, y in zip(a, b):
-                    s += x * y
-                return s
+        def _fold(a: list, b: list) -> float:
+            s = 0.0
+            for x, y in zip(a, b):
+                s += x * y
+            return s
 
-            nrm = [math.sqrt(_fold(v, v)) or 1.0 for v in lists]
-            m_ = len(lists)
-            sims = np.empty((m_, m_))
-            for i_ in range(m_):
-                for j_ in range(i_, m_):
-                    s_ = spark_round(
-                        _fold(lists[i_], lists[j_]) / (nrm[i_] * nrm[j_]),
-                        round_dp,
-                    )
-                    sims[i_, j_] = sims[j_, i_] = s_
-        else:
-            norms = np.linalg.norm(vecs, axis=1)
-            norms[norms == 0] = 1.0
-            unit = vecs / norms[:, None]
-            sims = unit @ unit.T
+        nrm = [math.sqrt(_fold(v, v)) or 1.0 for v in lists]
+        m_ = len(lists)
+        sims = np.empty((m_, m_))
+        for i_ in range(m_):
+            for j_ in range(i_, m_):
+                s_ = spark_round(
+                    _fold(lists[i_], lists[j_]) / (nrm[i_] * nrm[j_]),
+                    6,
+                )
+                sims[i_, j_] = sims[j_, i_] = s_
         rel = pdf["__score"].to_numpy().astype(float)
         n = len(pdf)
         selected: list[int] = []
@@ -774,17 +734,14 @@ def mmr_rerank(
             else:
                 penalty = np.zeros(n)
             mmr = lam * rel - (1 - lam) * penalty
-            if round_dp is not None:
-                # round BEFORE the argmax so the pick itself — not just
-                # the reported score — is a function of rounded decimals
-                key = _vround(mmr, round_dp)
-            else:
-                key = np.round(mmr, 9)
+            # round BEFORE the argmax so the pick itself — not just
+            # the reported score — is a function of rounded decimals
+            key = _vround(mmr, 6)
             key[selected] = -np.inf
             # argmax with ascending-id tiebreak: ids are sorted, so the
             # first max index is the smallest id among ties
             pick = int(np.argmax(key))  # never a selected slot: key[selected] = -inf
-            score = key[pick] if round_dp is not None else mmr[pick]
+            score = key[pick]
             rows.append(
                 (
                     int(pdf["__q"].iloc[0]),
@@ -802,20 +759,17 @@ def mmr_rerank(
         )
 
     prepped = candidates.select(
-        F.col(query_col).cast("long").alias("__q"),
-        F.col(id_col).cast("long").alias("__id"),
-        F.col(score_col).cast("double").alias("__score"),
-        F.col(vec_col).alias("__vec"),
+        F.col("query_id").cast("long").alias("__q"),
+        F.col("neighbor_id").cast("long").alias("__id"),
+        F.col("cosine_sim").cast("double").alias("__score"),
+        F.col("embedding").alias("__vec"),
     )
     out = prepped.groupBy("__q").applyInPandas(_rerank, out_schema)
-    out = out.withColumnRenamed("query_id", query_col).withColumnRenamed(
-        "doc_id", id_col
+    return (
+        out.withColumnRenamed("doc_id", "neighbor_id")
+        .withColumn("relevance", F.round("relevance", 6))
+        .withColumn("mmr_score", F.round("mmr_score", 6))
     )
-    if round_dp is not None:
-        out = out.withColumn(
-            "relevance", F.round("relevance", round_dp)
-        ).withColumn("mmr_score", F.round("mmr_score", round_dp))
-    return out
 
 
 # ---------------------------------------------------------------------
@@ -848,15 +802,9 @@ def rp_sign_matrix(in_dim: int, out_dim: int) -> list[list[float]]:
     ]
 
 
-def rp_sketch_components(
-    df: DataFrame,
-    out_dim: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_dp: int = 6,
-) -> DataFrame:
+def rp_sketch_components(df: DataFrame, out_dim: int = 16) -> DataFrame:
     """Johnson-Lindenstrauss sketch of every embedding, LONG format:
-    ``(id_col, dim_idx, component)`` with
+    ``(vec_id, dim_idx, component)`` with
     ``component = <vec, sign_row_j> / sqrt(out_dim)`` — the
     dimensionality-reduction step that cuts ANN compute/memory by
     ``in_dim/out_dim`` while approximately preserving angles (the JL
@@ -871,10 +819,10 @@ def rp_sketch_components(
     THEN ship: at 100 TB the sketch is what crosses the wire to the ANN
     index, not the raw vectors."""
     comps = rp_sketch_expr(
-        _ident_sql(vec_col), _infer_dim(df, vec_col), out_dim, round_dp
+        _ident_sql("embedding"), _infer_dim(df, "embedding"), out_dim
     )
     return df.select(
-        F.col(id_col), F.posexplode(comps).alias("dim_idx", "component")
+        F.col("vec_id"), F.posexplode(comps).alias("dim_idx", "component")
     )
 
 
@@ -951,9 +899,6 @@ def rp_ann_topk(
     k: int = 5,
     shortlist: int = 20,
     out_dim: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Two-stage ANN over the JL sketch — retrieve-then-rerank, the
     shape every production vector store uses: stage 1 scores the CHEAP
@@ -1006,7 +951,7 @@ def rp_ann_topk(
     Both ranks order rounded scores with id tie-breaks, so the whole
     pipeline is engine-replayable (the DuckDB oracle re-runs both
     stages)."""
-    dim = _infer_dim(corpus, vec_col)
+    dim = _infer_dim(corpus, "embedding")
     # the QUERY-side sketch norm is hoisted per row (free — the batch
     # is small and rides the broadcast anyway); the CORPUS-side norm
     # stays per-pair ON PURPOSE: hoisting it would re-evaluate the
@@ -1018,20 +963,20 @@ def rp_ann_topk(
     # hoist for free — brute_force_topk shows that form. Same float
     # values either way, so the oracle is unchanged.
     q_sk = queries.select(
-        F.col(id_col).alias("query_id"),
-        rp_sketch_expr(_ident_sql(vec_col), dim, out_dim, round_dp).alias("__qs"),
+        F.col("vec_id").alias("query_id"),
+        rp_sketch_expr(_ident_sql("embedding"), dim, out_dim).alias("__qs"),
         norm(
-            rp_sketch_expr(_ident_sql(vec_col), dim, out_dim, round_dp)
+            rp_sketch_expr(_ident_sql("embedding"), dim, out_dim)
         ).alias("__qn"),
     )
     c_sk = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        rp_sketch_expr(_ident_sql(vec_col), dim, out_dim, round_dp).alias("__cs"),
+        F.col("vec_id").alias("neighbor_id"),
+        rp_sketch_expr(_ident_sql("embedding"), dim, out_dim).alias("__cs"),
     )
     sketch_sim = F.round(
         dot(F.col("__qs"), F.col("__cs"))
         / (F.col("__qn") * norm(F.col("__cs"))),
-        round_dp,
+        6,
     )
     w1 = Window.partitionBy("query_id").orderBy(
         F.col("__ss").desc(), F.col("neighbor_id").asc()
@@ -1045,12 +990,12 @@ def rp_ann_topk(
         .select("query_id", "neighbor_id")
     )
     c_full = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv")
     )
     q_full = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
     )
-    exact = F.round(cosine(F.col("__qv"), F.col("__cv")), round_dp)
+    exact = F.round(cosine(F.col("__qv"), F.col("__cv")), 6)
     w2 = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
     )
@@ -1072,9 +1017,6 @@ def rp_ivf_topk(
     n_cells: int = 4,
     n_iter: int = 2,
     out_dim: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
     centroids: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """IVF index built IN SKETCH SPACE — the genuinely sub-linear 100 TB
@@ -1141,7 +1083,7 @@ def rp_ivf_topk(
         nearest_centroids_expr,
     )
 
-    dim = _infer_dim(corpus, vec_col)
+    dim = _infer_dim(corpus, "embedding")
     # ONE sketch-augmented corpus frame feeds the whole call — the
     # local analog of the stored sketch column a 100 TB index keeps.
     # Per-row sketch evaluation is pinned by the assignment expression
@@ -1152,11 +1094,11 @@ def rp_ivf_topk(
     # the Lloyd fit's n_iter+1 driver collects re-run it; kmeans_fit is
     # eager (centroids return as Python literals), so the cache is
     # dropped before the query plan is even built — no cached frame
-    # outlives the call on either path (ADVICE r6).
+    # outlives the call on either path.
     wsk = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        rp_sketch_expr(_ident_sql(vec_col), dim, out_dim, round_dp).alias("__csk"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("__cv"),
+        rp_sketch_expr(_ident_sql("embedding"), dim, out_dim).alias("__csk"),
     )
     if centroids is None:
         wsk = wsk.persist()
@@ -1173,9 +1115,9 @@ def rp_ivf_topk(
         ),
     )
     qq = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        rp_sketch_expr(_ident_sql(vec_col), dim, out_dim, round_dp).alias("__qsk"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qv"),
+        rp_sketch_expr(_ident_sql("embedding"), dim, out_dim).alias("__qsk"),
     ).select(
         "query_id",
         "__qv",
@@ -1185,7 +1127,7 @@ def rp_ivf_topk(
             + ",pe_s->pe_s.cid))"
         ).alias("__cell"),
     )
-    exact = F.round(cosine(F.col("__qv"), F.col("__cv")), round_dp)
+    exact = F.round(cosine(F.col("__qv"), F.col("__cv")), 6)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
     )
@@ -1204,9 +1146,6 @@ def hard_negative_topk(
     corpus: DataFrame,
     k: int = 5,
     tau_dup: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Hard-negative mining for contrastive/retriever training (the
     DPR / Contriever / SimCSE recipe, Karpukhin et al. 2020): for each
@@ -1229,18 +1168,18 @@ def hard_negative_topk(
     compiles to two-phase WindowGroupLimit top-k. Scores are rounded
     with id tie-breaks — fully oracle-replayable."""
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        norm(F.col(vec_col)).alias("__qn"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qv"),
+        norm(F.col("embedding")).alias("__qn"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        norm(F.col(vec_col)).alias("__cn"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("__cv"),
+        norm(F.col("embedding")).alias("__cn"),
     )
     sim = F.round(
         dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")),
-        round_dp,
+        6,
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
@@ -1269,7 +1208,6 @@ def pq_fit(
     n_iter: int = 1,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    round_dp: int = 6,
     dim: int | None = None,
 ) -> list[list[tuple[int, list[float]]]]:
     """Train product-quantization codebooks: split every vector into
@@ -1332,7 +1270,7 @@ def pq_fit(
             "vec_id",
             *[
                 F.expr(
-                    f"transform(`__s{j}`,ps_x->round(ps_x,{int(round_dp)}))"
+                    f"transform(`__s{j}`,ps_x->round(ps_x,6))"
                 ).alias(f"__r{j}")
                 for j in range(m)
             ],
@@ -1369,7 +1307,7 @@ def pq_fit(
         ).select("__e.__j", "__e.__cid", F.posexplode("__e.__v").alias("__pos", "__x"))
         means = (
             stacked.groupBy("__j", "__cid", "__pos")
-            .agg(F.round(F.avg("__x"), round_dp).alias("__m"))
+            .agg(F.round(F.avg("__x"), 6).alias("__m"))
             .groupBy("__j", "__cid")
             .agg(
                 F.sort_array(
@@ -1391,7 +1329,7 @@ def pq_fit(
     # every collect above is bounded (ks seeds, ks x dim means); only
     # the codebook literals survive, so nothing downstream reads the
     # cache — drop it before returning instead of leaking one
-    # corpus-wide cached frame per call (ADVICE r6)
+    # corpus-wide cached frame per call
     sliced.unpersist()
     return books
 
@@ -1452,7 +1390,7 @@ def pq_code_expr(
     ``dim`` is not divisible by the codebook count or the codebook
     subvector width disagrees with ``dim // m`` — encoding a corpus
     whose dimension differs from the training corpus would otherwise
-    silently mis-slice into null/garbage distances (ADVICE r6). A SQL
+    silently mis-slice into null/garbage distances. A SQL
     fragment string input takes the O(1)-py4j text path
     (:func:`pq_code_sql` — value-identical, parity-tested)."""
     from fireball_data_processing_spark.operators.clustering import (
@@ -1486,9 +1424,6 @@ def pq_topk(
     corpus: DataFrame,
     codebooks: list[list[tuple[int, list[float]]]],
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: the corpus side
     carries ONLY its ``m`` codes (never the vectors), each query
@@ -1510,17 +1445,17 @@ def pq_topk(
     two-phase WindowGroupLimit top-k. At 100 TB the codes are a stored
     column (dim/m x 8 compression at ks<=256) and this is one
     code-column scan."""
-    dim = _infer_dim(corpus, vec_col)
+    dim = _infer_dim(corpus, "embedding")
     m = len(codebooks)
     _check_pq_dims(dim, codebooks)
     sub = dim // m
-    vs = f"cast({_ident_sql(vec_col)} as array<double>)"
+    vs = _cast_vec_sql("embedding")
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         pq_code_expr(vs, dim, codebooks).alias("__codes"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
+        F.col("vec_id").alias("query_id"),
         *[
             F.expr(
                 "array("
@@ -1542,7 +1477,7 @@ def pq_topk(
             )
             for j in range(m)
         ),
-        round_dp,
+        6,
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_d2").asc(), F.col("neighbor_id").asc()
@@ -1602,9 +1537,6 @@ def ivfpq_fit(
     ks: int = 4,
     coarse_n_iter: int = 1,
     pq_n_iter: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_dp: int = 6,
     dim: int | None = None,
 ) -> tuple[list[tuple[int, list[float]]], list[list[tuple[int, list[float]]]]]:
     """Train the two quantizers of a Faiss-style IVFPQ index (Jégou,
@@ -1634,7 +1566,7 @@ def ivfpq_fit(
     )
 
     if dim is None:
-        dim = _infer_dim(corpus, vec_col)
+        dim = _infer_dim(corpus, "embedding")
     else:
         # A caller-supplied dim drives BOTH quantizers' subvector math,
         # so a wrong-but-divisible value would train garbage codebooks
@@ -1642,14 +1574,13 @@ def ivfpq_fit(
         # the source column BEFORE any fit work (free when load_table
         # attached {"dim"} metadata, else one peek job; a wrong dim
         # must not pay the whole coarse Lloyd fit before raising).
-        _validate_dim(corpus, vec_col, dim)
+        _validate_dim(corpus, "embedding", dim)
     base = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.expr(f"cast({_ident_sql(vec_col)} as array<double>)").alias("__v"),
+        F.col("vec_id"),
+        F.expr(_cast_vec_sql("embedding")).alias("__v"),
     )
     _, centroids = kmeans_fit(
-        base, k=n_cells, n_iter=coarse_n_iter, vec_col="__v",
-        id_col="vec_id", round_dp=round_dp,
+        base, k=n_cells, n_iter=coarse_n_iter, vec_col="__v", id_col="vec_id"
     )
     residuals = base.select(
         "vec_id",
@@ -1659,7 +1590,7 @@ def ivfpq_fit(
     # dim — stamping it as metadata makes pq_fit's own re-validation free
     codebooks = pq_fit(
         residuals, m=m, ks=ks, n_iter=pq_n_iter, vec_col="__r",
-        id_col="vec_id", round_dp=round_dp, dim=dim,
+        id_col="vec_id", dim=dim,
     )
     return centroids, codebooks
 
@@ -1674,9 +1605,6 @@ def ivfpq_topk(
     ks: int = 4,
     coarse_n_iter: int = 1,
     pq_n_iter: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
     centroids: list[tuple[int, list[float]]] | None = None,
     codebooks: list[list[tuple[int, list[float]]]] | None = None,
 ) -> DataFrame:
@@ -1716,20 +1644,20 @@ def ivfpq_topk(
     scores, lexicographic tie-breaks), so the DuckDB oracle replays
     coarse fit → residuals → m subspace fits → encoding → probe → ADC
     end to end — a fully value-hash-verified composed ANN index."""
-    dim = _infer_dim(corpus, vec_col)
+    dim = _infer_dim(corpus, "embedding")
     if centroids is None or codebooks is None:
         centroids, codebooks = ivfpq_fit(
             corpus, n_cells=n_cells, m=m, ks=ks,
             coarse_n_iter=coarse_n_iter, pq_n_iter=pq_n_iter,
-            vec_col=vec_col, id_col=id_col, round_dp=round_dp, dim=dim,
+            dim=dim,
         )
     _check_pq_dims(dim, codebooks)
-    idx = _ivfpq_code_frame(corpus, centroids, codebooks, dim, id_col, vec_col)
+    idx = _ivfpq_code_frame(corpus, centroids, codebooks, dim, "vec_id", "embedding")
     qt = _ivfpq_probe_frame(
-        queries, centroids, codebooks, dim, n_probe, id_col, vec_col
+        queries, centroids, codebooks, dim, n_probe, "vec_id", "embedding"
     )
     return _ivfpq_adc_rank(
-        idx.join(F.broadcast(qt), "cell"), codebooks, k, round_dp
+        idx.join(F.broadcast(qt), "cell"), codebooks, k, 6
     )
 
 
@@ -1852,11 +1780,6 @@ def build_ivfpq_index(
     n_cells: int = 4,
     m: int = 4,
     ks: int = 4,
-    coarse_n_iter: int = 1,
-    pq_n_iter: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
     path: str | None = None,
 ) -> IvfPqIndex:
     """IVFPQ build phase — run ONCE per corpus, amortized over every
@@ -1867,14 +1790,13 @@ def build_ivfpq_index(
     ``cell`` and re-read, so :func:`ivfpq_query`'s probe filter prunes
     whole partitions (PartitionFilters in the scan) instead of scanning
     even the code column of unprobed cells."""
-    dim = _infer_dim(corpus, vec_col)
+    dim = _infer_dim(corpus, "embedding")
     centroids, codebooks = ivfpq_fit(
         corpus, n_cells=n_cells, m=m, ks=ks,
-        coarse_n_iter=coarse_n_iter, pq_n_iter=pq_n_iter,
-        vec_col=vec_col, id_col=id_col, round_dp=round_dp, dim=dim,
+        dim=dim,
     )
     assigned = _ivfpq_code_frame(
-        corpus, centroids, codebooks, dim, id_col, vec_col
+        corpus, centroids, codebooks, dim, "vec_id", "embedding"
     )
     if path is not None:
         assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
@@ -1889,9 +1811,6 @@ def ivfpq_query(
     queries: DataFrame,
     k: int = 5,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
 ) -> DataFrame:
     """IVFPQ query phase against a prebuilt index — no fitting, no
     encoding work: the query batch probes its ``n_probe`` nearest cells,
@@ -1909,11 +1828,11 @@ def ivfpq_query(
     the join from the SAME materialized rows, so a non-deterministic
     ``queries`` plan cannot probe one cell set and join another (the
     ivf_query persist-pinning hazard), and no cached frame outlives the
-    call (the ADVICE r6 contract)."""
+    call."""
     dim = len(index.codebooks) * len(index.codebooks[0][0][1])
     probe_rows = _ivfpq_probe_frame(
         queries, index.centroids, index.codebooks, dim, n_probe,
-        id_col, vec_col,
+        "vec_id", "embedding",
     ).collect()
     spark = index.assigned.sparkSession
     qt = spark.createDataFrame(
@@ -1923,5 +1842,5 @@ def ivfpq_query(
     cells = sorted({int(r["cell"]) for r in probe_rows})
     pruned = index.assigned.filter(F.col("cell").isin(cells))
     return _ivfpq_adc_rank(
-        pruned.join(F.broadcast(qt), "cell"), index.codebooks, k, round_dp
+        pruned.join(F.broadcast(qt), "cell"), index.codebooks, k, 6
     )

@@ -48,15 +48,14 @@ def hll_distinct(
     df: DataFrame,
     keys: Sequence[str],
     value_col: str,
-    lgk: int = 12,
 ) -> DataFrame:
     """Approximate distinct ``value_col`` per ``keys`` via a DataSketches
     HLL aggregate: ``(keys..., n_approx bigint)``. One shuffle on the
     group keys; partial sketches merge map-side, so the exchange carries
-    ~``2^lgk`` bytes per group regardless of group size."""
+    ~``2^12`` bytes per group regardless of group size."""
     return df.groupBy(*keys).agg(
         F.hll_sketch_estimate(
-            F.hll_sketch_agg(F.col(value_col), F.lit(lgk))
+            F.hll_sketch_agg(F.col(value_col), F.lit(12))
         ).alias("n_approx")
     )
 
@@ -66,7 +65,6 @@ def hll_rollup(
     fine_keys: Sequence[str],
     coarse_keys: Sequence[str],
     value_col: str,
-    lgk: int = 12,
 ) -> DataFrame:
     """Sketch at ``fine_keys`` grain, then merge the per-group sketches up
     to ``coarse_keys`` WITHOUT rescanning the input: the second aggregation
@@ -88,7 +86,7 @@ def hll_rollup(
             "hll_rollup merges upward along a grouping hierarchy"
         )
     fine = df.groupBy(*fine_keys).agg(
-        F.hll_sketch_agg(F.col(value_col), F.lit(lgk)).alias("__sketch")
+        F.hll_sketch_agg(F.col(value_col), F.lit(12)).alias("__sketch")
     )
     return fine.groupBy(*coarse_keys).agg(
         F.hll_sketch_estimate(F.hll_union_agg(F.col("__sketch"))).alias(
@@ -302,8 +300,6 @@ def bloom_prejoin(
     small: DataFrame,
     large_key: str,
     small_key: str,
-    num_bits: int = 1 << 16,
-    num_hashes: int = 5,
 ) -> DataFrame:
     """``large`` filtered by a bloom filter built over ``small``'s keys,
     ready to join: every row of ``large`` that has a partner in ``small``
@@ -316,19 +312,15 @@ def bloom_prejoin(
     targets the 100 TB shape where BOTH sides shuffle and dropping the
     large side's non-matching rows before the exchange is the win.
     """
-    bitmap = bloom_bitmap(small, small_key, num_bits, num_hashes)
-    return large.filter(
-        bloom_might_contain(F.col(large_key), bitmap, num_bits, num_hashes)
-    )
+    bitmap = bloom_bitmap(small, small_key)
+    return large.filter(bloom_might_contain(F.col(large_key), bitmap, 1 << 16))
 
 
 def corpus_minhash_overlap(
     docs: DataFrame,
     corpus_col: str = "source",
-    text_col: str = "text",
     num_hashes: int = 16,
     shingle_k: int = 3,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Pairwise corpus-overlap matrix: for every pair of corpora (values
     of ``corpus_col``), the MinHash-ESTIMATED Jaccard similarity of their
@@ -377,7 +369,7 @@ def corpus_minhash_overlap(
     sh = (
         docs.select(
             F.col(corpus_col).alias("__corpus"),
-            F.split(normalize_text(F.col(text_col)), " ").alias("__words"),
+            F.split(normalize_text(F.col("text")), " ").alias("__words"),
         )
         .select(
             "__corpus",
@@ -385,7 +377,7 @@ def corpus_minhash_overlap(
                 "shingle"
             ),
         )
-        # ONE exchange for dedup AND the exact-path groupBy (guide §2.1):
+        # ONE exchange for dedup AND the exact-path groupBy:
         # hash(shingle) is a subset of the distinct's (corpus, shingle)
         # clustering, so the distinct runs in place on the repartitioned
         # stream, and the cached frame's partitioning (InMemoryRelation
@@ -454,7 +446,7 @@ def corpus_minhash_overlap(
         .select(
             "corpus_a",
             "corpus_b",
-            F.round(matches / F.lit(num_hashes), round_dp).alias("est_jaccard"),
+            F.round(matches / F.lit(num_hashes), 6).alias("est_jaccard"),
             F.round(
                 F.coalesce(F.col("n_common"), F.lit(0))
                 / (
@@ -462,7 +454,7 @@ def corpus_minhash_overlap(
                     + F.col("n_shingles_b")
                     - F.coalesce(F.col("n_common"), F.lit(0))
                 ),
-                round_dp,
+                6,
             ).alias("exact_jaccard"),
             "n_shingles_a",
             "n_shingles_b",
@@ -477,11 +469,10 @@ def histogram_quantiles(
     value_col: str,
     quantiles: Sequence[float] = (0.25, 0.5, 0.75, 0.9, 0.99),
     n_buckets: int = 128,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Distributed quantile estimation from a MERGEABLE equi-width
     histogram: ``(q, est, exact, abs_err)``, one row per requested
-    quantile, every double rounded to ``round_dp``.
+    quantile, every double rounded to 6 dp.
 
     The scale story (why not just sort): an exact percentile over 100 TB
     is a global sort or a per-group buffer of every value. The histogram
@@ -564,7 +555,7 @@ def histogram_quantiles(
     )).otherwise(F.col("__lo"))
     return hit.select(
         F.col("q"),
-        F.round(est, round_dp).alias("est"),
-        F.round(F.col("__exact"), round_dp).alias("exact"),
-        F.round(F.abs(est - F.col("__exact")), round_dp).alias("abs_err"),
+        F.round(est, 6).alias("est"),
+        F.round(F.col("__exact"), 6).alias("exact"),
+        F.round(F.abs(est - F.col("__exact")), 6).alias("abs_err"),
     )

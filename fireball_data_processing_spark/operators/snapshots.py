@@ -50,23 +50,17 @@ def fingerprint(cols: Sequence[Column]) -> Column:
     return F.md5(F.concat_ws("\x1f", *parts))
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key: str,
-    fingerprint_col: str = "fp",
-    status_col: str = "status",
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame, key: str) -> DataFrame:
     """Classify every key across two snapshots.
 
     ``old`` / ``new`` must each carry ``key`` plus a precomputed
-    ``fingerprint_col`` (see :func:`fingerprint`) — computing the hash
+    ``fp`` column (see :func:`fingerprint`) — computing the hash
     BEFORE the join keeps payload bytes out of the shuffle. Returns
     ``(key, status)`` with status in {'added','removed','changed',
     'unchanged'}; filter ``status != 'unchanged'`` for the change set.
     """
-    o = old.select(F.col(key), F.col(fingerprint_col).alias("__fp_old"))
-    n = new.select(F.col(key), F.col(fingerprint_col).alias("__fp_new"))
+    o = old.select(F.col(key), F.col("fp").alias("__fp_old"))
+    n = new.select(F.col(key), F.col("fp").alias("__fp_new"))
     joined = o.join(n, on=key, how="full_outer")
     status = (
         F.when(F.col("__fp_old").isNull(), F.lit("added"))
@@ -74,4 +68,4 @@ def snapshot_diff(
         .when(F.col("__fp_old") == F.col("__fp_new"), F.lit("unchanged"))
         .otherwise(F.lit("changed"))
     )
-    return joined.select(F.col(key), status.alias(status_col))
+    return joined.select(F.col(key), status.alias("status"))

@@ -23,13 +23,7 @@ from pyspark.sql.window import Window
 __all__ = ["km_curve", "logrank_test"]
 
 
-def km_curve(
-    durations: DataFrame,
-    duration_col: str = "duration",
-    event_col: str = "event",
-    round_dp: int = 8,
-    out_dp: int = 6,
-) -> DataFrame:
+def km_curve(durations: DataFrame) -> DataFrame:
     """Kaplan-Meier curve from a per-subject frame of
     ``(duration, event)`` — duration in integer buckets (e.g. days),
     ``event`` true for an observed conversion, false for censoring at
@@ -44,8 +38,8 @@ def km_curve(
     """
     per = (
         durations.select(
-            F.col(duration_col).cast("bigint").alias("duration"),
-            F.when(F.col(event_col).cast("boolean"), 1)
+            F.col("duration").cast("bigint").alias("duration"),
+            F.when(F.col("event").cast("boolean"), 1)
             .otherwise(0)
             .alias("__e"),
         )
@@ -78,7 +72,7 @@ def km_curve(
         F.when(F.col("n_events") <= 0, F.lit(0.0))
         .when(F.col("n_events") == F.col("n_risk"), F.lit(-1e9))
         .otherwise(F.log(F.lit(1.0) - d / nr)),
-        round_dp,
+        8,
     )
     cum = Window.orderBy("duration").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -88,18 +82,11 @@ def km_curve(
         "n_risk",
         "n_events",
         "n_censored",
-        F.round(F.exp(F.sum(log_term).over(cum)), out_dp).alias("survival"),
+        F.round(F.exp(F.sum(log_term).over(cum)), 6).alias("survival"),
     ).orderBy("duration")
 
 
-def logrank_test(
-    durations: DataFrame,
-    group_col: str,
-    duration_col: str = "duration",
-    event_col: str = "event",
-    round_dp: int = 8,
-    out_dp: int = 6,
-) -> DataFrame:
+def logrank_test(durations: DataFrame, group_col: str) -> DataFrame:
     """Two-sample log-rank test (Mantel 1966) — "do these two cohorts
     convert at the same hazard?", the hypothesis test the two KM curves
     alone can't settle. ``group_col`` must take exactly two values; the
@@ -122,8 +109,8 @@ def logrank_test(
     per = (
         durations.select(
             F.col(group_col).alias("g"),
-            F.col(duration_col).cast("bigint").alias("t"),
-            F.when(F.col(event_col).cast("boolean"), 1)
+            F.col("duration").cast("bigint").alias("t"),
+            F.when(F.col("event").cast("boolean"), 1)
             .otherwise(0)
             .alias("__e"),
         )
@@ -133,8 +120,8 @@ def logrank_test(
             F.count(F.lit(1)).cast("double").alias("c"),
         )
     )
-    # ONE execution of the durations pipeline for the whole statistic
-    # (guide §1.1/§2.4): the old form ran it FOUR times — a
+    # ONE execution of the durations pipeline for the whole statistic,
+    # not FOUR — a
     # distinct().collect() for the two group labels, one count() per
     # group for (n_a, n_b), and the statistic itself. Everything after
     # the (group, duration) aggregate is bucket-grain (bounded by
@@ -195,13 +182,13 @@ def logrank_test(
         d * (F.col("n1") / n) * (1.0 - F.col("n1") / n) * (n - d) / (n - 1.0),
     ).otherwise(F.lit(0.0))
     terms = filled.select(
-        F.round(F.col("d1") - e1, round_dp).alias("__ome"),
-        F.round(v, round_dp).alias("__v"),
+        F.round(F.col("d1") - e1, 8).alias("__ome"),
+        F.round(v, 8).alias("__v"),
         "__ca", "__cb", "__ga", "__gb",
     )
     agg = terms.agg(
-        F.round(F.sum("__ome"), round_dp).alias("ome"),
-        F.round(F.sum("__v"), round_dp).alias("var"),
+        F.round(F.sum("__ome"), 8).alias("ome"),
+        F.round(F.sum("__v"), 8).alias("var"),
         F.sum("__ca").cast("bigint").alias("n_a"),
         F.sum("__cb").cast("bigint").alias("n_b"),
         F.max("__ga").alias("group_a"),
@@ -212,7 +199,7 @@ def logrank_test(
         "group_b",
         "n_a",
         "n_b",
-        F.round(F.col("ome"), out_dp).alias("o_minus_e"),
-        F.round(F.col("var"), out_dp).alias("var"),
-        F.round(F.col("ome") / F.sqrt(F.col("var")), out_dp).alias("z"),
+        F.round(F.col("ome"), 6).alias("o_minus_e"),
+        F.round(F.col("var"), 6).alias("var"),
+        F.round(F.col("ome") / F.sqrt(F.col("var")), 6).alias("z"),
     )

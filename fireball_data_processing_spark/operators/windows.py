@@ -107,9 +107,7 @@ def two_phase_global_rank(
     df: DataFrame,
     score_col: str,
     tiebreak_cols: Sequence[str],
-    rank_col: str = "rank",
     n_buckets: int = 8,
-    rel_err: float = 0.01,
     assert_unique_key: bool = False,
 ) -> DataFrame:
     """Exact global ``row_number`` over ``(score asc_nulls_first,
@@ -135,7 +133,7 @@ def two_phase_global_rank(
     a correctness concern. Size ``n_buckets`` to the cluster: ranks
     within one bucket still sort in a single task each.
 
-    Returns ``df``'s columns plus ``rank_col`` (bigint, 1-based). The
+    Returns ``df``'s columns plus ``rank`` (bigint, 1-based). The
     input is localCheckpointed (it feeds the quantile probe, the
     bucket counts, and the rank — lazy, its lineage would recompute
     once per consumer).
@@ -173,7 +171,7 @@ def two_phase_global_rank(
                 "keys would be arbitrary; extend tiebreak_cols"
             )
     probs = [i / float(n_buckets) for i in range(1, n_buckets)]
-    cuts = sorted(set(chk.approxQuantile(score_col, probs, rel_err)))
+    cuts = sorted(set(chk.approxQuantile(score_col, probs, 0.01)))
     b = F.lit(0)
     for c in cuts:
         b = b + F.when(F.col(score_col) >= F.lit(float(c)), 1).otherwise(0)
@@ -192,8 +190,8 @@ def two_phase_global_rank(
     return (
         sdf.join(F.broadcast(offs), "__bkt")
         .withColumn(
-            rank_col,
+            "rank",
             (F.row_number().over(w_in) + F.col("__off")).cast("bigint"),
         )
-        .select(*df.columns, rank_col)
+        .select(*df.columns, "rank")
     )

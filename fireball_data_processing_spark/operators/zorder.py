@@ -89,7 +89,6 @@ def zorder_write(
     path: str,
     cols: Sequence[str],
     n_files: int = 16,
-    bits: int = 12,
 ) -> None:
     """Write ``df`` as ``n_files`` parquet files clustered along the
     Z-curve of ``cols``: one range shuffle on the Morton code (sampled
@@ -98,7 +97,7 @@ def zorder_write(
     footer stats are narrow on EVERY ``cols`` member, so predicate
     scans skip most files regardless of which column they filter."""
     (
-        z_value(df, cols, bits)
+        z_value(df, cols)
         .repartitionByRange(n_files, F.col("__z"))
         .sortWithinPartitions("__z")
         .drop("__z")

@@ -31,24 +31,19 @@ def cohen_kappa(a: np.ndarray, b: np.ndarray) -> float:
     return (po - pe) / (1.0 - pe)
 
 
-def pairwise_kappa(
-    ratings: DataFrame,
-    rater_col: str = "rater",
-    item_col: str = "item",
-    label_col: str = "label",
-) -> DataFrame:
+def pairwise_kappa(ratings: DataFrame) -> DataFrame:
     """Kappa for every rater pair over their co-rated items."""
     a = ratings.select(
-        F.col(rater_col).alias("rater_a"),
-        F.col(item_col).alias(item_col),
-        F.col(label_col).alias("label_a"),
+        F.col("rater").alias("rater_a"),
+        F.col("item"),
+        F.col("label").alias("label_a"),
     )
     b = ratings.select(
-        F.col(rater_col).alias("rater_b"),
-        F.col(item_col).alias(item_col),
-        F.col(label_col).alias("label_b"),
+        F.col("rater").alias("rater_b"),
+        F.col("item"),
+        F.col("label").alias("label_b"),
     )
-    pairs = a.join(b, item_col).filter(F.col("rater_a") < F.col("rater_b"))
+    pairs = a.join(b, "item").filter(F.col("rater_a") < F.col("rater_b"))
 
     def kappa_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         k = cohen_kappa(pdf["label_a"].to_numpy(), pdf["label_b"].to_numpy())
@@ -66,13 +61,7 @@ def pairwise_kappa(
     )
 
 
-def krippendorff_alpha_nominal(
-    ratings: DataFrame,
-    rater_col: str = "rater",
-    item_col: str = "item",
-    label_col: str = "label",
-    round_dp: int = 6,
-) -> DataFrame:
+def krippendorff_alpha_nominal(ratings: DataFrame) -> DataFrame:
     """Krippendorff's alpha, nominal data — the third statistic of the
     reference's agreement suite (``human_eval/results_analysis.py``
     computes kappa, tau, AND alpha) and the one that handles what kappa
@@ -97,7 +86,7 @@ def krippendorff_alpha_nominal(
     one category — undefined by construction)."""
     iu = (
         ratings.groupBy(
-            F.col(item_col).alias("__item"), F.col(label_col).alias("__label")
+            F.col("item").alias("__item"), F.col("label").alias("__label")
         )
         .agg(F.count(F.lit(1)).cast("double").alias("__nuc"))
     )
@@ -132,7 +121,7 @@ def krippendorff_alpha_nominal(
         F.round(
             F.lit(1.0)
             - (F.col("__N") - 1) * F.col("__do") / F.col("__de"),
-            round_dp,
+            6,
         ),
     )
     return (
@@ -147,10 +136,7 @@ def krippendorff_alpha_nominal(
 
 def pairwise_kendall_tau(
     ratings: DataFrame,
-    rater_col: str = "rater",
-    item_col: str = "item",
     value_col: str = "value",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Pairwise Kendall's tau-b — the second statistic of the
     reference's agreement suite (``results_analysis.py:141-152`` calls
@@ -174,27 +160,27 @@ def pairwise_kendall_tau(
     float noise. Output: ``(rater_a, rater_b, n_items, tau)``; tau is
     NULL when either rater's ratings are all tied (denominator zero)."""
     a = ratings.select(
-        F.col(rater_col).alias("rater_a"),
-        F.col(item_col).alias(item_col),
+        F.col("rater").alias("rater_a"),
+        F.col("item"),
         F.col(value_col).alias("__va"),
     )
     b = ratings.select(
-        F.col(rater_col).alias("rater_b"),
-        F.col(item_col).alias(item_col),
+        F.col("rater").alias("rater_b"),
+        F.col("item"),
         F.col(value_col).alias("__vb"),
     )
-    co = a.join(b, item_col).filter(F.col("rater_a") < F.col("rater_b"))
+    co = a.join(b, "item").filter(F.col("rater_a") < F.col("rater_b"))
     n_items = co.groupBy("rater_a", "rater_b").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_items")
     )
     i = co.select(
         "rater_a", "rater_b",
-        F.col(item_col).alias("__ii"),
+        F.col("item").alias("__ii"),
         F.col("__va").alias("__xai"), F.col("__vb").alias("__xbi"),
     )
     j = co.select(
         "rater_a", "rater_b",
-        F.col(item_col).alias("__ij"),
+        F.col("item").alias("__ij"),
         F.col("__va").alias("__xaj"), F.col("__vb").alias("__xbj"),
     )
     p = i.join(j, ["rater_a", "rater_b"]).filter(
@@ -214,7 +200,7 @@ def pairwise_kendall_tau(
     )
     tau = F.when(
         denom > 0,
-        F.round((F.col("__c") - F.col("__d")) / denom, round_dp),
+        F.round((F.col("__c") - F.col("__d")) / denom, 6),
     )
     return stats.join(n_items, ["rater_a", "rater_b"]).select(
         "rater_a", "rater_b", "n_items", tau.alias("tau")
@@ -278,7 +264,7 @@ def dawid_skene(
             F.col(label_col).alias("label"),
         )
         .agg(F.count(F.lit(1)).cast("double").alias("n"))
-        # r13 (guide §2.1/§2.4): hash-partition the pin on "item" — the
+        # hash-partition the pin on "item" — the
         # key every per-round consumer clusters by (the itot/votes
         # groupBys, each round's E-step join and (item, c) aggregate) —
         # so AQE's runtime re-optimization can elide those consumers'
@@ -393,12 +379,7 @@ def dawid_skene(
     )
 
 
-def item_disagreement(
-    ratings: DataFrame,
-    item_col: str = "item",
-    label_col: str = "label",
-    out_dp: int = 6,
-) -> DataFrame:
+def item_disagreement(ratings: DataFrame) -> DataFrame:
     """Per-item annotator-disagreement profile: vote entropy (bits),
     entropy normalized by log2(n_labels_on_item), and the majority
     share — the ranking that says WHICH items the panel is confused
@@ -416,7 +397,7 @@ def item_disagreement(
 
     counts = (
         ratings.select(
-            F.col(item_col).alias("item"), F.col(label_col).alias("label")
+            F.col("item"), F.col("label")
         )
         .groupBy("item", "label")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -437,15 +418,15 @@ def item_disagreement(
             F.round(
                 F.max("c").cast("double")
                 / F.max("n_votes").cast("double"),
-                out_dp,
+                6,
             ).alias("majority_share"),
-            F.round(F.sum("h_term"), out_dp).alias("entropy_bits"),
+            F.round(F.sum("h_term"), 6).alias("entropy_bits"),
             F.round(
                 F.when(
                     F.count(F.lit(1)) > 1,
                     F.sum("h_term") / F.log2(F.count(F.lit(1)).cast("double")),
                 ).otherwise(0.0),
-                out_dp,
+                6,
             ).alias("norm_entropy"),
         )
     )

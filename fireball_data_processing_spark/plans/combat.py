@@ -14,12 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def actor_stats(
-    states: DataFrame,
-    instance_col: str = "combat_id",
-    combatants_col: str = "combatants",
-    dm_col: str = "dm",
-) -> DataFrame:
+def actor_stats(states: DataFrame) -> DataFrame:
     """Per-instance actor statistics over state updates.
 
     Input rows: one per combat_state_update with ``combatants:
@@ -30,13 +25,13 @@ def actor_stats(
     reference's sentinel 255 when no monsters), ``n_dms`` (A17).
     """
     ex = states.select(
-        F.col(instance_col), F.col(dm_col), F.explode(combatants_col).alias("c")
+        F.col("combat_id"), F.col("dm"), F.explode("combatants").alias("c")
     )
     # flatten type='group' one level (zhu.py:53-59); non-groups contribute
     # themselves
     units = ex.select(
-        F.col(instance_col),
-        F.col(dm_col),
+        F.col("combat_id"),
+        F.col("dm"),
         F.explode(
             F.when(F.col("c.ctype") == "group", F.col("c.inner")).otherwise(
                 F.array(
@@ -49,7 +44,7 @@ def actor_stats(
     )
     players = F.countDistinct(F.when(F.col("u.ctype") == "player", F.col("u.id")))
     monsters = F.countDistinct(F.when(F.col("u.ctype") == "monster", F.col("u.id")))
-    return units.groupBy(instance_col).agg(
+    return units.groupBy("combat_id").agg(
         F.countDistinct("u.id").alias("num_actors"),
         monsters.alias("num_monster_actors"),
         players.alias("num_player_actors"),
@@ -57,5 +52,5 @@ def actor_stats(
         F.when(monsters == 0, F.lit(255.0))
         .otherwise(players.cast("double") / monsters.cast("double"))
         .alias("player_to_monster_ratio"),
-        F.countDistinct(dm_col).alias("n_dms"),
+        F.countDistinct("dm").alias("n_dms"),
     )

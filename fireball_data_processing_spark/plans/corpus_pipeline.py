@@ -37,11 +37,7 @@ from fireball_data_processing_spark.operators.packing import (
 )
 
 
-def clean_stage(
-    docs: DataFrame,
-    min_words_per_segment: int = 50,
-    bad_phrases: tuple[str, ...] = ("lorem ipsum", "slow scan"),
-) -> DataFrame:
+def clean_stage(docs: DataFrame, min_words_per_segment: int = 50) -> DataFrame:
     """C4 cleaning: keep surviving segments as the new text, drop
     documents that end up empty or carry a bad phrase."""
     seg = clean_segments(
@@ -49,7 +45,7 @@ def clean_stage(
         min_words=min_words_per_segment,
         require_terminal_punct=False,
     )
-    flags = doc_flags(F.col("text"), bad_phrases=bad_phrases)
+    flags = doc_flags(F.col("text"), bad_phrases=("lorem ipsum", "slow scan"))
     return (
         docs.select(
             "doc_id",
@@ -113,28 +109,23 @@ def dedup_stage(cleaned: DataFrame) -> DataFrame:
     )
 
 
-def quality_stage(
-    deduped: DataFrame, min_tokens: int = 5, max_tokens: int = 5000
-) -> DataFrame:
+def quality_stage(deduped: DataFrame, min_tokens: int = 5) -> DataFrame:
     """Token-count band gate (the P4/P7 guards at corpus scale)."""
     n = token_count_col(F.col("clean_text"))
     return deduped.withColumn("n_tokens", n).filter(
-        (F.col("n_tokens") >= min_tokens) & (F.col("n_tokens") <= max_tokens)
+        (F.col("n_tokens") >= min_tokens) & (F.col("n_tokens") <= 5000)
     )
 
 
 def selection_stage(
     quality: DataFrame,
     target: DataFrame,
-    min_log_weight: float = 0.0,
     n_buckets: int = 4096,
-    text_col: str = "clean_text",
-    target_text_col: str = "text",
 ) -> DataFrame:
     """Optional DSIR domain targeting (:mod:`..operators.selection`):
     keep documents whose hashed-bigram importance log-weight against the
-    ``target`` sample clears ``min_log_weight`` (0 = "more target-like
-    than the raw average"). A value threshold keeps the stage fully lazy
+    ``target`` sample clears 0 ("more target-like than the raw
+    average"). A value threshold keeps the stage fully lazy
     and shuffle-light; derive a keep-fraction threshold offline from an
     approx quantile of the weights when a fixed budget is needed.
 
@@ -149,9 +140,9 @@ def selection_stage(
     # default); project it onto the pipeline's text column name
     weights = dsir_log_weights(
         quality,
-        target.select(F.col(target_text_col).alias(text_col)),
+        target.select(F.col("text").alias("clean_text")),
         n_buckets=n_buckets,
-        text_col=text_col,
+        text_col="clean_text",
     )
     # LEFT join: a doc with fewer than two tokens has no bigram evidence
     # and no weights row — that is "no information", not "off-domain",
@@ -161,7 +152,7 @@ def selection_stage(
         weights.select("doc_id", "log_weight"), "doc_id", "left"
     ).filter(
         F.col("log_weight").isNull()
-        | (F.col("log_weight") >= min_log_weight)
+        | (F.col("log_weight") >= 0.0)
     )
 
 
@@ -170,16 +161,13 @@ def build_training_corpus(
     max_tokens_per_bin: int = 256,
     min_words_per_segment: int = 50,
     min_tokens: int = 5,
-    max_tokens: int = 5000,
     target: DataFrame | None = None,
-    dsir_min_log_weight: float = 0.0,
     dsir_n_buckets: int = 4096,
     normalize_form: str | None = None,
     segment_dedup_min_docs: int | None = None,
     segment_words: int = 8,
     domain_cap: int | None = None,
     mixture_alpha: float | None = None,
-    mixture_target_rows: int | None = None,
 ) -> dict[str, DataFrame]:
     """The full pipeline; returns every stage (all lazy):
     ``{["normalized",] "cleaned", "deduped", "quality"[, "selected"]
@@ -207,7 +195,7 @@ def build_training_corpus(
         )
         dedup_input = seg_deduped
     deduped = dedup_stage(dedup_input)
-    quality = quality_stage(deduped, min_tokens, max_tokens)
+    quality = quality_stage(deduped, min_tokens)
     stages = {"cleaned": cleaned, "deduped": deduped, "quality": quality}
     if seg_deduped is not None:
         stages = {
@@ -221,16 +209,14 @@ def build_training_corpus(
     pack_input = quality
     if target is not None:
         pack_input = selection_stage(
-            quality, target, dsir_min_log_weight, dsir_n_buckets
+            quality, target, n_buckets=dsir_n_buckets
         )
         stages["selected"] = pack_input
     if domain_cap is not None:
         pack_input = domain_cap_stage(pack_input, domain_cap)
         stages["capped"] = pack_input
     if mixture_alpha is not None:
-        pack_input = mixture_stage(
-            pack_input, mixture_alpha, mixture_target_rows
-        )
+        pack_input = mixture_stage(pack_input, mixture_alpha)
         stages["mixed"] = pack_input
     stages["packed"] = pack_sequences(
         pack_input,
@@ -257,9 +243,7 @@ def normalize_stage(docs: DataFrame, form: str = "NFC") -> DataFrame:
     )
 
 
-def domain_cap_stage(
-    quality: DataFrame, cap: int, salt: str = "cap"
-) -> DataFrame:
+def domain_cap_stage(quality: DataFrame, cap: int) -> DataFrame:
     """C4-style per-source quota (:func:`..operators.sampling.
     capped_sample`): no source contributes more than ``cap`` documents,
     chosen by deterministic md5 rank. One window exchange on the source
@@ -268,15 +252,10 @@ def domain_cap_stage(
         capped_sample,
     )
 
-    return capped_sample(quality, F.col("source"), cap, F.col("doc_id"), salt)
+    return capped_sample(quality, F.col("source"), cap, F.col("doc_id"), "cap")
 
 
-def mixture_stage(
-    capped: DataFrame,
-    alpha: float = 0.5,
-    target_rows: int | None = None,
-    salt: str = "mix",
-) -> DataFrame:
+def mixture_stage(capped: DataFrame, alpha: float = 0.5) -> DataFrame:
     """Temperature-scaled source rebalancing: keep rates from
     :func:`..operators.sampling.temperature_mixture_rates` (share^alpha
     proportions), applied with the scan-local hash threshold. The rate
@@ -290,26 +269,20 @@ def mixture_stage(
     )
 
     rates = temperature_mixture_rates(
-        capped, F.col("source"), alpha, target_rows
+        capped, F.col("source"), alpha
     ).select(F.col("bucket").alias("source"), "keep_rate")
     return (
         capped.join(F.broadcast(rates), "source")
-        .filter(hash_rank(F.col("doc_id"), salt) < F.col("keep_rate"))
+        .filter(hash_rank(F.col("doc_id"), "mix") < F.col("keep_rate"))
         .drop("keep_rate")
     )
 
 
-def perplexity_stage(
-    quality: DataFrame,
-    group_col: str = "source",
-    keep_frac: float = 0.75,
-    alpha: float = 0.5,
-    text_col: str = "clean_text",
-) -> DataFrame:
+def perplexity_stage(quality: DataFrame) -> DataFrame:
     """LM-quality gate (the CCNet recipe inside the pipeline): score the
     surviving documents with the corpus-bigram model trained on THIS
     stage's own survivors (self-trained, like CCNet's per-snapshot LM),
-    then keep each ``group_col``'s least-perplexing ``keep_frac`` via
+    then keep each source's least-perplexing 75% via
     the exact percent_rank cut. Adds ``avg_neg_log2_bigram_prob`` and
     ``pctl``. The upstream frame is consumed three times (bigram
     occurrences, vocabulary, join-back) — callers should ``.persist()``
@@ -323,20 +296,16 @@ def perplexity_stage(
         score_percentile_gate,
     )
 
-    scored = bigram_logprob(quality, alpha=alpha, text_col=text_col)
+    scored = bigram_logprob(quality, text_col="clean_text")
     joined = quality.join(
         scored.select("doc_id", "avg_neg_log2_bigram_prob"), "doc_id"
     )
     return score_percentile_gate(
-        joined, "avg_neg_log2_bigram_prob", group_col, keep_frac
+        joined, "avg_neg_log2_bigram_prob", "source"
     )
 
 
-def budget_stage(
-    gated: DataFrame,
-    budget: int,
-    weight_col: str = "n_tokens",
-) -> DataFrame:
+def budget_stage(gated: DataFrame, budget: int) -> DataFrame:
     """Token-budget selection ordered by LM quality: fill ``budget``
     tokens with the LEAST-perplexing documents first (score =
     1 / (1 + cross-entropy), a bounded [0,1] transform so the two-phase
@@ -350,5 +319,5 @@ def budget_stage(
         F.round(1.0 / (1.0 + F.col("avg_neg_log2_bigram_prob")), 6),
     )
     return budget_fill(
-        scored, "lm_score", weight_col, "doc_id", budget=budget
+        scored, "lm_score", "n_tokens", "doc_id", budget=budget
     )

@@ -144,21 +144,15 @@ def assemble_triples(
     )
 
 
-def author_filter(
-    triples: DataFrame,
-    allowed_authors: Column,
-    before_col: str = "before_payloads",
-    after_col: str = "after_payloads",
-    author_field: str = "author_id",
-) -> DataFrame:
+def author_filter(triples: DataFrame, allowed_authors: Column) -> DataFrame:
     """distill2 (reference distill2_authors.py:61-64): keep only
     before/after utterances authored by the command author or a DM.
     ``allowed_authors`` is an array column of permitted author ids."""
     keep = lambda col: F.filter(  # noqa: E731
-        F.col(col), lambda m: F.array_contains(allowed_authors, m[author_field])
+        F.col(col), lambda m: F.array_contains(allowed_authors, m["author_id"])
     )
-    return triples.withColumn(before_col, keep(before_col)).withColumn(
-        after_col, keep(after_col)
+    return triples.withColumn("before_payloads", keep("before_payloads")).withColumn(
+        "after_payloads", keep("after_payloads")
     )
 
 

@@ -84,11 +84,14 @@ def _ev_ts(s: StreamSchema) -> Column:
     return c
 
 
-def _ts_delta_seconds(s: StreamSchema, later: Column, earlier: Column) -> Column:
+def _ts_delta_micros(s: StreamSchema, later: Column, earlier: Column) -> Column:
+    """``later - earlier`` in whole int64 microseconds: the integer
+    encodings subtract exactly; float epoch seconds round the delta to the
+    microsecond (half away from zero, the same in Spark and DuckDB)."""
     d = later - earlier
     if s.ts_unit in ("nanos_long", "timestamp"):
-        return d.cast("double") / F.lit(1000000.0)
-    return d
+        return d
+    return F.round(d * F.lit(1000000.0)).cast("bigint")
 
 
 # ----------------------------------------------------------------------
@@ -257,11 +260,16 @@ def _avg_time_msg_cmd(s: StreamSchema) -> Column:
     # that author's most recent prior message; mean over commands that have
     # one; 0.0 when no command has a prior message (feng.py returns 0 on an
     # empty accumulator). Requires with_stream_features.
+    # The int64 microsecond deltas sum exactly and the mean is rounded to a
+    # whole microsecond before the one division to seconds: a float average
+    # depends on summation order, and a mean off the microsecond grid can
+    # round differently at 6 dp in Spark and DuckDB.
     delta = F.when(
         _is_command(s) & F.col("_prev_msg_ts").isNotNull(),
-        _ts_delta_seconds(s, F.col("_ev_ts"), F.col("_prev_msg_ts")),
+        _ts_delta_micros(s, F.col("_ev_ts"), F.col("_prev_msg_ts")),
     )
-    return F.coalesce(F.avg(delta), F.lit(0.0))
+    mean_us = F.round(F.sum(delta) / F.count(delta))
+    return F.coalesce(mean_us / F.lit(1000000.0), F.lit(0.0))
 
 
 @register_heuristic("ratio_of_commands_without_message")

@@ -72,7 +72,6 @@ def mllib_model_fn(
     model,
     positive_label: str = "1",
     negative_label: str = "0",
-    threshold: float = 0.5,
 ) -> Callable[[pd.DataFrame], pd.DataFrame]:
     """U4/U5: wire a *trained* MLlib scaler+logreg pipeline into the envelope.
 
@@ -119,7 +118,7 @@ def mllib_model_fn(
             x = (x - mean) * scale
         margin = x @ coef + intercept
         prob = 1.0 / (1.0 + np.exp(-margin))
-        label = np.where(prob >= threshold, positive_label, negative_label)
+        label = np.where(prob >= 0.5, positive_label, negative_label)
         return pd.DataFrame({"label": label, "prob": prob})
 
     return model_fn
@@ -129,7 +128,6 @@ def with_retries(
     model_fn: Callable[[pd.DataFrame], pd.DataFrame],
     max_tries: int = 3,
     backoff: float = 0.05,
-    retry_on: tuple[type[BaseException], ...] = (Exception,),
     sleep: Callable[[float], None] = time.sleep,
 ) -> Callable[[pd.DataFrame], pd.DataFrame]:
     """U3: retry/pacing wrapper for flaky model backends.
@@ -155,7 +153,7 @@ def with_retries(
         for attempt in range(max_tries):
             try:
                 return model_fn(pdf)
-            except retry_on:
+            except (Exception,):
                 if attempt == max_tries - 1:
                     raise
                 sleep(backoff * (2 ** attempt))

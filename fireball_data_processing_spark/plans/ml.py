@@ -34,7 +34,6 @@ def train_logreg_cv(
     label_col: str,
     reg_grid: tuple[float, ...] = (0.01, 0.1, 1.0),
     n_folds: int = 3,
-    seed: int = 42,
 ):
     """StandardScaler + LogisticRegression + k-fold CV over the reg grid
     (the reference's C grid inverted: C = 1/regParam). Returns the fitted
@@ -51,7 +50,7 @@ def train_logreg_cv(
         estimatorParamMaps=grid,
         evaluator=BinaryClassificationEvaluator(labelCol="label"),
         numFolds=n_folds,
-        seed=seed,
+        seed=42,
         parallelism=4,
     )
     return cv.fit(assembled)

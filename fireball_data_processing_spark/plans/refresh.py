@@ -49,16 +49,14 @@ def incremental_refresh(
     old_docs: DataFrame,
     prior_outputs: DataFrame,
     process: Callable[[DataFrame], DataFrame],
-    key: str = "doc_id",
-    fingerprint_col: str = "fp",
     origin_col: str | None = None,
 ) -> DataFrame:
     """Outputs for the NEW snapshot, recomputing only added/changed keys.
 
-    ``new_docs`` / ``old_docs`` must carry ``key`` and a precomputed
-    ``fingerprint_col`` (see :func:`..operators.snapshots.fingerprint`)
+    ``new_docs`` / ``old_docs`` must carry ``doc_id`` and a precomputed
+    ``fp`` column (see :func:`..operators.snapshots.fingerprint`)
     covering every column ``process`` reads. ``prior_outputs`` is
-    ``process(old_docs)`` from the previous build, keyed by ``key``.
+    ``process(old_docs)`` from the previous build, keyed by ``doc_id``.
     ``process`` must be per-row (one output row per key, no
     cross-document state) — see the module docstring.
 
@@ -72,11 +70,11 @@ def incremental_refresh(
     # (key + status, ~50 B/row), so caching it is the cheap side of that
     # trade at any scale; spill-to-disk covers corpora whose key set
     # outgrows executor memory.
-    diff = snapshot_diff(old_docs, new_docs, key, fingerprint_col).persist()
-    stale = diff.filter(F.col("status").isin("added", "changed")).select(key)
-    fresh = diff.filter(F.col("status") == "unchanged").select(key)
-    refreshed = process(new_docs.join(stale, on=key, how="left_semi"))
-    carried = prior_outputs.join(fresh, on=key, how="left_semi")
+    diff = snapshot_diff(old_docs, new_docs, "doc_id").persist()
+    stale = diff.filter(F.col("status").isin("added", "changed")).select("doc_id")
+    fresh = diff.filter(F.col("status") == "unchanged").select("doc_id")
+    refreshed = process(new_docs.join(stale, on="doc_id", how="left_semi"))
+    carried = prior_outputs.join(fresh, on="doc_id", how="left_semi")
     if origin_col is not None:
         refreshed = refreshed.withColumn(origin_col, F.lit("refreshed"))
         carried = carried.withColumn(origin_col, F.lit("carried"))

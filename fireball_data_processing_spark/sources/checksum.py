@@ -5,7 +5,7 @@ The reference computes a parallel md5 dirhash over every ``*.gz`` file
 *listing* (path, length, modification time) via the binaryFile source's
 metadata columns — content-change detection without reading a byte of
 data, which is the right trade at 100 TB (the reference reads the whole
-corpus to hash it). A content-level variant is provided for exactness.
+corpus to hash it).
 """
 
 from __future__ import annotations
@@ -15,31 +15,25 @@ from pyspark.sql import functions as F
 
 
 def dataset_checksum(
-    spark: SparkSession, root: str, pattern: str = "*/*.jsonl.gz",
-    content: bool = False,
+    spark: SparkSession, root: str, pattern: str = "*/*.jsonl.gz"
 ) -> str:
-    """md5 over the sorted file listing (default) or file contents."""
+    """md5 over the sorted file listing."""
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*")
         .load(f"{root.rstrip('/')}/{pattern}")
     )
-    if content:
-        per_file = files.select(
-            F.col("path"), F.md5(F.col("content")).alias("h")
-        )
-    else:
-        per_file = files.select(
-            F.col("path"),
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.col("path"),
-                    F.col("length").cast("string"),
-                    F.unix_micros(F.col("modificationTime")).cast("string"),
-                )
-            ).alias("h"),
-        )
+    per_file = files.select(
+        F.col("path"),
+        F.md5(
+            F.concat_ws(
+                "|",
+                F.col("path"),
+                F.col("length").cast("string"),
+                F.unix_micros(F.col("modificationTime")).cast("string"),
+            )
+        ).alias("h"),
+    )
     row = per_file.agg(
         F.md5(
             F.array_join(

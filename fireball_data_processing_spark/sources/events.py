@@ -34,26 +34,21 @@ from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 
-def with_instance_and_seq(
-    df: DataFrame,
-    instance_regex: str = r"/([^/]+)/[^/]+$",
-    order_cols: tuple[str, ...] | None = None,
-) -> DataFrame:
+def with_instance_and_seq(df: DataFrame) -> DataFrame:
     """Attach ``instance_id`` (from the file path) and canonical ``seq``.
 
-    ``order_cols`` defaults to (file name, within-file position), matching
-    the reference's sorted-filename-then-line-order semantics
+    ``seq`` orders by (file name, within-file position), matching the
+    reference's sorted-filename-then-line-order semantics
     (``dataset/utils.py:40``).
     """
     df = df.withColumn("_file", F.input_file_name()).withColumn(
-        "instance_id", F.regexp_extract(F.col("_file"), instance_regex, 1)
+        "instance_id", F.regexp_extract(F.col("_file"), r"/([^/]+)/[^/]+$", 1)
     )
     # monotonically_increasing_id is increasing within a partition and Spark
     # reads each (file, range) split in order, so (file, mid) reproduces
     # file-then-line order.
     df = df.withColumn("_mid", F.monotonically_increasing_id())
-    order = [F.col(c) for c in (order_cols or ("_file", "_mid"))]
-    w = Window.partitionBy("instance_id").orderBy(*order)
+    w = Window.partitionBy("instance_id").orderBy(F.col("_file"), F.col("_mid"))
     return df.withColumn("seq", F.row_number().over(w)).drop("_file", "_mid")
 
 
@@ -61,8 +56,6 @@ def load_event_stream(
     spark: SparkSession,
     root: str,
     schema: StructType | str | None = None,
-    ignore_corrupt_files: bool = True,
-    pattern: str = "*/*.jsonl.gz",
 ) -> DataFrame:
     """Read a directory-of-instance-directories of gzipped JSONL (S1+S4+S5).
 
@@ -77,6 +70,6 @@ def load_event_stream(
     else:
         reader = reader.option("inferSchema", "true")
     # S1 bad-gzip tolerance, scoped to this scan rather than session-wide.
-    reader = reader.option("ignoreCorruptFiles", str(ignore_corrupt_files).lower())
-    df = reader.json(f"{root.rstrip('/')}/{pattern}")
+    reader = reader.option("ignoreCorruptFiles", "true")
+    df = reader.json(f"{root.rstrip('/')}/*/*.jsonl.gz")
     return with_instance_and_seq(df)

@@ -56,6 +56,7 @@ from fireball_data_processing_spark.streaming.dedup_stream import (
     near_new_documents,
 )
 from fireball_data_processing_spark.streaming.sinks_stream import (
+    drain_stream,
     write_epoch_partition,
 )
 
@@ -309,14 +310,7 @@ def run_ingest_pipeline_from_stream(
         )
         write_epoch_partition(partial, epoch_id, out_path)
 
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_stream(stream, _process, checkpoint_dir).awaitTermination()
 
 
 def read_pipeline_totals(spark: SparkSession, out_path: str) -> DataFrame:

@@ -34,8 +34,6 @@ def stream_rate_deltas(
     success: Column,
     out_path: str,
     checkpoint_dir: str,
-    fmt: str = "parquet",
-    trigger_available_now: bool = True,
 ):
     """Reduce each micro-batch to per-day ``(day, dk, dn1)`` rows
     (int64-nano timestamps bucketed to days) and append exactly-once
@@ -44,10 +42,11 @@ def stream_rate_deltas(
         normalize_event_time,
     )
     from fireball_data_processing_spark.streaming.sinks_stream import (
+        drain_stream,
         write_epoch_partition,
     )
 
-    stream = spark.readStream.schema(file_schema).format(fmt).load(source_dir)
+    stream = spark.readStream.schema(file_schema).parquet(source_dir)
 
     def _reduce_and_write(batch_df: DataFrame, epoch_id: int) -> None:
         b = normalize_event_time(batch_df, ts_col)
@@ -66,14 +65,7 @@ def stream_rate_deltas(
         )
         write_epoch_partition(deltas, epoch_id, out_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(_reduce_and_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_stream(stream, _reduce_and_write, checkpoint_dir)
 
 
 def cusum_monitor(

@@ -48,9 +48,6 @@ def stream_decay_deltas(
     half_life_days: float,
     out_path: str,
     checkpoint_dir: str,
-    round_dp: int = 8,
-    fmt: str = "parquet",
-    trigger_available_now: bool = True,
 ):
     """Reduce each micro-batch to per-group ``(group, n, dsum)`` rows
     (values weighted to the fixed reference epoch) and append them
@@ -60,10 +57,11 @@ def stream_decay_deltas(
         normalize_event_time,
     )
     from fireball_data_processing_spark.streaming.sinks_stream import (
+        drain_stream,
         write_epoch_partition,
     )
 
-    stream = spark.readStream.schema(file_schema).format(fmt).load(source_dir)
+    stream = spark.readStream.schema(file_schema).parquet(source_dir)
 
     def _reduce_and_write(batch_df: DataFrame, epoch_id: int) -> None:
         b = normalize_event_time(batch_df, ts_col)
@@ -76,19 +74,12 @@ def stream_decay_deltas(
             .groupBy("group")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n"),
-                F.round(F.sum("__wv"), round_dp).alias("dsum"),
+                F.round(F.sum("__wv"), 8).alias("dsum"),
             )
         )
         write_epoch_partition(deltas, epoch_id, out_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(_reduce_and_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_stream(stream, _reduce_and_write, checkpoint_dir)
 
 
 def read_decayed(
@@ -97,7 +88,6 @@ def read_decayed(
     as_of_ns: int,
     t0_ns: int,
     half_life_days: float,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Merge the delta table (addition across epochs — order-free) and
     rescale to ``as_of_ns``: one aggregate over the aggregate-sized
@@ -112,7 +102,7 @@ def read_decayed(
         .groupBy("group")
         .agg(
             F.sum("n").cast("bigint").alias("n"),
-            F.round(F.sum("dsum") * F.lit(scale), out_dp).alias(
+            F.round(F.sum("dsum") * F.lit(scale), 6).alias(
                 "decayed_sum"
             ),
         )

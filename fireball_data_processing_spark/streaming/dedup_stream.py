@@ -39,22 +39,21 @@ from pyspark.sql.types import StructType
 from fireball_data_processing_spark.functions.text import normalize_text
 from fireball_data_processing_spark.operators.dedup import (
     band_structs,
-    capped_shingles,
     minhash_sig_expr,
     shingles_of_words,
 )
 
 
-def content_hash(text_col: str = "text") -> F.Column:
+def content_hash() -> F.Column:
     """The stream/batch-agreed exact-dedup key (normalized-text md5)."""
-    return F.md5(normalize_text(F.col(text_col)))
+    return F.md5(normalize_text(F.col("text")))
 
 
-def corpus_hash_index(corpus: DataFrame, text_col: str = "text") -> DataFrame:
+def corpus_hash_index(corpus: DataFrame) -> DataFrame:
     """Distinct content hashes of the existing corpus — the static side of
     the stream-static anti join. Materialize to parquet for a long-running
     stream so micro-batches rescan the compact index, not the corpus."""
-    return corpus.select(content_hash(text_col).alias("content_hash")).distinct()
+    return corpus.select(content_hash().alias("content_hash")).distinct()
 
 
 def stream_new_documents(
@@ -62,10 +61,8 @@ def stream_new_documents(
     source_dir: str,
     file_schema: StructType | str,
     index: DataFrame,
-    text_col: str = "text",
     ts_col: str | None = None,
     watermark: str = "10 minutes",
-    fmt: str = "parquet",
     allow_unbounded_state: bool = False,
 ) -> DataFrame:
     """Documents from the stream that are new to the corpus AND the first
@@ -83,8 +80,8 @@ def stream_new_documents(
             "forever; pass allow_unbounded_state=True only for bounded "
             "replays, or provide an event-time column for the watermark"
         )
-    stream = spark.readStream.schema(file_schema).format(fmt).load(source_dir)
-    hashed = stream.withColumn("content_hash", content_hash(text_col))
+    stream = spark.readStream.schema(file_schema).parquet(source_dir)
+    hashed = stream.withColumn("content_hash", content_hash())
     fresh = hashed.join(index, "content_hash", "left_anti")
     if ts_col is not None:
         fresh = fresh.withWatermark(ts_col, watermark)
@@ -110,16 +107,13 @@ def _near_gate_exprs(
     num_hashes: int,
     band_size: int,
     shingle_k: int,
-    max_shingles: int | None,
 ) -> tuple[F.Column, list[F.Column]]:
-    key = (text_col, num_hashes, band_size, shingle_k, max_shingles)
+    key = (text_col, num_hashes, band_size, shingle_k)
     hit = _NEAR_EXPR_CACHE.get(key)
     if hit is None:
         sh = shingles_of_words(
             F.split(normalize_text(F.col(text_col)), " "), shingle_k
         )
-        if max_shingles is not None:
-            sh = capped_shingles(sh, max_shingles)
         sig_col = minhash_sig_expr(sh, num_hashes)
         band_cols = []
         for b in range(num_hashes // band_size):
@@ -155,15 +149,7 @@ def corpus_band_index(
     )
 
 
-def near_new_documents(
-    docs: DataFrame,
-    band_index: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 8,
-    band_size: int = 2,
-    shingle_k: int = 3,
-    max_shingles: int | None = None,
-) -> DataFrame:
+def near_new_documents(docs: DataFrame, band_index: DataFrame) -> DataFrame:
     """Rows of ``docs`` whose MinHash signature shares NO LSH band with the
     index — i.e. docs with no near-duplicate already in the corpus (at the
     recall of the banding scheme; same bands as ``lsh_candidate_pairs``).
@@ -177,10 +163,8 @@ def near_new_documents(
     Docs too short to shingle have no bands and always pass (they cannot
     near-duplicate anything under the shingle model).
     """
-    n_bands = num_hashes // band_size
-    sig_col, band_cols = _near_gate_exprs(
-        text_col, num_hashes, band_size, shingle_k, max_shingles
-    )
+    n_bands = 8 // 2
+    sig_col, band_cols = _near_gate_exprs("text", 8, 2, 3)
     out = docs.withColumn("__sig", sig_col)
     helpers = ["__sig"]
     for b in range(n_bands):
@@ -191,9 +175,9 @@ def near_new_documents(
     # sides, so each micro-batch (and each batch run) paid n_bands
     # broadcast builds of the same index; with an identical subtree on
     # every join, Spark's exchange reuse materializes the broadcast ONCE
-    # per plan and the remaining joins are pure probes (guide §2.4 /
-    # §3.1 — and in the capstone this repeats every epoch, so the saving
-    # multiplies by the epoch count).
+    # per plan and the remaining joins are pure probes (in the capstone
+    # this repeats every epoch, so the saving multiplies by the epoch
+    # count).
     keyed_index = band_index.select(
         F.concat_ws(
             "#", F.col("band_idx").cast("string"), F.col("band_key")
@@ -220,14 +204,7 @@ def stream_near_new_documents(
     source_dir: str,
     file_schema: StructType | str,
     band_index: DataFrame,
-    text_col: str = "text",
     ts_col: str | None = None,
-    watermark: str = "10 minutes",
-    fmt: str = "parquet",
-    num_hashes: int = 8,
-    band_size: int = 2,
-    shingle_k: int = 3,
-    max_shingles: int | None = None,
     allow_unbounded_state: bool = False,
 ) -> DataFrame:
     """Streaming near-dup ingest gate: documents that near-duplicate
@@ -249,18 +226,12 @@ def stream_near_new_documents(
             "forever; pass allow_unbounded_state=True only for bounded "
             "replays, or provide an event-time column for the watermark"
         )
-    stream = spark.readStream.schema(file_schema).format(fmt).load(source_dir)
-    fresh = near_new_documents(
-        stream,
-        band_index,
-        text_col=text_col,
-        num_hashes=num_hashes,
-        band_size=band_size,
-        shingle_k=shingle_k,
-        max_shingles=max_shingles,
-    ).withColumn("content_hash", content_hash(text_col))
+    stream = spark.readStream.schema(file_schema).parquet(source_dir)
+    fresh = near_new_documents(stream, band_index).withColumn(
+        "content_hash", content_hash()
+    )
     if ts_col is not None:
-        fresh = fresh.withWatermark(ts_col, watermark)
+        fresh = fresh.withWatermark(ts_col, "10 minutes")
         return fresh.dropDuplicatesWithinWatermark(["content_hash"])
     return fresh.dropDuplicates(["content_hash"])
 
@@ -272,8 +243,6 @@ def corpus_segment_index(
     corpus: DataFrame,
     seg_words: int = 8,
     min_docs: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Boilerplate-segment index: distinct md5 hashes of aligned segments
     held by at least ``min_docs`` DISTINCT corpus documents — the static
@@ -285,9 +254,9 @@ def corpus_segment_index(
     from fireball_data_processing_spark.operators.dedup import aligned_segments
 
     return (
-        aligned_segments(corpus, seg_words, text_col, id_col)
+        aligned_segments(corpus, seg_words)
         .groupBy(F.md5("segment").alias("seg_hash"))
-        .agg(F.countDistinct(id_col).alias("__nd"))
+        .agg(F.countDistinct("doc_id").alias("__nd"))
         .filter(F.col("__nd") >= min_docs)
         .select("seg_hash")
     )
@@ -297,15 +266,13 @@ def scrub_segments(
     docs: DataFrame,
     seg_index: DataFrame,
     seg_words: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Remove every indexed segment from ``docs`` — the RefinedWeb-style
     scrub of INCOMING documents against the existing corpus's boilerplate
     (the batch :func:`~...operators.dedup.line_dedup` decides duplicates
     WITHIN a corpus; this applies an already-built index to new rows).
 
-    Output: all original columns, with ``text_col`` replaced by the
+    Output: all original columns, with ``text`` replaced by the
     scrubbed text plus ``n_segments``/``n_removed_segments`` counters.
     Docs reduced to nothing keep an empty string (callers drop or route
     them; the counters make the predicate trivial).
@@ -319,7 +286,7 @@ def scrub_segments(
     """
     from fireball_data_processing_spark.operators.dedup import aligned_segments
 
-    segs = aligned_segments(docs.select(id_col, text_col), seg_words, text_col, id_col)
+    segs = aligned_segments(docs.select("doc_id", "text"), seg_words)
     marked = segs.join(
         seg_index.withColumn("__hit", F.lit(True)),
         F.md5(F.col("segment")) == F.col("seg_hash"),
@@ -328,7 +295,7 @@ def scrub_segments(
     kept_structs = F.sort_array(
         F.collect_list(F.when(F.col("__hit").isNull(), F.struct("seg_idx", "segment")))
     )
-    scrubbed = marked.groupBy(id_col).agg(
+    scrubbed = marked.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_segments"),
         F.sum(F.col("__hit").isNotNull().cast("bigint")).alias(
             "n_removed_segments"
@@ -337,12 +304,12 @@ def scrub_segments(
             "__scrubbed"
         ),
     )
-    passthrough = [c for c in docs.columns if c != text_col]
+    passthrough = [c for c in docs.columns if c != "text"]
     return (
-        docs.join(scrubbed, id_col)
+        docs.join(scrubbed, "doc_id")
         .select(
             *passthrough,
-            F.col("__scrubbed").alias(text_col),
+            F.col("__scrubbed").alias("text"),
             "n_segments",
             "n_removed_segments",
         )
@@ -357,10 +324,6 @@ def stream_scrub_segments(
     out_path: str,
     checkpoint_dir: str,
     seg_words: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    fmt: str = "parquet",
-    trigger_available_now: bool = True,
 ):
     """Streaming segment scrub: every incoming document leaves with the
     corpus's boilerplate segments removed, written exactly-once.
@@ -374,22 +337,16 @@ def stream_scrub_segments(
     its own ``batch_id=`` partition, keeping the gate exactly-once.
     """
     from fireball_data_processing_spark.streaming.sinks_stream import (
+        drain_stream,
         write_epoch_partition,
     )
 
-    stream = spark.readStream.schema(file_schema).format(fmt).load(source_dir)
+    stream = spark.readStream.schema(file_schema).parquet(source_dir)
 
     def _scrub_and_write(batch_df: DataFrame, epoch_id: int) -> None:
         out = scrub_segments(
-            batch_df, seg_index, seg_words, text_col, id_col
+            batch_df, seg_index, seg_words
         )
         write_epoch_partition(out, epoch_id, out_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(_scrub_and_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_stream(stream, _scrub_and_write, checkpoint_dir)

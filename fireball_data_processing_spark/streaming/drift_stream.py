@@ -19,7 +19,6 @@ are a plain DataFrame. Batch parity is exact because the same
 
 from __future__ import annotations
 
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,15 +38,13 @@ def windowed_mix_stream(
     file_schema: StructType | str,
     s: StreamSchema,
     bucket_col: str,
-    window: str = "1 hour",
     watermark: str = "30 minutes",
-    fmt: str = "parquet",
 ) -> DataFrame:
-    """(window_start, bucket, n) per tumbling event-time window — the
+    """(window_start, bucket, n) per tumbling 1-hour event-time window — the
     streaming-stateful half of the monitor; append mode emits each
     window once, when the watermark closes it."""
     stream = normalize_event_time(
-        spark.readStream.schema(file_schema).format(fmt).load(source_dir),
+        spark.readStream.schema(file_schema).parquet(source_dir),
         s.ts_col,
     )
     if s.ts_unit == "nanos_long":
@@ -59,7 +56,7 @@ def windowed_mix_stream(
     return (
         stream.withColumn("event_ts", ts)
         .withWatermark("event_ts", watermark)
-        .groupBy(F.window("event_ts", window), F.col(bucket_col).alias("bucket"))
+        .groupBy(F.window("event_ts", "1 hour"), F.col(bucket_col).alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("window.start").alias("window_start"), "bucket", "n")
     )
@@ -130,33 +127,24 @@ def drift_monitor_stream(
     baseline: DataFrame,
     out_path: str,
     checkpoint_dir: str,
-    window: str = "1 hour",
     watermark: str = "30 minutes",
-    fmt: str = "parquet",
-    on_batch: Callable[[DataFrame, int], None] | None = None,
 ) -> StreamingQuery:
     """End-to-end monitor: windowed mix stream -> per-closed-window PSI
     vs ``baseline`` -> epoch-idempotent parquet (see
     :mod:`.sinks_stream`). ``baseline`` must be a small static frame
     (it is collected into every micro-batch's plan via broadcast)."""
     from fireball_data_processing_spark.streaming.sinks_stream import (
+        drain_stream,
         write_epoch_partition,
     )
 
     counts = windowed_mix_stream(
-        spark, source_dir, file_schema, s, bucket_col, window, watermark, fmt
+        spark, source_dir, file_schema, s, bucket_col, watermark
     )
 
     def _score_and_write(batch_df: DataFrame, epoch_id: int) -> None:
-        scored = score_windows_psi(batch_df, baseline)
-        write_epoch_partition(scored, epoch_id, out_path)
-        if on_batch is not None:
-            on_batch(scored, epoch_id)
+        write_epoch_partition(
+            score_windows_psi(batch_df, baseline), epoch_id, out_path
+        )
 
-    return (
-        counts.writeStream.foreachBatch(_score_and_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_stream(counts, _score_and_write, checkpoint_dir)

@@ -45,6 +45,7 @@ from fireball_data_processing_spark.operators.expectations import (
     expectation_suite,
 )
 from fireball_data_processing_spark.streaming.sinks_stream import (
+    drain_stream,
     write_epoch_partition,
 )
 
@@ -66,17 +67,13 @@ def run_expectation_gate_from_stream(
     checkpoint_dir: str,
     admit_path: str | None = None,
     quarantine_path: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Drive the contract gate over ANY streaming frame — the connector
     seam (test-pinned directly): swap the file source for a real
     connector by passing its frame here.
 
-    With ``trigger_available_now=True`` (the drain-the-backlog shape)
-    the call blocks until the stream finishes and returns the
-    terminated query; with ``False`` it returns the RUNNING
-    ``StreamingQuery`` immediately — the caller owns stop/await, like
-    every other sink in ``sinks_stream.py``."""
+    The call drains the backlog (``availableNow``), blocks until the
+    stream finishes and returns the terminated query."""
 
     def _gate(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.persist()
@@ -102,16 +99,8 @@ def run_expectation_gate_from_stream(
         finally:
             batch_df.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if trigger_available_now:
-        q.awaitTermination()
+    q = drain_stream(stream, _gate, checkpoint_dir)
+    q.awaitTermination()
     return q
 
 
@@ -124,18 +113,14 @@ def run_expectation_gate(
     checkpoint_dir: str,
     admit_path: str | None = None,
     quarantine_path: str | None = None,
-    max_files_per_trigger: int = 1,
-    fmt: str = "parquet",
-    trigger_available_now: bool = True,
 ):
     """File-landing form: each arriving file (an intake drop) becomes
     one micro-batch (``maxFilesPerTrigger``) and is admitted or
     quarantined as a unit against the declared contract."""
     stream = (
         spark.readStream.schema(file_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .format(fmt)
-        .load(source_dir)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(source_dir)
     )
     return run_expectation_gate_from_stream(
         stream,
@@ -144,5 +129,4 @@ def run_expectation_gate(
         checkpoint_dir,
         admit_path=admit_path,
         quarantine_path=quarantine_path,
-        trigger_available_now=trigger_available_now,
     )

@@ -36,11 +36,10 @@ def stream_heuristics(
     file_schema: StructType | str,
     s: StreamSchema,
     names: tuple[str, ...] | None = None,
-    fmt: str = "parquet",
 ) -> DataFrame:
     """Incremental per-instance heuristics over a file stream.
 
-    Swap ``source_dir``/``fmt`` for a Kinesis/Kafka source in production;
+    Swap the parquet file source for a Kinesis/Kafka source in production;
     the aggregation layer is source-agnostic.
     """
     names = names or STREAM_SAFE
@@ -53,7 +52,7 @@ def stream_heuristics(
             "cannot run incrementally; use the *_approx variants"
         )
     stream = normalize_event_time(
-        spark.readStream.schema(file_schema).format(fmt).load(source_dir),
+        spark.readStream.schema(file_schema).parquet(source_dir),
         s.ts_col,
     )
     exprs = heuristic_exprs(s, names)
@@ -85,7 +84,6 @@ def stateful_buffer_flush_stream(
     s: StreamSchema,
     buffer_types: tuple[str, ...],
     flush_types: tuple[str, ...],
-    fmt: str = "parquet",
 ) -> DataFrame:
     """G13's streaming form: the same buffer/flush FSM as ``fsm_extract``,
     incremental via ``applyInPandasWithState`` — the (buffered count, sum)
@@ -129,7 +127,7 @@ def stateful_buffer_flush_stream(
                   "buffered_sum": "float64"})
 
     stream = normalize_event_time(
-        spark.readStream.schema(file_schema).format(fmt).load(source_dir),
+        spark.readStream.schema(file_schema).parquet(source_dir),
         s.ts_col,
     )
     return stream.groupBy(F.col(s.instance_col)).applyInPandasWithState(
@@ -177,12 +175,14 @@ def _segment_buffer_flush(
     return (anchors, counts, sums, int(bn[n_flush]), float(bs[n_flush]))
 
 
+# event roles of the reference's state/narration transition table
+_STATE_TYPES = ("purchase",)
+_RESET_TYPES = ("signup",)
+_NARRATION_TYPES = ("view",)
+
+
 def state_narration_fsm(
     s: StreamSchema,
-    state_types: tuple[str, ...] = ("purchase",),
-    reset_types: tuple[str, ...] = ("signup",),
-    narration_types: tuple[str, ...] = ("view",),
-    min_measure: float = 2.0,
 ) -> Callable[[pd.DataFrame], pd.DataFrame]:
     """G14: the reference's 3-state transition table (search=1 ->
     record-state=2 -> record-narration=3, reference
@@ -198,7 +198,7 @@ def state_narration_fsm(
     - end of instance: flush (:152-155); a flush only emits when both
       buffers are non-empty (:68-71)
 
-    Narration events below ``min_measure`` are skipped entirely (the
+    Narration events with measure below 2.0 are skipped entirely (the
     1-word-utterance skip, :76-78). The production path is the declarative
     window formulation (queries.q_fsm_state_narration) — the transition
     table reduces to two cumulative-sum segmentations — and this runner is
@@ -225,31 +225,31 @@ def state_narration_fsm(
                 pdf[s.type_col].to_numpy(),
                 pdf[s.measure_col].to_numpy(),
             ):
-                if etype in narration_types and not (val >= min_measure):
+                if etype in _NARRATION_TYPES and not (val >= 2.0):
                     continue
                 if state == 1:
-                    if etype in state_types:
+                    if etype in _STATE_TYPES:
                         state_buf = [int(eid)]
                         state = 2
                 elif state == 2:
-                    if etype in state_types:
+                    if etype in _STATE_TYPES:
                         state_buf.append(int(eid))
-                    elif etype in reset_types:
+                    elif etype in _RESET_TYPES:
                         state_buf, narr = [], []
                         state = 1
-                    elif etype in narration_types:
+                    elif etype in _NARRATION_TYPES:
                         narr.append(float(val))
                         state = 3
                 else:
-                    if etype in state_types:
+                    if etype in _STATE_TYPES:
                         flush()
                         state_buf, narr = [int(eid)], []
                         state = 2
-                    elif etype in reset_types:
+                    elif etype in _RESET_TYPES:
                         flush()
                         state_buf, narr = [], []
                         state = 1
-                    elif etype in narration_types:
+                    elif etype in _NARRATION_TYPES:
                         narr.append(float(val))
             flush()
         out = pd.DataFrame(

@@ -43,7 +43,6 @@ def interval_join_stream(
     match_type: str = "view",
     max_gap: str = "10 minutes",
     watermark: str = "30 minutes",
-    fmt: str = "parquet",
 ) -> DataFrame:
     """All (anchor, match) event pairs per instance where the match event
     lands in ``[anchor_ts - max_gap, anchor_ts]`` — e.g. every view within
@@ -57,7 +56,7 @@ def interval_join_stream(
     arrived and neither can be retracted by late data.
     """
     stream = normalize_event_time(
-        spark.readStream.schema(file_schema).format(fmt).load(source_dir),
+        spark.readStream.schema(file_schema).parquet(source_dir),
         s.ts_col,
     )
     if s.ts_unit == "nanos_long":

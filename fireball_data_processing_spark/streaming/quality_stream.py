@@ -95,9 +95,7 @@ def _bigram_occurrences(pre: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def corpus_lm_index(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> LmIndex:
+def corpus_lm_index(docs: DataFrame) -> LmIndex:
     """Train the frozen bigram LM over the existing corpus: bigram
     counts, continuation totals, vocabulary size — same tokenization
     and counting as the batch :func:`~fireball_data_processing_spark.
@@ -109,12 +107,12 @@ def corpus_lm_index(
     The context totals are NOT a second pass over the corpus: cp(prev)
     = sum over cur of cb(prev, cur), so ``prevs`` rolls up the compact
     bigram table (distinct-bigram grain, vocab²-bounded) instead of
-    re-exploding every occurrence (guide §2.3/§2.4 — the old form ran
-    the tokenize+explode pipeline and an occurrence-grain shuffle
-    twice). Counts are integers < 2^53, so the double sum is exact —
-    identical cp to the occurrence-grain count."""
-    pre = _word_arrays(docs, text_col, id_col)
-    occ = _bigram_occurrences(pre, id_col)
+    re-exploding every occurrence (which would run the tokenize+explode
+    pipeline and an occurrence-grain shuffle twice). Counts are integers
+    < 2^53, so the double sum is exact — identical cp to the
+    occurrence-grain count."""
+    pre = _word_arrays(docs, "text", "doc_id")
+    occ = _bigram_occurrences(pre, "doc_id")
     bigrams = occ.groupBy(
         F.col("__prev").alias("prev"), F.col("__cur").alias("cur")
     ).agg(F.count(F.lit(1)).cast("double").alias("cb"))
@@ -125,19 +123,12 @@ def corpus_lm_index(
     return LmIndex(bigrams=bigrams, prevs=prevs, vocab=vocab)
 
 
-def score_against_lm(
-    docs: DataFrame,
-    lm: LmIndex,
-    alpha: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    round_dp: int | None = 6,
-) -> DataFrame:
+def score_against_lm(docs: DataFrame, lm: LmIndex) -> DataFrame:
     """Score documents under a FROZEN LM:
-    ``avg -log2 (c(v,w) + alpha) / (c(v,·) + alpha * V)`` over the
+    ``avg -log2 (c(v,w) + 0.5) / (c(v,·) + 0.5 * V)`` over the
     doc's bigrams, with counts looked up in the index (unseen bigrams
     and unseen contexts fall back to the smoothing mass — exactly what
-    add-alpha is for). Output ``(id_col, avg_neg_log2_bigram_prob,
+    add-alpha is for). Output ``(doc_id, avg_neg_log2_bigram_prob,
     n_bigrams)``; docs with fewer than two tokens are absent (nothing
     to score), mirroring ``bigram_logprob``.
 
@@ -150,8 +141,8 @@ def score_against_lm(
     tables (broadcast when compact) -> one-row vocab broadcast -> per-
     doc rollup. No window over the corpus, no self-training shuffles.
     """
-    pre = _word_arrays(docs, text_col, id_col)
-    occ = _bigram_occurrences(pre, id_col)
+    pre = _word_arrays(docs, "text", "doc_id")
+    occ = _bigram_occurrences(pre, "doc_id")
     joined = (
         occ.join(
             lm.bigrams,
@@ -166,11 +157,10 @@ def score_against_lm(
     )
     cb = F.coalesce(F.col("cb"), F.lit(0.0))
     cp = F.coalesce(F.col("cp"), F.lit(0.0))
-    neg_log2 = -F.log2((cb + alpha) / (cp + alpha * F.col("v")))
+    neg_log2 = -F.log2((cb + 0.5) / (cp + 0.5 * F.col("v")))
     avg = F.avg(neg_log2)
-    if round_dp is not None:
-        avg = F.round(avg, round_dp)
-    return joined.groupBy(id_col).agg(
+    avg = F.round(avg, 6)
+    return joined.groupBy("doc_id").agg(
         avg.alias("avg_neg_log2_bigram_prob"),
         F.count(F.lit(1)).alias("n_bigrams"),
     )
@@ -180,9 +170,6 @@ def quality_gate(
     docs: DataFrame,
     lm: LmIndex,
     max_avg_neg_log2: float,
-    alpha: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     gopher_kwargs: dict | None = None,
 ) -> DataFrame:
     """The combined batch gate — all input columns plus
@@ -193,14 +180,14 @@ def quality_gate(
     at production settings). Emits EVERY row with its verdict — the
     caller filters — so routed sinks can send rejects to a quarantine
     path instead of dropping them."""
-    flags = gopher_rules(F.col(text_col), **(gopher_kwargs or {}))
-    scores = score_against_lm(docs, lm, alpha, text_col, id_col)
+    flags = gopher_rules(F.col("text"), **(gopher_kwargs or {}))
+    scores = score_against_lm(docs, lm)
     passes_lm = F.coalesce(
         F.col("avg_neg_log2_bigram_prob") <= max_avg_neg_log2, F.lit(False)
     )
     return (
         docs.withColumn("passes_gopher", flags["passes_gopher"])
-        .join(scores, id_col, "left")
+        .join(scores, "doc_id", "left")
         .withColumn("n_bigrams", F.coalesce("n_bigrams", F.lit(0)))
         .withColumn("passes_lm", passes_lm)
         .withColumn(
@@ -217,13 +204,8 @@ def stream_quality_gate(
     out_path: str,
     checkpoint_dir: str,
     max_avg_neg_log2: float,
-    alpha: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     gopher_kwargs: dict | None = None,
     admit_only: bool = True,
-    fmt: str = "parquet",
-    trigger_available_now: bool = True,
 ):
     """Streaming ingest quality gate: every incoming document is scored
     against the frozen LM + Gopher rules and written exactly-once with
@@ -233,25 +215,18 @@ def stream_quality_gate(
     stateless ``foreachBatch`` + epoch-partitioned idempotent sink,
     identical restart semantics to the dedup gates (test-pinned)."""
     from fireball_data_processing_spark.streaming.sinks_stream import (
+        drain_stream,
         write_epoch_partition,
     )
 
-    stream = spark.readStream.schema(file_schema).format(fmt).load(source_dir)
+    stream = spark.readStream.schema(file_schema).parquet(source_dir)
 
     def _gate_and_write(batch_df: DataFrame, epoch_id: int) -> None:
         out = quality_gate(
-            batch_df, lm, max_avg_neg_log2, alpha, text_col, id_col,
-            gopher_kwargs,
+            batch_df, lm, max_avg_neg_log2, gopher_kwargs=gopher_kwargs
         )
         if admit_only:
             out = out.filter(F.col("passes_quality"))
         write_epoch_partition(out, epoch_id, out_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(_gate_and_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_stream(stream, _gate_and_write, checkpoint_dir)

@@ -25,14 +25,13 @@ histograms MERGEABLE by plain addition, which is the whole point:
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from fireball_data_processing_spark.streaming.sinks_stream import (
+    drain_stream,
     write_epoch_partition,
 )
 
@@ -71,7 +70,6 @@ def stream_histogram_sink(
     n_buckets: int,
     state_dir: str,
     checkpoint_dir: str,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Stream files from ``src_dir``, reduce each micro-batch to bucket
     counts, and append them as an epoch partition of the state table.
@@ -87,12 +85,7 @@ def stream_histogram_sink(
         )
 
     stream = spark.readStream.schema(schema).parquet(src_dir)
-    writer = stream.writeStream.foreachBatch(_sketch_epoch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_stream(stream, _sketch_epoch, checkpoint_dir)
 
 
 def read_stream_quantiles(
@@ -101,8 +94,6 @@ def read_stream_quantiles(
     lo: float,
     hi: float,
     n_buckets: int,
-    quantiles: Sequence[float] = (0.25, 0.5, 0.75, 0.9, 0.99),
-    round_dp: int = 6,
 ) -> DataFrame:
     """Current quantile estimates from the accumulated state: merge the
     per-epoch histograms by addition (order-insensitive integer sums),
@@ -123,7 +114,9 @@ def read_stream_quantiles(
         (F.sum("__cnt").over(cum_w) - F.col("__cnt")).alias("__cumprev"),
     )
     qdf = total.select(
-        F.explode(F.array(*[F.lit(float(q)) for q in quantiles])).alias("q"),
+        F.explode(
+            F.array(*[F.lit(q) for q in (0.25, 0.5, 0.75, 0.9, 0.99)])
+        ).alias("q"),
         "__n",
     ).select("q", (F.col("q") * F.col("__n")).alias("__r"), "__n")
     w = (hi - lo) / float(n_buckets)
@@ -139,7 +132,7 @@ def read_stream_quantiles(
         )
         .select(
             "q",
-            F.round(est, round_dp).alias("est"),
+            F.round(est, 6).alias("est"),
             F.col("__n").cast("bigint").alias("n"),
         )
     )

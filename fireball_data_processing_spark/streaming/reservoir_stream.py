@@ -53,8 +53,6 @@ def stream_weighted_reservoir(
     weight_col: str,
     n: int,
     salt: str = "",
-    round_dp: int = 12,
-    fmt: str = "parquet",
 ) -> DataFrame:
     """Streaming per-bucket weighted top-``n``. Output rows
     ``(bucket, step, doc_id, es_key)``: one reservoir snapshot per
@@ -94,7 +92,7 @@ def stream_weighted_reservoir(
         )
 
     stream = (
-        spark.readStream.schema(file_schema).format(fmt).load(source_dir)
+        spark.readStream.schema(file_schema).parquet(source_dir)
         .filter(F.col(weight_col) > 0)
         .select(
             F.col(bucket_col).cast("string").alias("bucket"),
@@ -104,7 +102,7 @@ def stream_weighted_reservoir(
                     hash_rank(F.col(id_col), salt),
                     F.lit(1.0) / F.col(weight_col),
                 ),
-                round_dp,
+                12,
             ).alias("__es"),
         )
     )

@@ -43,22 +43,17 @@ def stream_sprt_deltas(
     success: Column,
     out_path: str,
     checkpoint_dir: str,
-    fmt: str = "parquet",
-    trigger_available_now: bool = True,
-    max_files_per_trigger: int | None = None,
 ):
     """Reduce each micro-batch to per-group ``(group, dk, dn1)``
     sufficient-statistic deltas and append them exactly-once via the
     epoch-partitioned sink. The exchange per batch carries one row per
     (group x partition) partial — nothing row-sized leaves the batch."""
     from fireball_data_processing_spark.streaming.sinks_stream import (
+        drain_stream,
         write_epoch_partition,
     )
 
-    reader = spark.readStream.schema(file_schema).format(fmt)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.load(source_dir)
+    stream = spark.readStream.schema(file_schema).parquet(source_dir)
 
     def _reduce_and_write(batch_df: DataFrame, epoch_id: int) -> None:
         deltas = batch_df.groupBy(
@@ -71,14 +66,7 @@ def stream_sprt_deltas(
         )
         write_epoch_partition(deltas, epoch_id, out_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(_reduce_and_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_stream(stream, _reduce_and_write, checkpoint_dir)
 
 
 def sprt_monitor(

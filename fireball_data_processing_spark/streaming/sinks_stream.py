@@ -28,16 +28,34 @@ the overwrite makes the replay harmless.
 from __future__ import annotations
 
 import os
-from collections.abc import Mapping
+from collections.abc import Callable, Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 __all__ = [
+    "drain_stream",
     "write_epoch_partition",
     "idempotent_parquet_sink",
     "routed_parquet_sink",
 ]
+
+
+def drain_stream(
+    stream: DataFrame,
+    batch_fn: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Start ``batch_fn`` as the ``foreachBatch`` sink of ``stream`` and
+    drain the backlog (``availableNow``): every stream sink's one start
+    chain. Returns the started query; the caller awaits it."""
+    return (
+        stream.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def write_epoch_partition(batch_df: DataFrame, epoch_id: int, path: str) -> None:
@@ -51,9 +69,9 @@ def write_epoch_partition(batch_df: DataFrame, epoch_id: int, path: str) -> None
     value is inferred from the directory name on read, the same on-disk
     layout the earlier ``partitionBy("batch_id")`` +
     dynamic-partition-overwrite form produced, minus that form's
-    partitioned-write + per-partition commit machinery (guide §1.2/§6:
-    this sink runs once per micro-batch, so its fixed cost multiplies by
-    the epoch count; the swap is two filesystem metadata calls). The
+    partitioned-write + per-partition commit machinery (this sink runs
+    once per micro-batch, so its fixed cost multiplies by the epoch
+    count; the swap is two filesystem metadata calls). The
     swap — not a plain ``mode("overwrite")`` of the target dir — is
     load-bearing: overwrite deletes the target BEFORE the job runs, so a
     replayed batch whose frame derives from the sink's own output (the
@@ -79,19 +97,13 @@ def idempotent_parquet_sink(
     stream: DataFrame,
     path: str,
     checkpoint_dir: str,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Exactly-once parquet sink via epoch-partitioned overwrite."""
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda df, epoch: write_epoch_partition(df, epoch, path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return drain_stream(
+        stream,
+        lambda df, epoch: write_epoch_partition(df, epoch, path),
+        checkpoint_dir,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def routed_parquet_sink(
@@ -99,7 +111,6 @@ def routed_parquet_sink(
     routes: Mapping[str, Column],
     paths: Mapping[str, str],
     checkpoint_dir: str,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Fan one stream out to several parquet destinations in a single
     input pass per micro-batch.
@@ -126,11 +137,4 @@ def routed_parquet_sink(
         finally:
             batch_df.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_stream(stream, _write, checkpoint_dir)

@@ -46,6 +46,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 
 from fireball_data_processing_spark.operators.sharding import shard_id
+from fireball_data_processing_spark.streaming.sinks_stream import drain_stream
 
 __all__ = ["last_write_wins", "upsert_merge", "upsert_parquet_sink"]
 
@@ -91,8 +92,6 @@ def upsert_parquet_sink(
     key: str = "doc_id",
     order_col: str = "version",
     n_buckets: int = 64,
-    salt: str = "upsert",
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Maintain a keyed current-state parquet table from an upsert
     stream. See the module docstring for the per-batch mechanics."""
@@ -101,7 +100,7 @@ def upsert_parquet_sink(
         _ = epoch_id  # replay safety comes from merge idempotence
         spark = batch_df.sparkSession
         ups = last_write_wins(batch_df, key, order_col).withColumn(
-            _BUCKET, shard_id(F.col(key), n_buckets, salt)
+            _BUCKET, shard_id(F.col(key), n_buckets, "upsert")
         )
         ups = ups.persist()
         try:
@@ -133,11 +132,4 @@ def upsert_parquet_sink(
         finally:
             ups.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_stream(stream, _apply, checkpoint_dir)

@@ -28,7 +28,6 @@ def windowed_counts_stream(
     s: StreamSchema,
     window: str = "1 hour",
     watermark: str = "30 minutes",
-    fmt: str = "parquet",
 ) -> DataFrame:
     """Per (instance, tumbling window) counts/sums over a file stream.
 
@@ -37,7 +36,7 @@ def windowed_counts_stream(
     ``timestamp_seconds`` / native timestamps.
     """
     stream = normalize_event_time(
-        spark.readStream.schema(file_schema).format(fmt).load(source_dir),
+        spark.readStream.schema(file_schema).parquet(source_dir),
         s.ts_col,
     )
     if s.ts_unit == "nanos_long":

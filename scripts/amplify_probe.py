@@ -26,10 +26,11 @@ the probe that caught the round-6 sketch-inlining bug (README
 """
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BASE = "/root/testdata/sf0.1"
 SHIFT = 10_000_000

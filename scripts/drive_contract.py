@@ -6,7 +6,7 @@ Usage: python scripts/drive_contract.py [name_substring ...]
 With args, only queries whose name contains one of the substrings run
 (and the entry() smoke is skipped) — for fast dev iteration."""
 import os, sys, math
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 ONLY = [a for a in sys.argv[1:] if not a.startswith("-")]
 # override the comparison scale factor (driver uses sf0.01); e.g.
 #   DRIVE_SF_DIR=/root/testdata/sf0.1 python scripts/drive_contract.py bm25

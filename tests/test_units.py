@@ -350,6 +350,48 @@ def test_register_pandas_heuristic_roundtrip(spark):
     assert rows[3]["longest_view_streak"] == longest_view_streak(one)
 
 
+def test_heuristics_mean_delta_tie_matches_oracle(spark, tmp_path):
+    """Each user's two message->command gaps sum to an odd number of
+    microseconds, so the mean gap in seconds has a 5 in the 7th decimal:
+    a 6-dp tie. Averaging per-row float seconds lands on either side of it
+    depending on the engine; the exact microsecond mean rounds the same
+    way in the query and its oracle."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    gaps = [(294243409, 312483154), (954832915, 516461304), (822390326, 151194621)]
+    t0 = dt.datetime(2024, 1, 1)
+    rows = []
+    for user, (a, b) in enumerate(gaps):
+        t = t0 + dt.timedelta(days=user)
+        offsets = [0, a, a + 1000, a + 1000 + b]
+        for i, (etype, us) in enumerate(zip(["view", "purchase"] * 2, offsets)):
+            rows.append((10 * user + i, t + dt.timedelta(microseconds=us), user, etype))
+    schema = pa.schema([
+        ("event_id", pa.int64()), ("ts", pa.timestamp("us")), ("user_id", pa.int64()),
+        ("event_type", pa.string()), ("value", pa.float64()), ("props", pa.string()),
+    ])
+    cols = list(zip(*rows)) + [[1.0] * len(rows), ["{}"] * len(rows)]
+    pq.write_table(pa.table(cols, schema=schema), tmp_path / "events.parquet")
+
+    spec = catalog.REGISTRY["heuristics_matrix"]
+    got = spec.fn(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')"
+    )
+    want = con.execute(spec.oracle).fetchdf()
+    con.close()
+    col = "avg_time_between_message_and_command"
+    assert dict(zip(got["user_id"], got[col])) == {
+        0: 303.363282, 1: 735.64711, 2: 486.792474
+    }
+    assert dict(zip(want["user_id"], want[col])) == dict(zip(got["user_id"], got[col]))
+
+
 def test_simhash_wide_bits_are_populated(spark):
     from fireball_data_processing_spark.operators.dedup import simhash
 
