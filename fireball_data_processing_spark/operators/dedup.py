@@ -265,8 +265,8 @@ def minhash_sig_expr(sh: Column, num_hashes: int) -> Column:
 def band_structs(num_hashes: int, band_size: int) -> Column:
     """``array<struct<band_idx,band_key>>`` banding expression over the
     ``mh{i}`` columns of :func:`minhash_signature` — the ONE definition of
-    how signatures map to LSH buckets, shared by the batch self-join, the
-    grouped bucket form, and the streaming gate's index."""
+    how signatures map to LSH buckets, shared by the batch self-join and
+    the streaming gate's index."""
     return F.array(
         *[
             F.struct(
@@ -292,7 +292,7 @@ def build_minhash_index(df: DataFrame, path: str) -> DataFrame:
     Writes the per-doc signature AND distinct shingle set to parquet and
     returns the re-read table: the 100-TB corpus is scanned and shingled
     exactly once, and every downstream consumer (banded candidate
-    generation — use ``lsh_candidate_pairs(grouped=True)`` here — and
+    generation — ``lsh_candidate_pairs(index)`` — and
     Jaccard verification via ``jaccard_pairs(shingle_sets=...)``) reads the
     compact index instead of re-executing the shingling pipeline.
 
@@ -315,68 +315,34 @@ def lsh_candidate_pairs(
     id_col: str = "doc_id",
     num_hashes: int = 8,
     band_size: int = 2,
-    grouped: bool = False,
 ) -> DataFrame:
     """Banded LSH: docs sharing any band of ``band_size`` consecutive
     min-hashes become a candidate pair (id_a < id_b), deduplicated across
-    bands. Pairs are confined to (band_idx, band_key) buckets either way —
-    never corpus².
+    bands. Pairs are confined to (band_idx, band_key) buckets — never
+    corpus².
 
-    Two formulations, same result:
+    One equi-self-join on the band key. The optimizer picks broadcast
+    (small signature table) or sort-merge (big one); the join keys ARE the
+    bucket, so output stays bucket-bounded. The (id, band_idx, band_key)
+    table feeds BOTH join sides; at corpus scale it is pinned
+    (:func:`_pin_if_large`) so the upstream signature pipeline (scan ->
+    shingle explode -> minhash aggregate) executes once instead of once
+    per side — the pinned frame is doc×n_bands grain, orders of magnitude
+    narrower than the corpus. At local/bench scale the gate declines the
+    pin (the duplicated subtrees execute concurrently and cost less than
+    serializing behind a cache materialization — measured +50% at sf0.1),
+    keeping the small-scale plan unchanged. Over a materialized index
+    (``build_minhash_index``) an unpinned side re-reads compact parquet,
+    not the shingling pipeline.
 
-    - default (``grouped=False``): equi-self-join on the band key. The
-      optimizer picks broadcast (small signature table) or sort-merge (big
-      one); the join keys ARE the bucket, so output stays bucket-bounded.
-      Right when signatures flow straight from ``minhash_signature`` in a
-      one-shot pipeline. The (id, band_idx, band_key) table feeds BOTH
-      join sides; at corpus scale it is pinned (:func:`_pin_if_large`)
-      so the upstream signature pipeline (scan -> shingle explode ->
-      minhash aggregate) executes once instead of once per side — the
-      pinned frame is doc×n_bands grain, orders of magnitude narrower
-      than the corpus. At local/bench scale the gate declines the pin
-      (the duplicated subtrees execute concurrently and cost less than
-      serializing behind a cache materialization — measured +50% at
-      sf0.1), keeping the small-scale plan unchanged.
-    - ``grouped=True``: one shuffle on the band key collects each bucket's
-      sorted id list and the i<j pairs explode locally inside the bucket —
-      the banded table is consumed exactly ONCE. Right when ``sigs`` is a
-      materialized signature table (see ``build_minhash_index``): at
-      billion-doc scale this halves the shuffle volume vs the self-join.
-
-    In-bucket work is quadratic in bucket size in both forms — bounded by
-    the LSH design (a hot band key is a near-duplicate cluster, exactly
-    what the bands exist to confine).
+    In-bucket work is quadratic in bucket size — bounded by the LSH design
+    (a hot band key is a near-duplicate cluster, exactly what the bands
+    exist to confine).
     """
     bands = band_structs(num_hashes, band_size)
     banded = sigs.select(F.col(id_col), F.explode(bands).alias("band")).select(
         F.col(id_col), F.col("band.band_idx"), F.col("band.band_key")
     )
-    if grouped:
-        buckets = (
-            banded.groupBy("band_idx", "band_key")
-            .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("__ids"))
-            .filter(F.size("__ids") > 1)
-        )
-        # all ordered pairs within the bucket: ids[i] < ids[j] for i < j
-        # holds because the list is sorted
-        pair_structs = F.flatten(
-            F.transform(
-                F.col("__ids"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("__ids"), i + 2, F.size(F.col("__ids"))),
-                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                ),
-            )
-        )
-        return (
-            buckets.select(F.explode(pair_structs).alias("p"))
-            .select(F.col("p.id_a"), F.col("p.id_b"))
-            # positional i<j admits id_a == id_b if the caller's frame has
-            # duplicate ids; the value filter keeps parity with the
-            # self-join form's strict < condition
-            .filter(F.col("id_a") < F.col("id_b"))
-            .distinct()
-        )
     # Both sides of the self-join read the banded table; at corpus
     # scale pin it so the upstream signature pipeline executes once
     # (gate rationale in _pin_if_large).
@@ -514,10 +480,17 @@ def ngram_overlap(
     )
 
 
+# Round from which connected_components adds pointer jumping. The
+# four CC queries converge and confirm in 3 plain rounds at sf0.1; a
+# jump in every round measured 15-35% slower there and saved none of
+# them, while a chain graph needs the jumps to close in O(log diameter)
+# rounds.
+_JUMP_FROM_ROUND = 4
+
+
 def connected_components(
     pairs: DataFrame,
     max_iter: int = 25,
-    shortcut: bool = False,
 ) -> DataFrame:
     """Connected components over a pair list -> ``(vertex, component)``
     with the component labeled by its minimum vertex id. The survivor-
@@ -530,14 +503,13 @@ def connected_components(
     self-loop edges, so a round is ONE join + ONE aggregate); converged
     when a round changes nothing — detected by the label SUM going flat
     (labels only decrease, so an unchanged sum means an unchanged
-    labeling). Rounds needed = cluster diameter — small for near-dup
+    labeling). Plain rounds needed = cluster diameter — small for near-dup
     clusters (pairs share LSH buckets, so clusters are dense). This is a
     genuinely iterative algorithm (Spark has no recursive SQL):
     per-round ``localCheckpoint`` truncates the lineage, which would
     otherwise grow exponentially, and the convergence probe is one tiny
     aggregate action per round — driver-side control flow, executor-side
-    data. ``max_iter`` guards pathological chain graphs; raises if
-    unconverged.
+    data. ``max_iter`` bounds the rounds; raises if unconverged.
 
     Action economics: the checkpoints after the edge frame
     are LAZY (``eager=False``), so each round runs exactly ONE Spark
@@ -556,23 +528,21 @@ def connected_components(
     cannot reuse a checkpointed layout and the repartition would be a
     pure extra exchange.
 
-    **Escape hatch for chain-shaped graphs** (``max_iter`` exceeded, or
-    known-adversarial inputs): ``shortcut=True`` adds pointer jumping —
-    after each propagation round every label is replaced by its OWN
-    label (``component := component[component]``, one label⋈label
-    self-join), so label chains halve each round and convergence drops
-    from O(diameter) to O(log diameter) rounds: a million-vertex path
-    finishes in ~20 rounds instead of a million. The per-round cost adds
-    one join of two label-sized frames; for typical LSH near-dup graphs
-    (dense, tiny diameter) plain propagation does fewer total shuffles,
-    which is why shortcutting is opt-in. The shuffle-optimal published
-    alternative at adversarial extreme scale is alternating
-    large-star/small-star (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC '14) — the same O(log) round bound via
-    edge relinking; pointer jumping is implemented here instead because
-    it reuses the label frame this loop already maintains and keeps one
-    code path. Both modes return identical (vertex, min-id component)
-    output.
+    **Pointer jumping for chain-shaped graphs**: from round
+    ``_JUMP_FROM_ROUND`` on, each propagation round also replaces every
+    label by the previous round's label OF that label (``component :=
+    labels[component]``, one label⋈label join), so label chains halve
+    each round and convergence drops from O(diameter) to O(log
+    diameter) rounds: a 64-vertex path closes in 8 rounds instead of 64,
+    a million-vertex path in 22 instead of a million. Dense LSH near-dup
+    graphs converge in the plain rounds before the jump starts, so they
+    pay no extra join. The shuffle-optimal published alternative at
+    adversarial extreme scale is alternating large-star/small-star
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC '14) — the same O(log) round bound via edge relinking; pointer
+    jumping is used here because it reuses the label frame this loop
+    already maintains. Output is the (vertex, min-id component)
+    labeling either way.
     """
     # ONE traversal of the pairs subtree: both edge directions come out of
     # a single explode instead of a two-branch union that re-executed the
@@ -630,32 +600,33 @@ def connected_components(
     # can never equal a non-empty round's decimal sum, and an EMPTY edge
     # set sums to NULL (None) in round 1 and returns immediately.
     prev_sum = None
-    for _ in range(max_iter):
+    for rnd in range(1, max_iter + 1):
         updated = (
             e_all.join(labels, e_all["dst"] == labels["vertex"])
             .groupBy("src")
             .agg(F.min("component").alias("component"))
             .select(F.col("src").alias("vertex"), "component")
-            .localCheckpoint(eager=False)
         )
-        if shortcut:
-            # pointer jump: component := component's own label. A label
-            # value is always a vertex id present in `updated` (labels
-            # start as vertex ids and only min-fold over them), so the
-            # left join always matches; coalesce is belt-and-braces.
-            # Jump-only progress still moves the label sum down, so the
-            # convergence probe sees it.
-            l2 = updated.select(
-                F.col("vertex").alias("__v2"), F.col("component").alias("__c2")
+        if rnd >= _JUMP_FROM_ROUND:
+            # pointer jump: component := the previous round's label of
+            # the component vertex. A label value is always a vertex id
+            # present in `labels` (labels start as vertex ids and only
+            # min-fold over them), so the left join always matches;
+            # coalesce is belt-and-braces. The jump reads `labels`,
+            # which the previous round's probe already materialized, not
+            # this round's frame: a lazy checkpoint of it read by both
+            # join sides would have two consumers in one job (the hazard
+            # that makes `e` eager).
+            l2 = labels.select(
+                F.col("vertex").alias("__v2"),
+                F.col("component").alias("__c2"),
             )
-            updated = (
-                updated.join(l2, updated["component"] == l2["__v2"], "left")
-                .select(
-                    "vertex",
-                    F.coalesce("__c2", "component").alias("component"),
-                )
-                .localCheckpoint(eager=False)
+            updated = updated.join(
+                l2, updated["component"] == l2["__v2"], "left"
+            ).select(
+                "vertex", F.coalesce("__c2", "component").alias("component")
             )
+        updated = updated.localCheckpoint(eager=False)
         new_sum = _label_sum(updated)
         labels = updated
         if new_sum == prev_sum:
@@ -663,8 +634,7 @@ def connected_components(
         prev_sum = new_sum
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds; "
-        "the pair graph has a longer chain than expected — raise max_iter "
-        "or pass shortcut=True (pointer jumping: O(log diameter) rounds)"
+        "raise max_iter"
     )
 
 
@@ -850,7 +820,6 @@ def line_dedup(
     min_docs: int = 2,
     keep_first: bool = True,
     text_col: str = "text",
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Cross-document line/segment deduplication — the C4 / RefinedWeb
     pipeline stage (Raffel et al. 2020 removed any three-sentence span
@@ -870,38 +839,19 @@ def line_dedup(
     dense_rank counts distinct docs with no per-group set buffer; min
     over the partition elects the keeper) -> per-doc rollup. Two
     shuffles total (segment-hash key, then doc key); candidate volume
-    is corpus segments, never pairs. At 100 TB the segment-hash
-    exchange partitions on md5 — uniform by construction ACROSS
-    segments, but a single ultra-hot boilerplate segment (one segment in
-    10^9 docs) still lands on one reducer: for adversarial corpora pass
-    ``skew_safe=True``, which computes the per-segment stats with a
-    two-stage groupBy — the (hash, doc) composite first key spreads the
-    hot segment across reducers, the second stage combines tiny partial
-    counts map-side — and LEFT-joins the one-row-per-segment stats table
-    back (a hash-join probe is skew-indifferent). Identical output,
-    one extra exchange; the window form stays the default because it
-    avoids the join on normal corpora.
+    is corpus segments, never pairs. The segment-hash exchange
+    partitions on md5, uniform by construction ACROSS segments; a
+    single ultra-hot boilerplate segment still lands on one reducer,
+    whose window buffer spills to disk instead of failing.
     """
     segs = aligned_segments(docs, seg_words, text_col).withColumn(
         "__h", F.md5(F.col("segment"))
     )
-    if skew_safe:
-        stats = (
-            segs.select("__h", "doc_id")
-            .distinct()
-            .groupBy("__h")
-            .agg(
-                F.count(F.lit(1)).alias("__nd"),
-                F.min("doc_id").alias("__keeper"),
-            )
-        )
-        marked = segs.join(stats, "__h", "left")
-    else:
-        w_rank = Window.partitionBy("__h").orderBy("doc_id")
-        w_seg = Window.partitionBy("__h")
-        n_docs = F.max(F.dense_rank().over(w_rank)).over(w_seg)
-        keeper = F.min("doc_id").over(w_seg)
-        marked = segs.withColumn("__nd", n_docs).withColumn("__keeper", keeper)
+    w_rank = Window.partitionBy("__h").orderBy("doc_id")
+    w_seg = Window.partitionBy("__h")
+    n_docs = F.max(F.dense_rank().over(w_rank)).over(w_seg)
+    keeper = F.min("doc_id").over(w_seg)
+    marked = segs.withColumn("__nd", n_docs).withColumn("__keeper", keeper)
     removed = F.col("__nd") >= min_docs
     if keep_first:
         removed = removed & (F.col("doc_id") != F.col("__keeper"))

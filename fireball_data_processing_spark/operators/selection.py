@@ -107,9 +107,8 @@ def budget_fill(
     # domain_budget_fill composition that upstream includes regex-heavy
     # per-row feature math. Bucket-projection-sized, LRU-evictable.
     #
-    # The score_percentile_gate bucketed path now pre-partitions
-    # its pin on the consumers' clustering key (see there); the same
-    # rewrite was A/B'd HERE and rejected — domain_budget_fill read
+    # Pre-partitioning the pin on the consumers' clustering key
+    # (bucket) was A/B'd here and rejected — domain_budget_fill read
     # +0.0/+0.4 s and token_budget_fill +0.05/+0.18 s across two
     # interleaved passes (the pinned frame's REPARTITION_BY_COL cannot
     # be AQE-coalesced inside a cache, so at toy scale the downstream
@@ -281,10 +280,6 @@ def score_percentile_gate(
     group_col: str,
     keep_frac: float = 0.75,
     ascending: bool = True,
-    bucketed: bool = False,
-    n_buckets: int = 64,
-    score_lo: float = 0.0,
-    score_hi: float = 1.0,
 ) -> DataFrame:
     """Per-group percentile gate: keep each group's best ``keep_frac``
     slice by ``score_col`` (``ascending=True`` keeps the LOWEST scores —
@@ -301,123 +296,17 @@ def score_percentile_gate(
 
     Scale shape: ONE window, partitioned by the group — parallel across
     groups (domain taxonomies run dozens to thousands of partitions). A
-    single colossal group serializes through one task; at that shape,
-    pass ``bucketed=True`` for the two-phase bucketed rank (the
-    :func:`budget_fill` idiom): rows coarse-bucket by a clamped linear
-    map of the score into ``[score_lo, score_hi)`` (no shuffle), one
-    aggregate produces per-(group, bucket) counts — groups x n_buckets
-    rows, bounded — whose running offsets in rank direction BROADCAST
-    back, and the per-row rank is then a window partitioned by
-    (group, bucket): parallel WITHIN each group, no single-task group
-    serialization. Because equal scores always land in the same bucket,
-    ``offset + in-bucket RANK()`` reconstructs the group-global tied
-    rank exactly, so the emitted ``pctl`` — (rank-1)/(n-1) — is
-    IDENTICAL to the plain path's percent_rank for every row and any
-    ``n_buckets`` (output-identity test-pinned; clamping only affects
-    bucket balance, never correctness). Scores outside
-    [score_lo, score_hi) clamp to the boundary buckets.
+    single colossal group sorts in one task; the bucketed-rank idiom
+    that spreads one ordering over many tasks is
+    ``operators.windows.two_phase_global_rank`` (and :func:`budget_fill`).
     """
     order = F.asc(score_col) if ascending else F.desc(score_col)
-    if not bucketed:
-        w = Window.partitionBy(group_col).orderBy(order)
-        return (
-            scored.withColumn(
-                "pctl", F.round(F.percent_rank().over(w), 6)
-            )
-            .filter(F.col("pctl") <= keep_frac)
-        )
-
-    if not score_hi > score_lo:
-        raise ValueError("score_hi must exceed score_lo")
-    span = float(score_hi) - float(score_lo)
-    # NULL and NaN must land where Spark's sort puts them, or the
-    # bucket join would silently DROP them (null bucket matches
-    # nothing) while the plain path ranks them: ASC is NULLS FIRST and
-    # NaN-greatest, DESC is NULLS LAST and NaN-first — in BOTH
-    # directions null behaves as the smallest value (bucket 0) and NaN
-    # as the largest (bucket n_buckets-1), and the in-bucket ORDER BY
-    # then reproduces the exact boundary behavior among same-bucket
-    # neighbors (identity test covers both).
-    raw = F.floor(
-        (F.col(score_col) - F.lit(float(score_lo)))
-        / F.lit(span)
-        * F.lit(n_buckets)
-    ).cast("int")
-    clamped = F.least(F.lit(n_buckets - 1), F.greatest(F.lit(0), raw))
-    is_float = dict(scored.dtypes).get(score_col) in ("float", "double")
-    bucket = F.when(F.col(score_col).isNull(), F.lit(0)).otherwise(
-        F.when(F.isnan(F.col(score_col)), F.lit(n_buckets - 1)).otherwise(
-            clamped
-        )
-        if is_float
-        else clamped
-    )
-    # the bucketed frame feeds TWO physical branches (the phase-1 offsets
-    # aggregate and the phase-2 join probe); without a pin each branch
-    # re-executes the caller's whole upstream pipeline — for
-    # curriculum_stages that upstream is the full bigram-LM score plan
-    # (measured 2.6 s -> 1.6 s on curriculum_stages at sf0.1).
-    #
-    # The pinned frame is hash-partitioned on (group, __b) —
-    # the key BOTH consumers cluster by (phase-1 groupBy and phase-2
-    # in-bucket rank window) — so neither adds its own exchange; the
-    # row-grain stream is shuffled once, into the cache fill (plan
-    # fact: plans/r13/curriculum_stages_{before,after}.txt).
-    with_b = (
-        scored.withColumn("__b", bucket)
-        .repartition(F.col(group_col), F.col("__b"))
-        .persist()
-    )
-    # phase 1: per-(group, bucket) counts — groups x n_buckets rows.
-    # Offsets accumulate in RANK DIRECTION (ascending keeps low scores
-    # first, so low buckets precede; descending reverses), and the one
-    # unpartitioned-window hazard is gone: this window runs over the
-    # bounded counts frame, partitioned by group.
-    border = F.asc("__b") if ascending else F.desc("__b")
-    woff = (
-        Window.partitionBy(group_col)
-        .orderBy(border)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    wtot = Window.partitionBy(group_col)
-    offsets = (
-        with_b.groupBy(group_col, "__b")
-        .agg(F.count(F.lit(1)).alias("__bn"))
-        .select(
-            group_col,
-            "__b",
-            F.coalesce(F.sum("__bn").over(woff), F.lit(0)).alias("__off"),
-            F.sum("__bn").over(wtot).alias("__n"),
-        )
-    )
-    # phase 2: in-bucket tied rank + broadcast offset = group-global
-    # RANK(); percent_rank = (rank-1)/(n-1), 0 for singleton groups
-    # (Spark's percent_rank convention). The group-key join must be
-    # NULL-SAFE: a NULL group key is its own partition in the plain
-    # path's window (and in phase 1's groupBy/window here), but a plain
-    # equi-join on the key would never match it — silently dropping
-    # every null-group row the plain path ranks (identity test covers
-    # the null group in both directions).
-    off = offsets.select(
-        F.col(group_col).alias("__og"),
-        F.col("__b").alias("__ob"),
-        "__off",
-        "__n",
-    )
-    win = Window.partitionBy(group_col, "__b").orderBy(order)
-    rank = F.col("__off") + F.rank().over(win)
-    pctl = F.when(F.col("__n") > 1, (rank - 1) / (F.col("__n") - 1)).otherwise(
-        F.lit(0.0)
-    )
+    w = Window.partitionBy(group_col).orderBy(order)
     return (
-        with_b.join(
-            F.broadcast(off),
-            F.col(group_col).eqNullSafe(F.col("__og"))
-            & (F.col("__b") == F.col("__ob")),
+        scored.withColumn(
+            "pctl", F.round(F.percent_rank().over(w), 6)
         )
-        .withColumn("pctl", F.round(pctl, 6))
         .filter(F.col("pctl") <= keep_frac)
-        .select(*scored.columns, "pctl")
     )
 
 

@@ -27,20 +27,11 @@ Reference parity: the reference has no similarity join at all — this is
 part of the training-data-pipeline surface (task brief: "n-gram
 Jaccard" dedup) built Spark-first.
 
-Escalation path for HIGH-COLLISION corpora (tiny vocabularies, heavy
-templating — where every shingle is common and prefix filtering alone
-degrades): PPJoin's positional filter, wired behind ``positional=True``
-— carry each prefix shingle's rank, take the FIRST shared prefix
-shingle in the global (df, shingle) order (for any qualifying pair the
-globally-minimal shared shingle provably sits inside both prefixes, and
-rank-within-doc is monotone in the global order, so ``min(rank_a)`` and
-``min(rank_b)`` name the same shingle), bound the overlap by
-``1 + min(|A|-rankA, |B|-rankB)`` and drop pairs whose bound misses the
-minimum overlap ``ceil(t/(1+t)*(|A|+|B|))``. Lossless. Measured on the
-synthetic sf0.1 corpus it prunes candidates 2.5x (310k -> 125k) but the
-per-pair aggregate costs more than the verification it saves at toy
-scale, so the DEFAULT stays off; at billion-doc scale with long
-verification arrays the trade flips — flip the flag, not the code.
+Candidates pass two lossless filters, prefix and length
+(``tau <= |A|/|B| <= 1/tau``), and are then verified exactly. PPJoin's
+positional filter is not used: on the synthetic sf0.1 corpus it pruned
+candidates 2.5x (310k -> 125k), but its per-pair aggregate cost more
+than the verification it saved.
 """
 
 from __future__ import annotations
@@ -66,18 +57,11 @@ def shingle_sets(docs: DataFrame, k: int = 3) -> DataFrame:
 def prefix_candidates(
     sets: DataFrame,
     threshold: float,
-    positional: bool = False,
     pins: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Candidate ``(id_a, id_b)`` pairs via prefix filtering + length
     filter. Lossless for Jaccard >= ``threshold``: the returned set is a
     superset of the true result and a (usually tiny) subset of all pairs.
-
-    ``positional=True`` adds PPJoin's positional filter (Xiao et al.
-    2008 §3.2): still lossless, prunes the candidate set further
-    (measured 2.5x on the synthetic corpus) at the cost of a per-pair
-    aggregate — worth it when verification arrays are long (see module
-    docstring for the trade analysis).
 
     The prefix table feeds BOTH sides of the pair self-join, so it is
     persisted — without the pin each side re-executes the whole
@@ -125,13 +109,11 @@ def prefix_candidates(
     a = pre.select(
         F.col("doc_id").alias("id_a"),
         F.col("shingle"),
-        F.col("__rn").alias("__ra"),
         F.col("__n").alias("__na"),
     )
     b = pre.select(
         F.col("doc_id").alias("id_b"),
         F.col("shingle"),
-        F.col("__rn").alias("__rb"),
         F.col("__n").alias("__nb"),
     )
     # length filter: Jaccard >= tau forces tau <= |A|/|B| <= 1/tau
@@ -140,32 +122,13 @@ def prefix_candidates(
         & (F.col("__nb") * threshold <= F.col("__na"))
         & (F.col("__na") * threshold <= F.col("__nb"))
     )
-    if not positional:
-        return joined.select("id_a", "id_b").distinct()
-    # Positional filter: the groupBy doubles as the pair dedup (no extra
-    # exchange vs the .distinct() above — same shuffle key). min(__ra)
-    # and min(__rb) name the SAME shingle (rank is monotone in the global
-    # (df, shingle) order restricted to each doc), so the bound below is
-    # the classic "first shared prefix token" bound.
-    pairs = joined.groupBy("id_a", "id_b", "__na", "__nb").agg(
-        F.min("__ra").alias("__min_ra"), F.min("__rb").alias("__min_rb")
-    )
-    ubound = 1 + F.least(
-        F.col("__na") - F.col("__min_ra"), F.col("__nb") - F.col("__min_rb")
-    )
-    # min required overlap ceil(t/(1+t)*(na+nb)); same downward FP nudge
-    alpha = F.ceil(
-        F.lit(threshold / (1.0 + threshold)) * (F.col("__na") + F.col("__nb"))
-        - F.lit(1e-9)
-    )
-    return pairs.filter(ubound >= alpha).select("id_a", "id_b")
+    return joined.select("id_a", "id_b").distinct()
 
 
 def set_similarity_join(
     docs: DataFrame,
     threshold: float = 0.5,
     k: int = 3,
-    positional: bool = False,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """EXACT Jaccard threshold self-join over word ``k``-shingle sets.
@@ -183,10 +146,6 @@ def set_similarity_join(
     extra scheduler rounds); at corpus scale it is the difference
     between materializing arrays for 0.1% of documents and for all of
     them, so the candidate-bounded form is the only path.
-
-    ``positional=True`` enables the (lossless) PPJoin positional filter
-    in candidate generation — output-identical, fewer candidates, one
-    extra per-pair aggregate; see :func:`prefix_candidates`.
 
     ``checkpoint_dir``: by default the result is forced via
     ``localCheckpoint(eager=True)`` — executor-LOCAL storage, which a
@@ -230,9 +189,7 @@ def set_similarity_join(
         # the candidate list has TWO consumers below (the id semi join and
         # the verification join) and is pair-count-sized — pin it, or the
         # whole prefix pipeline re-executes per consumer
-        cands = prefix_candidates(
-            sets, threshold, positional=positional, pins=pins
-        ).persist()
+        cands = prefix_candidates(sets, threshold, pins=pins).persist()
         # verification arrays ONLY for docs that appear in some candidate
         # pair — at corpus scale candidates are a sliver of the corpus
         # (0.6% of pairs on the synthetic data), so materializing sorted

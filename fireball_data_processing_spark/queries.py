@@ -8737,14 +8737,13 @@ FROM ranked GROUP BY 1, 2
 @query("curriculum_stages", _CURRICULUM_ORACLE)
 def q_curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curriculum construction (operators/selection.py
-    score_percentile_gate, bucketed path): per-language documents split
-    into 4 difficulty stages by exact percent-rank of their bigram-LM
+    score_percentile_gate): per-language documents split into 4
+    difficulty stages by exact percent-rank of their bigram-LM
     cross-entropy (easy fluent text first, hard tail last — the
-    perplexity-ordered curriculum recipe). The per-row rank uses the
-    BUCKETED two-phase fallback (keep_frac=1 emits every row with its
-    exact pctl), so a colossal language never serializes through one
-    task — this query is the identity test's production twin. Output is
-    the bounded (lang, stage) datasheet with per-stage score bounds."""
+    perplexity-ordered curriculum recipe). keep_frac=1 emits every row
+    with its exact pctl from one window partitioned by language. Output
+    is the bounded (lang, stage) datasheet with per-stage score
+    bounds."""
     from fireball_data_processing_spark.functions.textstats import (
         bigram_logprob,
     )
@@ -8760,8 +8759,7 @@ def q_curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("lang", "score")
     )
     ranked = score_percentile_gate(
-        scored, "score", "lang", keep_frac=1.0, ascending=True,
-        bucketed=True, n_buckets=64, score_lo=0.0, score_hi=20.0,
+        scored, "score", "lang", keep_frac=1.0, ascending=True
     )
     stage = F.least(
         F.floor(F.col("pctl") * 4).cast("int") + 1, F.lit(4)

@@ -614,73 +614,6 @@ def test_rp_ivf_plan_scale_shape(spark):
     assert plan.count("WindowGroupLimit") >= 2, plan
 
 
-def test_percentile_gate_bucketed_output_identity(spark):
-    """The bucketed two-phase rank (the colossal-group fallback) must
-    emit EXACTLY the plain path's rows and pctl values — for any
-    n_buckets (1 = everything in one bucket degenerates to the plain
-    shape; 64 = fine-grained), either direction, with ties, singleton
-    groups, and scores outside the [score_lo, score_hi) clamp range."""
-    import random
-
-    rng = random.Random(13)
-    rows = []
-    i = 0
-    # None: a NULL group key is its own partition in the plain path's
-    # window — the bucketed path's phase-2 join must be null-safe or it
-    # silently drops the whole null group (regression: ADVICE r6)
-    for g, n in [("a", 37), ("b", 11), ("solo", 1), (None, 9)]:
-        for _ in range(n):
-            # ties (coarse grid) + values outside [0, 1)
-            rows.append((i, g, round(rng.choice([-0.5, 0.0, 0.1, 0.25, 0.25,
-                                                 0.7, 0.99, 1.0, 1.7]), 6)))
-            i += 1
-    df = spark.createDataFrame(rows, "id long, grp string, score double")
-
-    for ascending in (True, False):
-        plain = {
-            (r["id"], r["pctl"])
-            for r in score_percentile_gate(
-                df, "score", "grp", keep_frac=0.6, ascending=ascending
-            ).collect()
-        }
-        for n_buckets in (1, 3, 64):
-            got = {
-                (r["id"], r["pctl"])
-                for r in score_percentile_gate(
-                    df, "score", "grp", keep_frac=0.6, ascending=ascending,
-                    bucketed=True, n_buckets=n_buckets,
-                ).collect()
-            }
-            assert got == plain, (ascending, n_buckets)
-
-
-def test_percentile_gate_bucketed_no_unpartitioned_row_window(spark):
-    """The fallback's reason to exist: the per-row rank window is
-    partitioned by (group, bucket) — the only group-wide computation is
-    the bounded counts aggregate. Pin that no window in the plan orders
-    the full per-row frame by a lone group key (the serialization the
-    plain path hits on a colossal group)."""
-    df = spark.createDataFrame(
-        [(i, "g", float(i % 7) / 7) for i in range(50)],
-        "id long, grp string, score double",
-    )
-    s = _explain(
-        score_percentile_gate(df, "score", "grp", bucketed=True, n_buckets=8)
-    )
-    # every per-row rank window must carry the bucket in its partition
-    # spec; windows partitioned by the group alone may only exist on the
-    # bounded counts frame (they aggregate __bn, the bucket counts)
-    rank_windows = [ln for ln in s.splitlines() if "rank(" in ln]
-    assert rank_windows, s
-    assert all("__b" in ln for ln in rank_windows), s
-    group_only = [
-        ln
-        for ln in s.splitlines()
-        if "windowspecdefinition(grp#" in ln and "__b" not in ln
-    ]
-    assert all("__bn" in ln for ln in group_only), s
-
-
 def test_rp_ivf_prebuilt_centroids_match_inline_fit(spark):
     """The amortized path: passing a prior fit's centroids must skip the
     Lloyd rounds and produce the identical result (the
@@ -791,12 +724,7 @@ def test_round6_operators_handle_empty_inputs(spark):
     empty_scored = spark.createDataFrame(
         [], "id long, grp string, score double"
     )
-    assert (
-        score_percentile_gate(
-            empty_scored, "score", "grp", bucketed=True, n_buckets=4
-        ).count()
-        == 0
-    )
+    assert score_percentile_gate(empty_scored, "score", "grp").count() == 0
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     lm = corpus_lm_index(docs)
@@ -804,52 +732,6 @@ def test_round6_operators_handle_empty_inputs(spark):
     gated = quality_gate(empty_docs, lm, 5.0)
     assert gated.count() == 0
     assert "passes_quality" in gated.columns
-
-
-def test_percentile_gate_bucketed_null_and_nan_parity(spark):
-    """NULL and NaN scores must survive the bucketed path and rank
-    exactly where the plain percent_rank puts them (ASC: nulls first,
-    NaN last; DESC: NaN first, nulls last) — a null bucket key would
-    silently drop them at the join."""
-    rows = [
-        (0, "g", 0.5), (1, "g", None), (2, "g", float("nan")),
-        (3, "g", 0.1), (4, "g", 0.9), (5, "g", 0.5),
-        (6, "h", None), (7, "h", 0.3),
-    ]
-    df = spark.createDataFrame(rows, "id long, grp string, score double")
-    for ascending in (True, False):
-        plain = {
-            (r["id"], r["pctl"])
-            for r in score_percentile_gate(
-                df, "score", "grp", keep_frac=1.0, ascending=ascending
-            ).collect()
-        }
-        assert len(plain) == len(rows)  # keep_frac=1 keeps everything
-        for n_buckets in (1, 4):
-            got = {
-                (r["id"], r["pctl"])
-                for r in score_percentile_gate(
-                    df, "score", "grp", keep_frac=1.0, ascending=ascending,
-                    bucketed=True, n_buckets=n_buckets,
-                ).collect()
-            }
-            assert got == plain, (ascending, n_buckets)
-    # integer scores must not trip the isnan guard
-    di = spark.createDataFrame(
-        [(0, "g", 1), (1, "g", 5), (2, "g", 3)], "id long, grp string, score int"
-    )
-    got_i = {
-        (r["id"], r["pctl"])
-        for r in score_percentile_gate(
-            di, "score", "grp", keep_frac=1.0, bucketed=True, n_buckets=4,
-            score_lo=0.0, score_hi=6.0,
-        ).collect()
-    }
-    want_i = {
-        (r["id"], r["pctl"])
-        for r in score_percentile_gate(di, "score", "grp", keep_frac=1.0).collect()
-    }
-    assert got_i == want_i
 
 
 def test_pq_codebooks_and_code_shape(spark):

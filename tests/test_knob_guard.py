@@ -1,0 +1,115 @@
+"""Guard against knob creep: every defaulted parameter of a package
+function must be set by some call in the repo, or it is a constant
+dressed up as an option.
+
+The scan is pure AST (no Spark). Calls are read from the package,
+``tests/``, ``scripts/``, ``bench.py``, ``fbbench/`` and
+``__spark_entry__.py`` and matched to definitions by name. A class call
+counts as a call to its ``__init__``; a call with ``*args`` or
+``**kwargs`` sets every parameter; ``functools.partial(f, ...)`` counts
+as a call to ``f``.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = ROOT / "fireball_data_processing_spark"
+CALLERS = [PACKAGE, ROOT / "tests", ROOT / "scripts", ROOT / "fbbench",
+           ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+
+# A deployment setting and the three escape hatches README "API notes"
+# documents: kept as options on purpose although no call sets them.
+DOCUMENTED_UNSET = {
+    ("session.py", "get_spark", "master"),
+    ("dataset.py", "FireballDataset.instances", "limit"),
+    ("operators/similarity.py", "lsh_topk", "dim"),
+    ("plans/inference.py", "classify_batches", "out_cols"),
+}
+
+
+def _py_files(paths):
+    for p in paths:
+        if p.is_file():
+            yield p
+        elif p.is_dir():
+            yield from sorted(p.rglob("*.py"))
+
+
+def _defaulted_params(tree):
+    """(call name, qualname, param, positional index or None) for every
+    defaulted parameter; the index skips ``self``/``cls`` of methods."""
+    out = []
+
+    def visit(node, prefix, in_class):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                visit(child, prefix + child.name + ".", child.name)
+            elif isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = child.args
+                pos = a.posonlyargs + a.args
+                skip = 1 if in_class and pos and pos[0].arg in ("self", "cls") else 0
+                first = len(pos) - len(a.defaults)
+                name = in_class if child.name == "__init__" else child.name
+                for i, arg in enumerate(pos):
+                    if i >= first:
+                        out.append((name, prefix + child.name, arg.arg, i - skip))
+                for arg, d in zip(a.kwonlyargs, a.kw_defaults):
+                    if d is not None:
+                        out.append((name, prefix + child.name, arg.arg, None))
+                visit(child, prefix + child.name + ".", None)
+
+    visit(tree, "", None)
+    return out
+
+
+def _callee(func):
+    if isinstance(func, ast.Name):
+        return func.id
+    if isinstance(func, ast.Attribute):
+        return func.attr
+    return None
+
+
+def _calls(tree):
+    """(callee name, n positional, keyword names, sets everything)."""
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        name, args = _callee(node.func), node.args
+        if name == "partial" and args:
+            name, args = _callee(args[0]), args[1:]
+        if name is None:
+            continue
+        star = any(isinstance(a, ast.Starred) for a in args) or any(
+            k.arg is None for k in node.keywords
+        )
+        yield name, len(args), {k.arg for k in node.keywords}, star
+
+
+def unset_defaulted_params():
+    set_kw: dict[str, set[str]] = {}
+    max_pos: dict[str, int] = {}
+    star: set[str] = set()
+    for f in _py_files(CALLERS):
+        for name, n_pos, kws, has_star in _calls(ast.parse(f.read_text())):
+            set_kw.setdefault(name, set()).update(kws)
+            max_pos[name] = max(max_pos.get(name, 0), n_pos)
+            if has_star:
+                star.add(name)
+    unset = set()
+    for f in _py_files([PACKAGE]):
+        rel = f.relative_to(PACKAGE).as_posix()
+        for name, qual, param, idx in _defaulted_params(ast.parse(f.read_text())):
+            if name in star or param in set_kw.get(name, ()):
+                continue
+            if idx is not None and max_pos.get(name, 0) > idx:
+                continue
+            unset.add((rel, qual, param))
+    return unset
+
+
+def test_every_defaulted_parameter_has_a_caller():
+    assert unset_defaulted_params() == DOCUMENTED_UNSET

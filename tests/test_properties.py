@@ -364,46 +364,6 @@ def test_connected_components_matches_union_find(spark, edges):
     assert got == want
 
 
-def test_connected_components_chain_graph_shortcut(spark):
-    """The docstring's escape-hatch guidance, exercised: a pure path
-    graph (worst case — diameter = n) blows past a small max_iter under
-    plain min-label propagation, and shortcut=True (pointer jumping)
-    closes the same graph within O(log n) rounds with identical
-    min-id labeling."""
-    import pytest
-
-    from fireball_data_processing_spark.operators.dedup import (
-        connected_components,
-    )
-
-    n = 64  # path 0-1-2-...-63: diameter 63, log2 = 6
-    edges = [(i, i + 1) for i in range(n - 1)]
-    df = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
-
-    # adversarial chain defeats plain propagation at a budget that the
-    # shortcut mode sails through
-    with pytest.raises(RuntimeError, match="shortcut=True"):
-        connected_components(df, max_iter=10).collect()
-
-    got = {
-        r["vertex"]: r["component"]
-        for r in connected_components(df, max_iter=10, shortcut=True).collect()
-    }
-    assert got == {v: 0 for v in range(n)}
-
-    # both modes agree on a mixed graph (two cliques + a bridge + isolate pair)
-    mixed = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (8, 9)]
-    mdf = spark.createDataFrame(mixed, "id_a bigint, id_b bigint")
-    plain = {
-        r["vertex"]: r["component"] for r in connected_components(mdf).collect()
-    }
-    jumped = {
-        r["vertex"]: r["component"]
-        for r in connected_components(mdf, shortcut=True).collect()
-    }
-    assert plain == jumped
-
-
 @given(
     vec=st.lists(
         st.floats(
@@ -818,53 +778,6 @@ def test_winnow_matches_literal_python_fuzz(spark, texts, k, window):
             for j in range(max(len(grams) - window + 1, 1))
         }
         assert got.get(i, set()) == fps, i
-
-
-# ---------------------------------------------------------------------
-# bucketed percentile gate (round 6): the two-phase rank must equal the
-# plain percent_rank path on ARBITRARY score/group shapes — hypothesis
-# covers the edges the fixed fixture can't promise (all-ties groups,
-# singleton groups, every score outside the clamp range, one bucket)
-# ---------------------------------------------------------------------
-
-gate_rows = st.lists(
-    st.tuples(
-        st.integers(0, 2),  # group
-        st.sampled_from([-1.0, 0.0, 0.25, 0.25, 0.5, 0.999, 1.0, 2.5]),
-    ),
-    min_size=1,
-    max_size=30,
-)
-
-
-@given(rows=gate_rows, n_buckets=st.sampled_from([1, 2, 7]),
-       ascending=st.booleans())
-@settings(**SETTINGS)
-def test_bucketed_gate_matches_plain_percent_rank(
-    spark, rows, n_buckets, ascending
-):
-    from fireball_data_processing_spark.operators.selection import (
-        score_percentile_gate,
-    )
-
-    df = spark.createDataFrame(
-        [(i, f"g{g}", float(s)) for i, (g, s) in enumerate(rows)],
-        "id long, grp string, score double",
-    )
-    plain = {
-        (r["id"], r["pctl"])
-        for r in score_percentile_gate(
-            df, "score", "grp", keep_frac=0.7, ascending=ascending
-        ).collect()
-    }
-    bucketed = {
-        (r["id"], r["pctl"])
-        for r in score_percentile_gate(
-            df, "score", "grp", keep_frac=0.7, ascending=ascending,
-            bucketed=True, n_buckets=n_buckets,
-        ).collect()
-    }
-    assert bucketed == plain
 
 
 # ---------------------------------------------------------------------

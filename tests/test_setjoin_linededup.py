@@ -161,41 +161,6 @@ def test_set_similarity_bad_threshold(spark):
         set_similarity_join(_docs(spark, SIM_ROWS), threshold=0.0)
 
 
-@pytest.mark.parametrize("threshold", [0.3, 0.5, 0.9, 1.0])
-def test_positional_filter_output_identical(spark, threshold):
-    """PPJoin positional filter is lossless: the joined output with
-    positional=True equals the default path AND the literal-Python
-    all-pairs ground truth at every threshold."""
-    from fireball_data_processing_spark.operators.setjoin import set_similarity_join
-
-    got = {
-        (r["id_a"], r["id_b"]): (r["n_a"], r["n_b"], r["n_inter"], r["jaccard"])
-        for r in set_similarity_join(
-            _docs(spark, SIM_ROWS), threshold=threshold, k=3, positional=True
-        ).collect()
-    }
-    assert got == _py_pairs(SIM_ROWS, threshold)
-
-
-def test_positional_filter_prunes_candidates(spark):
-    """The positional candidate set is a subset of the plain prefix
-    candidates and still a superset of the true pairs (lossless)."""
-    from fireball_data_processing_spark.operators.setjoin import (
-        prefix_candidates,
-        shingle_sets,
-    )
-
-    sets = shingle_sets(_docs(spark, SIM_ROWS), 3)
-    plain = {(r["id_a"], r["id_b"]) for r in prefix_candidates(sets, 0.5).collect()}
-    pos = {
-        (r["id_a"], r["id_b"])
-        for r in prefix_candidates(sets, 0.5, positional=True).collect()
-    }
-    assert pos <= plain
-    truth = set(_py_pairs(SIM_ROWS, 0.5))
-    assert truth <= pos
-
-
 def test_prefix_length_fp_boundary():
     """tau * n landing on an exact integer must NOT shorten the prefix:
     0.9 * 10 is 9.000000000000002 in IEEE, and an unguarded ceil gives
@@ -590,26 +555,6 @@ def test_mmr_lambda_one_is_pure_relevance(spark):
         for r in mmr_rerank(df, k=3, lam=1.0).orderBy("mmr_rank").collect()
     ]
     assert order == [11, 12, 13]
-
-
-def test_line_dedup_skew_safe_path_identical(spark, sf_dir):
-    """The skew-safe groupBy+join-back formulation must produce the exact
-    window-path output — on the constructed fixture AND the real corpus."""
-    from fireball_data_processing_spark.operators.dedup import line_dedup
-
-    fixture = _docs(spark, FIXTURE)
-    a = sorted(map(tuple, line_dedup(fixture, seg_words=4).collect()))
-    b = sorted(
-        map(tuple, line_dedup(fixture, seg_words=4, skew_safe=True).collect())
-    )
-    assert a == b
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = sorted(map(tuple, line_dedup(docs, seg_words=8).collect()))
-    b = sorted(
-        map(tuple, line_dedup(docs, seg_words=8, skew_safe=True).collect())
-    )
-    assert a == b and len(a) == docs.count()
 
 
 def test_winnow_pairs_recover_true_near_dups(spark, sf_dir):

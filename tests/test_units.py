@@ -512,9 +512,8 @@ def test_censor_words_masks_case_insensitive(spark):
 
 
 def test_minhash_index_and_grouped_pairs_parity(spark, sf_dir, tmp_path):
-    # build/query split: the materialized index reproduces exactly the
-    # one-shot pipeline's candidates and jaccard scores, and the grouped
-    # (bucket-collect) candidate form equals the self-join form
+    # build/query split: candidates and jaccard scores read from the
+    # materialized index equal the one-shot pipeline's exactly
     from fireball_data_processing_spark.operators.dedup import (
         build_minhash_index,
         jaccard_pairs,
@@ -532,10 +531,10 @@ def test_minhash_index_and_grouped_pairs_parity(spark, sf_dir, tmp_path):
     assert len(want_pairs) > 0
 
     idx = build_minhash_index(d, str(tmp_path / "mh_idx"))
-    got_grouped = sorted(
-        map(tuple, lsh_candidate_pairs(idx, grouped=True).select("id_a", "id_b").collect())
+    got_pairs = sorted(
+        map(tuple, lsh_candidate_pairs(idx).select("id_a", "id_b").collect())
     )
-    assert got_grouped == want_pairs
+    assert got_pairs == want_pairs
 
     want_j = sorted(
         map(
@@ -549,7 +548,7 @@ def test_minhash_index_and_grouped_pairs_parity(spark, sf_dir, tmp_path):
     got_j = sorted(
         map(
             tuple,
-            jaccard_pairs(d, lsh_candidate_pairs(idx, grouped=True), shingle_sets=idx_sh)
+            jaccard_pairs(d, lsh_candidate_pairs(idx), shingle_sets=idx_sh)
             .select("id_a", "id_b", F.round("jaccard", 6).alias("j"))
             .collect(),
         )
@@ -589,15 +588,15 @@ def test_hashed_id_col_long_with_nulls(spark):
 
 
 def test_lsh_grouped_no_self_pairs_on_duplicate_ids(spark):
-    # review fix: a caller-supplied signature frame with duplicate ids must
-    # not yield (d, d) pairs from the positional in-bucket pairing
+    # a caller-supplied signature frame with duplicate ids must not
+    # yield (d, d) pairs: the self-join's strict id_a < id_b excludes them
     from fireball_data_processing_spark.operators.dedup import lsh_candidate_pairs
 
     sigs = spark.createDataFrame(
         [(7, *["aa"] * 8), (7, *["aa"] * 8), (9, *["aa"] * 8)],
         "doc_id bigint, " + ", ".join(f"mh{i} string" for i in range(8)),
     )
-    pairs = lsh_candidate_pairs(sigs, grouped=True).collect()
+    pairs = lsh_candidate_pairs(sigs).collect()
     assert sorted((r["id_a"], r["id_b"]) for r in pairs) == [(7, 9)]
 
 
@@ -1618,6 +1617,38 @@ def test_quality_survivors_tolerates_missing_scores(spark):
     assert rows[4]["survivor_id"] == 4  # all-null scores: lowest id
     assert rows[4]["survivor_score"] is None
     assert rows[4]["cluster_size"] == 2
+
+
+def test_connected_components_chain_graph(spark):
+    """A pure path graph (worst case: diameter = n) closes within
+    O(log n) rounds thanks to pointer jumping; plain propagation would
+    need 63. A budget below the jump rounds still raises, and a mixed
+    graph gets min-id labels."""
+    from fireball_data_processing_spark.operators.dedup import (
+        connected_components,
+    )
+
+    n = 64  # path 0-1-2-...-63: diameter 63, log2 = 6
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "id_a bigint, id_b bigint"
+    )
+    got = {
+        r["vertex"]: r["component"]
+        for r in connected_components(df, max_iter=10).collect()
+    }
+    assert got == {v: 0 for v in range(n)}
+
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        connected_components(df, max_iter=2).collect()
+
+    # a triangle with a three-edge tail, plus an isolated pair
+    mixed = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (8, 9)]
+    mdf = spark.createDataFrame(mixed, "id_a bigint, id_b bigint")
+    got = {
+        r["vertex"]: r["component"]
+        for r in connected_components(mdf).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 1, 8: 8, 9: 8}
 
 
 def test_dedup_datasheet_operators_handle_empty_inputs(spark):
