@@ -21,17 +21,21 @@ listing changes.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from fireball_data_processing_spark.plans.heuristics import (
     HEURISTICS,
     heuristics_matrix,
 )
-from fireball_data_processing_spark.schema import EVENT_SCHEMA, FIREBALL_STREAM, StreamSchema
-from fireball_data_processing_spark.sources.checksum import dataset_checksum
-from fireball_data_processing_spark.sources.events import load_event_stream
+from fireball_data_processing_spark.schema import FIREBALL_STREAM, StreamSchema
+from fireball_data_processing_spark.sources.checksum import File, dataset_checksum
+from fireball_data_processing_spark.sources.events import (
+    chunk_files,
+    instance_of,
+    load_event_stream,
+)
 from fireball_data_processing_spark.sources import sinks
 
 
@@ -51,40 +55,29 @@ class FireballDataset:
             ts_col=FIREBALL_STREAM.ts_col,
             type_col=FIREBALL_STREAM.type_col,
         )
+        self._files: list[File] | None = None
+        self._files_lock = threading.Lock()
         self._events: DataFrame | None = None
-        self._checksum: str | None = None
 
-    # -- scans ---------------------------------------------------------
+    # -- the corpus listing and its scans ------------------------------
+    def files(self) -> list[File]:
+        """The corpus listing, taken once: everything below reads this snapshot."""
+        with self._files_lock:
+            if self._files is None:
+                self._files = chunk_files(self.data_dir)
+        return self._files
+
     def events_df(self) -> DataFrame:
         if self._events is None:
-            self._events = load_event_stream(
-                self.spark, self.data_dir, schema=EVENT_SCHEMA
-            )
+            self._events = load_event_stream(self.spark, self.files())
         return self._events
 
     def checksum(self) -> str:
-        if self._checksum is None:
-            self._checksum = dataset_checksum(self.spark, self.data_dir)
-        return self._checksum
+        return dataset_checksum(self.files())
 
-    def instances(self, limit: int = 1_000_000) -> list[str]:
-        """Distinct instance ids for the user-facing listing. Bounded: this
-        IS a driver-side collect (~25k ids for FIREBALL — fine), so a guard
-        raises rather than silently OOM-ing the driver on a corpus whose id
-        cardinality was misjudged."""
-        ids = (
-            self.events_df()
-            .select("instance_id")
-            .distinct()
-            .limit(limit + 1)
-            .collect()
-        )
-        if len(ids) > limit:
-            raise ValueError(
-                f"more than {limit} instances; raise `limit` explicitly or "
-                "enumerate with a DataFrame instead of a driver-side list"
-            )
-        return [r["instance_id"] for r in ids]
+    def instances(self) -> list[str]:
+        """The listed directory names, sorted; all-corrupt instances too."""
+        return sorted({instance_of(path) for path, _, _ in self.files()})
 
     # -- heuristics (memoized) ----------------------------------------
     def heuristics(self, names: tuple[str, ...] | None = None) -> DataFrame:
@@ -107,12 +100,9 @@ class FireballDataset:
 
     # -- explorer endpoints -------------------------------------------
     def events(self, instance_id: str) -> DataFrame:
-        """`/events/{id}`: one instance's raw stream in canonical order."""
-        return (
-            self.events_df()
-            .filter(F.col("instance_id") == instance_id)
-            .orderBy("seq")
-        )
+        """`/events/{id}`: one instance's stream in canonical order, from its files."""
+        files = [f for f in self.files() if instance_of(f[0]) == instance_id]
+        return load_event_stream(self.spark, files).orderBy("seq")
 
     def index(self) -> DataFrame:
         """`/index`: instance ids + their heuristic scores."""
@@ -126,20 +116,13 @@ class FireballDataset:
         The reference streams because "big instances can be 250MB+, don't
         consume entire iterator"; the engine analog is ``toLocalIterator``,
         which pulls ONE partition at a time to the driver (never the whole
-        instance), with the instance filter pushed down to the scan.
+        instance), over a scan of only that instance's files.
 
         Raises ``KeyError`` for an unknown instance (the endpoint's 404) —
-        EAGERLY, before any chunk is produced, so an HTTP wrapper can still
-        send an error status. The membership probe is a pushed-down
-        ``limit(1)`` on the instance filter, not a corpus-wide distinct.
+        EAGERLY, from the listing and before any chunk is produced, so an
+        HTTP wrapper can still send an error status.
         """
-        probe = (
-            self.events_df()
-            .filter(F.col("instance_id") == instance_id)
-            .limit(1)
-            .take(1)
-        )
-        if not probe:
+        if instance_id not in self.instances():
             raise KeyError(instance_id)
 
         def gen():

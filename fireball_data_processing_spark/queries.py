@@ -4991,18 +4991,16 @@ def q_source_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_MERGES_CACHE: dict[str, list] = {}
 
 
-def _bpe_corpus_key(spark: SparkSession, sf_dir: str) -> str:
+def _bpe_corpus_key(sf_dir: str) -> str:
     """Cache key for trained BPE merges: the documents table's file-level
     checksum (path + length + mtime via ``sources/checksum.py``), NOT the
     ``sf_dir`` string — a path-keyed cache would serve stale merges if
     the table under a fixed path were rewritten within one process
     lifetime (retrain-on-mutation pinned in tests/test_bpe.py). One
     driver-side file listing, no data read."""
-    from fireball_data_processing_spark.sources.checksum import (
-        dataset_checksum,
-    )
+    from fireball_data_processing_spark.sources.checksum import dataset_checksum, list_files
 
-    return dataset_checksum(spark, sf_dir, pattern="documents.parquet")
+    return dataset_checksum(list_files(sf_dir, "documents.parquet"))
 
 
 def _bpe_merges_for(spark: SparkSession, sf_dir: str) -> list:
@@ -5014,7 +5012,7 @@ def _bpe_merges_for(spark: SparkSession, sf_dir: str) -> list:
         word_frequencies,
     )
 
-    key = _bpe_corpus_key(spark, sf_dir)
+    key = _bpe_corpus_key(sf_dir)
     if key not in _BPE_MERGES_CACHE:
         d = load_table(spark, sf_dir, "documents")
         wf_df = word_frequencies(d, min_count=2, top_n=65_536)

@@ -2,21 +2,23 @@
 
 The reference's unit of data is a *combat instance*: a directory of gzipped
 JSONL chunk files, one JSON event per line, ordered by sorted filename then
-line order (reference ``dataset/utils.py:16-41,59-61``). The idiomatic Spark
-ingestion is a single ``spark.read.json`` over ``root/*/*.jsonl.gz`` —
-gzip is a transparent codec — plus two derived columns:
+line order (reference ``dataset/utils.py:16-41,59-61``). ``chunk_files``
+lists ``root/*/*.jsonl.gz`` on the driver (contract: ``sources/checksum.py``)
+and ``load_event_stream`` reads exactly those files with one
+``spark.read.json``, raising Spark's parallel-listing threshold for that
+read only, so Spark does not list them again in a job. It adds:
 
 - ``instance_id``: the parent directory name, recovered from
-  ``input_file_name()`` (S4), so a 100 TB corpus needs no per-instance
-  driver loop and no filename manifest.
+  ``input_file_name()`` (S4).
 - ``seq``: a canonical per-instance event ordering (S5). The reference's
   semantics are "sorted filename, then line order"; the distributed
   equivalent is ``row_number() OVER (PARTITION BY instance_id ORDER BY
-  file_name, line_no)`` where ``line_no`` is a per-file monotonic id.
+  file_name, line_no)`` where ``line_no`` is a per-file monotonic id. It
+  depends only on the instance's files: reading them alone gives the same.
 
 Bad-gzip tolerance (the reference skips ``BadGzipFile`` chunks with a
-warning, ``dataset/utils.py:22-27``) maps to
-``spark.sql.files.ignoreCorruptFiles`` scoped to this read.
+warning, ``dataset/utils.py:22-27``) maps to ``ignoreCorruptFiles`` scoped
+to this read: a corrupt chunk is listed but yields no rows.
 
 Scale note: ``row_number`` per instance shuffles once on ``instance_id``;
 every downstream sessionization window reuses that partitioning, so the
@@ -28,10 +30,26 @@ process must stream the whole instance.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
+
+from fireball_data_processing_spark.schema import EVENT_SCHEMA
+from fireball_data_processing_spark.sources.checksum import File, list_files
+
+_THRESHOLD_LOCK = threading.Lock()
+
+
+def chunk_files(root: str) -> list[File]:
+    """The corpus listing: every chunk file of every instance directory."""
+    return list_files(root, "*/*.jsonl.gz")
+
+
+def instance_of(path: str) -> str:
+    """A listed chunk's instance id, as ``with_instance_and_seq`` finds it."""
+    return path.rsplit("/", 2)[-2]
 
 
 def with_instance_and_seq(df: DataFrame) -> DataFrame:
@@ -52,24 +70,22 @@ def with_instance_and_seq(df: DataFrame) -> DataFrame:
     return df.withColumn("seq", F.row_number().over(w)).drop("_file", "_mid")
 
 
-def load_event_stream(
-    spark: SparkSession,
-    root: str,
-    schema: StructType | str | None = None,
-) -> DataFrame:
-    """Read a directory-of-instance-directories of gzipped JSONL (S1+S4+S5).
+def load_event_stream(spark: SparkSession, files: list[File]) -> DataFrame:
+    """Read listed chunk files (``chunk_files``) as typed events (S1+S4+S5).
 
-    ``schema`` should normally be the typed event schema
-    (``fireball_data_processing_spark.schema.EVENT_SCHEMA``): schema-on-read
-    inference requires an extra full pass and widens every column to the
-    union of observed types — at 100 TB always pass the schema.
+    Spark would list more than ``parallelPartitionDiscovery.threshold`` (32)
+    paths again in a parallel job, so this read alone raises it: partitioned
+    tables elsewhere still want the parallel listing at scale.
     """
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     # S1 bad-gzip tolerance, scoped to this scan rather than session-wide.
-    reader = reader.option("ignoreCorruptFiles", "true")
-    df = reader.json(f"{root.rstrip('/')}/*/*.jsonl.gz")
+    reader = spark.read.schema(EVENT_SCHEMA).option("ignoreCorruptFiles", "true")
+    # the session conf is shared: concurrent reads must not interleave
+    with _THRESHOLD_LOCK:
+        prev = spark.conf.get(key)
+        spark.conf.set(key, str(max(len(files), int(prev))))
+        try:
+            df = reader.json([path for path, _, _ in files])
+        finally:
+            spark.conf.set(key, prev)
     return with_instance_and_seq(df)

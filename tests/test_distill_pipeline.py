@@ -17,8 +17,8 @@ from fireball_data_processing_spark.plans.distill import (
     author_filter,
     ic_regex_stage,
 )
-from fireball_data_processing_spark.schema import EVENT_SCHEMA, FIREBALL_STREAM
-from fireball_data_processing_spark.sources.events import load_event_stream
+from fireball_data_processing_spark.schema import FIREBALL_STREAM
+from fireball_data_processing_spark.sources.events import chunk_files, load_event_stream
 
 
 @pytest.fixture(scope="module")
@@ -48,7 +48,7 @@ def corpus(tmp_path_factory):
 
 
 def test_distill_1_2_3a_end_to_end(spark, corpus):
-    events = load_event_stream(spark, corpus, schema=EVENT_SCHEMA)
+    events = load_event_stream(spark, chunk_files(corpus))
 
     # distill1: triples around command anchors, message payloads carry
     # (author, content)

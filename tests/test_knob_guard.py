@@ -20,11 +20,10 @@ PACKAGE = ROOT / "fireball_data_processing_spark"
 CALLERS = [PACKAGE, ROOT / "tests", ROOT / "scripts", ROOT / "fbbench",
            ROOT / "bench.py", ROOT / "__spark_entry__.py"]
 
-# A deployment setting and the three escape hatches README "API notes"
+# A deployment setting and the two escape hatches README "API notes"
 # documents: kept as options on purpose although no call sets them.
 DOCUMENTED_UNSET = {
     ("session.py", "get_spark", "master"),
-    ("dataset.py", "FireballDataset.instances", "limit"),
     ("operators/similarity.py", "lsh_topk", "dim"),
     ("plans/inference.py", "classify_batches", "out_cols"),
 }

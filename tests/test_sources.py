@@ -15,7 +15,11 @@ from pyspark.sql import functions as F
 
 from fireball_data_processing_spark.schema import EVENT_SCHEMA
 from fireball_data_processing_spark.sources.checksum import dataset_checksum
-from fireball_data_processing_spark.sources.events import load_event_stream
+from fireball_data_processing_spark.sources.events import (
+    chunk_files,
+    load_event_stream,
+    with_instance_and_seq,
+)
 from fireball_data_processing_spark.sources import sinks
 
 
@@ -57,7 +61,7 @@ def corpus(tmp_path_factory):
 
 
 def test_load_event_stream_layout(spark, corpus):
-    df = load_event_stream(spark, corpus, schema=EVENT_SCHEMA)
+    df = load_event_stream(spark, chunk_files(corpus))
     rows = df.orderBy("instance_id", "seq").collect()
     by_inst = {}
     for r in rows:
@@ -75,17 +79,17 @@ def test_load_event_stream_layout(spark, corpus):
 
 
 def test_corrupt_chunk_tolerated(spark, corpus):
-    df = load_event_stream(spark, corpus, schema=EVENT_SCHEMA)
+    df = load_event_stream(spark, chunk_files(corpus))
     assert df.count() == 4  # corrupt chunk skipped, good rows intact
 
 
 def test_checksum_memoization_roundtrip(spark, corpus):
-    cs1 = dataset_checksum(spark, corpus)
-    cs2 = dataset_checksum(spark, corpus)
+    cs1 = dataset_checksum(chunk_files(corpus))
+    cs2 = dataset_checksum(chunk_files(corpus))
     assert cs1 == cs2 and len(cs1) == 32
 
     out = os.path.join(tempfile.mkdtemp(), "result")
-    df = load_event_stream(spark, corpus, schema=EVENT_SCHEMA)
+    df = load_event_stream(spark, chunk_files(corpus))
     res = df.groupBy("instance_id").count()
     sinks.write_results_csv(res, out, checksum=cs1)
     assert sinks.memoized(out, cs1)
@@ -97,7 +101,7 @@ def test_checksum_memoization_roundtrip(spark, corpus):
 
 
 def test_jsonl_gz_roundtrip(spark, corpus):
-    df = load_event_stream(spark, corpus, schema=EVENT_SCHEMA)
+    df = load_event_stream(spark, chunk_files(corpus))
     out = os.path.join(tempfile.mkdtemp(), "events_out")
     sinks.write_jsonl(
         df.select("instance_id", "seq", "event_type", "content"), out,
@@ -204,3 +208,197 @@ def test_load_table_memoized_per_application(spark, sf_dir):
     assert c.schema == b.schema
     # the refreshed frame replaces the memo entry
     assert load_table(spark, sf_dir, "lineitem") is c
+
+
+# -- the corpus listing ---------------------------------------------------
+# FireballDataset lists its chunk files once, on the driver; the checksum,
+# the instance ids, the 404 check and every scan read that listing. The
+# oracles below are the Spark-side computations the listing replaced.
+
+
+def _write_chunk(path, events):
+    path.parent.mkdir(parents=True, exist_ok=True)
+    with gzip.open(path, "wt") as f:
+        for ev in events:
+            f.write(json.dumps(ev) + "\n")
+
+
+def _msg(cid, ts):
+    return {"combat_id": cid, "event_type": "message", "timestamp": float(ts),
+            "author_id": "u1", "content": f"{cid} says {ts}"}
+
+
+def _wide_corpus(root, n_instances=8, n_chunks=5):
+    """n_instances x n_chunks chunk files: 40 by default, above Spark's
+    parallel-listing threshold of 32."""
+    for i in range(n_instances):
+        for c in range(n_chunks):
+            _write_chunk(root / f"inst{i:02d}" / f"chunk-{c:03d}.jsonl.gz",
+                         [_msg(f"inst{i:02d}", c * 10 + k) for k in range(3)])
+    return root
+
+
+@pytest.fixture(scope="module")
+def hidden_corpus(tmp_path_factory):
+    """Directories named ``_x`` and ``.x`` (Spark's ``*`` matches them),
+    chunk files named ``_y``/``.z`` (Spark leaves them out), a corrupt
+    chunk next to a good one, and an instance whose only chunk is
+    corrupt."""
+    root = tmp_path_factory.mktemp("hidden_corpus")
+    _write_chunk(root / "a" / "chunk-000.jsonl.gz", [_msg("a", 1), _msg("a", 2)])
+    _write_chunk(root / "a" / "chunk-001.jsonl.gz", [_msg("a", 3)])
+    _write_chunk(root / "a" / "_y.jsonl.gz", [_msg("a", 9)])
+    _write_chunk(root / "a" / ".z.jsonl.gz", [_msg("a", 8)])
+    _write_chunk(root / "_x" / "chunk-000.jsonl.gz", [_msg("_x", 1)])
+    _write_chunk(root / ".x" / "chunk-000.jsonl.gz", [_msg(".x", 1), _msg(".x", 2)])
+    _write_chunk(root / "b" / "chunk-000.jsonl.gz", [_msg("b", 1)])
+    (root / "b" / "chunk-001.jsonl.gz").write_bytes(b"not gzip")
+    (root / "c").mkdir()
+    (root / "c" / "chunk-000.jsonl.gz").write_bytes(b"not gzip")
+    return str(root)
+
+
+def _binaryfile_listing_and_checksum(spark, root):
+    """The listing and checksum as the binaryFile scan computed them."""
+    files = (spark.read.format("binaryFile").option("pathGlobFilter", "*")
+             .load(f"{root}/*/*.jsonl.gz"))
+    listing = sorted(
+        (r["path"], r["length"], r["ms"]) for r in files.select(
+            "path", "length",
+            (F.unix_micros("modificationTime") / 1000).cast("long").alias("ms"),
+        ).collect())
+    per_file = files.select(
+        "path",
+        F.md5(F.concat_ws(
+            "|", "path", F.col("length").cast("string"),
+            F.unix_micros("modificationTime").cast("string"))).alias("h"))
+    checksum = per_file.agg(F.md5(F.array_join(F.transform(
+        F.sort_array(F.collect_list(F.struct("path", "h"))), lambda x: x["h"]),
+        "")).alias("c")).collect()[0]["c"]
+    return listing, checksum
+
+
+def _full_scan_events(spark, root, instance_id):
+    """One instance's events as the full-corpus glob scan gave them."""
+    df = (spark.read.schema(EVENT_SCHEMA).option("ignoreCorruptFiles", "true")
+          .json(f"{root}/*/*.jsonl.gz"))
+    return (with_instance_and_seq(df)
+            .filter(F.col("instance_id") == instance_id).orderBy("seq").collect())
+
+
+def _jobs_started(spark, fn):
+    """Spark jobs that ``fn`` starts. A sentinel job in its own group runs
+    after ``fn``: listener events arrive in order, so once the status store
+    shows the sentinel it has seen every job ``fn`` started."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group, sentinel = f"jobs-{uuid.uuid4().hex}", f"sentinel-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, group)
+        fn()
+        sc.setJobGroup(sentinel, sentinel)
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.monotonic() + 30
+    while not sc.statusTracker().getJobIdsForGroup(sentinel):
+        assert time.monotonic() < deadline, "sentinel job never reached the status store"
+        time.sleep(0.05)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_listing_runs_no_spark_job(spark, tmp_path):
+    """The checksum, the instance ids, the 404 check and building the scan
+    start no Spark job, on more files than the parallel-listing threshold."""
+    from fireball_data_processing_spark.dataset import FireballDataset
+
+    root = str(_wide_corpus(tmp_path / "corpus"))
+    ds = FireballDataset(spark, root, results_dir=str(tmp_path / "res"))
+    assert _jobs_started(spark, ds.checksum) == 0
+    assert _jobs_started(spark, ds.instances) == 0
+    assert len(ds.instances()) == 8 and len(ds.files()) == 40
+
+    def missing():
+        with pytest.raises(KeyError):
+            ds.stream_events("nope")  # eager: raises before the first chunk
+
+    assert _jobs_started(spark, missing) == 0
+    assert _jobs_started(spark, ds.events_df) == 0
+    assert _jobs_started(spark, lambda: ds.events("inst03")) == 0
+    # the counter does see jobs
+    assert _jobs_started(spark, lambda: ds.events_df().count()) >= 1
+
+
+def test_listing_is_one_snapshot(spark, tmp_path):
+    """After first use a dataset keeps its listing: a late chunk in an
+    existing instance and a new instance directory show up in neither its
+    checksum, its ids nor its scans. A new dataset sees both."""
+    from fireball_data_processing_spark.dataset import FireballDataset
+
+    root = _wide_corpus(tmp_path / "corpus", n_instances=3, n_chunks=2)
+    ds = FireballDataset(spark, str(root), results_dir=str(tmp_path / "res"))
+    cs = ds.checksum()  # first use takes the listing; nothing is read yet
+
+    _write_chunk(root / "inst01" / "chunk-009.jsonl.gz", [_msg("inst01", 99)])
+    _write_chunk(root / "late" / "chunk-000.jsonl.gz", [_msg("late", 1)])
+    ids, n = ds.instances(), ds.events_df().count()
+    assert (ids, n) == (["inst00", "inst01", "inst02"], 18)
+    assert ds.checksum() == cs
+    assert len(ds.events("inst01").collect()) == 6
+    with pytest.raises(KeyError):
+        ds.stream_events("late")
+
+    fresh = FireballDataset(spark, str(root), results_dir=str(tmp_path / "res"))
+    assert fresh.checksum() != cs
+    assert fresh.instances() == ids + ["late"]
+    assert fresh.events_df().count() == n + 2
+    assert len(fresh.events("inst01").collect()) == 7
+
+
+def test_listing_and_checksum_match_binaryfile(spark, hidden_corpus):
+    """The driver-side listing is Spark's file set with Spark's path
+    strings and millisecond mtimes, and the checksum over it is the
+    binaryFile formula byte for byte, so memo keys written before stay
+    valid. Hidden directories are listed; hidden file names are not."""
+    from fireball_data_processing_spark.dataset import FireballDataset
+
+    listing, checksum = _binaryfile_listing_and_checksum(spark, hidden_corpus)
+    ds = FireballDataset(spark, hidden_corpus, results_dir=hidden_corpus + "/_results")
+    assert ds.files() == listing
+    assert ds.checksum() == checksum
+    names = [p.rsplit("/", 2)[-2:] for p, _, _ in listing]
+    assert [".x", "chunk-000.jsonl.gz"] in names and ["_x", "chunk-000.jsonl.gz"] in names
+    assert not [n for n in names if n[1].startswith(("_", "."))]
+    assert all(p.startswith("file:/") for p, _, _ in listing)
+
+
+def test_instance_lookup_matches_full_scan(spark, hidden_corpus):
+    """events(id) reads only that instance's files and gives the rows and
+    seq the full-corpus scan gave, for every instance, the one with a
+    corrupt chunk included."""
+    from fireball_data_processing_spark.dataset import FireballDataset
+
+    ds = FireballDataset(spark, hidden_corpus, results_dir=hidden_corpus + "/_results")
+    sizes = {}
+    for cid in ds.instances():
+        got = ds.events(cid).collect()
+        assert got == _full_scan_events(spark, hidden_corpus, cid), cid
+        sizes[cid] = len(got)
+    assert sizes == {".x": 2, "_x": 1, "a": 3, "b": 1, "c": 0}
+
+
+def test_all_corrupt_instance_is_listed_and_streams_nothing(spark, hidden_corpus):
+    """The one behaviour the listing changes: an instance whose every chunk
+    is corrupt was absent from the decoded ids (and 404'd); it is now
+    listed, like the reference lists directories, and streams zero
+    events."""
+    from fireball_data_processing_spark.dataset import FireballDataset
+
+    ds = FireballDataset(spark, hidden_corpus, results_dir=hidden_corpus + "/_results")
+    assert "c" in ds.instances()
+    assert list(ds.stream_events("c")) == []
+    decoded = {r[0] for r in ds.events_df().select("instance_id").distinct().collect()}
+    assert decoded == set(ds.instances()) - {"c"}
