@@ -91,9 +91,12 @@ class FireballDataset:
             (self.checksum() + "|" + ",".join(names)).encode()
         ).hexdigest()
         if sinks.memoized(out, cs):
-            # header-only CSV reads come back all-string; infer numerics so
-            # cache hits return the same dtypes as a fresh compute
-            return self.spark.read.options(header=True, inferSchema=True).csv(out)
+            # read with a fresh compute's column types, taken from the plan
+            # over no files: no job, no scan (a file read makes every column
+            # nullable, so only the nullability differs)
+            empty = load_event_stream(self.spark, [])
+            schema = heuristics_matrix(empty, self.stream, names).schema
+            return self.spark.read.options(header=True).schema(schema).csv(out)
         matrix = heuristics_matrix(self.events_df(), self.stream, names)
         sinks.write_results_csv(matrix, out, checksum=cs)
         return matrix

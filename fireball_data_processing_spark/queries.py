@@ -13,6 +13,9 @@ Conventions that make the driver's hash compare deterministic:
 - DuckDB ``SUM`` over integers returns HUGEINT; oracles cast to BIGINT to
   match Spark's LongType;
 - timestamp deltas are computed on int64 microseconds and divided once.
+
+A CTE used by two oracles is a module constant ("Shared oracle CTE
+fragments" below); ``tests/test_oracle_fragments.py`` enforces it.
 """
 
 from __future__ import annotations
@@ -52,6 +55,364 @@ def query(name: str, oracle: str | None):
 
 def _r6(c):  # ratio/average rounding
     return F.round(c, 6)
+
+
+# =====================================================================
+# Shared oracle CTE fragments
+# =====================================================================
+# A CTE that two oracles spell the same way is written once, here, and
+# the oracles join it in with ``+``. A WITH-chain fragment opens with the
+# leading newline and ``WITH`` of an oracle literal; every fragment ends
+# at its last closing parenthesis, so the caller writes the separator.
+# A ``*_BODY`` fragment is the parenthesized body of a CTE that two
+# oracles name differently.
+
+# The two word tokenizers of the reference's `' '`-split vs `split()`
+# quirk (SURVEY.md "Exact reference quirks"): the first keeps the empty
+# token a blank text splits into, the second drops it.
+_WORDS_CTE = """
+WITH words AS (
+  SELECT doc_id,
+    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
+  FROM documents
+)"""
+
+_WORDS_NONEMPTY_CTE = """
+WITH words AS (
+  SELECT doc_id,
+    list_filter(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '),
+                s -> s <> '') AS w
+  FROM documents
+)"""
+
+# MinHash: distinct 3-word shingles -> 8 md5-min signatures -> 4 LSH
+# bands of 2 -> candidate pairs.
+_SHINGLES_CTE = _WORDS_CTE + """,
+sh AS (
+  SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS shingle
+  FROM words, UNNEST(generate_series(1, greatest(len(w) - 2, 0))) AS t(i)
+  WHERE len(w) >= 3
+)"""
+
+_MINHASH_CTE = _SHINGLES_CTE + """,
+sig AS (
+  SELECT doc_id,
+    MIN(md5('0#' || shingle)) AS mh0, MIN(md5('1#' || shingle)) AS mh1,
+    MIN(md5('2#' || shingle)) AS mh2, MIN(md5('3#' || shingle)) AS mh3,
+    MIN(md5('4#' || shingle)) AS mh4, MIN(md5('5#' || shingle)) AS mh5,
+    MIN(md5('6#' || shingle)) AS mh6, MIN(md5('7#' || shingle)) AS mh7
+  FROM sh GROUP BY doc_id
+)"""
+
+_LSH_BANDS_CTE = """bands AS (
+  SELECT doc_id, 0 AS band_idx, mh0 || '|' || mh1 AS band_key FROM sig
+  UNION ALL SELECT doc_id, 1, mh2 || '|' || mh3 FROM sig
+  UNION ALL SELECT doc_id, 2, mh4 || '|' || mh5 FROM sig
+  UNION ALL SELECT doc_id, 3, mh6 || '|' || mh7 FROM sig
+)"""
+
+# "\n,\n" and the trailing newline keep the oracle text its users always had
+_LSH_PAIRS_CTE = _MINHASH_CTE + "\n,\n" + _LSH_BANDS_CTE + """,
+cand AS (
+  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM bands a JOIN bands b
+    ON a.band_idx = b.band_idx AND a.band_key = b.band_key
+   AND a.doc_id < b.doc_id
+)
+"""
+
+# incoming docs (doc_id % 4 <> 0) sharing an LSH band with the corpus
+# docs (doc_id % 4 = 0): the near-dup ingest gate's rejections
+_NEAR_HITS_CTE = _MINHASH_CTE + ",\n" + _LSH_BANDS_CTE + """,
+hits AS (
+  SELECT DISTINCT i.doc_id
+  FROM bands i JOIN bands c
+    ON i.band_idx = c.band_idx AND i.band_key = c.band_key
+  WHERE i.doc_id % 4 <> 0 AND c.doc_id % 4 = 0
+)"""
+
+# candidate pairs closed transitively (the chain made RECURSIVE for reach)
+_LSH_CLOSURE_CTE = _LSH_PAIRS_CTE.replace(
+    "WITH words", "WITH RECURSIVE words", 1
+) + """,
+e AS (
+  SELECT id_a AS a, id_b AS b FROM cand
+  UNION SELECT id_b, id_a FROM cand
+),
+reach(a, b) AS (
+  SELECT a, b FROM e
+  UNION
+  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
+)"""
+
+# candidate pairs with their exact shingle Jaccard, and the 0.1..0.9 grid
+_LSH_JACCARD_CTE = _LSH_PAIRS_CTE + """,
+shs AS (SELECT doc_id, list_distinct(list(shingle)) AS shs FROM sh GROUP BY doc_id),
+jp AS (
+  SELECT c.id_a, c.id_b,
+    ROUND(
+      len(list_intersect(a.shs, b.shs))::DOUBLE
+      / (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs)))::DOUBLE,
+    6) AS jaccard
+  FROM cand c
+  JOIN shs a ON a.doc_id = c.id_a
+  JOIN shs b ON b.doc_id = c.id_b
+),
+grid AS (SELECT 10 * x AS threshold_pct FROM generate_series(1, 9) t(x))"""
+
+# the set-join and containment oracles' shingles (their series floor is 1)
+_SETJOIN_SH_CTE = """sh AS (
+  SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS shingle
+  FROM words, UNNEST(generate_series(1, greatest(len(w) - 2, 1))) AS t(i)
+  WHERE len(w) >= 3
+)"""
+
+# ExactSubstr spans: 8-gram hashes by position, then the hit positions
+# merged into maximal islands.
+_SPAN_GRAMS_CTE = _WORDS_CTE + """,
+grams AS (
+  SELECT doc_id, i - 1 AS pos,
+    md5(array_to_string(list_slice(w, i, i + 7), ' ')) AS gram
+  FROM words, UNNEST(generate_series(1, len(w) - 7)) AS t(i)
+  WHERE len(w) >= 8
+)"""
+
+_SPAN_ISLANDS_CTE = """isl AS (
+  SELECT doc_id, pos,
+    CASE WHEN pos > COALESCE(MAX(pos + 8) OVER (
+        PARTITION BY doc_id ORDER BY pos
+        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
+      THEN 1 ELSE 0 END AS brk
+  FROM hits
+),
+grp AS (
+  SELECT doc_id, pos, SUM(brk) OVER (
+    PARTITION BY doc_id ORDER BY pos
+    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+  FROM isl
+)"""
+
+_DUP_SPANS_CTE = _SPAN_GRAMS_CTE + """,
+dup AS (
+  SELECT gram FROM grams GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= 2
+),
+hits AS (SELECT g.doc_id, g.pos FROM grams g JOIN dup USING (gram)),
+""" + _SPAN_ISLANDS_CTE
+
+# winnowing: md5 of every 4-gram
+_WINNOW_GRAMS_CTE = _WORDS_NONEMPTY_CTE + """,
+grams AS (
+  SELECT doc_id,
+    list_transform(generate_series(1, len(w) - 3),
+                   i -> md5(array_to_string(list_slice(w, i, i + 3), ' '))) AS g
+  FROM words WHERE len(w) >= 4
+)"""
+
+# aligned 8-word segments, and per-segment doc count + keeper
+_SEGMENTS_CTE = """segs AS (
+  SELECT doc_id, (st // 8)::BIGINT AS seg_idx,
+         array_to_string(list_slice(w, st + 1, st + 8), ' ') AS seg
+  FROM words, UNNEST(generate_series(0, greatest(len(w) - 1, 0), 8)) AS t(st)
+)"""
+
+_SEG_STATS_BODY = """(
+  SELECT seg, COUNT(DISTINCT doc_id) AS nd, MIN(doc_id) AS keeper
+  FROM segs GROUP BY seg
+)"""
+
+# Corpus LM scores over ``words``: unigram counts, and add-0.5 bigram
+# counts as windows over one bigram explode.
+_UNIGRAM_CTE = """tok AS (
+  SELECT doc_id, t.token FROM words, UNNEST(w) AS t(token) WHERE t.token <> ''
+),
+vocab AS (SELECT token, COUNT(*)::DOUBLE AS c FROM tok GROUP BY token),
+tot AS (SELECT SUM(c) AS total FROM vocab)"""
+
+_BIGRAMS_BODY = """(
+  SELECT doc_id, w[i] AS prev, w[i + 1] AS cur
+  FROM words, UNNEST(generate_series(1, len(w) - 1)) AS t(i)
+  WHERE len(w) >= 2
+)"""
+
+_BIGRAM_COUNTS_CTE = """v AS (
+  SELECT COUNT(DISTINCT t)::DOUBLE AS vsz
+  FROM (SELECT UNNEST(w) AS t FROM words)
+),
+big AS """ + _BIGRAMS_BODY + """,
+cnt AS (
+  SELECT doc_id,
+    COUNT(*) OVER (PARTITION BY prev, cur)::DOUBLE AS cb,
+    COUNT(*) OVER (PARTITION BY prev)::DOUBLE AS cp
+  FROM big
+)"""
+
+# top-1000 (log rank, log count) points of a Zipf fit over ``counts``
+_ZIPF_RANKS_BODY = """(
+  SELECT LN(ROW_NUMBER() OVER (ORDER BY c DESC, token ASC)::DOUBLE) AS x,
+         LN(c) AS y
+  FROM counts
+  QUALIFY ROW_NUMBER() OVER (ORDER BY c DESC, token ASC) <= 1000
+)"""
+
+# Gopher quality metrics per document, and Flesch counts
+_GOPHER_METRICS_CTE = """
+WITH w AS (
+  SELECT doc_id, text,
+    regexp_split_to_array(trim(text), '\\s+') AS words,
+    string_split(text, chr(10)) AS lines
+  FROM documents
+),
+m AS (
+  SELECT doc_id,
+    len(words) AS n_words,
+    list_sum(list_transform(words, x -> length(x)))::DOUBLE / len(words) AS mean_wl,
+    ((length(text) - length(replace(text, '#', '')))
+     + (length(text) - length(replace(text, '...', ''))) / 3)::DOUBLE
+      / len(words) AS symbol_ratio,
+    len(list_filter(words, x -> regexp_matches(x, '[A-Za-z]')))::DOUBLE
+      / len(words) AS alpha_ratio,
+    len(list_filter(words, x -> list_contains(
+      ['the','a','of','and','to','in','is','it','that','for'], lower(x))))
+      AS stop_hits,
+    len(list_filter(lines, l -> starts_with(l, '- ') OR starts_with(l, '* ')
+      OR starts_with(l, chr(8226))))::DOUBLE / len(lines) AS bullet_ratio,
+    len(list_filter(lines, l -> l LIKE '%...'))::DOUBLE / len(lines)
+      AS ellipsis_ratio
+  FROM w
+)"""
+
+_FLESCH_COUNTS_CTE = """f AS (
+  SELECT doc_id,
+    len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
+                    s -> s <> '')) AS n_words,
+    greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS n_sentences,
+    len(regexp_extract_all(lower(text), '[aeiouy]+')) AS n_syllables
+  FROM documents
+)"""
+
+# The training-corpus pipeline: C4-style line cleaning, exact dedup on
+# the cleaned text, token-count quality bounds.
+_CLEANED_CTE = """
+WITH cleaned AS (
+  SELECT doc_id, source,
+    COALESCE(array_to_string(
+      list_filter(list_transform(string_split(text, chr(10)), s -> trim(s)),
+                  s -> s <> '' AND len(string_split_regex(s, '\\s+')) >= 50),
+      chr(10)), '') AS clean_text
+  FROM documents
+  WHERE NOT (contains(lower(text), 'lorem ipsum')
+             OR contains(lower(text), 'slow scan'))
+),
+nonempty AS (SELECT * FROM cleaned WHERE clean_text <> '')"""
+
+_DEDUPED_CTE = """deduped AS (
+  SELECT doc_id, source, clean_text FROM (
+    SELECT *, MIN(doc_id) OVER (PARTITION BY md5(clean_text)) AS keeper
+    FROM nonempty
+  ) WHERE doc_id = keeper
+)"""
+
+_QUALITY_CTE = """quality AS (
+  SELECT doc_id, source,
+    len(string_split_regex(trim(clean_text), '\\s+'))::BIGINT AS n_tokens
+  FROM deduped
+  WHERE len(string_split_regex(trim(clean_text), '\\s+')) BETWEEN 5 AND 5000
+)"""
+
+# BM25 over the three fixed queries: query terms, document terms,
+# postings and document frequencies.
+_DOC_TERMS_CTE = """tok AS (
+  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents
+)"""
+
+_BM25_POSTINGS_CTE = """
+WITH q(query_id, query_text) AS (
+  VALUES (1, 'spark window aggregation'),
+         (2, 'hash join shuffle partition'),
+         (3, 'stream batch query')
+),
+qt AS (
+  SELECT DISTINCT query_id, unnest(regexp_extract_all(lower(query_text), '[a-z0-9]+')) AS term
+  FROM q
+),
+""" + _DOC_TERMS_CTE + """,
+stats AS (SELECT COUNT(*) AS n_docs, AVG(len(toks)) AS avgdl FROM tok),
+exploded AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM tok),
+post AS (
+  SELECT doc_id, dl, term, COUNT(*) AS tf FROM exploded
+  WHERE term IN (SELECT term FROM qt)
+  GROUP BY doc_id, dl, term
+),
+dft AS (SELECT term, COUNT(*) AS df FROM post GROUP BY term)"""
+
+# the md5-parity +-1 projection matrix of the 64 -> 16 JL sketch, and
+# the first ten sketched vectors as queries
+_RP_SIGNS_CTE = """s AS (
+  SELECT j, list_transform(generate_series(1, 64),
+    i -> CASE WHEN ('0x' || substr(md5(j::VARCHAR || '#' ||
+                    (i - 1)::VARCHAR), 1, 1))::INT % 2 = 0
+         THEN 1.0 ELSE -1.0 END) AS signs
+  FROM UNNEST(generate_series(0, 15)) AS t(j)
+)"""
+
+_SKETCH_QUERIES_CTE = """q AS (
+  SELECT e.vec_id AS query_id, e.v AS qv, sk.sv AS qs
+  FROM e JOIN sk USING (vec_id) WHERE e.vec_id < 10
+)"""
+
+# event-type transition counts (LEAD pairing per user)
+_MARKOV_PAIRS_CTE = """
+WITH pairs AS (
+  SELECT src, dst, COUNT(*)::BIGINT AS n
+  FROM (SELECT event_type AS src,
+          LEAD(event_type) OVER (PARTITION BY user_id ORDER BY event_id)
+            AS dst
+        FROM events) z
+  WHERE dst IS NOT NULL GROUP BY 1, 2
+)"""
+
+# exact-dup ingest gate's corpus hash index (doc_id % 4 = 0)
+_CORPUS_HASH_CTE = """
+WITH corpus AS (
+  SELECT DISTINCT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS content_hash
+  FROM documents WHERE doc_id % 4 = 0
+)"""
+
+# logged policy: context = user_id % 4, action = event_type, reward = value
+_LOGGED_POLICY_CTE = """
+WITH base AS (
+  SELECT user_id % 4 AS context, event_type AS action, value::DOUBLE AS r
+  FROM events
+),
+props AS (
+  SELECT context, action,
+    ROUND(n::DOUBLE / SUM(n) OVER (PARTITION BY context), 8) AS pi_logged
+  FROM (SELECT context, action, COUNT(*)::BIGINT AS n
+        FROM base GROUP BY 1, 2)
+)"""
+
+# per user: first signup, first purchase after it, and the data horizon
+_SIGNUP_PURCHASE_CTE = """
+WITH s AS (
+  SELECT user_id, MIN(epoch_ns(ts)) AS s_ts
+  FROM events WHERE event_type = 'signup' GROUP BY 1
+),
+tmax AS (SELECT MAX(epoch_ns(ts)) AS t FROM events),
+p AS (
+  SELECT e.user_id, MIN(epoch_ns(e.ts)) AS p_ts
+  FROM events e JOIN s USING (user_id)
+  WHERE e.event_type = 'purchase' AND epoch_ns(e.ts) >= s.s_ts
+  GROUP BY 1
+)"""
+
+# per-day purchase share
+_DAILY_SHARE_CTE = """
+WITH daily AS (
+  SELECT CAST(FLOOR(epoch_ns(ts) / 86400000000000.0) AS BIGINT) AS day,
+    ROUND(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::DOUBLE
+          / COUNT(*), 8) AS share
+  FROM events GROUP BY 1
+)"""
 
 
 # =====================================================================
@@ -848,11 +1209,7 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ingest_gate_new_docs",
-    """
-WITH corpus AS (
-  SELECT DISTINCT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS content_hash
-  FROM documents WHERE doc_id % 4 = 0
-),
+    _CORPUS_HASH_CTE + """,
 incoming AS (
   SELECT doc_id, md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS content_hash
   FROM documents WHERE doc_id % 4 <> 0
@@ -892,37 +1249,7 @@ def q_ingest_gate_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ingest_gate_near_new",
-    """
-WITH words AS (
-  SELECT doc_id,
-    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-  FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS shingle
-  FROM words, UNNEST(generate_series(1, greatest(len(w) - 2, 0))) AS t(i)
-  WHERE len(w) >= 3
-),
-sig AS (
-  SELECT doc_id,
-    MIN(md5('0#' || shingle)) AS mh0, MIN(md5('1#' || shingle)) AS mh1,
-    MIN(md5('2#' || shingle)) AS mh2, MIN(md5('3#' || shingle)) AS mh3,
-    MIN(md5('4#' || shingle)) AS mh4, MIN(md5('5#' || shingle)) AS mh5,
-    MIN(md5('6#' || shingle)) AS mh6, MIN(md5('7#' || shingle)) AS mh7
-  FROM sh GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, 0 AS band_idx, mh0 || '|' || mh1 AS band_key FROM sig
-  UNION ALL SELECT doc_id, 1, mh2 || '|' || mh3 FROM sig
-  UNION ALL SELECT doc_id, 2, mh4 || '|' || mh5 FROM sig
-  UNION ALL SELECT doc_id, 3, mh6 || '|' || mh7 FROM sig
-),
-hits AS (
-  SELECT DISTINCT i.doc_id
-  FROM bands i JOIN bands c
-    ON i.band_idx = c.band_idx AND i.band_key = c.band_key
-  WHERE i.doc_id % 4 <> 0 AND c.doc_id % 4 = 0
-)
+    _NEAR_HITS_CTE + """
 SELECT d.doc_id FROM documents d
 WHERE d.doc_id % 4 <> 0 AND d.doc_id NOT IN (SELECT doc_id FROM hits)
 """,
@@ -1051,11 +1378,7 @@ def _ingest_capstone(
 
 @query(
     "streaming_ingest_pipeline",
-    """
-WITH corpus AS (
-  SELECT DISTINCT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS content_hash
-  FROM documents WHERE doc_id % 4 = 0
-),
+    _CORPUS_HASH_CTE + """,
 inc AS (
   SELECT doc_id, source, lang, text,
     md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS content_hash
@@ -1087,37 +1410,7 @@ def q_streaming_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_ingest_near_pipeline",
-    """
-WITH words AS (
-  SELECT doc_id,
-    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-  FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS shingle
-  FROM words, UNNEST(generate_series(1, greatest(len(w) - 2, 0))) AS t(i)
-  WHERE len(w) >= 3
-),
-sig AS (
-  SELECT doc_id,
-    MIN(md5('0#' || shingle)) AS mh0, MIN(md5('1#' || shingle)) AS mh1,
-    MIN(md5('2#' || shingle)) AS mh2, MIN(md5('3#' || shingle)) AS mh3,
-    MIN(md5('4#' || shingle)) AS mh4, MIN(md5('5#' || shingle)) AS mh5,
-    MIN(md5('6#' || shingle)) AS mh6, MIN(md5('7#' || shingle)) AS mh7
-  FROM sh GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, 0 AS band_idx, mh0 || '|' || mh1 AS band_key FROM sig
-  UNION ALL SELECT doc_id, 1, mh2 || '|' || mh3 FROM sig
-  UNION ALL SELECT doc_id, 2, mh4 || '|' || mh5 FROM sig
-  UNION ALL SELECT doc_id, 3, mh6 || '|' || mh7 FROM sig
-),
-hits AS (
-  SELECT DISTINCT i.doc_id
-  FROM bands i JOIN bands c
-    ON i.band_idx = c.band_idx AND i.band_key = c.band_key
-  WHERE i.doc_id % 4 <> 0 AND c.doc_id % 4 = 0
-),
+    _NEAR_HITS_CTE + """,
 fresh AS (
   SELECT doc_id, source, lang, text FROM documents d
   WHERE d.doc_id % 4 <> 0 AND d.doc_id NOT IN (SELECT doc_id FROM hits)
@@ -1151,31 +1444,7 @@ def q_streaming_ingest_near_pipeline(spark: SparkSession, sf_dir: str) -> DataFr
 
 @query(
     "lsh_band_hit_rates",
-    """
-WITH words AS (
-  SELECT doc_id,
-    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-  FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS shingle
-  FROM words, UNNEST(generate_series(1, greatest(len(w) - 2, 0))) AS t(i)
-  WHERE len(w) >= 3
-),
-sig AS (
-  SELECT doc_id,
-    MIN(md5('0#' || shingle)) AS mh0, MIN(md5('1#' || shingle)) AS mh1,
-    MIN(md5('2#' || shingle)) AS mh2, MIN(md5('3#' || shingle)) AS mh3,
-    MIN(md5('4#' || shingle)) AS mh4, MIN(md5('5#' || shingle)) AS mh5,
-    MIN(md5('6#' || shingle)) AS mh6, MIN(md5('7#' || shingle)) AS mh7
-  FROM sh GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, 0 AS band_idx, mh0 || '|' || mh1 AS band_key FROM sig
-  UNION ALL SELECT doc_id, 1, mh2 || '|' || mh3 FROM sig
-  UNION ALL SELECT doc_id, 2, mh4 || '|' || mh5 FROM sig
-  UNION ALL SELECT doc_id, 3, mh6 || '|' || mh7 FROM sig
-),
+    _MINHASH_CTE + ",\n" + _LSH_BANDS_CTE + """,
 inc AS (SELECT * FROM bands WHERE doc_id % 4 <> 0),
 cor AS (
   SELECT DISTINCT band_idx, band_key FROM bands WHERE doc_id % 4 = 0
@@ -1243,17 +1512,7 @@ def q_lsh_band_hit_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "benchmark_contamination",
-    """
-WITH words AS (
-  SELECT doc_id,
-    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-  FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS shingle
-  FROM words, UNNEST(generate_series(1, greatest(len(w) - 2, 0))) AS t(i)
-  WHERE len(w) >= 3
-)
+    _SHINGLES_CTE + """
 SELECT d.doc_id, b.doc_id AS bench_id, COUNT(*)::BIGINT AS n_shared
 FROM sh d JOIN sh b ON d.shingle = b.shingle
 WHERE d.doc_id % 10 <> 0 AND b.doc_id % 10 = 0
@@ -1281,17 +1540,7 @@ def q_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doc_unigram_logprob",
-    """
-WITH words AS (
-  SELECT doc_id,
-    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-  FROM documents
-),
-tok AS (
-  SELECT doc_id, t.token FROM words, UNNEST(w) AS t(token) WHERE t.token <> ''
-),
-vocab AS (SELECT token, COUNT(*)::DOUBLE AS c FROM tok GROUP BY token),
-tot AS (SELECT SUM(c) AS total FROM vocab)
+    _WORDS_CTE + ",\n" + _UNIGRAM_CTE + """
 SELECT doc_id,
   ROUND(AVG(-LOG2(v.c / t.total)), 6) AS avg_neg_log2_prob,
   COUNT(*)::BIGINT AS n_tokens
@@ -1347,12 +1596,7 @@ def q_fb_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doc_repetition",
-    """
-WITH words AS (
-  SELECT doc_id,
-    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-  FROM documents
-),
+    _WORDS_CTE + """,
 grams AS (
   SELECT doc_id, array_to_string(list_slice(w, i, i + 1), ' ') AS g
   FROM words, UNNEST(generate_series(1, len(w) - 1)) AS t(i)
@@ -1418,12 +1662,7 @@ def q_mixture_sample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doc_chunks",
-    """
-WITH words AS (
-  SELECT doc_id,
-    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-  FROM documents
-)
+    _WORDS_CTE + """
 SELECT doc_id,
   (st // 24)::BIGINT AS chunk_idx,
   array_to_string(list_slice(w, st + 1, st + 32), ' ') AS chunk_text,
@@ -1488,31 +1727,7 @@ def q_doc_clean_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GOPHER_ORACLE = """
-WITH w AS (
-  SELECT doc_id, text,
-    regexp_split_to_array(trim(text), '\\s+') AS words,
-    string_split(text, chr(10)) AS lines
-  FROM documents
-),
-m AS (
-  SELECT doc_id,
-    len(words) AS n_words,
-    list_sum(list_transform(words, x -> length(x)))::DOUBLE / len(words) AS mean_wl,
-    ((length(text) - length(replace(text, '#', '')))
-     + (length(text) - length(replace(text, '...', ''))) / 3)::DOUBLE
-      / len(words) AS symbol_ratio,
-    len(list_filter(words, x -> regexp_matches(x, '[A-Za-z]')))::DOUBLE
-      / len(words) AS alpha_ratio,
-    len(list_filter(words, x -> list_contains(
-      ['the','a','of','and','to','in','is','it','that','for'], lower(x))))
-      AS stop_hits,
-    len(list_filter(lines, l -> starts_with(l, '- ') OR starts_with(l, '* ')
-      OR starts_with(l, chr(8226))))::DOUBLE / len(lines) AS bullet_ratio,
-    len(list_filter(lines, l -> l LIKE '%...'))::DOUBLE / len(lines)
-      AS ellipsis_ratio
-  FROM w
-)
+_GOPHER_ORACLE = _GOPHER_METRICS_CTE + """
 SELECT doc_id,
   n_words::BIGINT AS n_words,
   ROUND(mean_wl, 6) AS mean_word_len,
@@ -1669,36 +1884,7 @@ def q_semantic_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "duplicate_substring_spans",
-    """
-WITH words AS (
-  SELECT doc_id,
-    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-  FROM documents
-),
-grams AS (
-  SELECT doc_id, i - 1 AS pos,
-    md5(array_to_string(list_slice(w, i, i + 7), ' ')) AS gram
-  FROM words, UNNEST(generate_series(1, len(w) - 7)) AS t(i)
-  WHERE len(w) >= 8
-),
-dup AS (
-  SELECT gram FROM grams GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= 2
-),
-hits AS (SELECT g.doc_id, g.pos FROM grams g JOIN dup USING (gram)),
-isl AS (
-  SELECT doc_id, pos,
-    CASE WHEN pos > COALESCE(MAX(pos + 8) OVER (
-        PARTITION BY doc_id ORDER BY pos
-        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-      THEN 1 ELSE 0 END AS brk
-  FROM hits
-),
-grp AS (
-  SELECT doc_id, pos, SUM(brk) OVER (
-    PARTITION BY doc_id ORDER BY pos
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-  FROM isl
-)
+    _DUP_SPANS_CTE + """
 SELECT doc_id,
   MIN(pos)::BIGINT AS span_start,
   (MAX(pos) + 8)::BIGINT AS span_end,
@@ -1719,36 +1905,7 @@ def q_duplicate_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "span_scrubbed_docs",
-    """
-WITH words AS (
-  SELECT doc_id,
-    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-  FROM documents
-),
-grams AS (
-  SELECT doc_id, i - 1 AS pos,
-    md5(array_to_string(list_slice(w, i, i + 7), ' ')) AS gram
-  FROM words, UNNEST(generate_series(1, len(w) - 7)) AS t(i)
-  WHERE len(w) >= 8
-),
-dup AS (
-  SELECT gram FROM grams GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= 2
-),
-hits AS (SELECT g.doc_id, g.pos FROM grams g JOIN dup USING (gram)),
-isl AS (
-  SELECT doc_id, pos,
-    CASE WHEN pos > COALESCE(MAX(pos + 8) OVER (
-        PARTITION BY doc_id ORDER BY pos
-        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-      THEN 1 ELSE 0 END AS brk
-  FROM hits
-),
-grp AS (
-  SELECT doc_id, pos, SUM(brk) OVER (
-    PARTITION BY doc_id ORDER BY pos
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-  FROM isl
-),
+    _DUP_SPANS_CTE + """,
 islands AS (
   SELECT doc_id, [MIN(pos), MAX(pos) + 8] AS r
   FROM grp GROUP BY doc_id, island
@@ -2147,30 +2304,7 @@ def q_doc_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "training_corpus_summary",
-    """
-WITH cleaned AS (
-  SELECT doc_id, source,
-    COALESCE(array_to_string(
-      list_filter(list_transform(string_split(text, chr(10)), s -> trim(s)),
-                  s -> s <> '' AND len(string_split_regex(s, '\\s+')) >= 50),
-      chr(10)), '') AS clean_text
-  FROM documents
-  WHERE NOT (contains(lower(text), 'lorem ipsum')
-             OR contains(lower(text), 'slow scan'))
-),
-nonempty AS (SELECT * FROM cleaned WHERE clean_text <> ''),
-deduped AS (
-  SELECT doc_id, source, clean_text FROM (
-    SELECT *, MIN(doc_id) OVER (PARTITION BY md5(clean_text)) AS keeper
-    FROM nonempty
-  ) WHERE doc_id = keeper
-),
-quality AS (
-  SELECT doc_id, source,
-    len(string_split_regex(trim(clean_text), '\\s+'))::BIGINT AS n_tokens
-  FROM deduped
-  WHERE len(string_split_regex(trim(clean_text), '\\s+')) BETWEEN 5 AND 5000
-)
+    _CLEANED_CTE + ",\n" + _DEDUPED_CTE + ",\n" + _QUALITY_CTE + """
 SELECT n.source,
   n.n_cleaned,
   d.n_deduped,
@@ -2246,29 +2380,8 @@ def q_doc_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Near-duplicate detection: MinHash + LSH + Jaccard, SimHash
 # =====================================================================
 
-_MINHASH_CTE = """
-WITH words AS (
-  SELECT doc_id,
-    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-  FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS shingle
-  FROM words, UNNEST(generate_series(1, greatest(len(w) - 2, 0))) AS t(i)
-  WHERE len(w) >= 3
-),
-sig AS (
-  SELECT doc_id,
-    MIN(md5('0#' || shingle)) AS mh0, MIN(md5('1#' || shingle)) AS mh1,
-    MIN(md5('2#' || shingle)) AS mh2, MIN(md5('3#' || shingle)) AS mh3,
-    MIN(md5('4#' || shingle)) AS mh4, MIN(md5('5#' || shingle)) AS mh5,
-    MIN(md5('6#' || shingle)) AS mh6, MIN(md5('7#' || shingle)) AS mh7
-  FROM sh GROUP BY doc_id
-)
-"""
 
-
-@query("minhash_signatures", _MINHASH_CTE + "SELECT * FROM sig")
+@query("minhash_signatures", _MINHASH_CTE + "\nSELECT * FROM sig")
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (8 hash functions, 3-word shingles): explode
     shingles -> one grouped aggregation with 8 min() exprs. md5-hex min is
@@ -2279,36 +2392,54 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_signature(d, num_hashes=8, shingle_k=3)
 
 
-_LSH_PAIRS_CTE = _MINHASH_CTE + """,
-bands AS (
-  SELECT doc_id, 0 AS band_idx, mh0 || '|' || mh1 AS band_key FROM sig
-  UNION ALL SELECT doc_id, 1, mh2 || '|' || mh3 FROM sig
-  UNION ALL SELECT doc_id, 2, mh4 || '|' || mh5 FROM sig
-  UNION ALL SELECT doc_id, 3, mh6 || '|' || mh7 FROM sig
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-   AND a.doc_id < b.doc_id
-)
-"""
+def _lsh_pairs(d: DataFrame) -> DataFrame:
+    """LSH candidate pairs (id_a < id_b) of the documents ``d``: MinHash
+    with 8 hashes over 3-word shingles, then 4 bands of 2 — the scheme
+    ``_LSH_PAIRS_CTE`` replays."""
+    from fireball_data_processing_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        minhash_signature,
+    )
+
+    sigs = minhash_signature(d, num_hashes=8, shingle_k=3)
+    return lsh_candidate_pairs(sigs, num_hashes=8, band_size=2)
+
+
+def _lsh_components(d: DataFrame) -> DataFrame:
+    """(vertex, component) over ``_lsh_pairs(d)``: iterative min-label
+    propagation, which ``_LSH_CLOSURE_CTE`` closes with a recursive CTE."""
+    from fireball_data_processing_spark.operators.dedup import connected_components
+
+    return connected_components(_lsh_pairs(d))
+
+
+def _lsh_jaccard_pairs(d: DataFrame) -> DataFrame:
+    """``_lsh_pairs(d)`` with their exact shingle Jaccard. Signatures and
+    shingle sets come out of ONE grouped pass over one scan
+    (with_shingles=True), and that pass is PERSISTED: without it the three
+    downstream consumers (both sides of the band self-join, the Jaccard
+    shingle lookups) each re-execute the fat subtree — broadcast stages
+    get no exchange reuse — which profiled 2x slower at sf0.1. The cache
+    is the in-memory analog of ``build_minhash_index`` (the parquet-backed
+    form for corpora that outlive one job); it is invocation-scoped and
+    bounded by the signature+shingle table size."""
+    from fireball_data_processing_spark.operators.dedup import (
+        jaccard_pairs,
+        lsh_candidate_pairs,
+        minhash_signature,
+    )
+
+    sigs = minhash_signature(
+        d, num_hashes=8, shingle_k=3, with_shingles=True
+    ).persist()
+    pairs = lsh_candidate_pairs(sigs, num_hashes=8, band_size=2)
+    sh = sigs.select(F.col("doc_id"), F.col("__sh").alias("sh"))
+    return jaccard_pairs(d, pairs, shingle_k=3, shingle_sets=sh)
 
 
 @query(
     "near_dup_clusters",
-    # the shared minhash/LSH CTE chain, made RECURSIVE for the closure CTE
-    _LSH_PAIRS_CTE.replace("WITH words", "WITH RECURSIVE words", 1)
-    + """,
-e AS (
-  SELECT id_a AS a, id_b AS b FROM cand
-  UNION SELECT id_b, id_a FROM cand
-),
-reach(a, b) AS (
-  SELECT a, b FROM e
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
-)
+    _LSH_CLOSURE_CTE + """
 SELECT a AS doc_id, LEAST(a, MIN(b)) AS canonical_id FROM reach GROUP BY a
 """,
 )
@@ -2318,16 +2449,8 @@ def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Components via iterative min-label propagation (the oracle closes the
     same graph with a recursive CTE); canonical = min doc_id in the
     cluster. Covers every doc that appears in any candidate pair."""
-    from fireball_data_processing_spark.operators.dedup import (
-        connected_components,
-        lsh_candidate_pairs,
-        minhash_signature,
-    )
-
     d = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signature(d, num_hashes=8, shingle_k=3)
-    pairs = lsh_candidate_pairs(sigs, num_hashes=8, band_size=2)
-    comp = connected_components(pairs)
+    comp = _lsh_components(d)
     return comp.select(
         F.col("vertex").alias("doc_id"), F.col("component").alias("canonical_id")
     )
@@ -2337,14 +2460,8 @@ def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded LSH candidate generation (4 bands x 2 hashes): the self-join
     is confined to band buckets — the scale path for near-dedup."""
-    from fireball_data_processing_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signature,
-    )
-
     d = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signature(d, num_hashes=8, shingle_k=3)
-    return lsh_candidate_pairs(sigs, num_hashes=8, band_size=2)
+    return _lsh_pairs(d)
 
 
 @query(
@@ -2365,28 +2482,10 @@ JOIN (SELECT doc_id, list_distinct(list(shingle)) AS shs FROM sh GROUP BY doc_id
 )
 def q_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full near-dedup pipeline: MinHash -> LSH bands -> candidate pairs ->
-    exact n-gram Jaccard verification on candidates only. Signatures and
-    shingle sets come out of ONE grouped pass over one scan
-    (with_shingles=True), and that pass is PERSISTED: without it the three
-    downstream consumers (both sides of the band self-join, the Jaccard
-    shingle lookups) each re-execute the fat subtree — broadcast stages
-    get no exchange reuse — which profiled 2x slower at sf0.1. The cache
-    is the in-memory analog of ``build_minhash_index`` (the parquet-backed
-    form for corpora that outlive one job); it is invocation-scoped and
-    bounded by the signature+shingle table size."""
-    from fireball_data_processing_spark.operators.dedup import (
-        jaccard_pairs,
-        lsh_candidate_pairs,
-        minhash_signature,
-    )
-
+    exact n-gram Jaccard verification on candidates only
+    (``_lsh_jaccard_pairs``)."""
     d = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signature(
-        d, num_hashes=8, shingle_k=3, with_shingles=True
-    ).persist()
-    pairs = lsh_candidate_pairs(sigs, num_hashes=8, band_size=2)
-    sh = sigs.select(F.col("doc_id"), F.col("__sh").alias("sh"))
-    j = jaccard_pairs(d, pairs, shingle_k=3, shingle_sets=sh)
+    j = _lsh_jaccard_pairs(d)
     return j.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
@@ -4600,27 +4699,7 @@ _BM25_QUERIES = (
     (3, "stream batch query"),
 )
 
-_BM25_ORACLE = """
-WITH q(query_id, query_text) AS (
-  VALUES (1, 'spark window aggregation'),
-         (2, 'hash join shuffle partition'),
-         (3, 'stream batch query')
-),
-qt AS (
-  SELECT DISTINCT query_id, unnest(regexp_extract_all(lower(query_text), '[a-z0-9]+')) AS term
-  FROM q
-),
-tok AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents
-),
-stats AS (SELECT COUNT(*) AS n_docs, AVG(len(toks)) AS avgdl FROM tok),
-exploded AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM tok),
-post AS (
-  SELECT doc_id, dl, term, COUNT(*) AS tf FROM exploded
-  WHERE term IN (SELECT term FROM qt)
-  GROUP BY doc_id, dl, term
-),
-dft AS (SELECT term, COUNT(*) AS df FROM post GROUP BY term),
+_BM25_ORACLE = _BM25_POSTINGS_CTE + """,
 scored AS (
   SELECT qt.query_id, post.doc_id,
     ROUND(SUM(
@@ -4688,9 +4767,7 @@ def q_bm25_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _TFIDF_ORACLE = """
-WITH tok AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents
-),
+WITH """ + _DOC_TERMS_CTE + """,
 exploded AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM tok),
 post AS (
   SELECT doc_id, dl, term, COUNT(*) AS tf FROM exploded GROUP BY doc_id, dl, term
@@ -4874,18 +4951,7 @@ def q_token_budget_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "quality", "n_tokens", "cum_tokens")
 
 
-_LEAKAGE_SPLIT_ORACLE = (
-    _LSH_PAIRS_CTE.replace("WITH words", "WITH RECURSIVE words", 1)
-    + """,
-e AS (
-  SELECT id_a AS a, id_b AS b FROM cand
-  UNION SELECT id_b, id_a FROM cand
-),
-reach(a, b) AS (
-  SELECT a, b FROM e
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
-),
+_LEAKAGE_SPLIT_ORACLE = _LSH_CLOSURE_CTE + """,
 canon AS (
   SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id FROM reach GROUP BY a
 ),
@@ -4904,7 +4970,6 @@ SELECT split, COUNT(*)::BIGINT AS n_docs,
        COUNT(DISTINCT cluster_id)::BIGINT AS n_clusters
 FROM s GROUP BY split
 """
-)
 
 
 @query("leakage_safe_split", _LEAKAGE_SPLIT_ORACLE)
@@ -4918,19 +4983,12 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     `train_test_split_counts`, so the whole family shares one
     deterministic split function. Components are the iterative min-label
     propagation (the oracle closes the same graph with a recursive CTE)."""
-    from fireball_data_processing_spark.operators.dedup import (
-        connected_components,
-        lsh_candidate_pairs,
-        minhash_signature,
-    )
     from fireball_data_processing_spark.operators.sampling import (
         deterministic_split,
     )
 
     d = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signature(d, num_hashes=8, shingle_k=3)
-    pairs = lsh_candidate_pairs(sigs, num_hashes=8, band_size=2)
-    comp = connected_components(pairs)
+    comp = _lsh_components(d)
     canon = (
         d.select("doc_id")
         .join(comp, d["doc_id"] == comp["vertex"], "left")
@@ -5462,27 +5520,7 @@ def q_windowed_mix_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return score_windows_psi(wc, base)
 
 
-_HYBRID_ORACLE = f"""
-WITH q(query_id, query_text) AS (
-  VALUES (1, 'spark window aggregation'),
-         (2, 'hash join shuffle partition'),
-         (3, 'stream batch query')
-),
-qt AS (
-  SELECT DISTINCT query_id, unnest(regexp_extract_all(lower(query_text), '[a-z0-9]+')) AS term
-  FROM q
-),
-tok AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents
-),
-stats AS (SELECT COUNT(*) AS n_docs, AVG(len(toks)) AS avgdl FROM tok),
-exploded AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM tok),
-post AS (
-  SELECT doc_id, dl, term, COUNT(*) AS tf FROM exploded
-  WHERE term IN (SELECT term FROM qt)
-  GROUP BY doc_id, dl, term
-),
-dft AS (SELECT term, COUNT(*) AS df FROM post GROUP BY term),
+_HYBRID_ORACLE = _BM25_POSTINGS_CTE + f""",
 bm_scored AS (
   SELECT qt.query_id, post.doc_id,
     ROUND(SUM(
@@ -5854,18 +5892,7 @@ cleaned AS (
              OR contains(lower(text), 'slow scan'))
 ),
 nonempty AS (SELECT * FROM cleaned WHERE clean_text <> ''),
-deduped AS (
-  SELECT doc_id, source, clean_text FROM (
-    SELECT *, MIN(doc_id) OVER (PARTITION BY md5(clean_text)) AS keeper
-    FROM nonempty
-  ) WHERE doc_id = keeper
-),
-quality AS (
-  SELECT doc_id, source,
-    len(string_split_regex(trim(clean_text), '\\s+'))::BIGINT AS n_tokens
-  FROM deduped
-  WHERE len(string_split_regex(trim(clean_text), '\\s+')) BETWEEN 5 AND 5000
-),
+""" + _DEDUPED_CTE + ",\n" + _QUALITY_CTE + """,
 capped AS (
   SELECT doc_id, source, n_tokens FROM (
     SELECT q.*, ROW_NUMBER() OVER (
@@ -6179,15 +6206,8 @@ WITH words AS (
       s -> trim(s)), s -> s <> '') AS w
   FROM documents
 ),
-segs AS (
-  SELECT doc_id, (st // 8)::BIGINT AS seg_idx,
-         array_to_string(list_slice(w, st + 1, st + 8), ' ') AS seg
-  FROM words, UNNEST(generate_series(0, greatest(len(w) - 1, 0), 8)) AS t(st)
-),
-st AS (
-  SELECT seg, COUNT(DISTINCT doc_id) AS nd, MIN(doc_id) AS keeper
-  FROM segs GROUP BY seg
-),
+""" + _SEGMENTS_CTE + """,
+st AS """ + _SEG_STATS_BODY + """,
 marked AS (
   SELECT s.doc_id, s.seg_idx, s.seg,
     (st.nd >= 2 AND s.doc_id <> st.keeper) AS removed
@@ -6218,18 +6238,7 @@ def q_cross_doc_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return line_dedup(d, seg_words=8, min_docs=2, keep_first=True)
 
 
-_SETJOIN_ORACLE = """
-WITH words AS (
-  SELECT doc_id,
-    list_filter(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '),
-                s -> s <> '') AS w
-  FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS shingle
-  FROM words, UNNEST(generate_series(1, greatest(len(w) - 2, 1))) AS t(i)
-  WHERE len(w) >= 3
-),
+_SETJOIN_ORACLE = _WORDS_NONEMPTY_CTE + ",\n" + _SETJOIN_SH_CTE + """,
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
@@ -6260,28 +6269,7 @@ def q_set_similarity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return set_similarity_join(d, threshold=0.5, k=3)
 
 
-_BIGRAM_LM_ORACLE = """
-WITH words AS (
-  SELECT doc_id,
-    list_filter(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '),
-                s -> s <> '') AS w
-  FROM documents
-),
-v AS (
-  SELECT COUNT(DISTINCT t)::DOUBLE AS vsz
-  FROM (SELECT UNNEST(w) AS t FROM words)
-),
-big AS (
-  SELECT doc_id, w[i] AS prev, w[i + 1] AS cur
-  FROM words, UNNEST(generate_series(1, len(w) - 1)) AS t(i)
-  WHERE len(w) >= 2
-),
-cnt AS (
-  SELECT doc_id,
-    COUNT(*) OVER (PARTITION BY prev, cur)::DOUBLE AS cb,
-    COUNT(*) OVER (PARTITION BY prev)::DOUBLE AS cp
-  FROM big
-)
+_BIGRAM_LM_ORACLE = _WORDS_NONEMPTY_CTE + ",\n" + _BIGRAM_COUNTS_CTE + """
 SELECT doc_id,
   ROUND(AVG(-log2((cb + 0.5) / (cp + 0.5 * vsz))), 6)
     AS avg_neg_log2_bigram_prob,
@@ -6304,18 +6292,7 @@ def q_doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bigram_logprob(d, alpha=0.5)
 
 
-_SEG_SCRUB_ORACLE = """
-WITH words AS (
-  SELECT doc_id,
-    list_filter(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '),
-                s -> s <> '') AS w
-  FROM documents
-),
-segs AS (
-  SELECT doc_id, (st // 8)::BIGINT AS seg_idx,
-         array_to_string(list_slice(w, st + 1, st + 8), ' ') AS seg
-  FROM words, UNNEST(generate_series(0, greatest(len(w) - 1, 0), 8)) AS t(st)
-),
+_SEG_SCRUB_ORACLE = _WORDS_NONEMPTY_CTE + ",\n" + _SEGMENTS_CTE + """,
 idx AS (
   SELECT DISTINCT seg FROM segs WHERE doc_id % 4 = 0
 ),
@@ -6359,18 +6336,7 @@ def q_segment_scrub_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CORPUS_V3_ORACLE = """
-WITH cleaned AS (
-  SELECT doc_id, source,
-    COALESCE(array_to_string(
-      list_filter(list_transform(string_split(text, chr(10)), s -> trim(s)),
-                  s -> s <> '' AND len(string_split_regex(s, '\\s+')) >= 50),
-      chr(10)), '') AS clean_text
-  FROM documents
-  WHERE NOT (contains(lower(text), 'lorem ipsum')
-             OR contains(lower(text), 'slow scan'))
-),
-nonempty AS (SELECT * FROM cleaned WHERE clean_text <> ''),
+_CORPUS_V3_ORACLE = _CLEANED_CTE + """,
 segwords AS (
   SELECT doc_id, source,
     list_filter(string_split(trim(regexp_replace(lower(clean_text), '\\s+', ' ', 'g')), ' '),
@@ -6382,10 +6348,7 @@ segs AS (
          array_to_string(list_slice(w, st + 1, st + 8), ' ') AS seg
   FROM segwords, UNNEST(generate_series(0, greatest(len(w) - 1, 0), 8)) AS t(st)
 ),
-segstats AS (
-  SELECT seg, COUNT(DISTINCT doc_id) AS nd, MIN(doc_id) AS keeper
-  FROM segs GROUP BY seg
-),
+segstats AS """ + _SEG_STATS_BODY + """,
 marked AS (
   SELECT s.doc_id, s.source, s.seg_idx, s.seg,
     (ss.nd >= 2 AND s.doc_id <> ss.keeper) AS removed
@@ -6406,12 +6369,7 @@ deduped AS (
     FROM segd_live
   ) WHERE doc_id = keeper
 ),
-quality AS (
-  SELECT doc_id, source,
-    len(string_split_regex(trim(clean_text), '\\s+'))::BIGINT AS n_tokens
-  FROM deduped
-  WHERE len(string_split_regex(trim(clean_text), '\\s+')) BETWEEN 5 AND 5000
-)
+""" + _QUALITY_CTE + """
 SELECT c.source, c.n_cleaned, s.n_seg_deduped, s.seg_removed,
   q.n_quality, q.total_tokens,
   (q.total_tokens + 255) // 256 AS n_bins
@@ -6470,19 +6428,7 @@ def q_corpus_pipeline_v3_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WINNOW_ORACLE = """
-WITH words AS (
-  SELECT doc_id,
-    list_filter(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '),
-                s -> s <> '') AS w
-  FROM documents
-),
-grams AS (
-  SELECT doc_id,
-    list_transform(generate_series(1, len(w) - 3),
-                   i -> md5(array_to_string(list_slice(w, i, i + 3), ' '))) AS g
-  FROM words WHERE len(w) >= 4
-)
+_WINNOW_ORACLE = _WINNOW_GRAMS_CTE + """
 SELECT DISTINCT doc_id,
   list_min(list_slice(g, j, j + 3)) AS fingerprint
 FROM grams,
@@ -6506,17 +6452,7 @@ def q_winnow_fingerprint_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winnow_fingerprints(d, k=4, window=4).distinct()
 
 
-_CONTAINMENT_ORACLE = """
-WITH words AS (
-  SELECT doc_id,
-    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-  FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS shingle
-  FROM words, UNNEST(generate_series(1, greatest(len(w) - 2, 1))) AS t(i)
-  WHERE len(w) >= 3
-),
+_CONTAINMENT_ORACLE = _WORDS_CTE + ",\n" + _SETJOIN_SH_CTE + """,
 bench AS (SELECT doc_id AS bench_id, shingle FROM sh WHERE doc_id % 10 = 0),
 bsize AS (SELECT bench_id, COUNT(*) AS n_bench_grams FROM bench GROUP BY bench_id),
 train AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 10 <> 0),
@@ -6664,15 +6600,10 @@ def q_corpus_diversity_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by n-gram occurrences of CANDIDATE docs only. At 100 TB the
     LSH stage prunes the quadratic space first; BLEU touches only the
     sliver that survives banding."""
-    from fireball_data_processing_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signature,
-    )
     from fireball_data_processing_spark.operators.evalmetrics import bleu_pairs
 
     d = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signature(d, num_hashes=8, shingle_k=3)
-    cand = lsh_candidate_pairs(sigs, num_hashes=8, band_size=2)
+    cand = _lsh_pairs(d)
     pairs = (
         cand.join(
             d.select(F.col("doc_id").alias("id_a"), F.col("text").alias("prediction")),
@@ -6844,19 +6775,7 @@ def q_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("query_id", "mmr_rank")
 
 
-_WINNOW_PAIRS_ORACLE = """
-WITH words AS (
-  SELECT doc_id,
-    list_filter(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '),
-                s -> s <> '') AS w
-  FROM documents
-),
-grams AS (
-  SELECT doc_id,
-    list_transform(generate_series(1, len(w) - 3),
-                   i -> md5(array_to_string(list_slice(w, i, i + 3), ' '))) AS g
-  FROM words WHERE len(w) >= 4
-),
+_WINNOW_PAIRS_ORACLE = _WINNOW_GRAMS_CTE + """,
 fps AS (
   SELECT DISTINCT doc_id, list_min(list_slice(g, j, j + 3)) AS fingerprint
   FROM grams, UNNEST(generate_series(1, greatest(len(g) - 3, 1))) AS t(j)
@@ -6902,37 +6821,13 @@ def q_winnow_copy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CONTAM_SPANS_ORACLE = """
-WITH words AS (
-  SELECT doc_id,
-    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-  FROM documents
-),
-grams AS (
-  SELECT doc_id, i - 1 AS pos,
-    md5(array_to_string(list_slice(w, i, i + 7), ' ')) AS gram
-  FROM words, UNNEST(generate_series(1, len(w) - 7)) AS t(i)
-  WHERE len(w) >= 8
-),
+_CONTAM_SPANS_ORACLE = _SPAN_GRAMS_CTE + """,
 bg AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 10 = 0),
 hits AS (
   SELECT g.doc_id, g.pos FROM grams g JOIN bg USING (gram)
   WHERE g.doc_id % 10 <> 0
 ),
-isl AS (
-  SELECT doc_id, pos,
-    CASE WHEN pos > COALESCE(MAX(pos + 8) OVER (
-        PARTITION BY doc_id ORDER BY pos
-        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-      THEN 1 ELSE 0 END AS brk
-  FROM hits
-),
-grp AS (
-  SELECT doc_id, pos, SUM(brk) OVER (
-    PARTITION BY doc_id ORDER BY pos
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-  FROM isl
-)
+""" + _SPAN_ISLANDS_CTE + """
 SELECT doc_id,
   MIN(pos)::BIGINT AS span_start,
   (MAX(pos) + 8)::BIGINT AS span_end,
@@ -7146,13 +7041,7 @@ def q_kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmeans_summary(assigned).orderBy("cluster_id")
 
 
-_CDC_CHUNKS_ORACLE = """
-WITH words AS (
-  SELECT doc_id,
-    list_filter(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '),
-                s -> s <> '') AS w
-  FROM documents
-),
+_CDC_CHUNKS_ORACLE = _WORDS_NONEMPTY_CTE + """,
 occ AS (
   SELECT doc_id, i - 1 AS pos, w[i] AS word,
     CASE WHEN ('0x' || substr(md5(w[i]), 1, 8))::BIGINT % 16 = 0
@@ -7342,24 +7231,7 @@ def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CORPUS_V4_ORACLE = """
-WITH cleaned AS (
-  SELECT doc_id, source,
-    COALESCE(array_to_string(
-      list_filter(list_transform(string_split(text, chr(10)), s -> trim(s)),
-                  s -> s <> '' AND len(string_split_regex(s, '\\s+')) >= 50),
-      chr(10)), '') AS clean_text
-  FROM documents
-  WHERE NOT (contains(lower(text), 'lorem ipsum')
-             OR contains(lower(text), 'slow scan'))
-),
-nonempty AS (SELECT * FROM cleaned WHERE clean_text <> ''),
-deduped AS (
-  SELECT doc_id, source, clean_text FROM (
-    SELECT *, MIN(doc_id) OVER (PARTITION BY md5(clean_text)) AS keeper
-    FROM nonempty
-  ) WHERE doc_id = keeper
-),
+_CORPUS_V4_ORACLE = _CLEANED_CTE + ",\n" + _DEDUPED_CTE + """,
 quality AS (
   SELECT doc_id, source, clean_text,
     len(string_split_regex(trim(clean_text), '\\s+'))::BIGINT AS n_tokens
@@ -7372,21 +7244,7 @@ words AS (
                 '\\s+', ' ', 'g')), ' '), s -> s <> '') AS w
   FROM quality
 ),
-v AS (
-  SELECT COUNT(DISTINCT t)::DOUBLE AS vsz
-  FROM (SELECT UNNEST(w) AS t FROM words)
-),
-big AS (
-  SELECT doc_id, w[i] AS prev, w[i + 1] AS cur
-  FROM words, UNNEST(generate_series(1, len(w) - 1)) AS t(i)
-  WHERE len(w) >= 2
-),
-cnt AS (
-  SELECT doc_id,
-    COUNT(*) OVER (PARTITION BY prev, cur)::DOUBLE AS cb,
-    COUNT(*) OVER (PARTITION BY prev)::DOUBLE AS cp
-  FROM big
-),
+""" + _BIGRAM_COUNTS_CTE + """,
 lm AS (
   SELECT doc_id, ROUND(AVG(-log2((cb + 0.5) / (cp + 0.5 * vsz))), 6) AS s
   FROM cnt, v GROUP BY doc_id
@@ -7469,13 +7327,7 @@ def q_corpus_pipeline_v4_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _RP_SKETCH_ORACLE = """
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-s AS (
-  SELECT j, list_transform(generate_series(1, 64),
-    i -> CASE WHEN ('0x' || substr(md5(j::VARCHAR || '#' ||
-                    (i - 1)::VARCHAR), 1, 1))::INT % 2 = 0
-         THEN 1.0 ELSE -1.0 END) AS signs
-  FROM UNNEST(generate_series(0, 15)) AS t(j)
-)
+""" + _RP_SIGNS_CTE + """
 SELECT e.vec_id, s.j::INT AS dim_idx,
   ROUND(list_sum(list_transform(generate_series(1, len(e.v)),
         i -> e.v[i] * s.signs[i])) / sqrt(16.0), 6) AS component
@@ -7503,15 +7355,9 @@ def q_embedding_rp_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rp_sketch_components(e, out_dim=16)
 
 
-_RP_ANN_ORACLE = f"""
+_RP_ANN_ORACLE = """
 WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
-s AS (
-  SELECT j, list_transform(generate_series(1, 64),
-    i -> CASE WHEN ('0x' || substr(md5(j::VARCHAR || '#' ||
-                    (i - 1)::VARCHAR), 1, 1))::INT % 2 = 0
-         THEN 1.0 ELSE -1.0 END) AS signs
-  FROM UNNEST(generate_series(0, 15)) AS t(j)
-),
+""" + _RP_SIGNS_CTE + """,
 sk AS (
   SELECT vec_id, list(comp ORDER BY j) AS sv FROM (
     SELECT e.vec_id, s.j,
@@ -7520,10 +7366,7 @@ sk AS (
     FROM e, s
   ) GROUP BY vec_id
 ),
-q AS (
-  SELECT e.vec_id AS query_id, e.v AS qv, sk.sv AS qs
-  FROM e JOIN sk USING (vec_id) WHERE e.vec_id < 10
-),
+""" + _SKETCH_QUERIES_CTE + f""",
 c AS (
   SELECT e.vec_id AS neighbor_id, e.v AS cv, sk.sv AS cs
   FROM e JOIN sk USING (vec_id)
@@ -7575,13 +7418,7 @@ def q_rp_ann_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SKETCH_PRELUDE = """
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-s AS (
-  SELECT j, list_transform(generate_series(1, 64),
-    i -> CASE WHEN ('0x' || substr(md5(j::VARCHAR || '#' ||
-                    (i - 1)::VARCHAR), 1, 1))::INT % 2 = 0
-         THEN 1.0 ELSE -1.0 END) AS signs
-  FROM UNNEST(generate_series(0, 15)) AS t(j)
-),
+""" + _RP_SIGNS_CTE + """,
 sk AS (
   SELECT vec_id, list(comp ORDER BY j) AS sv FROM (
     SELECT e.vec_id, s.j,
@@ -7598,11 +7435,9 @@ def _rp_ivf_oracle(k: int, n_probe: int, n_cells: int, n_iter: int) -> str:
     )
     return (
         cte
+        + ",\n"
+        + _SKETCH_QUERIES_CTE
         + f""",
-q AS (
-  SELECT e.vec_id AS query_id, e.v AS qv, sk.sv AS qs
-  FROM e JOIN sk USING (vec_id) WHERE e.vec_id < 10
-),
 pd AS (
   SELECT q.query_id, c.cid,
     list_sum(list_transform(generate_series(1, 16),
@@ -7661,28 +7496,7 @@ def q_rp_ivf_topk_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FROZEN_GATE_ORACLE = """
-WITH words AS (
-  SELECT doc_id,
-    list_filter(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '),
-                s -> s <> '') AS w
-  FROM documents
-),
-v AS (
-  SELECT COUNT(DISTINCT t)::DOUBLE AS vsz
-  FROM (SELECT UNNEST(w) AS t FROM words)
-),
-big AS (
-  SELECT doc_id, w[i] AS prev, w[i + 1] AS cur
-  FROM words, UNNEST(generate_series(1, len(w) - 1)) AS t(i)
-  WHERE len(w) >= 2
-),
-cnt AS (
-  SELECT doc_id,
-    COUNT(*) OVER (PARTITION BY prev, cur)::DOUBLE AS cb,
-    COUNT(*) OVER (PARTITION BY prev)::DOUBLE AS cp
-  FROM big
-),
+_FROZEN_GATE_ORACLE = _WORDS_NONEMPTY_CTE + ",\n" + _BIGRAM_COUNTS_CTE + """,
 lmscore AS (
   SELECT doc_id,
     ROUND(AVG(-log2((cb + 0.5) / (cp + 0.5 * vsz))), 6)
@@ -7978,21 +7792,7 @@ def q_tokenizer_fertility_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_THRESHOLD_SWEEP_ORACLE = (
-    _LSH_PAIRS_CTE
-    + """,
-shs AS (SELECT doc_id, list_distinct(list(shingle)) AS shs FROM sh GROUP BY doc_id),
-jp AS (
-  SELECT c.id_a, c.id_b,
-    ROUND(
-      len(list_intersect(a.shs, b.shs))::DOUBLE
-      / (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs)))::DOUBLE,
-    6) AS jaccard
-  FROM cand c
-  JOIN shs a ON a.doc_id = c.id_a
-  JOIN shs b ON b.doc_id = c.id_b
-),
-grid AS (SELECT 10 * x AS threshold_pct FROM generate_series(1, 9) t(x)),
+_THRESHOLD_SWEEP_ORACLE = _LSH_JACCARD_CTE + """,
 hits AS (
   SELECT g.threshold_pct, j.id_a, j.id_b
   FROM jp j JOIN grid g ON j.jaccard >= g.threshold_pct / 100.0
@@ -8011,7 +7811,6 @@ FROM grid g
 LEFT JOIN pc ON pc.threshold_pct = g.threshold_pct
 LEFT JOIN dc ON dc.threshold_pct = g.threshold_pct
 """
-)
 
 
 @query("dedup_threshold_sweep", _THRESHOLD_SWEEP_ORACLE)
@@ -8027,35 +7826,14 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass); the sweep itself is a 9-row broadcast grid against the
     candidate-bounded pair frame plus two grouped aggregates — corpus
     text never enters the sweep."""
-    from fireball_data_processing_spark.operators.dedup import (
-        jaccard_pairs,
-        lsh_candidate_pairs,
-        minhash_signature,
-        score_threshold_sweep,
-    )
+    from fireball_data_processing_spark.operators.dedup import score_threshold_sweep
 
     d = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signature(
-        d, num_hashes=8, shingle_k=3, with_shingles=True
-    ).persist()
-    pairs = lsh_candidate_pairs(sigs, num_hashes=8, band_size=2)
-    sh = sigs.select(F.col("doc_id"), F.col("__sh").alias("sh"))
-    j = jaccard_pairs(d, pairs, shingle_k=3, shingle_sets=sh)
+    j = _lsh_jaccard_pairs(d)
     return score_threshold_sweep(j).orderBy("threshold_pct")
 
 
-_CLUSTER_HIST_ORACLE = (
-    _LSH_PAIRS_CTE.replace("WITH words", "WITH RECURSIVE words", 1)
-    + """,
-e AS (
-  SELECT id_a AS a, id_b AS b FROM cand
-  UNION SELECT id_b, id_a FROM cand
-),
-reach(a, b) AS (
-  SELECT a, b FROM e
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
-),
+_CLUSTER_HIST_ORACLE = _LSH_CLOSURE_CTE + """,
 comp AS (SELECT a AS vertex, LEAST(a, MIN(b)) AS component FROM reach GROUP BY a),
 sizes AS (SELECT component, COUNT(*) AS cluster_size FROM comp GROUP BY component),
 hist AS (
@@ -8069,7 +7847,6 @@ SELECT 1 AS cluster_size,
   (SELECT COUNT(*) FROM documents) - (SELECT COUNT(*) FROM comp) AS n_clusters,
   (SELECT COUNT(*) FROM documents) - (SELECT COUNT(*) FROM comp) AS n_docs
 """
-)
 
 
 @query("dup_cluster_size_histogram", _CLUSTER_HIST_ORACLE)
@@ -8084,38 +7861,17 @@ def q_dup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster problem; Lee et al. 2021's cluster-size figure is this
     table. Both aggregates are over pair-bounded component labels; the
     oracle closes the same graph with a recursive CTE."""
-    from fireball_data_processing_spark.operators.dedup import (
-        cluster_size_histogram,
-        connected_components,
-        lsh_candidate_pairs,
-        minhash_signature,
-    )
+    from fireball_data_processing_spark.operators.dedup import cluster_size_histogram
 
     d = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signature(d, num_hashes=8, shingle_k=3)
-    pairs = lsh_candidate_pairs(sigs, num_hashes=8, band_size=2)
-    comp = connected_components(pairs)
+    comp = _lsh_components(d)
     total = d.agg(F.count(F.lit(1)).cast("bigint").alias("n_tot"))
     return cluster_size_histogram(comp, n_total_docs=total).orderBy(
         "cluster_size"
     )
 
 
-_TOKEN_MASS_SWEEP_ORACLE = (
-    _LSH_PAIRS_CTE
-    + """,
-shs AS (SELECT doc_id, list_distinct(list(shingle)) AS shs FROM sh GROUP BY doc_id),
-jp AS (
-  SELECT c.id_a, c.id_b,
-    ROUND(
-      len(list_intersect(a.shs, b.shs))::DOUBLE
-      / (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs)))::DOUBLE,
-    6) AS jaccard
-  FROM cand c
-  JOIN shs a ON a.doc_id = c.id_a
-  JOIN shs b ON b.doc_id = c.id_b
-),
-grid AS (SELECT 10 * x AS threshold_pct FROM generate_series(1, 9) t(x)),
+_TOKEN_MASS_SWEEP_ORACLE = _LSH_JACCARD_CTE + """,
 docs_hit AS (
   SELECT DISTINCT threshold_pct, doc FROM (
     SELECT g.threshold_pct, j.id_a AS doc
@@ -8141,7 +7897,6 @@ SELECT g.threshold_pct,
   COALESCE(a.n_tokens, 0) AS n_tokens
 FROM grid g LEFT JOIN agg a ON a.threshold_pct = g.threshold_pct
 """
-)
 
 
 @query("dedup_token_mass_sweep", _TOKEN_MASS_SWEEP_ORACLE)
@@ -8155,20 +7910,10 @@ def q_dedup_token_mass_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct rows stay pair-bounded x 9; the corpus-sized token frame
     streams against the BROADCAST hit set; zero rows restored by a grid
     left-merge."""
-    from fireball_data_processing_spark.operators.dedup import (
-        jaccard_pairs,
-        lsh_candidate_pairs,
-        minhash_signature,
-        threshold_doc_hits,
-    )
+    from fireball_data_processing_spark.operators.dedup import threshold_doc_hits
 
     d = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signature(
-        d, num_hashes=8, shingle_k=3, with_shingles=True
-    ).persist()
-    pairs = lsh_candidate_pairs(sigs, num_hashes=8, band_size=2)
-    sh = sigs.select(F.col("doc_id"), F.col("__sh").alias("sh"))
-    j = jaccard_pairs(d, pairs, shingle_k=3, shingle_sets=sh)
+    j = _lsh_jaccard_pairs(d)
     # pair-bounded x 9 rows, consumed by TWO broadcast builds below —
     # pin so the band-join + jaccard subtree executes once
     hits = threshold_doc_hits(j).persist()
@@ -8211,18 +7956,7 @@ def q_dedup_token_mass_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QUALITY_SURVIVORS_ORACLE = (
-    _LSH_PAIRS_CTE.replace("WITH words", "WITH RECURSIVE words", 1)
-    + """,
-e AS (
-  SELECT id_a AS a, id_b AS b FROM cand
-  UNION SELECT id_b, id_a FROM cand
-),
-reach(a, b) AS (
-  SELECT a, b FROM e
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
-),
+_QUALITY_SURVIVORS_ORACLE = _LSH_CLOSURE_CTE + """,
 comp AS (SELECT a AS vertex, LEAST(a, MIN(b)) AS component FROM reach GROUP BY a),
 wc AS (
   SELECT doc_id,
@@ -8241,7 +7975,6 @@ r AS (
 SELECT cluster_id, survivor_id, survivor_score, cluster_size
 FROM r WHERE rk = 1
 """
-)
 
 
 @query("dedup_quality_survivors", _QUALITY_SURVIVORS_ORACLE)
@@ -8255,17 +7988,10 @@ def q_dedup_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streamed corpus-sized score frame; the per-cluster argmax is
     the WindowGroupLimit row_number shape. The oracle closes the same
     graph recursively and replays the same (score, id) tie-break."""
-    from fireball_data_processing_spark.operators.dedup import (
-        connected_components,
-        lsh_candidate_pairs,
-        minhash_signature,
-        quality_survivors,
-    )
+    from fireball_data_processing_spark.operators.dedup import quality_survivors
 
     d = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signature(d, num_hashes=8, shingle_k=3)
-    pairs = lsh_candidate_pairs(sigs, num_hashes=8, band_size=2)
-    comp = connected_components(pairs)
+    comp = _lsh_components(d)
     scores = d.select(
         "doc_id",
         F.size(F.regexp_extract_all("text", F.lit(r"\w+|[^\w\s]"), 0))
@@ -8541,38 +8267,13 @@ def q_weighted_source_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DOREMI_ORACLE = """
-WITH words AS (
-  SELECT doc_id,
-    list_filter(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '),
-                s -> s <> '') AS w
-  FROM documents
-),
-tok AS (
-  SELECT doc_id, t.token FROM words, UNNEST(w) AS t(token) WHERE t.token <> ''
-),
-vocab AS (SELECT token, COUNT(*)::DOUBLE AS c FROM tok GROUP BY token),
-tot AS (SELECT SUM(c) AS total FROM vocab),
+_DOREMI_ORACLE = _WORDS_NONEMPTY_CTE + ",\n" + _UNIGRAM_CTE + """,
 uni AS (
   SELECT doc_id, ROUND(AVG(-LOG2(v.c / t.total)), 6) AS uni_nll
   FROM tok JOIN vocab v USING (token) CROSS JOIN tot t
   GROUP BY doc_id
 ),
-v AS (
-  SELECT COUNT(DISTINCT t)::DOUBLE AS vsz
-  FROM (SELECT UNNEST(w) AS t FROM words)
-),
-big AS (
-  SELECT doc_id, w[i] AS prev, w[i + 1] AS cur
-  FROM words, UNNEST(generate_series(1, len(w) - 1)) AS t(i)
-  WHERE len(w) >= 2
-),
-cnt AS (
-  SELECT doc_id,
-    COUNT(*) OVER (PARTITION BY prev, cur)::DOUBLE AS cb,
-    COUNT(*) OVER (PARTITION BY prev)::DOUBLE AS cp
-  FROM big
-),
+""" + _BIGRAM_COUNTS_CTE + """,
 bi AS (
   SELECT doc_id,
     ROUND(AVG(-log2((cb + 0.5) / (cp + 0.5 * vsz))), 6) AS bi_nll
@@ -8692,28 +8393,7 @@ def q_readability_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CURRICULUM_ORACLE = """
-WITH words AS (
-  SELECT doc_id,
-    list_filter(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '),
-                s -> s <> '') AS w
-  FROM documents
-),
-v AS (
-  SELECT COUNT(DISTINCT t)::DOUBLE AS vsz
-  FROM (SELECT UNNEST(w) AS t FROM words)
-),
-big AS (
-  SELECT doc_id, w[i] AS prev, w[i + 1] AS cur
-  FROM words, UNNEST(generate_series(1, len(w) - 1)) AS t(i)
-  WHERE len(w) >= 2
-),
-cnt AS (
-  SELECT doc_id,
-    COUNT(*) OVER (PARTITION BY prev, cur)::DOUBLE AS cb,
-    COUNT(*) OVER (PARTITION BY prev)::DOUBLE AS cp
-  FROM big
-),
+_CURRICULUM_ORACLE = _WORDS_NONEMPTY_CTE + ",\n" + _BIGRAM_COUNTS_CTE + """,
 nll AS (
   SELECT doc_id,
     ROUND(AVG(-log2((cb + 0.5) / (cp + 0.5 * vsz))), 6) AS score
@@ -8785,12 +8465,7 @@ WITH tok AS (
   WHERE t.token <> ''
 ),
 counts AS (SELECT token, COUNT(*)::DOUBLE AS c FROM tok GROUP BY token),
-ranked AS (
-  SELECT LN(ROW_NUMBER() OVER (ORDER BY c DESC, token ASC)::DOUBLE) AS x,
-         LN(c) AS y
-  FROM counts
-  QUALIFY ROW_NUMBER() OVER (ORDER BY c DESC, token ASC) <= 1000
-),
+ranked AS """ + _ZIPF_RANKS_BODY + """,
 agg AS (
   SELECT COUNT(*)::DOUBLE AS n, SUM(x) AS sx, SUM(y) AS sy,
          SUM(x * x) AS sxx, SUM(y * y) AS syy, SUM(x * y) AS sxy
@@ -8851,15 +8526,10 @@ def q_edit_distance_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-bounded candidate set — generation stays with the bands — and
     F.levenshtein is JVM codegen, replayed exactly by DuckDB's
     levenshtein."""
-    from fireball_data_processing_spark.operators.dedup import (
-        edit_distance_pairs,
-        lsh_candidate_pairs,
-        minhash_signature,
-    )
+    from fireball_data_processing_spark.operators.dedup import edit_distance_pairs
 
     d = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signature(d, num_hashes=8, shingle_k=3)
-    pairs = lsh_candidate_pairs(sigs, num_hashes=8, band_size=2)
+    pairs = _lsh_pairs(d)
     return edit_distance_pairs(d, pairs, max_chars=2000).filter(
         F.col("edit_ratio") <= 0.5
     )
@@ -8910,12 +8580,7 @@ tok AS (
   WHERE t.token <> ''
 ),
 counts AS (SELECT token, COUNT(*)::DOUBLE AS c FROM tok GROUP BY token),
-zr AS (
-  SELECT LN(ROW_NUMBER() OVER (ORDER BY c DESC, token ASC)::DOUBLE) AS x,
-         LN(c) AS y
-  FROM counts
-  QUALIFY ROW_NUMBER() OVER (ORDER BY c DESC, token ASC) <= 1000
-),
+zr AS """ + _ZIPF_RANKS_BODY + """,
 za AS (
   SELECT COUNT(*)::DOUBLE AS n, SUM(x) AS sx, SUM(y) AS sy,
          SUM(x * x) AS sxx, SUM(y * y) AS syy, SUM(x * y) AS sxy
@@ -9424,10 +9089,6 @@ def q_quality_score_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's independent per-document heuristics with the
     cross-document smoothing step."""
     from fireball_data_processing_spark.functions.text import normalize_text
-    from fireball_data_processing_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signature,
-    )
     from fireball_data_processing_spark.operators.propagation import (
         propagate_scores,
     )
@@ -9442,8 +9103,7 @@ def q_quality_score_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("s0"),
     )
-    sigs = minhash_signature(d, num_hashes=8, shingle_k=3)
-    edges = lsh_candidate_pairs(sigs, num_hashes=8, band_size=2)
+    edges = _lsh_pairs(d)
     out = propagate_scores(
         base, edges, id_col="doc_id", score_col="s0", alpha=0.5, n_iter=2
     )
@@ -10081,17 +9741,12 @@ def q_dup_graph_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the Suri-Vassilvitskii shape); wedges come from the degree table
     alone. The structural-audit complement to the component and
     propagation views of the same graph."""
-    from fireball_data_processing_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signature,
-    )
     from fireball_data_processing_spark.operators.propagation import (
         graph_triangle_stats,
     )
 
     d = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signature(d, num_hashes=8, shingle_k=3)
-    edges = lsh_candidate_pairs(sigs, num_hashes=8, band_size=2)
+    edges = _lsh_pairs(d)
     return graph_triangle_stats(edges)
 
 
@@ -10307,15 +9962,7 @@ def _markov_oracle(n_iter: int = 12) -> str:
     row-normalized probabilities, and n_iter matvec steps each rounded
     to 8 dp (the kmeans contract)."""
     parts = [
-        """
-WITH pairs AS (
-  SELECT src, dst, COUNT(*)::BIGINT AS n
-  FROM (SELECT event_type AS src,
-          LEAD(event_type) OVER (PARTITION BY user_id ORDER BY event_id)
-            AS dst
-        FROM events) z
-  WHERE dst IS NOT NULL GROUP BY 1, 2
-),
+        _MARKOV_PAIRS_CTE + """,
 kept AS (
   SELECT * FROM pairs WHERE dst IN (SELECT DISTINCT src FROM pairs)
 ),
@@ -10608,17 +10255,7 @@ def q_vocab_richness_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "offpolicy_value_snips",
-    """
-WITH base AS (
-  SELECT user_id % 4 AS context, event_type AS action, value::DOUBLE AS r
-  FROM events
-),
-props AS (
-  SELECT context, action,
-    ROUND(n::DOUBLE / SUM(n) OVER (PARTITION BY context), 8) AS pi_logged
-  FROM (SELECT context, action, COUNT(*)::BIGINT AS n
-        FROM base GROUP BY 1, 2)
-),
+    _LOGGED_POLICY_CTE + """,
 j AS (
   SELECT b.r, ROUND(0.2, 8) / p.pi_logged AS w
   FROM base b JOIN props p USING (context, action)
@@ -10993,11 +10630,7 @@ WITH words AS (
       'g')), ' '), s -> s <> '') AS w
   FROM documents
 ),
-occ AS (
-  SELECT doc_id, w[i] AS prev, w[i + 1] AS cur
-  FROM words, UNNEST(generate_series(1, len(w) - 1)) AS t(i)
-  WHERE len(w) >= 2
-),
+occ AS """ + _BIGRAMS_BODY + """,
 types AS (SELECT prev, cur, COUNT(*)::BIGINT AS c FROM occ GROUP BY 1, 2),
 l AS (
   SELECT prev, SUM(c)::DOUBLE AS cprev, COUNT(*)::DOUBLE AS n1_left
@@ -11137,17 +10770,7 @@ def q_dedup_mix_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "offpolicy_value_dr",
-    """
-WITH base AS (
-  SELECT user_id % 4 AS context, event_type AS action, value::DOUBLE AS r
-  FROM events
-),
-props AS (
-  SELECT context, action,
-    ROUND(n::DOUBLE / SUM(n) OVER (PARTITION BY context), 8) AS pi_logged
-  FROM (SELECT context, action, COUNT(*)::BIGINT AS n
-        FROM base GROUP BY 1, 2)
-),
+    _LOGGED_POLICY_CTE + """,
 qhat AS (
   SELECT context, action, ROUND(AVG(r), 8) AS q FROM base GROUP BY 1, 2
 ),
@@ -11440,31 +11063,7 @@ def q_spearman_doc_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mcnemar_gate_disagreement",
-    """
-WITH w AS (
-  SELECT doc_id, text,
-    regexp_split_to_array(trim(text), '\\s+') AS words,
-    string_split(text, chr(10)) AS lines
-  FROM documents
-),
-m AS (
-  SELECT doc_id,
-    len(words) AS n_words,
-    list_sum(list_transform(words, x -> length(x)))::DOUBLE / len(words) AS mean_wl,
-    ((length(text) - length(replace(text, '#', '')))
-     + (length(text) - length(replace(text, '...', ''))) / 3)::DOUBLE
-      / len(words) AS symbol_ratio,
-    len(list_filter(words, x -> regexp_matches(x, '[A-Za-z]')))::DOUBLE
-      / len(words) AS alpha_ratio,
-    len(list_filter(words, x -> list_contains(
-      ['the','a','of','and','to','in','is','it','that','for'], lower(x))))
-      AS stop_hits,
-    len(list_filter(lines, l -> starts_with(l, '- ') OR starts_with(l, '* ')
-      OR starts_with(l, chr(8226))))::DOUBLE / len(lines) AS bullet_ratio,
-    len(list_filter(lines, l -> l LIKE '%...'))::DOUBLE / len(lines)
-      AS ellipsis_ratio
-  FROM w
-),
+    _GOPHER_METRICS_CTE + """,
 gop AS (
   SELECT doc_id,
     COALESCE((n_words >= 50 AND n_words <= 100000
@@ -11473,14 +11072,7 @@ gop AS (
       AND bullet_ratio <= 0.9 AND ellipsis_ratio <= 0.3), FALSE) AS a
   FROM m
 ),
-f AS (
-  SELECT doc_id,
-    len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                    s -> s <> '')) AS n_words,
-    greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS n_sentences,
-    len(regexp_extract_all(lower(text), '[aeiouy]+')) AS n_syllables
-  FROM documents
-),
+""" + _FLESCH_COUNTS_CTE + """,
 rd AS (
   SELECT doc_id,
     COALESCE(CASE WHEN n_words > 0 THEN
@@ -11534,31 +11126,7 @@ def q_mcnemar_gate_disagreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cochran_gate_family",
-    """
-WITH w AS (
-  SELECT doc_id, text,
-    regexp_split_to_array(trim(text), '\\s+') AS words,
-    string_split(text, chr(10)) AS lines
-  FROM documents
-),
-m AS (
-  SELECT doc_id,
-    len(words) AS n_words,
-    list_sum(list_transform(words, x -> length(x)))::DOUBLE / len(words) AS mean_wl,
-    ((length(text) - length(replace(text, '#', '')))
-     + (length(text) - length(replace(text, '...', ''))) / 3)::DOUBLE
-      / len(words) AS symbol_ratio,
-    len(list_filter(words, x -> regexp_matches(x, '[A-Za-z]')))::DOUBLE
-      / len(words) AS alpha_ratio,
-    len(list_filter(words, x -> list_contains(
-      ['the','a','of','and','to','in','is','it','that','for'], lower(x))))
-      AS stop_hits,
-    len(list_filter(lines, l -> starts_with(l, '- ') OR starts_with(l, '* ')
-      OR starts_with(l, chr(8226))))::DOUBLE / len(lines) AS bullet_ratio,
-    len(list_filter(lines, l -> l LIKE '%...'))::DOUBLE / len(lines)
-      AS ellipsis_ratio
-  FROM w
-),
+    _GOPHER_METRICS_CTE + """,
 gop AS (
   SELECT doc_id,
     COALESCE((n_words >= 50 AND n_words <= 100000
@@ -11567,14 +11135,7 @@ gop AS (
       AND bullet_ratio <= 0.9 AND ellipsis_ratio <= 0.3), FALSE) AS ga
   FROM m
 ),
-f AS (
-  SELECT doc_id,
-    len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                    s -> s <> '')) AS n_words,
-    greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS n_sentences,
-    len(regexp_extract_all(lower(text), '[aeiouy]+')) AS n_syllables
-  FROM documents
-),
+""" + _FLESCH_COUNTS_CTE + """,
 rd AS (
   SELECT doc_id,
     COALESCE(CASE WHEN n_words > 0 THEN
@@ -11879,18 +11440,7 @@ def q_trimmed_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "km_conversion_curve",
-    """
-WITH s AS (
-  SELECT user_id, MIN(epoch_ns(ts)) AS s_ts
-  FROM events WHERE event_type = 'signup' GROUP BY 1
-),
-tmax AS (SELECT MAX(epoch_ns(ts)) AS t FROM events),
-p AS (
-  SELECT e.user_id, MIN(epoch_ns(e.ts)) AS p_ts
-  FROM events e JOIN s USING (user_id)
-  WHERE e.event_type = 'purchase' AND epoch_ns(e.ts) >= s.s_ts
-  GROUP BY 1
-),
+    _SIGNUP_PURCHASE_CTE + """,
 subj AS (
   SELECT s.user_id,
     CAST(FLOOR((COALESCE(p.p_ts, tmax.t) - s.s_ts)
@@ -12018,15 +11568,7 @@ def _attribution_oracle() -> str:
     point per scenario (full chain + one per removed channel), all with
     8-dp per-iterate rounding."""
     parts = [
-        f"""
-WITH pairs AS (
-  SELECT src, dst, COUNT(*)::BIGINT AS n
-  FROM (SELECT event_type AS src,
-          LEAD(event_type) OVER (PARTITION BY user_id ORDER BY event_id)
-            AS dst
-        FROM events) z
-  WHERE dst IS NOT NULL GROUP BY 1, 2
-),
+        _MARKOV_PAIRS_CTE + """,
 m AS (
   SELECT src, dst,
     ROUND(n::DOUBLE / SUM(n) OVER (PARTITION BY src), 8) AS p
@@ -12377,13 +11919,7 @@ def q_token_diversity_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cusum_daily_conversion",
-    """
-WITH daily AS (
-  SELECT CAST(FLOOR(epoch_ns(ts) / 86400000000000.0) AS BIGINT) AS day,
-    ROUND(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::DOUBLE
-          / COUNT(*), 8) AS share
-  FROM events GROUP BY 1
-),
+    _DAILY_SHARE_CTE + """,
 tgt AS (SELECT ROUND(AVG(share), 8) AS mu FROM daily),
 c AS (
   SELECT day, share,
@@ -12436,13 +11972,7 @@ def q_cusum_daily_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ewma_daily_conversion",
-    """
-WITH daily AS (
-  SELECT CAST(FLOOR(epoch_ns(ts) / 86400000000000.0) AS BIGINT) AS day,
-    ROUND(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::DOUBLE
-          / COUNT(*), 8) AS share
-  FROM events GROUP BY 1
-),
+    _DAILY_SHARE_CTE + """,
 tgt AS (
   SELECT ROUND(AVG(share), 8) AS mu,
     ROUND(COALESCE(stddev_pop(share), 0), 8) AS sig
@@ -12764,18 +12294,7 @@ def q_benford_value_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "logrank_conversion_test",
-    """
-WITH s AS (
-  SELECT user_id, MIN(epoch_ns(ts)) AS s_ts
-  FROM events WHERE event_type = 'signup' GROUP BY 1
-),
-tmax AS (SELECT MAX(epoch_ns(ts)) AS t FROM events),
-p AS (
-  SELECT e.user_id, MIN(epoch_ns(e.ts)) AS p_ts
-  FROM events e JOIN s USING (user_id)
-  WHERE e.event_type = 'purchase' AND epoch_ns(e.ts) >= s.s_ts
-  GROUP BY 1
-),
+    _SIGNUP_PURCHASE_CTE + """,
 subj AS (
   SELECT CAST(s.user_id % 2 AS VARCHAR) AS g,
     CAST(FLOOR((COALESCE(p.p_ts, tmax.t) - s.s_ts)

@@ -9,7 +9,8 @@ and ``load_event_stream`` reads exactly those files with one
 read only, so Spark does not list them again in a job. It adds:
 
 - ``instance_id``: the parent directory name, recovered from
-  ``input_file_name()`` (S4).
+  ``input_file_name()`` and percent-decoded, so it equals the listed
+  name (S4).
 - ``seq``: a canonical per-instance event ordering (S5). The reference's
   semantics are "sorted filename, then line order"; the distributed
   equivalent is ``row_number() OVER (PARTITION BY instance_id ORDER BY
@@ -59,8 +60,14 @@ def with_instance_and_seq(df: DataFrame) -> DataFrame:
     reference's sorted-filename-then-line-order semantics
     (``dataset/utils.py:40``).
     """
+    # input_file_name() is a URI: percent-decode the directory name back to
+    # the listed one (``instance_of``). A '+' is literal in a URI path, so it
+    # is escaped first: url_decode would read it as a space.
     df = df.withColumn("_file", F.input_file_name()).withColumn(
-        "instance_id", F.regexp_extract(F.col("_file"), r"/([^/]+)/[^/]+$", 1)
+        "instance_id",
+        F.url_decode(F.regexp_replace(
+            F.regexp_extract(F.col("_file"), r"/([^/]+)/[^/]+$", 1), r"\+", "%2B"
+        )),
     )
     # monotonically_increasing_id is increasing within a partition and Spark
     # reads each (file, range) split in order, so (file, mid) reproduces

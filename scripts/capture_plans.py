@@ -1,20 +1,35 @@
 """Capture .explain("formatted") for a round's optimization targets.
 
 Writes plans/<round>/<query>_<tag>.txt for each named query (tag =
-before/after; default: the headline suite plus the heavy extras).
+before/after; default: the headline suite plus the heavy extras; ``all``:
+every registered query), plus plans/<round>/oracles.md5 with one
+``<name> <md5>`` line per ``oracle_sql()`` entry. Expression, plan and RDD
+ids and scratch directories under the temp dir are masked, so two
+captures of the same plans are byte-identical.
 For the two streaming capstones the returned frame is a localCheckpoint of
 the final table (the stream already ran), so the meaningful plan is the
 PER-EPOCH batch plan — captured via ingest_pipeline_batch over one staged
 slice.
 
-Usage: python scripts/capture_plans.py <round> <tag> [query ...]
+Usage: python scripts/capture_plans.py <round> <tag> [all | query ...]
+
+An absolute <round> writes outside plans/, so checking that a change
+leaves every plan and oracle as it was is a ``diff -r``:
+
+    export SPARK_GRAFT_SF_DIR=/path/to/sf0.01
+    python scripts/capture_plans.py /tmp/plans_a x all   # at the parent
+    python scripts/capture_plans.py /tmp/plans_b x all   # at the change
+    diff -r /tmp/plans_a /tmp/plans_b
 """
 
 from __future__ import annotations
 
+import hashlib
 import io
 import os
+import re
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -42,21 +57,33 @@ DEFAULT_TARGETS = [
 ]
 
 
+# ids numbered by session-wide counters (`name#12`, `[plan_id=34]`,
+# `MapPartitionsRDD[56]`) and per-run scratch directories under the temp dir
+_IDS = re.compile(r"(#|plan_id=|RDD\[)\d+")
+_SCRATCH = re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\]\s,]+")
+
+
 def explain_str(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    return _SCRATCH.sub("<tmp>", _IDS.sub(r"\1N", buf.getvalue()))
 
 
 def main() -> None:
     round_, tag = sys.argv[1], sys.argv[2]
-    names = sys.argv[3:] or DEFAULT_TARGETS
     out_dir = os.path.join(PLANS_DIR, round_)
     os.makedirs(out_dir, exist_ok=True)
 
     from fireball_data_processing_spark import queries as catalog
     from fireball_data_processing_spark.session import get_spark
+
+    names = sys.argv[3:] or DEFAULT_TARGETS
+    if names == ["all"]:
+        names = list(catalog.queries())
+    with open(os.path.join(out_dir, "oracles.md5"), "w") as f:
+        for name, sql in catalog.oracle_sql().items():
+            f.write(f"{name} {hashlib.md5(sql.encode()).hexdigest()}\n")
 
     spark = get_spark(app_name=f"plan-capture-{round_}")
     spark.sparkContext.setLogLevel("ERROR")

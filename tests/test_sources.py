@@ -123,8 +123,12 @@ def test_fireball_dataset_api(spark, corpus, tmp_path):
 
     m1 = ds.heuristics()
     assert m1.count() == 2
-    # second call is served from the memoized CSV (checksum unchanged)
+    # second call is served from the memoized CSV (checksum unchanged),
+    # with a fresh compute's column types, taken without a Spark job (a
+    # file read makes every column nullable, so dtypes, not schema)
+    assert _jobs_started(spark, ds.heuristics) == 0
     m2 = ds.heuristics()
+    assert m2.dtypes == m1.dtypes
     assert m2.count() == 2
     assert {r["instance_id"] for r in m2.collect()} == {"inst_a", "inst_b"}
 
@@ -402,3 +406,21 @@ def test_all_corrupt_instance_is_listed_and_streams_nothing(spark, hidden_corpus
     assert list(ds.stream_events("c")) == []
     decoded = {r[0] for r in ds.events_df().select("instance_id").distinct().collect()}
     assert decoded == set(ds.instances()) - {"c"}
+
+
+def test_escaped_instance_names_keep_one_id(spark, tmp_path):
+    """Spark reports file paths URI-encoded (``has%20space``, ``pct%2541``);
+    the listing, the event rows and the heuristics rows still carry the
+    directory's own name. ``a+b`` rules out form-decoding '+' to a space."""
+    from fireball_data_processing_spark.dataset import FireballDataset
+
+    names = ["a+b", "has space", "pct%41"]
+    for name in names:
+        _write_chunk(tmp_path / "corpus" / name / "chunk-000.jsonl.gz",
+                     [_msg(name, 1), _msg(name, 2)])
+    ds = FireballDataset(spark, str(tmp_path / "corpus"),
+                         results_dir=str(tmp_path / "res"))
+    assert ds.instances() == names
+    for name in names:
+        assert {r["instance_id"] for r in ds.events(name).collect()} == {name}
+    assert sorted(r["instance_id"] for r in ds.heuristics().collect()) == names
