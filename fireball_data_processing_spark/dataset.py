@@ -38,6 +38,9 @@ from fireball_data_processing_spark.sources.events import (
 )
 from fireball_data_processing_spark.sources import sinks
 
+# rows per chunk the streaming endpoints yield
+_CHUNK_ROWS = 1000
+
 
 class FireballDataset:
     def __init__(
@@ -80,24 +83,23 @@ class FireballDataset:
         return sorted({instance_of(path) for path, _, _ in self.files()})
 
     # -- heuristics (memoized) ----------------------------------------
-    def heuristics(self, names: tuple[str, ...] | None = None) -> DataFrame:
-        names = names or HEURISTICS
+    def heuristics(self) -> DataFrame:
         out = os.path.join(self.results_dir, "heuristics")
         # the memo key covers the heuristic set, not just the corpus: a
-        # cached subset matrix must not satisfy a later full request
+        # matrix cached for another set must not satisfy this request
         import hashlib
 
         cs = hashlib.md5(
-            (self.checksum() + "|" + ",".join(names)).encode()
+            (self.checksum() + "|" + ",".join(HEURISTICS)).encode()
         ).hexdigest()
         if sinks.memoized(out, cs):
             # read with a fresh compute's column types, taken from the plan
             # over no files: no job, no scan (a file read makes every column
             # nullable, so only the nullability differs)
             empty = load_event_stream(self.spark, [])
-            schema = heuristics_matrix(empty, self.stream, names).schema
+            schema = heuristics_matrix(empty, self.stream).schema
             return self.spark.read.options(header=True).schema(schema).csv(out)
-        matrix = heuristics_matrix(self.events_df(), self.stream, names)
+        matrix = heuristics_matrix(self.events_df(), self.stream)
         sinks.write_results_csv(matrix, out, checksum=cs)
         return matrix
 
@@ -111,7 +113,7 @@ class FireballDataset:
         """`/index`: instance ids + their heuristic scores."""
         return self.heuristics()
 
-    def stream_events(self, instance_id: str, chunk_size: int = 1000):
+    def stream_events(self, instance_id: str):
         """S12 (reference ``explorer_server.py:79-88``): one instance's
         events as an incremental JSONL stream — the generator a
         ``StreamingResponse`` would wrap.
@@ -132,7 +134,7 @@ class FireballDataset:
             buf: list[str] = []
             for line in self.events(instance_id).toJSON().toLocalIterator():
                 buf.append(line)
-                if len(buf) >= chunk_size:
+                if len(buf) >= _CHUNK_ROWS:
                     yield "\n".join(buf) + "\n"
                     buf = []
             if buf:
@@ -140,7 +142,7 @@ class FireballDataset:
 
         return gen()
 
-    def stream_heuristics_csv(self, chunk_size: int = 1000):
+    def stream_heuristics_csv(self):
         """`/heuristics/csv` as an incremental stream (reference
         ``explorer_server.py:60-77``): header first, then CSV rows in
         bounded chunks via ``toLocalIterator`` — the full matrix is never
@@ -161,7 +163,7 @@ class FireballDataset:
         buf: list = []
         for r in h.toLocalIterator():
             buf.append([r[c] for c in cols])
-            if len(buf) >= chunk_size:
+            if len(buf) >= _CHUNK_ROWS:
                 yield render(buf)
                 buf = []
         if buf:

@@ -41,8 +41,8 @@ def hashed_id_col(c):
     A 128-bit little-endian decimal rendering is not expressible in JVM
     expressions (decimal(38) overflows at 2^128), so exact reference parity
     costs one vectorized Python hop; for engine-internal bucketing/dedup
-    where the exact rendering is irrelevant, prefer the JVM-side
-    ``functions.text.md5_id`` hex digest.
+    where the exact rendering is irrelevant, prefer a JVM-side
+    ``F.md5`` hex digest.
 
     The cast to string happens JVM-side BEFORE the Arrow hop: a long
     column with nulls would otherwise arrive as float64 (Arrow's

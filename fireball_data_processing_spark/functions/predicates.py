@@ -26,17 +26,6 @@ def is_command_invocation(content: Column) -> Column:
     return content.rlike(COMMAND_PREFIX_RE)
 
 
-def is_short_message(content: Column) -> Column:
-    """P4 (reference distill1_time_group.py:56-58): fewer than 5
-    ' '-split words (the reference's exact split semantics)."""
-    return F.size(F.split(content, " ")) < 5
-
-
-def is_blank(content: Column) -> Column:
-    """P6 (reference distill3a_ic_regex.py:50-52)."""
-    return F.trim(content) == ""
-
-
 def is_ooc(content: Column) -> Column:
     """P8 rule-based out-of-character (reference
     distill3b_ic_classifier_gpt.py:38-42): blank, contains OOC/OOG, or
@@ -57,8 +46,3 @@ def clamp_abnormal_array(c: Column) -> Column:
     return F.when(
         F.size(c) > 5, F.filter(c, lambda _: F.lit(False))
     ).otherwise(c)
-
-
-def within_prompt_budget(c: Column) -> Column:
-    """P10 (reference utt_cmd_test_predictions.py:44-46)."""
-    return F.length(c) <= 8000

@@ -15,19 +15,16 @@ surfaces:
 - :func:`strip_markdown` / :func:`censor_words` — JVM-side Column
   expressions (regexp_replace chains, whole-stage codegen, oracle-able in
   any SQL engine) for the plain-text + censored form used in pipelines.
-- :func:`render_discord_markdown` — the HTML renderer as an Arrow-batched
-  pandas UDF (presentation output; not SQL-comparable, golden-tested).
+- :func:`render_discord_markdown_str` — the HTML renderer (presentation
+  output; not SQL-comparable, golden-tested).
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 #: default censor list for the synthetic corpus (the reference loads its
 #: list from profanity.txt, prep_human_eval.py:213-214)
@@ -102,9 +99,3 @@ def render_discord_markdown_str(text: str | None) -> str:
     for band in _HP_BANDS:
         s = s.replace(f"<{band}>", f"&lt;{band}&gt;")
     return f'<span class="discord-markdown">{s}</span>'
-
-
-@pandas_udf(StringType())
-def render_discord_markdown(col: pd.Series) -> pd.Series:
-    """Arrow-batched F18 renderer over a text column."""
-    return col.map(render_discord_markdown_str)

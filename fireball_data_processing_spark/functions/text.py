@@ -119,15 +119,6 @@ def substitute_snippet_shlex():
     return _sub
 
 
-def md5_id(c: Column) -> Column:
-    """Engine-internal md5 id (hex digest, JVM-side) for bucketing/dedup.
-    For the reference's exact F8 rendering (little-endian digest as an
-    18-digit decimal, scripts/anonymize.py:24-29) use
-    ``functions.ids.hashed_id_col`` — 128-bit decimal rendering is not
-    JVM-expressible, so exact parity lives in the Arrow-batched UDF."""
-    return F.md5(c.cast("string"))
-
-
 def hp_band(hp: Column, max_hp: Column, temp_hp: Column) -> Column:
     """F11 (reference distill4_normalize.py:166-190), exact edge behavior:
     the numeric '<hp/max HP>' core renders whenever both are present even

@@ -79,19 +79,14 @@ def asof_join(
     partition_cols: Sequence[str],
     order_col: str,
     right_cols: Sequence[str],
-    direction: str = "backward",
-    strict: bool = False,
 ) -> DataFrame:
-    """Attach the latest (backward) / earliest (forward) ``right`` row's
-    ``right_cols`` to each ``left`` row, matching on ``partition_cols`` with
+    """Attach the latest ``right`` row's ``right_cols`` at-or-before each
+    ``left`` row (backward as-of), matching on ``partition_cols`` with
     ``order_col`` as event time.
 
-    Implemented as union + ordered window (single shuffle). Ties on
-    ``order_col``: the right row counts as "at-or-before" (backward) /
-    "at-or-after" (forward) unless ``strict``.
+    Implemented as union + ordered window (single shuffle). A right row
+    tied with the left row on ``order_col`` counts as at-or-before.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(direction)
     part = list(partition_cols)
     lifted = [f"__r_{c}" for c in right_cols]
 
@@ -113,28 +108,18 @@ def asof_join(
     )
     u = l_sel.unionByName(r_sel)
 
-    # Secondary sort on the side flag controls tie semantics: for backward,
-    # right rows (side 0) sort before left rows at equal order value, so a
-    # tie is visible to the left row; `strict` flips that.
-    if direction == "backward":
-        tie = F.col(_SIDE).desc() if strict else F.col(_SIDE).asc()
-        w = (
-            Window.partitionBy(*part)
-            .orderBy(F.col(order_col).asc(), tie)
-            .rowsBetween(Window.unboundedPreceding, -1 if strict else 0)
-        )
-        agg = lambda c: F.last(c, ignorenulls=True)  # noqa: E731
-    else:
-        tie = F.col(_SIDE).asc() if strict else F.col(_SIDE).desc()
-        w = (
-            Window.partitionBy(*part)
-            .orderBy(F.col(order_col).asc(), tie)
-            .rowsBetween(1 if strict else 0, Window.unboundedFollowing)
-        )
-        agg = lambda c: F.first(c, ignorenulls=True)  # noqa: E731
-
+    # Secondary sort on the side flag sets the tie semantics: right rows
+    # (side 0) sort before left rows at equal order value, so a tie is
+    # visible to the left row.
+    w = (
+        Window.partitionBy(*part)
+        .orderBy(F.col(order_col).asc(), F.col(_SIDE).asc())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
     for c, rc in zip(right_cols, lifted):
-        u = u.withColumn(rc, agg(F.when(F.col(_SIDE) == 0, F.col(rc))).over(w))
+        u = u.withColumn(
+            rc, F.last(F.when(F.col(_SIDE) == 0, F.col(rc)), ignorenulls=True).over(w)
+        )
     out = u.filter(F.col(_SIDE) == 1).drop(_SIDE)
     for c, rc in zip(right_cols, lifted):
         out = out.withColumnRenamed(rc, f"{c}_asof")
@@ -183,7 +168,7 @@ def nearest_join(
         F.col(right_key).alias("__r_key"),
     )
     u = l_sel.unionByName(r_sel)
-    # tie orders mirror the non-strict asof_join semantics: at equal order
+    # tie orders mirror the asof_join tie semantics: at equal order
     # value the right row is visible both backward (side 0 sorts first) and
     # forward (side 0 sorts after the probe, window includes it)
     w_b = (

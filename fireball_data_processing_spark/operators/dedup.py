@@ -196,7 +196,6 @@ def _exploded_shingles(
 
 def minhash_signature(
     df: DataFrame,
-    id_col: str = "doc_id",
     num_hashes: int = 8,
     shingle_k: int = 3,
     with_shingles: bool = False,
@@ -222,14 +221,14 @@ def minhash_signature(
     bottom-k-sample estimate for docs above the cap (see
     :func:`capped_shingles`).
     """
-    exploded = _exploded_shingles(df, "text", id_col, shingle_k, max_shingles)
+    exploded = _exploded_shingles(df, "text", "doc_id", shingle_k, max_shingles)
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}#"), F.col("shingle")))).alias(f"mh{i}")
         for i in range(num_hashes)
     ]
     if with_shingles:
         aggs.append(F.collect_list("shingle").alias("__sh"))
-    return exploded.groupBy(id_col).agg(*aggs)
+    return exploded.groupBy("doc_id").agg(*aggs)
 
 
 def minhash_sig_expr(sh: Column, num_hashes: int) -> Column:
@@ -312,7 +311,6 @@ def build_minhash_index(df: DataFrame, path: str) -> DataFrame:
 
 def lsh_candidate_pairs(
     sigs: DataFrame,
-    id_col: str = "doc_id",
     num_hashes: int = 8,
     band_size: int = 2,
 ) -> DataFrame:
@@ -340,8 +338,8 @@ def lsh_candidate_pairs(
     exist to confine).
     """
     bands = band_structs(num_hashes, band_size)
-    banded = sigs.select(F.col(id_col), F.explode(bands).alias("band")).select(
-        F.col(id_col), F.col("band.band_idx"), F.col("band.band_key")
+    banded = sigs.select(F.col("doc_id"), F.explode(bands).alias("band")).select(
+        F.col("doc_id"), F.col("band.band_idx"), F.col("band.band_key")
     )
     # Both sides of the self-join read the banded table; at corpus
     # scale pin it so the upstream signature pipeline executes once
@@ -354,11 +352,11 @@ def lsh_candidate_pairs(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
         )
         .distinct()
     )
@@ -486,12 +484,10 @@ def ngram_overlap(
 # them, while a chain graph needs the jumps to close in O(log diameter)
 # rounds.
 _JUMP_FROM_ROUND = 4
+_MAX_ROUNDS = 25
 
 
-def connected_components(
-    pairs: DataFrame,
-    max_iter: int = 25,
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Connected components over a pair list -> ``(vertex, component)``
     with the component labeled by its minimum vertex id. The survivor-
     selection step of a dedup pipeline: candidate/verified pairs chain
@@ -509,7 +505,7 @@ def connected_components(
     per-round ``localCheckpoint`` truncates the lineage, which would
     otherwise grow exponentially, and the convergence probe is one tiny
     aggregate action per round — driver-side control flow, executor-side
-    data. ``max_iter`` bounds the rounds; raises if unconverged.
+    data. ``_MAX_ROUNDS`` bounds the rounds; raises if unconverged.
 
     Action economics: the checkpoints after the edge frame
     are LAZY (``eager=False``), so each round runs exactly ONE Spark
@@ -600,7 +596,7 @@ def connected_components(
     # can never equal a non-empty round's decimal sum, and an EMPTY edge
     # set sums to NULL (None) in round 1 and returns immediately.
     prev_sum = None
-    for rnd in range(1, max_iter + 1):
+    for rnd in range(1, _MAX_ROUNDS + 1):
         updated = (
             e_all.join(labels, e_all["dst"] == labels["vertex"])
             .groupBy("src")
@@ -633,8 +629,7 @@ def connected_components(
             return labels
         prev_sum = new_sum
     raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds; "
-        "raise max_iter"
+        f"connected_components did not converge in {_MAX_ROUNDS} rounds"
     )
 
 

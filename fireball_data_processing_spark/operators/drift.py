@@ -190,8 +190,6 @@ def cusum_alarm(
     target: float,
     allowance: float,
     threshold: float,
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """One-sided (upward) CUSUM control chart over an ordered series —
     the change-point monitor that accumulates SMALL persistent shifts a
@@ -206,8 +204,9 @@ def cusum_alarm(
 
     so the whole chart is TWO windows over the (already aggregated,
     time-grain) series — no recursion, no UDF, no state. Returns
-    ``(time, x, cusum, alarm)`` ordered by time; per-step terms are
-    rounded to ``round_dp`` so a SQL oracle replays the walk exactly.
+    ``(time, x, cusum, alarm)`` ordered by time, x and cusum at 6 dp;
+    per-step terms are rounded to 8 dp so a SQL oracle replays the walk
+    exactly.
     """
     from pyspark.sql.window import Window
 
@@ -217,13 +216,13 @@ def cusum_alarm(
     )
     c = F.round(
         F.sum(
-            F.round(F.col(value_col).cast("double") - drift_rate, round_dp)
+            F.round(F.col(value_col).cast("double") - drift_rate, 8)
         ).over(w),
-        round_dp,
+        8,
     )
     staged = series.select(
         F.col(time_col).alias("time"),
-        F.round(F.col(value_col).cast("double"), out_dp).alias("x"),
+        F.round(F.col(value_col).cast("double"), 6).alias("x"),
         c.alias("__c"),
     )
     w2 = Window.orderBy("time").rowsBetween(
@@ -232,12 +231,12 @@ def cusum_alarm(
     s = F.round(
         F.col("__c")
         - F.least(F.lit(0.0), F.min("__c").over(w2)),
-        round_dp,
+        8,
     )
     return staged.select(
         "time",
         "x",
-        F.round(s, out_dp).alias("cusum"),
+        F.round(s, 6).alias("cusum"),
         (s > F.lit(float(threshold))).alias("alarm"),
     ).orderBy("time")
 

@@ -138,9 +138,12 @@ def _collected_matrix(
     ]
 
 
-def stationary_distribution(matrix: DataFrame, n_iter: int = 12) -> DataFrame:
+_POWER_STEPS = 12
+
+
+def stationary_distribution(matrix: DataFrame) -> DataFrame:
     """Power iteration ``pi <- pi @ P`` from the uniform start, exactly
-    ``n_iter`` steps, each iterate rounded to 8 dp (engine
+    ``_POWER_STEPS`` steps, each iterate rounded to 8 dp (engine
     replay). ``matrix`` is the (src, dst, p) frame from
     transition_matrix. Returns ``(state, pi)`` — a |states|-row frame
     consumers join back to distributed data (Spark broadcasts it).
@@ -169,7 +172,7 @@ def stationary_distribution(matrix: DataFrame, n_iter: int = 12) -> DataFrame:
             (r["src"], r["dst"], r["p"])
             for r in matrix.select("src", "dst", "p").collect()
         ],
-        n_iter,
+        _POWER_STEPS,
         8,
     )
     if not pi:

@@ -79,8 +79,8 @@ def extract_features(df: DataFrame) -> DataFrame:
     return df.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: emits one row per sampled frame index
+def frame_sample_plan(df: DataFrame) -> DataFrame:
+    """Video frame-sampling plumbing: emits one row per 10th frame index
     using metadata only (frame decode itself is the stubbed kernel). Shows
     the explode-then-decode shape that keeps the expensive stage narrow."""
     from pyspark.sql import functions as F
@@ -93,6 +93,6 @@ def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
     # them instead of emitting a bogus frame 0
     idx = F.when(
         n_frames > 0,
-        F.sequence(F.lit(0), n_frames - 1, F.lit(every_n)),
+        F.sequence(F.lit(0), n_frames - 1, F.lit(10)),
     ).otherwise(F.array().cast("array<int>"))
     return df.select("media_id", F.explode(idx).alias("frame_idx"))

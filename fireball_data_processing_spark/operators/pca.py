@@ -198,20 +198,18 @@ def _component(df, carr, dim, n_iter, round_dp, with_total=False):
     return v, nrm
 
 
-def power_iteration_pca_k(
-    df: DataFrame,
-    vec_col: str,
-    dim: int,
-    n_components: int = 2,
-    n_iter: int = 6,
-) -> DataFrame:
-    """Top ``n_components`` principal components via power iteration
+_K_COMPONENTS = 2
+_K_STEPS = 6
+
+
+def power_iteration_pca_k(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
+    """Top ``_K_COMPONENTS`` principal components via power iteration
     with HOTELLING DEFLATION: after extracting component v, the
     centered array is replaced by ``c - (c . v) v`` (pure array
     arithmetic with v as an array literal — the deflated frame is
     materialized only inside the next component's cached base), and the
     next component is extracted from the residual. Returns
-    ``n_components * dim`` rows
+    ``_K_COMPONENTS * dim`` rows
     ``(component, dim, loading, eigenvalue, var_share)`` with rows
     emitted in (component, dim) order (order-by-construction — no sort
     in the plan; see :func:`power_iteration_pca`);
@@ -224,13 +222,13 @@ def power_iteration_pca_k(
     total_scatter = None
 
     rows = []
-    for comp in range(1, n_components + 1):
+    for comp in range(1, _K_COMPONENTS + 1):
         if comp == 1:
             v, nrm, total_scatter = _component(
-                df, carr, dim, n_iter, 8, with_total=True
+                df, carr, dim, _K_STEPS, 8, with_total=True
             )
         else:
-            v, nrm = _component(df, carr, dim, n_iter, 8)
+            v, nrm = _component(df, carr, dim, _K_STEPS, 8)
         for i in range(dim):
             rows.append(
                 (
@@ -254,7 +252,7 @@ def power_iteration_pca_k(
     # rows are appended comp-ascending, dim-ascending — the local
     # relation is ALREADY in (component, dim) order, so no orderBy();
     # sorting here would spend a whole range-exchange job on a
-    # (n_components * d)-row frame (row sequence unchanged)
+    # (_K_COMPONENTS * d)-row frame (row sequence unchanged)
     return df.sparkSession.createDataFrame(
         rows,
         "component bigint, dim bigint, loading double, "

@@ -23,8 +23,6 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -40,7 +38,6 @@ __all__ = [
 
 def profile_columns(
     df: DataFrame,
-    cols: Sequence[str] | None = None,
     exact_distinct: bool = False,
 ) -> DataFrame:
     """One-pass per-column profile, long format:
@@ -50,7 +47,7 @@ def profile_columns(
     ``exact_distinct``); ``min_value``/``max_value`` are the column's
     extremes cast to string (NULL for an all-null column).
     """
-    names = list(cols) if cols is not None else df.columns
+    names = df.columns
     aggs = [F.count(F.lit(1)).cast("bigint").alias("__n")]
     for c in names:
         col = F.col(c)

@@ -41,28 +41,22 @@ def propagate_scores(
     edges: DataFrame,
     id_col: str = "doc_id",
     score_col: str = "score0",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
     alpha: float = 0.5,
     n_iter: int = 2,
-    round_dp: int = 6,
-    tie_nudge: float = 1e-9,
 ) -> DataFrame:
     """Iterate ``s_{t+1}(v) = round(alpha * s_0(v) + (1 - alpha) *
-    avg_{u ~ v} s_t(u), round_dp)`` for ``n_iter`` rounds over the
-    undirected graph given by ``edges`` (one row per pair; symmetrized
-    here). Nodes with no neighbors keep their prior: the neighbor term
-    coalesces to the node's own previous score, which for an isolated
-    node is invariantly ``s_0``. Returns ``(id_col, score0, score)``.
+    avg_{u ~ v} s_t(u) + 1e-9, 6)`` for ``n_iter`` rounds over the
+    undirected graph given by ``edges`` (one ``(id_a, id_b)`` row per
+    pair; symmetrized here). Nodes with no neighbors keep their prior:
+    the neighbor term coalesces to the node's own previous score, which
+    for an isolated node is invariantly ``s_0``. Returns
+    ``(id_col, score0, score)``.
 
-    ``tie_nudge`` is added inside each round (default 1e-9, the
-    cross-engine contract: with alpha=0.5 over rounded inputs the
-    update lands exactly on ``round_dp``-decimal rounding ties, where
-    Spark's shortest-decimal HALF_UP and a binary-exact engine disagree
-    per row — the nudge resolves every tie upward on BOTH sides and its
-    bias is 3 orders below the output resolution). Library callers who
-    want the unbiased update and don't need cross-engine hash equality
-    can pass ``tie_nudge=0.0``.
+    The 1e-9 tie nudge is the cross-engine contract: with alpha=0.5 over
+    rounded inputs the update lands exactly on 6-decimal rounding ties,
+    where Spark's shortest-decimal HALF_UP and a binary-exact engine
+    disagree per row — the nudge resolves every tie upward on BOTH sides
+    and its bias is 3 orders below the output resolution.
     """
     # the edge frame feeds one join per iteration and the node frame
     # feeds two consumers per iteration (the neighbor aggregate and the
@@ -72,7 +66,7 @@ def propagate_scores(
     # Caches are invocation-scoped: edges are candidate-pair-bounded,
     # the node frame is (id, two doubles).
     sym = edges.select(
-        F.col(src_col).alias("__src"), F.col(dst_col).alias("__dst")
+        F.col("id_a").alias("__src"), F.col("id_b").alias("__dst")
     )
     sym = sym.union(
         sym.select(F.col("__dst").alias("__src"), F.col("__src").alias("__dst"))
@@ -98,7 +92,7 @@ def propagate_scores(
             # 8-dp intermediate round hands both engines identical
             # doubles, shrinking the boundary set ~100x below the
             # contract's observable resolution
-            .agg(F.round(F.avg("__ns"), round_dp + 2).alias("__avg"))
+            .agg(F.round(F.avg("__ns"), 8).alias("__avg"))
         )
         s = (
             s.join(nbr, s[id_col] == nbr["__src"], "left")
@@ -115,8 +109,8 @@ def propagate_scores(
                     F.lit(alpha) * F.col("__s0")
                     + F.lit(1.0 - alpha)
                     * F.coalesce(F.col("__avg"), F.col("__s"))
-                    + F.lit(tie_nudge),
-                    round_dp,
+                    + F.lit(1e-9),
+                    6,
                 ).alias("__s"),
             )
             .persist()

@@ -124,7 +124,6 @@ def bm25_search(
     docs: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    stats: DataFrame | None = None,
 ) -> DataFrame:
     """Okapi BM25 top-k documents per query, as one declarative plan.
 
@@ -134,14 +133,8 @@ def bm25_search(
     early query-term filter drops non-matching postings but not the
     docs that define df, which is counted per term over the filtered
     postings themselves — identical because df only involves docs that
-    DO contain the term).
-
-    ``stats``: optional one-row (n_docs, avgdl) frame. The default
-    (None) computes it with a second projection-only pass over
-    ``docs``; callers searching repeatedly should pass the persisted
-    stats (e.g. ``spark.read.parquet(index/stats)`` from
-    :func:`build_postings_index`) — corpus constants don't need
-    re-deriving per query batch.
+    DO contain the term). The one-row (n_docs, avgdl) corpus stats come
+    from a second projection-only pass over ``docs``.
     """
     q_terms = queries.select(
         F.col("query_id").alias("query_id"),
@@ -169,11 +162,9 @@ def bm25_search(
     # twice
     df_t = F.count(F.lit(1)).over(Window.partitionBy("term"))
 
-    if stats is None:
-        stats = _corpus_stats(docs, "text")
     scored = (
         post.withColumn("df", df_t)
-        .join(F.broadcast(stats))
+        .join(F.broadcast(_corpus_stats(docs, "text")))
         .withColumn("contrib", _bm25_contrib(1.2, 0.75))
         .join(F.broadcast(q_terms), "term")
         # same trick on the query grain: one repartition on query_id
@@ -275,13 +266,12 @@ def rrf_fuse(
     )
 
 
-def build_postings_index(
-    docs: DataFrame,
-    path: str,
-    n_buckets: int = 64,
-) -> None:
+_N_BUCKETS = 64
+
+
+def build_postings_index(docs: DataFrame, path: str) -> None:
     """Materialize the inverted index: postings parquet hash-bucketed by
-    term (``term_bucket = pmod(hash(term), n_buckets)`` partition
+    term (``term_bucket = pmod(hash(term), _N_BUCKETS)`` partition
     column) plus a one-row ``_stats`` side table (n_docs, avgdl) and a
     per-term ``_df`` table bucketed the same way.
 
@@ -291,7 +281,7 @@ def build_postings_index(
     makes repeated search affordable on a 100 TB corpus.
     """
     post = _postings(docs, "text", "doc_id").withColumn(
-        "term_bucket", F.pmod(F.hash("term"), F.lit(n_buckets))
+        "term_bucket", F.pmod(F.hash("term"), F.lit(_N_BUCKETS))
     )
     post.write.mode("overwrite").partitionBy("term_bucket").parquet(
         os.path.join(path, "postings")
@@ -313,7 +303,6 @@ def bm25_search_from_index(
     path: str,
     queries: DataFrame,
     k: int = 10,
-    n_buckets: int = 64,
 ) -> DataFrame:
     """BM25 top-k against a materialized :func:`build_postings_index`.
 
@@ -326,7 +315,7 @@ def bm25_search_from_index(
     q_terms = queries.select(
         F.col("query_id").alias("query_id"),
         F.explode(F.array_distinct(tokens(F.col("query_text")))).alias("term"),
-    ).withColumn("term_bucket", F.pmod(F.hash("term"), F.lit(n_buckets)))
+    ).withColumn("term_bucket", F.pmod(F.hash("term"), F.lit(_N_BUCKETS)))
     buckets = q_terms.select("term_bucket").distinct()
     distinct_terms = q_terms.select("term_bucket", "term").distinct()
 

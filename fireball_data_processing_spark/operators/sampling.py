@@ -85,38 +85,6 @@ def mixture_sample(
     return df.filter(hash_rank(key, salt) < rate)
 
 
-def stratified_sample(
-    df: DataFrame,
-    strata: Column,
-    fraction: Column | float,
-    key: Column,
-) -> DataFrame:
-    """Deterministic stratified sampling: keep ~``fraction`` of each
-    stratum, selected by hash threshold.
-
-    ``fraction`` may be a float (uniform across strata) or a Column
-    derived from the stratum (per-stratum targets — e.g. a broadcast-
-    joined rate table or a ``create_map`` literal like
-    :func:`mixture_sample`). Selection is ``hash_rank(key) < fraction``:
-    a pure scan-local filter — **zero shuffles, zero windows** — which is
-    the property that makes it the 100 TB form. The exact-count
-    alternative (rank rows within each stratum and take ``ceil(f*n)``)
-    needs a per-stratum sort; a hot stratum (half the corpus speaking
-    English) serializes onto one task, so exact-count stratification
-    does not survive skew. The hash threshold's per-stratum count is
-    Binomial(n_s, f) — within 3 sigma = +/-3*sqrt(n_s*f(1-f)) of target,
-    i.e. 0.1% relative error at a billion rows — and, unlike
-    ``DataFrame.sampleBy``, identical across retries, repartitioning and
-    engines (DuckDB-oracle-checkable).
-    """
-    frac = fraction if isinstance(fraction, Column) else F.lit(float(fraction))
-    keep = hash_rank(key) < frac
-    # strata only documents intent when fraction is a float; when it is a
-    # Column the caller has already folded the stratum into the rate.
-    _ = strata
-    return df.filter(keep)
-
-
 def capped_sample(
     df: DataFrame,
     bucket: Column,
@@ -127,7 +95,7 @@ def capped_sample(
     """Per-bucket ABSOLUTE cap: keep at most ``cap`` rows per bucket,
     chosen deterministically by hash rank (ties broken by the key).
 
-    The quota complement to :func:`stratified_sample`'s fractions — the
+    The quota complement to :func:`mixture_sample`'s rates — the
     C4-style "no domain contributes more than N documents" rule, where
     the bound must be exact, not expected. One window (rank within
     bucket by md5 order) = one exchange on the bucket key.
@@ -135,7 +103,7 @@ def capped_sample(
     Skew note: an exact per-bucket count is inherently a per-bucket
     sort, so one hot bucket serializes onto one task. When ``cap`` is
     far below the hot bucket's size, pre-thin with
-    ``stratified_sample(df, bucket, rate, key)`` at a rate that keeps
+    a ``hash_rank(key) < rate`` filter at a rate that keeps
     ~4x ``cap`` of the hot bucket first (hash-threshold, scan-local,
     skew-immune), then apply the exact cap to the thinned remainder —
     the two-phase form trims the sorted volume to O(cap) per bucket.
@@ -154,7 +122,6 @@ def temperature_mixture_rates(
     df: DataFrame,
     bucket: Column,
     alpha: float = 0.5,
-    target_rows: int | None = None,
 ) -> DataFrame:
     """Temperature-scaled mixture plan: per-bucket keep rates that
     rebalance the corpus toward ``share ** alpha`` proportions (the
@@ -163,10 +130,9 @@ def temperature_mixture_rates(
 
     Returns one row per bucket: ``(bucket, n_rows, share, weight,
     keep_rate)`` where ``weight = share^alpha / sum(share^alpha)`` and
-    ``keep_rate = min(1, target_rows * weight / n_rows)`` (with
-    ``target_rows`` defaulting to the corpus size). Feed the result into
-    :func:`mixture_sample` / :func:`stratified_sample` (as a rate map or
-    broadcast-joined rate column) to materialize the blend.
+    ``keep_rate = min(1, total_rows * weight / n_rows)``. Feed the result
+    into :func:`mixture_sample` (as a rate map or broadcast-joined rate
+    column) to materialize the blend.
 
     The whole computation is aggregate-sized: one groupBy on the bucket
     plus unpartitioned windows over the bucket-count table — never the
@@ -185,9 +151,7 @@ def temperature_mixture_rates(
     weighted = shared.withColumn(
         "weight", weight / F.sum(weight).over(w)
     )
-    total = F.sum("n_rows").over(w) if target_rows is None else F.lit(
-        int(target_rows)
-    )
+    total = F.sum("n_rows").over(w)
     return weighted.select(
         "bucket",
         "n_rows",
@@ -258,8 +222,8 @@ def neyman_allocation(
     budget across strata: ``n_h ∝ N_h * sigma_h``, the allocation that
     minimizes the variance of the stratified mean estimator — big AND
     internally-diverse strata earn more budget than big-but-uniform ones
-    (proportional allocation, what ``stratified_sample`` with a constant
-    fraction gives, ignores sigma entirely).
+    (proportional allocation, what a constant hash-threshold rate
+    gives, ignores sigma entirely).
 
     Returns the per-stratum plan: ``(stratum, n_pop, sigma, share,
     n_target, rate)`` where ``share = N_h*sigma_h / sum_k N_k*sigma_k``
@@ -267,7 +231,7 @@ def neyman_allocation(
     share + 0.5)`` capped at ``N_h`` (half-up on an identical double ->
     identical on every engine, unlike native ROUND whose half-rule
     differs), and ``rate = n_target / N_h`` ready to feed
-    ``stratified_sample`` as its per-stratum fraction.
+    a ``hash_rank(key) < rate`` filter as its per-stratum fraction.
 
     ONE grouped aggregate over the data (count + stddev_pop partial-
     combine); shares/targets are window arithmetic over the |strata|-row

@@ -46,13 +46,15 @@ __all__ = [
 ]
 
 
+_FILL_BUCKETS = 64
+
+
 def budget_fill(
     df: DataFrame,
     score_col: str,
     weight_col: str,
     tie_col: str,
     budget: int | DataFrame,
-    n_buckets: int = 64,
     cum_col: str = "cum_weight",
     group_col: str | None = None,
 ) -> DataFrame:
@@ -81,11 +83,11 @@ def budget_fill(
     single task. Instead, a two-phase distributed prefix sum:
 
     1. coarse-bucket rows by score (``score_col`` must lie in [0, 1] —
-       quality ratios do; clamped floor into ``n_buckets`` value-range
+       quality ratios do; clamped floor into ``_FILL_BUCKETS`` value-range
        buckets, no shuffle),
-    2. per-bucket weight totals (one aggregate, ``n_buckets`` rows) ->
+    2. per-bucket weight totals (one aggregate, ``_FILL_BUCKETS`` rows) ->
        exclusive running offsets over that TINY frame (the one
-       unpartitioned window in the plan runs over ``n_buckets`` rows,
+       unpartitioned window in the plan runs over ``_FILL_BUCKETS`` rows,
        the same bounded-aggregate idiom as the house one-row broadcast
        scalars),
     3. broadcast the offsets back; the per-row cumulative sum is then a
@@ -97,9 +99,9 @@ def budget_fill(
     """
     bkt = F.least(
         F.greatest(
-            F.floor(F.col(score_col) * n_buckets).cast("int"), F.lit(0)
+            F.floor(F.col(score_col) * _FILL_BUCKETS).cast("int"), F.lit(0)
         ),
-        F.lit(n_buckets - 1),
+        F.lit(_FILL_BUCKETS - 1),
     )
     # the bucketed frame feeds TWO physical branches (the offsets
     # aggregate and the per-row join probe); without a pin each branch
@@ -197,12 +199,13 @@ def gram_buckets(
 
 
 def bucket_distribution(
-    docs: DataFrame, n_buckets: int, gram_n: int = 2, text_col: str = "text"
+    docs: DataFrame, n_buckets: int, gram_n: int = 2
 ) -> DataFrame:
-    """(bucket, n) gram-occurrence counts — ``n_buckets``-row aggregate."""
+    """(bucket, n) gram-occurrence counts of ``docs.text`` —
+    ``n_buckets``-row aggregate."""
     return (
         docs.select(
-            F.explode(gram_buckets(F.col(text_col), n_buckets, gram_n)).alias(
+            F.explode(gram_buckets(F.col("text"), n_buckets, gram_n)).alias(
                 "bucket"
             )
         )
@@ -216,9 +219,8 @@ def dsir_log_weights(
     target: DataFrame,
     n_buckets: int = 4096,
     gram_n: int = 2,
-    text_col: str = "text",
 ) -> DataFrame:
-    """(doc_id, n_grams, log_weight) for every raw document with at
+    """(doc_id, n_grams, log_weight) for every raw ``(doc_id, text)`` document with at
     least one gram (zero-gram docs have no distribution evidence and no
     output row); log_weight rounded to 6 decimals.
 
@@ -235,8 +237,8 @@ def dsir_log_weights(
     """
     from pyspark.sql.window import Window
 
-    t_dist = bucket_distribution(target, n_buckets, gram_n, text_col)
-    r_dist = bucket_distribution(raw, n_buckets, gram_n, text_col)
+    t_dist = bucket_distribution(target, n_buckets, gram_n)
+    r_dist = bucket_distribution(raw, n_buckets, gram_n)
     # merge the two aggregate-sized tables; the corpus gram totals come
     # from an unpartitioned window over the SAME merged frame — a
     # separate totals agg + join-back would re-plan both distribution
@@ -260,7 +262,7 @@ def dsir_log_weights(
 
     per_gram = raw.select(
         F.col("doc_id"),
-        F.explode(gram_buckets(F.col(text_col), n_buckets, gram_n)).alias(
+        F.explode(gram_buckets(F.col("text"), n_buckets, gram_n)).alias(
             "bucket"
         ),
     )

@@ -43,8 +43,6 @@ def sprt_decisions(
     p1: float,
     alpha: float = 0.05,
     beta: float = 0.05,
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Per-group SPRT decision summary. ``success`` is a boolean Column
     evaluated per row. Returns one row per group:
@@ -52,10 +50,10 @@ def sprt_decisions(
     llr_final)`` where decision is 'accept_h1' / 'accept_h0' /
     'continue' (no crossing within the observed stream); for 'continue'
     the *_at_decision fields are NULL. Ordered by group."""
-    l1 = round(math.log(p1 / p0), round_dp)
-    l0 = round(math.log((1.0 - p1) / (1.0 - p0)), round_dp)
-    upper = round(math.log((1.0 - beta) / alpha), round_dp)
-    lower = round(math.log(beta / (1.0 - alpha)), round_dp)
+    l1 = round(math.log(p1 / p0), 8)
+    l0 = round(math.log((1.0 - p1) / (1.0 - p0)), 8)
+    upper = round(math.log((1.0 - beta) / alpha), 8)
+    lower = round(math.log(beta / (1.0 - alpha)), 8)
 
     x = F.when(success, 1).otherwise(0)
     w = Window.partitionBy("group").orderBy("__o")
@@ -72,7 +70,7 @@ def sprt_decisions(
     llr = F.round(
         F.col("__n1") * F.lit(l1)
         + (F.col("__k") - F.col("__n1")) * F.lit(l0),
-        round_dp,
+        8,
     )
     scored = walked.select(
         "group",
@@ -98,7 +96,7 @@ def sprt_decisions(
             "decision"
         ),
         F.col("__first.__k").cast("bigint").alias("n_at_decision"),
-        F.round(F.col("__first.__llr"), out_dp).alias("llr_at_decision"),
+        F.round(F.col("__first.__llr"), 6).alias("llr_at_decision"),
         "n_total",
-        F.round(F.col("__last.__llr"), out_dp).alias("llr_final"),
+        F.round(F.col("__last.__llr"), 6).alias("llr_final"),
     ).orderBy("group")

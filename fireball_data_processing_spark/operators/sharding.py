@@ -63,13 +63,12 @@ def write_shards(
     key: Column,
     path: str,
     n_shards: int,
-    salt: str = "",
 ) -> None:
     """Materialize the sharded layout: one directory per shard
     (``shard=K/``), rows within each shard's files in the deterministic
-    pseudo-random order. Exactly one exchange (the shard repartition);
-    the within-shard sort is partition-local."""
-    out = shuffle_shards(df, key, n_shards, salt)
+    pseudo-random (unsalted) order. Exactly one exchange (the shard
+    repartition); the within-shard sort is partition-local."""
+    out = shuffle_shards(df, key, n_shards)
     # sort by (shard, order): the leading shard key satisfies the
     # partitioned write's required ordering, so Spark's planned-write
     # machinery does not inject its own (non-stable) sort on top — which

@@ -424,33 +424,14 @@ def ivf_query(
     )
 
 
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-) -> DataFrame:
-    """One-shot convenience over ``build_ivf_index`` + ``ivf_query``.
-
-    Re-fits KMeans on every call — fine for small interactive use; the
-    scale path is the explicit two-phase API (build once, path-backed,
-    query many times with partition pruning).
-    """
-    index = build_ivf_index(corpus, n_centroids=n_centroids)
-    return ivf_query(index, queries, k, n_probe=n_probe)
-
-
 def lsh_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int,
-    num_planes: int = 8,
     dim: int | None = None,
 ) -> DataFrame:
-    """Approximate cosine top-k: candidates share the random-hyperplane
-    bucket; exact cosine re-ranks within buckets. Recall rises with fewer
-    planes (bigger buckets) and falls with more.
+    """Approximate cosine top-k: candidates share the 8-plane
+    random-hyperplane bucket; exact cosine re-ranks within buckets.
 
     **``dim=None`` peeks one corpus row eagerly** (:func:`_infer_dim`); the
     inferred value is shared by both signature stages so the corpus is
@@ -461,13 +442,13 @@ def lsh_topk(
         queries.select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
         ),
-        num_planes, dim, "__qv", "sig",
+        8, dim, "__qv", "sig",
     )
     cs = rh_signature(
         corpus.select(
             F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv")
         ),
-        num_planes, dim, "__cv", "sig",
+        8, dim, "__cv", "sig",
     )
     sim = cosine(F.col("__qv"), F.col("__cv"))
     sim = F.round(sim, 6)
@@ -635,7 +616,7 @@ def mmr_rerank(
 
     so near-duplicate hits don't crowd the result list. The canonical
     consumer of this engine's dedup-aware retrieval stack: feed it
-    ``brute_force_topk``/``ivf_topk``/``bm25_search`` candidates joined
+    ``brute_force_topk``/``ivf_query``/``bm25_search`` candidates joined
     to their vectors.
 
     Greedy selection is inherently sequential PER QUERY but embarrassingly
@@ -1498,17 +1479,10 @@ def pq_topk(
 # ---------------------------------------------------------------------
 
 
-def _cell_centroid_literal(
-    centroids: list[tuple[int, list[float]]],
-) -> Column:
-    """``array<array<double>>`` of centroid vectors ordered by cid
-    (``kmeans_fit`` enumerates cids 0..k-1), so ``element_at(lit,
-    cid + 1)`` is the cell→centroid lookup as a pure expression."""
-    return F.expr(_cell_centroid_sql(centroids))
-
-
 def _cell_centroid_sql(centroids: list[tuple[int, list[float]]]) -> str:
-    """Text twin of :func:`_cell_centroid_literal` (same validation)."""
+    """``array<array<double>>`` SQL of centroid vectors ordered by cid
+    (``kmeans_fit`` enumerates cids 0..k-1), so ``element_at(arr,
+    cid + 1)`` is the cell→centroid lookup as a pure expression."""
     ordered = sorted(centroids)
     if [cid for cid, _ in ordered] != list(range(len(ordered))):
         raise ValueError("centroid cids must be exactly 0..k-1")
@@ -1605,8 +1579,6 @@ def ivfpq_topk(
     ks: int = 4,
     coarse_n_iter: int = 1,
     pq_n_iter: int = 1,
-    centroids: list[tuple[int, list[float]]] | None = None,
-    codebooks: list[list[tuple[int, list[float]]]] | None = None,
 ) -> DataFrame:
     """IVF-PQ approximate nearest neighbors — the composed index shape
     a 100 TB vector corpus actually stores (Faiss ``IVFx,PQy``): coarse
@@ -1627,9 +1599,7 @@ def ivfpq_topk(
     - **Index = pure projection.** The corpus scan emits
       ``(neighbor_id, cell, codes)`` — cell assignment and residual PQ
       encoding are all centroid-literal expressions (zero joins/
-      shuffles); full vectors never leave the scan. A path-backed
-      variant writes this partitioned by cell, turning probes into
-      partition pruning.
+      shuffles); full vectors never leave the scan.
     - **Queries broadcast, corpus streams.** Each query explodes to its
       ``n_probe`` (cell, ADC-table) rows — the per-cell table holds the
       exact distances from the query's CELL-RESIDUAL ``q - c(cell)`` to
@@ -1645,20 +1615,17 @@ def ivfpq_topk(
     coarse fit → residuals → m subspace fits → encoding → probe → ADC
     end to end — a fully value-hash-verified composed ANN index."""
     dim = _infer_dim(corpus, "embedding")
-    if centroids is None or codebooks is None:
-        centroids, codebooks = ivfpq_fit(
-            corpus, n_cells=n_cells, m=m, ks=ks,
-            coarse_n_iter=coarse_n_iter, pq_n_iter=pq_n_iter,
-            dim=dim,
-        )
+    centroids, codebooks = ivfpq_fit(
+        corpus, n_cells=n_cells, m=m, ks=ks,
+        coarse_n_iter=coarse_n_iter, pq_n_iter=pq_n_iter,
+        dim=dim,
+    )
     _check_pq_dims(dim, codebooks)
     idx = _ivfpq_code_frame(corpus, centroids, codebooks, dim, "vec_id", "embedding")
     qt = _ivfpq_probe_frame(
         queries, centroids, codebooks, dim, n_probe, "vec_id", "embedding"
     )
-    return _ivfpq_adc_rank(
-        idx.join(F.broadcast(qt), "cell"), codebooks, k, 6
-    )
+    return _ivfpq_adc_rank(idx.join(F.broadcast(qt), "cell"), codebooks, k)
 
 
 def _ivfpq_code_frame(
@@ -1736,9 +1703,9 @@ def _ivfpq_adc_rank(
     joined: DataFrame,
     codebooks: list[list[tuple[int, list[float]]]],
     k: int,
-    round_dp: int,
 ) -> DataFrame:
-    """ADC lookup sum + two-phase top-k over the (index ⋈ probe) rows."""
+    """ADC lookup sum (6 dp) + two-phase top-k over the (index ⋈ probe)
+    rows."""
     adc = F.round(
         sum(
             F.element_at(
@@ -1747,7 +1714,7 @@ def _ivfpq_adc_rank(
             )
             for j in range(len(codebooks))
         ),
-        round_dp,
+        6,
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_d2").asc(), F.col("neighbor_id").asc()
@@ -1758,89 +1725,4 @@ def _ivfpq_adc_rank(
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "adc_d2", "rank")
-    )
-
-
-class IvfPqIndex(NamedTuple):
-    """A built IVFPQ index: driver-side coarse centroids + residual
-    codebooks (both literal-sized) and the encoded corpus
-    ``(neighbor_id, cell, __codes)``. When ``path``-backed, the code
-    table is parquet partitioned by ``cell``, so probe selection becomes
-    PARTITION PRUNING at read time — the stored-index serving shape a
-    100 TB corpus actually runs (codes are dim/m x 8 smaller than the
-    vectors, and a probe reads n_probe/n_cells of even that)."""
-
-    centroids: list[tuple[int, list[float]]]
-    codebooks: list[list[tuple[int, list[float]]]]
-    assigned: DataFrame
-
-
-def build_ivfpq_index(
-    corpus: DataFrame,
-    n_cells: int = 4,
-    m: int = 4,
-    ks: int = 4,
-    path: str | None = None,
-) -> IvfPqIndex:
-    """IVFPQ build phase — run ONCE per corpus, amortized over every
-    query batch (the :func:`build_ivf_index`/:func:`ivf_query` split,
-    composed-index edition): fit both quantizers (:func:`ivfpq_fit`),
-    encode the corpus as ``(neighbor_id, cell, codes)`` (pure
-    projection), and — with ``path`` set — write it partitioned by
-    ``cell`` and re-read, so :func:`ivfpq_query`'s probe filter prunes
-    whole partitions (PartitionFilters in the scan) instead of scanning
-    even the code column of unprobed cells."""
-    dim = _infer_dim(corpus, "embedding")
-    centroids, codebooks = ivfpq_fit(
-        corpus, n_cells=n_cells, m=m, ks=ks,
-        dim=dim,
-    )
-    assigned = _ivfpq_code_frame(
-        corpus, centroids, codebooks, dim, "vec_id", "embedding"
-    )
-    if path is not None:
-        assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
-        assigned = corpus.sparkSession.read.parquet(path)
-    return IvfPqIndex(
-        centroids=centroids, codebooks=codebooks, assigned=assigned
-    )
-
-
-def ivfpq_query(
-    index: IvfPqIndex,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 2,
-) -> DataFrame:
-    """IVFPQ query phase against a prebuilt index — no fitting, no
-    encoding work: the query batch probes its ``n_probe`` nearest cells,
-    and the probed cell ids are COLLECTED into a static
-    ``cell IN (...)`` filter first (query-batch-sized job), so a
-    path-backed index scan prunes unprobed cell partitions before the
-    broadcast join; the ADC lookup sum and two-phase top-k are
-    :func:`ivfpq_topk`'s exactly (output-identity tested against the
-    one-shot operator). The dimension comes from the codebooks —
-    nothing here peeks the corpus.
-
-    The probe frame is collected ONCE and re-entered as a local
-    relation (query-batch x n_probe rows by contract, each a cell id
-    plus an m x ks table): the collect feeds both the static filter and
-    the join from the SAME materialized rows, so a non-deterministic
-    ``queries`` plan cannot probe one cell set and join another (the
-    ivf_query persist-pinning hazard), and no cached frame outlives the
-    call."""
-    dim = len(index.codebooks) * len(index.codebooks[0][0][1])
-    probe_rows = _ivfpq_probe_frame(
-        queries, index.centroids, index.codebooks, dim, n_probe,
-        "vec_id", "embedding",
-    ).collect()
-    spark = index.assigned.sparkSession
-    qt = spark.createDataFrame(
-        probe_rows,
-        "query_id bigint, cell int, __t array<array<double>>",
-    )
-    cells = sorted({int(r["cell"]) for r in probe_rows})
-    pruned = index.assigned.filter(F.col("cell").isin(cells))
-    return _ivfpq_adc_rank(
-        pruned.join(F.broadcast(qt), "cell"), index.codebooks, k, 6
     )

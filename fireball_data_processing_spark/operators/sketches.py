@@ -230,28 +230,28 @@ def _bit_mask(bit: Column) -> Column:
     return F.pow(F.lit(2.0), bit).cast("bigint")
 
 
-def bloom_bitmap(
-    df: DataFrame,
-    key_col: str,
-    num_bits: int = 1 << 16,
-    num_hashes: int = 5,
-) -> list[int]:
-    """Build a bloom bitset over ``df[key_col]`` and return it as words of
-    63 usable bits (positive-bigint packing: bit 63 never set, so the
-    words survive any signed representation, including the oracle's).
+_BLOOM_BITS = 1 << 16
+_BLOOM_HASHES = 5
 
-    The build is distributed — explode each key's ``num_hashes`` positions,
+
+def bloom_bitmap(df: DataFrame, key_col: str) -> list[int]:
+    """Build a ``_BLOOM_BITS``-bit, ``_BLOOM_HASHES``-hash bloom bitset
+    over ``df[key_col]`` and return it as words of 63 usable bits
+    (positive-bigint packing: bit 63 never set, so the words survive any
+    signed representation, including the oracle's).
+
+    The build is distributed — explode each key's hash positions,
     ``bit_or`` the per-word masks in one aggregation (partials merge
-    map-side, the exchange carries at most ``num_bits/63 + 1`` rows) — and
-    the result is ONE bounded collect (~8 KB at the default ``num_bits``),
+    map-side, the exchange carries at most ``_BLOOM_BITS/63 + 1`` rows) —
+    and the result is ONE bounded collect (~8 KB),
     mirroring how Spark's internal runtime bloom filters ship build-side
     state to the probe side. Eager by design; callers cache the list.
     """
-    n_words = num_bits // 63 + 1
+    n_words = _BLOOM_BITS // 63 + 1
     words = (
         df.select(
             F.explode(
-                _hash_positions(F.col(key_col), num_hashes, num_bits)
+                _hash_positions(F.col(key_col), _BLOOM_HASHES, _BLOOM_BITS)
             ).alias("pos")
         )
         .select(
@@ -268,24 +268,19 @@ def bloom_bitmap(
     return bitmap
 
 
-def bloom_might_contain(
-    key: Column,
-    bitmap: list[int],
-    num_bits: int,
-    num_hashes: int = 5,
-) -> Column:
+def bloom_might_contain(key: Column, bitmap: list[int]) -> Column:
     """Pure-expression bloom membership probe against a literal bitmap:
     true iff every hash position's bit is set. No join, no shuffle, no
     Python — the bitmap enters the plan as ONE ``array<bigint>`` literal
     (single parsed expression, constant-folded before codegen — the
     ``_matrix_literal`` construction), and the probe is ``forall`` over
-    ``num_hashes`` element_at + mask tests, so it runs inside whole-stage
+    ``_BLOOM_HASHES`` element_at + mask tests, so it runs inside whole-stage
     codegen on the probe side's scan."""
     words = F.expr(
         "array(" + ",".join(f"{int(w)}L" for w in bitmap) + ")"
     )
     return F.forall(
-        _hash_positions(key, num_hashes, num_bits),
+        _hash_positions(key, _BLOOM_HASHES, _BLOOM_BITS),
         lambda p: (
             F.element_at(words, (p / 63).cast("int") + 1).bitwiseAND(
                 _bit_mask(p % 63)
@@ -313,7 +308,7 @@ def bloom_prejoin(
     large side's non-matching rows before the exchange is the win.
     """
     bitmap = bloom_bitmap(small, small_key)
-    return large.filter(bloom_might_contain(F.col(large_key), bitmap, 1 << 16))
+    return large.filter(bloom_might_contain(F.col(large_key), bitmap))
 
 
 def corpus_minhash_overlap(

@@ -108,7 +108,6 @@ def two_phase_global_rank(
     score_col: str,
     tiebreak_cols: Sequence[str],
     n_buckets: int = 8,
-    assert_unique_key: bool = False,
 ) -> DataFrame:
     """Exact global ``row_number`` over ``(score asc_nulls_first,
     *tiebreak_cols asc)`` WITHOUT a single-partition window — the
@@ -136,40 +135,8 @@ def two_phase_global_rank(
     Returns ``df``'s columns plus ``rank`` (bigint, 1-based). The
     input is localCheckpointed (it feeds the quantile probe, the
     bucket counts, and the rank — lazy, its lineage would recompute
-    once per consumer).
-
-    ``assert_unique_key=True`` enforces the uniqueness precondition
-    with one cheap aggregate (a GROUP BY over the composite key — NOT
-    countDistinct, which drops null key parts while null scores are
-    legitimate bucket -1 input) and raises ``ValueError`` on violation,
-    naming the largest duplicate group — turn it on at new call sites
-    until their key set is proven unique, then drop to the default for
-    production runs (the check is one extra pass over the checkpointed
-    frame)."""
+    once per consumer)."""
     chk = df.localCheckpoint()
-    if assert_unique_key:
-        key = [score_col, *tiebreak_cols]
-        # GROUP BY uniqueness (null == null), NOT countDistinct — null
-        # scores are legitimate input (bucket -1) and a null key part
-        # must still count as one key value, not vanish from the tally
-        r = (
-            chk.groupBy(*key)
-            .agg(F.count(F.lit(1)).alias("__k"))
-            .agg(
-                F.max("__k").alias("__mx"),
-                F.count(F.lit(1)).alias("__nd"),
-                F.sum("__k").alias("__n"),
-            )
-            .collect()[0]
-        )
-        if (r["__mx"] or 0) > 1:
-            raise ValueError(
-                "two_phase_global_rank: composite key "
-                f"{key} is not unique over the input "
-                f"(rows={r['__n']}, distinct keys={r['__nd']}, largest "
-                f"duplicate group={r['__mx']}) — ranks among duplicate "
-                "keys would be arbitrary; extend tiebreak_cols"
-            )
     probs = [i / float(n_buckets) for i in range(1, n_buckets)]
     cuts = sorted(set(chk.approxQuantile(score_col, probs, 0.01)))
     b = F.lit(0)

@@ -44,15 +44,17 @@ def interleave_bits(scaled: Sequence[Column], bits: int) -> Column:
     return reduce(lambda a, b: a + b, terms)
 
 
-def z_value(
-    df: DataFrame, cols: Sequence[str], bits: int = 12
-) -> DataFrame:
+_BITS = 12
+_N_FILES = 16
+
+
+def z_value(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """Append a ``__z`` column: the Morton code of min/max-normalized
     ``cols``. Normalization stats are one aggregation broadcast back in
-    (constant-range columns map to 0). ``bits`` per dimension; the code
-    fits int64 while ``bits * len(cols) <= 62``."""
-    if bits * len(cols) > 62:
-        raise ValueError("bits * len(cols) must fit a signed int64")
+    (constant-range columns map to 0). ``_BITS`` per dimension; the code
+    fits int64 while ``_BITS * len(cols) <= 62``."""
+    if _BITS * len(cols) > 62:
+        raise ValueError("12 bits * len(cols) must fit a signed int64")
     stats = df.agg(
         *[
             agg
@@ -63,7 +65,7 @@ def z_value(
             )
         ]
     )
-    top = F.lit((1 << bits) - 1)
+    top = F.lit((1 << _BITS) - 1)
     scaled = [
         F.when(
             F.col(f"__max_{c}") > F.col(f"__min_{c}"),
@@ -80,7 +82,7 @@ def z_value(
     with_scaled = df.join(F.broadcast(stats)).select(df["*"], *scaled)
     return with_scaled.select(
         *[c for c in df.columns],
-        interleave_bits([F.col(f"__s_{c}") for c in cols], bits).alias("__z"),
+        interleave_bits([F.col(f"__s_{c}") for c in cols], _BITS).alias("__z"),
     )
 
 
@@ -88,9 +90,8 @@ def zorder_write(
     df: DataFrame,
     path: str,
     cols: Sequence[str],
-    n_files: int = 16,
 ) -> None:
-    """Write ``df`` as ``n_files`` parquet files clustered along the
+    """Write ``df`` as ``_N_FILES`` parquet files clustered along the
     Z-curve of ``cols``: one range shuffle on the Morton code (sampled
     boundaries — no total sort), local sort inside each file, the
     helper column dropped from the output. After this, per-file min/max
@@ -98,7 +99,7 @@ def zorder_write(
     scans skip most files regardless of which column they filter."""
     (
         z_value(df, cols)
-        .repartitionByRange(n_files, F.col("__z"))
+        .repartitionByRange(_N_FILES, F.col("__z"))
         .sortWithinPartitions("__z")
         .drop("__z")
         .write.mode("overwrite")

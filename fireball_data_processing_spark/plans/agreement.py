@@ -207,18 +207,17 @@ def pairwise_kendall_tau(
     )
 
 
+_BETA = 0.01
+
+
 def dawid_skene(
     ratings: DataFrame,
     labels: list[str],
-    item_col: str = "item",
-    rater_col: str = "rater",
-    label_col: str = "label",
     n_iter: int = 2,
-    beta: float = 0.01,
-    round_dp: int = 8,
 ) -> DataFrame:
     """Dawid-Skene (1979) EM label aggregation: infer each item's true
-    label from redundant noisy annotations by jointly estimating
+    label from redundant noisy ``(item, rater, label)`` annotations by
+    jointly estimating
     per-rater confusion matrices — the aggregation step the pairwise
     agreement statistics above diagnose but don't perform. Majority vote
     weights every rater equally; Dawid-Skene learns who to trust, per
@@ -236,16 +235,16 @@ def dawid_skene(
     Cross-engine reproducibility (the kmeans contract, applied to EM):
     every aggregated quantity — initial vote shares, priors, confusion
     cells, summed log-posteriors, normalized posteriors — is ROUNDED to
-    ``round_dp`` before downstream use, absorbing summation-order float
+    8 dp before downstream use, absorbing summation-order float
     noise each round, so an unrolled SQL oracle replays the iterations.
-    ``beta`` is additive smoothing (K-ary Laplace) keeping every
+    ``_BETA`` is additive smoothing (K-ary Laplace) keeping every
     ln() argument positive. E-step works in log space with a
     max-subtracted softmax, so vote multiplicities never underflow.
 
     Returns ``(item, map_label, posterior)``: the MAP label (posterior
     ties break to label-lexicographic order) and its posterior exactly as
     the last E-step rounded it. It is not rounded again: a second, coarser
-    round of a ``round_dp`` value is a decimal tie one time in a hundred,
+    round of an 8-dp value is a decimal tie one time in a hundred,
     and engines break a tie on a double differently (Spark rounds the
     shortest decimal form half-up, DuckDB the binary value).
     """
@@ -258,10 +257,12 @@ def dawid_skene(
     # 92 scans / 274 exchanges at n_iter=2 before the pin). The cache is
     # (items x raters x labels)-bounded, far below the ratings it folds.
     counts = (
+        # the self-aliases are part of the plan the oracle parity and the
+        # benchmark were measured on; dropping them removes a Project
         ratings.groupBy(
-            F.col(item_col).alias("item"),
-            F.col(rater_col).alias("rater"),
-            F.col(label_col).alias("label"),
+            F.col("item").alias("item"),
+            F.col("rater").alias("rater"),
+            F.col("label").alias("label"),
         )
         .agg(F.count(F.lit(1)).cast("double").alias("n"))
         # hash-partition the pin on "item" — the
@@ -288,7 +289,7 @@ def dawid_skene(
             "item",
             "c",
             F.round(
-                F.coalesce(F.col("v"), F.lit(0.0)) / F.col("ni"), round_dp
+                F.coalesce(F.col("v"), F.lit(0.0)) / F.col("ni"), 8
             ).alias("t"),
         )
         # item-partitioned like `counts` (same rationale): the M-step
@@ -313,9 +314,9 @@ def dawid_skene(
             .select(
                 "c",
                 F.round(
-                    (F.col("__st") + F.lit(beta))
-                    / (F.col("n_items") + F.lit(K * beta)),
-                    round_dp,
+                    (F.col("__st") + F.lit(_BETA))
+                    / (F.col("n_items") + F.lit(K * _BETA)),
+                    8,
                 ).alias("p"),
             )
         )
@@ -333,9 +334,9 @@ def dawid_skene(
                 "c",
                 "l",
                 F.round(
-                    (F.coalesce(F.col("num"), F.lit(0.0)) + F.lit(beta))
-                    / (F.coalesce(F.col("den"), F.lit(0.0)) + F.lit(K * beta)),
-                    round_dp,
+                    (F.coalesce(F.col("num"), F.lit(0.0)) + F.lit(_BETA))
+                    / (F.coalesce(F.col("den"), F.lit(0.0)) + F.lit(K * _BETA)),
+                    8,
                 ).alias("pi"),
             )
         )
@@ -349,7 +350,7 @@ def dawid_skene(
             .agg(
                 F.round(
                     F.log(F.max("p")) + F.sum(F.col("n") * F.log("pi")),
-                    round_dp,
+                    8,
                 ).alias("lp")
             )
         )
@@ -362,7 +363,7 @@ def dawid_skene(
                 / F.sum(F.exp(F.col("lp") - F.max("lp").over(w_item))).over(
                     w_item
                 ),
-                round_dp,
+                8,
             ).alias("t"),
         ).repartition(F.col("item")).persist()
     w_rank = Window.partitionBy("item").orderBy(

@@ -37,12 +37,12 @@ from fireball_data_processing_spark.operators.packing import (
 )
 
 
-def clean_stage(docs: DataFrame, min_words_per_segment: int = 50) -> DataFrame:
-    """C4 cleaning: keep surviving segments as the new text, drop
-    documents that end up empty or carry a bad phrase."""
+def clean_stage(docs: DataFrame) -> DataFrame:
+    """C4 cleaning: keep surviving segments (50+ words) as the new text,
+    drop documents that end up empty or carry a bad phrase."""
     seg = clean_segments(
         F.col("text"),
-        min_words=min_words_per_segment,
+        min_words=50,
         require_terminal_punct=False,
     )
     flags = doc_flags(F.col("text"), bad_phrases=("lorem ipsum", "slow scan"))
@@ -109,60 +109,17 @@ def dedup_stage(cleaned: DataFrame) -> DataFrame:
     )
 
 
-def quality_stage(deduped: DataFrame, min_tokens: int = 5) -> DataFrame:
-    """Token-count band gate (the P4/P7 guards at corpus scale)."""
+def quality_stage(deduped: DataFrame) -> DataFrame:
+    """Token-count band gate, 5..5000 tokens (the P4/P7 guards at corpus
+    scale)."""
     n = token_count_col(F.col("clean_text"))
     return deduped.withColumn("n_tokens", n).filter(
-        (F.col("n_tokens") >= min_tokens) & (F.col("n_tokens") <= 5000)
-    )
-
-
-def selection_stage(
-    quality: DataFrame,
-    target: DataFrame,
-    n_buckets: int = 4096,
-) -> DataFrame:
-    """Optional DSIR domain targeting (:mod:`..operators.selection`):
-    keep documents whose hashed-bigram importance log-weight against the
-    ``target`` sample clears 0 ("more target-like than the raw
-    average"). A value threshold keeps the stage fully lazy
-    and shuffle-light; derive a keep-fraction threshold offline from an
-    approx quantile of the weights when a fixed budget is needed.
-
-    The DSIR pass consumes ``quality`` several times (distribution build
-    + scoring); callers running selection should ``.persist()`` the
-    quality frame — the same fan-out rule as the module docstring."""
-    from fireball_data_processing_spark.operators.selection import (
-        dsir_log_weights,
-    )
-
-    # the target sample arrives with its own text column (raw docs by
-    # default); project it onto the pipeline's text column name
-    weights = dsir_log_weights(
-        quality,
-        target.select(F.col("text").alias("clean_text")),
-        n_buckets=n_buckets,
-        text_col="clean_text",
-    )
-    # LEFT join: a doc with fewer than two tokens has no bigram evidence
-    # and no weights row — that is "no information", not "off-domain",
-    # so such docs are KEPT with a NULL log_weight rather than silently
-    # dropped (an inner join would delete them regardless of threshold)
-    return quality.join(
-        weights.select("doc_id", "log_weight"), "doc_id", "left"
-    ).filter(
-        F.col("log_weight").isNull()
-        | (F.col("log_weight") >= 0.0)
+        (F.col("n_tokens") >= 5) & (F.col("n_tokens") <= 5000)
     )
 
 
 def build_training_corpus(
     docs: DataFrame,
-    max_tokens_per_bin: int = 256,
-    min_words_per_segment: int = 50,
-    min_tokens: int = 5,
-    target: DataFrame | None = None,
-    dsir_n_buckets: int = 4096,
     normalize_form: str | None = None,
     segment_dedup_min_docs: int | None = None,
     segment_words: int = 8,
@@ -170,23 +127,22 @@ def build_training_corpus(
     mixture_alpha: float | None = None,
 ) -> dict[str, DataFrame]:
     """The full pipeline; returns every stage (all lazy):
-    ``{["normalized",] "cleaned", "deduped", "quality"[, "selected"]
-    [, "capped"][, "mixed"], "packed"}`` — ``packed`` is the training
-    manifest ``(source, doc_id, bin_idx, tok_start, tok_end,
-    offset_in_bin)``.
+    ``{["normalized",] "cleaned", "deduped", "quality"[, "capped"]
+    [, "mixed"], "packed"}`` — ``packed`` is the training manifest
+    ``(source, doc_id, bin_idx, tok_start, tok_end, offset_in_bin)`` in
+    256-token bins.
 
     Optional stages, in pipeline order: ``normalize_form`` prepends
     unicode hygiene before anything hashes text;
     ``segment_dedup_min_docs`` scrubs cross-document boilerplate
-    segments between cleaning and doc-level dedup; ``target`` inserts
-    DSIR domain selection after the quality gate; ``domain_cap`` applies
+    segments between cleaning and doc-level dedup; ``domain_cap`` applies
     the per-source quota; ``mixture_alpha`` temperature-rebalances the
-    source mix just before packing (the full modern pretraining shape:
-    normalize -> clean -> segment-dedup -> dedup -> quality -> select ->
-    cap -> mix -> pack)."""
+    source mix just before packing (the modern pretraining shape:
+    normalize -> clean -> segment-dedup -> dedup -> quality -> cap ->
+    mix -> pack)."""
     if normalize_form is not None:
         docs = normalize_stage(docs, normalize_form)
-    cleaned = clean_stage(docs, min_words_per_segment)
+    cleaned = clean_stage(docs)
     dedup_input = cleaned
     seg_deduped = None
     if segment_dedup_min_docs is not None:
@@ -195,7 +151,7 @@ def build_training_corpus(
         )
         dedup_input = seg_deduped
     deduped = dedup_stage(dedup_input)
-    quality = quality_stage(deduped, min_tokens)
+    quality = quality_stage(deduped)
     stages = {"cleaned": cleaned, "deduped": deduped, "quality": quality}
     if seg_deduped is not None:
         stages = {
@@ -207,11 +163,6 @@ def build_training_corpus(
     if normalize_form is not None:
         stages = {"normalized": docs, **stages}
     pack_input = quality
-    if target is not None:
-        pack_input = selection_stage(
-            quality, target, n_buckets=dsir_n_buckets
-        )
-        stages["selected"] = pack_input
     if domain_cap is not None:
         pack_input = domain_cap_stage(pack_input, domain_cap)
         stages["capped"] = pack_input
@@ -220,7 +171,7 @@ def build_training_corpus(
         stages["mixed"] = pack_input
     stages["packed"] = pack_sequences(
         pack_input,
-        max_tokens=max_tokens_per_bin,
+        max_tokens=256,
         shard_col="source",
         order_col="doc_id",
         n_tokens=F.col("n_tokens"),
@@ -261,8 +212,7 @@ def mixture_stage(capped: DataFrame, alpha: float = 0.5) -> DataFrame:
     proportions), applied with the scan-local hash threshold. The rate
     table is aggregate-sized and broadcast; computing it re-executes the
     upstream subtree once, so callers running this stage should
-    ``.persist()`` the frame they pass in — the same fan-out rule as
-    the DSIR stage."""
+    ``.persist()`` the frame they pass in — the module's fan-out rule."""
     from fireball_data_processing_spark.operators.sampling import (
         hash_rank,
         temperature_mixture_rates,

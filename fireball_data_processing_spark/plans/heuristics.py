@@ -19,9 +19,7 @@ synthetic ``events``). Reference semantics each expression reproduces are
 cited per function (file:line into /root/reference).
 
 Pluggable-heuristic surface (reference ``heuristics/__init__.py:20-43``,
-U1): ``register_heuristic`` adds a named expression factory; non-expressible
-folds can register an ``applyInPandas`` variant instead via
-``register_pandas_heuristic``.
+U1): ``register_heuristic`` adds a named expression factory.
 """
 
 from __future__ import annotations
@@ -331,72 +329,19 @@ def heuristic_exprs(
     return {n: _REGISTRY[n](s).alias(n) for n in names}
 
 
-import pandas as pd  # noqa: E402  (used by the pandas-heuristic surface)
-
-_PandasHeuristic = Callable[[pd.DataFrame], float]
-_PANDAS_REGISTRY: dict[str, _PandasHeuristic] = {}
-
-
-def register_pandas_heuristic(name: str):
-    """U1's escape hatch (reference heuristics/__init__.py:20-43: any
-    ``Iterable[dict] -> float`` is a heuristic): register an arbitrary
-    per-instance fold ``pandas.DataFrame -> float``. The frame arrives
-    sorted by the stream's seq column — the exact analog of the reference's
-    event-iterator contract — and runs via ``applyInPandas``, parallel
-    across instances."""
-
-    def deco(fn: _PandasHeuristic) -> _PandasHeuristic:
-        _PANDAS_REGISTRY[name] = fn
-        return fn
-
-    return deco
-
-
-def pandas_heuristics_matrix(
-    df: DataFrame, s: StreamSchema, names: tuple[str, ...]
-) -> DataFrame:
-    """(instance, <name> double ...) from registered pandas heuristics."""
-    missing = [n for n in names if n not in _PANDAS_REGISTRY]
-    if missing:
-        raise RuntimeError(f"unknown pandas heuristics: {missing}")
-    fns = {n: _PANDAS_REGISTRY[n] for n in names}
-    inst, seq = s.instance_col, s.seq_col
-    inst_type = df.schema[inst].dataType.simpleString()
-    out_schema = f"{inst} {inst_type}, " + ", ".join(
-        f"{n} double" for n in names
-    )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        ordered = pdf.sort_values(seq)
-        row = {inst: [pdf[inst].iloc[0]]}
-        for n, fn in fns.items():
-            row[n] = [float(fn(ordered))]
-        return pd.DataFrame(row)
-
-    return df.groupBy(inst).applyInPandas(run, schema=out_schema)
-
-
 def heuristics_matrix(
     df: DataFrame,
     s: StreamSchema,
     names: tuple[str, ...] | None = None,
-    pandas_names: tuple[str, ...] = (),
 ) -> DataFrame:
     """instance_id x heuristic wide matrix, one scan + one shuffle.
 
     This is the engine's answer to the reference's N-scans-for-N-heuristics
     loop and its CSV-per-heuristic output joined back into a pandas matrix
-    (``dataset/dataset.py:68-71``). ``pandas_names`` appends registered
-    applyInPandas heuristics, joined back on the instance key (one extra
-    exchange: FlatMapGroupsInPandas output partitioning is opaque to the
-    optimizer, so the join cannot reuse it)."""
+    (``dataset/dataset.py:68-71``)."""
     names = names or HEURISTICS
     base = df
     if any(n in WINDOWED for n in names):
         base = with_stream_features(base, s)
     exprs = heuristic_exprs(s, names)
-    out = base.groupBy(F.col(s.instance_col)).agg(*exprs.values())
-    if pandas_names:
-        extra = pandas_heuristics_matrix(df, s, pandas_names)
-        out = out.join(extra, s.instance_col)
-    return out
+    return base.groupBy(F.col(s.instance_col)).agg(*exprs.values())

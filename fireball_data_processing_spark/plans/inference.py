@@ -68,11 +68,7 @@ def classify_batches(
     return df.mapInPandas(run, schema=out_schema)
 
 
-def mllib_model_fn(
-    model,
-    positive_label: str = "1",
-    negative_label: str = "0",
-) -> Callable[[pd.DataFrame], pd.DataFrame]:
+def mllib_model_fn(model) -> Callable[[pd.DataFrame], pd.DataFrame]:
     """U4/U5: wire a *trained* MLlib scaler+logreg pipeline into the envelope.
 
     Mirrors the reference's finetuned-predictor flow
@@ -118,7 +114,7 @@ def mllib_model_fn(
             x = (x - mean) * scale
         margin = x @ coef + intercept
         prob = 1.0 / (1.0 + np.exp(-margin))
-        label = np.where(prob >= 0.5, positive_label, negative_label)
+        label = np.where(prob >= 0.5, "1", "0")
         return pd.DataFrame({"label": label, "prob": prob})
 
     return model_fn
@@ -126,9 +122,6 @@ def mllib_model_fn(
 
 def with_retries(
     model_fn: Callable[[pd.DataFrame], pd.DataFrame],
-    max_tries: int = 3,
-    backoff: float = 0.05,
-    sleep: Callable[[float], None] = time.sleep,
 ) -> Callable[[pd.DataFrame], pd.DataFrame]:
     """U3: retry/pacing wrapper for flaky model backends.
 
@@ -136,27 +129,24 @@ def with_retries(
     paces calls with a short sleep (``distill3b_ic_classifier_gpt.py:46-58``);
     its driver processes files sequentially to stay under the rate limit
     (``distill3b_ic_classifier_gpt.py:114-117``). This wrapper gives the
-    batch-level equivalent: each Arrow batch is attempted up to ``max_tries``
-    times with exponential backoff (``backoff * 2**attempt`` seconds between
-    tries); the last error is re-raised so Spark's own task retry takes over.
+    batch-level equivalent: each Arrow batch is attempted up to 3 times with
+    exponential backoff (``0.05 * 2**attempt`` seconds between tries); the
+    last error is re-raised so Spark's own task retry takes over.
 
     Cluster-wide rate limiting: cap concurrency *structurally* with
     ``df.coalesce(k)`` before :func:`classify_batches` — at most ``k`` tasks
     (hence ``k`` concurrent model clients) run at once, the distributed
-    analog of the reference's sequential file loop. ``sleep`` is injectable
-    for tests.
+    analog of the reference's sequential file loop.
     """
-    if max_tries < 1:
-        raise ValueError("max_tries must be >= 1")
 
     def wrapped(pdf: pd.DataFrame) -> pd.DataFrame:
-        for attempt in range(max_tries):
+        for attempt in range(3):
             try:
                 return model_fn(pdf)
             except (Exception,):
-                if attempt == max_tries - 1:
+                if attempt == 2:
                     raise
-                sleep(backoff * (2 ** attempt))
+                time.sleep(0.05 * (2 ** attempt))
         raise AssertionError("unreachable")
 
     return wrapped

@@ -28,28 +28,26 @@ def feature_label_frame(
     return va.transform(features).withColumnRenamed(label_col, "label")
 
 
-def train_logreg_cv(
-    df: DataFrame,
-    feature_cols: list[str],
-    label_col: str,
-    reg_grid: tuple[float, ...] = (0.01, 0.1, 1.0),
-    n_folds: int = 3,
-):
-    """StandardScaler + LogisticRegression + k-fold CV over the reg grid
-    (the reference's C grid inverted: C = 1/regParam). Returns the fitted
-    CrossValidatorModel."""
+_REG_GRID = (0.01, 0.1, 1.0)
+_N_FOLDS = 3
+
+
+def train_logreg_cv(df: DataFrame, feature_cols: list[str], label_col: str):
+    """StandardScaler + LogisticRegression + ``_N_FOLDS``-fold CV over
+    ``_REG_GRID`` (the reference's C grid inverted: C = 1/regParam).
+    Returns the fitted CrossValidatorModel."""
     assembled = feature_label_frame(df, feature_cols, label_col)
     scaler = StandardScaler(
         inputCol="features_raw", outputCol="features", withMean=True, withStd=True
     )
     lr = LogisticRegression(featuresCol="features", labelCol="label")
     pipe = Pipeline(stages=[scaler, lr])
-    grid = ParamGridBuilder().addGrid(lr.regParam, list(reg_grid)).build()
+    grid = ParamGridBuilder().addGrid(lr.regParam, list(_REG_GRID)).build()
     cv = CrossValidator(
         estimator=pipe,
         estimatorParamMaps=grid,
         evaluator=BinaryClassificationEvaluator(labelCol="label"),
-        numFolds=n_folds,
+        numFolds=_N_FOLDS,
         seed=42,
         parallelism=4,
     )

@@ -20,6 +20,8 @@ fragments" below); ``tests/test_oracle_fragments.py`` enforces it.
 
 from __future__ import annotations
 
+import atexit
+import shutil
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -1256,7 +1258,7 @@ WHERE d.doc_id % 4 <> 0 AND d.doc_id NOT IN (SELECT doc_id FROM hits)
 )
 def q_ingest_gate_near_new(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the streaming NEAR-dup ingest gate
-    (streaming/dedup_stream.py `stream_near_new_documents`): incoming docs
+    (streaming/dedup_stream.py `near_new_documents`): incoming docs
     (doc_id % 4 != 0) whose MinHash signature shares no LSH band with the
     corpus partition (doc_id % 4 == 0). Exercises the per-row signature
     expression (`minhash_sig_expr` — no shuffle, stream-safe) and the
@@ -1356,7 +1358,7 @@ def _ingest_capstone(
     # the foreachBatch contract: without it every epoch would rebuild the
     # index from the corpus scan (the materialized index is tiny).
     with ThreadPoolExecutor(max_workers=2) as pool:
-        staged = pool.submit(stage_incoming_slices, incoming, staging, 4)
+        staged = pool.submit(stage_incoming_slices, incoming, staging)
         index_f = pool.submit(lambda: build_index(corpus).localCheckpoint())
         staged.result()
         index = index_f.result()
@@ -2731,8 +2733,8 @@ def q_discord_render_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep_human_eval.py:211-215): discord-markdown STRIPPED to plain text
     and profanity-censored ('-' per character, word-bounded,
     case-insensitive) — both as JVM-side regexp_replace chains. The HTML
-    renderer itself (presentation output) is the golden-tested pandas UDF
-    functions.render.render_discord_markdown."""
+    renderer itself (presentation output) is the golden-tested
+    functions.render.render_discord_markdown_str."""
     from fireball_data_processing_spark.functions.render import (
         censor_words,
         strip_markdown,
@@ -4737,7 +4739,31 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BM25_INDEX_CACHE: dict[str, str] = {}
+def _documents_key(sf_dir: str) -> str:
+    """Cache key for what is built from the documents table (trained BPE
+    merges, the BM25 postings index): the table's file-level checksum
+    (path + length + mtime via ``sources/checksum.py``), NOT the
+    ``sf_dir`` string — a path-keyed cache would serve stale results if
+    the table under a fixed path were rewritten within one process
+    lifetime (pinned in tests/test_bpe.py and tests/test_retrieval.py).
+    One driver-side file listing, no data read."""
+    from fireball_data_processing_spark.sources.checksum import dataset_checksum, list_files
+
+    return dataset_checksum(list_files(sf_dir, "documents.parquet"))
+
+
+# sf_dir -> (documents key, index directory). A rewritten table gets a new
+# index and the replaced directory is removed; the rest go at exit.
+_BM25_INDEX_CACHE: dict[str, tuple[str, str]] = {}
+
+
+def _drop_bm25_indexes() -> None:
+    for _, path in _BM25_INDEX_CACHE.values():
+        shutil.rmtree(path, ignore_errors=True)
+    _BM25_INDEX_CACHE.clear()
+
+
+atexit.register(_drop_bm25_indexes)
 
 
 @query("bm25_search_indexed", _BM25_ORACLE)
@@ -4756,14 +4782,18 @@ def q_bm25_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_postings_index,
     )
 
-    if sf_dir not in _BM25_INDEX_CACHE:
+    key = _documents_key(sf_dir)
+    hit = _BM25_INDEX_CACHE.get(sf_dir)
+    if hit is None or hit[0] != key:
+        if hit is not None:
+            shutil.rmtree(hit[1], ignore_errors=True)
         path = tempfile.mkdtemp(prefix="fb_bm25_index_")
         build_postings_index(load_table(spark, sf_dir, "documents"), path)
-        _BM25_INDEX_CACHE[sf_dir] = path
+        hit = _BM25_INDEX_CACHE[sf_dir] = (key, path)
     q = spark.createDataFrame(list(_BM25_QUERIES), ["query_id", "query_text"])
-    return bm25_search_from_index(
-        spark, _BM25_INDEX_CACHE[sf_dir], q, k=5
-    ).withColumn("rank", F.col("rank").cast("bigint"))
+    return bm25_search_from_index(spark, hit[1], q, k=5).withColumn(
+        "rank", F.col("rank").cast("bigint")
+    )
 
 
 _TFIDF_ORACLE = """
@@ -5049,16 +5079,10 @@ def q_source_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_MERGES_CACHE: dict[str, list] = {}
 
 
-def _bpe_corpus_key(sf_dir: str) -> str:
-    """Cache key for trained BPE merges: the documents table's file-level
-    checksum (path + length + mtime via ``sources/checksum.py``), NOT the
-    ``sf_dir`` string — a path-keyed cache would serve stale merges if
-    the table under a fixed path were rewritten within one process
-    lifetime (retrain-on-mutation pinned in tests/test_bpe.py). One
-    driver-side file listing, no data read."""
-    from fireball_data_processing_spark.sources.checksum import dataset_checksum, list_files
-
-    return dataset_checksum(list_files(sf_dir, "documents.parquet"))
+# the training word table's floor and size: the Spark fit and both
+# oracles read the same two numbers
+_BPE_MIN_COUNT = 2
+_BPE_TOP_N = 65_536
 
 
 def _bpe_merges_for(spark: SparkSession, sf_dir: str) -> list:
@@ -5070,22 +5094,22 @@ def _bpe_merges_for(spark: SparkSession, sf_dir: str) -> list:
         word_frequencies,
     )
 
-    key = _bpe_corpus_key(sf_dir)
+    key = _documents_key(sf_dir)
     if key not in _BPE_MERGES_CACHE:
         d = load_table(spark, sf_dir, "documents")
-        wf_df = word_frequencies(d, min_count=2, top_n=65_536)
+        wf_df = word_frequencies(d, min_count=_BPE_MIN_COUNT, top_n=_BPE_TOP_N)
         wf = [(r.word, r.n) for r in wf_df.collect()]
         _BPE_MERGES_CACHE[key] = train_bpe(sorted(wf), n_merges=64)
     return _BPE_MERGES_CACHE[key]
 
 
-def _bpe_train_ctes(n_merges: int, min_count: int = 2, top_n: int = 65_536) -> str:
+def _bpe_train_ctes(n_merges: int) -> str:
     """The WITH-chain replaying greedy BPE-merge training (shared by the
     merge-table oracle and the merge-APPLICATION oracle). Returns
     everything from ``WITH tok AS (...`` through the final vocab CTE
     ``v{n_merges}`` — callers append their own terminal CTEs/SELECT.
     Replays `functions/bpe.py train_bpe` over the
-    `word_frequencies(min_count, top_n)` table exactly:
+    `word_frequencies(_BPE_MIN_COUNT, _BPE_TOP_N)` table exactly:
 
     - per step: adjacent-pair counts weighted by word frequency (each
       occurrence is a summand, like the Python zip loop), argmax with
@@ -5112,9 +5136,9 @@ WITH tok AS (
 ),
 wf0 AS (
   SELECT word, COUNT(*)::BIGINT AS n FROM tok GROUP BY word
-  HAVING COUNT(*) >= {min_count}
+  HAVING COUNT(*) >= {_BPE_MIN_COUNT}
 ),
-wf AS (SELECT word, n FROM wf0 ORDER BY n DESC, word ASC LIMIT {top_n}),
+wf AS (SELECT word, n FROM wf0 ORDER BY n DESC, word ASC LIMIT {_BPE_TOP_N}),
 v0 AS MATERIALIZED (
   SELECT word, n,
     list_transform(generate_series(1, length(word)),
@@ -5168,7 +5192,7 @@ v{t} AS MATERIALIZED (
     return "".join(parts)
 
 
-def _bpe_merge_oracle(n_merges: int, min_count: int = 2) -> str:
+def _bpe_merge_oracle(n_merges: int) -> str:
     """The trained merge table as one DuckDB statement: the training
     replay chain (:func:`_bpe_train_ctes`) + one UNION ALL over the
     per-step argmax CTEs."""
@@ -5177,15 +5201,10 @@ def _bpe_merge_oracle(n_merges: int, min_count: int = 2) -> str:
         f" FROM bp{t}"
         for t in range(1, n_merges + 1)
     )
-    return _bpe_train_ctes(n_merges, min_count) + "\n" + sel
+    return _bpe_train_ctes(n_merges) + "\n" + sel
 
 
-def _bpe_apply_ctes(
-    n_merges: int = 16,
-    n_apply: int = 8,
-    min_count: int = 2,
-    top_n: int = 65_536,
-) -> str:
+def _bpe_apply_ctes(n_merges: int = 16, n_apply: int = 8) -> str:
     """Merge APPLICATION unrolled on top of the training replay (the
     same unrollable shape as training, per its docstring: "a per-word
     loop bounded by word length"). Returns the WITH-chain through ``wtok``
@@ -5211,7 +5230,7 @@ def _bpe_apply_ctes(
     The application vocabulary is ALL distinct corpus words (training's
     min_count/top_n floor bounds only what's COLLECTED for training;
     the tokenizer is applied to every word, exactly like the UDF)."""
-    parts = [_bpe_train_ctes(n_merges, min_count, top_n)]
+    parts = [_bpe_train_ctes(n_merges)]
     mt = "\nUNION ALL ".join(
         f"SELECT {t}::BIGINT AS rank, l, r FROM bp{t}"
         for t in range(1, n_merges + 1)
@@ -5278,15 +5297,10 @@ wtok AS MATERIALIZED (
     return "".join(parts)
 
 
-def _bpe_apply_oracle(
-    n_merges: int = 16,
-    n_apply: int = 8,
-    min_count: int = 2,
-    top_n: int = 65_536,
-) -> str:
+def _bpe_apply_oracle(n_merges: int = 16, n_apply: int = 8) -> str:
     """Per-doc BPE token counts: the application chain
     (:func:`_bpe_apply_ctes`) + one explode-join-sum over documents."""
-    return _bpe_apply_ctes(n_merges, n_apply, min_count, top_n) + """,
+    return _bpe_apply_ctes(n_merges, n_apply) + """,
 dw AS (
   SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS word
   FROM documents
@@ -5864,8 +5878,7 @@ def q_temperature_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     toward share^0.5 proportions — tail languages up-weighted, the head
     capped at rate 1. Aggregate-sized end to end: one groupBy on the
     bucket, then windows over the bucket-count table, never the corpus.
-    Feed the rates into mixture_sample/stratified_sample to materialize
-    the blend."""
+    Feed the rates into mixture_sample to materialize the blend."""
     from fireball_data_processing_spark.operators.sampling import (
         temperature_mixture_rates,
     )
@@ -6622,8 +6635,8 @@ def q_corpus_diversity_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bleu_pairs(pairs, max_n=2)
 
 
-def _spark_round_sql(expr: str, dp: int = 6) -> str:
-    """Spark-semantics double round as DuckDB text: shortest-decimal
+def _spark_round_sql(expr: str) -> str:
+    """Spark-semantics 6-dp double round as DuckDB text: shortest-decimal
     repr (DuckDB's double->VARCHAR, like Java Double.toString) then
     HALF_UP on the decimal. Plain ROUND(double) rounds the EXACT binary
     value instead, which systematically disagrees whenever the input is
@@ -6641,17 +6654,12 @@ def _spark_round_sql(expr: str, dp: int = 6) -> str:
     doubles with 17 significant digits below ~1e-2, sub-1e-18
     magnitudes), so a half-boundary case there can disagree with Python
     ``spark_round``. Do NOT point this helper at raw floats; those never
-    tie at the display dp and keep plain ROUND. ``dp`` is guarded well
-    inside the 18-digit scale so the final round never touches the
-    pre-rounded tail."""
-    if not 0 <= dp <= 12:
-        raise ValueError(
-            f"_spark_round_sql: dp={dp} outside the DECIMAL(38,18)-safe "
-            "range [0, 12] — widen the intermediate before loosening this"
-        )
+    tie at the display dp and keep plain ROUND. 6 dp sits well inside
+    the 18-digit scale, so the final round never touches the pre-rounded
+    tail."""
     return (
         f"CAST(ROUND(CAST(CAST({expr} AS VARCHAR) AS DECIMAL(38,18)),"
-        f" {dp}) AS DOUBLE)"
+        " 6) AS DOUBLE)"
     )
 
 
@@ -10334,8 +10342,8 @@ ORDER BY 1
 )
 def q_neyman_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Variance-optimal stratified sampling plan + realization
-    (operators/sampling.py neyman_allocation composed with
-    stratified_sample's hash threshold): allocate a 120-row budget
+    (operators/sampling.py neyman_allocation composed with a
+    hash_rank threshold): allocate a 120-row budget
     across document sources by n_h ∝ N_h·σ_h (σ of n_chars) — diverse
     strata earn more budget than uniform ones, the estimator-variance-
     minimizing rule proportional allocation ignores — then realize each

@@ -8,8 +8,9 @@ working on a large cluster:
 - AQE on (runtime coalescing, skew-join splitting) — the synthetic corpus and
   the real FIREBALL corpus are both instance-skewed (a few 250MB+ instances,
   ``explorer_server.py:85``).
-- shuffle partitions sized for local runs but overridable via env; on a real
-  cluster AQE coalesces, so a high static number is safe.
+- shuffle partitions sized for local runs (2 per core) but overridable via
+  ``extra_conf``; on a real cluster AQE coalesces, so a high static number
+  is safe.
 - Arrow enabled for every pandas_udf / applyInPandas edge.
 """
 
@@ -33,7 +34,6 @@ _UNKNOWN_SIZE = 1 << 60
 def get_spark(
     app_name: str = "fireball-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's defaults."""
@@ -46,10 +46,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # --- shuffle sizing ---------------------------------------------
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or int(_DEFAULT_CPUS) * 2),
-        )
+        .config("spark.sql.shuffle.partitions", str(int(_DEFAULT_CPUS) * 2))
         # --- scan split sizing: explicit so the 100-TB math is visible —
         #     128 MiB splits keep a task's working set inside executor
         #     memory even with wide rows; raise for many-small-columns

@@ -2,10 +2,10 @@
 
 At 100 TB the biggest recurring cost is the shuffle before every
 instance-keyed join/aggregation. Bucketing the event corpus by the
-instance key at write time (``bucketBy`` + ``sortBy(seq)``) makes every
-downstream ``groupBy(instance)``, window pass, and event-to-event join
+instance key at write time (``bucketBy``) makes every downstream
+``groupBy(instance)``, window pass, and event-to-event join
 exchange-free: Spark matches the join/aggregation partitioning to the
-bucket spec (and the in-bucket sort feeds the ordered windows).
+bucket spec.
 
 The reference gets the same effect accidentally — one process per
 instance directory — but cannot join across datasets without re-reading
@@ -18,18 +18,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    num_buckets: int = 64,
-    sort_col: str | None = None,
-) -> None:
-    """Persist as a bucketed (and optionally in-bucket-sorted) table."""
-    w = df.write.mode("overwrite").bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table)
+_BUCKETS = 64
+
+
+def write_bucketed(df: DataFrame, table: str, bucket_col: str) -> None:
+    """Persist as a table bucketed into ``_BUCKETS`` buckets."""
+    df.write.mode("overwrite").bucketBy(_BUCKETS, bucket_col).saveAsTable(table)
 
 
 def read_bucketed(spark: SparkSession, table: str) -> DataFrame:

@@ -40,11 +40,10 @@ def write_partitioned(
     df: DataFrame,
     path: str,
     partition_cols: Sequence[str],
-    mode: str = "overwrite",
 ) -> None:
     """Write ``df`` as parquet partitioned by ``partition_cols`` (hive
     layout: ``col=value/`` directories -> partition pruning at scan)."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def overwrite_partitions(
@@ -84,10 +83,9 @@ def compact_partitions(
     spark: SparkSession,
     path: str,
     partition_cols: Sequence[str],
-    min_files_to_compact: int = 2,
 ) -> list[dict]:
     """Rewrite fragmented partitions down to ONE file each; partitions
-    with at most ``min_files_to_compact`` files are left byte-untouched
+    with at most 2 files are left byte-untouched
     (their readers see no churn, and the job does no write
     amplification).
 
@@ -104,7 +102,7 @@ def compact_partitions(
     the partitioning scheme, which is the premise of the layout.
     """
     stats = partition_stats(spark, path, partition_cols).collect()
-    todo = [r for r in stats if r["n_files"] > min_files_to_compact]
+    todo = [r for r in stats if r["n_files"] > 2]
     if not todo:
         return []
     df = spark.read.parquet(path)

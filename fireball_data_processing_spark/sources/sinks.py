@@ -5,9 +5,8 @@ and per-heuristic CSVs whose header row carries the dataset checksum for
 memoization (``heuristic_worker.py:118-121``, validated at
 ``dataset/dataset.py:41-49``). Spark-side:
 
-- JSONL(.gz): ``df.write.json`` with gzip codec — one file per partition;
-  ``coalesce(1)`` only for the reference's single-file merge utility (S13),
-  never for large outputs.
+- JSONL(.gz): ``df.write.json`` with gzip codec — one file per partition,
+  never a single-file ``coalesce(1)`` merge.
 - CSV results: ``df.write.csv``; the checksum travels as a sidecar
   ``_checksum`` file next to the output (a header row inside a distributed
   CSV has no well-defined position).
@@ -20,18 +19,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
-def write_jsonl(
-    df: DataFrame, path: str, gzip: bool = True, single_file: bool = False
-) -> None:
-    """S7 JSONL(.gz) sink; ``single_file`` reproduces S13's merge utility."""
-    out = df.coalesce(1) if single_file else df
-    writer = out.write.mode("overwrite")
-    if gzip:
-        writer = writer.option("compression", "gzip")
-    writer.json(path)
+def write_jsonl(df: DataFrame, path: str) -> None:
+    """S7 JSONL.gz sink."""
+    df.write.mode("overwrite").option("compression", "gzip").json(path)
 
 
 def write_results_csv(
@@ -53,16 +46,7 @@ def read_result_checksum(path: str) -> str | None:
         return f.read().strip()
 
 
-def memoized(
-    path: str, input_checksum: str, force_recompute: bool = False
-) -> bool:
+def memoized(path: str, input_checksum: str) -> bool:
     """True when a previous result at ``path`` is still valid for
     ``input_checksum`` (reference heuristic_worker.py:95-110)."""
-    if force_recompute:
-        return False
     return read_result_checksum(path) == input_checksum
-
-
-def read_labels_csv(spark: SparkSession, path: str) -> DataFrame:
-    """S10 labels CSV scan (reference merge_labels.py:22-29)."""
-    return spark.read.option("header", True).csv(path)

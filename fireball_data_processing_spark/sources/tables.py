@@ -47,10 +47,9 @@ _DIM_MEMO: dict[str, int] = {}
 # every catalog query re-paid it per load. A metastore-backed production
 # table amortizes this in the shared CatalogFileIndex; the memo is the
 # path-based equivalent. The file LISTING is therefore pinned at first load
-# per application — correct for immutable table paths (this corpus), and
-# callers loading a path whose contents change pass ``refresh=True`` (the
+# per application — correct for immutable table paths (this corpus); the
 # maintenance operators that rewrite their own outputs use raw
-# ``spark.read`` on their mutable paths and are unaffected).
+# ``spark.read`` on their mutable paths and are unaffected.
 _TABLE_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
@@ -80,9 +79,7 @@ def normalize_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     return df
 
 
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, refresh: bool = False
-) -> DataFrame:
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table from the scale-factor directory.
 
     The ``events`` table's ``ts`` is normalized to **int64 epoch
@@ -103,16 +100,9 @@ def load_table(
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     key = (spark.sparkContext.applicationId, path)
-    if not refresh:
-        hit = _TABLE_MEMO.get(key)
-        if hit is not None:
-            return hit
-    else:
-        # refresh must invalidate BOTH memos: a rewritten embeddings file
-        # with a different vector width would otherwise get the stale
-        # cached dim stamped as metadata and silently mis-dimension every
-        # downstream ANN fit.
-        _DIM_MEMO.pop(path, None)
+    hit = _TABLE_MEMO.get(key)
+    if hit is not None:
+        return hit
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)

@@ -1,8 +1,5 @@
 """Structured Streaming surface (SURVEY.md section 2.9)."""
 
-from fireball_data_processing_spark.streaming.dedup_stream import (
-    stream_new_documents,
-)
 from fireball_data_processing_spark.streaming.heuristics_stream import (
     stream_heuristics,
 )
@@ -48,7 +45,6 @@ __all__ = [
     "stream_heuristics",
     "stream_histogram_sink",
     "stream_decay_deltas",
-    "stream_new_documents",
     "stream_rate_deltas",
     "stream_quality_gate",
     "stream_sprt_deltas",

@@ -43,6 +43,7 @@ exactly-once output.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,25 +70,20 @@ __all__ = [
     "read_pipeline_totals",
 ]
 
+# Slices per staged ingest directory: each becomes one micro-batch.
+_N_SLICES = 4
+
+
 # Unbound-Column cache for the per-epoch plan: Spark Columns are immutable
 # expression trees resolved against whatever frame they are applied to, so
-# the Gopher rule columns and the content-hash column can be built ONCE per
-# (min_words) and reused by every micro-batch. Without this, every epoch
-# re-ran the whole py4j expression-construction chatter (~0.3-0.5 s/epoch
-# measured driver-side at sf0.1 — pure plan BUILD cost, before any job ran).
-_GATE_EXPR_CACHE: dict[int, tuple[F.Column, F.Column, F.Column]] = {}
-
-
-def _gate_exprs(min_words: int) -> tuple[F.Column, F.Column, F.Column]:
-    hit = _GATE_EXPR_CACHE.get(min_words)
-    if hit is None:
-        rules = gopher_rules(F.col("text"), min_words=min_words)
-        hit = _GATE_EXPR_CACHE[min_words] = (
-            rules["n_words"],
-            rules["passes_gopher"],
-            content_hash(),
-        )
-    return hit
+# the Gopher rule columns and the content-hash column are built ONCE and
+# reused by every micro-batch. Without this, every epoch re-ran the whole
+# py4j expression-construction chatter (~0.3-0.5 s/epoch measured
+# driver-side at sf0.1 — pure plan BUILD cost, before any job ran).
+@functools.cache
+def _gate_exprs() -> tuple[F.Column, F.Column, F.Column]:
+    rules = gopher_rules(F.col("text"), min_words=50)
+    return rules["n_words"], rules["passes_gopher"], content_hash()
 
 
 def should_broadcast_index(index: DataFrame) -> bool:
@@ -124,15 +120,13 @@ def _single_split_batch(batch_df: DataFrame) -> bool:
     return est is not None and est <= max_pb
 
 
-def stage_incoming_slices(
-    incoming: DataFrame, staging_dir: str, n_slices: int = 4
-) -> list[str]:
-    """Write the incoming frame as ``n_slices`` single-file parquet
-    slice directories (sliced by ``xxhash64(doc_id) % n_slices`` —
+def stage_incoming_slices(incoming: DataFrame, staging_dir: str) -> list[str]:
+    """Write the incoming frame as ``_N_SLICES`` single-file parquet
+    slice directories (sliced by ``xxhash64(doc_id) % _N_SLICES`` —
     deterministic membership, and uniform under ANY upstream id filter:
     a residue-based slicer would leave slices empty whenever the
     incoming set was itself carved by a correlated modulus, e.g.
-    ``doc_id % 4 != 0`` staged at ``n_slices=4``), simulating files
+    ``doc_id % 4 != 0`` staged in 4 slices), simulating files
     landing in an ingest directory. Each slice becomes one micro-batch
     under ``maxFilesPerTrigger=1``. Returns the slice directory paths
     in arrival order (only slices that received rows exist on disk).
@@ -141,10 +135,10 @@ def stage_incoming_slices(
     hash repartition on the slice value — every slice value lands wholly
     in one task, so each ``slice=N`` directory holds exactly one file
     (the ``maxFilesPerTrigger=1`` = one-epoch-per-slice contract). The
-    previous form ran one filtered scan + write PER slice — n_slices
-    full scans of the incoming frame for the same bytes on disk (guide
+    previous form ran one filtered scan + write PER slice — one full
+    scan per slice of the incoming frame for the same bytes on disk (guide
     §1.2: fix the distributed algorithm first; §6: one output pass).
-    The repartition count is a multiple of ``n_slices`` so distinct
+    The repartition count is a multiple of ``_N_SLICES`` so distinct
     slice values spread over distinct tasks with high probability (guide
     §2.5 — a hash collision only serializes two slice writes through
     one task, it cannot corrupt slice membership). ``partitionBy``
@@ -155,16 +149,16 @@ def stage_incoming_slices(
     (
         incoming.withColumn(
             "slice",
-            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_slices)).cast("int"),
+            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(_N_SLICES)).cast("int"),
         )
-        .repartition(n_slices * 8, F.col("slice"))
+        .repartition(_N_SLICES * 8, F.col("slice"))
         .write.mode("overwrite")
         .partitionBy("slice")
         .parquet(staging_dir)
     )
     return [
         p
-        for s in range(n_slices)
+        for s in range(_N_SLICES)
         if os.path.isdir(p := os.path.join(staging_dir, f"slice={s}"))
     ]
 
@@ -172,13 +166,13 @@ def stage_incoming_slices(
 def ingest_pipeline_batch(
     batch_df: DataFrame,
     index: DataFrame,
-    min_words: int = 50,
     gate: str = "exact",
     broadcast_index: bool | None = None,
     min_parallelism: int | None = None,
 ) -> DataFrame:
     """The per-micro-batch plan, exposed for batch-twin testing: gate
-    the slice against the corpus index, keep Gopher-passing docs, and
+    the slice against the corpus index, keep Gopher-passing docs (50+
+    words), and
     aggregate partial (n_docs, n_tokens) per (source, lang). Pure
     function of (slice rows, static index) — no cross-batch state,
     which is what makes epoch replay harmless.
@@ -213,7 +207,7 @@ def ingest_pipeline_batch(
     at corpus scale: the reader's byte-based splits already provide the
     parallelism.
     """
-    n_words_col, passes_col, hash_col = _gate_exprs(min_words)
+    n_words_col, passes_col, hash_col = _gate_exprs()
     single_task = False
     if gate == "exact":
         keyed = batch_df.withColumn("content_hash", hash_col)
@@ -253,7 +247,6 @@ def run_ingest_pipeline(
     index: DataFrame,
     out_path: str,
     checkpoint_dir: str,
-    min_words: int = 50,
     gate: str = "exact",
     min_parallelism: int | None = None,
 ) -> None:
@@ -274,7 +267,7 @@ def run_ingest_pipeline(
     )
     run_ingest_pipeline_from_stream(
         stream, index, out_path, checkpoint_dir,
-        min_words=min_words, gate=gate, min_parallelism=min_parallelism,
+        gate=gate, min_parallelism=min_parallelism,
     )
 
 
@@ -283,7 +276,6 @@ def run_ingest_pipeline_from_stream(
     index: DataFrame,
     out_path: str,
     checkpoint_dir: str,
-    min_words: int = 50,
     gate: str = "exact",
     min_parallelism: int | None = None,
 ) -> None:
@@ -305,7 +297,7 @@ def run_ingest_pipeline_from_stream(
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         partial = ingest_pipeline_batch(
-            batch_df, index, min_words, gate=gate,
+            batch_df, index, gate=gate,
             broadcast_index=bcast, min_parallelism=min_parallelism,
         )
         write_epoch_partition(partial, epoch_id, out_path)

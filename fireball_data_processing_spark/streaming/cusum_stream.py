@@ -74,8 +74,6 @@ def cusum_monitor(
     target: float,
     allowance: float,
     threshold: float,
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Merge the delta table by per-day addition (order-free, so late
     and replayed epochs are both safe) and run the batch CUSUM over the
@@ -92,7 +90,7 @@ def cusum_monitor(
         )
         .select(
             "day",
-            F.round(F.col("__n1") / F.col("__k"), round_dp).alias("share"),
+            F.round(F.col("__n1") / F.col("__k"), 8).alias("share"),
         )
     )
     return cusum_alarm(
@@ -102,6 +100,4 @@ def cusum_monitor(
         target=target,
         allowance=allowance,
         threshold=threshold,
-        round_dp=round_dp,
-        out_dp=out_dp,
     )

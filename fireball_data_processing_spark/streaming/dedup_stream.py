@@ -3,28 +3,24 @@ pipeline.
 
 The batch dedup family (``operators/dedup.py``) answers "which existing
 docs duplicate each other"; this module answers the firehose question:
-"is this NEW document already in the corpus, or a repeat within the
-stream?" — the shape a Kinesis/Kafka-fed ingestion job needs.
+"is this NEW document already in the corpus?" — the shape a
+Kinesis/Kafka-fed ingestion job needs. Both gates are stateless per
+micro-batch, so a stream applies them inside ``foreachBatch`` (the
+ingest capstone, ``streaming/capstone.py``):
 
-Plan, all stateless or watermark-bounded:
-
-1. per-row content hash (md5 over normalized text — same normalization as
-   ``exact_dedup_groups``, so the stream agrees with the batch index);
-2. stream-static LEFT ANTI join against the corpus hash index (stateless:
-   the static side is re-scannable per micro-batch, and broadcastable when
-   the index is compact);
-3. in-stream first-occurrence dedup: ``dropDuplicatesWithinWatermark``
-   bounds the hash-state by event time (without a watermark column the
-   state would grow with distinct hashes forever — refuse rather than ship
-   an unbounded-state default).
+1. exact: per-row content hash (md5 over normalized text — same
+   normalization as ``exact_dedup_groups``, so the stream agrees with
+   the batch index) LEFT ANTI joined against :func:`corpus_hash_index`
+   (the static side is re-scannable per micro-batch, and broadcastable
+   when the index is compact);
+2. near: per-row MinHash signature (:func:`~fireball_data_
+   processing_spark.operators.dedup.minhash_sig_expr`, no shuffle) ->
+   LSH band keys -> stateless lookups against :func:`corpus_band_index`
+   over ``build_minhash_index`` output (:func:`near_new_documents`).
 
 At 100 TB the index side is the materialized hash column of the corpus
 (one 32-byte md5 per doc — ~3 TB/100B docs, parquet-scannable), refreshed
-by the batch job. The NEAR-dup gate (:func:`stream_near_new_documents`)
-composes the same way: per-row MinHash signature (:func:`~fireball_data_
-processing_spark.operators.dedup.minhash_sig_expr`, no shuffle) -> LSH
-band keys -> stateless stream-static lookups against
-:func:`corpus_band_index` over ``build_minhash_index`` output.
+by the batch job.
 """
 
 from __future__ import annotations
@@ -54,39 +50,6 @@ def corpus_hash_index(corpus: DataFrame) -> DataFrame:
     the stream-static anti join. Materialize to parquet for a long-running
     stream so micro-batches rescan the compact index, not the corpus."""
     return corpus.select(content_hash().alias("content_hash")).distinct()
-
-
-def stream_new_documents(
-    spark: SparkSession,
-    source_dir: str,
-    file_schema: StructType | str,
-    index: DataFrame,
-    ts_col: str | None = None,
-    watermark: str = "10 minutes",
-    allow_unbounded_state: bool = False,
-) -> DataFrame:
-    """Documents from the stream that are new to the corpus AND the first
-    of their content within the stream.
-
-    ``ts_col``: event-time column for the within-stream dedup watermark.
-    ``None`` would use plain ``dropDuplicates`` on the hash — correct but
-    unbounded state, only acceptable for bounded replays (tests,
-    backfills) — so it is refused unless the caller passes
-    ``allow_unbounded_state=True`` explicitly.
-    """
-    if ts_col is None and not allow_unbounded_state:
-        raise ValueError(
-            "ts_col=None keeps every seen content hash in the state store "
-            "forever; pass allow_unbounded_state=True only for bounded "
-            "replays, or provide an event-time column for the watermark"
-        )
-    stream = spark.readStream.schema(file_schema).parquet(source_dir)
-    hashed = stream.withColumn("content_hash", content_hash())
-    fresh = hashed.join(index, "content_hash", "left_anti")
-    if ts_col is not None:
-        fresh = fresh.withWatermark(ts_col, watermark)
-        return fresh.dropDuplicatesWithinWatermark(["content_hash"])
-    return fresh.dropDuplicates(["content_hash"])
 
 
 # --- near-duplicate gate ------------------------------------------------
@@ -199,43 +162,6 @@ def near_new_documents(docs: DataFrame, band_index: DataFrame) -> DataFrame:
     return out.filter(no_hit).drop(*helpers)
 
 
-def stream_near_new_documents(
-    spark: SparkSession,
-    source_dir: str,
-    file_schema: StructType | str,
-    band_index: DataFrame,
-    ts_col: str | None = None,
-    allow_unbounded_state: bool = False,
-) -> DataFrame:
-    """Streaming near-dup ingest gate: documents that near-duplicate
-    nothing in the corpus index AND are the first of their exact content
-    within the stream.
-
-    Composition promised by the module docstring: per-row MinHash
-    signature -> band keys -> ``n_bands`` stream-static lookups against
-    ``corpus_band_index(build_minhash_index(...))`` output — all stateless
-    — then the same watermark-bounded within-stream dedup as the exact
-    gate. Within-stream collapse uses the EXACT content hash: near-dup
-    collapse *between stream rows* would need unbounded cross-row state;
-    instead route accepted docs into the next batch index refresh, which
-    closes that loop at index cadence.
-    """
-    if ts_col is None and not allow_unbounded_state:
-        raise ValueError(
-            "ts_col=None keeps every seen content hash in the state store "
-            "forever; pass allow_unbounded_state=True only for bounded "
-            "replays, or provide an event-time column for the watermark"
-        )
-    stream = spark.readStream.schema(file_schema).parquet(source_dir)
-    fresh = near_new_documents(stream, band_index).withColumn(
-        "content_hash", content_hash()
-    )
-    if ts_col is not None:
-        fresh = fresh.withWatermark(ts_col, "10 minutes")
-        return fresh.dropDuplicatesWithinWatermark(["content_hash"])
-    return fresh.dropDuplicates(["content_hash"])
-
-
 # --- segment-scrub gate (streaming line dedup) --------------------------
 
 
@@ -323,10 +249,9 @@ def stream_scrub_segments(
     seg_index: DataFrame,
     out_path: str,
     checkpoint_dir: str,
-    seg_words: int = 8,
 ):
     """Streaming segment scrub: every incoming document leaves with the
-    corpus's boilerplate segments removed, written exactly-once.
+    corpus's boilerplate (8-word) segments removed, written exactly-once.
 
     The scrub re-groups a doc's exploded segments, which as a direct
     streaming aggregation would demand watermark-delayed emission for
@@ -344,9 +269,7 @@ def stream_scrub_segments(
     stream = spark.readStream.schema(file_schema).parquet(source_dir)
 
     def _scrub_and_write(batch_df: DataFrame, epoch_id: int) -> None:
-        out = scrub_segments(
-            batch_df, seg_index, seg_words
-        )
+        out = scrub_segments(batch_df, seg_index)
         write_epoch_partition(out, epoch_id, out_path)
 
     return drain_stream(stream, _scrub_and_write, checkpoint_dir)

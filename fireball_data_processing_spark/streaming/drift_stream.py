@@ -38,11 +38,10 @@ def windowed_mix_stream(
     file_schema: StructType | str,
     s: StreamSchema,
     bucket_col: str,
-    watermark: str = "30 minutes",
 ) -> DataFrame:
     """(window_start, bucket, n) per tumbling 1-hour event-time window — the
     streaming-stateful half of the monitor; append mode emits each
-    window once, when the watermark closes it."""
+    window once, when the 30-minute watermark closes it."""
     stream = normalize_event_time(
         spark.readStream.schema(file_schema).parquet(source_dir),
         s.ts_col,
@@ -55,7 +54,7 @@ def windowed_mix_stream(
         ts = F.col(s.ts_col)
     return (
         stream.withColumn("event_ts", ts)
-        .withWatermark("event_ts", watermark)
+        .withWatermark("event_ts", "30 minutes")
         .groupBy(F.window("event_ts", "1 hour"), F.col(bucket_col).alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("window.start").alias("window_start"), "bucket", "n")
@@ -127,7 +126,6 @@ def drift_monitor_stream(
     baseline: DataFrame,
     out_path: str,
     checkpoint_dir: str,
-    watermark: str = "30 minutes",
 ) -> StreamingQuery:
     """End-to-end monitor: windowed mix stream -> per-closed-window PSI
     vs ``baseline`` -> epoch-idempotent parquet (see
@@ -138,9 +136,7 @@ def drift_monitor_stream(
         write_epoch_partition,
     )
 
-    counts = windowed_mix_stream(
-        spark, source_dir, file_schema, s, bucket_col, watermark
-    )
+    counts = windowed_mix_stream(spark, source_dir, file_schema, s, bucket_col)
 
     def _score_and_write(batch_df: DataFrame, epoch_id: int) -> None:
         write_epoch_partition(

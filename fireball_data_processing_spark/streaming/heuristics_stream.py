@@ -35,27 +35,19 @@ def stream_heuristics(
     source_dir: str,
     file_schema: StructType | str,
     s: StreamSchema,
-    names: tuple[str, ...] | None = None,
 ) -> DataFrame:
-    """Incremental per-instance heuristics over a file stream.
+    """Incremental per-instance ``STREAM_SAFE`` heuristics over a file
+    stream (exact distinct aggregations cannot run incrementally; their
+    ``*_approx`` variants do).
 
     Swap the parquet file source for a Kinesis/Kafka source in production;
     the aggregation layer is source-agnostic.
     """
-    names = names or STREAM_SAFE
-    unstreamable = [n for n in names if n not in STREAM_SAFE]
-    if unstreamable:
-        # mirror the batch registry's loud failure (heuristic_exprs raises
-        # for unknown names) instead of silently dropping columns
-        raise RuntimeError(
-            f"not streamable: {unstreamable} — exact distinct aggregations "
-            "cannot run incrementally; use the *_approx variants"
-        )
     stream = normalize_event_time(
         spark.readStream.schema(file_schema).parquet(source_dir),
         s.ts_col,
     )
-    exprs = heuristic_exprs(s, names)
+    exprs = heuristic_exprs(s, STREAM_SAFE)
     return stream.groupBy(F.col(s.instance_col)).agg(*exprs.values())
 
 

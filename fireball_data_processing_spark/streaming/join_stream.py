@@ -8,8 +8,8 @@ sides arrive as live streams, the same semantics become a stream-stream
 inner join with:
 
 - an **equality key** (the user/instance) so state is hash-partitioned,
-- a **time-range predicate** (right event within ``max_gap`` BEFORE the
-  left anchor) so each side's state is bounded by the gap,
+- a **time-range predicate** (the view within 10 minutes BEFORE the
+  purchase anchor) so each side's state is bounded by the gap,
 - **watermarks on both inputs** so Spark can discard state older than
   the gap plus allowed lateness — without them a stream-stream join
   buffers forever (Spark refuses the query in append mode).
@@ -39,14 +39,10 @@ def interval_join_stream(
     source_dir: str,
     file_schema: StructType | str,
     s: StreamSchema,
-    anchor_type: str = "purchase",
-    match_type: str = "view",
-    max_gap: str = "10 minutes",
-    watermark: str = "30 minutes",
 ) -> DataFrame:
-    """All (anchor, match) event pairs per instance where the match event
-    lands in ``[anchor_ts - max_gap, anchor_ts]`` — e.g. every view within
-    10 minutes before a purchase.
+    """All (purchase, view) event pairs per instance where the view lands
+    in ``[purchase_ts - 10 minutes, purchase_ts]``, both sides under a
+    30-minute watermark.
 
     Both sides are filtered projections of ONE file stream (Spark re-reads
     the source per side; with a message bus each side would subscribe
@@ -68,29 +64,29 @@ def interval_join_stream(
     base = stream.withColumn("event_ts", ts)
 
     anchors = (
-        base.filter(F.col(s.type_col) == anchor_type)
+        base.filter(F.col(s.type_col) == "purchase")
         .select(
             F.col(s.instance_col).alias("instance"),
             F.col(s.seq_col).alias("anchor_id"),
             F.col("event_ts").alias("anchor_ts"),
         )
-        .withWatermark("anchor_ts", watermark)
+        .withWatermark("anchor_ts", "30 minutes")
     )
     matches = (
-        base.filter(F.col(s.type_col) == match_type)
+        base.filter(F.col(s.type_col) == "view")
         .select(
             F.col(s.instance_col).alias("m_instance"),
             F.col(s.seq_col).alias("match_id"),
             F.col("event_ts").alias("match_ts"),
         )
-        .withWatermark("match_ts", watermark)
+        .withWatermark("match_ts", "30 minutes")
     )
     joined = anchors.join(
         matches,
         F.expr(
-            f"""
+            """
             instance = m_instance AND
-            match_ts >= anchor_ts - interval {max_gap} AND
+            match_ts >= anchor_ts - interval 10 minutes AND
             match_ts <= anchor_ts
             """
         ),

@@ -204,14 +204,11 @@ def stream_quality_gate(
     out_path: str,
     checkpoint_dir: str,
     max_avg_neg_log2: float,
-    gopher_kwargs: dict | None = None,
-    admit_only: bool = True,
 ):
     """Streaming ingest quality gate: every incoming document is scored
-    against the frozen LM + Gopher rules and written exactly-once with
-    its verdict (``admit_only=True`` writes only admitted docs — the
-    quarantine-free deployment; ``False`` writes every row with flags
-    for a downstream router). Pure function of (row, static index) →
+    against the frozen LM + default Gopher rules and the admitted docs
+    are written exactly-once with their verdict columns (the
+    quarantine-free deployment). Pure function of (row, static index) →
     stateless ``foreachBatch`` + epoch-partitioned idempotent sink,
     identical restart semantics to the dedup gates (test-pinned)."""
     from fireball_data_processing_spark.streaming.sinks_stream import (
@@ -222,11 +219,7 @@ def stream_quality_gate(
     stream = spark.readStream.schema(file_schema).parquet(source_dir)
 
     def _gate_and_write(batch_df: DataFrame, epoch_id: int) -> None:
-        out = quality_gate(
-            batch_df, lm, max_avg_neg_log2, gopher_kwargs=gopher_kwargs
-        )
-        if admit_only:
-            out = out.filter(F.col("passes_quality"))
-        write_epoch_partition(out, epoch_id, out_path)
+        out = quality_gate(batch_df, lm, max_avg_neg_log2)
+        write_epoch_partition(out.filter(F.col("passes_quality")), epoch_id, out_path)
 
     return drain_stream(stream, _gate_and_write, checkpoint_dir)

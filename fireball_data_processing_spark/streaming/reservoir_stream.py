@@ -52,9 +52,8 @@ def stream_weighted_reservoir(
     id_col: str,
     weight_col: str,
     n: int,
-    salt: str = "",
 ) -> DataFrame:
-    """Streaming per-bucket weighted top-``n``. Output rows
+    """Streaming per-bucket weighted top-``n`` (unsalted hash ranks). Output rows
     ``(bucket, step, doc_id, es_key)``: one reservoir snapshot per
     (bucket, micro-batch that touched it), ``step`` monotone per
     bucket. Rows with non-positive/null weight never enter (the batch
@@ -99,7 +98,7 @@ def stream_weighted_reservoir(
             F.col(id_col).cast("long").alias("__id"),
             F.round(
                 F.pow(
-                    hash_rank(F.col(id_col), salt),
+                    hash_rank(F.col(id_col)),
                     F.lit(1.0) / F.col(weight_col),
                 ),
                 12,

@@ -69,15 +69,15 @@ def stream_sprt_deltas(
     return drain_stream(stream, _reduce_and_write, checkpoint_dir)
 
 
+_ALPHA = 0.05
+_BETA = 0.05
+
+
 def sprt_monitor(
     spark: SparkSession,
     delta_path: str,
     p0: float,
     p1: float,
-    alpha: float = 0.05,
-    beta: float = 0.05,
-    round_dp: int = 8,
-    out_dp: int = 6,
 ) -> DataFrame:
     """Read the delta table and report the group-sequential SPRT
     decision per group: cumulative (k, n1) in epoch order, LLR from
@@ -86,11 +86,12 @@ def sprt_monitor(
     batch granularity. Returns ``(group, decision, epoch_at_decision,
     n_at_decision, llr_at_decision, n_total, llr_final)``; 'continue'
     rows carry NULL *_at_decision fields. One window over the per-group
-    epoch rows (epochs x groups — aggregate-sized) + one aggregate."""
-    l1 = round(math.log(p1 / p0), round_dp)
-    l0 = round(math.log((1.0 - p1) / (1.0 - p0)), round_dp)
-    upper = round(math.log((1.0 - beta) / alpha), round_dp)
-    lower = round(math.log(beta / (1.0 - alpha)), round_dp)
+    epoch rows (epochs x groups — aggregate-sized) + one aggregate.
+    Error rates: alpha = beta = 0.05."""
+    l1 = round(math.log(p1 / p0), 8)
+    l0 = round(math.log((1.0 - p1) / (1.0 - p0)), 8)
+    upper = round(math.log((1.0 - _BETA) / _ALPHA), 8)
+    lower = round(math.log(_BETA / (1.0 - _ALPHA)), 8)
 
     deltas = spark.read.parquet(delta_path)
     w = Window.partitionBy("group").orderBy("batch_id")
@@ -103,7 +104,7 @@ def sprt_monitor(
     llr = F.round(
         F.col("__n1") * F.lit(l1)
         + (F.col("__k") - F.col("__n1")) * F.lit(l0),
-        round_dp,
+        8,
     )
     scored = walked.select(
         "group",
@@ -135,7 +136,7 @@ def sprt_monitor(
         ),
         F.col("__first.__e").alias("epoch_at_decision"),
         F.col("__first.__k").cast("bigint").alias("n_at_decision"),
-        F.round(F.col("__first.__llr"), out_dp).alias("llr_at_decision"),
+        F.round(F.col("__first.__llr"), 6).alias("llr_at_decision"),
         F.col("__last.__k").cast("bigint").alias("n_total"),
-        F.round(F.col("__last.__llr"), out_dp).alias("llr_final"),
+        F.round(F.col("__last.__llr"), 6).alias("llr_final"),
     ).orderBy("group")

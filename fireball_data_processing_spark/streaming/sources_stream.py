@@ -4,26 +4,18 @@ The north star names "Structured Streaming + Kinesis source"
 (BASELINE.md). Open-source Spark ships no first-party Kinesis
 connector, so this module provides the SEAM a deployment plugs one
 into: :func:`open_event_stream` builds any ``readStream`` source from
-an injectable (format, options) pair, decodes a message-bus payload
-envelope when one is declared, and applies the SAME event-time
-normalization the batch loader uses (``sources/tables.py``,
-``normalize_event_time``) — so every operator downstream (heuristics
-expressions, windowed aggregations, FSMs, dedup gates) runs unchanged
-whether events arrive from parquet files, a Kafka topic, or a
-vendor Kinesis connector.
+an injectable (format, options) pair with a declared schema and
+applies the SAME event-time normalization the batch loader uses
+(``sources/tables.py``, ``normalize_event_time``) — so every operator
+downstream (heuristics expressions, windowed aggregations, FSMs, dedup
+gates) runs unchanged whether events arrive from parquet files or a
+connector that yields event rows.
 
-Connector shapes this seam covers:
-
-- **File sources** (parquet/json/csv/text): ``fmt`` + ``path`` +
-  declared ``schema``. This is also the test harness shape — the
-  driver's corpora are file-backed.
-- **Message buses** (``fmt="kafka"``, or a Kinesis connector package,
-  e.g. ``fmt="aws-kinesis"`` with Spark's kinesis-asl or a vendor
-  jar): records arrive as an opaque binary column (Kafka: ``value``;
-  Kinesis connectors: ``data``) inside a transport envelope. Pass
-  ``payload="value"``/``"data"`` and the JSON rows are decoded with
-  the declared schema, envelope columns dropped. The decode is
-  ``from_json`` — JVM-side, no Python in the hot path.
+File sources (parquet/json/csv) are ``fmt`` + ``path`` + declared
+``schema``. This is also the test harness shape — the test corpora are
+file-backed. A message bus whose records arrive as an opaque
+payload column (Kafka ``value``, Kinesis ``data``) is decoded with one
+``from_json`` projection after this call.
 
 At 100 TB/day the seam stays scale-correct because it adds only
 projections: source parallelism (shard/partition count), watermarks,
@@ -34,7 +26,6 @@ exactly as they are for file streams.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from fireball_data_processing_spark.sources.tables import normalize_event_time
@@ -48,39 +39,21 @@ def open_event_stream(
     schema: StructType | str,
     path: str | None = None,
     options: dict[str, str] | None = None,
-    payload: str | None = None,
-    ts_col: str | None = "ts",
 ) -> DataFrame:
     """Open a streaming event source and normalize it to the engine's
-    event contract: declared columns, event time as int64 epoch nanos.
+    event contract: declared columns, event time ``ts`` as int64 epoch
+    nanos (streams without a ``ts`` column, e.g. a document firehose
+    feeding the ingest capstone, pass through unchanged).
 
     - ``fmt``/``options``: passed to ``spark.readStream`` verbatim —
-      the injection point for a Kinesis/Kafka connector (stream name,
-      region, starting position, ... all ride ``options``).
-    - ``schema``: the EVENT schema (what the rows look like). For file
-      sources it is declared on the reader (streaming readers must not
-      infer); for envelope sources it drives the payload decode.
-    - ``payload``: name of the transport envelope's opaque bytes column
-      (Kafka ``value``, Kinesis ``data``). When set, each record is
-      parsed as one JSON event with ``from_json(schema)`` and the
-      envelope is dropped — malformed records yield all-null rows
-      (from_json's PERMISSIVE default) rather than killing the query.
-    - ``ts_col``: event-time column, normalized exactly like the batch
-      path so stream/batch plans agree to the nanosecond. Pass ``None``
-      for event-time-less record streams (e.g. a document firehose
-      feeding the ingest capstone) — the seam then only decodes and
-      projects.
+      the injection point for a connector (stream name, region,
+      starting position, ... all ride ``options``).
+    - ``schema``: the EVENT schema, declared on the reader (streaming
+      readers must not infer).
+    - ``path``: the source location for file sources.
     """
-    reader = spark.readStream.format(fmt)
-    if payload is None:
-        reader = reader.schema(schema)
+    reader = spark.readStream.format(fmt).schema(schema)
     for k, v in (options or {}).items():
         reader = reader.option(k, v)
     df = reader.load(path) if path is not None else reader.load()
-    if payload is not None:
-        df = df.select(
-            F.from_json(F.col(payload).cast("string"), schema).alias("__event")
-        ).select("__event.*")
-    if ts_col is None:
-        return df
-    return normalize_event_time(df, ts_col)
+    return normalize_event_time(df, "ts")

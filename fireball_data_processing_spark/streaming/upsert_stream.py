@@ -51,6 +51,7 @@ from fireball_data_processing_spark.streaming.sinks_stream import drain_stream
 __all__ = ["last_write_wins", "upsert_merge", "upsert_parquet_sink"]
 
 _BUCKET = "bucket"
+_N_BUCKETS = 64
 
 
 def last_write_wins(
@@ -86,21 +87,17 @@ def upsert_merge(
 
 
 def upsert_parquet_sink(
-    stream: DataFrame,
-    path: str,
-    checkpoint_dir: str,
-    key: str = "doc_id",
-    order_col: str = "version",
-    n_buckets: int = 64,
+    stream: DataFrame, path: str, checkpoint_dir: str
 ) -> StreamingQuery:
-    """Maintain a keyed current-state parquet table from an upsert
-    stream. See the module docstring for the per-batch mechanics."""
+    """Maintain a ``doc_id``-keyed current-state parquet table from an
+    upsert stream versioned by ``version``, in ``_N_BUCKETS`` buckets.
+    See the module docstring for the per-batch mechanics."""
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         _ = epoch_id  # replay safety comes from merge idempotence
         spark = batch_df.sparkSession
-        ups = last_write_wins(batch_df, key, order_col).withColumn(
-            _BUCKET, shard_id(F.col(key), n_buckets, "upsert")
+        ups = last_write_wins(batch_df, "doc_id", "version").withColumn(
+            _BUCKET, shard_id(F.col("doc_id"), _N_BUCKETS, "upsert")
         )
         ups = ups.persist()
         try:
@@ -115,7 +112,7 @@ def upsert_parquet_sink(
                     F.col(_BUCKET).isin(touched)
                 )
                 kept = existing.join(
-                    ups.select(key), on=key, how="left_anti"
+                    ups.select("doc_id"), on="doc_id", how="left_anti"
                 )
                 merged = kept.unionByName(ups)
             except AnalysisException:

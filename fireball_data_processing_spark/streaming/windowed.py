@@ -26,10 +26,9 @@ def windowed_counts_stream(
     source_dir: str,
     file_schema: StructType | str,
     s: StreamSchema,
-    window: str = "1 hour",
-    watermark: str = "30 minutes",
 ) -> DataFrame:
-    """Per (instance, tumbling window) counts/sums over a file stream.
+    """Per (instance, tumbling 1-hour window) counts/sums over a file
+    stream, emitted once the 30-minute watermark closes the window.
 
     ``s.ts_unit == 'nanos_long'`` columns are converted to TimestampType
     (micros) for the event-time clock; other encodings pass through
@@ -52,8 +51,8 @@ def windowed_counts_stream(
     )
     return (
         stream.withColumn("event_ts", ts)
-        .withWatermark("event_ts", watermark)
-        .groupBy(F.window("event_ts", window), F.col(s.instance_col))
+        .withWatermark("event_ts", "30 minutes")
+        .groupBy(F.window("event_ts", "1 hour"), F.col(s.instance_col))
         .agg(F.count(F.lit(1)).alias("n_events"), agg_value)
         .select(
             F.col("window.start").alias("window_start"),

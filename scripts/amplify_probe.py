@@ -293,7 +293,7 @@ def main() -> None:
     ).localCheckpoint()
 
     def op_capstone(d):
-        return ingest_pipeline_batch(d, cap_index, min_words=50)
+        return ingest_pipeline_batch(d, cap_index)
 
     # (name, fn, max factor — the quadratic-contact ops cap lower so the
     # probe stays minutes, not hours)

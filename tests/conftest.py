@@ -20,7 +20,10 @@ SMOKE_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="fireball-spark-tests", shuffle_partitions=8)
+    spark = get_spark(
+        app_name="fireball-spark-tests",
+        extra_conf={"spark.sql.shuffle.partitions": "8"},
+    )
     yield spark
     spark.stop()
 

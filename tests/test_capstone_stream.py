@@ -9,6 +9,7 @@ import io
 from pyspark.sql import functions as F
 
 from fireball_data_processing_spark.sources.tables import load_table
+from fireball_data_processing_spark.streaming import capstone
 from fireball_data_processing_spark.streaming.capstone import (
     ingest_pipeline_batch,
     read_pipeline_totals,
@@ -27,9 +28,6 @@ import pytest
 # the plan-shape tests of the size gates run in the default suite.
 
 SMOKE = "/root/testdata/sf0.001"
-MIN_WORDS = 10  # sf0.001 docs are short; the CATALOG query gates at the
-# Gopher default (50) and its oracle hard-codes n_words >= 50 — these
-# tests pin stream/batch/restart INVARIANTS, not the production cut
 
 
 def _fixture(spark):
@@ -51,9 +49,7 @@ def _index(corpus, gate):
 def _batch_truth(corpus, incoming, gate="exact"):
     """The whole pipeline as ONE batch plan — the invariant the stream
     must reproduce regardless of micro-batch boundaries or replays."""
-    return ingest_pipeline_batch(
-        incoming, _index(corpus, gate), min_words=MIN_WORDS, gate=gate
-    )
+    return ingest_pipeline_batch(incoming, _index(corpus, gate), gate=gate)
 
 
 def _plan(df) -> str:
@@ -75,11 +71,11 @@ def _rows(df):
 def test_stream_matches_batch_plan(spark, tmp_path, gate):
     corpus, incoming = _fixture(spark)
     staging = str(tmp_path / "staging")
-    stage_incoming_slices(incoming, staging, n_slices=4)
+    stage_incoming_slices(incoming, staging)
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     run_ingest_pipeline(
         spark, staging, incoming.schema, _index(corpus, gate),
-        out, ckpt, min_words=MIN_WORDS, gate=gate,
+        out, ckpt, gate=gate,
     )
     got = read_pipeline_totals(spark, out)
     want = _batch_truth(corpus, incoming, gate)
@@ -92,7 +88,7 @@ def test_stream_matches_batch_plan(spark, tmp_path, gate):
 
 @pytest.mark.slow
 @pytest.mark.parametrize("gate", ["exact", "near"])
-def test_final_table_independent_of_slicing(spark, tmp_path, gate):
+def test_final_table_independent_of_slicing(spark, tmp_path, monkeypatch, gate):
     """2 slices vs 5 slices: different micro-batch boundaries, same
     final table (the additive-partials invariant) — for BOTH gate
     flavors (every near-gate stage is stateless per batch too)."""
@@ -102,11 +98,11 @@ def test_final_table_independent_of_slicing(spark, tmp_path, gate):
     for n_slices in (2, 5):
         base = tmp_path / f"s{n_slices}"
         staging = str(base / "staging")
-        stage_incoming_slices(incoming, staging, n_slices=n_slices)
+        monkeypatch.setattr(capstone, "_N_SLICES", n_slices)
+        stage_incoming_slices(incoming, staging)
         out, ckpt = str(base / "out"), str(base / "ckpt")
         run_ingest_pipeline(
-            spark, staging, incoming.schema, idx, out, ckpt,
-            min_words=MIN_WORDS, gate=gate,
+            spark, staging, incoming.schema, idx, out, ckpt, gate=gate
         )
         results.append(_rows(read_pipeline_totals(spark, out)))
     assert results[0] == results[1]
@@ -114,7 +110,7 @@ def test_final_table_independent_of_slicing(spark, tmp_path, gate):
 
 @pytest.mark.slow
 @pytest.mark.parametrize("gate", ["exact", "near"])
-def test_restart_resumes_without_double_counting(spark, tmp_path, gate):
+def test_restart_resumes_without_double_counting(spark, tmp_path, monkeypatch, gate):
     """Run the stream over the first slices, then stage more and resume
     from the SAME checkpoint: already-processed epochs are not re-run
     (their partials survive untouched) and the final table equals the
@@ -127,24 +123,23 @@ def test_restart_resumes_without_double_counting(spark, tmp_path, gate):
 
     first = incoming.filter(F.pmod(F.col("doc_id"), F.lit(2)) == 1)
     later = incoming.filter(F.pmod(F.col("doc_id"), F.lit(2)) == 0)
-    stage_incoming_slices(first, str(tmp_path / "staging"), n_slices=2)
+    monkeypatch.setattr(capstone, "_N_SLICES", 2)
+    stage_incoming_slices(first, str(tmp_path / "staging"))
     run_ingest_pipeline(
-        spark, staging, incoming.schema, idx, out, ckpt,
-        min_words=MIN_WORDS, gate=gate,
+        spark, staging, incoming.schema, idx, out, ckpt, gate=gate
     )
     mid = _rows(read_pipeline_totals(spark, out))
     assert mid == _rows(_batch_truth(corpus, first, gate))
 
     # more files land (fresh slice subdirs), resume from the checkpoint
     for s, p in enumerate(
-        stage_incoming_slices(later, str(tmp_path / "staging2"), n_slices=2)
+        stage_incoming_slices(later, str(tmp_path / "staging2"))
     ):
         import shutil
 
         shutil.copytree(p, f"{staging}/late{s}")
     run_ingest_pipeline(
-        spark, staging, incoming.schema, idx, out, ckpt,
-        min_words=MIN_WORDS, gate=gate,
+        spark, staging, incoming.schema, idx, out, ckpt, gate=gate
     )
     assert _rows(read_pipeline_totals(spark, out)) == _rows(
         _batch_truth(corpus, incoming, gate)
@@ -152,8 +147,7 @@ def test_restart_resumes_without_double_counting(spark, tmp_path, gate):
 
     # restart with nothing new: no duplicates, table unchanged
     run_ingest_pipeline(
-        spark, staging, incoming.schema, idx, out, ckpt,
-        min_words=MIN_WORDS, gate=gate,
+        spark, staging, incoming.schema, idx, out, ckpt, gate=gate
     )
     assert _rows(read_pipeline_totals(spark, out)) == _rows(
         _batch_truth(corpus, incoming, gate)
@@ -169,12 +163,12 @@ def test_gate_rejects_corpus_duplicates_and_low_quality(spark):
         [(1, "the quick brown fox jumps over the lazy dog today", "a", "en")],
         "doc_id bigint, text string, source string, lang string",
     )
-    good = "the old ship sailed for a distant port and it was full of tea " * 3
+    good = "the old ship sailed for a distant port and it was full of tea " * 4
     incoming = spark.createDataFrame(
         [
             # duplicate of the corpus doc (same normalized content)
             (2, "The  quick brown fox jumps over the lazy dog today", "a", "en"),
-            # passes gopher at MIN_WORDS=10 (stop words, alpha, length)
+            # passes gopher (50+ words, stop words, alpha, length)
             (3, good, "b", "en"),
             # too short -> fails the word-count rule
             (4, "tiny", "b", "en"),
@@ -182,9 +176,7 @@ def test_gate_rejects_corpus_duplicates_and_low_quality(spark):
         "doc_id bigint, text string, source string, lang string",
     )
     got = _rows(
-        ingest_pipeline_batch(
-            incoming, corpus_hash_index(corpus), min_words=10
-        )
+        ingest_pipeline_batch(incoming, corpus_hash_index(corpus))
     )
     assert got == [("b", "en", 1, len(good.split()))]
 
@@ -197,10 +189,10 @@ def test_near_gate_rejects_what_exact_gate_admits(spark):
     is rejected by the band gate; a genuinely novel doc passes both."""
     base = "the old ship sailed for a distant port and it was full of tea "
     corpus = spark.createDataFrame(
-        [(1, base * 3, "a", "en")],
+        [(1, base * 4, "a", "en")],
         "doc_id bigint, text string, source string, lang string",
     )
-    near_dup = (base * 3).replace("distant port", "distant harbor", 1)
+    near_dup = (base * 4).replace("distant port", "distant harbor", 1)
     novel = (
         "a completely different tale about mountains is told here when "
         "rain follows the long summer and the valley turns to gold " * 3
@@ -210,14 +202,10 @@ def test_near_gate_rejects_what_exact_gate_admits(spark):
         "doc_id bigint, text string, source string, lang string",
     )
     exact = _rows(
-        ingest_pipeline_batch(
-            incoming, _index(corpus, "exact"), min_words=10, gate="exact"
-        )
+        ingest_pipeline_batch(incoming, _index(corpus, "exact"), gate="exact")
     )
     near = _rows(
-        ingest_pipeline_batch(
-            incoming, _index(corpus, "near"), min_words=10, gate="near"
-        )
+        ingest_pipeline_batch(incoming, _index(corpus, "near"), gate="near")
     )
     # exact gate admits both (neither is byte-identical to the corpus)
     assert [r[:2] for r in exact] == [("b", "en"), ("c", "en")]
@@ -265,14 +253,14 @@ def test_exact_gate_is_size_aware_not_broadcast_pinned(spark):
     try:
         # compact index under the default threshold: broadcast kept
         assert should_broadcast_index(idx) is True
-        plan = _plan(ingest_pipeline_batch(incoming, idx, min_words=MIN_WORDS))
+        plan = _plan(ingest_pipeline_batch(incoming, idx))
         assert "BroadcastHashJoin" in plan
 
         # index "too big" (threshold floored to 1 byte): no forced hint,
         # Catalyst plans a shuffled anti join
         spark.conf.set(key, "1b")
         assert should_broadcast_index(idx) is False
-        plan = _plan(ingest_pipeline_batch(incoming, idx, min_words=MIN_WORDS))
+        plan = _plan(ingest_pipeline_batch(incoming, idx))
         assert "BroadcastHashJoin" not in plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
         # no single-task fast path either: a coalesce(1) would pull the
@@ -286,21 +274,15 @@ def test_exact_gate_is_size_aware_not_broadcast_pinned(spark):
         # explicit override beats the auto decision (the once-per-stream
         # decision run_ingest_pipeline forwards into every epoch)
         plan = _plan(
-            ingest_pipeline_batch(
-                incoming, idx, min_words=MIN_WORDS, broadcast_index=True
-            )
+            ingest_pipeline_batch(incoming, idx, broadcast_index=True)
         )
         assert "BroadcastHashJoin" in plan
     finally:
         spark.conf.set(key, saved)
 
     # and the gated result is identical either way (strategy, not semantics)
-    shuffled = ingest_pipeline_batch(
-        incoming, idx, min_words=MIN_WORDS, broadcast_index=False
-    )
-    broadcasted = ingest_pipeline_batch(
-        incoming, idx, min_words=MIN_WORDS, broadcast_index=True
-    )
+    shuffled = ingest_pipeline_batch(incoming, idx, broadcast_index=False)
+    broadcasted = ingest_pipeline_batch(incoming, idx, broadcast_index=True)
     assert "Coalesce" not in _plan(shuffled)
     assert "Coalesce" in _plan(broadcasted)
     assert _rows(shuffled) == _rows(broadcasted)
@@ -318,13 +300,12 @@ def test_live_stream_exact_gate_correct_above_broadcast_threshold(spark, tmp_pat
     key = "spark.sql.autoBroadcastJoinThreshold"
     saved = spark.conf.get(key)
     staging = str(tmp_path / "staging")
-    stage_incoming_slices(incoming, staging, n_slices=3)
+    stage_incoming_slices(incoming, staging)
     try:
         spark.conf.set(key, "1b")
         run_ingest_pipeline(
             spark, staging, incoming.schema, idx,
             str(tmp_path / "out"), str(tmp_path / "ckpt"),
-            min_words=MIN_WORDS,
         )
     finally:
         spark.conf.set(key, saved)
@@ -341,11 +322,9 @@ def test_near_gate_parallelism_floor_preserves_results(spark):
     it must not change the gated result, only the partitioning."""
     corpus, incoming = _fixture(spark)
     idx = _index(corpus, "near")
-    base = ingest_pipeline_batch(
-        incoming, idx, min_words=MIN_WORDS, gate="near"
-    )
+    base = ingest_pipeline_batch(incoming, idx, gate="near")
     fanned = ingest_pipeline_batch(
-        incoming, idx, min_words=MIN_WORDS, gate="near",
+        incoming, idx, gate="near",
         min_parallelism=spark.sparkContext.defaultParallelism,
     )
     assert _rows(base) == _rows(fanned)
@@ -357,8 +336,6 @@ def test_exact_gate_single_split_agg_is_exchange_free(spark):
     satisfies the groupBy's clustering requirement), a too-big/unknown
     estimate keeps the distributed aggregate, and the rows are identical
     either way (r13; guide §2.4 — remove shuffles outright)."""
-    from fireball_data_processing_spark.streaming import capstone
-
     corpus, incoming = _fixture(spark)
     idx = _index(corpus, "exact").localCheckpoint()
 
@@ -366,7 +343,7 @@ def test_exact_gate_single_split_agg_is_exchange_free(spark):
     # no shuffle exchange in the plan (the only Exchange is the gate's
     # broadcast build side)
     assert capstone._single_split_batch(incoming) is True
-    fast = ingest_pipeline_batch(incoming, idx, min_words=MIN_WORDS)
+    fast = ingest_pipeline_batch(incoming, idx)
     plan = _plan(fast)
     assert "Coalesce" in plan
     assert "hashpartitioning(source" not in plan
@@ -376,7 +353,7 @@ def test_exact_gate_single_split_agg_is_exchange_free(spark):
     saved = capstone._single_split_batch
     capstone._single_split_batch = lambda df: False
     try:
-        slow = ingest_pipeline_batch(incoming, idx, min_words=MIN_WORDS)
+        slow = ingest_pipeline_batch(incoming, idx)
     finally:
         capstone._single_split_batch = saved
     plan = _plan(slow)

@@ -754,23 +754,31 @@ def test_pq_codebooks_and_code_shape(spark):
     assert all(0 <= x < 4 for r in codes for x in r["c"])
 
 
-def test_ivfpq_probe_dial_and_amortized_fit(spark):
+def test_ivfpq_probe_dial_leaves_nothing_cached(spark):
     """IVFPQ behavior pins: (a) probing ALL cells degenerates to exact
     ADC over the whole corpus — i.e. candidate recall vs the codes is
     1, so ranks/scores for full probe must equal flat pq_topk run with
     the SAME residual codebooks applied per cell; we pin the cheaper
     invariant that hits are monotone in n_probe and full-probe hit set
-    covers partial-probe; (b) passing (centroids, codebooks) from
-    ivfpq_fit reproduces the one-shot call exactly — the amortized
-    production path."""
+    covers partial-probe; (b) the fit's pinned residual frame is
+    released, so no cached frame outlives a call."""
     from fireball_data_processing_spark.operators.similarity import (
-        ivfpq_fit,
         ivfpq_topk,
     )
     from fireball_data_processing_spark.sources.tables import load_table
 
     e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     q = e.filter(F.col("vec_id") < 5)
+
+    # track ids, not the count: earlier tests' cached frames are
+    # unpersisted ASYNCHRONOUSLY by the ContextCleaner when their Python
+    # wrappers are GC'd, so the total can shrink mid-test; only RDDs
+    # CREATED here must be gone at the end
+    def _rdd_ids():
+        m = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in m.keySet().toArray()}
+
+    before = _rdd_ids()
 
     def hits(n_probe):
         return {
@@ -785,22 +793,7 @@ def test_ivfpq_probe_dial_and_amortized_fit(spark):
     # more probes reach strictly more of the corpus: the approximate
     # top-k under a wider candidate set can only improve vs full probe
     assert len(h2 & h4) >= len(h1 & h4), (len(h1 & h4), len(h2 & h4))
-
-    cents, books = ivfpq_fit(e, n_cells=4, m=4, ks=4)
-    amortized = {
-        (r["query_id"], r["neighbor_id"], r["adc_d2"], r["rank"])
-        for r in ivfpq_topk(
-            q, e, k=5, n_cells=4, n_probe=2, m=4, ks=4,
-            centroids=cents, codebooks=books,
-        ).collect()
-    }
-    oneshot = {
-        (r["query_id"], r["neighbor_id"], r["adc_d2"], r["rank"])
-        for r in ivfpq_topk(
-            q, e, k=5, n_cells=4, n_probe=2, m=4, ks=4
-        ).collect()
-    }
-    assert amortized == oneshot
+    assert _rdd_ids() - before == set()
 
 
 def test_ivfpq_plan_scale_shape(spark):
@@ -813,16 +806,14 @@ def test_ivfpq_plan_scale_shape(spark):
     import re
 
     from fireball_data_processing_spark.operators.similarity import (
-        ivfpq_fit,
         ivfpq_topk,
     )
     from fireball_data_processing_spark.sources.tables import load_table
 
     e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cents, books = ivfpq_fit(e, n_cells=4, m=4, ks=4)
     df = ivfpq_topk(
         e.filter(F.col("vec_id") < 5), e, k=5, n_cells=4, n_probe=2,
-        m=4, ks=4, centroids=cents, codebooks=books,
+        m=4, ks=4,
     )
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -895,27 +886,6 @@ def test_fit_rejects_wrong_but_divisible_dim(spark):
     # the correct dim still threads through (no peek needed on e)
     books = pq_fit(e, m=4, ks=2, n_iter=1, dim=64)
     assert len(books) == 4 and all(len(c) == 16 for _, c in books[0])
-
-
-def test_load_table_refresh_drops_dim_memo(spark, tmp_path):
-    """load_table(refresh=True) must invalidate the dim memo too: a
-    rewritten embeddings file with a different vector width would
-    otherwise get the stale dim stamped as metadata (ADVICE r9)."""
-    from fireball_data_processing_spark.sources.tables import load_table
-
-    src = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    d = str(tmp_path)
-    src.filter(F.col("vec_id") < 10).write.parquet(f"{d}/embeddings.parquet")
-    first = load_table(spark, d, "embeddings")
-    assert int(first.schema["embedding"].metadata["dim"]) == 64
-    # rewrite the same path at width 32
-    src.filter(F.col("vec_id") < 10).select(
-        "vec_id", F.slice("embedding", 1, 32).alias("embedding")
-    ).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-    stale = load_table(spark, d, "embeddings")  # memoized: stale by design
-    assert int(stale.schema["embedding"].metadata["dim"]) == 64
-    fresh = load_table(spark, d, "embeddings", refresh=True)
-    assert int(fresh.schema["embedding"].metadata["dim"]) == 32
 
 
 def test_ann_fit_paths_leave_no_cached_frames(spark):
@@ -1082,71 +1052,6 @@ def test_pq_encoder_streams_unchanged(spark):
         assert len(got) == spark.read.parquet(src).count()
     finally:
         shutil.rmtree(src, ignore_errors=True)
-
-
-def test_ivfpq_path_backed_index_prunes_and_matches(spark, tmp_path):
-    """The build/query split must (a) reproduce the one-shot operator
-    exactly, (b) turn the probe into PARTITION PRUNING on a path-backed
-    index — the scan's PartitionFilters must carry the static cell IN
-    filter, and with a single probed cell only that cell's partition
-    survives — and (c) leave no cached frames behind."""
-    from fireball_data_processing_spark.operators.similarity import (
-        build_ivfpq_index,
-        ivfpq_query,
-        ivfpq_topk,
-    )
-    from fireball_data_processing_spark.sources.tables import load_table
-
-    e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    q = e.filter(F.col("vec_id") < 5)
-    # track ids, not the count: earlier tests' cached frames are
-    # unpersisted ASYNCHRONOUSLY by the ContextCleaner when their Python
-    # wrappers are GC'd, so the total can shrink mid-test; only RDDs
-    # CREATED here must be gone at the end
-    def _rdd_ids():
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in m.keySet().toArray()}
-
-    before = _rdd_ids()
-    one = {
-        (r["query_id"], r["neighbor_id"], r["adc_d2"], r["rank"])
-        for r in ivfpq_topk(q, e, k=5, n_cells=4, n_probe=2, m=4, ks=4).collect()
-    }
-    idx = build_ivfpq_index(
-        e, n_cells=4, m=4, ks=4, path=str(tmp_path / "ivfpq")
-    )
-    two_df = ivfpq_query(idx, q, k=5, n_probe=2)
-    two = {
-        (r["query_id"], r["neighbor_id"], r["adc_d2"], r["rank"])
-        for r in two_df.collect()
-    }
-    assert one == two
-
-    plan = two_df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    assert "PartitionFilters: [cell" in plan, plan
-
-    # single query, single probe: exactly one cell partition survives
-    one_q = ivfpq_query(idx, e.filter(F.col("vec_id") == 0), k=3, n_probe=1)
-    plan1 = one_q._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    import re
-
-    # a single-member IN collapses to an equality predicate
-    m = re.search(
-        r"PartitionFilters: \[[^\]]*\(cell#\d+ = \d+\)|"
-        r"PartitionFilters: \[cell#\d+ IN \(\d+\)",
-        plan1,
-    )
-    assert m, plan1
-    assert one_q.count() == 3
-    assert _rdd_ids() - before == set()
 
 
 def test_ivfpq_ingest_routes_and_encodes_in_stream(spark, tmp_path):

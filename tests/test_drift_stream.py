@@ -98,7 +98,6 @@ def test_drift_monitor_stream_end_to_end(spark, tmp_path):
         baseline=baseline,
         out_path=out,
         checkpoint_dir=ckpt,
-        watermark="0 seconds",
     )
     q.awaitTermination(120)
     got = spark.read.parquet(out)
@@ -107,11 +106,22 @@ def test_drift_monitor_stream_end_to_end(spark, tmp_path):
     key = ["window_start", "bucket"]
     g = {tuple(r[k] for k in key): (r.n_win, r.psi_term) for r in got.collect()}
     w = {tuple(r[k] for k in key): (r.n_win, r.psi_term) for r in want.collect()}
-    # append mode emits a window only once the watermark passes its END;
-    # the final window contains the max event time and thus never closes
-    # within an availableNow run — exclude it from the parity set
-    last = max(k[0] for k in w)
-    w_closed = {k: v for k, v in w.items() if k[0] < last}
+    # append mode emits a window only once the watermark (max event time
+    # minus 30 minutes) passes its END; windows still open when the
+    # availableNow run ends are not emitted — exclude them from the
+    # parity set
+    import datetime as dt
+
+    max_ts = (
+        load_table(spark, SMOKE, "events")
+        .select(F.timestamp_micros(F.expr(f"{S.ts_col} div 1000")).alias("t"))
+        .agg(F.max("t"))
+        .first()[0]
+    )
+    watermark = max_ts - dt.timedelta(minutes=30)
+    w_closed = {
+        k: v for k, v in w.items() if k[0] + dt.timedelta(hours=1) <= watermark
+    }
     assert g == w_closed
     # the corpus-vs-itself mix per window still drifts per window (each
     # window's mix differs from the global), but totals are finite and

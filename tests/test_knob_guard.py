@@ -1,10 +1,11 @@
 """Guard against knob creep: every defaulted parameter of a package
-function must be set by some call in the repo, or it is a constant
-dressed up as an option.
+function must be set by some non-test call in the repo, or it is a
+constant dressed up as an option.
 
 The scan is pure AST (no Spark). Calls are read from the package,
-``tests/``, ``scripts/``, ``bench.py``, ``fbbench/`` and
-``__spark_entry__.py`` and matched to definitions by name. A class call
+``scripts/``, ``bench.py``, ``fbbench/`` and ``__spark_entry__.py`` and
+matched to definitions by name; ``tests/`` does not count, since a
+parameter only a test sets selects code no workload runs. A class call
 counts as a call to its ``__init__``; a call with ``*args`` or
 ``**kwargs`` sets every parameter; ``functools.partial(f, ...)`` counts
 as a call to ``f``.
@@ -16,16 +17,36 @@ import ast
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
-PACKAGE = ROOT / "fireball_data_processing_spark"
-CALLERS = [PACKAGE, ROOT / "tests", ROOT / "scripts", ROOT / "fbbench",
-           ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+PACKAGE_NAME = "fireball_data_processing_spark"
 
-# A deployment setting and the two escape hatches README "API notes"
-# documents: kept as options on purpose although no call sets them.
+
+def caller_roots(root: Path) -> list[Path]:
+    """The files and directories whose calls count, under a repo root."""
+    return [root / PACKAGE_NAME, root / "scripts", root / "fbbench",
+            root / "bench.py", root / "__spark_entry__.py"]
+
+
+# Kept as options on purpose although no call sets them, each documented
+# in README "API notes": deployment settings (paths, connector options,
+# Spark master) and two escape hatches.
 DOCUMENTED_UNSET = {
-    ("session.py", "get_spark", "master"),
-    ("operators/similarity.py", "lsh_topk", "dim"),
-    ("plans/inference.py", "classify_batches", "out_cols"),
+    ("session.py", "get_spark", "master"): "Spark master of the deployment",
+    ("operators/similarity.py", "lsh_topk", "dim"):
+        "skips the one-row dimension peek",
+    ("plans/inference.py", "classify_batches", "out_cols"):
+        "names the model's output columns",
+    ("operators/similarity.py", "build_ivf_index", "path"):
+        "where a path-backed index is written",
+    ("operators/setjoin.py", "set_similarity_join", "checkpoint_dir"):
+        "reliable-checkpoint directory for the iterative join",
+    ("streaming/expectations_stream.py", "run_expectation_gate", "admit_path"):
+        "where admitted drops are written",
+    ("streaming/expectations_stream.py", "run_expectation_gate",
+     "quarantine_path"): "where quarantined drops are written",
+    ("streaming/sources_stream.py", "open_event_stream", "path"):
+        "file-source location",
+    ("streaming/sources_stream.py", "open_event_stream", "options"):
+        "connector options (stream name, region, ...)",
 }
 
 
@@ -88,19 +109,22 @@ def _calls(tree):
         yield name, len(args), {k.arg for k in node.keywords}, star
 
 
-def unset_defaulted_params():
+def unset_defaulted_params(package: Path, callers: list[Path]):
+    """(file relative to ``package``, qualname, parameter) for every
+    defaulted parameter of ``package`` that no call under ``callers``
+    sets."""
     set_kw: dict[str, set[str]] = {}
     max_pos: dict[str, int] = {}
     star: set[str] = set()
-    for f in _py_files(CALLERS):
+    for f in _py_files(callers):
         for name, n_pos, kws, has_star in _calls(ast.parse(f.read_text())):
             set_kw.setdefault(name, set()).update(kws)
             max_pos[name] = max(max_pos.get(name, 0), n_pos)
             if has_star:
                 star.add(name)
     unset = set()
-    for f in _py_files([PACKAGE]):
-        rel = f.relative_to(PACKAGE).as_posix()
+    for f in _py_files([package]):
+        rel = f.relative_to(package).as_posix()
         for name, qual, param, idx in _defaulted_params(ast.parse(f.read_text())):
             if name in star or param in set_kw.get(name, ()):
                 continue
@@ -110,5 +134,22 @@ def unset_defaulted_params():
     return unset
 
 
+def test_scan_reports_a_parameter_only_a_test_sets(tmp_path):
+    pkg = tmp_path / PACKAGE_NAME
+    pkg.mkdir()
+    (pkg / "mod.py").write_text(
+        "def f(x, knob=1, used=2):\n    return x\n\n"
+        "def g():\n    return f(0, used=3)\n"
+    )
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "test_mod.py").write_text(
+        "from pkg.mod import f\n\ndef test_f():\n    f(0, knob=5)\n"
+    )
+    assert unset_defaulted_params(pkg, caller_roots(tmp_path)) == {
+        ("mod.py", "f", "knob")
+    }
+
+
 def test_every_defaulted_parameter_has_a_caller():
-    assert unset_defaulted_params() == DOCUMENTED_UNSET
+    unset = unset_defaulted_params(ROOT / PACKAGE_NAME, caller_roots(ROOT))
+    assert unset == set(DOCUMENTED_UNSET)

@@ -63,7 +63,7 @@ def test_compaction_collapses_fragmented_partitions_only(spark, tmp_path):
     # day 1: healthy single file; day 2: fragmented into ~8 files
     write_partitioned(_events(spark, [1]).coalesce(1), path, ["day"])
     frag = _events(spark, [2], rows_per_day=64).repartition(8)
-    write_partitioned(frag, path, ["day"], mode="append")
+    frag.write.mode("append").partitionBy("day").parquet(path)
 
     before = {
         r["day"]: (r["n_files"], r["n_rows"])
@@ -71,7 +71,7 @@ def test_compaction_collapses_fragmented_partitions_only(spark, tmp_path):
     }
     assert before[1][0] == 1 and before[2][0] > 1
 
-    report = compact_partitions(spark, path, ["day"], min_files_to_compact=1)
+    report = compact_partitions(spark, path, ["day"])
     assert [r["day"] for r in report] == [2]
     assert report[0]["files_before"] == before[2][0]
     assert report[0]["files_after"] == 1
@@ -106,7 +106,7 @@ def test_compaction_handles_null_partition_value(spark, tmp_path):
     }
     assert before[None] > 1
 
-    report = compact_partitions(spark, path, ["day"], min_files_to_compact=1)
+    report = compact_partitions(spark, path, ["day"])
     assert [r["day"] for r in report] == [None]
     assert report[0]["files_after"] == 1
     after = {

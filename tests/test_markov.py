@@ -5,6 +5,7 @@ invariance."""
 
 from __future__ import annotations
 
+from fireball_data_processing_spark.operators import markov as markov_mod
 from fireball_data_processing_spark.operators.markov import (
     markov_profile,
     stationary_distribution,
@@ -58,15 +59,16 @@ def test_dangling_state_restriction_renormalizes(spark):
     assert m[("b", "a")] == 1.0
 
 
-def test_stationary_two_state_chain(spark):
+def test_stationary_two_state_chain(spark, monkeypatch):
     # P = [[0.5, 0.5], [1.0, 0.0]] (from counts) -> stationary
-    # pi = (2/3, 1/3); 12 iterations converge well past 6 dp
+    # pi = (2/3, 1/3); the error halves per step, so 24 steps pass 6 dp
+    monkeypatch.setattr(markov_mod, "_POWER_STEPS", 24)
     df = _seq_df(spark, {1: ["a", "a", "b", "a", "b", "a", "a"]})
     # counts: a->a 2, a->b 2, b->a 2 -> P[a] = (.5, .5), P[b] = (1, 0)
     mat = transition_matrix(df, "k", "i", "s")
     pi = {
         r["state"]: r["pi"]
-        for r in stationary_distribution(mat, n_iter=24).collect()
+        for r in stationary_distribution(mat).collect()
     }
     assert abs(pi["a"] - 2.0 / 3.0) < 1e-6
     assert abs(pi["b"] - 1.0 / 3.0) < 1e-6
@@ -172,7 +174,7 @@ def test_entropy_rate_of_deterministic_and_uniform_chains(spark):
         spark, {1: ["a", "a", "b", "b", "a", "b", "b", "a", "a", "b"] * 4}
     )
     m2 = transition_matrix(uni, "k", "i", "s").localCheckpoint()
-    pi = stationary_distribution(m2, n_iter=24)
+    pi = stationary_distribution(m2)
     h2 = m2.groupBy(F.col("src").alias("state")).agg(
         F.sum(-F.col("p") * F.log2(F.col("p"))).alias("h")
     )
@@ -241,7 +243,7 @@ def test_stationary_preserves_state_dtype(spark):
         rows.append((1, i, 10 if i % 2 == 0 else 20))
     df = spark.createDataFrame(rows, "k bigint, i bigint, s bigint")
     mat = transition_matrix(df, "k", "i", "s")
-    pi = stationary_distribution(mat, n_iter=8)
+    pi = stationary_distribution(mat)
     assert dict(pi.dtypes)["state"] == "bigint"
     got = {r["state"]: r["pi"] for r in pi.collect()}
     assert set(got) == {10, 20}

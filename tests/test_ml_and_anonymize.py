@@ -12,6 +12,7 @@ from fireball_data_processing_spark.functions.ids import (
     anonymize_value,
     hashed_id,
 )
+from fireball_data_processing_spark.plans import ml
 
 
 def test_hashed_id_exact_reference_parity():
@@ -72,7 +73,7 @@ def test_anonymize_json_str_fallback():
     assert rt["a"] == hashed_id("261302296103747584")
 
 
-def test_logreg_cv_trains_and_scores(spark, sf_dir):
+def test_logreg_cv_trains_and_scores(spark, sf_dir, monkeypatch):
     from fireball_data_processing_spark.plans.heuristics import (
         SIMPLE,
         heuristics_matrix,
@@ -97,7 +98,10 @@ def test_logreg_cv_trains_and_scores(spark, sf_dir):
     cols = ["event_count", "message_count", "command_count",
             "average_message_length", "avg_words_between_commands"]
     labeled = labeled.na.fill(0.0, cols).cache()
-    model = train_logreg_cv(labeled, cols, "y", reg_grid=(0.1,), n_folds=2)
+    # a one-point grid and two folds keep the CV fit short
+    monkeypatch.setattr(ml, "_REG_GRID", (0.1,))
+    monkeypatch.setattr(ml, "_N_FOLDS", 2)
+    model = train_logreg_cv(labeled, cols, "y")
     preds = model.transform(
         __import__(
             "fireball_data_processing_spark.plans.ml", fromlist=["feature_label_frame"]
@@ -170,7 +174,7 @@ def test_classify_batches_pluggable_model(spark, sf_dir):
     assert scored.columns == d.columns + ["label", "prob"]
 
 
-def test_mllib_model_fn_through_classify_batches(spark):
+def test_mllib_model_fn_through_classify_batches(spark, monkeypatch):
     # U4/U5 closed: a *trained* MLlib scaler+logreg pipeline wired through
     # the mapInPandas envelope must reproduce model.transform exactly —
     # probabilities to float tolerance, threshold-filtered ids identically
@@ -203,7 +207,10 @@ def test_mllib_model_fn_through_classify_batches(spark):
     cols = ["event_count", "message_count", "command_count",
             "average_message_length", "avg_words_between_commands"]
     labeled = labeled.na.fill(0.0, cols).cache()
-    model = train_logreg_cv(labeled, cols, "y", reg_grid=(0.1,), n_folds=2)
+    # a one-point grid and two folds keep the CV fit short
+    monkeypatch.setattr(ml, "_REG_GRID", (0.1,))
+    monkeypatch.setattr(ml, "_N_FOLDS", 2)
+    model = train_logreg_cv(labeled, cols, "y")
 
     # direct MLlib scoring (the reference's "run the finetuned predictor")
     direct = model.transform(feature_label_frame(labeled, cols, "y"))
@@ -214,7 +221,7 @@ def test_mllib_model_fn_through_classify_batches(spark):
 
     # envelope scoring: same trained model, Arrow-batched numpy path
     scored = classify_batches(
-        labeled, cols, mllib_model_fn(model, positive_label="1", negative_label="0")
+        labeled, cols, mllib_model_fn(model)
     )
     got = {
         r["user_id"]: (r["label"], float(r["prob"])) for r in scored.collect()
@@ -231,10 +238,11 @@ def test_mllib_model_fn_through_classify_batches(spark):
     assert 0 < len(kept) < len(want)
 
 
-def test_with_retries_flaky_model():
+def test_with_retries_flaky_model(monkeypatch):
     import pandas as pd
     import pytest
 
+    from fireball_data_processing_spark.plans import inference
     from fireball_data_processing_spark.plans.inference import with_retries
 
     calls = {"n": 0}
@@ -246,19 +254,18 @@ def test_with_retries_flaky_model():
             raise ConnectionError("rate limited")
         return pd.DataFrame({"label": ["ok"] * len(pdf), "prob": [1.0] * len(pdf)})
 
+    monkeypatch.setattr(inference.time, "sleep", sleeps.append)
     pdf = pd.DataFrame({"text": ["a", "b"]})
-    wrapped = with_retries(flaky, max_tries=3, backoff=0.05, sleep=sleeps.append)
+    wrapped = with_retries(flaky)
     out = wrapped(pdf)
     assert calls["n"] == 3 and list(out["label"]) == ["ok", "ok"]
     assert sleeps == [0.05, 0.1]  # exponential backoff between tries
 
-    # gives up after max_tries and re-raises the model's error
+    # gives up after 3 tries and re-raises the model's error
     calls["n"] = -10  # would need 13 calls to succeed
     with pytest.raises(ConnectionError):
-        with_retries(flaky, max_tries=2, backoff=0.0, sleep=sleeps.append)(pdf)
-
-    with pytest.raises(ValueError):
-        with_retries(flaky, max_tries=0)
+        with_retries(flaky)(pdf)
+    assert calls["n"] == -7
 
 
 def test_classify_batches_rejects_colliding_out_cols(spark):
@@ -388,11 +395,11 @@ def test_kendall_tau_matches_literal_python(spark):
 # ---------------------------------------------------------------- Dawid-Skene
 
 
-def _ds(spark, rows, **kw):
+def _ds(spark, rows):
     from fireball_data_processing_spark.plans.agreement import dawid_skene
 
     df = spark.createDataFrame(rows, "item bigint, rater string, label string")
-    out = dawid_skene(df, labels=["a", "b", "c"], **kw)
+    out = dawid_skene(df, labels=["a", "b", "c"])
     return {r["item"]: (r["map_label"], r["posterior"]) for r in out.collect()}
 
 

@@ -74,7 +74,8 @@ def test_asof_single_exchange(spark):
     assert _count_shuffles(df) == 1
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
+def test_bucketed_join_is_shuffle_free(spark, tmp_path, monkeypatch):
+    from fireball_data_processing_spark.sources import bucketing
     from fireball_data_processing_spark.sources.bucketing import (
         read_bucketed,
         write_bucketed,
@@ -93,11 +94,11 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     ev = load_table(spark, SMOKE, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    write_bucketed(ev, "ev_bucketed_a", "user_id", num_buckets=8,
-                   sort_col="event_id")
+    monkeypatch.setattr(bucketing, "_BUCKETS", 8)
+    write_bucketed(ev, "ev_bucketed_a", "user_id")
     write_bucketed(
         ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")),
-        "ev_bucketed_agg", "user_id", num_buckets=8,
+        "ev_bucketed_agg", "user_id",
     )
     a = read_bucketed(spark, "ev_bucketed_a")
     b = read_bucketed(spark, "ev_bucketed_agg")
@@ -580,12 +581,10 @@ def test_two_phase_rank_matches_naive_global_window(spark):
         assert got == want, (len(rows), got, want)
 
 
-def test_two_phase_rank_unique_key_guard(spark):
-    """assert_unique_key: accepts unique composite keys (null scores
-    included — GROUP BY null==null, not countDistinct's null-dropping),
-    raises on duplicate full keys naming the largest group."""
-    import pytest as _pytest
-
+def test_two_phase_rank_null_scores_and_duplicate_keys(spark):
+    """Unique composite keys with null scores rank 1..n (null scores are
+    bucket -1 input); duplicate full keys are ranked without an extra
+    uniqueness pass."""
     from fireball_data_processing_spark.operators.windows import (
         two_phase_global_rank,
     )
@@ -594,18 +593,11 @@ def test_two_phase_rank_unique_key_guard(spark):
         [(1, "a", None), (2, "a", None), (3, "a", 1.0), (4, "b", 1.0)],
         "id bigint, h string, score double",
     )
-    ranks = two_phase_global_rank(
-        ok, "score", ["h", "id"], n_buckets=2, assert_unique_key=True
-    )
+    ranks = two_phase_global_rank(ok, "score", ["h", "id"], n_buckets=2)
     assert sorted(r["rank"] for r in ranks.collect()) == [1, 2, 3, 4]
 
     dup = spark.createDataFrame(
         [(1, "a", 1.0), (1, "a", 1.0), (2, "b", None), (2, "b", None)],
         "id bigint, h string, score double",
     )
-    with _pytest.raises(ValueError, match="not unique"):
-        two_phase_global_rank(
-            dup, "score", ["h", "id"], n_buckets=2, assert_unique_key=True
-        )
-    # default stays permissive (production path pays no extra pass)
     assert two_phase_global_rank(dup, "score", ["h", "id"]).count() == 4

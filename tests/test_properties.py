@@ -65,22 +65,17 @@ def test_asof_join_matches_pandas_merge_asof(spark, left, right):
     if len(lpdf) == 0:
         return
 
-    for direction in ("backward", "forward"):
-        got_df = asof_join(ldf, rdf, ["u"], "ts", ["val"], direction=direction)
-        got = sorted(
-            (r["u"], r["ts"], r["val_asof"]) for r in got_df.collect()
+    got_df = asof_join(ldf, rdf, ["u"], "ts", ["val"])
+    got = sorted((r["u"], r["ts"], r["val_asof"]) for r in got_df.collect())
+    if len(rpdf) == 0:
+        want = sorted((u, t, None) for u, t in left)
+    else:
+        m = pd.merge_asof(lpdf, rpdf, on="ts", by="u", direction="backward")
+        want = sorted(
+            (int(r.u), int(r.ts), None if pd.isna(r.val) else int(r.val))
+            for r in m.itertuples()
         )
-        if len(rpdf) == 0:
-            want = sorted((u, t, None) for u, t in left)
-        else:
-            m = pd.merge_asof(
-                lpdf, rpdf, on="ts", by="u", direction=direction
-            )
-            want = sorted(
-                (int(r.u), int(r.ts), None if pd.isna(r.val) else int(r.val))
-                for r in m.itertuples()
-            )
-        assert got == want, direction
+    assert got == want
 
 
 @given(left=left_rows, right=right_maps)
@@ -470,15 +465,13 @@ def test_bloom_membership_superset(spark, members, probes):
     if not members:
         return
     mdf = spark.createDataFrame([(int(m),) for m in members], "k bigint")
-    bm = bloom_bitmap(mdf, "k", num_bits=1 << 12, num_hashes=3)
+    bm = bloom_bitmap(mdf, "k")
     pdf = spark.createDataFrame(
         [(int(p),) for p in probes | members], "k bigint"
     )
     passed = {
         r["k"]
-        for r in pdf.filter(
-            bloom_might_contain(F.col("k"), bm, 1 << 12, 3)
-        ).collect()
+        for r in pdf.filter(bloom_might_contain(F.col("k"), bm)).collect()
     }
     assert members <= passed
 
@@ -805,6 +798,7 @@ fill_rows = st.lists(
 def test_grouped_budget_fill_matches_literal_greedy(
     spark, rows, n_buckets, budgets
 ):
+    from fireball_data_processing_spark.operators import selection
     from fireball_data_processing_spark.operators.selection import budget_fill
 
     data = [(g, i, s, w) for i, (g, s, w) in enumerate(rows)]
@@ -815,13 +809,14 @@ def test_grouped_budget_fill_matches_literal_greedy(
         [("a", budgets["a"]), ("b", budgets["b"]), (None, 15)],
         "grp string, budget long",
     )
-    got = {
-        (r["grp"], r["id"], r["cum_weight"])
-        for r in budget_fill(
-            df, "score", "w", "id", budget=bdf, group_col="grp",
-            n_buckets=n_buckets,
-        ).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(selection, "_FILL_BUCKETS", n_buckets)
+        got = {
+            (r["grp"], r["id"], r["cum_weight"])
+            for r in budget_fill(
+                df, "score", "w", "id", budget=bdf, group_col="grp"
+            ).collect()
+        }
     want = set()
     full = dict(budgets)
     full[None] = 15

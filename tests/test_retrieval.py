@@ -7,11 +7,13 @@ from __future__ import annotations
 import contextlib
 import io
 import math
+import os
 import re
 from collections import Counter
 
 from pyspark.sql import functions as F
 
+from fireball_data_processing_spark.operators import retrieval
 from fireball_data_processing_spark.operators.retrieval import (
     bm25_search,
     bm25_search_from_index,
@@ -107,7 +109,8 @@ def test_tf_idf_top_terms_naive(spark):
     assert not [r for r in rows if r.term == "fox"]
 
 
-def test_index_path_equals_direct_search(spark, tmp_path):
+def test_index_path_equals_direct_search(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(retrieval, "_N_BUCKETS", 16)
     d = load_table(spark, SMOKE, "documents")
     q = spark.createDataFrame(
         [(1, "spark window aggregation"), (2, "hash join")],
@@ -118,19 +121,12 @@ def test_index_path_equals_direct_search(spark, tmp_path):
         for r in bm25_search(d, q, k=5).collect()
     }
     path = str(tmp_path / "idx")
-    build_postings_index(d, path, n_buckets=16)
+    build_postings_index(d, path)
     via_index = {
         (r.query_id, r.rank): (r.doc_id, r.score)
-        for r in bm25_search_from_index(spark, path, q, k=5, n_buckets=16).collect()
+        for r in bm25_search_from_index(spark, path, q, k=5).collect()
     }
     assert direct == via_index
-    # precomputed stats skip the second corpus pass but change nothing
-    stats = spark.read.parquet(path + "/stats")
-    with_stats = {
-        (r.query_id, r.rank): (r.doc_id, r.score)
-        for r in bm25_search(d, q, k=5, stats=stats).collect()
-    }
-    assert direct == with_stats
 
 
 def test_rrf_fuse_matches_naive(spark):
@@ -183,15 +179,53 @@ def test_bm25_plan_broadcasts_query_side(spark):
     assert len(re.findall(r"Exchange (hash|range)partitioning", s)) <= 5
 
 
-def test_index_search_prunes_term_buckets(spark, tmp_path):
+def test_index_search_prunes_term_buckets(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(retrieval, "_N_BUCKETS", 16)
     d = load_table(spark, SMOKE, "documents")
     path = str(tmp_path / "idx")
-    build_postings_index(d, path, n_buckets=16)
+    build_postings_index(d, path)
     q = spark.createDataFrame([(1, "spark")], ["query_id", "query_text"])
-    out = bm25_search_from_index(spark, path, q, k=5, n_buckets=16)
+    out = bm25_search_from_index(spark, path, q, k=5)
     assert out.count() > 0
     # the postings scan must carry the term_bucket partition column join
     # (dynamic pruning via the broadcast bucket set); assert the scan is
     # partition-aware rather than full-index
     s = _explain_str(out)
     assert "term_bucket" in s
+
+
+def test_bm25_index_follows_a_rewritten_documents_table(spark, tmp_path, monkeypatch):
+    """The catalog's postings-index cache keys on the documents listing,
+    not the sf_dir string: a table rewritten under the same path gets a
+    fresh index (results follow the new rows) and the replaced index
+    directory is removed."""
+    from fireball_data_processing_spark import queries
+    from fireball_data_processing_spark.sources import tables
+
+    sf_dir = str(tmp_path)
+    path = f"{sf_dir}/documents.parquet"
+    spark.createDataFrame(
+        [(i, "spark window aggregation over a hash join") for i in range(1, 5)],
+        "doc_id bigint, text string",
+    ).write.mode("overwrite").parquet(path)
+    first = {r.doc_id for r in queries.q_bm25_search_indexed(spark, sf_dir).collect()}
+    assert first == {1, 2, 3, 4}
+    old_index = queries._BM25_INDEX_CACHE[sf_dir][1]
+
+    spark.createDataFrame(
+        [(i, "stream batch query with a shuffle partition") for i in range(10, 13)],
+        "doc_id bigint, text string",
+    ).write.mode("overwrite").parquet(path)
+    # load_table pins a path's listing per application (table paths are
+    # immutable): drop Spark's file-listing cache and the frame memo
+    spark.catalog.refreshByPath(path)
+    monkeypatch.setattr(tables, "_TABLE_MEMO", {})
+    second = queries.q_bm25_search_indexed(spark, sf_dir)
+    direct = queries.q_bm25_search(spark, sf_dir)
+    assert {r.doc_id for r in second.collect()} == {10, 11, 12}
+    assert sorted(map(tuple, second.collect())) == sorted(map(tuple, direct.collect()))
+    assert not os.path.exists(old_index)
+
+    new_index = queries._BM25_INDEX_CACHE[sf_dir][1]
+    queries._drop_bm25_indexes()
+    assert not os.path.exists(new_index)

@@ -115,8 +115,7 @@ def test_budget_fill_grouped_matches_literal_python(spark):
     got = {
         (r["grp"], r["id"], r["cum_weight"])
         for r in budget_fill(
-            df, "score", "w", "id", budget=budgets, group_col="grp",
-            n_buckets=4,
+            df, "score", "w", "id", budget=budgets, group_col="grp"
         ).collect()
     }
     # a: 1 (5), 2 (10) fit; 3 (15) over. b: 4 (8) fits; 5 (16) over.

@@ -20,7 +20,7 @@ pytestmark = pytest.mark.slow  # driver-budget split (r13): long
 # end-to-end runs excluded from the default suite; run with -m slow
 
 SCHEMA = "g bigint, o bigint, x int"
-ARGS = dict(p0=0.15, p1=0.25, alpha=0.05, beta=0.05)
+ARGS = dict(p0=0.15, p1=0.25)
 
 
 def _run_once(spark, src, out, ckpt):

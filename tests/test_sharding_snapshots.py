@@ -52,7 +52,7 @@ def test_write_shards_layout_and_order(spark, tmp_path):
         "payload", F.concat(F.lit("p"), F.col("k"))
     )
     path = str(tmp_path / "shards")
-    write_shards(df, F.col("k"), path, n_shards=4, salt="v1")
+    write_shards(df, F.col("k"), path, n_shards=4)
     # one directory per shard
     dirs = sorted(d for d in os.listdir(path) if d.startswith("shard="))
     assert dirs == [f"shard={i}" for i in range(4)]
@@ -63,7 +63,7 @@ def test_write_shards_layout_and_order(spark, tmp_path):
     expect = {
         r.k: r.s
         for r in df.select(
-            "k", shard_id(F.col("k"), 4, "v1").alias("s")
+            "k", shard_id(F.col("k"), 4).alias("s")
         ).collect()
     }
     for r in back.collect():
@@ -79,7 +79,7 @@ def test_write_shards_layout_and_order(spark, tmp_path):
                 continue
             t = pq.read_table(os.path.join(full, f)).to_pydict()
             keys = [
-                shard_key_py(k, "v1") for k in t["k"]
+                shard_key_py(k, "") for k in t["k"]
             ]
             assert keys == sorted(keys)
 

@@ -105,10 +105,8 @@ def test_bloom_no_false_negatives(spark):
     pre-join exact. Checked over a key space far larger than the bitmap
     could memorize exactly."""
     members = spark.range(5000).select((F.col("id") * 13 + 7).alias("k"))
-    bm = bloom_bitmap(members, "k", num_bits=1 << 16, num_hashes=5)
-    missed = members.filter(
-        ~bloom_might_contain(F.col("k"), bm, 1 << 16, 5)
-    ).count()
+    bm = bloom_bitmap(members, "k")
+    missed = members.filter(~bloom_might_contain(F.col("k"), bm)).count()
     assert missed == 0
 
 
@@ -117,9 +115,9 @@ def test_bloom_false_positive_rate_sane(spark):
     n=1000 members the theoretical fp rate is ~1e-5; allow two orders of
     magnitude slack to stay deterministic-robust."""
     members = spark.range(1000).select((F.col("id") * 3).alias("k"))
-    bm = bloom_bitmap(members, "k", num_bits=1 << 16, num_hashes=5)
+    bm = bloom_bitmap(members, "k")
     non = spark.range(1_000_000, 1_010_000).select(F.col("id").alias("k"))
-    fp = non.filter(bloom_might_contain(F.col("k"), bm, 1 << 16, 5)).count()
+    fp = non.filter(bloom_might_contain(F.col("k"), bm)).count()
     assert fp <= 10, fp
 
 

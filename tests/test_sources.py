@@ -93,7 +93,6 @@ def test_checksum_memoization_roundtrip(spark, corpus):
     res = df.groupBy("instance_id").count()
     sinks.write_results_csv(res, out, checksum=cs1)
     assert sinks.memoized(out, cs1)
-    assert not sinks.memoized(out, cs1, force_recompute=True)
     assert not sinks.memoized(out, "different")
 
     back = spark.read.option("header", True).csv(out)
@@ -103,12 +102,9 @@ def test_checksum_memoization_roundtrip(spark, corpus):
 def test_jsonl_gz_roundtrip(spark, corpus):
     df = load_event_stream(spark, chunk_files(corpus))
     out = os.path.join(tempfile.mkdtemp(), "events_out")
-    sinks.write_jsonl(
-        df.select("instance_id", "seq", "event_type", "content"), out,
-        gzip=True, single_file=True,
-    )
-    files = [f for f in os.listdir(out) if f.endswith(".json.gz")]
-    assert len(files) == 1  # S13 single-file merge
+    sinks.write_jsonl(df.select("instance_id", "seq", "event_type", "content"), out)
+    parts = [f for f in os.listdir(out) if f.startswith("part-")]
+    assert parts and all(f.endswith(".json.gz") for f in parts)
     back = spark.read.json(out)
     assert back.count() == 4
     assert set(back.columns) >= {"instance_id", "seq", "event_type"}
@@ -142,15 +138,17 @@ def test_fireball_dataset_api(spark, corpus, tmp_path):
     assert os.path.exists(os.path.join(out, "_checksum"))
 
 
-def test_stream_events_jsonl_chunks(spark, corpus, tmp_path):
+def test_stream_events_jsonl_chunks(spark, corpus, tmp_path, monkeypatch):
     # S12: the explorer /events/{id} generator — ordered JSONL, bounded
     # chunks, 404 (KeyError) for unknown instances
     import json
 
+    from fireball_data_processing_spark import dataset
     from fireball_data_processing_spark.dataset import FireballDataset
 
+    monkeypatch.setattr(dataset, "_CHUNK_ROWS", 2)
     ds = FireballDataset(spark, corpus, results_dir=str(tmp_path / "res"))
-    chunks = list(ds.stream_events("inst_a", chunk_size=2))
+    chunks = list(ds.stream_events("inst_a"))
     assert len(chunks) == 2  # 3 events -> chunk of 2 + chunk of 1
     events = [json.loads(l) for c in chunks for l in c.strip().splitlines()]
     assert [e["seq"] for e in events] == [1, 2, 3]
@@ -162,14 +160,16 @@ def test_stream_events_jsonl_chunks(spark, corpus, tmp_path):
         next(ds.stream_events("nope"))
 
 
-def test_stream_heuristics_csv(spark, corpus, tmp_path):
+def test_stream_heuristics_csv(spark, corpus, tmp_path, monkeypatch):
     import csv
     import io
 
+    from fireball_data_processing_spark import dataset
     from fireball_data_processing_spark.dataset import FireballDataset
 
+    monkeypatch.setattr(dataset, "_CHUNK_ROWS", 1)
     ds = FireballDataset(spark, corpus, results_dir=str(tmp_path / "res"))
-    body = "".join(ds.stream_heuristics_csv(chunk_size=1))
+    body = "".join(ds.stream_heuristics_csv())
     rows = list(csv.reader(io.StringIO(body)))
     header, data = rows[0], rows[1:]
     assert header[0] == "instance_id"
@@ -201,17 +201,12 @@ def test_embeddings_load_attaches_dim_metadata(spark, sf_dir):
 def test_load_table_memoized_per_application(spark, sf_dir):
     """Repeat loads of the same (app, path) return the SAME DataFrame —
     file listing + footer reads paid once per application, the
-    metastore-CatalogFileIndex shape. refresh=True rebuilds."""
+    metastore-CatalogFileIndex shape."""
     from fireball_data_processing_spark.sources.tables import load_table
 
     a = load_table(spark, sf_dir, "lineitem")
     b = load_table(spark, sf_dir, "lineitem")
     assert a is b
-    c = load_table(spark, sf_dir, "lineitem", refresh=True)
-    assert c is not b
-    assert c.schema == b.schema
-    # the refreshed frame replaces the memo entry
-    assert load_table(spark, sf_dir, "lineitem") is c
 
 
 # -- the corpus listing ---------------------------------------------------

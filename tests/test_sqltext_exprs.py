@@ -253,22 +253,6 @@ def test_spark_round_sql_matches_spark_round_on_half_ties(duck):
     assert plain_diverges > 0, "sweep hit no divergent case; weaken nothing"
 
 
-def test_spark_round_sql_rejects_decimal38_unsafe_dp():
-    """The helper routes through DECIMAL(38,18), so a dp anywhere near
-    the 18-digit scale would let the final round touch the pre-rounded
-    tail (the ADVICE r10 latent trap). The guard keeps dp well inside
-    the safe band; this pins both sides of it."""
-    import pytest
-
-    from fireball_data_processing_spark.queries import _spark_round_sql
-
-    for dp in (0, 6, 8, 12):
-        assert "ROUND" in _spark_round_sql("x", dp)
-    for dp in (-1, 13, 18, 30):
-        with pytest.raises(ValueError, match="DECIMAL"):
-            _spark_round_sql("x", dp)
-
-
 def test_bpe_oracle_iteration_ctes_stay_materialized():
     """Same DuckDB-inlining hazard as the BT oracle: each v{t} vocab
     CTE is referenced by BOTH the next step's pair count and its
@@ -298,7 +282,7 @@ def test_bpe_merge_oracle_replays_trainer_on_toy_corpus(duck):
     try:
         got = sorted(
             tuple(r)
-            for r in duck.execute(_bpe_merge_oracle(8, min_count=1)).fetchall()
+            for r in duck.execute(_bpe_merge_oracle(8)).fetchall()
         )
         wf = duck.execute(
             """SELECT word, COUNT(*)::BIGINT FROM (
@@ -388,8 +372,9 @@ def test_bpe_apply_oracle_property_random_corpora(duck):
     DuckDB train+apply unroll must equal train_bpe + apply_merges per
     doc. Tiny alphabet 'ab' makes (x, x) self-pair runs and rank
     collisions common; max word length 6 stays inside the n_apply=6
-    unroll; min_count=1 so every word trains (exhaustion before
-    n_merges exercises the empty-bp{t} pass-through)."""
+    unroll; words seen once are applied but not trained on (the
+    training floor of 2), and tiny corpora exhaust their pairs before
+    n_merges, exercising the empty-bp{t} pass-through."""
     import re
 
     import pandas as pd
@@ -401,7 +386,7 @@ def test_bpe_apply_oracle_property_random_corpora(duck):
     )
     from fireball_data_processing_spark.queries import _bpe_apply_oracle
 
-    sql = _bpe_apply_oracle(4, n_apply=6, min_count=1)
+    sql = _bpe_apply_oracle(4, n_apply=6)
 
     @settings(max_examples=15, deadline=None)
     @given(
@@ -431,7 +416,7 @@ def test_bpe_apply_oracle_property_random_corpora(duck):
         for t in texts:
             for w in re.findall(r"[a-z0-9]+", t.lower()):
                 counts[w] = counts.get(w, 0) + 1
-        merges = train_bpe(sorted(counts.items()), 4)
+        merges = train_bpe(sorted((w, n) for w, n in counts.items() if n >= 2), 4)
         for doc_id, t in enumerate(texts):
             n_bpe = sum(
                 len(apply_merges(w, merges))

@@ -1,6 +1,6 @@
 """Connector-seam source adapter: batch/stream parity through
 open_event_stream for a file source (event-time normalization applied)
-and for a message-bus payload envelope (Kinesis/Kafka shape)."""
+and the ingest capstone driven through the seam."""
 
 from __future__ import annotations
 
@@ -81,42 +81,6 @@ def test_open_event_stream_file_source_batch_parity(spark):
         shutil.rmtree(src, ignore_errors=True)
 
 
-def test_open_event_stream_payload_envelope(spark):
-    # Kinesis/Kafka shape: events ride an opaque payload column as JSON
-    # records inside a transport envelope. The text source stands in for
-    # the connector (one record per line in a `value` column, exactly
-    # Kafka's column name); open_event_stream decodes with the declared
-    # event schema and drops the envelope.
-    src = tempfile.mkdtemp(prefix="fb_envelope_")
-    try:
-        batch = load_table(spark, SMOKE, "events").limit(200)
-        event_schema = (
-            "event_id bigint, ts bigint, user_id bigint,"
-            " event_type string, value double, props string"
-        )
-        batch.coalesce(1).write.mode("overwrite").json(src)
-        stream = open_event_stream(
-            spark,
-            fmt="text",
-            schema=event_schema,
-            path=src,
-            payload="value",
-        )
-        assert stream.columns == [
-            "event_id", "ts", "user_id", "event_type", "value", "props",
-        ]
-        got = {
-            r["event_id"]: r.asDict()
-            for r in _run_to_memory(
-                spark, stream, "seam_envelope", mode="append"
-            ).collect()
-        }
-        want = {r["event_id"]: r.asDict() for r in batch.collect()}
-        _assert_rows_equal(got, want)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-
-
 import pytest
 
 pytestmark = pytest.mark.slow  # driver-budget split (r13): long
@@ -125,19 +89,15 @@ pytestmark = pytest.mark.slow  # driver-budget split (r13): long
 
 @pytest.mark.parametrize("gate", ["exact", "near"])
 def test_capstone_through_kinesis_shaped_seam(spark, tmp_path, gate):
-    """Judge r11 ask #8: drive the ingest CAPSTONE end-to-end through
-    the connector seam with a rate-limited Kinesis-SHAPED fake source —
-    documents arrive as JSON records inside an opaque payload column
-    (the text source stands in for the connector: one record per line
-    in a `value` column, Kinesis's `data` analog), rate-limited to one
-    file per micro-batch. The final table must be row-identical to the
-    direct file-stream run: the one-line swap to a real connector is
-    the open_event_stream call itself —
-    ``open_event_stream(spark, fmt="aws-kinesis", schema=DOC_SCHEMA,
-    payload="data", options={"streamName": ..., "region": ...},
-    ts_col=None)`` — nothing in the pipeline below it changes.
-    Parameterized over BOTH dedup gates: the seam is orthogonal to the
-    gate, and this pins it."""
+    """Drive the ingest CAPSTONE end-to-end through the connector seam
+    with a rate-limited record source — documents arrive as JSON
+    records, one file per micro-batch. The final table must be
+    row-identical to the direct file-stream run: the swap to a real
+    connector is the open_event_stream call itself
+    (``open_event_stream(spark, fmt=..., schema=DOC_SCHEMA,
+    options={"streamName": ..., "region": ...})``) — nothing in the
+    pipeline below it changes. Parameterized over BOTH dedup gates: the
+    seam is orthogonal to the gate, and this pins it."""
     from pyspark.sql import functions as F
 
     from fireball_data_processing_spark.operators.dedup import (
@@ -165,9 +125,7 @@ def test_capstone_through_kinesis_shaped_seam(spark, tmp_path, gate):
         ).localCheckpoint()
     doc_schema = "doc_id bigint, text string, source string, lang string"
 
-    # Kinesis-shaped staging: each slice as a JSON-lines file; the text
-    # reader presents each record as one opaque `value` row, exactly a
-    # payload-bearing bus record
+    # record-source staging: each slice as one JSON-lines file
     seam_staging = str(tmp_path / "seam_staging")
     for s in range(3):
         incoming.filter(
@@ -177,16 +135,14 @@ def test_capstone_through_kinesis_shaped_seam(spark, tmp_path, gate):
         ).json(f"{seam_staging}/slice={s}")
     stream = open_event_stream(
         spark,
-        fmt="text",
+        fmt="json",
         schema=doc_schema,
         path=seam_staging,
-        payload="value",
         options={"maxFilesPerTrigger": "1", "recursiveFileLookup": "true"},
-        ts_col=None,  # document firehose: no event-time column
     )
     run_ingest_pipeline_from_stream(
         stream, index, str(tmp_path / "seam_out"), str(tmp_path / "seam_ckpt"),
-        min_words=10, gate=gate,
+        gate=gate,
     )
     via_seam = sorted(
         (r["source"], r["lang"], r["n_docs"], r["n_tokens"])
@@ -197,11 +153,11 @@ def test_capstone_through_kinesis_shaped_seam(spark, tmp_path, gate):
 
     # reference run: the direct file micro-batch source
     direct_staging = str(tmp_path / "direct_staging")
-    stage_incoming_slices(incoming, direct_staging, n_slices=3)
+    stage_incoming_slices(incoming, direct_staging)
     run_ingest_pipeline(
         spark, direct_staging, incoming.schema, index,
         str(tmp_path / "direct_out"), str(tmp_path / "direct_ckpt"),
-        min_words=10, gate=gate,
+        gate=gate,
     )
     direct = sorted(
         (r["source"], r["lang"], r["n_docs"], r["n_tokens"])

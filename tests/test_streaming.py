@@ -32,9 +32,7 @@ def test_stream_heuristics_matches_batch(spark):
         batch_df = load_table(spark, SMOKE, "events")
         file_schema = raw_table_schema(spark, SMOKE, "events")
 
-        stream = stream_heuristics(
-            spark, src, file_schema, SYNTHETIC_STREAM, names=STREAM_SAFE
-        )
+        stream = stream_heuristics(spark, src, file_schema, SYNTHETIC_STREAM)
         q = (
             stream.writeStream.format("memory")
             .queryName("heur_stream")
@@ -147,10 +145,7 @@ def test_watermarked_window_append_emits_closed_windows(spark, tmp_path):
     out = str(tmp_path / "out")
 
     def run_once():
-        stream = windowed_counts_stream(
-            spark, src, schema, SYNTHETIC_STREAM,
-            window="1 hour", watermark="30 minutes",
-        )
+        stream = windowed_counts_stream(spark, src, schema, SYNTHETIC_STREAM)
         q = (
             stream.writeStream.format("parquet").option("path", out)
             .outputMode("append").option("checkpointLocation", ckpt)
@@ -199,161 +194,10 @@ def test_state_narration_fsm_matches_declarative_plan(spark):
     assert a == b
 
 
-def test_stream_new_documents_matches_batch_anti_join(spark, tmp_path):
-    # ingest-side dedup gate: stream(sf0.01 docs) anti-joined against the
-    # sf0.001 corpus hash index + in-stream first-occurrence dedup must
-    # yield exactly the batch answer (distinct new hashes)
-    from fireball_data_processing_spark.streaming.dedup_stream import (
-        content_hash,
-        corpus_hash_index,
-        stream_new_documents,
-    )
-
-    corpus = load_table(spark, SMOKE, "documents")
-    index = corpus_hash_index(corpus)
-
-    src = str(tmp_path / "docs_stream")
-    os.makedirs(src)
-    shutil.copy("/root/testdata/sf0.01/documents.parquet", src)
-    incoming = load_table(spark, "/root/testdata/sf0.01", "documents")
-
-    out = stream_new_documents(
-        spark, src, incoming.schema, index, ts_col=None, allow_unbounded_state=True
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("new_docs")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {
-        r["content_hash"]
-        for r in spark.sql("SELECT content_hash FROM new_docs").collect()
-    }
-    want = {
-        r["content_hash"]
-        for r in incoming.select(content_hash().alias("content_hash"))
-        .distinct()
-        .join(index, "content_hash", "left_anti")
-        .collect()
-    }
-    assert len(spark.sql("SELECT * FROM new_docs").collect()) == len(got)  # one row per hash
-    assert got == want
-    assert len(want) > 0
-
-
-def test_stream_new_documents_watermark_bounded(spark, tmp_path):
-    # the watermark path: a ts column bounds dedup state; duplicate content
-    # inside the window is dropped, and rows survive the anti join
-    import pyspark.sql.functions as F
-
-    from fireball_data_processing_spark.streaming.dedup_stream import (
-        corpus_hash_index,
-        stream_new_documents,
-    )
-
-    rows = [
-        (1, "alpha beta gamma", "2026-01-01 10:00:00"),
-        (2, "alpha beta gamma", "2026-01-01 10:01:00"),  # in-stream dup
-        (3, "delta epsilon zeta", "2026-01-01 10:02:00"),
-        (4, "known corpus text", "2026-01-01 10:03:00"),  # already indexed
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string, ts string") \
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    src = str(tmp_path / "wm_stream")
-    df.write.parquet(src)
-
-    corpus = spark.createDataFrame([(99, "known corpus text")], "doc_id bigint, text string")
-    out = stream_new_documents(
-        spark, src, df.schema, corpus_hash_index(corpus),
-        ts_col="ts", watermark="5 minutes",
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("wm_docs")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(r["doc_id"] for r in spark.sql("SELECT doc_id FROM wm_docs").collect())
-    # exactly one of the duplicate pair survives (which one is arrival
-    # order within the micro-batch), the indexed doc is gone, doc 3 stays
-    assert len(got) == 2 and got[1] == 3 and got[0] in (1, 2)
-
-
-def test_dedup_gate_exactly_once_across_restart(spark, tmp_path):
-    # the state store persists across restarts via the checkpoint: a
-    # duplicate arriving in a LATER run of the query is still dropped, and
-    # reprocessing does not double-emit earlier output
-    import pyspark.sql.functions as F
-
-    from fireball_data_processing_spark.streaming.dedup_stream import (
-        corpus_hash_index,
-        stream_new_documents,
-    )
-
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    schema = "doc_id bigint, text string"
-    corpus = spark.createDataFrame([], schema)
-    index = corpus_hash_index(corpus)
-
-    def run_once():
-        out = stream_new_documents(spark, src, schema, index, ts_col=None, allow_unbounded_state=True)
-        q = (
-            out.select("doc_id", "text", "content_hash")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma delta")], schema
-    ).write.mode("append").parquet(src)
-    run_once()
-
-    spark.createDataFrame(
-        [(3, "alpha beta"), (4, "epsilon zeta")], schema
-    ).write.mode("append").parquet(src)
-    run_once()
-
-    got = sorted(r["doc_id"] for r in spark.read.parquet(sink).collect())
-    # doc 3 duplicates doc 1's content across the restart boundary: dropped;
-    # docs 1/2 are not re-emitted by the second run
-    assert got == [1, 2, 4]
-
-
-def test_stream_new_documents_refuses_unbounded_state_by_default(spark, tmp_path):
-    import pytest as _pytest
-
-    from fireball_data_processing_spark.streaming.dedup_stream import (
-        corpus_hash_index,
-        stream_new_documents,
-    )
-
-    corpus = spark.createDataFrame([], "doc_id bigint, text string")
-    with _pytest.raises(ValueError, match="unbounded"):
-        stream_new_documents(
-            spark, str(tmp_path), "doc_id bigint, text string",
-            corpus_hash_index(corpus), ts_col=None,
-        )
-
-
-def test_stream_near_new_documents_matches_batch_lsh(spark, tmp_path):
-    # streaming NEAR-dup gate parity: replaying sf0.01 docs against the
-    # sf0.001 corpus band index must keep exactly the docs that
-    # lsh_candidate_pairs finds NO cross partner for (same bands), and the
-    # stateless batch core must agree row-for-row
+def test_near_new_documents_matches_batch_lsh(spark):
+    # NEAR-dup gate parity: gating sf0.01 docs against the sf0.001 corpus
+    # band index must keep exactly the docs that lsh_candidate_pairs
+    # finds NO cross partner for (same bands)
     import pyspark.sql.functions as F
 
     from fireball_data_processing_spark.operators.dedup import (
@@ -364,53 +208,31 @@ def test_stream_near_new_documents_matches_batch_lsh(spark, tmp_path):
         content_hash,
         corpus_band_index,
         near_new_documents,
-        stream_near_new_documents,
     )
 
     corpus = load_table(spark, SMOKE, "documents")
     idx = corpus_band_index(minhash_signature(corpus), num_hashes=8, band_size=2)
-
-    src = str(tmp_path / "neardup_stream")
-    os.makedirs(src)
-    shutil.copy("/root/testdata/sf0.01/documents.parquet", src)
     incoming = load_table(spark, "/root/testdata/sf0.01", "documents")
-
-    out = stream_near_new_documents(
-        spark, src, incoming.schema, idx, ts_col=None, allow_unbounded_state=True
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("near_new")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = {
-        r["content_hash"]
-        for r in spark.sql("SELECT content_hash FROM near_new").collect()
-    }
-
-    # batch core on the same frame (no in-stream dedup -> distinct hashes)
-    batch = near_new_documents(incoming, idx)
-    want_batch = {
         r["h"]
-        for r in batch.select(content_hash().alias("h")).distinct().collect()
+        for r in near_new_documents(incoming, idx)
+        .select(content_hash().alias("h"))
+        .distinct()
+        .collect()
     }
-    assert got == want_batch
 
     # independent expectation via the batch LSH pipeline: union corpus +
     # incoming with tagged ids; incoming docs with any cross candidate pair
     # are near-dups, the rest are near-new
     tagged = corpus.select(
-        F.concat(F.lit("c"), F.col("doc_id")).alias("uid"), "text"
+        F.concat(F.lit("c"), F.col("doc_id")).alias("doc_id"), "text"
     ).unionByName(
         incoming.select(
-            F.concat(F.lit("i"), F.col("doc_id")).alias("uid"), "text"
+            F.concat(F.lit("i"), F.col("doc_id")).alias("doc_id"), "text"
         )
     )
-    sigs = minhash_signature(tagged, id_col="uid")
-    pairs = lsh_candidate_pairs(sigs, id_col="uid", num_hashes=8, band_size=2)
+    sigs = minhash_signature(tagged)
+    pairs = lsh_candidate_pairs(sigs, num_hashes=8, band_size=2)
     cross_dup_ids = {
         uid
         for r in pairs.collect()
@@ -431,66 +253,6 @@ def test_stream_near_new_documents_matches_batch_lsh(spark, tmp_path):
     # the gate actually gates: some docs pass, some are stopped
     n_in = incoming.select(content_hash()).distinct().count()
     assert 0 < len(got) < n_in
-
-
-def test_near_dup_gate_exactly_once_across_restart(spark, tmp_path):
-    # near-dup gate twin of the exact-gate restart test: an exact duplicate
-    # arriving in a later run is dropped by the checkpointed state store; a
-    # near-duplicate of an INDEXED doc is stopped by the band lookup; a
-    # fresh doc passes; earlier output is not re-emitted
-    from fireball_data_processing_spark.operators.dedup import minhash_signature
-    from fireball_data_processing_spark.streaming.dedup_stream import (
-        corpus_band_index,
-        stream_near_new_documents,
-    )
-
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    schema = "doc_id bigint, text string"
-    corpus = spark.createDataFrame(
-        [(100, "the quick brown fox jumps over the lazy dog")], schema
-    )
-    index = corpus_band_index(minhash_signature(corpus))
-
-    def run_once():
-        out = stream_near_new_documents(
-            spark, src, schema, index, ts_col=None, allow_unbounded_state=True
-        )
-        q = (
-            out.select("doc_id", "text", "content_hash")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    spark.createDataFrame(
-        [
-            (1, "completely different text about spark engines here"),
-            # near-dup of the indexed corpus doc (long shared prefix ->
-            # shares every band): stopped by the index lookup
-            (2, "the quick brown fox jumps over the lazy dog today"),
-        ],
-        schema,
-    ).write.mode("append").parquet(src)
-    run_once()
-
-    spark.createDataFrame(
-        [
-            (3, "completely different text about spark engines here"),  # exact dup of 1
-            (4, "some wholly novel document body with original words"),
-        ],
-        schema,
-    ).write.mode("append").parquet(src)
-    run_once()
-
-    got = sorted(r["doc_id"] for r in spark.read.parquet(sink).collect())
-    assert got == [1, 4]
 
 
 def test_interval_join_stream_matches_batch(spark, tmp_path):
@@ -514,10 +276,6 @@ def test_interval_join_stream_matches_batch(spark, tmp_path):
         src,
         raw_table_schema(spark, SMOKE, "events"),
         SYNTHETIC_STREAM,
-        anchor_type="purchase",
-        match_type="view",
-        max_gap="60 minutes",
-        watermark="30 minutes",
     )
     q = (
         out.writeStream.format("memory")
@@ -532,7 +290,7 @@ def test_interval_join_stream_matches_batch(spark, tmp_path):
         for r in spark.sql("SELECT * FROM interval_join").collect()
     }
 
-    gap_us = 60 * 60 * 1_000_000
+    gap_us = 10 * 60 * 1_000_000
     p = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("anchor_id"),
         "user_id",
@@ -587,10 +345,7 @@ def test_interval_join_stream_drops_late_matches(spark, tmp_path):
     sink = str(tmp_path / "sink")
 
     def run_once():
-        out = interval_join_stream(
-            spark, src, schema, SYNTHETIC_STREAM,
-            max_gap="10 minutes", watermark="30 minutes",
-        )
+        out = interval_join_stream(spark, src, schema, SYNTHETIC_STREAM)
         q = (
             out.writeStream.format("parquet")
             .option("path", sink)
@@ -653,7 +408,7 @@ def test_stream_scrub_segments_matches_batch(spark, tmp_path):
     out_dir = str(tmp_path / "scrub_out")
     q = stream_scrub_segments(
         spark, src, incoming.schema, index, out_dir,
-        str(tmp_path / "scrub_ckpt"), seg_words=8,
+        str(tmp_path / "scrub_ckpt"),
     )
     q.awaitTermination(120)
 
@@ -698,7 +453,7 @@ def test_stream_scrub_replay_is_idempotent(spark, tmp_path):
     for attempt in range(2):
         q = stream_scrub_segments(
             spark, src, incoming.schema, index, out_dir,
-            str(tmp_path / f"replay_ckpt{attempt}"), seg_words=8,
+            str(tmp_path / f"replay_ckpt{attempt}"),
         )
         q.awaitTermination(120)
     assert spark.read.parquet(out_dir).count() == incoming.count()
@@ -718,9 +473,6 @@ def test_stream_quality_gate_matches_batch(spark, tmp_path):
 
     corpus = load_table(spark, SMOKE, "documents")
     lm = corpus_lm_index(corpus)
-    # relaxed gopher bounds so the synthetic corpus has both admits and
-    # rejects (default min_words=50 rejects nearly everything at sf0.001)
-    gk = dict(min_words=3, min_stop_hits=0)
 
     src = str(tmp_path / "qg_src")
     os.makedirs(src)
@@ -731,7 +483,6 @@ def test_stream_quality_gate_matches_batch(spark, tmp_path):
     q = stream_quality_gate(
         spark, src, incoming.schema, lm, out_dir,
         str(tmp_path / "qg_ckpt"), max_avg_neg_log2=4.95,
-        gopher_kwargs=gk, admit_only=False,
     )
     q.awaitTermination(120)
 
@@ -741,16 +492,15 @@ def test_stream_quality_gate_matches_batch(spark, tmp_path):
     want = sorted(
         map(
             tuple,
-            quality_gate(incoming, lm, 4.95, gopher_kwargs=gk)
+            quality_gate(incoming, lm, 4.95)
+            .filter(F.col("passes_quality"))
             .select(*cols)
             .collect(),
         )
     )
     assert got == want
-    assert len(got) == incoming.count()
     # the gate discriminates: some admitted, some rejected
-    admits = sum(1 for r in got if r[5])
-    assert 0 < admits < len(got), admits
+    assert 0 < len(got) < incoming.count(), len(got)
 
 
 def test_stream_quality_gate_restart_and_growth(spark, tmp_path):
@@ -768,7 +518,6 @@ def test_stream_quality_gate_restart_and_growth(spark, tmp_path):
 
     corpus = load_table(spark, SMOKE, "documents")
     lm = corpus_lm_index(corpus)
-    gk = dict(min_words=3, min_stop_hits=0)
     incoming = load_table(spark, SMOKE, "documents")
     half = incoming.filter(F.col("doc_id") % 2 == 0)
     other = incoming.filter(F.col("doc_id") % 2 == 1)
@@ -788,17 +537,15 @@ def test_stream_quality_gate_restart_and_growth(spark, tmp_path):
 
     _drop_file(half, "a.parquet")
     q = stream_quality_gate(
-        spark, src, incoming.schema, lm, out_dir, ckpt,
-        max_avg_neg_log2=4.95, gopher_kwargs=gk, admit_only=False,
+        spark, src, incoming.schema, lm, out_dir, ckpt, max_avg_neg_log2=4.95
     )
     q.awaitTermination(120)
     n_first = spark.read.parquet(out_dir).count()
-    assert n_first == half.count()
+    assert n_first == quality_gate(half, lm, 4.95).filter("passes_quality").count()
 
     _drop_file(other, "b.parquet")
     q2 = stream_quality_gate(
-        spark, src, incoming.schema, lm, out_dir, ckpt,
-        max_avg_neg_log2=4.95, gopher_kwargs=gk, admit_only=False,
+        spark, src, incoming.schema, lm, out_dir, ckpt, max_avg_neg_log2=4.95
     )
     q2.awaitTermination(120)
 
@@ -808,7 +555,8 @@ def test_stream_quality_gate_restart_and_growth(spark, tmp_path):
     want = sorted(
         map(
             tuple,
-            quality_gate(incoming, lm, 4.95, gopher_kwargs=gk)
+            quality_gate(incoming, lm, 4.95)
+            .filter(F.col("passes_quality"))
             .select(*cols)
             .collect(),
         )
@@ -864,7 +612,7 @@ def test_stream_weighted_reservoir_matches_batch(spark, tmp_path):
 
     stream = stream_weighted_reservoir(
         spark, src, schema, bucket_col="src_name", id_col="doc_id",
-        weight_col="w", n=2, salt="rs",
+        weight_col="w", n=2,
     )
     q = (
         stream.writeStream.format("memory").queryName("wres")
@@ -882,7 +630,7 @@ def test_stream_weighted_reservoir_matches_batch(spark, tmp_path):
         (r["src_name"], r["doc_id"], r["es_key"])
         for r in weighted_sample_topn(
             batch, F.col("src_name"), F.col("w"), n=2,
-            key=F.col("doc_id"), salt="rs",
+            key=F.col("doc_id"),
         ).collect()
     }
     assert got == want
@@ -922,7 +670,7 @@ def test_stream_weighted_reservoir_restart_continues_state(spark, tmp_path):
     def run_once():
         stream = stream_weighted_reservoir(
             spark, src, schema, bucket_col="src_name", id_col="doc_id",
-            weight_col="w", n=3, salt="rr",
+            weight_col="w", n=3,
         )
         q = (
             stream.writeStream.format("parquet").option("path", out)
@@ -945,7 +693,7 @@ def test_stream_weighted_reservoir_restart_continues_state(spark, tmp_path):
         (r["doc_id"], r["es_key"])
         for r in weighted_sample_topn(
             batch, F.col("src_name"), F.col("w"), n=3,
-            key=F.col("doc_id"), salt="rr",
+            key=F.col("doc_id"),
         ).collect()
     }
     assert got == want

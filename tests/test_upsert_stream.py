@@ -9,6 +9,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from fireball_data_processing_spark.streaming import upsert_stream
 from fireball_data_processing_spark.streaming.upsert_stream import (
     last_write_wins,
     upsert_merge,
@@ -19,6 +20,12 @@ pytestmark = pytest.mark.slow  # driver-budget split (r13): long
 # end-to-end runs excluded from the default suite; run with -m slow
 
 SCHEMA = "doc_id bigint, text string, version bigint"
+
+
+@pytest.fixture(autouse=True)
+def _four_buckets(monkeypatch):
+    # a 4-bucket sink keeps the per-epoch bucket rewrites small
+    monkeypatch.setattr(upsert_stream, "_N_BUCKETS", 4)
 
 
 def test_last_write_wins_picks_max_version(spark):
@@ -45,9 +52,7 @@ def test_upsert_merge_semantics(spark):
 
 def _run_sink(spark, src, out, ckpt):
     stream = spark.readStream.schema(SCHEMA).format("parquet").load(src)
-    q = upsert_parquet_sink(
-        stream, out, ckpt, key="doc_id", order_col="version", n_buckets=4
-    )
+    q = upsert_parquet_sink(stream, out, ckpt)
     q.awaitTermination(120)
 
 

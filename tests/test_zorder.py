@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from fireball_data_processing_spark.operators import zorder
 from fireball_data_processing_spark.operators.zorder import (
     interleave_bits,
     z_value,
@@ -41,18 +42,19 @@ def test_interleave_matches_python(spark):
 
 def test_z_value_constant_column_is_safe(spark):
     df = spark.createDataFrame([(1, 7), (2, 7), (3, 7)], ["a", "b"])
-    rows = z_value(df, ["a", "b"], bits=4).collect()
+    rows = z_value(df, ["a", "b"]).collect()
     assert all(r["__z"] >= 0 for r in rows)
     # constant column contributes zero bits: order follows column a
     zs = {r.a: r["__z"] for r in rows}
     assert zs[1] < zs[2] < zs[3]
 
 
-def test_zorder_write_narrows_per_file_ranges(spark, tmp_path):
+def test_zorder_write_narrows_per_file_ranges(spark, tmp_path, monkeypatch):
     ev = load_table(spark, SMOKE, "events").select("user_id", "event_id")
     out = str(tmp_path / "z")
     n_files = 8
-    zorder_write(ev, out, ["user_id", "event_id"], n_files=n_files)
+    monkeypatch.setattr(zorder, "_N_FILES", n_files)
+    zorder_write(ev, out, ["user_id", "event_id"])
     back = spark.read.parquet(out)
     assert back.count() == ev.count()
     per_file = (
