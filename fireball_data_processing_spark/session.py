@@ -30,6 +30,9 @@ _DEFAULT_CPUS = os.environ.get(
 # real byte counts, so anything above ~1 EiB is treated as unknown.
 _UNKNOWN_SIZE = 1 << 60
 
+# the variables a process takes its character encoding from
+_LOCALE_VARS = ("LC_ALL", "LC_CTYPE", "LANG")
+
 
 def get_spark(
     app_name: str = "fireball-spark",
@@ -68,7 +71,17 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    # The JVM encodes file names by its locale (sun.jnu.encoding): under
+    # none it is ASCII, and Spark then cannot open a file whose path is not
+    # ASCII (a tolerant scan reads no rows from it). A locale the
+    # environment sets is kept.
+    if any(os.environ.get(k) for k in _LOCALE_VARS):
+        return builder.getOrCreate()
+    os.environ["LC_ALL"] = "C.UTF-8"
+    try:
+        return builder.getOrCreate()
+    finally:
+        del os.environ["LC_ALL"]
 
 
 def conf_bytes(spark: SparkSession, key: str, default: str) -> int:

@@ -6,7 +6,8 @@ line order (reference ``dataset/utils.py:16-41,59-61``). ``chunk_files``
 lists ``root/*/*.jsonl.gz`` on the driver (contract: ``sources/checksum.py``)
 and ``load_event_stream`` reads exactly those files with one
 ``spark.read.json``, raising Spark's parallel-listing threshold for that
-read only, so Spark does not list them again in a job. It adds:
+read only (``listed_read``), so Spark does not list them again in a job.
+It adds:
 
 - ``instance_id``: the parent directory name, recovered from
   ``input_file_name()`` and percent-decoded, so it equals the listed
@@ -32,6 +33,8 @@ process must stream the whole instance.
 from __future__ import annotations
 
 import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,22 +80,29 @@ def with_instance_and_seq(df: DataFrame) -> DataFrame:
     return df.withColumn("seq", F.row_number().over(w)).drop("_file", "_mid")
 
 
-def load_event_stream(spark: SparkSession, files: list[File]) -> DataFrame:
-    """Read listed chunk files (``chunk_files``) as typed events (S1+S4+S5).
+@contextmanager
+def listed_read(spark: SparkSession, n_paths: int) -> Iterator[None]:
+    """Scope for building a read of ``n_paths`` explicit, already-listed paths.
 
     Spark would list more than ``parallelPartitionDiscovery.threshold`` (32)
-    paths again in a parallel job, so this read alone raises it: partitioned
+    paths again in a parallel job, so the read alone raises it: partitioned
     tables elsewhere still want the parallel listing at scale.
     """
     key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    # S1 bad-gzip tolerance, scoped to this scan rather than session-wide.
-    reader = spark.read.schema(EVENT_SCHEMA).option("ignoreCorruptFiles", "true")
     # the session conf is shared: concurrent reads must not interleave
     with _THRESHOLD_LOCK:
         prev = spark.conf.get(key)
-        spark.conf.set(key, str(max(len(files), int(prev))))
+        spark.conf.set(key, str(max(n_paths, int(prev))))
         try:
-            df = reader.json([path for path, _, _ in files])
+            yield
         finally:
             spark.conf.set(key, prev)
+
+
+def load_event_stream(spark: SparkSession, files: list[File]) -> DataFrame:
+    """Read listed chunk files (``chunk_files``) as typed events (S1+S4+S5)."""
+    # S1 bad-gzip tolerance, scoped to this scan rather than session-wide.
+    reader = spark.read.schema(EVENT_SCHEMA).option("ignoreCorruptFiles", "true")
+    with listed_read(spark, len(files)):
+        df = reader.json([path for path, _, _ in files])
     return with_instance_and_seq(df)

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType, TimestampType
 
+from fireball_data_processing_spark.sources.checksum import dataset_checksum, list_files
+
 TABLES = (
     "region",
     "nation",
@@ -32,25 +34,26 @@ TABLES = (
     "embeddings",
 )
 
-# Embedding dimensionality per resolved table path — the similarity /
+# Embedding dimensionality per table listing — the similarity /
 # clustering operators read column metadata ``{"dim": N}`` before falling
 # back to an eager one-row peek (operators/similarity.py ``_infer_dim``),
 # so attaching it at load time turns a per-OPERATOR driver job into one
-# per-TABLE peek memoized for the process lifetime (the checksum-
-# memoization idiom, sources/checksum.py). A producer writing real tables
-# would persist this in the table metadata; the memo is the local stand-in.
+# per-TABLE peek memoized for the process lifetime. A producer writing
+# real tables would persist this in the table metadata; the memo is the
+# local stand-in.
 _DIM_MEMO: dict[str, int] = {}
 
-# Loaded-table memo keyed by (Spark application id, resolved path): building
-# a parquet DataFrame lists files and reads footers driver-side (~0.1 s per
-# table locally; much worse against object storage with 10k-file tables), and
-# every catalog query re-paid it per load. A metastore-backed production
-# table amortizes this in the shared CatalogFileIndex; the memo is the
-# path-based equivalent. The file LISTING is therefore pinned at first load
-# per application — correct for immutable table paths (this corpus); the
-# maintenance operators that rewrite their own outputs use raw
-# ``spark.read`` on their mutable paths and are unaffected.
-_TABLE_MEMO: dict[tuple[str, str], DataFrame] = {}
+# Loaded-table memo: (Spark application id, resolved path) -> (listing
+# key, frame). Building a parquet DataFrame lists files and reads footers
+# driver-side (~0.1 s per table locally; much worse against object storage
+# with 10k-file tables), and every catalog query re-paid it per load. A
+# metastore-backed production table amortizes this in the shared
+# CatalogFileIndex; the memo is the path-based equivalent. The listing key
+# is the table's file-level checksum (path + length + mtime,
+# ``sources/checksum.py``; one driver-side listing, no data read), so a
+# table rewritten under the same path is loaded again, not served from the
+# old file listing.
+_TABLE_MEMO: dict[tuple[str, str], tuple[str, DataFrame]] = {}
 
 
 def normalize_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -100,23 +103,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     key = (spark.sparkContext.applicationId, path)
+    listing = dataset_checksum(list_files(sf_dir, f"{name}.parquet"))
     hit = _TABLE_MEMO.get(key)
-    if hit is not None:
-        return hit
+    if hit is not None and hit[0] == listing:
+        return hit[1]
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
     if name == "events":
         df = normalize_event_time(df, "ts")
     if name == "embeddings" and "embedding" in df.columns:
-        dim = _DIM_MEMO.get(path)
+        dim = _DIM_MEMO.get(listing)
         if dim is None:
             row = df.select(F.size("embedding").alias("__d")).first()
             if row is not None and row["__d"] is not None and row["__d"] > 0:
-                dim = _DIM_MEMO[path] = int(row["__d"])
+                dim = _DIM_MEMO[listing] = int(row["__d"])
         if dim is not None:
             df = df.withMetadata("embedding", {"dim": dim})
-    _TABLE_MEMO[key] = df
+    _TABLE_MEMO[key] = (listing, df)
     return df
 
 

@@ -76,7 +76,7 @@ def test_word_frequencies_bounds(spark):
     assert sorted(top) == [("aa", 3), ("dd", 4)]
 
 
-def test_bpe_cache_keys_on_corpus_identity_not_path(spark, tmp_path, monkeypatch):
+def test_bpe_cache_keys_on_corpus_identity_not_path(spark, tmp_path):
     """The trained-merge cache must key on the corpus CONTENT
     (file-listing checksum), not the sf_dir string — a path-keyed cache
     serves stale merges when the table under a fixed path is rewritten
@@ -100,15 +100,10 @@ def test_bpe_cache_keys_on_corpus_identity_not_path(spark, tmp_path, monkeypatch
         "doc_id bigint, text string",
     )
     docs_b.write.mode("overwrite").parquet(f"{sf_dir}/documents.parquet")
-    # load_table pins a path's listing per application (table paths are
-    # immutable), so drop Spark's shared file-listing cache and start
-    # from an empty frame memo. The point under test is the MERGE cache —
-    # before the fix it kept serving docs_a's merges even after the table
-    # was reloaded, because its key was the unchanged sf_dir string.
-    from fireball_data_processing_spark.sources import tables
-
-    spark.catalog.refreshByPath(f"{sf_dir}/documents.parquet")
-    monkeypatch.setattr(tables, "_TABLE_MEMO", {})
+    # load_table sees the rewrite by the table's listing. The point under
+    # test is the MERGE cache — before the fix it kept serving docs_a's
+    # merges even after the table was reloaded, because its key was the
+    # unchanged sf_dir string.
     second = [
         (r.left_sym, r.right_sym)
         for r in q_bpe_merge_table(spark, sf_dir).collect()

@@ -194,13 +194,12 @@ def test_index_search_prunes_term_buckets(spark, tmp_path, monkeypatch):
     assert "term_bucket" in s
 
 
-def test_bm25_index_follows_a_rewritten_documents_table(spark, tmp_path, monkeypatch):
+def test_bm25_index_follows_a_rewritten_documents_table(spark, tmp_path):
     """The catalog's postings-index cache keys on the documents listing,
     not the sf_dir string: a table rewritten under the same path gets a
     fresh index (results follow the new rows) and the replaced index
     directory is removed."""
     from fireball_data_processing_spark import queries
-    from fireball_data_processing_spark.sources import tables
 
     sf_dir = str(tmp_path)
     path = f"{sf_dir}/documents.parquet"
@@ -216,10 +215,6 @@ def test_bm25_index_follows_a_rewritten_documents_table(spark, tmp_path, monkeyp
         [(i, "stream batch query with a shuffle partition") for i in range(10, 13)],
         "doc_id bigint, text string",
     ).write.mode("overwrite").parquet(path)
-    # load_table pins a path's listing per application (table paths are
-    # immutable): drop Spark's file-listing cache and the frame memo
-    spark.catalog.refreshByPath(path)
-    monkeypatch.setattr(tables, "_TABLE_MEMO", {})
     second = queries.q_bm25_search_indexed(spark, sf_dir)
     direct = queries.q_bm25_search(spark, sf_dir)
     assert {r.doc_id for r in second.collect()} == {10, 11, 12}

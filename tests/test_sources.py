@@ -110,7 +110,7 @@ def test_jsonl_gz_roundtrip(spark, corpus):
     assert set(back.columns) >= {"instance_id", "seq", "event_type"}
 
 
-def test_fireball_dataset_api(spark, corpus, tmp_path):
+def test_fireball_dataset_api(spark, corpus, tmp_path, monkeypatch):
     from fireball_data_processing_spark.dataset import FireballDataset
 
     ds = FireballDataset(spark, corpus, results_dir=str(tmp_path / "res"))
@@ -119,12 +119,22 @@ def test_fireball_dataset_api(spark, corpus, tmp_path):
 
     m1 = ds.heuristics()
     assert m1.count() == 2
-    # second call is served from the memoized CSV (checksum unchanged),
-    # with a fresh compute's column types, taken without a Spark job (a
-    # file read makes every column nullable, so dtypes, not schema)
+    # a memo hit (here and in a new dataset over the unchanged corpus)
+    # reads the memo's typed rows: no heuristics_matrix call, no Spark
+    # job, a fresh compute's column types (a file read makes every column
+    # nullable, so dtypes, not schema)
+    from fireball_data_processing_spark import dataset
+    from fireball_data_processing_spark.plans.heuristics import heuristics_matrix
+
+    fresh = heuristics_matrix(load_event_stream(spark, chunk_files(corpus)), ds.stream)
+    calls = []
+    monkeypatch.setattr(dataset, "heuristics_matrix", lambda *a: calls.append(a))
     assert _jobs_started(spark, ds.heuristics) == 0
-    m2 = ds.heuristics()
-    assert m2.dtypes == m1.dtypes
+    again = FireballDataset(spark, corpus, results_dir=str(tmp_path / "res"))
+    assert _jobs_started(spark, again.heuristics) == 0
+    assert calls == []
+    m2 = again.heuristics()
+    assert m2.dtypes == m1.dtypes == fresh.dtypes
     assert m2.count() == 2
     assert {r["instance_id"] for r in m2.collect()} == {"inst_a", "inst_b"}
 
@@ -310,8 +320,9 @@ def _jobs_started(spark, fn):
 
 
 def test_listing_runs_no_spark_job(spark, tmp_path):
-    """The checksum, the instance ids, the 404 check and building the scan
-    start no Spark job, on more files than the parallel-listing threshold."""
+    """The checksum, the instance ids, the 404 check, building the scan and
+    reading an up-to-date snapshot start no Spark job, on more files than
+    the parallel-listing threshold."""
     from fireball_data_processing_spark.dataset import FireballDataset
 
     root = str(_wide_corpus(tmp_path / "corpus"))
@@ -325,10 +336,13 @@ def test_listing_runs_no_spark_job(spark, tmp_path):
             ds.stream_events("nope")  # eager: raises before the first chunk
 
     assert _jobs_started(spark, missing) == 0
-    assert _jobs_started(spark, ds.events_df) == 0
+    assert _jobs_started(spark, lambda: load_event_stream(spark, ds.files())) == 0
     assert _jobs_started(spark, lambda: ds.events("inst03")) == 0
-    # the counter does see jobs
-    assert _jobs_started(spark, lambda: ds.events_df().count()) >= 1
+    # the first events_df() decodes into the snapshot (the counter does see
+    # jobs); over an unchanged corpus the snapshot is read without one
+    assert _jobs_started(spark, ds.events_df) >= 1
+    again = FireballDataset(spark, root, results_dir=str(tmp_path / "res"))
+    assert _jobs_started(spark, again.events_df) == 0
 
 
 def test_listing_is_one_snapshot(spark, tmp_path):
@@ -419,3 +433,225 @@ def test_escaped_instance_names_keep_one_id(spark, tmp_path):
     for name in names:
         assert {r["instance_id"] for r in ds.events(name).collect()} == {name}
     assert sorted(r["instance_id"] for r in ds.heuristics().collect()) == names
+
+
+_NON_ASCII_CHILD = """
+import sys
+from fireball_data_processing_spark.dataset import FireballDataset
+from fireball_data_processing_spark.session import get_spark
+
+spark = get_spark(master="local[1]")
+jvm = spark.sparkContext._jvm
+ds = FireballDataset(spark, sys.argv[1], results_dir=sys.argv[2])
+print(jvm.java.lang.System.getProperty("sun.jnu.encoding"))
+print(ds.events("caf\u00e9").count())
+print(sorted((r["instance_id"], r["event_count"]) for r in ds.heuristics().collect()))
+print(ds.events_df().filter("instance_id = 'caf\u00e9'").count())
+spark.stop()
+"""
+
+
+def test_non_ascii_instance_is_read(tmp_path):
+    """A chunk under a non-ASCII directory name is decoded: its events,
+    its heuristics row and its snapshot rows all appear. The JVM encodes
+    file names by its locale; under none it used ASCII, and Spark could
+    not open that chunk (a lookup failed; a tolerant scan read no rows).
+    The session this suite shares may have been started under a locale,
+    so the check runs in a fresh process whose environment sets none (nor
+    lets Python set one)."""
+    import subprocess
+    import sys
+
+    root = tmp_path / "corpus"
+    _write_chunk(root / "café" / "chunk-000.jsonl.gz", [_msg("café", 1), _msg("café", 2)])
+    _write_chunk(root / "plain" / "chunk-000.jsonl.gz", [_msg("plain", 1)])
+    env = {k: v for k, v in os.environ.items() if k not in ("LC_ALL", "LC_CTYPE", "LANG")}
+    env["PYTHONCOERCECLOCALE"] = "0"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env["PYTHONPATH"] = os.pathsep.join([repo] + env.get("PYTHONPATH", "").split(os.pathsep))
+    out = subprocess.run(
+        [sys.executable, "-c", _NON_ASCII_CHILD, str(root), str(tmp_path / "res")],
+        env=env, capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.splitlines()[-4:] == [
+        "UTF-8", "2", "[('café', 2), ('plain', 1)]", "2"]
+
+
+# -- the event snapshot ----------------------------------------------------
+# A refresh decodes only new or changed instances. Each case below spies on
+# the decode and checks the snapshot against the whole-corpus path on the
+# same corpus.
+
+
+def _refresh(spark, monkeypatch, root, res):
+    """A new dataset's events, heuristics and ids, and the chunk files each
+    of its decodes read (decodes of no file left out)."""
+    from fireball_data_processing_spark import dataset
+    from fireball_data_processing_spark.dataset import FireballDataset
+
+    decoded = []
+
+    def spy(spark_, files):
+        if files:
+            decoded.append(sorted(p.rsplit("/", 2)[-2] + "/" + p.rsplit("/", 1)[-1]
+                                  for p, _, _ in files))
+        return load_event_stream(spark_, files)
+
+    monkeypatch.setattr(dataset, "load_event_stream", spy)
+    ds = FireballDataset(spark, str(root), results_dir=str(res))
+    events = ds.events_df().collect()
+    heur = ds.heuristics().collect()
+    monkeypatch.undo()
+    return decoded, events, heur, ds.instances()
+
+
+def _assert_matches_whole_corpus(spark, root, events, heur, ids):
+    """The snapshot's rows equal the whole-corpus decode and matrix."""
+    from fireball_data_processing_spark.dataset import FireballDataset
+    from fireball_data_processing_spark.plans.heuristics import heuristics_matrix
+
+    whole = load_event_stream(spark, chunk_files(str(root)))
+    stream = FireballDataset(spark, str(root)).stream
+
+    def rows(rs):
+        return sorted((tuple(r) for r in rs), key=repr)
+
+    assert rows(events) == rows(whole.collect())
+    assert rows(heur) == rows(heuristics_matrix(whole, stream).collect())
+    assert ids == sorted({p.rsplit("/", 2)[-2] for p, _, _ in chunk_files(str(root))})
+
+
+def _chunks(root, inst):
+    return sorted(f"{inst}/{n}" for n in os.listdir(root / inst))
+
+
+def _snapshot_case(spark, monkeypatch, tmp_path, mutate):
+    """Build the snapshot of inst00..inst03 (two chunks each), ``mutate``
+    the corpus, refresh; returns what the refresh decoded after checking
+    its rows."""
+    root, res = _wide_corpus(tmp_path / "corpus", n_instances=4, n_chunks=2), tmp_path / "res"
+    decoded, *_ = _refresh(spark, monkeypatch, root, res)
+    assert decoded == [sorted(f"inst{i:02d}/chunk-{c:03d}.jsonl.gz"
+                              for i in range(4) for c in range(2))]
+    mutate(root)
+    decoded, events, heur, ids = _refresh(spark, monkeypatch, root, res)
+    _assert_matches_whole_corpus(spark, root, events, heur, ids)
+    return decoded
+
+
+def test_snapshot_refresh_decodes_a_new_instance_only(spark, tmp_path, monkeypatch):
+    def add(root):
+        _write_chunk(root / "inst09" / "chunk-000.jsonl.gz", [_msg("inst09", 1)])
+
+    assert _snapshot_case(spark, monkeypatch, tmp_path, add) == [["inst09/chunk-000.jsonl.gz"]]
+
+
+def test_snapshot_refresh_redecodes_an_instance_with_a_late_chunk(spark, tmp_path, monkeypatch):
+    def late(root):
+        _write_chunk(root / "inst01" / "chunk-007.jsonl.gz", [_msg("inst01", 70)])
+
+    decoded = _snapshot_case(spark, monkeypatch, tmp_path, late)
+    assert decoded == [_chunks(tmp_path / "corpus", "inst01")]
+    assert len(decoded[0]) == 3
+
+
+def test_snapshot_refresh_drops_a_deleted_instance(spark, tmp_path, monkeypatch):
+    import shutil
+
+    decoded = _snapshot_case(spark, monkeypatch, tmp_path,
+                             lambda root: shutil.rmtree(root / "inst02"))
+    assert decoded == []
+
+
+def test_snapshot_refresh_follows_a_corrupt_then_replaced_chunk(spark, tmp_path, monkeypatch):
+    bad = "chunk-005.jsonl.gz"
+    decoded = _snapshot_case(spark, monkeypatch, tmp_path,
+                             lambda root: (root / "inst03" / bad).write_bytes(b"not gzip"))
+    root = tmp_path / "corpus"
+    assert decoded == [_chunks(root, "inst03")]
+    _write_chunk(root / "inst03" / bad, [_msg("inst03", 50), _msg("inst03", 51)])
+    decoded, events, heur, ids = _refresh(spark, monkeypatch, root, tmp_path / "res")
+    assert decoded == [_chunks(root, "inst03")]
+    _assert_matches_whole_corpus(spark, root, events, heur, ids)
+    assert sum(r["instance_id"] == "inst03" for r in events) == 8
+
+
+def test_snapshot_refresh_survives_a_crash_before_its_manifest(spark, tmp_path, monkeypatch):
+    """A refresh that dies after writing its data and before its manifest
+    leaves the previous snapshot in force: the next refresh decodes the
+    same instances again and removes the dead refresh's files."""
+    from fireball_data_processing_spark import dataset
+    from fireball_data_processing_spark.dataset import FireballDataset
+
+    def crash(root):
+        _write_chunk(root / "inst09" / "chunk-000.jsonl.gz", [_msg("inst09", 1)])
+
+        def die(snap, manifest):
+            raise RuntimeError("killed before the manifest")
+
+        with monkeypatch.context() as m:
+            m.setattr(dataset, "_write_manifest", die)
+            with pytest.raises(RuntimeError):
+                FireballDataset(spark, str(root), results_dir=str(tmp_path / "res")).events_df()
+        snap = tmp_path / "res" / "snapshot"
+        with open(snap / "manifest.json") as f:
+            assert "inst09" not in json.load(f)["instances"]
+
+    assert _snapshot_case(spark, monkeypatch, tmp_path, crash) == [["inst09/chunk-000.jsonl.gz"]]
+    snap = tmp_path / "res" / "snapshot"
+    with open(snap / "manifest.json") as f:
+        gens = set(json.load(f)["generations"])
+    assert {d for d in os.listdir(snap) if d.startswith("g")} == gens
+
+
+def test_snapshot_generations_stay_few(spark, tmp_path):
+    """One instance arriving per refresh: each new generation absorbs every
+    older one no larger than itself, so the count grows like a binary
+    counter's set bits, not with the refreshes."""
+    from fireball_data_processing_spark.dataset import FireballDataset
+
+    root, res = tmp_path / "corpus", tmp_path / "res"
+    for i in range(8):
+        _write_chunk(root / f"inst{i:02d}" / "chunk-000.jsonl.gz", [_msg(f"inst{i:02d}", 1)])
+        FireballDataset(spark, str(root), results_dir=str(res)).events_df()
+    with open(res / "snapshot" / "manifest.json") as f:
+        manifest = json.load(f)
+    assert len(manifest["generations"]) <= 4  # log2(8) + 1, not 8
+    assert sorted(manifest["instances"]) == [f"inst{i:02d}" for i in range(8)]
+    ds = FireballDataset(spark, str(root), results_dir=str(res))
+    assert ds.events_df().count() == 8 and ds.heuristics().count() == 8
+
+
+def test_snapshot_refreshes_of_one_results_dir_serialize(spark, tmp_path):
+    """Datasets on more threads than cores refresh one results_dir at
+    once: one refresh decodes, the others find the snapshot current, and
+    every thread reads the whole corpus."""
+    import sys
+    import threading
+
+    from fireball_data_processing_spark.dataset import FireballDataset
+
+    root = _wide_corpus(tmp_path / "corpus", n_instances=3, n_chunks=2)
+    counts, errors = [], []
+
+    def work():
+        try:
+            ds = FireballDataset(spark, str(root), results_dir=str(tmp_path / "res"))
+            counts.append(ds.events_df().count())
+        except Exception as e:  # noqa: BLE001 - reported by the assertion below
+            errors.append(e)
+
+    threads = [threading.Thread(target=work) for _ in range(len(os.sched_getaffinity(0)) + 2)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=240)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and counts == [18] * len(threads)
+    with open(tmp_path / "res" / "snapshot" / "manifest.json") as f:
+        assert len(json.load(f)["generations"]) == 1
