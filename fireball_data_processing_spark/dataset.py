@@ -255,12 +255,16 @@ class FireballDataset:
         The CSV copy is rewritten when the corpus or heuristic set changed."""
         rows = self._read(self._snapshot(), "heuristics")
         out = os.path.join(self.results_dir, "heuristics")
-        # the memo key covers the heuristic set, not just the corpus: a
-        # matrix cached for another set must not satisfy this request
-        cs = hashlib.md5((self.checksum() + "|" + ",".join(HEURISTICS)).encode()).hexdigest()
+        cs = self.heuristics_checksum()
         if not sinks.memoized(out, cs):
             sinks.write_results_csv(rows, out, checksum=cs)
         return rows
+
+    def heuristics_checksum(self) -> str:
+        """The key every heuristics CSV is stamped with. It covers the
+        heuristic set, not just the corpus: a matrix written for another
+        set must not satisfy a request for this one."""
+        return hashlib.md5((self.checksum() + "|" + ",".join(HEURISTICS)).encode()).hexdigest()
 
     # -- explorer endpoints -------------------------------------------
     def events(self, instance_id: str) -> DataFrame:
@@ -340,7 +344,9 @@ class FireballDataset:
         ``operators.windows.two_phase_global_rank`` (quantile-bucketed
         exact global rank, no single-partition window) rather than
         ``orderBy``, as `heuristics_long_sorted` does."""
-        sinks.write_results_csv(self.heuristics(), path, checksum=self.checksum())
+        sinks.write_results_csv(
+            self.heuristics(), path, checksum=self.heuristics_checksum()
+        )
 
 
 def _part_files(snap: str, gen: str, kind: str) -> list[str]:

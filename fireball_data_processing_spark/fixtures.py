@@ -22,12 +22,25 @@ def _sql_literal(v) -> str:
     return repr(v)
 
 
-def values_sql(rows: list[tuple], columns: list[str]) -> str:
-    """Render rows as ``(VALUES ...) AS t(c1, c2, ...)`` for DuckDB."""
+def _ddl_names(ddl_schema: str) -> list[str]:
+    """The column names of a DDL schema string, in order; commas inside
+    ``<...>`` type parameters do not split columns."""
+    names, depth, start = [], 0, 0
+    for i, ch in enumerate(ddl_schema + ","):
+        depth += {"<": 1, ">": -1}.get(ch, 0)
+        if ch == "," and depth == 0:
+            names.append(ddl_schema[start:i].split()[0])
+            start = i + 1
+    return names
+
+
+def values_sql(rows: list[tuple], ddl_schema: str) -> str:
+    """Render rows as ``(VALUES ...) AS t(c1, c2, ...)`` for DuckDB, the
+    column names taken from the fixture's DDL schema."""
     body = ",\n    ".join(
         "(" + ", ".join(_sql_literal(v) for v in row) + ")" for row in rows
     )
-    cols = ", ".join(columns)
+    cols = ", ".join(_ddl_names(ddl_schema))
     return f"(VALUES\n    {body}\n) AS t({cols})"
 
 
@@ -60,7 +73,6 @@ HP_ROWS = [
     ("temped_no_max", 10, None, 3),
 ]
 HP_SCHEMA = "name string, hp int, max_hp int, temp_hp int"
-HP_COLUMNS = ["name", "hp", "max_hp", "temp_hp"]
 
 # ---------------------------------------------------------------------
 # F18 discord-markdown + profanity fixture (human_eval/discord_render.py
@@ -84,7 +96,6 @@ RENDER_ROWS = [
     ("nothing", None),
 ]
 RENDER_SCHEMA = "id string, content string"
-RENDER_COLUMNS = ["id", "content"]
 
 # ---------------------------------------------------------------------
 # F15 caster-id coalesce fixture (distill2_authors.py:47-52)
@@ -101,7 +112,6 @@ CASTER_SCHEMA = (
     "name string, owner_id string, character_id string, owner string, "
     "upstream string, fallback_id string"
 )
-CASTER_COLUMNS = ["name", "owner_id", "character_id", "owner", "upstream", "fallback_id"]
 
 # ---------------------------------------------------------------------
 # P2/P8/F1/F2/F3/F4/F6 content fixture: command prefixes, OOC markers,
@@ -127,7 +137,6 @@ CONTENT_ROWS = [
     (17, "+prefix attack", "+prefix "),
 ]
 CONTENT_SCHEMA = "id int, content string, prefix string"
-CONTENT_COLUMNS = ["id", "content", "prefix"]
 
 # ---------------------------------------------------------------------
 # F9 author anonymization fixture: first-appearance ordering incl. a bot
@@ -144,7 +153,6 @@ AUTHOR_ROWS = [
     ("i2", 2, "u_alice", False),
 ]
 AUTHOR_SCHEMA = "instance_id string, seq int, author_id string, author_bot boolean"
-AUTHOR_COLUMNS = ["instance_id", "seq", "author_id", "author_bot"]
 
 # ---------------------------------------------------------------------
 # A17/A18 triples fixture: DM sets and the single-caster constraint
@@ -159,7 +167,6 @@ TRIPLE_ROWS = [
     ("i2", 2, "dm8", None),
 ]
 TRIPLE_SCHEMA = "instance_id string, triple_id int, dm string, caster_id string"
-TRIPLE_COLUMNS = ["instance_id", "triple_id", "dm", "caster_id"]
 
 # ---------------------------------------------------------------------
 # FIREBALL-schema mini event stream (heuristics parity on the real roles:
@@ -186,10 +193,6 @@ FB_EVENT_SCHEMA = (
     "combat_id string, seq int, event_type string, timestamp double, "
     "author_id string, author_bot boolean, content string, command_name string"
 )
-FB_EVENT_COLUMNS = [
-    "combat_id", "seq", "event_type", "timestamp", "author_id", "author_bot",
-    "content", "command_name",
-]
 
 # ---------------------------------------------------------------------
 # J7 embed-finding fixture (distill4_normalize.py:289-309): for an
@@ -235,11 +238,8 @@ def embed_values_sql() -> str:
         )
         for r in EMBED_ROWS
     )
-    return (
-        "(VALUES\n    " + rows + "\n) AS t(combat_id, seq, event_type, "
-        "author_bot, content, caster_name, targets, embed_title, "
-        "embed_field_names, n_embeds)"
-    )
+    cols = ", ".join(_ddl_names(EMBED_SCHEMA))
+    return "(VALUES\n    " + rows + f"\n) AS t({cols})"
 
 
 # ---------------------------------------------------------------------
@@ -261,7 +261,6 @@ TUPPER_SCHEMA = (
     "combat_id string, seq int, author_id string, author_bot boolean, "
     "content string"
 )
-TUPPER_COLUMNS = ["combat_id", "seq", "author_id", "author_bot", "content"]
 
 # ---------------------------------------------------------------------
 # J1/F19/F20 labels fixture (regression/load_data.py:14-24): human labels
@@ -276,7 +275,6 @@ LABEL_ROWS = [
     (99999, 1.0, 1.0),  # unknown instance: inner join drops it
 ]
 LABEL_SCHEMA = "user_id bigint, rp_label double, cmd_label double"
-LABEL_COLUMNS = ["user_id", "rp_label", "cmd_label"]
 
 # ---------------------------------------------------------------------
 # F5 snippet substitution fixture (distill4_normalize.py:359-371)
@@ -289,7 +287,6 @@ SNIPPET_ROWS = [
     (5, "trailing word", "word", "sub"),
 ]
 SNIPPET_SCHEMA = "id int, content string, snippet_name string, content_after string"
-SNIPPET_COLUMNS = ["id", "content", "snippet_name", "content_after"]
 
 # ---------------------------------------------------------------------
 # F12/F13 normalized-actor fixture (FIXTURES.md section 3; reference
@@ -308,10 +305,6 @@ ACTOR_SCHEMA = (
     "name string, race string, cls string, hp_str string, effects string, "
     "attacks string, spells string, actions string, description string"
 )
-ACTOR_COLUMNS = [
-    "name", "race", "cls", "hp_str", "effects", "attacks", "spells",
-    "actions", "description",
-]
 
 # ---------------------------------------------------------------------
 # F14 automation_result trees (FIXTURES.md section 4): every node type,
@@ -457,4 +450,3 @@ PII_ROWS = [
     (8, None),
 ]
 PII_SCHEMA = "id int, content string"
-PII_COLUMNS = ["id", "content"]

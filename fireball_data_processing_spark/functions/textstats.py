@@ -398,6 +398,40 @@ def dominant_script(counts: dict[str, Column]) -> Column:
     return expr
 
 
+def word_arrays(docs, text_col: str):
+    """``(doc_id, __words)``: each document's normalized ``text_col``
+    split into its non-empty words — the tokenization every bigram model
+    here shares."""
+    from fireball_data_processing_spark.functions.text import normalize_text
+
+    return docs.select(
+        F.col("doc_id"),
+        F.filter(
+            F.split(normalize_text(F.col(text_col)), " "), lambda s: s != ""
+        ).alias("__words"),
+    )
+
+
+def bigram_occurrences(pre):
+    """``(doc_id, __prev, __cur)``: one row per adjacent word pair of the
+    ``__words`` arrays in ``pre`` (documents with fewer than two words
+    yield none)."""
+    words = F.col("__words")
+    bigrams = F.when(
+        F.size(words) >= 2,
+        F.transform(
+            F.sequence(F.lit(0), F.size(words) - 2),
+            lambda i: F.struct(
+                F.element_at(words, i + 1).alias("prev"),
+                F.element_at(words, i + 2).alias("cur"),
+            ),
+        ),
+    ).otherwise(F.array().cast("array<struct<prev:string,cur:string>>"))
+    return pre.select(F.col("doc_id"), F.explode(bigrams).alias("bg")).select(
+        "doc_id", F.col("bg.prev").alias("__prev"), F.col("bg.cur").alias("__cur")
+    )
+
+
 def bigram_logprob(docs, alpha: float = 0.5, text_col: str = "text"):
     """Corpus-bigram cross-entropy per document — the order-2 upgrade of
     :func:`unigram_logprob` (CCNet scores with a 5-gram KenLM; a
@@ -425,29 +459,10 @@ def bigram_logprob(docs, alpha: float = 0.5, text_col: str = "text"):
     """
     from pyspark.sql import Window
 
-    from fireball_data_processing_spark.functions.text import normalize_text
-
     parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    pre = docs.select(
-        F.col("doc_id"),
-        F.filter(
-            F.split(normalize_text(F.col(text_col)), " "), lambda s: s != ""
-        ).alias("__words"),
-    ).repartition(parts, F.col("doc_id"))
+    pre = word_arrays(docs, text_col).repartition(parts, F.col("doc_id"))
     words = F.col("__words")
-    bigrams = F.when(
-        F.size(words) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - 2),
-            lambda i: F.struct(
-                F.element_at(words, i + 1).alias("prev"),
-                F.element_at(words, i + 2).alias("cur"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<prev:string,cur:string>>"))
-    occ = pre.select(F.col("doc_id"), F.explode(bigrams).alias("bg")).select(
-        "doc_id", F.col("bg.prev").alias("__prev"), F.col("bg.cur").alias("__cur")
-    )
+    occ = bigram_occurrences(pre)
     vocab_size = (
         pre.select(F.explode(words).alias("__t"))
         .agg(F.countDistinct("__t").cast("double").alias("__v"))
@@ -616,29 +631,8 @@ def kneser_ney_logprob(docs):
     """
     from pyspark.sql import functions as F
 
-    from fireball_data_processing_spark.functions.text import normalize_text
-
     d = 0.75
-    pre = docs.select(
-        F.col("doc_id"),
-        F.filter(
-            F.split(normalize_text(F.col("text")), " "), lambda s: s != ""
-        ).alias("__words"),
-    )
-    words = F.col("__words")
-    bigrams = F.when(
-        F.size(words) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - 2),
-            lambda i: F.struct(
-                F.element_at(words, i + 1).alias("prev"),
-                F.element_at(words, i + 2).alias("cur"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<prev:string,cur:string>>"))
-    occ = pre.select(F.col("doc_id"), F.explode(bigrams).alias("bg")).select(
-        "doc_id", F.col("bg.prev").alias("__prev"), F.col("bg.cur").alias("__cur")
-    )
+    occ = bigram_occurrences(word_arrays(docs, "text"))
     types = occ.groupBy("__prev", "__cur").agg(F.count(F.lit(1)).alias("__c"))
     left = types.groupBy("__prev").agg(
         F.sum("__c").alias("__cprev"),

@@ -32,7 +32,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
 _SIDE = "__asof_side"  # 0 = right (lookup source), 1 = left (probe)
 
@@ -73,6 +73,47 @@ def asof_forward_col(
     return F.first(F.when(predicate, value), ignorenulls=True).over(w)
 
 
+def _side_union(
+    left: DataFrame,
+    right: DataFrame,
+    part: list[str],
+    order_col: str,
+    lifted: list,
+) -> DataFrame:
+    """``left`` rows (side 1) unioned with ``right`` rows (side 0) in
+    ``left``'s columns, the right rows null-padded outside ``part`` and
+    ``order_col``. Each ``(name, right column, type)`` of ``lifted``
+    carries a right value, null on the left rows."""
+    l_sel = left.select(
+        *[F.col(c) for c in left.columns],
+        F.lit(1).alias(_SIDE),
+        *[F.lit(None).cast(t).alias(name) for name, _, t in lifted],
+    )
+    r_sel = right.select(
+        *[
+            F.col(c) if c in (*part, order_col) else F.lit(None).cast(
+                left.schema[c].dataType
+            ).alias(c)
+            for c in left.columns
+        ],
+        F.lit(0).alias(_SIDE),
+        *[col.alias(name) for name, col, _ in lifted],
+    )
+    return l_sel.unionByName(r_sel)
+
+
+def _backward_window(part: list[str], order_col: str) -> WindowSpec:
+    """Everything at-or-before the row in its partition. Secondary sort
+    on the side flag sets the tie semantics: right rows (side 0) sort
+    before left rows at equal order value, so a tie is visible to the
+    left row."""
+    return (
+        Window.partitionBy(*part)
+        .orderBy(F.col(order_col).asc(), F.col(_SIDE).asc())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -90,32 +131,12 @@ def asof_join(
     part = list(partition_cols)
     lifted = [f"__r_{c}" for c in right_cols]
 
-    l_sel = left.select(
-        *[F.col(c) for c in left.columns],
-        F.lit(1).alias(_SIDE),
-        *[F.lit(None).cast(right.schema[c].dataType).alias(rc)
-          for c, rc in zip(right_cols, lifted)],
+    u = _side_union(
+        left, right, part, order_col,
+        [(rc, F.col(c), right.schema[c].dataType)
+         for c, rc in zip(right_cols, lifted)],
     )
-    r_sel = right.select(
-        *[
-            F.col(c) if c in (*part, order_col) else F.lit(None).cast(
-                left.schema[c].dataType
-            ).alias(c)
-            for c in left.columns
-        ],
-        F.lit(0).alias(_SIDE),
-        *[F.col(c).alias(rc) for c, rc in zip(right_cols, lifted)],
-    )
-    u = l_sel.unionByName(r_sel)
-
-    # Secondary sort on the side flag sets the tie semantics: right rows
-    # (side 0) sort before left rows at equal order value, so a tie is
-    # visible to the left row.
-    w = (
-        Window.partitionBy(*part)
-        .orderBy(F.col(order_col).asc(), F.col(_SIDE).asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    w = _backward_window(part, order_col)
     for c, rc in zip(right_cols, lifted):
         u = u.withColumn(
             rc, F.last(F.when(F.col(_SIDE) == 0, F.col(rc)), ignorenulls=True).over(w)
@@ -152,30 +173,13 @@ def nearest_join(
     """
     part = list(partition_cols)
     key_t = right.schema[right_key].dataType
-    l_sel = left.select(
-        *[F.col(c) for c in left.columns],
-        F.lit(1).alias(_SIDE),
-        F.lit(None).cast(key_t).alias("__r_key"),
+    u = _side_union(
+        left, right, part, order_col, [("__r_key", F.col(right_key), key_t)]
     )
-    r_sel = right.select(
-        *[
-            F.col(c) if c in (*part, order_col) else F.lit(None).cast(
-                left.schema[c].dataType
-            ).alias(c)
-            for c in left.columns
-        ],
-        F.lit(0).alias(_SIDE),
-        F.col(right_key).alias("__r_key"),
-    )
-    u = l_sel.unionByName(r_sel)
     # tie orders mirror the asof_join tie semantics: at equal order
     # value the right row is visible both backward (side 0 sorts first) and
     # forward (side 0 sorts after the probe, window includes it)
-    w_b = (
-        Window.partitionBy(*part)
-        .orderBy(F.col(order_col).asc(), F.col(_SIDE).asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    w_b = _backward_window(part, order_col)
     w_f = (
         Window.partitionBy(*part)
         .orderBy(F.col(order_col).asc(), F.col(_SIDE).desc())

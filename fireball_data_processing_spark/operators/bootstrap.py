@@ -92,6 +92,62 @@ def _chunk_uniform(n_hashes: int, per: int) -> Column:
     return F.conv(chunk, 16, 10).cast("bigint") / F.lit(float(16 ** width))
 
 
+def _replicate_means(
+    base: DataFrame, keys: list[str], salt: str, n_replicates: int
+) -> DataFrame:
+    """Per (``keys``, replicate ``__b``) group of ``base``'s
+    ``(__x, __k, *keys)`` rows: the Poisson(1)-weighted mean ``__m``
+    (8 dp), the row count ``__n`` and the plain mean ``__mean`` (6 dp),
+    from one explode(B) pass."""
+    # HASH ECONOMY (see PER_DIGEST): B replicates need ceil(B/PER_DIGEST)
+    # digests per row, not B. The digests are materialized as columns
+    # BEFORE the explode, so each is computed once per input row
+    # (exploded rows reference the value); per replicate the draw is a
+    # substring + hex-parse of the right chunk. At B=32 this is 4 md5
+    # calls/row instead of 32 — the hash is the whole data-proportional
+    # cost here (a columnar 2B-aggregate variant AND a k-array
+    # pre-explode variant were both measured SLOWER: the wide expression
+    # trees fall out of whole-stage codegen — 15.5 s vs 2.3 s for the
+    # k-array form at sf0.1).
+    per = PER_DIGEST
+    n_hashes = (int(n_replicates) + per - 1) // per
+    hcols = [
+        F.md5(F.concat(F.lit(f"{salt}{h}#"), F.col("__k"))).alias(f"__h{h}")
+        for h in range(n_hashes)
+    ]
+    pre = base.select("__x", *keys, *hcols)
+    exploded = pre.select(
+        "__x",
+        *keys,
+        F.explode(F.sequence(F.lit(1), F.lit(int(n_replicates)))).alias(
+            "__b"
+        ),
+        *[F.col(f"__h{h}") for h in range(n_hashes)],
+    )
+    k = poisson_count_expr(_chunk_uniform(n_hashes, per)).cast("double")
+    return (
+        exploded.select(
+            *keys,
+            "__b",
+            "__x",
+            (k * F.col("__x")).alias("__kx"),
+            k.alias("__kw"),
+        )
+        .groupBy(*keys, "__b")
+        .agg(
+            # a replicate over a TINY sample can draw k=0 everywhere;
+            # null its mean out (percentile and the count skip nulls)
+            # instead of tripping ANSI divide-by-zero
+            F.round(
+                F.sum("__kx") / F.when(F.sum("__kw") > 0, F.sum("__kw")),
+                8,
+            ).alias("__m"),
+            F.count(F.lit(1)).cast("bigint").alias("__n"),
+            F.round(F.avg("__x"), 6).alias("__mean"),
+        )
+    )
+
+
 def bootstrap_mean_ci(
     df: DataFrame,
     value_col: str,
@@ -109,32 +165,7 @@ def bootstrap_mean_ci(
     B partial (sum, count) pairs per partition.
     """
     v = F.col(value_col).cast("double")
-    # HASH ECONOMY (see PER_DIGEST): B replicates need ceil(B/PER_DIGEST)
-    # digests per row, not B. The digests are materialized as columns
-    # BEFORE the explode, so each is computed once per input row
-    # (exploded rows reference the value); per replicate the draw is a
-    # substring + hex-parse of the right chunk. At B=32 this is 4 md5
-    # calls/row instead of 32 — the hash is the whole data-proportional
-    # cost here (a columnar 2B-aggregate variant AND a k-array
-    # pre-explode variant were both measured SLOWER: the wide expression
-    # trees fall out of whole-stage codegen — 15.5 s vs 2.3 s for the
-    # k-array form at sf0.1).
-    per = PER_DIGEST
-    n_hashes = (int(n_replicates) + per - 1) // per
     base = df.select(v.alias("__x"), key.cast("string").alias("__k"))
-    hcols = [
-        F.md5(F.concat(F.lit(f"{salt}{h}#"), F.col("__k"))).alias(f"__h{h}")
-        for h in range(n_hashes)
-    ]
-    pre = base.select("__x", *hcols)
-    exploded = pre.select(
-        "__x",
-        F.explode(F.sequence(F.lit(1), F.lit(int(n_replicates)))).alias(
-            "__b"
-        ),
-        *[F.col(f"__h{h}") for h in range(n_hashes)],
-    )
-    k = poisson_count_expr(_chunk_uniform(n_hashes, per)).cast("double")
     # ONE pass for replicates AND point stats (a separate point-estimate
     # branch would be a second full execution of the source scan,
     # crossJoined back at the end). Every replicate group contains
@@ -143,26 +174,7 @@ def bootstrap_mean_ci(
     # final one-row rollup. Summation order inside a group differs from
     # the old global agg only by partial-combine grouping, the same
     # reassociation noise the 6-dp rounding already absorbs cross-engine.
-    reps = (
-        exploded.select(
-            "__b",
-            "__x",
-            (k * F.col("__x")).alias("__kx"),
-            k.alias("__kw"),
-        )
-        .groupBy("__b")
-        .agg(
-            # a replicate over a TINY sample can draw k=0 everywhere;
-            # null its mean out (percentile and the count skip nulls)
-            # instead of tripping ANSI divide-by-zero
-            F.round(
-                F.sum("__kx") / F.when(F.sum("__kw") > 0, F.sum("__kw")),
-                8,
-            ).alias("__m"),
-            F.count(F.lit(1)).cast("bigint").alias("__n"),
-            F.round(F.avg("__x"), 6).alias("__mean"),
-        )
-    )
+    reps = _replicate_means(base, [], salt, n_replicates)
     alpha = (1.0 - level) / 2.0
     return reps.agg(
         # coalesce keeps the empty-input contract: the old
@@ -210,50 +222,17 @@ def bootstrap_delta_ci(
     two-sample bootstrap's independence requirement.
     """
     v = F.col(value_col).cast("double")
-    per = PER_DIGEST
-    n_hashes = (int(n_replicates) + per - 1) // per
     base = df.select(
         v.alias("__x"),
         key.cast("string").alias("__k"),
         F.col(variant_col).alias("__g"),
     ).where(F.col("__g").isin([variant_a, variant_b]))
-    hcols = [
-        F.md5(F.concat(F.lit(f"boot{h}#"), F.col("__k"))).alias(f"__h{h}")
-        for h in range(n_hashes)
-    ]
-    pre = base.select("__x", "__g", *hcols)
-    exploded = pre.select(
-        "__x",
-        "__g",
-        F.explode(F.sequence(F.lit(1), F.lit(int(n_replicates)))).alias(
-            "__b"
-        ),
-        *[F.col(f"__h{h}") for h in range(n_hashes)],
-    )
-    k = poisson_count_expr(_chunk_uniform(n_hashes, per)).cast("double")
     # per-(variant, replicate) cells keep the per-exploded-row aggregate
     # work to plain sums (conditional per-variant splitting happens in
     # the tiny 2B-cell aggregate below, not per row); the point stats
     # (count, mean) ride the same cells, so the old separate full-scan
     # point branch is gone
-    reps = (
-        exploded.select(
-            "__g",
-            "__b",
-            "__x",
-            (k * F.col("__x")).alias("__kx"),
-            k.alias("__kw"),
-        )
-        .groupBy("__g", "__b")
-        .agg(
-            F.round(
-                F.sum("__kx") / F.when(F.sum("__kw") > 0, F.sum("__kw")),
-                8,
-            ).alias("__m"),
-            F.count(F.lit(1)).cast("bigint").alias("__n"),
-            F.round(F.avg("__x"), 6).alias("__mean"),
-        )
-    )
+    reps = _replicate_means(base, ["__g"], "boot", n_replicates)
     # variant split WITHOUT the old B-row self-join: its two filter
     # branches each re-planned the replicate subtree (exchange-reused,
     # but still two aggregate stages and a join), and a missing variant

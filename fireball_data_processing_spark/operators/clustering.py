@@ -202,15 +202,18 @@ def nearest_centroid_expr(
     if isinstance(vec, str):
         return F.expr(nearest_centroid_sql(centroids, vec))
     return _bind_once(
-        vec,
-        lambda v: F.array_min(
-            F.transform(
-                _centroid_literal(centroids),
-                lambda c: F.struct(
-                    _dist2(v, c["v"]).alias("d"), c["cid"].alias("cid")
-                ),
-            )
-        ),
+        vec, lambda v: F.array_min(_centroid_distances(centroids, v))
+    )
+
+
+def _centroid_distances(
+    centroids: list[tuple[int, list[float]]], v: Column
+) -> Column:
+    """``array<struct<d:double, cid:int>>``: the squared distance from
+    ``v`` to every centroid, in centroid-list order."""
+    return F.transform(
+        _centroid_literal(centroids),
+        lambda c: F.struct(_dist2(v, c["v"]).alias("d"), c["cid"].alias("cid")),
     )
 
 
@@ -230,16 +233,7 @@ def nearest_centroids_expr(
     return _bind_once(
         vec,
         lambda v: F.slice(
-            F.array_sort(
-                F.transform(
-                    _centroid_literal(centroids),
-                    lambda c: F.struct(
-                        _dist2(v, c["v"]).alias("d"), c["cid"].alias("cid")
-                    ),
-                )
-            ),
-            1,
-            n_probe,
+            F.array_sort(_centroid_distances(centroids, v)), 1, n_probe
         ),
     )
 
@@ -260,6 +254,25 @@ def kmeans_assign(
         F.col(id_col),
         best["cid"].alias("cluster_id"),
         best["d"].alias("dist2"),
+    )
+
+
+def coordinate_means(exploded: DataFrame, *keys: str) -> list:
+    """Collect one row per ``keys`` group whose ``__coords`` holds the
+    6-dp mean of each coordinate ``(__pos, __x)`` of ``exploded``, in
+    coordinate order: k×dim rows, bounded like the centroid literal they
+    re-enter. ``sort_array(collect_list(struct(pos, mean)))`` rebuilds
+    the order without an ORDER BY shuffle."""
+    return (
+        exploded.groupBy(*keys, "__pos")
+        .agg(F.round(F.avg("__x"), 6).alias("__m"))
+        .groupBy(*keys)
+        .agg(
+            F.sort_array(
+                F.collect_list(F.struct("__pos", "__m"))
+            ).alias("__coords")
+        )
+        .collect()
     )
 
 
@@ -301,28 +314,16 @@ def kmeans_fit(
         (i, [float(x) for x in r["__v"]]) for i, r in enumerate(seed_rows)
     ]
     for _ in range(n_iter):
-        # element-wise mean per cluster: posexplode -> (cluster, dim) avg
-        # -> k×dim rows, collected bounded (same size as the literal we
-        # re-enter). The assignment rides in the SAME projection as the
-        # vector (no join-back — assignment is a pure expression), and
-        # sort_array(collect_list(struct(pos, avg))) rebuilds coordinate
-        # order without an ORDER BY shuffle.
+        # element-wise mean per cluster: the assignment rides in the SAME
+        # projection as the vector (no join-back — assignment is a pure
+        # expression)
         best = nearest_centroid_expr(centroids, vec_sql)
-        means = (
+        means = coordinate_means(
             df.select(
                 best["cid"].alias("cluster_id"),
                 F.expr(vec_sql).alias("__v"),
-            )
-            .select("cluster_id", F.posexplode("__v").alias("__pos", "__x"))
-            .groupBy("cluster_id", "__pos")
-            .agg(F.round(F.avg("__x"), 6).alias("__m"))
-            .groupBy("cluster_id")
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.struct("__pos", "__m"))
-                ).alias("__coords")
-            )
-            .collect()
+            ).select("cluster_id", F.posexplode("__v").alias("__pos", "__x")),
+            "cluster_id",
         )
         new = {
             int(r["cluster_id"]): [float(c["__m"]) for c in r["__coords"]]

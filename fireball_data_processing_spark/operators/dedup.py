@@ -633,6 +633,59 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     )
 
 
+def _gram_hits(docs: DataFrame, k: int) -> DataFrame:
+    """``(doc_id, pos, gram)``: the md5 of every ``k``-word gram of each
+    document's normalized text, at its word offset."""
+    pre = _spread_words(
+        docs.select(
+            F.col("doc_id"),
+            F.split(normalize_text(F.col("text")), " ").alias("__words"),
+        ),
+        "doc_id",
+    )
+    words = F.col("__words")
+    grams = F.when(
+        F.size(words) >= k,
+        F.transform(
+            F.sequence(F.lit(0), F.size(words) - k),
+            lambda i: F.md5(F.concat_ws(" ", F.slice(words, i + 1, k))),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    return pre.select(F.col("doc_id"), F.posexplode(grams).alias("pos", "gram"))
+
+
+def _hit_spans(hits: DataFrame, k: int) -> DataFrame:
+    """Merge ``(doc_id, pos)`` gram hits into maximal word spans
+    ``(doc_id, span_start, span_end, span_words)`` by per-doc
+    gaps-and-islands; overlapping and contiguous hits join one span."""
+    w_prev = (
+        Window.partitionBy("doc_id")
+        .orderBy("pos")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    w_run = (
+        Window.partitionBy("doc_id")
+        .orderBy("pos")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    prev_end = F.coalesce(F.max(F.col("pos") + k).over(w_prev), F.lit(-1))
+    brk = F.when(F.col("pos") > prev_end, 1).otherwise(0)
+    islands = hits.withColumn("__island", F.sum(brk).over(w_run))
+    return (
+        islands.groupBy("doc_id", "__island")
+        .agg(
+            F.min("pos").cast("bigint").alias("span_start"),
+            (F.max("pos") + k).cast("bigint").alias("span_end"),
+        )
+        .select(
+            "doc_id",
+            "span_start",
+            "span_end",
+            (F.col("span_end") - F.col("span_start")).alias("span_words"),
+        )
+    )
+
+
 def duplicate_spans(
     docs: DataFrame,
     k: int = 8,
@@ -667,22 +720,7 @@ def duplicate_spans(
     # re-executes. countDistinct isn't a window function; max(dense_rank
     # ordered by doc) over the gram partition counts distinct docs
     # exactly, with no per-group set buffer.
-    pre = _spread_words(
-        docs.select(
-            F.col("doc_id"),
-            F.split(normalize_text(F.col("text")), " ").alias("__words"),
-        ),
-        "doc_id",
-    )
-    words = F.col("__words")
-    grams = F.when(
-        F.size(words) >= k,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - k),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(words, i + 1, k))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    hits = pre.select(F.col("doc_id"), F.posexplode(grams).alias("pos", "gram"))
+    hits = _gram_hits(docs, k)
     w_gram_rank = Window.partitionBy("gram").orderBy("doc_id")
     w_gram = Window.partitionBy("gram")
     nd = F.max(F.dense_rank().over(w_gram_rank)).over(w_gram)
@@ -691,32 +729,7 @@ def duplicate_spans(
         .filter(F.col("__nd") >= min_docs)
         .select("doc_id", "pos")
     )
-    w_prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_run = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    prev_end = F.coalesce(F.max(F.col("pos") + k).over(w_prev), F.lit(-1))
-    brk = F.when(F.col("pos") > prev_end, 1).otherwise(0)
-    islands = dup_hits.withColumn("__island", F.sum(brk).over(w_run))
-    return (
-        islands.groupBy("doc_id", "__island")
-        .agg(
-            F.min("pos").cast("bigint").alias("span_start"),
-            (F.max("pos") + k).cast("bigint").alias("span_end"),
-        )
-        .select(
-            "doc_id",
-            "span_start",
-            "span_end",
-            (F.col("span_end") - F.col("span_start")).alias("span_words"),
-        )
-    )
+    return _hit_spans(dup_hits, k)
 
 
 def remove_duplicate_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
@@ -936,22 +949,7 @@ def contamination_spans(
     question) -> per-doc gaps-and-islands. Contact is bounded by grams
     literally shared with the benchmark.
     """
-    pre = _spread_words(
-        docs.select(
-            F.col("doc_id"),
-            F.split(normalize_text(F.col("text")), " ").alias("__words"),
-        ),
-        "doc_id",
-    )
-    words = F.col("__words")
-    grams = F.when(
-        F.size(words) >= k,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - k),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(words, i + 1, k))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    hits = pre.select(F.col("doc_id"), F.posexplode(grams).alias("pos", "gram"))
+    hits = _gram_hits(docs, k)
     bench_grams = (
         _exploded_shingles(benchmark, "text", "doc_id", k)
         .select(F.md5(F.col("shingle")).alias("gram"))
@@ -960,32 +958,7 @@ def contamination_spans(
     dirty = hits.join(F.broadcast(bench_grams), "gram", "left_semi").select(
         "doc_id", "pos"
     )
-    w_prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_run = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    prev_end = F.coalesce(F.max(F.col("pos") + k).over(w_prev), F.lit(-1))
-    brk = F.when(F.col("pos") > prev_end, 1).otherwise(0)
-    islands = dirty.withColumn("__island", F.sum(brk).over(w_run))
-    return (
-        islands.groupBy("doc_id", "__island")
-        .agg(
-            F.min("pos").cast("bigint").alias("span_start"),
-            (F.max("pos") + k).cast("bigint").alias("span_end"),
-        )
-        .select(
-            "doc_id",
-            "span_start",
-            "span_end",
-            (F.col("span_end") - F.col("span_start")).alias("span_words"),
-        )
-    )
+    return _hit_spans(dirty, k)
 
 
 def content_defined_chunks(
@@ -1096,6 +1069,32 @@ def cdc_duplicate_chunks(
     )
 
 
+def threshold_grid(spark) -> DataFrame:
+    """The sweep's cutoffs: one ``threshold_pct`` row for each of
+    10, 20, ..., 90."""
+    return spark.range(1).select(
+        F.explode(
+            F.array(*[F.lit(p).cast("long") for p in range(10, 100, 10)])
+        ).alias("threshold_pct")
+    )
+
+
+def _threshold_docs(pairs: DataFrame, grid: DataFrame, doc_col: str) -> DataFrame:
+    """``(threshold_pct, doc_col)``: both doc ids of every pair whose
+    6-dp rounded ``jaccard`` reaches each cutoff of ``grid``."""
+    return (
+        pairs.crossJoin(F.broadcast(grid))
+        .filter(
+            F.round(F.col("jaccard"), 6)
+            >= F.col("threshold_pct").cast("double") / F.lit(100.0)
+        )
+        .select(
+            "threshold_pct",
+            F.explode(F.array("id_a", "id_b")).alias(doc_col),
+        )
+    )
+
+
 def score_threshold_sweep(pairs: DataFrame) -> DataFrame:
     """Dedup-threshold sweep: for each candidate cutoff, how many verified
     pairs and how many distinct documents the dedup pass would touch —
@@ -1126,23 +1125,8 @@ def score_threshold_sweep(pairs: DataFrame) -> DataFrame:
     back onto the grid restores the zero rows. Scores are rounded
     before the comparison so the cut line is engine-reproducible (the
     same 6-dp boundary rule as the percentile gate)."""
-    spark = pairs.sparkSession
-    grid = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(p).cast("long") for p in range(10, 100, 10)])
-        ).alias("threshold_pct")
-    )
-    exploded = (
-        pairs.crossJoin(F.broadcast(grid))
-        .filter(
-            F.round(F.col("jaccard"), 6)
-            >= F.col("threshold_pct").cast("double") / F.lit(100.0)
-        )
-        .select(
-            "threshold_pct",
-            F.explode(F.array("id_a", "id_b")).alias("__doc"),
-        )
-    )
+    grid = threshold_grid(pairs.sparkSession)
+    exploded = _threshold_docs(pairs, grid, "__doc")
     counts = exploded.groupBy("threshold_pct").agg(
         (F.count(F.lit(1)) / F.lit(2)).cast("bigint").alias("n_pairs"),
         F.countDistinct("__doc").cast("bigint").alias("n_docs"),
@@ -1218,23 +1202,8 @@ def threshold_doc_hits(pairs: DataFrame) -> DataFrame:
     small mirrors). Same cut-line semantics (rounded score vs pct/100);
     the distinct is per (threshold, doc) and the frame stays
     pair-bounded x |grid|."""
-    spark = pairs.sparkSession
-    grid = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(p).cast("long") for p in range(10, 100, 10)])
-        ).alias("threshold_pct")
-    )
-    return (
-        pairs.crossJoin(F.broadcast(grid))
-        .filter(
-            F.round(F.col("jaccard"), 6)
-            >= F.col("threshold_pct").cast("double") / F.lit(100.0)
-        )
-        .select(
-            "threshold_pct", F.explode(F.array("id_a", "id_b")).alias("doc_id")
-        )
-        .distinct()
-    )
+    grid = threshold_grid(pairs.sparkSession)
+    return _threshold_docs(pairs, grid, "doc_id").distinct()
 
 
 def quality_survivors(components: DataFrame, scores: DataFrame) -> DataFrame:

@@ -70,8 +70,20 @@ def transition_matrix(
     One hash exchange on ``key_col`` for the lead window, one
     partial-combining pair count, then arithmetic on the matrix frame.
     """
+    pairs = _pair_counts(df, key_col, order_col, state_col)
+    srcs = pairs.select(F.col("src").alias("dst")).distinct()
+    kept = pairs.join(F.broadcast(srcs), "dst", "left_semi")
+    return _row_normalized(kept)
+
+
+def _pair_counts(
+    df: DataFrame, key_col: str, order_col: str, state_col: str
+) -> DataFrame:
+    """``(src, dst, n)``: how often ``dst`` follows ``src`` along
+    ``order_col`` within a ``key_col`` sequence — one lead window and one
+    partial-combining pair count."""
     w = Window.partitionBy(key_col).orderBy(order_col)
-    pairs = (
+    return (
         df.select(
             F.col(state_col).alias("src"),
             F.lead(state_col).over(w).alias("dst"),
@@ -80,10 +92,13 @@ def transition_matrix(
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-    srcs = pairs.select(F.col("src").alias("dst")).distinct()
-    kept = pairs.join(F.broadcast(srcs), "dst", "left_semi")
+
+
+def _row_normalized(pairs: DataFrame) -> DataFrame:
+    """``(src, dst, n, p)`` with ``p = n / total_out(src)`` rounded to
+    8 dp."""
     tot = Window.partitionBy("src")
-    return kept.select(
+    return pairs.select(
         "src",
         "dst",
         "n",
@@ -111,17 +126,8 @@ def _collected_matrix(
     EXACT (the per-src totals are integer sums — no float
     reassociation), so ``p = round(n / total, 8)`` is
     bit-identical to the frame form's window division."""
-    w = Window.partitionBy(key_col).orderBy(order_col)
-    raw = (
-        df.select(
-            F.col(state_col).alias("src"),
-            F.lead(state_col).over(w).alias("dst"),
-        )
-        .filter(F.col("dst").isNotNull())
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .collect()  # bounded: |states|^2, dangling dst included
-    )
+    # bounded: |states|^2, dangling dst included
+    raw = _pair_counts(df, key_col, order_col, state_col).collect()
     srcs = {r["src"] for r in raw}
     kept = [r for r in raw if r["dst"] in srcs]
     totals: dict = {}
@@ -286,25 +292,7 @@ def raw_transition_probs(
     dropped or renormalized, which is what attribution needs (removing
     a channel must LOSE its probability mass, not redistribute it).
     Same plan shape: one lead window + one pair-count aggregate."""
-    w = Window.partitionBy(key_col).orderBy(order_col)
-    pairs = (
-        df.select(
-            F.col(state_col).alias("src"),
-            F.lead(state_col).over(w).alias("dst"),
-        )
-        .filter(F.col("dst").isNotNull())
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
-    tot = Window.partitionBy("src")
-    return pairs.select(
-        "src",
-        "dst",
-        "n",
-        F.round(
-            F.col("n").cast("double") / F.sum("n").over(tot), 8
-        ).alias("p"),
-    )
+    return _row_normalized(_pair_counts(df, key_col, order_col, state_col))
 
 
 # exact driver-side replica of Spark's F.round (shortest-decimal

@@ -136,10 +136,7 @@ def bm25_search(
     DO contain the term). The one-row (n_docs, avgdl) corpus stats come
     from a second projection-only pass over ``docs``.
     """
-    q_terms = queries.select(
-        F.col("query_id").alias("query_id"),
-        F.explode(F.array_distinct(tokens(F.col("query_text")))).alias("term"),
-    )
+    q_terms = _query_terms(queries)
     distinct_terms = q_terms.select("term").distinct()
 
     # ONE exchange for the whole per-term stage: hash-partitioning the
@@ -174,9 +171,22 @@ def bm25_search(
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum("contrib"), 6).alias("score"))
     )
-    # rank on the ROUNDED score: duplicate docs score bitwise-unequal
-    # across summation orders but equal after rounding, so the doc_id
-    # tie-break fires identically on every engine
+    return _top_k_scored(scored, k)
+
+
+def _query_terms(queries: DataFrame) -> DataFrame:
+    """``(query_id, term)``: the distinct tokens of each query."""
+    return queries.select(
+        F.col("query_id").alias("query_id"),
+        F.explode(F.array_distinct(tokens(F.col("query_text")))).alias("term"),
+    )
+
+
+def _top_k_scored(scored: DataFrame, k: int) -> DataFrame:
+    """``(query_id, rank, doc_id, score)``: the ``k`` best docs per query.
+    Ranked on the ROUNDED score: duplicate docs score bitwise-unequal
+    across summation orders but equal after rounding, so the doc_id
+    tie-break fires identically on every engine."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id")
     )
@@ -312,10 +322,9 @@ def bm25_search_from_index(
     as a semi-join on the partition column), so only the index
     fraction holding the query vocabulary is read.
     """
-    q_terms = queries.select(
-        F.col("query_id").alias("query_id"),
-        F.explode(F.array_distinct(tokens(F.col("query_text")))).alias("term"),
-    ).withColumn("term_bucket", F.pmod(F.hash("term"), F.lit(_N_BUCKETS)))
+    q_terms = _query_terms(queries).withColumn(
+        "term_bucket", F.pmod(F.hash("term"), F.lit(_N_BUCKETS))
+    )
     buckets = q_terms.select("term_bucket").distinct()
     distinct_terms = q_terms.select("term_bucket", "term").distinct()
 
@@ -344,11 +353,4 @@ def bm25_search_from_index(
         # engine and this path stays order-equal to the direct search
         .agg(F.round(F.sum("contrib"), 6).alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return _top_k_scored(scored, k)

@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-__all__ = ["sprt_decisions"]
+__all__ = ["sprt_decisions", "sprt_crossings"]
 
 
 def sprt_decisions(
@@ -50,11 +50,6 @@ def sprt_decisions(
     llr_final)`` where decision is 'accept_h1' / 'accept_h0' /
     'continue' (no crossing within the observed stream); for 'continue'
     the *_at_decision fields are NULL. Ordered by group."""
-    l1 = round(math.log(p1 / p0), 8)
-    l0 = round(math.log((1.0 - p1) / (1.0 - p0)), 8)
-    upper = round(math.log((1.0 - beta) / alpha), 8)
-    lower = round(math.log(beta / (1.0 - alpha)), 8)
-
     x = F.when(success, 1).otherwise(0)
     w = Window.partitionBy("group").orderBy("__o")
     walked = df.select(
@@ -67,29 +62,7 @@ def sprt_decisions(
         F.row_number().over(w).alias("__k"),
         F.sum("__x").over(w).alias("__n1"),
     )
-    llr = F.round(
-        F.col("__n1") * F.lit(l1)
-        + (F.col("__k") - F.col("__n1")) * F.lit(l0),
-        8,
-    )
-    scored = walked.select(
-        "group",
-        "__k",
-        llr.alias("__llr"),
-        F.when(llr >= F.lit(upper), F.lit("accept_h1"))
-        .when(llr <= F.lit(lower), F.lit("accept_h0"))
-        .alias("__cross"),
-    )
-    agg = scored.groupBy("group").agg(
-        F.min(
-            F.when(
-                F.col("__cross").isNotNull(),
-                F.struct(F.col("__k"), F.col("__llr"), F.col("__cross")),
-            )
-        ).alias("__first"),
-        F.max("__k").cast("bigint").alias("n_total"),
-        F.max(F.struct(F.col("__k"), F.col("__llr"))).alias("__last"),
-    )
+    agg = sprt_crossings(walked, [], p0, p1, alpha, beta)
     return agg.select(
         "group",
         F.coalesce(F.col("__first.__cross"), F.lit("continue")).alias(
@@ -100,3 +73,51 @@ def sprt_decisions(
         "n_total",
         F.round(F.col("__last.__llr"), 6).alias("llr_final"),
     ).orderBy("group")
+
+
+def sprt_crossings(
+    walked: DataFrame,
+    keys: list[str],
+    p0: float,
+    p1: float,
+    alpha: float,
+    beta: float,
+) -> DataFrame:
+    """The SPRT walk over cumulative counts: ``walked`` holds ``group``,
+    the ``keys`` that order it, trials so far ``__k`` and successes so
+    far ``__n1``. Returns one row per group: ``__first``, the
+    ``(*keys, __k, __llr, __cross)`` struct of the first boundary
+    crossing (NULL if none), ``n_total`` and ``__last``, the
+    ``(*keys, __k, __llr)`` struct of the final row. The LLR is built
+    from 8-dp rounded per-observation constants, so every engine walks
+    identical doubles."""
+    l1 = round(math.log(p1 / p0), 8)
+    l0 = round(math.log((1.0 - p1) / (1.0 - p0)), 8)
+    upper = round(math.log((1.0 - beta) / alpha), 8)
+    lower = round(math.log(beta / (1.0 - alpha)), 8)
+    llr = F.round(
+        F.col("__n1") * F.lit(l1)
+        + (F.col("__k") - F.col("__n1")) * F.lit(l0),
+        8,
+    )
+    scored = walked.select(
+        "group",
+        *keys,
+        "__k",
+        llr.alias("__llr"),
+        F.when(llr >= F.lit(upper), F.lit("accept_h1"))
+        .when(llr <= F.lit(lower), F.lit("accept_h0"))
+        .alias("__cross"),
+    )
+    return scored.groupBy("group").agg(
+        F.min(
+            F.when(
+                F.col("__cross").isNotNull(),
+                F.struct(*[F.col(c) for c in (*keys, "__k", "__llr", "__cross")]),
+            )
+        ).alias("__first"),
+        F.max("__k").cast("bigint").alias("n_total"),
+        F.max(F.struct(*[F.col(c) for c in (*keys, "__k", "__llr")])).alias(
+            "__last"
+        ),
+    )

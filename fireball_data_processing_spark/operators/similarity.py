@@ -52,7 +52,7 @@ from fireball_data_processing_spark.operators.clustering import (
     nearest_centroid_sql,
     nearest_centroids_sql,
 )
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -122,6 +122,19 @@ def brute_force_topk(
     rounded similarities and every oracle are unchanged. Measured 1.6x
     end-to-end at 128k corpus vectors (5.2-5.5 -> 3.3-3.6 s, stable
     across interleaved A/B runs)."""
+    q, c, sim = _normed_sides(queries, corpus)
+    if round_dp is not None:
+        sim = F.round(sim, round_dp)
+    return _cosine_topk(q.crossJoin(F.broadcast(c)), sim, k)
+
+
+def _normed_sides(
+    queries: DataFrame, corpus: DataFrame
+) -> tuple[DataFrame, DataFrame, Column]:
+    """The two sides of an exact cosine contact with each norm hoisted to
+    a per-row column — ``(query_id, __qv, __qn)`` and
+    ``(neighbor_id, __cv, __cn)`` — and the unrounded pair cosine over
+    them."""
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("__qv"),
@@ -133,18 +146,27 @@ def brute_force_topk(
         norm(F.col("embedding")).alias("__cn"),
     )
     sim = dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn"))
-    if round_dp is not None:
-        sim = F.round(sim, round_dp)
-    scored = (
-        q.crossJoin(F.broadcast(c))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
+    return q, c, sim
+
+
+def _cosine_rank_window() -> WindowSpec:
+    """Per query, by ``cosine_sim`` descending, ``neighbor_id`` breaking
+    ties."""
+    return Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
     )
+
+
+def _cosine_topk(pairs: DataFrame, sim: Column, k: int) -> DataFrame:
+    """``(query_id, neighbor_id, cosine_sim, rank)``: the ``k`` best
+    non-self neighbours of each query among the candidate ``pairs``,
+    scored by ``sim``."""
+    scored = (
+        pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", sim.alias("cosine_sim"))
+    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(_cosine_rank_window()))
         .filter(F.col("rank") <= k)
     )
 
@@ -410,18 +432,7 @@ def ivf_query(
     qq = q.select("query_id", "__qv", F.explode("cells").alias("cell"))
     sim = cosine(F.col("__qv"), F.col("__cv"))
     sim = F.round(sim, 6)
-    scored = (
-        qq.join(assigned, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _cosine_topk(qq.join(assigned, "cell"), sim, k)
 
 
 def lsh_topk(
@@ -452,18 +463,7 @@ def lsh_topk(
     )
     sim = cosine(F.col("__qv"), F.col("__cv"))
     sim = F.round(sim, 6)
-    scored = (
-        qs.join(cs, "sig")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _cosine_topk(qs.join(cs, "sig"), sim, k)
 
 
 # ---------------------------------------------------------------------
@@ -1148,29 +1148,14 @@ def hard_negative_topk(
     near-dups never occupy shortlist slots, and the rank filter
     compiles to two-phase WindowGroupLimit top-k. Scores are rounded
     with id tie-breaks — fully oracle-replayable."""
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("__qv"),
-        norm(F.col("embedding")).alias("__qn"),
-    )
-    c = corpus.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("__cv"),
-        norm(F.col("embedding")).alias("__cn"),
-    )
-    sim = F.round(
-        dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")),
-        6,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
+    q, c, sim = _normed_sides(queries, corpus)
+    sim = F.round(sim, 6)
     return (
         q.crossJoin(F.broadcast(c))
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cosine_sim", sim)
         .filter(F.col("cosine_sim") < tau_dup)
-        .withColumn("rank", F.row_number().over(w))
+        .withColumn("rank", F.row_number().over(_cosine_rank_window()))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine_sim", "rank")
     )
@@ -1226,6 +1211,7 @@ def pq_fit(
     — free via column metadata, else one peek job; only a metadata-less
     STREAMING frame trusts the caller, since it cannot be peeked)."""
     from fireball_data_processing_spark.operators.clustering import (
+        coordinate_means,
         nearest_centroid_expr,
     )
 
@@ -1286,17 +1272,7 @@ def pq_fit(
                 )
             ).alias("__e")
         ).select("__e.__j", "__e.__cid", F.posexplode("__e.__v").alias("__pos", "__x"))
-        means = (
-            stacked.groupBy("__j", "__cid", "__pos")
-            .agg(F.round(F.avg("__x"), 6).alias("__m"))
-            .groupBy("__j", "__cid")
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.struct("__pos", "__m"))
-                ).alias("__coords")
-            )
-            .collect()
-        )
+        means = coordinate_means(stacked, "__j", "__cid")
         new = {
             (int(r["__j"]), int(r["__cid"])): [
                 float(c["__m"]) for c in r["__coords"]
@@ -1460,17 +1436,7 @@ def pq_topk(
         ),
         6,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("adc_d2", adc)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_d2", "rank")
-    )
+    return _adc_topk(c.crossJoin(F.broadcast(q)), adc, k)
 
 
 # ---------------------------------------------------------------------
@@ -1716,11 +1682,19 @@ def _ivfpq_adc_rank(
         ),
         6,
     )
+    return _adc_topk(joined, adc, k)
+
+
+def _adc_topk(pairs: DataFrame, adc: Column, k: int) -> DataFrame:
+    """``(query_id, neighbor_id, adc_d2, rank)``: the ``k`` nearest
+    non-self neighbours of each query among ``pairs`` by the approximate
+    distance ``adc``, ``neighbor_id`` breaking ties; the rank filter
+    compiles to two-phase WindowGroupLimit top-k."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_d2").asc(), F.col("neighbor_id").asc()
     )
     return (
-        joined.filter(F.col("query_id") != F.col("neighbor_id"))
+        pairs.filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("adc_d2", adc)
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)

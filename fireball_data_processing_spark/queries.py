@@ -15,7 +15,11 @@ Conventions that make the driver's hash compare deterministic:
 - timestamp deltas are computed on int64 microseconds and divided once.
 
 A CTE used by two oracles is a module constant ("Shared oracle CTE
-fragments" below); ``tests/test_oracle_fragments.py`` enforces it.
+fragments" below); ``tests/test_oracle_fragments.py`` enforces it. The
+Spark side follows the same rule: an input frame or code chain that two
+queries build is one helper here (or in the operator module that owns
+the batch form), and ``tests/test_spark_fragments.py`` fails on any run
+of six code lines written twice in the package.
 """
 
 from __future__ import annotations
@@ -25,7 +29,7 @@ import shutil
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -87,14 +91,15 @@ WITH words AS (
   FROM documents
 )"""
 
-# MinHash: distinct 3-word shingles -> 8 md5-min signatures -> 4 LSH
-# bands of 2 -> candidate pairs.
-_SHINGLES_CTE = _WORDS_CTE + """,
-sh AS (
+# Distinct 3-word shingles of a ``words`` CTE (either tokenizer; the
+# set-join oracle reads the non-empty one). MinHash: shingles -> 8
+# md5-min signatures -> 4 LSH bands of 2 -> candidate pairs.
+_SH_CTE = """sh AS (
   SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS shingle
   FROM words, UNNEST(generate_series(1, greatest(len(w) - 2, 0))) AS t(i)
   WHERE len(w) >= 3
 )"""
+_SHINGLES_CTE = _WORDS_CTE + ",\n" + _SH_CTE
 
 _MINHASH_CTE = _SHINGLES_CTE + """,
 sig AS (
@@ -161,13 +166,6 @@ jp AS (
   JOIN shs b ON b.doc_id = c.id_b
 ),
 grid AS (SELECT 10 * x AS threshold_pct FROM generate_series(1, 9) t(x))"""
-
-# the set-join and containment oracles' shingles (their series floor is 1)
-_SETJOIN_SH_CTE = """sh AS (
-  SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS shingle
-  FROM words, UNNEST(generate_series(1, greatest(len(w) - 2, 1))) AS t(i)
-  WHERE len(w) >= 3
-)"""
 
 # ExactSubstr spans: 8-gram hashes by position, then the hit positions
 # merged into maximal islands.
@@ -1564,7 +1562,7 @@ def q_doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "fb_pii_redact",
     f"""
-WITH t AS (SELECT * FROM {FX.values_sql(FX.PII_ROWS, FX.PII_COLUMNS)})
+WITH t AS (SELECT * FROM {FX.values_sql(FX.PII_ROWS, FX.PII_SCHEMA)})
 SELECT id,
   regexp_replace(regexp_replace(regexp_replace(content,
     '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{{2,}}', '[EMAIL]', 'g'),
@@ -2304,6 +2302,29 @@ def q_doc_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _per_source_count(df: DataFrame, name: str) -> DataFrame:
+    """``(source, name)``: rows per source of one corpus-pipeline stage."""
+    return df.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias(name)
+    )
+
+
+def _per_source_tokens(df: DataFrame, name: str) -> DataFrame:
+    """``(source, name, total_tokens)``: rows and ``n_tokens`` per source
+    of one corpus-pipeline stage."""
+    return df.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias(name),
+        F.sum("n_tokens").cast("bigint").alias("total_tokens"),
+    )
+
+
+def _per_source_bins(packed: DataFrame) -> DataFrame:
+    """``(source, n_bins)``: the packed bins each source fills."""
+    return packed.groupBy("source").agg(
+        F.countDistinct("bin_idx").cast("bigint").alias("n_bins")
+    )
+
+
 @query(
     "training_corpus_summary",
     _CLEANED_CTE + ",\n" + _DEDUPED_CTE + ",\n" + _QUALITY_CTE + """
@@ -2333,18 +2354,10 @@ def q_training_corpus_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     stages = build_training_corpus(d)
-    per = lambda df, name: df.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias(name)
-    )
-    cleaned = per(stages["cleaned"], "n_cleaned")
-    deduped = per(stages["deduped"], "n_deduped")
-    quality = stages["quality"].groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_quality"),
-        F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-    )
-    bins = stages["packed"].groupBy("source").agg(
-        F.countDistinct("bin_idx").cast("bigint").alias("n_bins")
-    )
+    cleaned = _per_source_count(stages["cleaned"], "n_cleaned")
+    deduped = _per_source_count(stages["deduped"], "n_deduped")
+    quality = _per_source_tokens(stages["quality"], "n_quality")
+    bins = _per_source_bins(stages["packed"])
     return (
         cleaned.join(deduped, "source")
         .join(quality, "source")
@@ -2672,7 +2685,7 @@ _CMD_RE = r"^(!|\$|%|\^|&|/|\]|a!|<)"
 @query(
     "fb_hp_banding",
     f"""
-WITH t AS (SELECT * FROM {FX.values_sql(FX.HP_ROWS, FX.HP_COLUMNS)}),
+WITH t AS (SELECT * FROM {FX.values_sql(FX.HP_ROWS, FX.HP_SCHEMA)}),
 b AS (
   SELECT name, temp_hp,
     CASE WHEN hp IS NOT NULL AND max_hp IS NOT NULL THEN
@@ -2726,7 +2739,7 @@ SELECT id, plain AS plain_text,
     '(?i)\\bdamn\\b', '----', 'g'),
     '(?i)\\bhell\\b', '----', 'g') AS clean_text
 FROM s
-""".replace("{V}", FX.values_sql(FX.RENDER_ROWS, FX.RENDER_COLUMNS)),
+""".replace("{V}", FX.values_sql(FX.RENDER_ROWS, FX.RENDER_SCHEMA)),
 )
 def q_discord_render_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F18 pipeline half (reference human_eval/discord_render.py:15-79 +
@@ -2759,7 +2772,7 @@ SELECT name,
     CASE WHEN owner IS NOT NULL AND upstream IS NOT NULL
          THEN owner || '-' || upstream END,
     fallback_id) AS caster_id
-FROM {FX.values_sql(FX.CASTER_ROWS, FX.CASTER_COLUMNS)}
+FROM {FX.values_sql(FX.CASTER_ROWS, FX.CASTER_SCHEMA)}
 """,
 )
 def q_fb_caster_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2790,7 +2803,7 @@ SELECT id,
        THEN '!' || substr(content, length(prefix) + 1)
        ELSE content END AS prefix_norm,
   len(string_split(content, ' ')) AS word_count
-FROM {FX.values_sql(FX.CONTENT_ROWS, FX.CONTENT_COLUMNS)}
+FROM {FX.values_sql(FX.CONTENT_ROWS, FX.CONTENT_SCHEMA)}
 """,
 )
 def q_fb_content_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2816,7 +2829,7 @@ def q_fb_content_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "fb_author_anonymize",
     f"""
-WITH t AS (SELECT * FROM {FX.values_sql(FX.AUTHOR_ROWS, FX.AUTHOR_COLUMNS)}),
+WITH t AS (SELECT * FROM {FX.values_sql(FX.AUTHOR_ROWS, FX.AUTHOR_SCHEMA)}),
 agg AS (
   SELECT instance_id, author_id, MIN(seq) AS first_seen,
          MAX(CASE WHEN author_bot THEN 1 ELSE 0 END) = 1 AS is_bot
@@ -2857,7 +2870,7 @@ SELECT instance_id, triple_id,
   COUNT(DISTINCT caster_id) AS n_casters,
   COUNT(DISTINCT caster_id) = 1 AS single_caster,
   COUNT(DISTINCT dm) AS n_dms
-FROM {FX.values_sql(FX.TRIPLE_ROWS, FX.TRIPLE_COLUMNS)}
+FROM {FX.values_sql(FX.TRIPLE_ROWS, FX.TRIPLE_SCHEMA)}
 GROUP BY instance_id, triple_id
 """,
 )
@@ -2911,7 +2924,7 @@ def q_fb_actor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _FB_HEUR_ORACLE = f"""
-WITH t AS (SELECT * FROM {FX.values_sql(FX.FB_EVENT_ROWS, FX.FB_EVENT_COLUMNS)}),
+WITH t AS (SELECT * FROM {FX.values_sql(FX.FB_EVENT_ROWS, FX.FB_EVENT_SCHEMA)}),
 feat AS (
   SELECT *,
     (event_type = 'message') AS is_msg,
@@ -3247,7 +3260,7 @@ def _automation_narration_oracle() -> str:
     NULL and are filtered before the ordered '; ' join. The fixture's
     deepest tree is 6 levels; a depth of 8 leaves margin, and deeper
     levels of shallow trees are simply empty."""
-    vs = FX.values_sql(FX.AUTOMATION_ROWS, ["name", "automation_result"])
+    vs = FX.values_sql(FX.AUTOMATION_ROWS, FX.AUTOMATION_SCHEMA)
     parts = [f"""
 WITH t AS (SELECT * FROM {vs}),
 n0 AS (
@@ -3437,7 +3450,7 @@ def q_fb_embed_finding(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "fb_tupper_candidates",
     f"""
-WITH t AS (SELECT * FROM {FX.values_sql(FX.TUPPER_ROWS, FX.TUPPER_COLUMNS)})
+WITH t AS (SELECT * FROM {FX.values_sql(FX.TUPPER_ROWS, FX.TUPPER_SCHEMA)})
 SELECT combat_id, orig_seq, MIN(echo_seq) AS echo_seq FROM (
   SELECT m1.combat_id, m1.seq AS orig_seq, m2.seq AS echo_seq
   FROM t m1 JOIN t m2
@@ -3489,7 +3502,7 @@ def q_fb_tupper_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH features AS (
   SELECT user_id, COUNT(*) AS event_count FROM events GROUP BY user_id
 ),
-labels AS (SELECT * FROM {FX.values_sql(FX.LABEL_ROWS, FX.LABEL_COLUMNS)})
+labels AS (SELECT * FROM {FX.values_sql(FX.LABEL_ROWS, FX.LABEL_SCHEMA)})
 SELECT f.user_id, f.event_count,
   COALESCE(GREATEST(l.rp_label, l.cmd_label), -1.0) AS rp_or_cmd,
   COALESCE(LEAST(l.rp_label, l.cmd_label), -1.0) AS rp_and_cmd,
@@ -3763,18 +3776,25 @@ FROM stats
 """
 
 
+def _event_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(rater, item, label)``: the synthetic rating derivation the
+    kappa and alpha queries share — rater ``user_id % 4``, item
+    ``event_id % 200``, label the event type."""
+    ev = load_table(spark, sf_dir, "events")
+    return ev.select(
+        (F.col("user_id") % 4).cast("string").alias("rater"),
+        (F.col("event_id") % 200).alias("item"),
+        F.col("event_type").alias("label"),
+    )
+
+
 @query("agreement_kappa", _KAPPA_ORACLE)
 def q_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A21 pairwise Cohen's kappa (reference
     human_eval/results_analysis.py:107-178): self-join raters on co-rated
     items, one JVM aggregation per pair (the applyInPandas variant lives in
     plans.agreement for richer statistics)."""
-    ev = load_table(spark, sf_dir, "events")
-    ratings = ev.select(
-        (F.col("user_id") % 4).cast("string").alias("rater"),
-        (F.col("event_id") % 200).alias("item"),
-        F.col("event_type").alias("label"),
-    )
+    ratings = _event_ratings(spark, sf_dir)
     a = ratings.select(
         F.col("rater").alias("rater_a"), "item", F.col("label").alias("label_a")
     )
@@ -3878,7 +3898,7 @@ def q_anonymized_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "fb_snippet_substitution",
     f"""
-WITH t AS (SELECT * FROM {FX.values_sql(FX.SNIPPET_ROWS, FX.SNIPPET_COLUMNS)}),
+WITH t AS (SELECT * FROM {FX.values_sql(FX.SNIPPET_ROWS, FX.SNIPPET_SCHEMA)}),
 w AS (
   SELECT *, string_split(content, ' ') AS words,
     COALESCE(list_position(string_split(content, ' '), snippet_name), 0) AS pos
@@ -3914,7 +3934,7 @@ def q_fb_snippet_substitution(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "fb_actor_strings",
     f"""
-WITH t AS (SELECT * FROM {FX.values_sql(FX.ACTOR_ROWS, FX.ACTOR_COLUMNS)}),
+WITH t AS (SELECT * FROM {FX.values_sql(FX.ACTOR_ROWS, FX.ACTOR_SCHEMA)}),
 s AS (
   SELECT name,
     concat_ws(' ',
@@ -4028,7 +4048,7 @@ def q_heuristics_long_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "fb_distill4_core",
     f"""
-WITH t AS (SELECT * FROM {FX.values_sql(FX.FB_EVENT_ROWS, FX.FB_EVENT_COLUMNS)}),
+WITH t AS (SELECT * FROM {FX.values_sql(FX.FB_EVENT_ROWS, FX.FB_EVENT_SCHEMA)}),
 feat AS (
   SELECT *,
     COALESCE(list_filter(
@@ -5690,6 +5710,26 @@ FROM diff GROUP BY status
 """
 
 
+def _snapshot_pair(d: DataFrame, fp: Column) -> tuple[DataFrame, DataFrame]:
+    """Two fingerprinted crawls of the documents table, by ``doc_id``
+    residue: ``old`` lacks the %7 keys (they are new), ``new`` lacks the
+    %11 keys (they were dropped) and appends "!" to the %5 texts (they
+    changed); each carries ``fp`` as column ``fp``."""
+    old = d.filter(F.pmod(F.col("doc_id"), F.lit(7)) != 0).withColumn("fp", fp)
+    new = (
+        d.filter(F.pmod(F.col("doc_id"), F.lit(11)) != 0)
+        .withColumn(
+            "text",
+            F.when(
+                F.pmod(F.col("doc_id"), F.lit(5)) == 0,
+                F.concat(F.col("text"), F.lit("!")),
+            ).otherwise(F.col("text")),
+        )
+        .withColumn("fp", fp)
+    )
+    return old, new
+
+
 @query("snapshot_diff_counts", _SNAPSHOT_DIFF_ORACLE)
 def q_snapshot_diff_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC snapshot diff (operators/snapshots.py): two corpus snapshots
@@ -5707,18 +5747,7 @@ def q_snapshot_diff_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     fp = fingerprint([F.col("text"), F.col("lang"), F.col("source")])
-    old = d.filter(F.pmod(F.col("doc_id"), F.lit(7)) != 0).withColumn("fp", fp)
-    new = (
-        d.filter(F.pmod(F.col("doc_id"), F.lit(11)) != 0)
-        .withColumn(
-            "text",
-            F.when(
-                F.pmod(F.col("doc_id"), F.lit(5)) == 0,
-                F.concat(F.col("text"), F.lit("!")),
-            ).otherwise(F.col("text")),
-        )
-        .withColumn("fp", fp)
-    )
+    old, new = _snapshot_pair(d, fp)
     diff = snapshot_diff(old, new, "doc_id")
     return diff.groupBy("status").agg(
         F.count("*").alias("n_keys"),
@@ -5768,18 +5797,7 @@ def q_incremental_refresh_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     fp = fingerprint([F.col("text"), F.col("source")])
-    old = d.filter(F.pmod(F.col("doc_id"), F.lit(7)) != 0).withColumn("fp", fp)
-    new = (
-        d.filter(F.pmod(F.col("doc_id"), F.lit(11)) != 0)
-        .withColumn(
-            "text",
-            F.when(
-                F.pmod(F.col("doc_id"), F.lit(5)) == 0,
-                F.concat(F.col("text"), F.lit("!")),
-            ).otherwise(F.col("text")),
-        )
-        .withColumn("fp", fp)
-    )
+    old, new = _snapshot_pair(d, fp)
 
     def process(docs: DataFrame) -> DataFrame:
         return docs.select(
@@ -5970,18 +5988,10 @@ def q_corpus_pipeline_v2_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same objects hit it too)
     stages["quality"].persist()
     stages["capped"].persist()
-    count_per = lambda df, name: df.groupBy("source").agg(  # noqa: E731
-        F.count(F.lit(1)).cast("bigint").alias(name)
-    )
-    quality = count_per(stages["quality"], "n_quality")
-    capped = count_per(stages["capped"], "n_capped")
-    mixed = stages["mixed"].groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_mixed"),
-        F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-    )
-    bins = stages["packed"].groupBy("source").agg(
-        F.countDistinct("bin_idx").cast("bigint").alias("n_bins")
-    )
+    quality = _per_source_count(stages["quality"], "n_quality")
+    capped = _per_source_count(stages["capped"], "n_capped")
+    mixed = _per_source_tokens(stages["mixed"], "n_mixed")
+    bins = _per_source_bins(stages["packed"])
     return (
         quality.join(capped, "source")
         .join(mixed, "source")
@@ -6251,7 +6261,7 @@ def q_cross_doc_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return line_dedup(d, seg_words=8, min_docs=2, keep_first=True)
 
 
-_SETJOIN_ORACLE = _WORDS_NONEMPTY_CTE + ",\n" + _SETJOIN_SH_CTE + """,
+_SETJOIN_ORACLE = _WORDS_NONEMPTY_CTE + ",\n" + _SH_CTE + """,
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
@@ -6416,20 +6426,13 @@ def q_corpus_pipeline_v3_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages = build_training_corpus(d, segment_dedup_min_docs=2, segment_words=8)
     stages["segment_deduped"].persist()
     stages["quality"].persist()
-    cleaned = stages["cleaned"].groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cleaned")
-    )
+    cleaned = _per_source_count(stages["cleaned"], "n_cleaned")
     segd = stages["segment_deduped"].groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_seg_deduped"),
         F.sum("n_seg_removed").cast("bigint").alias("seg_removed"),
     )
-    quality = stages["quality"].groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_quality"),
-        F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-    )
-    bins = stages["packed"].groupBy("source").agg(
-        F.countDistinct("bin_idx").cast("bigint").alias("n_bins")
-    )
+    quality = _per_source_tokens(stages["quality"], "n_quality")
+    bins = _per_source_bins(stages["packed"])
     return (
         cleaned.join(segd, "source")
         .join(quality, "source")
@@ -6465,7 +6468,7 @@ def q_winnow_fingerprint_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winnow_fingerprints(d, k=4, window=4).distinct()
 
 
-_CONTAINMENT_ORACLE = _WORDS_CTE + ",\n" + _SETJOIN_SH_CTE + """,
+_CONTAINMENT_ORACLE = _SHINGLES_CTE + """,
 bench AS (SELECT doc_id AS bench_id, shingle FROM sh WHERE doc_id % 10 = 0),
 bsize AS (SELECT bench_id, COUNT(*) AS n_bench_grams FROM bench GROUP BY bench_id),
 train AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 10 <> 0),
@@ -7918,7 +7921,10 @@ def q_dedup_token_mass_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct rows stay pair-bounded x 9; the corpus-sized token frame
     streams against the BROADCAST hit set; zero rows restored by a grid
     left-merge."""
-    from fireball_data_processing_spark.operators.dedup import threshold_doc_hits
+    from fireball_data_processing_spark.operators.dedup import (
+        threshold_doc_hits,
+        threshold_grid,
+    )
 
     d = load_table(spark, sf_dir, "documents")
     j = _lsh_jaccard_pairs(d)
@@ -7948,11 +7954,7 @@ def q_dedup_token_mass_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("__toks").cast("bigint").alias("n_tokens"),
         )
     )
-    grid = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(p).cast("long") for p in range(10, 100, 10)])
-        ).alias("threshold_pct")
-    )
+    grid = threshold_grid(spark)
     return (
         grid.join(F.broadcast(agg), "threshold_pct", "left")
         .select(
@@ -8009,6 +8011,36 @@ def q_dedup_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quality_survivors(comp, scores).orderBy("cluster_id")
 
 
+def _pq_subspace_ctes(
+    m: int, ks: int, n_iter: int, src: str, prelude0: str
+) -> tuple[str, str, str, str]:
+    """One namespaced unrolled-Lloyd chain (``p{j}``) per subspace slice
+    CTE ``{src}{j}``, the first chain opening with ``prelude0``. Returns
+    the chains' text, the JOINs and columns that attach each row's ``m``
+    codes (``a{j}``, ``c{j}``) and the JOINs of the final codebooks
+    ``b{j}`` onto a codes row ``x``."""
+    ctes, finals, cfin = [], [], []
+    for j in range(m):
+        cte, fin = _kmeans_cte(
+            ks,
+            n_iter,
+            prelude=(prelude0 if j == 0 else ""),
+            src=f"{src}{j}",
+            ns=f"p{j}",
+        )
+        ctes.append(cte)
+        finals.append(fin)
+        cfin.append(f"p{j}c{n_iter}f")
+    codes_joins = " ".join(
+        f"JOIN {finals[j]} a{j} USING (vec_id)" for j in range(m)
+    )
+    codes_cols = ", ".join(f"a{j}.cid AS c{j}" for j in range(m))
+    book_joins = "\n  ".join(
+        f"JOIN {cfin[j]} b{j} ON b{j}.cid = x.c{j}" for j in range(m)
+    )
+    return "".join(ctes), codes_joins, codes_cols, book_joins
+
+
 def _pq_oracle(
     m: int, ks: int, n_iter: int, dim: int, n_queries: int, k: int
 ) -> str:
@@ -8025,32 +8057,16 @@ def _pq_oracle(
         "\nWITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), "
         + slices
     )
-    ctes, finals, cfin = [], [], []
-    for j in range(m):
-        cte, fin = _kmeans_cte(
-            ks,
-            n_iter,
-            prelude=(prelude0 if j == 0 else ""),
-            src=f"s{j}",
-            ns=f"p{j}",
-        )
-        ctes.append(cte)
-        finals.append(fin)
-        cfin.append(f"p{j}c{n_iter}f")
-    codes_joins = " ".join(
-        f"JOIN {finals[j]} a{j} USING (vec_id)" for j in range(m)
+    ctes, codes_joins, codes_cols, book_joins = _pq_subspace_ctes(
+        m, ks, n_iter, "s", prelude0
     )
-    codes_cols = ", ".join(f"a{j}.cid AS c{j}" for j in range(m))
     adc_terms = "\n      + ".join(
         f"list_sum(list_transform(generate_series(1, {sub}), "
         f"i -> (q.v[i + {j * sub}] - b{j}.cv[i]) * (q.v[i + {j * sub}] - b{j}.cv[i])))"
         for j in range(m)
     )
-    book_joins = "\n  ".join(
-        f"JOIN {cfin[j]} b{j} ON b{j}.cid = x.c{j}" for j in range(m)
-    )
     return (
-        "".join(ctes)
+        ctes
         + f""",
 codes AS (
   SELECT e.vec_id, {codes_cols}
@@ -8136,31 +8152,19 @@ res AS (
   FROM {coarse_final} a JOIN {ccf} c USING (cid)
 ),
 {slices}"""
-    ctes, finals, cfin = [], [], []
-    for j in range(m):
-        cte, fin = _kmeans_cte(
-            ks, pq_n_iter, prelude="", src=f"rs{j}", ns=f"p{j}"
-        )
-        ctes.append(cte)
-        finals.append(fin)
-        cfin.append(f"p{j}c{pq_n_iter}f")
-    codes_joins = " ".join(
-        f"JOIN {finals[j]} a{j} USING (vec_id)" for j in range(m)
+    ctes, codes_joins, codes_cols, book_joins = _pq_subspace_ctes(
+        m, ks, pq_n_iter, "rs", ""
     )
-    codes_cols = ", ".join(f"a{j}.cid AS c{j}" for j in range(m))
     adc_terms = "\n      + ".join(
         f"list_sum(list_transform(generate_series(1, {sub}), "
         f"i -> (qr.rv[i + {j * sub}] - b{j}.cv[i]) "
         f"* (qr.rv[i + {j * sub}] - b{j}.cv[i])))"
         for j in range(m)
     )
-    book_joins = "\n  ".join(
-        f"JOIN {cfin[j]} b{j} ON b{j}.cid = x.c{j}" for j in range(m)
-    )
     return (
         coarse_cte
         + res
-        + "".join(ctes)
+        + ctes
         + f""",
 codes AS (
   SELECT r.vec_id, r.cell, {codes_cols}
@@ -8303,19 +8307,10 @@ FROM agg
 """
 
 
-@query("doremi_domain_weights", _DOREMI_ORACLE)
-def q_doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Excess-loss domain reweighting (operators/selection.py
-    doremi_mixture_weights — Xie et al. 2023 DoReMi): per-language
-    mixture weights from the one-step multiplicative-weights update
-    over clipped excess loss, using the engine's unigram LM as the
-    weak proxy and its bigram LM as the stronger reference (the
-    per-document gap — what context predicts that unigrams can't — is
-    the learnability signal; domains with more of it up-weight). One
-    groupBy(domain) over the corpus-sized joined score frame; softmax
-    and uniform smoothing run over the DOMAIN-sized table only. The
-    oracle replays both LM scores, the clipped gap, and the smoothed
-    softmax to 6 dp."""
+def _lang_doremi_weights(d: DataFrame) -> DataFrame:
+    """``(domain, n_docs, avg_excess, weight)``: DoReMi mixture weights
+    per language, from the clipped per-document excess of the unigram
+    over the bigram LM score (eta 1.0, smoothing 0.1)."""
     from fireball_data_processing_spark.functions.textstats import (
         bigram_logprob,
         unigram_logprob,
@@ -8324,7 +8319,6 @@ def q_doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         doremi_mixture_weights,
     )
 
-    d = load_table(spark, sf_dir, "documents")
     uni = unigram_logprob(d).select(
         "doc_id", F.col("avg_neg_log2_prob").alias("__uni")
     )
@@ -8345,6 +8339,23 @@ def q_doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored, domain_col="lang", excess_col="__excess",
         eta=1.0, smoothing=0.1,
     )
+
+
+@query("doremi_domain_weights", _DOREMI_ORACLE)
+def q_doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Excess-loss domain reweighting (operators/selection.py
+    doremi_mixture_weights — Xie et al. 2023 DoReMi): per-language
+    mixture weights from the one-step multiplicative-weights update
+    over clipped excess loss, using the engine's unigram LM as the
+    weak proxy and its bigram LM as the stronger reference (the
+    per-document gap — what context predicts that unigrams can't — is
+    the learnability signal; domains with more of it up-weight). One
+    groupBy(domain) over the corpus-sized joined score frame; softmax
+    and uniform smoothing run over the DOMAIN-sized table only. The
+    oracle replays both LM scores, the clipped gap, and the smoothed
+    softmax to 6 dp."""
+    d = load_table(spark, sf_dir, "documents")
+    return _lang_doremi_weights(d)
 
 
 @query(
@@ -8822,37 +8833,11 @@ def q_domain_budget_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lang, bucket), budgets broadcast null-safely — no language ever
     serializes the others. The oracle chains both LMs, the weight
     update, the budget slicing, and the per-language plain-window fill."""
-    from fireball_data_processing_spark.functions.textstats import (
-        bigram_logprob,
-        quality_features,
-        unigram_logprob,
-    )
-    from fireball_data_processing_spark.operators.selection import (
-        budget_fill,
-        doremi_mixture_weights,
-    )
+    from fireball_data_processing_spark.functions.textstats import quality_features
+    from fireball_data_processing_spark.operators.selection import budget_fill
 
     d = load_table(spark, sf_dir, "documents")
-    uni = unigram_logprob(d).select(
-        "doc_id", F.col("avg_neg_log2_prob").alias("__uni")
-    )
-    bi = bigram_logprob(d).select(
-        "doc_id", F.col("avg_neg_log2_bigram_prob").alias("__bi")
-    )
-    excess = (
-        uni.join(bi, "doc_id")
-        .join(d.select("doc_id", "lang"), "doc_id")
-        .select(
-            "lang",
-            F.greatest(F.col("__uni") - F.col("__bi"), F.lit(0.0)).alias(
-                "__excess"
-            ),
-        )
-    )
-    budgets = doremi_mixture_weights(
-        excess, domain_col="lang", excess_col="__excess",
-        eta=1.0, smoothing=0.1,
-    ).select(
+    budgets = _lang_doremi_weights(d).select(
         F.col("domain").alias("lang"),
         F.round(F.col("weight") * 30000, 0).cast("bigint").alias("budget"),
     )
@@ -8920,12 +8905,7 @@ def q_agreement_krippendorff(spark: SparkSession, sf_dir: str) -> DataFrame:
         krippendorff_alpha_nominal,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    ratings = ev.select(
-        (F.col("user_id") % 4).cast("string").alias("rater"),
-        (F.col("event_id") % 200).alias("item"),
-        F.col("event_type").alias("label"),
-    )
+    ratings = _event_ratings(spark, sf_dir)
     return krippendorff_alpha_nominal(ratings)
 
 
@@ -9334,10 +9314,12 @@ def _ttr_xy(d: DataFrame) -> DataFrame:
     )
 
 
-def _logistic_oracle(n_iter: int = 2) -> str:
-    """Unrolled Newton-Raphson replaying operators/calibration.py
-    logistic_fit_2param: 8-dp rounding of the five gradient/Hessian sums
-    and of the updated coefficients each step (the kmeans contract)."""
+def _newton_chain_sql(n_iter: int) -> str:
+    """``_TTR_DOCS_CTE`` and the unrolled Newton-Raphson chain replaying
+    operators/calibration.py logistic_fit_2param: ``b{t}_`` holds the
+    coefficients after step t, with 8-dp rounding of the five
+    gradient/Hessian sums and of the updated coefficients each step (the
+    kmeans contract)."""
     parts = [_TTR_DOCS_CTE + ",\nb0_ AS (SELECT 0.0 AS b0, 0.0 AS b1)"]
     for t in range(1, n_iter + 1):
         parts.append(
@@ -9359,16 +9341,19 @@ b{t}_ AS (
   FROM s{t}
 )""".format(t=t, p=t - 1)
         )
-    parts.append(
-        f"""
+    return "".join(parts)
+
+
+def _logistic_oracle(n_iter: int = 2) -> str:
+    """The Newton chain (:func:`_newton_chain_sql`) and the fitted
+    coefficients' logloss."""
+    return _newton_chain_sql(n_iter) + f"""
 SELECT ROUND(MAX(b0), 6) AS intercept, ROUND(MAX(b1), 6) AS slope,
   COUNT(*)::BIGINT AS n,
   ROUND(-AVG(y * LN(p) + (1 - y) * LN(1 - p)), 6) AS logloss
 FROM (SELECT x, y, b0, b1, 1.0 / (1.0 + EXP(-(b0 + b1 * x))) AS p
       FROM d, b{n_iter}_) z
 """
-    )
-    return "".join(parts)
 
 
 @query("logistic_quality_calibration", _logistic_oracle(n_iter=2))
@@ -9397,29 +9382,7 @@ def _reliability_oracle(n_iter: int = 2, n_bins: int = 10) -> str:
     CTE chain as _logistic_oracle), round each predicted probability to
     8 dp so both engines bin identical doubles, equal-width bin, then
     the support-weighted ECE via a window over the bin frame."""
-    parts = [_TTR_DOCS_CTE + ",\nb0_ AS (SELECT 0.0 AS b0, 0.0 AS b1)"]
-    for t in range(1, n_iter + 1):
-        parts.append(
-            """,
-s{t} AS (
-  SELECT ROUND(SUM(y - p), 8) AS g0, ROUND(SUM((y - p) * x), 8) AS g1,
-         ROUND(SUM(p * (1 - p)), 8) AS h00,
-         ROUND(SUM(p * (1 - p) * x), 8) AS h01,
-         ROUND(SUM(p * (1 - p) * x * x), 8) AS h11,
-         MAX(b0) AS b0, MAX(b1) AS b1
-  FROM (SELECT x, y, b0, b1,
-          1.0 / (1.0 + EXP(-(b0 + b1 * x))) AS p
-        FROM d, b{p}_) z
-),
-b{t}_ AS (
-  SELECT
-    ROUND(b0 + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01), 8) AS b0,
-    ROUND(b1 + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01), 8) AS b1
-  FROM s{t}
-)""".format(t=t, p=t - 1)
-        )
-    parts.append(
-        f""",
+    return _newton_chain_sql(n_iter) + f""",
 scored AS (
   SELECT ROUND(1.0 / (1.0 + EXP(-(b0 + b1 * x))), 8) AS p, y,
          doc_id
@@ -9442,8 +9405,6 @@ SELECT bin, n, avg_conf, avg_acc,
           / SUM(n) OVER (), 6) AS ece
 FROM bins ORDER BY bin
 """
-    )
-    return "".join(parts)
 
 
 @query("reliability_diagram_ece", _reliability_oracle(n_iter=2, n_bins=10))
@@ -9646,7 +9607,11 @@ def q_weekly_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cohort_retention(ev)
 
 
-def _bootstrap_oracle(n_replicates: int = 32) -> str:
+def _poisson_draw_sql(n_replicates: int) -> tuple[str, str]:
+    """The oracle side of the chunked Poisson(1) draw: ``hdefs``, the
+    ``h0..`` md5 digest columns of ``event_id``, and the replication
+    count of row ``e`` in replicate ``b.b``, replayed from its hex chunk
+    through the literal CDF ladder."""
     from fireball_data_processing_spark.operators.bootstrap import (
         PER_DIGEST,
         poisson_cdf_sql,
@@ -9666,11 +9631,16 @@ def _bootstrap_oracle(n_replicates: int = 32) -> str:
         f"((b.b - 1) % {per}) * {width} + 1, {width}))::BIGINT"
         f" / {float(16 ** width)!r}"
     )
+    return hdefs, poisson_cdf_sql(u)
+
+
+def _bootstrap_oracle(n_replicates: int = 32) -> str:
+    hdefs, k = _poisson_draw_sql(n_replicates)
     return f"""
 WITH pre AS (SELECT value, {hdefs} FROM events),
 r AS (
   SELECT b.b, e.value::DOUBLE AS x,
-    ({poisson_cdf_sql(u)})::DOUBLE AS k
+    ({k})::DOUBLE AS k
   FROM pre e, UNNEST(generate_series(1, {n_replicates})) AS b(b)
 ),
 reps AS (
@@ -9814,25 +9784,7 @@ def q_event_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ab_delta_oracle(n_replicates: int = 32) -> str:
-    from fireball_data_processing_spark.operators.bootstrap import (
-        PER_DIGEST,
-        poisson_cdf_sql,
-    )
-
-    per = PER_DIGEST
-    width = 32 // per
-    n_hashes = (n_replicates + per - 1) // per
-    hdefs = ", ".join(
-        f"md5('boot{h}#' || CAST(event_id AS VARCHAR)) AS h{h}"
-        for h in range(n_hashes)
-    )
-    hlist = ", ".join(f"e.h{h}" for h in range(n_hashes))
-    u = (
-        f"('0x' || substr(list_value({hlist})"
-        f"[CAST(FLOOR((b.b - 1) / {per}) AS INT) + 1], "
-        f"((b.b - 1) % {per}) * {width} + 1, {width}))::BIGINT"
-        f" / {float(16 ** width)!r}"
-    )
+    hdefs, k = _poisson_draw_sql(n_replicates)
     return f"""
 WITH pre AS (
   SELECT value,
@@ -9844,7 +9796,7 @@ WITH pre AS (
 ),
 r AS (
   SELECT e.g, b.b, e.value::DOUBLE AS x,
-    ({poisson_cdf_sql(u)})::DOUBLE AS k
+    ({k})::DOUBLE AS k
   FROM pre e, UNNEST(generate_series(1, {n_replicates})) AS b(b)
 ),
 reps AS (
@@ -10261,6 +10213,17 @@ def q_vocab_richness_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vocab_richness(toks, "token")
 
 
+def _bandit_log(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(context, action, reward)``: the events read as a logged bandit —
+    user segment ``user_id % 4``, the event type served, its value."""
+    ev = load_table(spark, sf_dir, "events")
+    return ev.select(
+        (F.col("user_id") % 4).alias("context"),
+        F.col("event_type").alias("action"),
+        F.col("value").alias("reward"),
+    )
+
+
 @query(
     "offpolicy_value_snips",
     _LOGGED_POLICY_CTE + """,
@@ -10299,12 +10262,7 @@ def q_offpolicy_value_snips(spark: SparkSession, sf_dir: str) -> DataFrame:
     data."""
     from fireball_data_processing_spark.operators.ope import snips_value
 
-    ev = load_table(spark, sf_dir, "events")
-    base = ev.select(
-        (F.col("user_id") % 4).alias("context"),
-        F.col("event_type").alias("action"),
-        F.col("value").alias("reward"),
-    )
+    base = _bandit_log(spark, sf_dir)
     uniform = {a: 0.2 for a in ["view", "click", "purchase", "signup", "error"]}
     return snips_value(
         base, "context", "action", "reward", target_probs=uniform
@@ -10631,13 +10589,8 @@ def q_embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "kn_bigram_doc_scores",
-    """
-WITH words AS (
-  SELECT doc_id,
-    list_filter(string_split(trim(regexp_replace(lower(text), '\\s+', ' ',
-      'g')), ' '), s -> s <> '') AS w
-  FROM documents
-),
+    _WORDS_NONEMPTY_CTE
+    + """,
 occ AS """ + _BIGRAMS_BODY + """,
 types AS (SELECT prev, cur, COUNT(*)::BIGINT AS c FROM occ GROUP BY 1, 2),
 l AS (
@@ -10815,12 +10768,7 @@ def q_offpolicy_value_dr(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast joins; one four-sum final pass; zero collects."""
     from fireball_data_processing_spark.operators.ope import dr_value
 
-    ev = load_table(spark, sf_dir, "events")
-    base = ev.select(
-        (F.col("user_id") % 4).alias("context"),
-        F.col("event_type").alias("action"),
-        F.col("value").alias("reward"),
-    )
+    base = _bandit_log(spark, sf_dir)
     uniform = {a: 0.2 for a in ["view", "click", "purchase", "signup", "error"]}
     return dr_value(base, "context", "action", "reward", uniform)
 
@@ -11496,6 +11444,16 @@ def q_km_conversion_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines (ln(0) is NULL in Spark, -inf in DuckDB)."""
     from fireball_data_processing_spark.operators.survival import km_curve
 
+    return km_curve(_conversion_subjects(spark, sf_dir, []))
+
+
+def _conversion_subjects(
+    spark: SparkSession, sf_dir: str, cols: list[Column]
+) -> DataFrame:
+    """One survival subject per signed-up user: ``cols``, then
+    ``duration`` — whole days from the first signup to the first purchase
+    after it, or to the corpus horizon when none came — and ``event``,
+    whether a purchase came (a censored subject otherwise)."""
     ev = load_table(spark, sf_dir, "events")
     s = (
         ev.filter(F.col("event_type") == "signup")
@@ -11510,10 +11468,11 @@ def q_km_conversion_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("ts").alias("p_ts"))
     )
     tmax = ev.agg(F.max("ts").alias("t"))
-    subj = (
+    return (
         s.join(p, "user_id", "left")
         .crossJoin(F.broadcast(tmax))
         .select(
+            *cols,
             F.floor(
                 (F.coalesce(F.col("p_ts"), F.col("t")) - F.col("s_ts"))
                 / F.lit(86400.0 * 1e9)
@@ -11523,7 +11482,6 @@ def q_km_conversion_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("p_ts").isNotNull().alias("event"),
         )
     )
-    return km_curve(subj)
 
 
 @query(
@@ -11925,6 +11883,23 @@ def q_token_diversity_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lang")
 
 
+def _daily_purchase_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(day, share)``: the purchase share of each day's events, 8 dp —
+    the series the CUSUM and EWMA charts watch."""
+    ev = load_table(spark, sf_dir, "events")
+    return ev.groupBy(
+        F.floor(F.col("ts") / F.lit(86400.0 * 1e9)).cast("bigint").alias("day")
+    ).agg(
+        F.round(
+            F.sum(
+                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
+            ).cast("double")
+            / F.count(F.lit(1)),
+            8,
+        ).alias("share")
+    )
+
+
 @query(
     "cusum_daily_conversion",
     _DAILY_SHARE_CTE + """,
@@ -11955,18 +11930,7 @@ def q_cusum_daily_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one rounded scalar (bounded collect)."""
     from fireball_data_processing_spark.operators.drift import cusum_alarm
 
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.floor(F.col("ts") / F.lit(86400.0 * 1e9)).cast("bigint").alias("day")
-    ).agg(
-        F.round(
-            F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            ).cast("double")
-            / F.count(F.lit(1)),
-            8,
-        ).alias("share")
-    )
+    daily = _daily_purchase_share(spark, sf_dir)
     mu = daily.agg(F.round(F.avg("share"), 8).alias("mu")).first()["mu"]
     return cusum_alarm(
         daily,
@@ -12020,18 +11984,7 @@ def q_ewma_daily_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect)."""
     from fireball_data_processing_spark.operators.drift import ewma_chart
 
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.floor(F.col("ts") / F.lit(86400.0 * 1e9)).cast("bigint").alias("day")
-    ).agg(
-        F.round(
-            F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            ).cast("double")
-            / F.count(F.lit(1)),
-            8,
-        ).alias("share")
-    )
+    daily = _daily_purchase_share(spark, sf_dir)
     base = daily.agg(
         F.round(F.avg("share"), 8).alias("mu"),
         F.round(F.coalesce(F.stddev_pop("share"), F.lit(0.0)), 8).alias(
@@ -12047,6 +12000,19 @@ def q_ewma_daily_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         lam=0.2,
         width=3.0,
     )
+
+
+def _daily_type_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(event_type, day, v)``: each type's daily event count as doubles —
+    the series the trend and autocorrelation queries fit."""
+    ev = load_table(spark, sf_dir, "events")
+    return ev.groupBy(
+        "event_type",
+        F.floor(F.col("ts") / F.lit(86400.0 * 1e9))
+        .cast("bigint")
+        .cast("double")
+        .alias("day"),
+    ).agg(F.count(F.lit(1)).cast("double").alias("v"))
 
 
 @query(
@@ -12090,14 +12056,7 @@ def q_theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair/point frames."""
     from fireball_data_processing_spark.operators.drift import theil_sen
 
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.floor(F.col("ts") / F.lit(86400.0 * 1e9))
-        .cast("bigint")
-        .cast("double")
-        .alias("day"),
-    ).agg(F.count(F.lit(1)).cast("double").alias("v"))
+    daily = _daily_type_volume(spark, sf_dir)
     return theil_sen(
         daily, time_col="day", value_col="v", group_col="event_type"
     )
@@ -12155,14 +12114,7 @@ def q_acf_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides a lag-grain window)."""
     from fireball_data_processing_spark.operators.drift import acf_profile
 
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.floor(F.col("ts") / F.lit(86400.0 * 1e9))
-        .cast("bigint")
-        .cast("double")
-        .alias("day"),
-    ).agg(F.count(F.lit(1)).cast("double").alias("v"))
+    daily = _daily_type_volume(spark, sf_dir)
     return acf_profile(
         daily, "day", "v", group_col="event_type", max_lag=7
     )
@@ -12367,33 +12319,8 @@ def q_logrank_conversion_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary aggregate over the duration-grain terms."""
     from fireball_data_processing_spark.operators.survival import logrank_test
 
-    ev = load_table(spark, sf_dir, "events")
-    s = (
-        ev.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("s_ts"))
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(s, "user_id")
-        .filter(F.col("ts") >= F.col("s_ts"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("p_ts"))
-    )
-    tmax = ev.agg(F.max("ts").alias("t"))
-    subj = (
-        s.join(p, "user_id", "left")
-        .crossJoin(F.broadcast(tmax))
-        .select(
-            (F.col("user_id") % 2).cast("string").alias("g"),
-            F.floor(
-                (F.coalesce(F.col("p_ts"), F.col("t")) - F.col("s_ts"))
-                / F.lit(86400.0 * 1e9)
-            )
-            .cast("bigint")
-            .alias("duration"),
-            F.col("p_ts").isNotNull().alias("event"),
-        )
+    subj = _conversion_subjects(
+        spark, sf_dir, [(F.col("user_id") % 2).cast("string").alias("g")]
     )
     return logrank_test(subj, group_col="g")
 

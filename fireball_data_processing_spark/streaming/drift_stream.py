@@ -27,7 +27,7 @@ from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from fireball_data_processing_spark.schema import StreamSchema
-from fireball_data_processing_spark.sources.tables import normalize_event_time
+from fireball_data_processing_spark.streaming.windowed import event_time_stream
 
 __all__ = ["windowed_mix_stream", "score_windows_psi", "drift_monitor_stream"]
 
@@ -42,19 +42,9 @@ def windowed_mix_stream(
     """(window_start, bucket, n) per tumbling 1-hour event-time window — the
     streaming-stateful half of the monitor; append mode emits each
     window once, when the 30-minute watermark closes it."""
-    stream = normalize_event_time(
-        spark.readStream.schema(file_schema).parquet(source_dir),
-        s.ts_col,
-    )
-    if s.ts_unit == "nanos_long":
-        ts = F.timestamp_micros(F.expr(f"{s.ts_col} div 1000"))
-    elif s.ts_unit == "double_seconds":
-        ts = F.timestamp_seconds(F.col(s.ts_col))
-    else:
-        ts = F.col(s.ts_col)
+    stream = event_time_stream(spark, source_dir, file_schema, s)
     return (
-        stream.withColumn("event_ts", ts)
-        .withWatermark("event_ts", "30 minutes")
+        stream.withWatermark("event_ts", "30 minutes")
         .groupBy(F.window("event_ts", "1 hour"), F.col(bucket_col).alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("window.start").alias("window_start"), "bucket", "n")

@@ -18,7 +18,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, GroupedData, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -122,7 +122,21 @@ def stateful_buffer_flush_stream(
         spark.readStream.schema(file_schema).parquet(source_dir),
         s.ts_col,
     )
-    return stream.groupBy(F.col(s.instance_col)).applyInPandasWithState(
+    return append_with_state(
+        stream.groupBy(F.col(s.instance_col)), fn, out_schema, state_schema
+    )
+
+
+def append_with_state(
+    grouped: GroupedData,
+    fn: Callable,
+    out_schema: StructType | str,
+    state_schema: StructType | str,
+) -> DataFrame:
+    """``applyInPandasWithState`` in append mode with no timeout: the
+    state handler ``fn`` emits each row once and keeps its carry in
+    ``state_schema``."""
+    return grouped.applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType=state_schema,

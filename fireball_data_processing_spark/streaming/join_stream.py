@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from fireball_data_processing_spark.schema import StreamSchema
-from fireball_data_processing_spark.sources.tables import normalize_event_time
+from fireball_data_processing_spark.streaming.windowed import event_time_stream
 
 
 def interval_join_stream(
@@ -51,17 +51,7 @@ def interval_join_stream(
     in append mode — a pair is emitted exactly once, when both events have
     arrived and neither can be retracted by late data.
     """
-    stream = normalize_event_time(
-        spark.readStream.schema(file_schema).parquet(source_dir),
-        s.ts_col,
-    )
-    if s.ts_unit == "nanos_long":
-        ts = F.timestamp_micros(F.expr(f"{s.ts_col} div 1000"))
-    elif s.ts_unit == "double_seconds":
-        ts = F.timestamp_seconds(F.col(s.ts_col))
-    else:
-        ts = F.col(s.ts_col)
-    base = stream.withColumn("event_ts", ts)
+    base = event_time_stream(spark, source_dir, file_schema, s)
 
     anchors = (
         base.filter(F.col(s.type_col) == "purchase")

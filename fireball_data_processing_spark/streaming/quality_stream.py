@@ -44,8 +44,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from fireball_data_processing_spark.functions.text import normalize_text
-from fireball_data_processing_spark.functions.textstats import gopher_rules
+from fireball_data_processing_spark.functions.textstats import (
+    bigram_occurrences,
+    gopher_rules,
+    word_arrays,
+)
 
 __all__ = [
     "LmIndex",
@@ -67,34 +70,6 @@ class LmIndex(NamedTuple):
     vocab: DataFrame
 
 
-def _word_arrays(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    return docs.select(
-        F.col(id_col),
-        F.filter(
-            F.split(normalize_text(F.col(text_col)), " "), lambda s: s != ""
-        ).alias("__words"),
-    )
-
-
-def _bigram_occurrences(pre: DataFrame, id_col: str) -> DataFrame:
-    words = F.col("__words")
-    bigrams = F.when(
-        F.size(words) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - 2),
-            lambda i: F.struct(
-                F.element_at(words, i + 1).alias("prev"),
-                F.element_at(words, i + 2).alias("cur"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<prev:string,cur:string>>"))
-    return pre.select(F.col(id_col), F.explode(bigrams).alias("bg")).select(
-        id_col,
-        F.col("bg.prev").alias("__prev"),
-        F.col("bg.cur").alias("__cur"),
-    )
-
-
 def corpus_lm_index(docs: DataFrame) -> LmIndex:
     """Train the frozen bigram LM over the existing corpus: bigram
     counts, continuation totals, vocabulary size — same tokenization
@@ -111,8 +86,8 @@ def corpus_lm_index(docs: DataFrame) -> LmIndex:
     pipeline and an occurrence-grain shuffle twice). Counts are integers
     < 2^53, so the double sum is exact — identical cp to the
     occurrence-grain count."""
-    pre = _word_arrays(docs, "text", "doc_id")
-    occ = _bigram_occurrences(pre, "doc_id")
+    pre = word_arrays(docs, "text")
+    occ = bigram_occurrences(pre)
     bigrams = occ.groupBy(
         F.col("__prev").alias("prev"), F.col("__cur").alias("cur")
     ).agg(F.count(F.lit(1)).cast("double").alias("cb"))
@@ -141,8 +116,8 @@ def score_against_lm(docs: DataFrame, lm: LmIndex) -> DataFrame:
     tables (broadcast when compact) -> one-row vocab broadcast -> per-
     doc rollup. No window over the corpus, no self-training shuffles.
     """
-    pre = _word_arrays(docs, "text", "doc_id")
-    occ = _bigram_occurrences(pre, "doc_id")
+    pre = word_arrays(docs, "text")
+    occ = bigram_occurrences(pre)
     joined = (
         occ.join(
             lm.bigrams,

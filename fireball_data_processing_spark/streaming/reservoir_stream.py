@@ -40,6 +40,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from fireball_data_processing_spark.operators.sampling import hash_rank
+from fireball_data_processing_spark.streaming.heuristics_stream import (
+    append_with_state,
+)
 
 __all__ = ["stream_weighted_reservoir"]
 
@@ -105,10 +108,6 @@ def stream_weighted_reservoir(
             ).alias("__es"),
         )
     )
-    return stream.groupBy("bucket").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return append_with_state(
+        stream.groupBy("bucket"), fn, out_schema, state_schema
     )

@@ -25,12 +25,12 @@ the row-exact SPRT (the parity test pins this).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
+
+from fireball_data_processing_spark.operators.seqtest import sprt_crossings
 
 __all__ = ["stream_sprt_deltas", "sprt_monitor"]
 
@@ -88,11 +88,6 @@ def sprt_monitor(
     rows carry NULL *_at_decision fields. One window over the per-group
     epoch rows (epochs x groups — aggregate-sized) + one aggregate.
     Error rates: alpha = beta = 0.05."""
-    l1 = round(math.log(p1 / p0), 8)
-    l0 = round(math.log((1.0 - p1) / (1.0 - p0)), 8)
-    upper = round(math.log((1.0 - _BETA) / _ALPHA), 8)
-    lower = round(math.log(_BETA / (1.0 - _ALPHA)), 8)
-
     deltas = spark.read.parquet(delta_path)
     w = Window.partitionBy("group").orderBy("batch_id")
     walked = deltas.select(
@@ -101,34 +96,7 @@ def sprt_monitor(
         F.sum("dk").over(w).alias("__k"),
         F.sum("dn1").over(w).alias("__n1"),
     )
-    llr = F.round(
-        F.col("__n1") * F.lit(l1)
-        + (F.col("__k") - F.col("__n1")) * F.lit(l0),
-        8,
-    )
-    scored = walked.select(
-        "group",
-        "__e",
-        "__k",
-        llr.alias("__llr"),
-        F.when(llr >= F.lit(upper), F.lit("accept_h1"))
-        .when(llr <= F.lit(lower), F.lit("accept_h0"))
-        .alias("__cross"),
-    )
-    agg = scored.groupBy("group").agg(
-        F.min(
-            F.when(
-                F.col("__cross").isNotNull(),
-                F.struct(
-                    F.col("__e"), F.col("__k"), F.col("__llr"),
-                    F.col("__cross"),
-                ),
-            )
-        ).alias("__first"),
-        F.max(F.struct(F.col("__e"), F.col("__k"), F.col("__llr"))).alias(
-            "__last"
-        ),
-    )
+    agg = sprt_crossings(walked, ["__e"], p0, p1, _ALPHA, _BETA)
     return agg.select(
         "group",
         F.coalesce(F.col("__first.__cross"), F.lit("continue")).alias(
@@ -137,6 +105,6 @@ def sprt_monitor(
         F.col("__first.__e").alias("epoch_at_decision"),
         F.col("__first.__k").cast("bigint").alias("n_at_decision"),
         F.round(F.col("__first.__llr"), 6).alias("llr_at_decision"),
-        F.col("__last.__k").cast("bigint").alias("n_total"),
+        "n_total",
         F.round(F.col("__last.__llr"), 6).alias("llr_final"),
     ).orderBy("group")

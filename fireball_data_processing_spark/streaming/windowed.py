@@ -21,19 +21,17 @@ from fireball_data_processing_spark.schema import StreamSchema
 from fireball_data_processing_spark.sources.tables import normalize_event_time
 
 
-def windowed_counts_stream(
+def event_time_stream(
     spark: SparkSession,
     source_dir: str,
     file_schema: StructType | str,
     s: StreamSchema,
 ) -> DataFrame:
-    """Per (instance, tumbling 1-hour window) counts/sums over a file
-    stream, emitted once the 30-minute watermark closes the window.
-
-    ``s.ts_unit == 'nanos_long'`` columns are converted to TimestampType
-    (micros) for the event-time clock; other encodings pass through
-    ``timestamp_seconds`` / native timestamps.
-    """
+    """The parquet file stream under ``source_dir`` plus its event time as
+    a TimestampType ``event_ts`` column, the clock every watermark here
+    runs on. ``s.ts_unit == 'nanos_long'`` columns are converted to
+    micros; other encodings pass through ``timestamp_seconds`` / native
+    timestamps."""
     stream = normalize_event_time(
         spark.readStream.schema(file_schema).parquet(source_dir),
         s.ts_col,
@@ -44,14 +42,27 @@ def windowed_counts_stream(
         ts = F.timestamp_seconds(F.col(s.ts_col))
     else:
         ts = F.col(s.ts_col)
+    return stream.withColumn("event_ts", ts)
+
+
+def windowed_counts_stream(
+    spark: SparkSession,
+    source_dir: str,
+    file_schema: StructType | str,
+    s: StreamSchema,
+) -> DataFrame:
+    """Per (instance, tumbling 1-hour window) counts/sums over a file
+    stream, emitted once the 30-minute watermark closes the window
+    (event time as in :func:`event_time_stream`).
+    """
+    stream = event_time_stream(spark, source_dir, file_schema, s)
     agg_value = (
         F.round(F.sum(s.measure_col), 6).alias("window_value")
         if s.measure_col
         else F.lit(None).cast("double").alias("window_value")
     )
     return (
-        stream.withColumn("event_ts", ts)
-        .withWatermark("event_ts", "30 minutes")
+        stream.withWatermark("event_ts", "30 minutes")
         .groupBy(F.window("event_ts", "1 hour"), F.col(s.instance_col))
         .agg(F.count(F.lit(1)).alias("n_events"), agg_value)
         .select(

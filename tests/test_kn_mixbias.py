@@ -1,4 +1,5 @@
-"""Kneser-Ney bigram scoring (functions/textstats.py) and dedup
+"""Kneser-Ney bigram scoring (functions/textstats.py), the frozen bigram
+LM of the streaming quality gate against the batch scorer, and dedup
 mix-bias reweighting invariants."""
 
 from __future__ import annotations
@@ -107,3 +108,24 @@ def test_dedup_mix_bias_cross_source_shift(spark):
     # A keeps 2 survivors carrying weight 3 of 4 total; B keeps 1 of 4
     assert per["A"] == (2, 3)
     assert per["B"] == (1, 1)
+
+
+def test_score_against_own_lm_matches_self_trained(spark, sf_dir):
+    # a corpus scored against ITS OWN frozen LM must reproduce
+    # bigram_logprob exactly (same counts, same smoothing): pins that
+    # the index + lookup path implements the same math as the
+    # self-trained batch scorer. Starts no stream.
+    from fireball_data_processing_spark.functions.textstats import (
+        bigram_logprob,
+    )
+    from fireball_data_processing_spark.sources.tables import load_table
+    from fireball_data_processing_spark.streaming.quality_stream import (
+        corpus_lm_index,
+        score_against_lm,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    lm = corpus_lm_index(docs)
+    got = sorted(map(tuple, score_against_lm(docs, lm).collect()))
+    want = sorted(map(tuple, bigram_logprob(docs).collect()))
+    assert got == want and len(got) > 0

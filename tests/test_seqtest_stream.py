@@ -1,6 +1,7 @@
 """Streaming group-sequential SPRT monitor (streaming/seqtest_stream.py):
-row-per-batch parity with the batch SPRT, replay idempotence, and the
-documented batch-granularity semantics."""
+row-per-batch parity with the batch SPRT (through a stream, and over a
+hand-written delta table), replay idempotence, and the documented
+batch-granularity semantics."""
 
 from __future__ import annotations
 
@@ -16,8 +17,8 @@ from fireball_data_processing_spark.streaming.seqtest_stream import (
     stream_sprt_deltas,
 )
 
-pytestmark = pytest.mark.slow  # driver-budget split (r13): long
-# end-to-end runs excluded from the default suite; run with -m slow
+# The stream runs are marked slow (excluded from the default suite; run
+# with -m slow); the stream-free parity case runs by default.
 
 SCHEMA = "g bigint, o bigint, x int"
 ARGS = dict(p0=0.15, p1=0.25)
@@ -36,6 +37,7 @@ def _run_once(spark, src, out, ckpt):
     q.awaitTermination(120)
 
 
+@pytest.mark.slow
 def test_row_per_batch_parity_with_batch_sprt(spark, tmp_path):
     # one row added per availableNow run -> one epoch per row -> the
     # group-sequential monitor degenerates to the row-exact SPRT
@@ -64,6 +66,7 @@ def test_row_per_batch_parity_with_batch_sprt(spark, tmp_path):
     assert got["llr_final"] == want["llr_final"]
 
 
+@pytest.mark.slow
 def test_replay_is_idempotent(spark, tmp_path):
     from fireball_data_processing_spark.streaming.sinks_stream import (
         write_epoch_partition,
@@ -90,6 +93,7 @@ def test_replay_is_idempotent(spark, tmp_path):
     assert before == after
 
 
+@pytest.mark.slow
 def test_batch_granularity_semantics_documented(spark, tmp_path):
     # 6 successes then 60 failures in ONE batch: row-level SPRT calls
     # accept_h1 at k=6; the batch-boundary monitor only sees the
@@ -118,6 +122,7 @@ def test_batch_granularity_semantics_documented(spark, tmp_path):
     assert stream_decision["n_at_decision"] == 66
 
 
+@pytest.mark.slow
 def test_groups_decide_independently(spark, tmp_path):
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
@@ -133,3 +138,40 @@ def test_groups_decide_independently(spark, tmp_path):
         for r in sprt_monitor(spark, out, **ARGS).collect()
     }
     assert got == {0: "accept_h1", 1: "accept_h0"}
+
+
+def test_monitor_over_hand_written_deltas_equals_batch_sprt(spark, tmp_path):
+    # no stream: write the sink's batch_id=N partitions by hand, one row
+    # per epoch, so the group-sequential monitor must walk exactly the
+    # row-level SPRT of the same rows (wide hypotheses keep the walks
+    # short: +-ln 4 per observation against boundaries of +-2.944)
+    from fireball_data_processing_spark.streaming.sinks_stream import (
+        write_epoch_partition,
+    )
+
+    args = dict(p0=0.2, p1=0.8)
+    out = str(tmp_path / "out")
+    xs = {0: [1, 0, 1, 1, 1, 0], 1: [0, 0, 0, 1], 2: [1, 0, 1, 0, 1, 0]}
+    rows = [(g, i, x) for g, seq in xs.items() for i, x in enumerate(seq)]
+    for i in range(max(len(seq) for seq in xs.values())):
+        epoch = [(g, 1, seq[i]) for g, seq in xs.items() if i < len(seq)]
+        write_epoch_partition(
+            spark.createDataFrame(epoch, "group bigint, dk bigint, dn1 bigint"),
+            i,
+            out,
+        )
+
+    got = sprt_monitor(spark, out, **args).collect()
+    want = sprt_decisions(
+        spark.createDataFrame(rows, SCHEMA),
+        group_col="g",
+        order_col="o",
+        success=F.col("x") == 1,
+        **args,
+    ).collect()
+    cols = want[0].__fields__
+    assert [tuple(r[c] for c in cols) for r in got] == [tuple(r) for r in want]
+    assert [(r["decision"], r["n_at_decision"]) for r in want] == [
+        ("accept_h1", 5), ("accept_h0", 3), ("continue", None)
+    ]
+    assert [r["epoch_at_decision"] for r in got] == [4, 2, None]

@@ -146,6 +146,11 @@ def test_fireball_dataset_api(spark, corpus, tmp_path, monkeypatch):
     import os
 
     assert os.path.exists(os.path.join(out, "_checksum"))
+    # one memo key: an export stamped with the bare corpus checksum would
+    # stay "valid" after the heuristic set changed
+    memo = sinks.read_result_checksum(str(tmp_path / "res" / "heuristics"))
+    assert memo is not None
+    assert sinks.read_result_checksum(out) == memo
 
 
 def test_stream_events_jsonl_chunks(spark, corpus, tmp_path, monkeypatch):

@@ -564,26 +564,6 @@ def test_stream_quality_gate_restart_and_growth(spark, tmp_path):
     assert got == want
 
 
-def test_score_against_own_lm_matches_self_trained(spark):
-    # a corpus scored against ITS OWN frozen LM must reproduce
-    # bigram_logprob exactly (same counts, same smoothing): pins that
-    # the index + lookup path implements the same math as the
-    # self-trained batch scorer
-    from fireball_data_processing_spark.functions.textstats import (
-        bigram_logprob,
-    )
-    from fireball_data_processing_spark.streaming.quality_stream import (
-        corpus_lm_index,
-        score_against_lm,
-    )
-
-    docs = load_table(spark, SMOKE, "documents")
-    lm = corpus_lm_index(docs)
-    got = sorted(map(tuple, score_against_lm(docs, lm).collect()))
-    want = sorted(map(tuple, bigram_logprob(docs).collect()))
-    assert got == want and len(got) > 0
-
-
 def test_stream_weighted_reservoir_matches_batch(spark, tmp_path):
     """The mergeable-reservoir property end-to-end: after the stream
     consumes all files (in two micro-batch groups), each bucket's
