@@ -2,63 +2,17 @@
 
 The reference computes pairwise Cohen's kappa / Kendall's tau /
 Krippendorff's alpha over raters with overlapping question sets
-(``human_eval/results_analysis.py:107-178``). Spark shape: self-join
-ratings on the question key to materialize rater pairs, then one
-``applyInPandas`` per pair computing the statistic (numpy only — no scipy
-dependency). Pairs are tiny; the join is the distributed part.
+(``human_eval/results_analysis.py:107-178``). Kappa is the
+``agreement_kappa`` query's plan in ``queries.py``; this module holds
+alpha, tau, the per-item disagreement profile and Dawid-Skene EM.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def cohen_kappa(a: np.ndarray, b: np.ndarray) -> float:
-    """Cohen's kappa for two equal-length label vectors."""
-    cats = np.unique(np.concatenate([a, b]))
-    n = len(a)
-    if n == 0:
-        return float("nan")
-    po = float(np.mean(a == b))
-    pe = 0.0
-    for c in cats:
-        pe += (np.mean(a == c)) * (np.mean(b == c))
-    if pe == 1.0:
-        return 1.0
-    return (po - pe) / (1.0 - pe)
-
-
-def pairwise_kappa(ratings: DataFrame) -> DataFrame:
-    """Kappa for every rater pair over their co-rated items."""
-    a = ratings.select(
-        F.col("rater").alias("rater_a"),
-        F.col("item"),
-        F.col("label").alias("label_a"),
-    )
-    b = ratings.select(
-        F.col("rater").alias("rater_b"),
-        F.col("item"),
-        F.col("label").alias("label_b"),
-    )
-    pairs = a.join(b, "item").filter(F.col("rater_a") < F.col("rater_b"))
-
-    def kappa_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        k = cohen_kappa(pdf["label_a"].to_numpy(), pdf["label_b"].to_numpy())
-        return pd.DataFrame(
-            {
-                "rater_a": [pdf["rater_a"].iloc[0]],
-                "rater_b": [pdf["rater_b"].iloc[0]],
-                "n_items": [len(pdf)],
-                "kappa": [round(float(k), 6)],
-            }
-        )
-
-    return pairs.groupBy("rater_a", "rater_b").applyInPandas(
-        kappa_fn, schema="rater_a string, rater_b string, n_items bigint, kappa double"
-    )
 
 
 def krippendorff_alpha_nominal(ratings: DataFrame) -> DataFrame:
@@ -76,8 +30,7 @@ def krippendorff_alpha_nominal(ratings: DataFrame) -> DataFrame:
     category c, n_u = sum_c n_uc, n_c the category total and N the
     grand total.
 
-    Unlike the reference's pandas loop (and this module's pairwise
-    ``applyInPandas`` statistics), this is a PURE DataFrame aggregate —
+    Unlike the reference's pandas loop, this is a PURE DataFrame aggregate —
     two groupBys over the (item, label) count frame plus
     one-row-broadcast totals; no rater self-join, no Python — so it
     runs at corpus scale and replays exactly in SQL (the query's DuckDB
@@ -150,7 +103,7 @@ def pairwise_kendall_tau(
     tie-corrected form scipy returns, so parity with the reference is
     exact (test-pinned against a literal O(n²) replay).
 
-    Distributed shape: the co-rating join is the :func:`pairwise_kappa`
+    Distributed shape: the co-rating join is the ``agreement_kappa``
     precedent (items are eval-sized by contract); the item-pair
     self-join within each rater pair is the O(n²) the statistic
     inherently needs — it stays inside the pair's partition and every
@@ -208,29 +161,49 @@ def pairwise_kendall_tau(
 
 
 _BETA = 0.01
+#: EM rounds; the query and its unrolled oracle both run this many
+_EM_ROUNDS = 2
 
 
-def dawid_skene(
-    ratings: DataFrame,
-    labels: list[str],
-    n_iter: int = 2,
-) -> DataFrame:
+def dawid_skene(ratings: DataFrame, labels: Sequence[str]) -> DataFrame:
     """Dawid-Skene (1979) EM label aggregation: infer each item's true
     label from redundant noisy ``(item, rater, label)`` annotations by
-    jointly estimating
-    per-rater confusion matrices — the aggregation step the pairwise
-    agreement statistics above diagnose but don't perform. Majority vote
-    weights every rater equally; Dawid-Skene learns who to trust, per
-    confusion cell.
+    jointly estimating per-rater confusion matrices — the aggregation
+    step the pairwise agreement statistics above diagnose but don't
+    perform. Majority vote weights every rater equally; Dawid-Skene
+    learns who to trust, per confusion cell. Runs ``_EM_ROUNDS`` rounds
+    with zero driver collects: the model state stays in DataFrames.
 
-    Fully distributed, ZERO driver collects (unlike kmeans_fit's bounded
-    centroid collect, even the model state stays in DataFrames): per EM
-    round the big frames are the per-(item, rater, label) count table
-    and the items x K posterior table, both partitioned by item; the
-    model (class priors p(c): K rows; confusion pi(r, c, l): R*K*K rows)
-    is aggregated small and re-enters the E-step as broadcast joins.
-    Shuffles per round: one item-keyed join + one (rater, c, l)
-    aggregate + one (item, c) aggregate — all partial-combining.
+    Plan. The ``(item, rater, label, n)`` count table, bounded by items x
+    raters x labels, is built once and pinned as a local checkpoint:
+    the one persisted RDD a call leaves, which Spark's context cleaner
+    releases once the returned frame is garbage-collected. The checkpoint
+    is eager, run when ``dawid_skene`` is called: a lazy one runs
+    after the frame that planned it is gone, so its SQL metrics are
+    already released and each task logs an accumulator error. A
+    checkpoint scan reports no partitioning, so the pin is read back through
+    ``coalesce(1)``, which declares a single partition: every aggregate
+    and window over it (keyed by item, (item, c), (rater, c) or c) then
+    plans no exchange. Initial posteriors are one per-item aggregate with
+    one vote sum per label. Each round is then
+    - priors p(c): a window over c on the posterior rows, which also
+      carry the item count, so neither needs an aggregate of its own;
+    - M-step: counts joined to the posteriors, one ``(rater, c)``
+      aggregate giving pi as a K-array over ``labels`` (plus p). Its
+      denominator sums t*n over every label the counts hold, labels
+      outside ``labels`` included, as the oracle's ``den`` sums every
+      ``num``;
+    - E-step: the votes in ``labels`` join pi by broadcast, reading it at
+      the vote's label with ``element_at``, then an ``(item, c)``
+      aggregate and the softmax window.
+    A round runs two broadcasts (the posteriors into the M-step, pi into
+    the E-step) and no shuffle; with the checkpoint's two jobs (the
+    counts' shuffle and the pin) and the result, a two-round call runs 7.
+
+    There is no R*K*K confusion grid: the oracle left-joins every
+    (rater, c, l) cell to fill unseen cells with the smoothing alone, but
+    the E-step only reads pi at (rater, label) pairs the counts hold, and
+    those always have a vote sum.
 
     Cross-engine reproducibility (the kmeans contract, applied to EM):
     every aggregated quantity — initial vote shares, priors, confusion
@@ -246,131 +219,77 @@ def dawid_skene(
     the last E-step rounded it. It is not rounded again: a second, coarser
     round of an 8-dp value is a decimal tie one time in a hundred,
     and engines break a tie on a double differently (Spark rounds the
-    shortest decimal form half-up, DuckDB the binary value).
+    shortest decimal form half-up, DuckDB the binary value). An item
+    with no vote in ``labels`` drops out after the first round, as in
+    the oracle.
     """
     K = len(labels)
-    lab_arr = F.array(*[F.lit(x) for x in labels])
-    # PERSIST the sufficient statistic: counts feeds 2+2*n_iter consumers
-    # (itot, votes, and the M/E steps of every round) — unpinned, each
-    # consumer re-plans the raw-ratings aggregation subtree and the
-    # static plan explodes combinatorially across iterations (measured
-    # 92 scans / 274 exchanges at n_iter=2 before the pin). The cache is
-    # (items x raters x labels)-bounded, far below the ratings it folds.
     counts = (
-        # the self-aliases are part of the plan the oracle parity and the
-        # benchmark were measured on; dropping them removes a Project
-        ratings.groupBy(
-            F.col("item").alias("item"),
-            F.col("rater").alias("rater"),
-            F.col("label").alias("label"),
-        )
+        ratings.groupBy("item", "rater", "label")
         .agg(F.count(F.lit(1)).cast("double").alias("n"))
-        # hash-partition the pin on "item" — the
-        # key every per-round consumer clusters by (the itot/votes
-        # groupBys, each round's E-step join and (item, c) aggregate) —
-        # so AQE's runtime re-optimization can elide those consumers'
-        # exchanges against the cache's known partitioning. Interleaved
-        # A/B (with the same treatment on the posterior pins below):
-        # dawid_skene_labels 6.93 -> 4.80 s min-of-4, every pair better.
-        .repartition(F.col("item"))
-        .persist()
+        .localCheckpoint()
+        .coalesce(1)
     )
-    itot = counts.groupBy("item").agg(F.sum("n").alias("ni"))
-    votes = counts.groupBy("item", F.col("label").alias("c")).agg(
-        F.sum("n").alias("v")
-    )
-    # each round's posterior table is likewise multi-consumed (priors +
-    # M-step num, then the NEXT round's lineage) — persist per round so
-    # iteration t's plan doesn't embed t-1's whole subtree twice
-    t = (
-        itot.select("item", "ni", F.explode(lab_arr).alias("c"))
-        .join(votes, ["item", "c"], "left")
-        .select(
-            "item",
-            "c",
-            F.round(
-                F.coalesce(F.col("v"), F.lit(0.0)) / F.col("ni"), 8
-            ).alias("t"),
-        )
-        # item-partitioned like `counts` (same rationale): the M-step
-        # join and the next round's lineage consume it item-keyed
-        .repartition(F.col("item"))
-        .persist()
-    )
-    nitems = itot.agg(F.count(F.lit(1)).cast("double").alias("n_items"))
-    raters = counts.select("rater").distinct()
-    grid = (
-        raters.crossJoin(F.broadcast(nitems.select(F.explode(lab_arr).alias("c"))))
-        .crossJoin(
-            F.broadcast(nitems.select(F.explode(lab_arr).alias("l")))
-        )
-        .select("rater", "c", "l")
-    )
-    for _ in range(n_iter):
-        priors = (
-            t.groupBy("c")
-            .agg(F.sum("t").alias("__st"))
-            .crossJoin(F.broadcast(nitems))
-            .select(
-                "c",
+    n, t, label = F.col("n"), F.col("t"), F.col("label")
+    w_item, w_c = Window.partitionBy("item"), Window.partitionBy("c")
+    shares = counts.groupBy("item").agg(
+        F.array(*[
+            F.struct(
+                F.lit(x).alias("c"),
                 F.round(
-                    (F.col("__st") + F.lit(_BETA))
-                    / (F.col("n_items") + F.lit(K * _BETA)),
+                    F.coalesce(F.sum(F.when(label == x, n)), F.lit(0.0)) / F.sum(n),
                     8,
-                ).alias("p"),
+                ).alias("t"),
             )
-        )
-        num = (
-            counts.join(t, "item")
-            .groupBy("rater", "c", F.col("label").alias("l"))
-            .agg(F.sum(F.col("t") * F.col("n")).alias("num"))
-        )
-        den = num.groupBy("rater", "c").agg(F.sum("num").alias("den"))
+            for x in labels
+        ]).alias("__t0")
+    )
+    # the item count rides every posterior row; t0 has one row per (item, c)
+    post = shares.select("item", F.inline("__t0")).withColumn(
+        "n_items", F.count(F.lit(1)).over(w_c).cast("double")
+    )
+    voted = counts.filter(label.isin(*labels))
+    # built once, outside the loop: each column expression costs py4j calls
+    prior = F.round(
+        (F.sum(t).over(w_c) + F.lit(_BETA)) / (F.col("n_items") + F.lit(K * _BETA)),
+        8,
+    ).alias("p")
+    tn = t * n
+    den = F.sum(tn) + F.lit(K * _BETA)
+    m_step = [
+        F.array(*[
+            F.round((F.sum(F.when(label == x, tn)) + F.lit(_BETA)) / den, 8)
+            for x in labels
+        ]).alias("pi"),
+        F.max("p").alias("p"),
+        F.max("n_items").alias("n_items"),
+    ]
+    pi_at_label = F.element_at(
+        "pi", F.array_position(F.array(*[F.lit(x) for x in labels]), label).cast("int")
+    )
+    e_step = [
+        F.round(F.log(F.max("p")) + F.sum(n * F.log(pi_at_label)), 8).alias("lp"),
+        F.max("n_items").alias("n_items"),
+    ]
+    shifted = F.exp(F.col("lp") - F.max("lp").over(w_item))
+    softmax = F.round(shifted / F.sum(shifted).over(w_item), 8).alias("t")
+    for _ in range(_EM_ROUNDS):
         pi = (
-            grid.join(num, ["rater", "c", "l"], "left")
-            .join(den, ["rater", "c"], "left")
-            .select(
-                "rater",
-                "c",
-                "l",
-                F.round(
-                    (F.coalesce(F.col("num"), F.lit(0.0)) + F.lit(_BETA))
-                    / (F.coalesce(F.col("den"), F.lit(0.0)) + F.lit(K * _BETA)),
-                    8,
-                ).alias("pi"),
-            )
+            counts.join(post.select("item", "c", "t", "n_items", prior), "item")
+            .groupBy("rater", "c")
+            .agg(*m_step)
         )
-        lp = (
-            counts.join(
-                F.broadcast(pi),
-                (counts["rater"] == pi["rater"]) & (counts["label"] == pi["l"]),
-            )
-            .join(F.broadcast(priors), "c")
+        post = (
+            voted.join(F.broadcast(pi), "rater")
             .groupBy("item", "c")
-            .agg(
-                F.round(
-                    F.log(F.max("p")) + F.sum(F.col("n") * F.log("pi")),
-                    8,
-                ).alias("lp")
-            )
+            .agg(*e_step)
+            .select("item", "c", softmax, "n_items")
         )
-        w_item = Window.partitionBy("item")
-        t = lp.select(
-            "item",
-            "c",
-            F.round(
-                F.exp(F.col("lp") - F.max("lp").over(w_item))
-                / F.sum(F.exp(F.col("lp") - F.max("lp").over(w_item))).over(
-                    w_item
-                ),
-                8,
-            ).alias("t"),
-        ).repartition(F.col("item")).persist()
     w_rank = Window.partitionBy("item").orderBy(
         F.col("t").desc(), F.col("c").asc()
     )
     return (
-        t.withColumn("__rn", F.row_number().over(w_rank))
+        post.withColumn("__rn", F.row_number().over(w_rank))
         .filter(F.col("__rn") == 1)
         .select(
             "item",

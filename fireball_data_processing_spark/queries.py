@@ -36,6 +36,7 @@ from pyspark.sql.window import Window
 from fireball_data_processing_spark import fixtures as FX
 from fireball_data_processing_spark.schema import SYNTHETIC_STREAM
 from fireball_data_processing_spark.sources.tables import load_table
+from fireball_data_processing_spark.plans.agreement import _EM_ROUNDS, dawid_skene
 from fireball_data_processing_spark.plans.heuristics import heuristics_matrix, HEURISTICS
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -3776,10 +3777,14 @@ FROM stats
 """
 
 
+#: the labels of the synthetic rating panel: the events table's event types
+_RATING_LABELS = ("view", "click", "purchase", "signup", "error")
+
+
 def _event_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(rater, item, label)``: the synthetic rating derivation the
-    kappa and alpha queries share — rater ``user_id % 4``, item
-    ``event_id % 200``, label the event type."""
+    kappa, alpha and Dawid-Skene queries share — rater ``user_id % 4``,
+    item ``event_id % 200``, label the event type."""
     ev = load_table(spark, sf_dir, "events")
     return ev.select(
         (F.col("user_id") % 4).cast("string").alias("rater"),
@@ -3792,8 +3797,7 @@ def _event_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A21 pairwise Cohen's kappa (reference
     human_eval/results_analysis.py:107-178): self-join raters on co-rated
-    items, one JVM aggregation per pair (the applyInPandas variant lives in
-    plans.agreement for richer statistics)."""
+    items, one JVM aggregation per pair."""
     ratings = _event_ratings(spark, sf_dir)
     a = ratings.select(
         F.col("rater").alias("rater_a"), "item", F.col("label").alias("label_a")
@@ -3802,11 +3806,10 @@ def q_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rater").alias("rater_b"), "item", F.col("label").alias("label_b")
     )
     joined = a.join(b, "item").filter(F.col("rater_a") < F.col("rater_b"))
-    cats = ("view", "click", "purchase", "signup", "error")
     frac = lambda c, side: F.avg(  # noqa: E731
         F.when(F.col(side) == c, 1.0).otherwise(0.0)
     )
-    pe = sum(frac(c, "label_a") * frac(c, "label_b") for c in cats)
+    pe = sum(frac(c, "label_a") * frac(c, "label_b") for c in _RATING_LABELS)
     po = F.avg(F.when(F.col("label_a") == F.col("label_b"), 1.0).otherwise(0.0))
     stats = joined.groupBy("rater_a", "rater_b").agg(
         F.count(F.lit(1)).alias("n_items"),
@@ -9180,14 +9183,13 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     return trace.crossJoin(F.broadcast(radius))
 
 
-def _dawid_skene_oracle(n_iter: int = 2) -> str:
+def _dawid_skene_oracle() -> str:
     """Unrolled Dawid-Skene EM replaying plans/agreement.py dawid_skene:
     every aggregated quantity rounded to 8 dp before downstream use (the
     kmeans replay contract applied to EM), log-space E-step with
     max-subtracted softmax, (posterior DESC, label ASC) MAP tie-break."""
-    labels = ("view", "click", "purchase", "signup", "error")
-    k = len(labels)
-    vals = ", ".join(f"('{x}')" for x in labels)
+    k = len(_RATING_LABELS)
+    vals = ", ".join(f"('{x}')" for x in _RATING_LABELS)
     parts = [
         f"""
 WITH ratings AS (
@@ -9215,7 +9217,7 @@ grid AS (
   CROSS JOIN labels lc CROSS JOIN labels ll
 )"""
     ]
-    for it in range(1, n_iter + 1):
+    for it in range(1, _EM_ROUNDS + 1):
         parts.append(
             f""",
 p{it} AS (
@@ -9253,35 +9255,24 @@ t{it} AS (
     parts.append(
         f"""
 SELECT item, c AS map_label, t AS posterior
-FROM t{n_iter}
+FROM t{_EM_ROUNDS}
 QUALIFY ROW_NUMBER() OVER (PARTITION BY item ORDER BY t DESC, c ASC) = 1
 """
     )
     return "".join(parts)
 
 
-@query("dawid_skene_labels", _dawid_skene_oracle(n_iter=2))
+@query("dawid_skene_labels", _dawid_skene_oracle())
 def q_dawid_skene_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dawid-Skene EM truth inference over the synthetic rater panel
     (plans/agreement.py dawid_skene) — the aggregation step the
     engine's kappa/alpha/tau statistics diagnose but don't perform:
     per-rater confusion matrices and item posteriors estimated jointly,
-    2 EM rounds, MAP label per item. Fully distributed (the model state
-    never leaves DataFrames — priors and confusion re-enter the E-step
-    as broadcast joins; zero collects), replayed exactly by the
-    unrolled oracle via per-aggregate 8-dp rounding."""
-    from fireball_data_processing_spark.plans.agreement import dawid_skene
-
-    ev = load_table(spark, sf_dir, "events")
-    ratings = ev.select(
-        (F.col("event_id") % 200).alias("item"),
-        (F.col("user_id") % 4).cast("string").alias("rater"),
-        F.col("event_type").alias("label"),
-    )
-    return dawid_skene(
-        ratings, labels=["view", "click", "purchase", "signup", "error"],
-        n_iter=2,
-    )
+    ``_EM_ROUNDS`` EM rounds, MAP label per item. Fully distributed (the
+    model state never leaves DataFrames — priors and confusion re-enter
+    the E-step as broadcast joins; zero collects), replayed exactly by
+    the unrolled oracle via per-aggregate 8-dp rounding."""
+    return dawid_skene(_event_ratings(spark, sf_dir), _RATING_LABELS)
 
 
 _TTR_DOCS_CTE = """

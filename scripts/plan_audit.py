@@ -182,13 +182,6 @@ def render(rows: list[dict]) -> str:
         "coalesce(1) fast path) and the",
         "final merge (one scan + one exchange), documented in",
         "streaming/capstone.py and pinned by tests/test_capstone_stream.py.",
-        "Pin-partitioning note (r13): `dawid_skene_labels`'s shuffle count",
-        "rose 105 -> 151 because its three item-keyed pins now carry an",
-        "explicit repartition that this PRE-EXECUTION audit re-counts at",
-        "every one of the ~46 cached-subtree references; at runtime the",
-        "cache materializes ONCE and the repartition lets AQE elide the",
-        "consumers' own exchanges (measured -31% wall, ledger r13) — the",
-        "static delta is an artifact of expanding InMemoryRelations.",
         "Audit-drift note (ADVICE r12): `shapley_channel_attribution`'s",
         "r12 scan count moved 11 -> 12 with its code untouched — same",
         "mechanism, a runtime-persisted consumer re-planned under the",

@@ -1,5 +1,5 @@
-"""U7 MLlib training smoke, F8/F10 anonymization goldens, A21 agreement
-applyInPandas variant."""
+"""U7 MLlib training smoke, F8/F10 anonymization goldens, A21 Dawid-Skene
+EM."""
 
 from __future__ import annotations
 
@@ -111,26 +111,6 @@ def test_logreg_cv_trains_and_scores(spark, sf_dir, monkeypatch):
     assert set(r["prediction"] for r in preds.collect()) <= {0.0, 1.0}
     pos = predict_positive_ids(model, labeled, cols, "y", "user_id")
     assert pos.count() <= labeled.count()
-
-
-def test_pairwise_kappa_applyinpandas(spark):
-    from fireball_data_processing_spark.plans.agreement import pairwise_kappa
-
-    rows = [
-        ("r1", i, "yes" if i % 2 == 0 else "no") for i in range(20)
-    ] + [
-        ("r2", i, "yes" if i % 2 == 0 else "no") for i in range(20)  # perfect
-    ] + [
-        ("r3", i, "yes" if i % 4 == 0 else "no") for i in range(20)  # partial
-    ]
-    df = spark.createDataFrame(rows, "rater string, item int, label string")
-    got = {
-        (r["rater_a"], r["rater_b"]): r["kappa"]
-        for r in pairwise_kappa(df).collect()
-    }
-    assert got[("r1", "r2")] == 1.0
-    assert 0.0 < got[("r1", "r3")] < 1.0
-    assert got[("r2", "r3")] == got[("r1", "r3")]
 
 
 def test_classify_batches_pluggable_model(spark, sf_dir):
@@ -428,22 +408,19 @@ def test_dawid_skene_symmetric_tie_breaks_lexicographic(spark):
     assert got[0][0] == "a"
 
 
-def test_dawid_skene_posterior_tie_matches_oracle(spark):
-    """Item 2 of this fixed panel ends EM at t = 0.5088185, a tie at 6 dp
-    whose binary double lies just below the tie: Spark's round (half-up
-    on the decimal form) and DuckDB's (on the binary value) would part
-    ways there, so the query and its oracle both emit the 8-dp posterior
-    the last E-step produced, and must agree on every item."""
+def _ds_panel(spark, events):
+    """``(got, want)``: ``dawid_skene`` over an events-shaped panel of
+    ``(event_id, user_id, event_type)`` rows, rated the way
+    ``dawid_skene_labels`` rates events, and the query's unrolled oracle
+    run in DuckDB over the same rows; both sorted."""
     import duckdb
 
     from fireball_data_processing_spark.plans.agreement import dawid_skene
-    from fireball_data_processing_spark.queries import _dawid_skene_oracle
+    from fireball_data_processing_spark.queries import (
+        _RATING_LABELS,
+        _dawid_skene_oracle,
+    )
 
-    labels = ["view", "click", "purchase", "signup", "error"]
-    events, x = [], 5097  # a linear-congruential panel: 20 items, 60 votes
-    for j in range(60):
-        x = (x * 1103515245 + 12345) % 2**31
-        events.append(((x >> 8) % 20 + 200 * j, (x >> 4) % 4, labels[(x >> 16) % 5]))
     ratings = spark.createDataFrame(
         events, "event_id bigint, user_id bigint, event_type string"
     ).select(
@@ -451,17 +428,73 @@ def test_dawid_skene_posterior_tie_matches_oracle(spark):
         (F.col("user_id") % 4).cast("string").alias("rater"),
         F.col("event_type").alias("label"),
     )
-    got = sorted(tuple(r) for r in dawid_skene(ratings, labels, n_iter=2).collect())
-
+    got = sorted(tuple(r) for r in dawid_skene(ratings, _RATING_LABELS).collect())
     con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE events(event_id BIGINT, user_id BIGINT, event_type VARCHAR)"
-    )
-    con.executemany("INSERT INTO events VALUES (?, ?, ?)", events)
-    want = sorted(con.execute(_dawid_skene_oracle(n_iter=2)).fetchall())
-    con.close()
+    try:
+        con.execute(
+            "CREATE TABLE events(event_id BIGINT, user_id BIGINT, event_type VARCHAR)"
+        )
+        con.executemany("INSERT INTO events VALUES (?, ?, ?)", events)
+        want = sorted(con.execute(_dawid_skene_oracle()).fetchall())
+    finally:
+        con.close()
+    return got, want
+
+
+def test_dawid_skene_posterior_tie_matches_oracle(spark):
+    """Item 2 of this fixed panel ends EM at t = 0.5088185, a tie at 6 dp
+    whose binary double lies just below the tie: Spark's round (half-up
+    on the decimal form) and DuckDB's (on the binary value) would part
+    ways there, so the query and its oracle both emit the 8-dp posterior
+    the last E-step produced, and must agree on every item."""
+    from fireball_data_processing_spark.queries import _RATING_LABELS
+
+    events, x = [], 5097  # a linear-congruential panel: 20 items, 60 votes
+    for j in range(60):
+        x = (x * 1103515245 + 12345) % 2**31
+        events.append(
+            ((x >> 8) % 20 + 200 * j, (x >> 4) % 4, _RATING_LABELS[(x >> 16) % 5])
+        )
+    got, want = _ds_panel(spark, events)
     assert (2, "error", 0.5088185) in got
     assert got == want
+
+
+def test_dawid_skene_edge_panel_matches_oracle(spark):
+    """A panel with votes outside the label set. Rater 3 never votes
+    ``error``; about 1/6 of the votes are ``other``, which counts in an
+    item's total and in its rater's M-step denominator but never in the
+    E-step; item 29 gets only ``other`` votes, so it has initial
+    posteriors and feeds round 1's M-step, then drops out."""
+    from fireball_data_processing_spark.plans.agreement import _EM_ROUNDS
+    from fireball_data_processing_spark.queries import _RATING_LABELS
+
+    assert _EM_ROUNDS >= 2  # the drop-out shows from round 2 on
+    events, x = [], 13  # a linear-congruential panel: items 0-28, 150 votes
+    for j in range(150):
+        x = (x * 1103515245 + 12345) % 2**31
+        rater = (x >> 4) % 4
+        label = (
+            "other" if (x >> 12) % 6 == 0 else _RATING_LABELS[(x >> 16) % 5]
+        )
+        if rater == 3 and label == "error":
+            label = "view"
+        events.append(((x >> 8) % 29 + 200 * j, rater, label))
+    events += [(29 + 200 * j, j % 4, "other") for j in range(150, 153)]
+    got, want = _ds_panel(spark, events)
+    assert sorted(item for item, _, _ in got) == list(range(29))
+    assert got == want
+
+
+def test_dawid_skene_leaves_one_pin(spark, sf_dir):
+    """The count table is the only frame the EM pins: a run leaves at
+    most one more persisted RDD behind."""
+    from fireball_data_processing_spark.queries import queries
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    queries()["dawid_skene_labels"](spark, sf_dir).collect()
+    assert jsc.getPersistentRDDs().size() - before <= 1
 
 
 def test_f8_hash_duckdb_replay_parity(duck):
