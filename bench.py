@@ -38,46 +38,31 @@ HEADLINE = (
     "simhash_fingerprints",
     "ann_cosine_topk",
     "bm25_search",
-    # Round-5 suite growth: one round-4 representative promoted from
-    # EXTRA so the regression instrument tracks the new text-pipeline
-    # surface, not only r1-r3 operators. Round-over-round comparison:
-    # r4 headline 6.75 s covered the first 15 names; subtract this
-    # query's time from the r5+ total to compare like-for-like.
     "cross_doc_line_dedup",
-    # Round-6 growth: the round-5 clustering/quality representative.
-    # Like-for-like vs r5: subtract this query's time from the r6+
-    # total (r5 headline covered the first 16 names).
     "kmeans_cluster_profile",
-    # Round-7 growth: the round-6 ANN-compression representative.
-    # Like-for-like vs r6: subtract this query's time from the r7+
-    # total (r6 headline covered the first 17 names).
     "pq_adc_topk_neighbors",
-    # Round-9 growth: the round-8 statistical-analytics representative
-    # (lead window -> transition matrix -> 12-step stationary power
-    # iteration). Like-for-like vs r7/r8: subtract this query's time
-    # from the r9+ total (r7-r8 headlines covered the first 18 names).
+    # lead window -> transition matrix -> 12-step stationary power
+    # iteration
     "markov_stationary_profile",
-    # Round-12 growth (judge r11 ask #4): both end-to-end streaming
-    # capstones — exact-gate v1 and LSH-band near-dup-gate v2. Each
-    # stages slice files, runs a REAL Structured Streaming job (4
-    # micro-batch epochs + checkpoint + exactly-once sink) and merges
-    # the final table, so their time includes the stream machinery by
-    # design. Like-for-like vs r5-r11: the payload also reports
-    # "value_19q", the sub-total over the first 19 names.
+    # both end-to-end streaming capstones — exact gate and LSH-band
+    # near-dup gate. Each stages slice files, runs a REAL Structured
+    # Streaming job (4 micro-batch epochs + checkpoint + exactly-once
+    # sink) and merges the final table, so their time includes the
+    # stream machinery by design; "value_19q" in the payload is the
+    # sub-total over the names before them.
     "streaming_ingest_pipeline",
     "streaming_ingest_near_pipeline",
 )
 
-# The pre-r12 comparable headline prefix (see round-over-round ledger).
+# The headline prefix without the two stream capstones, whose per-run
+# cost is dominated by stream machinery, not data.
 N_LEGACY_HEADLINE = 19
 
 # Timed the same way but reported under "extra_queries" and NOT counted
-# in the headline total, so round-over-round totals stay comparable
-# while the newer subsystems still get per-round numbers on record.
+# in the headline total, so the headline total stays comparable while
+# the other subsystems still get numbers on record.
 EXTRA = (
-    # streaming_ingest_pipeline / streaming_ingest_near_pipeline were
-    # tracked here r10-r11; promoted to HEADLINE in r12 (judge ask #4).
-    # two-phase global rank re-plan (late r9) — tracked from r9 on
+    # two-phase global rank re-plan
     "heuristics_long_sorted",
     "semantic_dedup_survivors",
     "span_scrubbed_docs",
@@ -131,7 +116,6 @@ EXTRA = (
     "domain_budget_fill",
     "agreement_krippendorff",
     "agreement_kendall_tau",
-    # round-8 additions
     "histogram_quantile_sketch",
     "quality_score_propagation",
     "kcenter_coreset",
@@ -147,7 +131,6 @@ EXTRA = (
     "ab_test_delta_ci",
     "quality_ranking_rbo",
     "reliability_diagram_ece",
-    # markov_stationary_profile promoted to HEADLINE in r9
     "lang_jsd_matrix",
     "vocab_richness_estimate",
     "offpolicy_value_snips",
@@ -181,28 +164,27 @@ EXTRA = (
     "markov_entropy_rate",
     "extreme_value_return_levels",
     "shapley_channel_attribution",
-    # round-9 additions
     "kruskal_value_by_type",
     "spearman_doc_metrics",
     "mcnemar_gate_disagreement",
     "cochran_gate_family",
     "acf_daily_events",
-    # round-10 addition: the Bradley-Terry preference ranking (one
-    # comparison-matrix aggregate + the driver-side MM fit)
+    # the Bradley-Terry preference ranking (one comparison-matrix
+    # aggregate + the driver-side MM fit)
     "bt_event_type_ranking",
-    # round-11 additions: the oracle-replayed BPE merge table (distributed
-    # word count + driver-side greedy trainer; the per-corpus merge cache
-    # is cleared before every timed run — see PRE_RUN — so each sample
-    # pays the full word_frequencies + train_bpe cost, not a cache hit)
+    # the oracle-replayed BPE merge table (distributed word count +
+    # driver-side greedy trainer; the per-corpus merge cache is cleared
+    # before every timed run — see PRE_RUN — so each sample pays the full
+    # word_frequencies + train_bpe cost, not a cache hit)
     "bpe_merge_table",
-    # round-12 additions: the tokenizer vocabulary-coverage histogram
+    # the tokenizer vocabulary-coverage histogram
     # (merge application over the DISTINCT-word table — vocabulary-sized,
     # shares the cleared-per-run merge cache) and the per-band collision
     # diagnostic of the streaming near-dup gate (single-pass LEFT-join
     # plan over the band table)
     "bpe_token_histogram",
     "lsh_band_hit_rates",
-    # late-r12 additions: the privacy pillar's two release gates — the
+    # the privacy pillar's two release gates — the
     # k-anonymity/l-diversity audit (one QI-grain aggregate) and the
     # seeded-Laplace DP count release (cell-grain count + a pure
     # expression noise chain)
@@ -248,8 +230,8 @@ def main() -> None:
     # timed runs per query, keep the min: measures steady-state plan
     # cost, not scheduler jitter on a shared box. Sub-second queries get
     # 5 runs instead of 3 (shared-box load once produced a 3x outlier as
-    # the min-of-3 — BENCH_r03 run_lengths), and every run is reported
-    # in "runs" so a reader can judge variance without re-running.
+    # the min-of-3), and every run is reported in "runs" so a reader can
+    # judge variance without re-running.
     times: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
 
@@ -273,8 +255,8 @@ def main() -> None:
         ):
             if pre is not None:
                 pre(catalog)
-            # Measurement fix (r12, guide §1.3): several operators pin
-            # multi-consumer subtrees with .persist(); Spark's
+            # Several operators pin multi-consumer subtrees with
+            # .persist(); Spark's
             # CacheManager serves an IDENTICAL fresh plan in the next
             # sample from that cache, so without this clear the min-of-N
             # would partly time warm-cache reruns instead of real work.
@@ -289,10 +271,9 @@ def main() -> None:
     for name in HEADLINE:
         times[name] = timed(name)
     # loadavg right after the headline loop: the headline total is the
-    # round-over-round comparison number, so ITS window's load matters
-    # separately from the ~20-minute extras pass that follows (the r12
-    # 32-core driver capture was judged unusable because the one-line
-    # payload carried no load evidence — VERDICT r12 ask #1).
+    # comparison number, so ITS window's load matters separately from the
+    # ~20-minute extras pass that follows; a payload without load
+    # evidence cannot tell a loaded host from a regression.
     load_headline_end = round(os.getloadavg()[0], 1)
     extra_times = {}
     for name in EXTRA:
@@ -302,17 +283,14 @@ def main() -> None:
         extra_times[name] = timed(name, min_runs=1 if over else 3)
 
     total = round(sum(times.values()), 3)
-    # Round-over-round comparability: the first 19 HEADLINE names are the
-    # r5-r11 suite; their sub-total is what the ledger's history column
-    # compares (the r12 promotion added the two stream capstones, whose
-    # per-run cost is dominated by stream machinery, not data).
+    # sub-total without the two stream capstones (see N_LEGACY_HEADLINE)
     total_19q = round(
         sum(times[n] for n in HEADLINE[:N_LEGACY_HEADLINE]), 3
     )
     # Environment annotation: a shared box under load (e.g. the test
     # suite running concurrently) inflates wall-clock ~2x; recording the
     # 1-min load average at start/end makes any such run self-describing
-    # instead of looking like a code regression (BENCH_latest_full r7).
+    # instead of looking like a code regression.
     load_end = round(os.getloadavg()[0], 1)
     payload = {
         "metric": "headline_suite_seconds",
@@ -332,10 +310,9 @@ def main() -> None:
             "loadavg1_end": load_end,
         },
     }
-    # The driver captures only the TAIL of stdout: when the printed JSON
-    # line outgrew the capture window (60+ per-query runs arrays by r7),
-    # the line's head was cut off and the driver recorded parsed: null
-    # (BENCH_r07.json). So the full payload goes to a committed repo file
+    # A consumer that captures only the TAIL of stdout loses the head of
+    # an over-long JSON line (60+ per-query runs arrays) and cannot parse
+    # it. So the full payload goes to a committed repo file
     # and stdout gets a COMPACT line — headline total + per-query mins
     # only (~700 bytes) — that always fits the capture window.
     # $SPARK_GRAFT_ROUND (e.g. "r06") names the artifact; default
@@ -347,16 +324,12 @@ def main() -> None:
     with open(os.path.join(bench_dir, f"BENCH_{tag}_full.json"), "w") as f:
         json.dump(payload, f, indent=1)
         f.write("\n")
-    # Self-describing compact payload (VERDICT r12 ask #1): the r12
-    # 32-core driver capture was load-contaminated and the one-line JSON
-    # carried no evidence of it, so 18/19 "regressions" could not be told
-    # apart from real ones without the committed full artifact. The
-    # compact line now carries (a) the env block — loadavg at start, at
-    # headline-loop end, and at bench end, plus the core count — and
-    # (b) EVERY headline sample, not just the min, so a contaminated
-    # capture (high load, samples spread 2x) is visible in the driver's
-    # own artifact. Headline-only samples keep the line well inside the
-    # driver's stdout-tail capture window (the r7 truncation lesson).
+    # Self-describing compact payload: a load-contaminated capture must be
+    # visible in the one line itself, so it carries (a) the env block —
+    # loadavg at start, at headline-loop end, and at bench end, plus the
+    # core count — and (b) EVERY headline sample, not just the min (high
+    # load shows as samples spread 2x). Headline-only samples keep the
+    # line inside a stdout-tail capture window.
     compact = {
         "metric": "headline_suite_seconds",
         "value": total,

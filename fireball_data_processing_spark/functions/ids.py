@@ -31,25 +31,6 @@ def hashed_id(raw: str) -> str:
     return "{0:0>18}".format(str(n)[:18])
 
 
-@pandas_udf(StringType())
-def _hashed_id_udf(col: pd.Series) -> pd.Series:
-    return col.map(lambda v: None if pd.isna(v) else hashed_id(v))
-
-
-def hashed_id_col(c):
-    """F8 as a column: Arrow-batched ``hashed_id`` over an id column.
-    A 128-bit little-endian decimal rendering is not expressible in JVM
-    expressions (decimal(38) overflows at 2^128), so exact reference parity
-    costs one vectorized Python hop; for engine-internal bucketing/dedup
-    where the exact rendering is irrelevant, prefer a JVM-side
-    ``F.md5`` hex digest.
-
-    The cast to string happens JVM-side BEFORE the Arrow hop: a long
-    column with nulls would otherwise arrive as float64 (Arrow's
-    nullable-int coercion) and hash its scientific-notation repr."""
-    return _hashed_id_udf(c.cast("string"))
-
-
 def anonymize_value(v, name_map: dict[str, str] | None = None):
     """F10: recursive walk replacing snowflake ids everywhere and mapping
     known names via ``name_map``."""

@@ -37,12 +37,3 @@ def is_ooc(content: Column) -> Column:
         | t.contains("OOG")
         | t.startswith("(")
     )
-
-
-def clamp_abnormal_array(c: Column) -> Column:
-    """P7 (reference distill4_normalize.py:387-391): arrays longer than
-    5 are treated as empty. ``F.filter(c, false)`` produces an
-    empty array of the same element type without naming it."""
-    return F.when(
-        F.size(c) > 5, F.filter(c, lambda _: F.lit(False))
-    ).otherwise(c)

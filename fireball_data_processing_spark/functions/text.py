@@ -68,8 +68,7 @@ def substitute_snippet(
 
     The reference shlex-splits (``argsplit``); quoted arguments differ from
     plain ' '-splitting there. This Column form uses ' '-split semantics
-    (exact for unquoted commands — the overwhelming case); the shlex-exact
-    variant is ``substitute_snippet_shlex`` (pandas UDF) in this module.
+    (exact for unquoted commands — the overwhelming case).
     """
     words = F.split(content, " ")
     pos = F.array_position(words, snippet_name)  # 1-based, 0 = not found
@@ -85,38 +84,6 @@ def substitute_snippet(
         ),
     )
     return F.when(pos > 0, replaced).otherwise(content)
-
-
-def substitute_snippet_shlex():
-    """shlex-exact F5 as an Arrow pandas UDF (quoted-argument semantics)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StringType
-
-    # no type hints: with `from __future__ import annotations` they become
-    # strings that pyspark's hint resolver can't eval here (pd is imported
-    # locally); hint-less pandas_udf falls back to scalar mode, which is
-    # exactly what we want.
-    @pandas_udf(StringType())
-    def _sub(content, name, after):
-        import shlex
-
-        def one(c, n, a):
-            if c is None or n is None or a is None:
-                return c
-            try:
-                parts = shlex.split(c, posix=False)
-            except ValueError:
-                parts = c.split(" ")
-            for i, w in enumerate(parts):
-                if w == n:
-                    parts[i] = a
-                    return " ".join(parts)
-            return c
-
-        return pd.Series([one(c, n, a) for c, n, a in zip(content, name, after)])
-
-    return _sub
 
 
 def hp_band(hp: Column, max_hp: Column, temp_hp: Column) -> Column:

@@ -4,7 +4,6 @@
 from fireball_data_processing_spark.operators.asof import (
     asof_backward_col,
     asof_forward_col,
-    asof_join,
     nearest_join,
 )
 from fireball_data_processing_spark.operators.runs import with_run_ids
@@ -20,7 +19,6 @@ from fireball_data_processing_spark.operators.sampling import (
     deterministic_split,
 )
 from fireball_data_processing_spark.operators.dedup import (
-    build_minhash_index,
     exact_dedup_groups,
     jaccard_pairs,
     lsh_candidate_pairs,
@@ -33,7 +31,6 @@ from fireball_data_processing_spark.operators.similarity import (
     brute_force_topk,
     build_ivf_index,
     ivf_query,
-    lsh_topk,
     rp_ann_topk,
     rp_ivf_topk,
     rp_sketch_components,
@@ -63,8 +60,6 @@ from fireball_data_processing_spark.operators.hyptest import (
 from fireball_data_processing_spark.operators.markov import (
     markov_profile,
     removal_attribution,
-    stationary_distribution,
-    transition_matrix,
 )
 from fireball_data_processing_spark.operators.ope import (
     dr_value,
@@ -75,7 +70,6 @@ from fireball_data_processing_spark.operators.pca import (
     pca_fit,
     pca_project_expr,
     power_iteration_pca,
-    power_iteration_pca_k,
 )
 from fireball_data_processing_spark.operators.seqtest import sprt_decisions
 from fireball_data_processing_spark.operators.survival import km_curve
@@ -107,14 +101,10 @@ __all__ = [
     "pca_fit",
     "pca_project_expr",
     "power_iteration_pca",
-    "power_iteration_pca_k",
     "reliability_diagram",
     "removal_attribution",
     "snips_value",
     "sprt_decisions",
-    "stationary_distribution",
-    "transition_matrix",
-    "build_minhash_index",
     "exact_dedup_groups",
     "jaccard_pairs",
     "lsh_candidate_pairs",
@@ -125,13 +115,11 @@ __all__ = [
     "brute_force_topk",
     "build_ivf_index",
     "ivf_query",
-    "lsh_topk",
     "rp_ann_topk",
     "rp_ivf_topk",
     "rp_sketch_components",
     "asof_backward_col",
     "asof_forward_col",
-    "asof_join",
     "nearest_join",
     "with_run_ids",
     "with_correlation_groups",

@@ -17,7 +17,7 @@ Spark SQL has no native ASOF JOIN. Two formulations are provided:
     predicate within the same partition — a pure window expression, zero
     extra shuffles beyond the shared instance-key exchange.
 
-``asof_join`` / ``nearest_join``
+``nearest_join``
     two-table form via **union + window**, not a join: tag each side, union,
     and take ``last(right_value) ignore nulls`` over an ordered window. One
     shuffle on the partition key, no O(n*m) range-join blowup, no skew
@@ -114,39 +114,6 @@ def _backward_window(part: list[str], order_col: str) -> WindowSpec:
     )
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    partition_cols: Sequence[str],
-    order_col: str,
-    right_cols: Sequence[str],
-) -> DataFrame:
-    """Attach the latest ``right`` row's ``right_cols`` at-or-before each
-    ``left`` row (backward as-of), matching on ``partition_cols`` with
-    ``order_col`` as event time.
-
-    Implemented as union + ordered window (single shuffle). A right row
-    tied with the left row on ``order_col`` counts as at-or-before.
-    """
-    part = list(partition_cols)
-    lifted = [f"__r_{c}" for c in right_cols]
-
-    u = _side_union(
-        left, right, part, order_col,
-        [(rc, F.col(c), right.schema[c].dataType)
-         for c, rc in zip(right_cols, lifted)],
-    )
-    w = _backward_window(part, order_col)
-    for c, rc in zip(right_cols, lifted):
-        u = u.withColumn(
-            rc, F.last(F.when(F.col(_SIDE) == 0, F.col(rc)), ignorenulls=True).over(w)
-        )
-    out = u.filter(F.col(_SIDE) == 1).drop(_SIDE)
-    for c, rc in zip(right_cols, lifted):
-        out = out.withColumnRenamed(rc, f"{c}_asof")
-    return out
-
-
 def nearest_join(
     left: DataFrame,
     right: DataFrame,
@@ -176,9 +143,9 @@ def nearest_join(
     u = _side_union(
         left, right, part, order_col, [("__r_key", F.col(right_key), key_t)]
     )
-    # tie orders mirror the asof_join tie semantics: at equal order
-    # value the right row is visible both backward (side 0 sorts first) and
-    # forward (side 0 sorts after the probe, window includes it)
+    # tie orders: at equal order value the right row is visible both
+    # backward (side 0 sorts first) and forward (side 0 sorts after the
+    # probe, window includes it)
     w_b = _backward_window(part, order_col)
     w_f = (
         Window.partitionBy(*part)

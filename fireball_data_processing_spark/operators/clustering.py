@@ -43,12 +43,10 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "kcenter_fit",
-    "kcenter_radius",
     "kmeans_assign",
     "kmeans_fit",
     "kmeans_summary",
     "nearest_centroid_expr",
-    "nearest_centroids_expr",
 ]
 
 
@@ -135,7 +133,10 @@ def nearest_centroid_sql(
 def nearest_centroids_sql(
     centroids: list[tuple[int, list[float]]], vec_sql: str, n_probe: int
 ) -> str:
-    """Text twin of :func:`nearest_centroids_expr`."""
+    """The ``n_probe`` nearest centroids as ``struct<d, cid>``, nearest
+    first: the same bind-once wrapper and (dist2, cid) struct order as
+    :func:`nearest_centroid_sql`, sorted and sliced instead of
+    ``array_min``."""
     return (
         f"element_at(transform(array({vec_sql}),np_v->slice(array_sort("
         "transform("
@@ -214,27 +215,6 @@ def _centroid_distances(
     return F.transform(
         _centroid_literal(centroids),
         lambda c: F.struct(_dist2(v, c["v"]).alias("d"), c["cid"].alias("cid")),
-    )
-
-
-def nearest_centroids_expr(
-    centroids: list[tuple[int, list[float]]], vec: Column | str, n_probe: int
-) -> Column:
-    """The row's ``n_probe`` nearest centroids as an
-    ``array<struct<d:double, cid:int>>``, (dist2, cid)-lexicographic —
-    the multi-probe generalization of :func:`nearest_centroid_expr`,
-    which IVF-style index probing needs (a query inspects its few
-    nearest cells, not just the winner). Same determinism contract:
-    sequential-fold distances, lowest-cid tie-break, once-per-row
-    ``vec`` evaluation, all inside one codegen projection. A SQL
-    fragment string takes the O(1)-py4j text path."""
-    if isinstance(vec, str):
-        return F.expr(nearest_centroids_sql(centroids, vec, n_probe))
-    return _bind_once(
-        vec,
-        lambda v: F.slice(
-            F.array_sort(_centroid_distances(centroids, v)), 1, n_probe
-        ),
     )
 
 
@@ -401,18 +381,3 @@ def kcenter_fit(
         centers.append((t, int(pick["id"]), float(pick["d"]), v))
         md_sql = f"round(least({md_sql},{_dist2_sql(vec_sql, _vec_sql(v))}),6)"
     return centers
-
-
-def kcenter_radius(
-    df: DataFrame,
-    centers: list[tuple[int, int, float, list[float]]],
-) -> DataFrame:
-    """Coverage radius of a chosen center set: the max over points of
-    the (rounded) distance to the nearest center — one aggregate, the
-    selection-quality number the k-center guarantee bounds."""
-    best = nearest_centroid_expr(
-        [(idx, v) for idx, _, _, v in centers], _cast_vec_sql("embedding")
-    )
-    return df.select(F.round(best["d"], 6).alias("__d")).agg(
-        F.max("__d").alias("radius")
-    )

@@ -30,9 +30,9 @@ from fireball_data_processing_spark.functions.text import normalize_text  # noqa
 from fireball_data_processing_spark.session import conf_bytes, estimated_bytes  # noqa: E402
 
 __all__ = [
-    "normalize_text", "exact_dedup_groups", "word_shingles",
-    "shingles_of_words", "capped_shingles", "minhash_signature",
-    "minhash_sig_expr", "band_structs", "build_minhash_index",
+    "normalize_text", "exact_dedup_groups",
+    "shingles_of_words", "minhash_signature",
+    "minhash_sig_expr", "band_structs",
     "lsh_candidate_pairs", "jaccard_pairs", "simhash", "ngram_overlap",
     "connected_components", "duplicate_spans", "remove_duplicate_spans",
     "aligned_segments", "line_dedup", "ngram_containment",
@@ -56,20 +56,6 @@ def exact_dedup_groups(df: DataFrame) -> DataFrame:
     )
 
 
-def word_shingles(c: Column, k: int) -> Column:
-    """Distinct k-word shingles of the normalized text (array<string>).
-
-    Built with transform over the split words — stays in codegen, no UDF.
-
-    PERF: pass a pre-materialized words *column* (see ``_exploded_shingles``)
-    rather than a raw text column — expressions inside a higher-order-
-    function lambda get NO subexpression elimination, so a split/regex child
-    here would re-run once per shingle index.
-    """
-    words = F.split(normalize_text(c), " ")
-    return shingles_of_words(words, k)
-
-
 def shingles_of_words(words: Column, k: int) -> Column:
     """k-word shingles of an already-split words array column."""
     n = F.size(words)
@@ -79,26 +65,6 @@ def shingles_of_words(words: Column, k: int) -> Column:
         lambda i: F.concat_ws(" ", F.slice(words, i + 1, k)),
     )
     return F.array_distinct(F.when(n >= k, sh).otherwise(F.array()))
-
-
-def capped_shingles(sh: Column, max_shingles: int) -> Column:
-    """Deterministic uniform subsample of a shingle array: keep the
-    ``max_shingles`` shingles with the smallest md5, i.e. a bottom-k
-    min-hash sample. Unbiased for Jaccard/MinHash estimation (unlike a
-    lexicographic prefix, which over-selects alphabetically-early text)."""
-    sampled = F.transform(
-        F.slice(
-            F.array_sort(
-                F.transform(
-                    sh, lambda s: F.struct(F.md5(s).alias("h"), s.alias("s"))
-                )
-            ),
-            1,
-            max_shingles,
-        ),
-        lambda x: x["s"],
-    )
-    return F.when(F.size(sh) > max_shingles, sampled).otherwise(sh)
 
 
 def _corpus_bytes(spark) -> int:
@@ -160,7 +126,6 @@ def _exploded_shingles(
     text_col: str,
     id_col: str,
     k: int,
-    max_shingles: int | None = None,
 ) -> DataFrame:
     """(id, shingle) rows, one per distinct shingle.
 
@@ -172,14 +137,6 @@ def _exploded_shingles(
        pinning the count keeps the expansion parallel (and the downstream
        groupBy(id) reuses the partitioning, so no extra shuffle);
     3. explode shingles from the materialized words column.
-
-    ``max_shingles`` caps the per-doc shingle count BEFORE the explode via
-    :func:`capped_shingles` — one pathological mega-document (the corpus
-    the reference processes has 250 MB+ instances) otherwise fans out
-    millions of rows and concentrates them back into a single aggregation
-    buffer row downstream. Docs under the cap are untouched; docs over it
-    contribute a deterministic uniform sample, so signatures/Jaccard become
-    (tight) estimates for those docs only.
     """
     w = _spread_words(
         df.select(
@@ -189,8 +146,6 @@ def _exploded_shingles(
         id_col,
     )
     sh = shingles_of_words(F.col("__words"), k)
-    if max_shingles is not None:
-        sh = capped_shingles(sh, max_shingles)
     return w.select(F.col(id_col), F.explode(sh).alias("shingle"))
 
 
@@ -199,7 +154,6 @@ def minhash_signature(
     num_hashes: int = 8,
     shingle_k: int = 3,
     with_shingles: bool = False,
-    max_shingles: int | None = None,
 ) -> DataFrame:
     """Per-doc MinHash signature: for hash function i, min over shingles of
     md5(i || '#' || shingle) (hex strings; lexicographic min).
@@ -212,16 +166,9 @@ def minhash_signature(
     Jaccard-verification stage shares this plan instead of building a
     second shingling pipeline. (Consumers of separate branches still
     re-execute the shared subtree — to pay the corpus scan exactly once at
-    billion-doc scale, materialize via ``build_minhash_index``.)
-
-    Set ``max_shingles`` (e.g. 10_000) on adversarial corpora: it bounds the
-    explode fan-out, the aggregation buffer, and — with
-    ``with_shingles=True`` — the collected ``__sh`` payload a mega-document
-    drags through the shuffle, at the cost of signature/Jaccard becoming a
-    bottom-k-sample estimate for docs above the cap (see
-    :func:`capped_shingles`).
+    billion-doc scale, write the signatures to parquet first.)
     """
-    exploded = _exploded_shingles(df, "text", "doc_id", shingle_k, max_shingles)
+    exploded = _exploded_shingles(df, "text", "doc_id", shingle_k)
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}#"), F.col("shingle")))).alias(f"mh{i}")
         for i in range(num_hashes)
@@ -283,32 +230,6 @@ def band_structs(num_hashes: int, band_size: int) -> Column:
     )
 
 
-def build_minhash_index(df: DataFrame, path: str) -> DataFrame:
-    """Near-dedup build phase — run ONCE per corpus, amortized over every
-    candidate-generation + verification pass (the same build/query split as
-    ``similarity.build_ivf_index``).
-
-    Writes the per-doc signature AND distinct shingle set to parquet and
-    returns the re-read table: the 100-TB corpus is scanned and shingled
-    exactly once, and every downstream consumer (banded candidate
-    generation — ``lsh_candidate_pairs(index)`` — and
-    Jaccard verification via ``jaccard_pairs(shingle_sets=...)``) reads the
-    compact index instead of re-executing the shingling pipeline.
-
-    Because the index persists whole shingle sets, ``max_shingles`` is ON
-    here (50k shingles ≈ a few MB/doc worst case) — an unguarded 250 MB
-    document would otherwise write a multi-GB parquet row and blow the
-    aggregation buffer long before that.
-    """
-    sigs = minhash_signature(
-        df,
-        with_shingles=True,
-        max_shingles=50_000,
-    )
-    sigs.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
-
-
 def lsh_candidate_pairs(
     sigs: DataFrame,
     num_hashes: int = 8,
@@ -329,9 +250,9 @@ def lsh_candidate_pairs(
     narrower than the corpus. At local/bench scale the gate declines the
     pin (the duplicated subtrees execute concurrently and cost less than
     serializing behind a cache materialization — measured +50% at sf0.1),
-    keeping the small-scale plan unchanged. Over a materialized index
-    (``build_minhash_index``) an unpinned side re-reads compact parquet,
-    not the shingling pipeline.
+    keeping the small-scale plan unchanged. Over signatures written to
+    parquet an unpinned side re-reads compact parquet, not the shingling
+    pipeline.
 
     In-bucket work is quadratic in bucket size — bounded by the LSH design
     (a hot band key is a near-duplicate cluster, exactly what the bands
@@ -1283,11 +1204,9 @@ def edit_distance_pairs(
     from LSH bands / SimHash buckets / CDC chunk hits (pair-bounded),
     and ``max_chars`` truncates both sides (documents beyond a few KB
     that still band together are near-dups whose head decides; the cap
-    bounds the per-pair cost to max_chars², the same
-    estimate-for-capped-docs trade as ``minhash_signature``'s
-    max_shingles). ``F.levenshtein`` is JVM codegen — no Python
-    anywhere — and DuckDB's ``levenshtein`` replays it exactly, so the
-    verification is oracle-checkable.
+    bounds the per-pair cost to max_chars²). ``F.levenshtein`` is JVM
+    codegen — no Python anywhere — and DuckDB's ``levenshtein`` replays
+    it exactly, so the verification is oracle-checkable.
 
     Output: ``(id_a, id_b, edit_dist, edit_ratio)`` (empty-vs-empty pairs
     get ratio 0.0)."""

@@ -1,8 +1,7 @@
 """Distributed n-gram evaluation metrics (BLEU family).
 
 The reference's automated metrics (results/evaluate_sta_nar.py) are
-model-based (perplexity/BLEURT/BERTScore) and plug into the engine as
-Arrow-batched scorers (see plans/inference.py); this module adds the
+model-based (perplexity/BLEURT/BERTScore); this module computes the
 CLASSICAL n-gram metric computed natively: smoothed BLEU between
 (prediction, reference) pairs. Two first-class uses in a data pipeline:
 scoring generated text against references, and the self-BLEU diversity
@@ -28,14 +27,12 @@ exchanges over occurrence rows, both on uniform hash keys.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fireball_data_processing_spark.functions.text import normalize_text
 
-__all__ = ["bleu_pairs", "py_bleu", "rbo_at_k"]
+__all__ = ["bleu_pairs", "rbo_at_k"]
 
 
 def _side_grams(words_col: str, side: str, max_n: int):
@@ -151,29 +148,6 @@ def bleu_pairs(pairs: DataFrame, max_n: int = 2) -> DataFrame:
             bleu.alias("bleu"),
         )
     )
-
-
-def py_bleu(pred: str, ref: str) -> float | None:
-    """Literal-Python twin for tests (same smoothing/BP definitions)."""
-    pw = pred.lower().split()
-    rw = ref.lower().split()
-    if not pw:
-        return None
-    logs = []
-    for n in range(1, 3):
-        pg: dict[tuple[str, ...], int] = {}
-        rg: dict[tuple[str, ...], int] = {}
-        for i in range(len(pw) - n + 1):
-            g = tuple(pw[i : i + n])
-            pg[g] = pg.get(g, 0) + 1
-        for i in range(len(rw) - n + 1):
-            g = tuple(rw[i : i + n])
-            rg[g] = rg.get(g, 0) + 1
-        clipped = sum(min(c, rg.get(g, 0)) for g, c in pg.items())
-        denom = sum(pg.values())
-        logs.append(math.log((clipped + 1) / (denom + 1)))
-    bp = min(1.0, math.exp(1 - len(rw) / len(pw)))
-    return round(bp * math.exp(sum(logs) / 2), 6)
 
 
 def rbo_at_k(

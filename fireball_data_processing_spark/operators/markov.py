@@ -38,7 +38,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from pyspark.sql.window import Window
@@ -46,34 +46,9 @@ from pyspark.sql.window import Window
 from fireball_data_processing_spark.functions.rounding import spark_round
 
 __all__ = [
-    "transition_matrix",
-    "stationary_distribution",
     "markov_profile",
-    "raw_transition_probs",
     "removal_attribution",
 ]
-
-
-def transition_matrix(
-    df: DataFrame,
-    key_col: str,
-    order_col: str,
-    state_col: str,
-) -> DataFrame:
-    """Empirical first-order transition matrix of ``state_col`` along
-    ``order_col`` within each ``key_col`` sequence. Returns one row per
-    observed (src, dst) pair restricted to dst-states that also occur
-    as src (see module note on dangling states):
-    ``(src, dst, n, p)`` with ``p`` row-normalized over the kept
-    destinations and rounded to 8 dp.
-
-    One hash exchange on ``key_col`` for the lead window, one
-    partial-combining pair count, then arithmetic on the matrix frame.
-    """
-    pairs = _pair_counts(df, key_col, order_col, state_col)
-    srcs = pairs.select(F.col("src").alias("dst")).distinct()
-    kept = pairs.join(F.broadcast(srcs), "dst", "left_semi")
-    return _row_normalized(kept)
 
 
 def _pair_counts(
@@ -94,38 +69,22 @@ def _pair_counts(
     )
 
 
-def _row_normalized(pairs: DataFrame) -> DataFrame:
-    """``(src, dst, n, p)`` with ``p = n / total_out(src)`` rounded to
-    8 dp."""
-    tot = Window.partitionBy("src")
-    return pairs.select(
-        "src",
-        "dst",
-        "n",
-        F.round(
-            F.col("n").cast("double") / F.sum("n").over(tot), 8
-        ).alias("p"),
-    )
-
-
 def _collected_matrix(
     df: DataFrame,
     key_col: str,
     order_col: str,
     state_col: str,
 ) -> list:
-    """The :func:`transition_matrix` rows as a collected
+    """The row-normalized transition matrix as a collected
     ``[(src, dst, n, p), ...]`` list, in ONE distributed job: the lead
     window + pair count collect RAW (|states|^2-bounded, dangling
     destinations included), and the dangling-dst restriction +
-    row renormalization run driver-side. The frame form's broadcast
-    semi-join on the source set re-executes the whole window+aggregate
-    subtree as the broadcast side (a duplicated subtree per action),
-    which doubled the data-proportional work of every
-    profile/entropy run; driver-side restriction over integer counts is
-    EXACT (the per-src totals are integer sums — no float
-    reassociation), so ``p = round(n / total, 8)`` is
-    bit-identical to the frame form's window division."""
+    row renormalization run driver-side. A frame-side broadcast
+    semi-join on the source set would re-execute the whole
+    window+aggregate subtree as the broadcast side (a duplicated subtree
+    per action); driver-side restriction over integer counts is EXACT
+    (the per-src totals are integer sums — no float reassociation), so
+    ``p = round(n / total, 8)`` matches the oracle's window division."""
     # bounded: |states|^2, dangling dst included
     raw = _pair_counts(df, key_col, order_col, state_col).collect()
     srcs = {r["src"] for r in raw}
@@ -144,56 +103,11 @@ def _collected_matrix(
     ]
 
 
-_POWER_STEPS = 12
-
-
-def stationary_distribution(matrix: DataFrame) -> DataFrame:
-    """Power iteration ``pi <- pi @ P`` from the uniform start, exactly
-    ``_POWER_STEPS`` steps, each iterate rounded to 8 dp (engine
-    replay). ``matrix`` is the (src, dst, p) frame from
-    transition_matrix. Returns ``(state, pi)`` — a |states|-row frame
-    consumers join back to distributed data (Spark broadcasts it).
-
-    The matrix is |states|^2-bounded BY CONSTRUCTION, so the iteration
-    runs DRIVER-SIDE on the collected table (the operators/raking.py
-    contract, applied to removal_attribution and here for the same
-    measured reason: a frame-resident loop spends seconds of
-    stage-launch overhead per query on sub-kilobyte joins — at every
-    SF — while IEEE-double driver arithmetic with ``_spark_round``
-    replicating the engine's per-iterate rounding is value-identical
-    and free). Join/group semantics mirror the frame form: states with
-    no incoming transition drop out of the iterate after step 1, and
-    per-destination sums run in sorted-source order (reassociation
-    noise absorbed by the 8-dp rounding, the cross-engine oracle contract).
-    """
-    state_type = matrix.schema["src"].dataType
-    out_schema = StructType(
-        [
-            StructField("state", state_type, True),
-            StructField("pi", DoubleType(), True),
-        ]
-    )
-    pi = _stationary_from_rows(
-        [
-            (r["src"], r["dst"], r["p"])
-            for r in matrix.select("src", "dst", "p").collect()
-        ],
-        _POWER_STEPS,
-        8,
-    )
-    if not pi:
-        return matrix.sparkSession.createDataFrame([], out_schema)
-    return matrix.sparkSession.createDataFrame(
-        sorted(pi.items(), key=lambda kv: _sort_key(kv[0])), out_schema
-    )
-
-
 def _stationary_from_rows(
     collected: list, n_iter: int, round_dp: int
 ) -> dict:
-    """The power iteration of :func:`stationary_distribution` over an
-    already-collected ``[(src, dst, p), ...]`` list — shared by the
-    DataFrame wrapper above and the profile/entropy callers that fold
+    """The stationary power iteration over an already-collected
+    ``[(src, dst, p), ...]`` list — the profile/entropy callers fold
     several small per-query aggregates into ONE bounded collect (each
     extra frame-side aggregate on the sub-kilobyte matrix frame costs a
     full job launch per query run; driver arithmetic on the same rows is
@@ -236,8 +150,8 @@ def markov_profile(
     the driver ONCE and every model-sized step — the power iteration,
     the per-src out-count/self-loop rollup, the pi join — runs there
     (the removal_attribution contract). The previous shape
-    localCheckpoint-ed the matrix, collected it AGAIN inside
-    stationary_distribution, and then ran the per-src aggregate + pi
+    localCheckpoint-ed the matrix, collected it AGAIN for the power
+    iteration, and then ran the per-src aggregate + pi
     join as a distributed plan: three extra job launches per run on
     sub-kilobyte frames (measured 1.8 s -> ~0.5 s at sf0.1 — guide
     §1.1/§5: the driver round-trips were the cost, not the data).
@@ -280,21 +194,6 @@ def markov_profile(
     return df.sparkSession.createDataFrame(rows, out_schema)
 
 
-def raw_transition_probs(
-    df: DataFrame,
-    key_col: str,
-    order_col: str,
-    state_col: str,
-) -> DataFrame:
-    """Un-renormalized empirical transition probabilities: one row per
-    observed (src, dst) with ``p = n / total_out(src)`` over ALL
-    observed successors — unlike :func:`transition_matrix`, nothing is
-    dropped or renormalized, which is what attribution needs (removing
-    a channel must LOSE its probability mass, not redistribute it).
-    Same plan shape: one lead window + one pair-count aggregate."""
-    return _row_normalized(_pair_counts(df, key_col, order_col, state_col))
-
-
 # exact driver-side replica of Spark's F.round (shortest-decimal
 # HALF_UP) — shared by every driver-resident fixed point; see
 # functions/rounding.py for the semantics note
@@ -303,7 +202,7 @@ _spark_round = spark_round
 
 def _sort_key(s):
     """None-tolerant ordering key: NULL states (a nullable state_col is
-    legal — transition_matrix only filters NULL dst) sort first instead
+    legal — the pair count only filters NULL dst) sort first instead
     of raising TypeError in sorted()."""
     return (s is None, s)
 

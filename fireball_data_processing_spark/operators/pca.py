@@ -64,7 +64,6 @@ __all__ = [
     "pca_fit",
     "pca_project_expr",
     "power_iteration_pca",
-    "power_iteration_pca_k",
 ]
 
 
@@ -112,9 +111,7 @@ def pca_fit(
     of operators/clustering.py: model re-enters the plan as codegen
     constants, so projection adds ZERO joins/exchanges)."""
     mu = _mean(df, vec_col, dim, 8)
-    v, nrm, total = _component(
-        df, _centered_expr(vec_col, mu), dim, n_iter, 8, with_total=True
-    )
+    v, nrm, total = _component(df, _centered_expr(vec_col, mu), dim, n_iter, 8)
     return mu, v, nrm, total
 
 
@@ -133,31 +130,27 @@ def pca_project_expr(vec_col: str, mu: list[float], v: list[float]):
     )
 
 
-def _component(df, carr, dim, n_iter, round_dp, with_total=False):
+def _component(df, carr, dim, n_iter, round_dp):
     """One power-iteration component over the centered array expression
-    ``carr``: returns (loading list, ||S v|| norm) — or, with
-    ``with_total``, (loading list, norm, total scatter) — every value
-    ``round_dp``-rounded. See the module docstring for the
+    ``carr``: returns (loading list, ||S v|| norm, total scatter), every
+    value ``round_dp``-rounded. See the module docstring for the
     representation and rounding contract."""
     base = df.select(carr.alias("__c")).persist()
     try:
-        total = None
-        if with_total:
-            # same per-row left-fold sum(c_i^2) and single Spark sum as
-            # the historical standalone scatter job; this action also
-            # materializes the cache the power steps iterate over
-            total = base.agg(
-                F.round(
-                    F.sum(
-                        F.aggregate(
-                            "__c",
-                            F.lit(0.0),
-                            lambda acc, e: acc + e * e,
-                        )
-                    ),
-                    round_dp,
-                ).alias("__tot")
-            ).first()["__tot"]
+        # per-row left-fold sum(c_i^2) and a single Spark sum; this action
+        # also materializes the cache the power steps iterate over
+        total = base.agg(
+            F.round(
+                F.sum(
+                    F.aggregate(
+                        "__c",
+                        F.lit(0.0),
+                        lambda acc, e: acc + e * e,
+                    )
+                ),
+                round_dp,
+            ).alias("__tot")
+        ).first()["__tot"]
         v = [spark_round(1.0 / math.sqrt(dim), round_dp)] * dim
         nrm = None
         for _ in range(n_iter):
@@ -193,71 +186,7 @@ def _component(df, carr, dim, n_iter, round_dp, with_total=False):
             v = [spark_round(ui / nrm, round_dp) for ui in u]
     finally:
         base.unpersist()
-    if with_total:
-        return v, nrm, total
-    return v, nrm
-
-
-_K_COMPONENTS = 2
-_K_STEPS = 6
-
-
-def power_iteration_pca_k(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
-    """Top ``_K_COMPONENTS`` principal components via power iteration
-    with HOTELLING DEFLATION: after extracting component v, the
-    centered array is replaced by ``c - (c . v) v`` (pure array
-    arithmetic with v as an array literal — the deflated frame is
-    materialized only inside the next component's cached base), and the
-    next component is extracted from the residual. Returns
-    ``_K_COMPONENTS * dim`` rows
-    ``(component, dim, loading, eigenvalue, var_share)`` with rows
-    emitted in (component, dim) order (order-by-construction — no sort
-    in the plan; see :func:`power_iteration_pca`);
-    var_share is each eigenvalue's share of TOTAL
-    scatter, so shares across components are comparable and sum below
-    1. Same bounded-collect contract and per-value rounding as
-    :func:`power_iteration_pca`."""
-    mu = _mean(df, vec_col, dim, 8)
-    carr = _centered_expr(vec_col, mu)
-    total_scatter = None
-
-    rows = []
-    for comp in range(1, _K_COMPONENTS + 1):
-        if comp == 1:
-            v, nrm, total_scatter = _component(
-                df, carr, dim, _K_STEPS, 8, with_total=True
-            )
-        else:
-            v, nrm = _component(df, carr, dim, _K_STEPS, 8)
-        for i in range(dim):
-            rows.append(
-                (
-                    comp,
-                    i + 1,
-                    spark_round(v[i], 6),
-                    spark_round(nrm, 6),
-                    spark_round(nrm / total_scatter, 6),
-                )
-            )
-        # projection (c . v) as the same left-fold as the power step
-        proj = F.round(
-            F.aggregate(
-                F.zip_with(carr, F.lit(v), lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, e: acc + e,
-            ),
-            8,
-        )
-        carr = F.zip_with(carr, F.lit(v), lambda a, b: a - proj * b)
-    # rows are appended comp-ascending, dim-ascending — the local
-    # relation is ALREADY in (component, dim) order, so no orderBy();
-    # sorting here would spend a whole range-exchange job on a
-    # (_K_COMPONENTS * d)-row frame (row sequence unchanged)
-    return df.sparkSession.createDataFrame(
-        rows,
-        "component bigint, dim bigint, loading double, "
-        "eigenvalue double, var_share double",
-    )
+    return v, nrm, total
 
 
 def power_iteration_pca(
@@ -277,7 +206,7 @@ def power_iteration_pca(
     variance the component explains)."""
     mu = _mean(df, vec_col, dim, 8)
     v, nrm, total_scatter = _component(
-        df, _centered_expr(vec_col, mu), dim, n_iter, 8, with_total=True
+        df, _centered_expr(vec_col, mu), dim, n_iter, 8
     )
 
     spark = df.sparkSession
@@ -285,8 +214,8 @@ def power_iteration_pca(
         (i + 1, spark_round(v[i], 6))
         for i in range(dim)
     ]
-    # rows are built dim-ascending — already in output order; see the
-    # orderBy note in power_iteration_pca_k (row sequence unchanged)
+    # rows are built dim-ascending — already in output order, so no
+    # orderBy() (a sort would spend a range-exchange job on d rows)
     out = spark.createDataFrame(rows, "dim bigint, loading double")
     return out.select(
         "dim",

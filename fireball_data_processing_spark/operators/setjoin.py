@@ -20,8 +20,7 @@ Scale shape: every stage is shuffle-bounded (distinct shingles, one
 document-frequency aggregate, one per-doc window, the prefix equi-join,
 pair distinct, verification joins); nothing is corpus-quadratic. The
 verification joins carry the full sorted shingle arrays — bounded per
-row by document length; at 100 TB cap shingles per doc exactly as the
-MinHash path does (``capped_shingles``) and verify on the capped sets.
+row by document length.
 
 Reference parity: the reference has no similarity join at all — this is
 part of the training-data-pipeline surface (task brief: "n-gram
@@ -35,8 +34,6 @@ than the verification it saved.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -93,7 +90,7 @@ def prefix_candidates(
     )
     # prefix length |x| - ceil(tau*|x|) + 1; ceil on DOUBLE column math.
     # Nudge the product DOWN before ceil: IEEE can round tau*n UP past an
-    # exact integer (0.9*10 -> 9.000000000000002 -> ceil 10), which would
+    # exact integer (0.55*100 -> 55.00000000000001 -> ceil 56), which would
     # SHORTEN the prefix — a false-negative window in an EXACT operator.
     # Over-long prefixes (the nudge's only possible error) are safe.
     prefix_len = (
@@ -248,11 +245,3 @@ def set_similarity_join(
         for p in pins:
             p.unpersist()
     return out
-
-
-def _prefix_length(n: int, threshold: float) -> int:
-    """Reference-math twin for tests: prefix length on the driver (with
-    the same downward FP nudge as the column math — ``0.9 * 10`` is
-    ``9.000000000000002`` in IEEE, and an un-nudged ceil would shorten
-    the prefix)."""
-    return n - math.ceil(threshold * n - 1e-9) + 1

@@ -50,33 +50,10 @@ def shuffle_shards(
 ) -> DataFrame:
     """Assign every row a shard id and a within-shard order key.
 
-    Lazy column-only transform (no exchange); writers call
-    :func:`write_shards` to materialize the layout.
+    Lazy column-only transform (no exchange); a writer repartitions on
+    ``shard`` and sorts within partitions by ``shard_order`` to
+    materialize the layout.
     """
     return df.withColumn("shard", shard_id(key, n_shards, salt)).withColumn(
         "shard_order", shard_key(key, salt)
-    )
-
-
-def write_shards(
-    df: DataFrame,
-    key: Column,
-    path: str,
-    n_shards: int,
-) -> None:
-    """Materialize the sharded layout: one directory per shard
-    (``shard=K/``), rows within each shard's files in the deterministic
-    pseudo-random (unsalted) order. Exactly one exchange (the shard
-    repartition); the within-shard sort is partition-local."""
-    out = shuffle_shards(df, key, n_shards)
-    # sort by (shard, order): the leading shard key satisfies the
-    # partitioned write's required ordering, so Spark's planned-write
-    # machinery does not inject its own (non-stable) sort on top — which
-    # would destroy the within-shard order the layout promises
-    (
-        out.repartition(n_shards, F.col("shard"))
-        .sortWithinPartitions("shard", "shard_order")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
     )

@@ -6,12 +6,6 @@ The retrieval ladder, cheapest-candidates first:
   ``F.aggregate``/``F.zip_with`` (no Python in the loop). The baseline and
   the LABELED VERIFIER for every approximate variant. Cost is |Q| x |N|;
   fine for moderate query sets, not for all-pairs at 100 TB.
-- **LSH-bucketed top-k** — random-hyperplane signatures (SimHash for
-  vectors): sign pattern of dot products against D fixed pseudo-random
-  hyperplanes. Vectors sharing a signature bucket are candidates; search
-  degrades gracefully by probing Hamming-adjacent buckets. The hyperplanes
-  are derived deterministically from md5 of (plane, dim) so signatures are
-  reproducible across engines and runs.
 - **IVF top-k** (``build_ivf_index``/``ivf_query``) — MLlib-KMeans coarse
   cells, path-backed partition pruning for the probe filter.
 - **JL sketch family**: ``rp_sketch_expr`` shrinks vectors
@@ -33,7 +27,6 @@ pruning does the rest; sketches are what cross the wire.
 
 from __future__ import annotations
 
-import hashlib
 import math
 from typing import NamedTuple
 
@@ -171,25 +164,8 @@ def _cosine_topk(pairs: DataFrame, sim: Column, k: int) -> DataFrame:
     )
 
 
-def _hyperplane_matrix(num_planes: int, dim: int) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplane components in [-1, 1):
-    component (p, i) = int(md5(f"{p}:{i}")[:8 hex], 16) / 2^31 - 1 —
-    reproducible in any engine with md5 (bit-identical to the SQL form
-    ``conv(substring(md5(p || ':' || i), 1, 8), 16, 10) / 2147483648 - 1``).
-    """
-    return [
-        [
-            int(hashlib.md5(f"{p}:{i}".encode()).hexdigest()[:8], 16)
-            / 2147483648.0
-            - 1.0
-            for i in range(dim)
-        ]
-        for p in range(num_planes)
-    ]
-
-
 def _matrix_literal(matrix: list[list[float]]) -> Column:
-    """The hyperplane matrix as ONE ``array<array<double>>`` literal.
+    """A matrix as ONE ``array<array<double>>`` literal.
 
     Built from a single parsed expression string: O(1) py4j calls at plan
     build (vs one Column per component), and Catalyst constant-folds the
@@ -249,50 +225,6 @@ def _validate_dim(df: DataFrame, vec_col: str, dim: int) -> int:
             f"mis-slice PQ subvectors"
         )
     return dim
-
-
-def rh_signature(
-    df: DataFrame,
-    num_planes: int = 8,
-    dim: int | None = None,
-    vec_col: str = "embedding",
-    sig_col: str = "rh_sig",
-) -> DataFrame:
-    """Random-hyperplane signature: bit p = sign(v . H_p). Returns the input
-    plus an integer signature column (bucket key).
-
-    Plan size is constant in embedding dim: the hyperplane matrix enters the
-    plan as one literal and each dot product is a ``zip_with``/``aggregate``
-    fold, so only O(num_planes) lambda expressions exist regardless of dim —
-    compiles fine at dim 768+ where a per-component expression tree would
-    hit Catalyst analysis cost and the 64KB codegen method limit.
-
-    **``dim=None`` triggers an EAGER one-row peek at plan-build time** (see
-    :func:`_infer_dim`) — pass ``dim`` explicitly, or attach ``{"dim": N}``
-    column metadata, to keep the call fully lazy (required for streaming
-    inputs). Vectors shorter than
-    ``dim`` contribute zeros for the missing components and longer vectors
-    are truncated (``coalesce`` over the ``zip_with`` null padding), so no
-    ANSI out-of-bounds error is possible for mismatched lengths.
-    """
-    if not 1 <= num_planes <= 30:
-        raise ValueError("num_planes must be in [1, 30] for an int signature")
-    if dim is None:
-        dim = _infer_dim(df, vec_col)
-    h = _matrix_literal(_hyperplane_matrix(num_planes, dim))
-    v = F.col(vec_col)
-    dots = F.transform(h, lambda hp: padded_dot(v, hp))
-    sig = F.aggregate(
-        F.transform(
-            dots,
-            lambda d, p: F.when(
-                d > 0, F.pow(F.lit(2.0), p.cast("double"))
-            ).otherwise(F.lit(0.0)),
-        ),
-        F.lit(0.0),
-        lambda acc, b: acc + b,
-    ).cast("int")
-    return df.withColumn(sig_col, sig)
 
 
 class IvfIndex(NamedTuple):
@@ -394,8 +326,8 @@ def ivf_query(
     is at most ``n_centroids`` distinct ints), and the resulting static
     ``cell IN (...)`` filter reaches the parquet scan as PartitionFilters
     when the index is path-backed — the corpus outside the probed cells is
-    never read. The centroid matrix enters the plan as one literal (same
-    constant-plan-size construction as ``rh_signature``).
+    never read. The centroid matrix enters the plan as one literal
+    (:func:`_matrix_literal`, constant plan size in the dim).
 
     The query batch is persisted before that probe job: the plan executes
     twice (once for the probe-cell collect, once in the candidate join), and
@@ -433,37 +365,6 @@ def ivf_query(
     sim = cosine(F.col("__qv"), F.col("__cv"))
     sim = F.round(sim, 6)
     return _cosine_topk(qq.join(assigned, "cell"), sim, k)
-
-
-def lsh_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate cosine top-k: candidates share the 8-plane
-    random-hyperplane bucket; exact cosine re-ranks within buckets.
-
-    **``dim=None`` peeks one corpus row eagerly** (:func:`_infer_dim`); the
-    inferred value is shared by both signature stages so the corpus is
-    peeked at most once. Pass ``dim`` explicitly for full laziness."""
-    if dim is None:
-        dim = _infer_dim(corpus, "embedding")
-    qs = rh_signature(
-        queries.select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
-        ),
-        8, dim, "__qv", "sig",
-    )
-    cs = rh_signature(
-        corpus.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv")
-        ),
-        8, dim, "__cv", "sig",
-    )
-    sim = cosine(F.col("__qv"), F.col("__cv"))
-    sim = F.round(sim, 6)
-    return _cosine_topk(qs.join(cs, "sig"), sim, k)
 
 
 # ---------------------------------------------------------------------
@@ -513,12 +414,6 @@ def quantize_embedding(vec: Column) -> dict[str, Column]:
     return {"codes": codes, "vmin": vmin, "vmax": vmax, "mse": mse}
 
 
-def dequantize_embedding(codes: Column, vmin: Column, vmax: Column) -> Column:
-    """Inverse of :func:`quantize_embedding`: ``x_hat_i = vmin + code_i*scale``."""
-    scale = (vmax - vmin) / F.lit(255.0)
-    return F.transform(codes, lambda q: vmin + q.cast("double") * scale)
-
-
 def sign_bucket(vec: Column) -> Column:
     """Deterministic hyperplane bucket for semantic dedup.
 
@@ -527,11 +422,8 @@ def sign_bucket(vec: Column) -> Column:
     axis-pair hyperplane ``e_i - e_{i+8}``. For embeddings with
     roughly isotropic coordinates this behaves like random-hyperplane
     LSH (near-identical vectors agree on every bit), while staying pure
-    arithmetic that any engine reproduces exactly — unlike
-    :func:`rh_signature`'s seeded Gaussian planes, which are
-    reproducible only through this library. Use ``rh_signature`` when
-    recall matters (planes are data-independent Gaussians); use this
-    when cross-engine determinism matters (oracle-checked dedup).
+    arithmetic that any engine reproduces exactly (oracle-checked
+    dedup).
     """
     bit = lambda i: F.when(
         F.element_at(vec, i + 1).cast("double")
@@ -766,9 +658,7 @@ def rp_sign_matrix(in_dim: int, out_dim: int) -> list[list[float]]:
     well as Gaussians; deriving them from md5 (instead of a seeded RNG)
     makes the matrix a PUBLIC function of (j, i) that any engine —
     including the DuckDB oracle — reproduces bit-exactly, the same
-    portability rule as every hash in this package (contrast
-    :func:`_hyperplane_matrix`, whose seeded Gaussians are reproducible
-    only through this library)."""
+    portability rule as every hash in this package."""
     import hashlib
 
     return [
@@ -843,7 +733,7 @@ def rp_sketch_expr(
     vec: Column | str, in_dim: int, out_dim: int, round_dp: int = 6
 ) -> Column:
     """The sketch as a reusable ``array<double>`` COLUMN EXPRESSION —
-    one parsed array<array<double>> literal (the rh_signature idiom:
+    one parsed array<array<double>> literal (:func:`_matrix_literal`:
     O(1) py4j calls, constant-folded before codegen); each component
     indexes its row out of the constant and is one sequential-fold dot
     product. A SQL fragment string input builds the WHOLE expression as
@@ -1061,14 +951,13 @@ def rp_ivf_topk(
     from fireball_data_processing_spark.operators.clustering import (
         kmeans_fit,
         nearest_centroid_expr,
-        nearest_centroids_expr,
     )
 
     dim = _infer_dim(corpus, "embedding")
     # ONE sketch-augmented corpus frame feeds the whole call — the
     # local analog of the stored sketch column a 100 TB index keeps.
     # Per-row sketch evaluation is pinned by the assignment expression
-    # itself (``_bind_once`` inside nearest_centroid(s)_expr evaluates
+    # itself (``_bind_once`` inside nearest_centroid_expr evaluates
     # the vector argument once per ROW, not once per centroid — HOF
     # lambda bodies get no common-subexpression elimination, the
     # winnowing lesson), so the frame only needs to be PERSISTED while

@@ -6,18 +6,10 @@ from fireball_data_processing_spark.plans.heuristics import (
     heuristics_matrix,
     with_stream_features,
 )
-from fireball_data_processing_spark.plans.inference import (
-    classify_batches,
-    mllib_model_fn,
-    with_retries,
-)
 
 __all__ = [
     "HEURISTICS",
-    "classify_batches",
     "heuristic_exprs",
     "heuristics_matrix",
-    "mllib_model_fn",
-    "with_retries",
     "with_stream_features",
 ]

@@ -18,7 +18,7 @@ stages they fan out from — same rule as the minhash index split.
 
 Near-dup removal (MinHash/LSH) and ExactSubstr span scrubbing
 deliberately sit outside this plan: their candidate generation is
-corpus-global and belongs on the materialized ``build_minhash_index`` /
+corpus-global and belongs on the ``minhash_signature`` /
 ``duplicate_spans`` paths, composed upstream when needed.
 """
 

@@ -2162,9 +2162,8 @@ def q_purchase_view_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame
     """Interval self-join: ALL views within one hour before each
     purchase, per user (vs `nearest_purchase`'s one-match as-of form).
     Equality key + bounded range — exactly the shape Spark's stream-stream
-    join executes with watermark-bounded state; this batch twin is the
-    oracle for `streaming/join_stream.py`. The range rides the user_id
-    hash join (one shuffle per side, no cross product)."""
+    join executes with watermark-bounded state. The range rides the
+    user_id hash join (one shuffle per side, no cross product)."""
     ev = load_table(spark, sf_dir, "events")
     gap_us = 60 * 60 * 1_000_000
     p = ev.filter(F.col("event_type") == "purchase").select(
@@ -2436,8 +2435,8 @@ def _lsh_jaccard_pairs(d: DataFrame) -> DataFrame:
     downstream consumers (both sides of the band self-join, the Jaccard
     shingle lookups) each re-execute the fat subtree — broadcast stages
     get no exchange reuse — which profiled 2x slower at sf0.1. The cache
-    is the in-memory analog of ``build_minhash_index`` (the parquet-backed
-    form for corpora that outlive one job); it is invocation-scoped and
+    is the in-memory analog of signatures written to parquet (the form for
+    corpora that outlive one job); it is invocation-scoped and
     bounded by the signature+shingle table size."""
     from fireball_data_processing_spark.operators.dedup import (
         jaccard_pairs,
@@ -2746,9 +2745,7 @@ def q_discord_render_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F18 pipeline half (reference human_eval/discord_render.py:15-79 +
     prep_human_eval.py:211-215): discord-markdown STRIPPED to plain text
     and profanity-censored ('-' per character, word-bounded,
-    case-insensitive) — both as JVM-side regexp_replace chains. The HTML
-    renderer itself (presentation output) is the golden-tested
-    functions.render.render_discord_markdown_str."""
+    case-insensitive) — both as JVM-side regexp_replace chains."""
     from fireball_data_processing_spark.functions.render import (
         censor_words,
         strip_markdown,
@@ -3199,9 +3196,7 @@ def q_fsm_state_narration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark-first form: the transition table reduces to two cumulative-sum
     segmentations (signup resets, then view->purchase chunk boundaries), so
     the whole FSM runs as declarative window functions in whole-stage
-    codegen — one shuffle on user_id, no Python. The explicit per-instance
-    3-state runner (streaming.heuristics_stream.state_narration_fsm) is
-    parity-tested against this plan.
+    codegen — one shuffle on user_id, no Python.
     """
     ev = load_table(spark, sf_dir, "events")
     rel = ev.filter(
@@ -3657,10 +3652,8 @@ SELECT doc_id, label, prob FROM (
 def q_ic_ooc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U3's deterministic envelope (reference
     distill3b_ic_classifier_gpt.py:37-75): rule-based IC/OOC labeling, a
-    deterministic probability, and the keep-threshold filter. The model
-    call itself plugs into ``plans.inference.classify_batches`` (the
-    mapInPandas stage, parity-tested with a rule model); this is the
-    testable contract around it."""
+    deterministic probability, and the keep-threshold filter — the
+    testable contract around the reference's model call."""
     from fireball_data_processing_spark.functions.predicates import is_ooc
     from fireball_data_processing_spark.operators.sampling import hash_rank
 
@@ -4161,10 +4154,9 @@ SELECT id_a, id_b, cosine_sim FROM p WHERE cosine_sim > 0.45
 """,
 )
 def q_embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (dedup extension): exact
-    all-pairs form as the correctness baseline; the LSH-bucketed form
-    (operators.similarity.lsh_topk / rh_signature buckets) is the 100 TB
-    path and is recall-tested against this in unit tests."""
+    """Embedding-cosine near-duplicate pairs (dedup extension): the exact
+    all-pairs form, the correctness baseline for the approximate
+    retrieval paths (operators/similarity.py)."""
     from fireball_data_processing_spark.operators.similarity import dot, norm
 
     # per-pair work is this query's whole cost (n^2 pairs): norms are
@@ -6339,14 +6331,12 @@ GROUP BY doc_id
 
 @query("segment_scrub_gate", _SEG_SCRUB_ORACLE)
 def q_segment_scrub_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the streaming segment-scrub gate
-    (streaming/dedup_stream.py `stream_scrub_segments`): incoming docs
-    (doc_id % 4 != 0) leave with every aligned segment already present
-    in the corpus partition (doc_id % 4 == 0, min_docs=1: 'the corpus
-    has it') removed, unique remainder kept. The stream runs this exact
-    plan per micro-batch inside foreachBatch (a pure function of the
-    static index needs no watermark); parity + replay tests in
-    tests/test_streaming.py."""
+    """The segment-scrub gate (streaming/dedup_stream.py
+    `scrub_segments`): incoming docs (doc_id % 4 != 0) leave with every
+    aligned segment already present in the corpus partition
+    (doc_id % 4 == 0, min_docs=1: 'the corpus has it') removed, unique
+    remainder kept. A pure function of the static index, so a stream can
+    run it per micro-batch inside foreachBatch with no watermark."""
     from fireball_data_processing_spark.streaming.dedup_stream import (
         corpus_segment_index,
         scrub_segments,
@@ -6583,8 +6573,7 @@ def q_self_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     successor) — the self-BLEU corpus-diversity probe: high scores mean
     repetitive / mode-collapsed text. Clipped modified precision via one
     union-of-explodes pass (both sides, both orders, ONE exploded frame),
-    add-1 smoothing, brevity penalty; the model-based metrics
-    (perplexity/BLEURT) plug into plans/inference.py instead."""
+    add-1 smoothing, brevity penalty."""
     from fireball_data_processing_spark.operators.evalmetrics import bleu_pairs
 
     d = load_table(spark, sf_dir, "documents")
@@ -7566,8 +7555,7 @@ def q_frozen_lm_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     training, lookup, smoothing fallback (unseen bigram/context ->
     pure smoothing mass), both verdict legs, and the AND. Relaxed
     word-count/stop-word bounds keep the synthetic corpus's verdicts
-    mixed. The streaming form (stream_quality_gate) runs this exact
-    function per micro-batch with restart/idempotency tests."""
+    mixed."""
     from fireball_data_processing_spark.streaming.quality_stream import (
         corpus_lm_index,
         quality_gate,
@@ -12934,10 +12922,9 @@ def get(name: str) -> QuerySpec:
 # Catalog ordering: a consumer that checks only a prefix of the catalog
 # samples roughly the first 50 entries, so the head leads with the queries
 # whose engine changed most recently, then the queries whose last recorded
-# oracle check is oldest (stalest-first, as ``scripts/attestation.py --head
-# 50`` lays it out). Names listed here lead in this order; anything not
-# listed follows in declaration order; listed-but-unregistered names are
-# skipped.
+# oracle check is oldest (stalest-first). Names listed here lead in this
+# order; anything not listed follows in declaration order;
+# listed-but-unregistered names are skipped.
 _PRIORITY = [
     # recently changed engines
     "streaming_ingest_pipeline",

@@ -122,21 +122,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withMetadata("embedding", {"dim": dim})
     _TABLE_MEMO[key] = (listing, df)
     return df
-
-
-def raw_table_schema(spark: SparkSession, sf_dir: str, name: str):
-    """On-disk schema of a table, BEFORE event-time normalization.
-
-    Streaming readers must declare the file schema exactly as written
-    (``readStream.schema(...)``); the stream builders then apply
-    ``normalize_event_time`` themselves, so batch and streaming plans see
-    the same int64-nanos event time.
-    """
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every synthetic table; keys match DuckDB's pre-registered views."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}

@@ -60,6 +60,9 @@ from fireball_data_processing_spark.streaming.sinks_stream import (
     drain_stream,
     write_epoch_partition,
 )
+from fireball_data_processing_spark.streaming.sources_stream import (
+    open_event_stream,
+)
 
 __all__ = [
     "stage_incoming_slices",
@@ -252,18 +255,18 @@ def run_ingest_pipeline(
 ) -> None:
     """Run the capstone stream to completion over everything currently
     staged (``availableNow`` + ``maxFilesPerTrigger=1`` — one epoch per
-    staged slice file). Restart-safe: offsets commit only after the
-    epoch's partial is written, and the write overwrites its own
-    ``batch_id`` partition, so resuming from ``checkpoint_dir`` after a
-    kill replays at most the in-flight epoch and replaces — never
-    duplicates — its output. ``gate``/``index``/``min_parallelism`` as
-    in :func:`ingest_pipeline_batch` (exact hash index or LSH band
-    index; parallelism floor for known-small slices)."""
-    stream = (
-        spark.readStream.schema(file_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(staging_dir)
+    staged slice file), opened as a parquet file source through the
+    connector seam (``sources_stream.open_event_stream``). Restart-safe:
+    offsets commit only after the epoch's partial is written, and the
+    write overwrites its own ``batch_id`` partition, so resuming from
+    ``checkpoint_dir`` after a kill replays at most the in-flight epoch
+    and replaces — never duplicates — its output.
+    ``gate``/``index``/``min_parallelism`` as in
+    :func:`ingest_pipeline_batch` (exact hash index or LSH band index;
+    parallelism floor for known-small slices)."""
+    stream = open_event_stream(
+        spark, "parquet", file_schema, path=staging_dir,
+        options={"maxFilesPerTrigger": "1", "recursiveFileLookup": "true"},
     )
     run_ingest_pipeline_from_stream(
         stream, index, out_path, checkpoint_dir,
@@ -283,9 +286,10 @@ def run_ingest_pipeline_from_stream(
     the connector seam (``sources_stream.open_event_stream``): the file
     micro-batch source :func:`run_ingest_pipeline` builds is just one
     producer; a Kafka topic or a vendor Kinesis connector plugs in by
-    swapping the ``open_event_stream`` line that built ``stream``
-    (``fmt="kafka", payload="value"`` / ``fmt="aws-kinesis",
-    payload="data"`` with the stream name/region riding ``options``) —
+    swapping the format and options of the ``open_event_stream`` call
+    that built ``stream`` (``fmt="kafka"`` / ``fmt="aws-kinesis"`` with
+    the stream name/region riding ``options``, then one ``from_json``
+    projection of the payload column) —
     nothing in the pipeline below changes, pinned by
     tests/test_stream_sources.py (identical final-table rows through
     the seam vs the direct file stream). The exact gate's broadcast

@@ -16,7 +16,7 @@ ingest capstone, ``streaming/capstone.py``):
 2. near: per-row MinHash signature (:func:`~fireball_data_
    processing_spark.operators.dedup.minhash_sig_expr`, no shuffle) ->
    LSH band keys -> stateless lookups against :func:`corpus_band_index`
-   over ``build_minhash_index`` output (:func:`near_new_documents`).
+   over the corpus signatures (:func:`near_new_documents`).
 
 At 100 TB the index side is the materialized hash column of the corpus
 (one 32-byte md5 per doc — ~3 TB/100B docs, parquet-scannable), refreshed
@@ -28,9 +28,8 @@ from __future__ import annotations
 import functools
 import operator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from fireball_data_processing_spark.functions.text import normalize_text
 from fireball_data_processing_spark.operators.dedup import (
@@ -101,7 +100,7 @@ def corpus_band_index(
     sigs: DataFrame, num_hashes: int = 8, band_size: int = 2
 ) -> DataFrame:
     """Distinct LSH ``(band_idx, band_key)`` pairs of a signature table
-    (e.g. ``build_minhash_index`` output) — the static side of the
+    (e.g. ``minhash_signature`` output) — the static side of the
     streaming near-dup gate. One row per occupied bucket, so it is far
     smaller than the corpus; materialize to parquet for a long-running
     stream and refresh it from the batch index job."""
@@ -240,36 +239,3 @@ def scrub_segments(
             "n_removed_segments",
         )
     )
-
-
-def stream_scrub_segments(
-    spark: SparkSession,
-    source_dir: str,
-    file_schema: StructType | str,
-    seg_index: DataFrame,
-    out_path: str,
-    checkpoint_dir: str,
-):
-    """Streaming segment scrub: every incoming document leaves with the
-    corpus's boilerplate (8-word) segments removed, written exactly-once.
-
-    The scrub re-groups a doc's exploded segments, which as a direct
-    streaming aggregation would demand watermark-delayed emission for
-    what is a PURE per-document function of a static index — so it runs
-    as the batch :func:`scrub_segments` inside ``foreachBatch`` (zero
-    cross-batch state, zero emission latency), composed with the
-    epoch-partitioned idempotent sink: a replayed micro-batch replaces
-    its own ``batch_id=`` partition, keeping the gate exactly-once.
-    """
-    from fireball_data_processing_spark.streaming.sinks_stream import (
-        drain_stream,
-        write_epoch_partition,
-    )
-
-    stream = spark.readStream.schema(file_schema).parquet(source_dir)
-
-    def _scrub_and_write(batch_df: DataFrame, epoch_id: int) -> None:
-        out = scrub_segments(batch_df, seg_index)
-        write_epoch_partition(out, epoch_id, out_path)
-
-    return drain_stream(stream, _scrub_and_write, checkpoint_dir)

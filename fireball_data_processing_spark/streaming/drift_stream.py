@@ -1,54 +1,25 @@
-"""Streaming distribution-drift monitor: live ingest mix vs a baseline.
+"""Distribution drift per time window: an ingest mix vs a baseline.
 
-Composes the windowed streaming layer with :mod:`..operators.drift`:
-per tumbling event-time window, count the categorical mix (event type,
-source, language) of the arriving stream, and score each closed window
+Scores each window's categorical mix (event type, source, language)
 against a STATIC baseline distribution with the same smoothed PSI/KL
 terms batch `distribution_drift` uses. An alert pipeline consumes rows
 where ``sum(psi_term)`` per window crosses the 0.1/0.25 thresholds.
 
-Why foreachBatch: PSI needs every bucket's share of a COMPLETED window
-(a second aggregation over the windowed counts), and Structured
-Streaming forbids chained stateful aggregations in append mode. The
-windowed count IS the streaming-stateful part; the per-window PSI math
-is a tiny batch computation on each micro-batch's emitted (closed)
-windows — so it runs inside ``foreachBatch``, where the emitted rows
-are a plain DataFrame. Batch parity is exact because the same
-`_psi_terms` expression serves both paths.
+PSI needs every bucket's share of a COMPLETED window (a second
+aggregation over the windowed counts), and Structured Streaming forbids
+chained stateful aggregations in append mode — so a stream would run
+:func:`score_windows_psi` inside ``foreachBatch`` on each micro-batch's
+closed windows, where the emitted rows are a plain DataFrame. The
+catalog query ``windowed_mix_drift`` runs it over hour buckets.
 """
 
 from __future__ import annotations
 
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
-from fireball_data_processing_spark.schema import StreamSchema
-from fireball_data_processing_spark.streaming.windowed import event_time_stream
-
-__all__ = ["windowed_mix_stream", "score_windows_psi", "drift_monitor_stream"]
-
-
-def windowed_mix_stream(
-    spark: SparkSession,
-    source_dir: str,
-    file_schema: StructType | str,
-    s: StreamSchema,
-    bucket_col: str,
-) -> DataFrame:
-    """(window_start, bucket, n) per tumbling 1-hour event-time window — the
-    streaming-stateful half of the monitor; append mode emits each
-    window once, when the 30-minute watermark closes it."""
-    stream = event_time_stream(spark, source_dir, file_schema, s)
-    return (
-        stream.withWatermark("event_ts", "30 minutes")
-        .groupBy(F.window("event_ts", "1 hour"), F.col(bucket_col).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("window.start").alias("window_start"), "bucket", "n")
-    )
+__all__ = ["score_windows_psi"]
 
 
 def score_windows_psi(
@@ -105,32 +76,3 @@ def score_windows_psi(
         F.round((q - p) * F.log(q / p), 6).alias("psi_term"),
         F.round(p * F.log(p / q), 6).alias("kl_term"),
     )
-
-
-def drift_monitor_stream(
-    spark: SparkSession,
-    source_dir: str,
-    file_schema: StructType | str,
-    s: StreamSchema,
-    bucket_col: str,
-    baseline: DataFrame,
-    out_path: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """End-to-end monitor: windowed mix stream -> per-closed-window PSI
-    vs ``baseline`` -> epoch-idempotent parquet (see
-    :mod:`.sinks_stream`). ``baseline`` must be a small static frame
-    (it is collected into every micro-batch's plan via broadcast)."""
-    from fireball_data_processing_spark.streaming.sinks_stream import (
-        drain_stream,
-        write_epoch_partition,
-    )
-
-    counts = windowed_mix_stream(spark, source_dir, file_schema, s, bucket_col)
-
-    def _score_and_write(batch_df: DataFrame, epoch_id: int) -> None:
-        write_epoch_partition(
-            score_windows_psi(batch_df, baseline), epoch_id, out_path
-        )
-
-    return drain_stream(counts, _score_and_write, checkpoint_dir)

@@ -1,4 +1,4 @@
-"""Streaming quality gate — the ingest-side twin of the batch quality
+"""Ingest quality gate — the per-document twin of the batch quality
 surface (``functions/textstats.py`` Gopher rules + bigram LM), completing
 the ingest-gate family next to exact/near-dup/segment-scrub
 (``dedup_stream.py``): "does this NEW document meet the corpus's quality
@@ -15,7 +15,8 @@ the same document admitted at 3 am and rejected at peak — so the gate
 deliberately takes a constant, and drift between the frozen LM and the
 live stream is what ``drift_stream.py`` watches.
 
-Plan, all stateless:
+Plan, all stateless, so a stream can run :func:`quality_gate` per
+micro-batch inside ``foreachBatch``:
 
 1. **Gopher rules** are pure per-row expressions — they run inside the
    micro-batch plan unchanged (zero shuffles, codegen-resident).
@@ -24,12 +25,8 @@ Plan, all stateless:
    able for most corpora; at 100 TB materialize to parquet and let the
    batch job refresh it) and rolls back up to doc grain. The rollup is
    a per-document aggregation of a static-index join — a pure function
-   of (row, index) — so it runs as a batch call inside ``foreachBatch``
-   (the ``stream_scrub_segments`` precedent) instead of a watermark-
-   delayed streaming aggregation.
-3. **Sink** is the epoch-partitioned idempotent parquet writer: a
-   replayed micro-batch replaces its own ``batch_id=`` partition —
-   exactly-once without a transaction log.
+   of (row, index) — so it needs no watermark-delayed streaming
+   aggregation.
 
 Extends the reference's filter surface (SURVEY §2.2's content filters
 are all batch predicates) with the streaming ingest shape its corpus
@@ -40,9 +37,8 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from fireball_data_processing_spark.functions.textstats import (
     bigram_occurrences,
@@ -55,7 +51,6 @@ __all__ = [
     "corpus_lm_index",
     "score_against_lm",
     "quality_gate",
-    "stream_quality_gate",
 ]
 
 
@@ -169,32 +164,3 @@ def quality_gate(
             "passes_quality", F.col("passes_gopher") & F.col("passes_lm")
         )
     )
-
-
-def stream_quality_gate(
-    spark: SparkSession,
-    source_dir: str,
-    file_schema: StructType | str,
-    lm: LmIndex,
-    out_path: str,
-    checkpoint_dir: str,
-    max_avg_neg_log2: float,
-):
-    """Streaming ingest quality gate: every incoming document is scored
-    against the frozen LM + default Gopher rules and the admitted docs
-    are written exactly-once with their verdict columns (the
-    quarantine-free deployment). Pure function of (row, static index) →
-    stateless ``foreachBatch`` + epoch-partitioned idempotent sink,
-    identical restart semantics to the dedup gates (test-pinned)."""
-    from fireball_data_processing_spark.streaming.sinks_stream import (
-        drain_stream,
-        write_epoch_partition,
-    )
-
-    stream = spark.readStream.schema(file_schema).parquet(source_dir)
-
-    def _gate_and_write(batch_df: DataFrame, epoch_id: int) -> None:
-        out = quality_gate(batch_df, lm, max_avg_neg_log2)
-        write_epoch_partition(out.filter(F.col("passes_quality")), epoch_id, out_path)
-
-    return drain_stream(stream, _gate_and_write, checkpoint_dir)

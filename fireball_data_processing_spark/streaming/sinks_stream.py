@@ -1,24 +1,17 @@
-"""Streaming sinks: exactly-once parquet output and multi-way routing.
+"""Streaming sinks: exactly-once parquet output.
 
 Structured Streaming's file sink is append-only and relies on its own
-transaction log; production pipelines routinely need (a) exactly-once
+transaction log; production pipelines routinely need exactly-once
 parquet output that survives micro-batch REPLAY (a failed batch is
-re-run with the same epoch id after restart), and (b) one input pass
-fanned out to several destinations (keep/reject routing by a quality
-predicate). Both are `foreachBatch` patterns:
-
-- **Idempotent sink**: every micro-batch is written to a
-  ``batch_id=<epoch>`` partition (a plain overwrite of exactly that
-  epoch's directory — the partition value is inferred from the
-  directory name on read) — a replayed epoch REPLACES its own
-  partition instead of appending a duplicate, which upgrades the file
-  sink's at-least-once replay to exactly-once output without any
-  table-format dependency. Readers just scan the directory; the epoch
-  partition column also gives free per-batch lineage/debugging.
-- **Routing sink**: the micro-batch frame is persisted once, each
-  route filters and writes from the cached frame (one source pass per
-  batch, not one per destination), and every route is epoch-partition
-  idempotent the same way.
+re-run with the same epoch id after restart). That is a `foreachBatch`
+pattern: every micro-batch is written to a ``batch_id=<epoch>``
+partition (a plain overwrite of exactly that epoch's directory — the
+partition value is inferred from the directory name on read) — a
+replayed epoch REPLACES its own partition instead of appending a
+duplicate, which upgrades the file sink's at-least-once replay to
+exactly-once output without any table-format dependency. Readers just
+scan the directory; the epoch partition column also gives free
+per-batch lineage/debugging.
 
 Checkpointing: pass ``checkpoint_dir`` — offsets commit only after
 ``foreachBatch`` returns, so a crash mid-write replays the epoch and
@@ -28,16 +21,14 @@ the overwrite makes the replay harmless.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Mapping
+from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 __all__ = [
     "drain_stream",
     "write_epoch_partition",
-    "idempotent_parquet_sink",
-    "routed_parquet_sink",
 ]
 
 
@@ -75,7 +66,7 @@ def write_epoch_partition(batch_df: DataFrame, epoch_id: int, path: str) -> None
     swap — not a plain ``mode("overwrite")`` of the target dir — is
     load-bearing: overwrite deletes the target BEFORE the job runs, so a
     replayed batch whose frame derives from the sink's own output (the
-    replay-idempotency contract pinned by tests/test_cusum_stream.py)
+    replay-idempotency contract pinned by tests/test_stream_sinks.py)
     would read files out from under itself. Writing to staging keeps the
     old files readable for the whole job, like the dynamic form's
     commit-time swap. Strictly stronger idempotency than dynamic
@@ -91,50 +82,3 @@ def write_epoch_partition(batch_df: DataFrame, epoch_id: int, path: str) -> None
     fs = jtarget.getFileSystem(hconf)
     fs.delete(jtarget, True)
     fs.rename(jvm.org.apache.hadoop.fs.Path(staging), jtarget)
-
-
-def idempotent_parquet_sink(
-    stream: DataFrame,
-    path: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Exactly-once parquet sink via epoch-partitioned overwrite."""
-    return drain_stream(
-        stream,
-        lambda df, epoch: write_epoch_partition(df, epoch, path),
-        checkpoint_dir,
-    )
-
-
-def routed_parquet_sink(
-    stream: DataFrame,
-    routes: Mapping[str, Column],
-    paths: Mapping[str, str],
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Fan one stream out to several parquet destinations in a single
-    input pass per micro-batch.
-
-    ``routes`` maps route name -> boolean Column (evaluated against the
-    micro-batch); ``paths`` maps the same names -> output directories.
-    The batch frame is persisted once and each route filters from the
-    cache, so the upstream plan (source read + transforms) executes once
-    per batch regardless of route count. Rows matching several routes go
-    to each (filtering is independent); each destination is
-    epoch-partition idempotent.
-    """
-    missing = set(routes) - set(paths)
-    if missing:
-        raise ValueError(f"routes without a path: {sorted(missing)}")
-
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.persist()
-        try:
-            for name, cond in routes.items():
-                write_epoch_partition(
-                    batch_df.filter(cond), epoch_id, paths[name]
-                )
-        finally:
-            batch_df.unpersist()
-
-    return drain_stream(stream, _write, checkpoint_dir)

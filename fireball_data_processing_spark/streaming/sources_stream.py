@@ -12,10 +12,10 @@ gates) runs unchanged whether events arrive from parquet files or a
 connector that yields event rows.
 
 File sources (parquet/json/csv) are ``fmt`` + ``path`` + declared
-``schema``. This is also the test harness shape — the test corpora are
-file-backed. A message bus whose records arrive as an opaque
-payload column (Kafka ``value``, Kinesis ``data``) is decoded with one
-``from_json`` projection after this call.
+``schema``: the ingest capstone (``capstone.run_ingest_pipeline``) opens
+its staged parquet slices this way. A message bus whose records arrive
+as an opaque payload column (Kafka ``value``, Kinesis ``data``) is
+decoded with one ``from_json`` projection after this call.
 
 At 100 TB/day the seam stays scale-correct because it adds only
 projections: source parallelism (shard/partition count), watermarks,

@@ -162,30 +162,21 @@ def render(rows: list[dict]) -> str:
         "",
         "Reading the outliers: a query consuming a runtime-persisted shared",
         "frame plans each consumer's subtree separately, so its static scan",
-        "count overstates execution (the cache serves every consumer after",
-        "the first — e.g. `near_dup_pairs`, and the current max-shuffle",
-        "row `incremental_refresh_counts`, whose 9 static shuffles include",
-        "the cached diff subtree printed once per consumer; the pin",
-        "`test_incremental_refresh_diff_cached_once` proves the outer join",
-        "executes once); multi-stage pipelines (ingest",
-        "gates, the corpus capstone, sketch rollups) legitimately shuffle",
-        "once per stage; star joins scan once per dimension table but",
-        "broadcast them (`revenue_by_nation`: 6 scans, 1 shuffle).",
+        "and shuffle counts overstate execution (the cache serves every",
+        "consumer after the first); multi-stage pipelines (ingest gates, the",
+        "corpus capstone, sketch rollups) legitimately shuffle once per",
+        "stage; star joins scan once per dimension table but broadcast them.",
         "The two streaming-capstone rows read all-zero BY CONSTRUCTION:",
         "their queries run a real Structured Streaming job and return the",
         "final table localCheckpoint-materialized (so earlier returned",
         "frames survive workspace reuse), which leaves only a checkpoint",
         "scan in the audited plan — the plans that matter there are the",
         "PER-EPOCH micro-batch plan (broadcast anti-join or band-index",
-        "lookups + codegen gates + a (source, lang)-grain shuffle; since",
-        "r13 a single-split micro-batch aggregates exchange-FREE via the",
-        "coalesce(1) fast path) and the",
-        "final merge (one scan + one exchange), documented in",
-        "streaming/capstone.py and pinned by tests/test_capstone_stream.py.",
-        "Audit-drift note (ADVICE r12): `shapley_channel_attribution`'s",
-        "r12 scan count moved 11 -> 12 with its code untouched — same",
-        "mechanism, a runtime-persisted consumer re-planned under the",
-        "regenerated catalog; its executed job/scan counts are unchanged.",
+        "lookups + codegen gates + a (source, lang)-grain shuffle; a",
+        "single-split micro-batch aggregates exchange-FREE via the",
+        "coalesce(1) fast path) and the final merge (one scan + one",
+        "exchange), documented in streaming/capstone.py and pinned by",
+        "tests/test_capstone_stream.py.",
         "",
     ]
     return "\n".join(out)

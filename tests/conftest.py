@@ -8,6 +8,8 @@ import sys
 
 import duckdb
 import pytest
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -41,3 +43,15 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def dequantize_embedding(codes: Column, vmin: Column, vmax: Column) -> Column:
+    """Inverse of :func:`quantize_embedding`: ``x_hat_i = vmin + code_i*scale``."""
+    scale = (vmax - vmin) / F.lit(255.0)
+    return F.transform(codes, lambda q: vmin + q.cast("double") * scale)
+
+
+@pytest.fixture(scope="session")
+def dequantize():
+    """The quantization round-trip reference, for tests to request."""
+    return dequantize_embedding

@@ -1104,7 +1104,6 @@ def test_kcenter_hand_computed_1d(spark):
     """Gonzalez on a 1-D line: picks are the farthest-point sequence."""
     from fireball_data_processing_spark.operators.clustering import (
         kcenter_fit,
-        kcenter_radius,
     )
 
     pts = [(1, [0.0]), (2, [1.0]), (3, [10.0]), (4, [11.0]), (5, [20.0])]
@@ -1115,9 +1114,6 @@ def test_kcenter_hand_computed_1d(spark):
         (1, 5, 400.0),  # farthest from 0 is 20 (d2=400)
         (2, 3, 100.0),  # then 10 (min(100, 100) = 100, ties to low id)
     ]
-    # remaining points 1 and 11 are both 1 away from a center
-    r = kcenter_radius(df, centers).first()["radius"]
-    assert r == 1.0
 
 
 def test_kcenter_gains_monotone_nonincreasing(spark, sf_dir):

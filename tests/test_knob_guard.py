@@ -1,14 +1,23 @@
-"""Guard against knob creep: every defaulted parameter of a package
-function must be set by some non-test call in the repo, or it is a
-constant dressed up as an option.
+"""Guards against code no workload runs, both pure AST (no Spark).
 
-The scan is pure AST (no Spark). Calls are read from the package,
-``scripts/``, ``bench.py``, ``fbbench/`` and ``__spark_entry__.py`` and
-matched to definitions by name; ``tests/`` does not count, since a
-parameter only a test sets selects code no workload runs. A class call
-counts as a call to its ``__init__``; a call with ``*args`` or
-``**kwargs`` sets every parameter; ``functools.partial(f, ...)`` counts
-as a call to ``f``.
+Knob creep: every defaulted parameter of a package function must be set
+by some non-test call in the repo, or it is a constant dressed up as an
+option. Calls are read from the package, ``scripts/``, ``bench.py``,
+``fbbench/`` and ``__spark_entry__.py`` and matched to definitions by
+name; ``tests/`` does not count, since a parameter only a test sets
+selects code no workload runs. A class call counts as a call to its
+``__init__``; a call with ``*args`` or ``**kwargs`` sets every parameter;
+``functools.partial(f, ...)`` counts as a call to ``f``.
+
+Reach: every top-level package function or class must be reached from
+the same caller roots, ``tests/`` again not counted. Roots are every use
+in the non-package callers, the package's module-level code, and the
+functions the ``@query``/``@register_heuristic`` registries hold. A use
+is a name, an attribute, or a string literal equal to the name (a
+``tracer.instrument(module, "name", ...)`` target); imports and
+``__all__`` lists are not uses, so an ``__init__.py`` re-export reaches
+nothing. Reach is transitive: what only an unreached function uses is
+unreached too.
 """
 
 from __future__ import annotations
@@ -27,27 +36,23 @@ def caller_roots(root: Path) -> list[Path]:
 
 
 # Kept as options on purpose although no call sets them, each documented
-# in README "API notes": deployment settings (paths, connector options,
-# Spark master) and two escape hatches.
+# in README "API notes": deployment settings (paths, Spark master) and an
+# escape hatch.
 DOCUMENTED_UNSET = {
     ("session.py", "get_spark", "master"): "Spark master of the deployment",
-    ("operators/similarity.py", "lsh_topk", "dim"):
-        "skips the one-row dimension peek",
-    ("plans/inference.py", "classify_batches", "out_cols"):
-        "names the model's output columns",
     ("operators/similarity.py", "build_ivf_index", "path"):
         "where a path-backed index is written",
     ("operators/setjoin.py", "set_similarity_join", "checkpoint_dir"):
         "reliable-checkpoint directory for the iterative join",
-    ("streaming/expectations_stream.py", "run_expectation_gate", "admit_path"):
-        "where admitted drops are written",
-    ("streaming/expectations_stream.py", "run_expectation_gate",
-     "quarantine_path"): "where quarantined drops are written",
-    ("streaming/sources_stream.py", "open_event_stream", "path"):
-        "file-source location",
-    ("streaming/sources_stream.py", "open_event_stream", "options"):
-        "connector options (stream name, region, ...)",
 }
+
+# Top-level package functions and classes kept although no caller root
+# reaches them, each with its reason. At most 5.
+UNREACHED_ALLOWED: dict[tuple[str, str], str] = {}
+
+# Decorators that register the function they wrap: a registered query or
+# heuristic is reached through its registry.
+REGISTRIES = ("query", "register_heuristic")
 
 
 def _py_files(paths):
@@ -132,6 +137,110 @@ def unset_defaulted_params(package: Path, callers: list[Path]):
                 continue
             unset.add((rel, qual, param))
     return unset
+
+
+def _is_all(stmt):
+    return isinstance(stmt, ast.Assign) and any(
+        isinstance(t, ast.Name) and t.id == "__all__" for t in stmt.targets
+    )
+
+
+def _uses(nodes):
+    """Names, attributes and string literals under ``nodes``; imports and
+    ``__all__`` assignments are skipped."""
+    out = set()
+    stack = list(nodes)
+    while stack:
+        node = stack.pop()
+        if isinstance(node, (ast.Import, ast.ImportFrom)) or _is_all(node):
+            continue
+        if isinstance(node, ast.Name):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            out.add(node.value)
+        stack.extend(ast.iter_child_nodes(node))
+    return out
+
+
+def _registered(node):
+    for d in node.decorator_list:
+        f = d.func if isinstance(d, ast.Call) else d
+        if _callee(f) in REGISTRIES:
+            return True
+    return False
+
+
+def unreached_definitions(package: Path, callers: list[Path]):
+    """(file relative to ``package``, name) for every top-level function
+    or class of ``package`` that no caller root reaches."""
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    roots: set[str] = set()
+    for f in _py_files([package]):
+        tree = ast.parse(f.read_text())
+        rel = f.relative_to(package).as_posix()
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault(stmt.name, []).append((rel, stmt))
+                roots |= _uses(stmt.decorator_list)
+                if _registered(stmt):
+                    roots.add(stmt.name)
+            else:
+                roots |= _uses([stmt])
+    for f in _py_files([c for c in callers if c != package]):
+        roots |= _uses([ast.parse(f.read_text())])
+    reached: set[str] = set()
+    todo = [n for n in roots if n in defs]
+    while todo:
+        name = todo.pop()
+        if name in reached:
+            continue
+        reached.add(name)
+        for _, node in defs[name]:
+            todo.extend(n for n in _uses([node]) if n in defs and n not in reached)
+    return {
+        (rel, name)
+        for name, sites in defs.items()
+        if name not in reached
+        for rel, _ in sites
+    }
+
+
+def test_reach_scan_reports_what_only_tests_or_dead_code_reach(tmp_path):
+    pkg = tmp_path / PACKAGE_NAME
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text(
+        "from pkg.mod import tested_only\n\n__all__ = ['tested_only']\n"
+    )
+    (pkg / "mod.py").write_text(
+        "def tested_only():\n    return 1\n\n"
+        "def dead():\n    return behind_dead()\n\n"
+        "def behind_dead():\n    return 2\n\n"
+        "@query('q', None)\ndef registered(spark):\n    return 3\n\n"
+        "def instrumented():\n    return 4\n"
+    )
+    (tmp_path / "fbbench").mkdir()
+    (tmp_path / "fbbench" / "run.py").write_text(
+        "from pkg import mod\n\n"
+        "tracer.instrument(mod, 'instrumented', 'span', 'layer')\n"
+    )
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "test_mod.py").write_text(
+        "from pkg.mod import tested_only\n\n"
+        "def test_it():\n    assert tested_only() == 1\n"
+    )
+    assert unreached_definitions(pkg, caller_roots(tmp_path)) == {
+        ("mod.py", "tested_only"),
+        ("mod.py", "dead"),
+        ("mod.py", "behind_dead"),
+    }
+
+
+def test_every_package_definition_is_reached():
+    assert len(UNREACHED_ALLOWED) <= 5
+    unreached = unreached_definitions(ROOT / PACKAGE_NAME, caller_roots(ROOT))
+    assert unreached == set(UNREACHED_ALLOWED)
 
 
 def test_scan_reports_a_parameter_only_a_test_sets(tmp_path):

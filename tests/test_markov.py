@@ -1,16 +1,10 @@
-"""Markov-chain operators (operators/markov.py): hand-computed
-transition matrix, dangling-state restriction, power-iteration
-convergence to a known stationary distribution, partitioning
-invariance."""
+"""Markov-chain operators (operators/markov.py): a hand-computed
+profile, dangling-state restriction, power-iteration convergence to a
+known stationary distribution, partitioning invariance."""
 
 from __future__ import annotations
 
-from fireball_data_processing_spark.operators import markov as markov_mod
-from fireball_data_processing_spark.operators.markov import (
-    markov_profile,
-    stationary_distribution,
-    transition_matrix,
-)
+from fireball_data_processing_spark.operators.markov import markov_profile
 
 
 def _seq_df(spark, seqs):
@@ -21,57 +15,53 @@ def _seq_df(spark, seqs):
     return spark.createDataFrame(rows, "k bigint, i bigint, s string")
 
 
+def _profile(df, n_iter=12):
+    return {
+        r["state"]: (r["n_out"], r["self_prob"], r["stationary_prob"])
+        for r in markov_profile(df, "k", "i", "s", n_iter).collect()
+    }
+
+
 def test_transition_matrix_hand_computed(spark):
     # one sequence a a b a: transitions a->a, a->b, b->a
     df = _seq_df(spark, {1: ["a", "a", "b", "a"]})
-    m = {
-        (r["src"], r["dst"]): (r["n"], r["p"])
-        for r in transition_matrix(df, "k", "i", "s").collect()
-    }
-    assert m[("a", "a")] == (1, 0.5)
-    assert m[("a", "b")] == (1, 0.5)
-    assert m[("b", "a")] == (1, 1.0)
+    got = _profile(df)
+    assert {s: v[:2] for s, v in got.items()} == {"a": (2, 0.5), "b": (1, 0.0)}
 
 
 def test_transitions_never_cross_sequences(spark):
-    # two sequences: [a, b] and [b, c] -> no b->b, no a->c
-    df = _seq_df(spark, {1: ["a", "b"], 2: ["b", "c"]})
-    got = {
-        (r["src"], r["dst"])
-        for r in transition_matrix(df, "k", "i", "s").collect()
-    }
-    # c is dangling (never a src) so b->c is dropped by the restriction
-    assert got == {("a", "b")}
+    # within sequences: a->b, b->a, b->b; a transition across the 1|2
+    # boundary would add a pair and move the counts
+    df = _seq_df(spark, {1: ["a", "b", "a"], 2: ["b", "b"]})
+    got = _profile(df)
+    assert {s: v[:2] for s, v in got.items()} == {"a": (1, 0.0), "b": (2, 0.5)}
 
 
 def test_dangling_state_restriction_renormalizes(spark):
-    # a -> b and a -> x where x never transitions out: x rows dropped,
-    # a's remaining mass renormalized over kept destinations
+    # x never transitions out, so a->x is dropped and a renormalizes over
+    # a->b alone
     df = _seq_df(spark, {1: ["a", "b", "a", "x"], 2: ["b", "a"]})
-    m = {
-        (r["src"], r["dst"]): r["p"]
-        for r in transition_matrix(df, "k", "i", "s").collect()
-    }
-    assert ("a", "x") not in m
-    # a had transitions a->b, a->x; kept: a->b only -> p = 1.0? No:
-    # renormalization is over kept dst rows: a->b n=1 of kept total 1
-    assert m[("a", "b")] == 1.0
-    assert m[("b", "a")] == 1.0
+    got = _profile(df)
+    assert {s: v[:2] for s, v in got.items()} == {"a": (1, 0.0), "b": (2, 0.0)}
 
 
-def test_stationary_two_state_chain(spark, monkeypatch):
-    # P = [[0.5, 0.5], [1.0, 0.0]] (from counts) -> stationary
-    # pi = (2/3, 1/3); the error halves per step, so 24 steps pass 6 dp
-    monkeypatch.setattr(markov_mod, "_POWER_STEPS", 24)
+def test_stationary_two_state_chain(spark):
+    # counts a->a 2, a->b 2, b->a 2 -> P[a] = (.5, .5), P[b] = (1, 0);
+    # stationary pi = (2/3, 1/3); the error halves per step, so 24 steps
+    # pass 6 dp
     df = _seq_df(spark, {1: ["a", "a", "b", "a", "b", "a", "a"]})
-    # counts: a->a 2, a->b 2, b->a 2 -> P[a] = (.5, .5), P[b] = (1, 0)
-    mat = transition_matrix(df, "k", "i", "s")
-    pi = {
-        r["state"]: r["pi"]
-        for r in stationary_distribution(mat).collect()
-    }
-    assert abs(pi["a"] - 2.0 / 3.0) < 1e-6
-    assert abs(pi["b"] - 1.0 / 3.0) < 1e-6
+    got = _profile(df, n_iter=24)
+    assert abs(got["a"][2] - 2.0 / 3.0) < 1e-6
+    assert abs(got["b"][2] - 1.0 / 3.0) < 1e-6
+
+
+def test_stationary_preserves_state_dtype(spark):
+    # bigint states must come back as bigint, not string
+    rows = [(1, i, 10 if i % 2 == 0 else 20) for i in range(20)]
+    df = spark.createDataFrame(rows, "k bigint, i bigint, s bigint")
+    prof = markov_profile(df, "k", "i", "s")
+    assert dict(prof.dtypes)["state"] == "bigint"
+    assert {r["state"] for r in prof.collect()} == {10, 20}
 
 
 def test_markov_profile_shape_and_partitioning_invariance(spark):
@@ -88,20 +78,6 @@ def test_markov_profile_shape_and_partitioning_invariance(spark):
     assert states == sorted(states)
     # stationary distribution sums to ~1
     assert abs(sum(r[3] for r in a) - 1.0) < 1e-4
-
-
-def test_raw_probs_keep_all_successors(spark):
-    from fireball_data_processing_spark.operators.markov import (
-        raw_transition_probs,
-    )
-
-    # dangling dst 'c' is kept (unlike transition_matrix)
-    df = _seq_df(spark, {1: ["a", "b"], 2: ["b", "c"]})
-    got = {
-        (r["src"], r["dst"]): r["p"]
-        for r in raw_transition_probs(df, "k", "i", "s").collect()
-    }
-    assert got == {("a", "b"): 1.0, ("b", "c"): 1.0}
 
 
 def test_removal_attribution_gateway_channel_gets_full_credit(spark):
@@ -154,38 +130,6 @@ def test_removal_attribution_direct_conversions_survive_removals(spark):
         assert r["conv_removed"] >= 1 / 3 - 1e-6
 
 
-def test_entropy_rate_of_deterministic_and_uniform_chains(spark):
-    from fireball_data_processing_spark.operators.markov import (
-        stationary_distribution,
-        transition_matrix,
-    )
-    from pyspark.sql import functions as F
-
-    # deterministic cycle a->b->a: per-state entropy 0
-    det = _seq_df(spark, {1: ["a", "b"] * 10})
-    mat = transition_matrix(det, "k", "i", "s").localCheckpoint()
-    hs = mat.groupBy("src").agg(
-        F.sum(-F.col("p") * F.log2(F.col("p"))).alias("h")
-    )
-    assert all(r["h"] == 0.0 for r in hs.collect())
-
-    # uniform 2-state chain: entropy rate = 1 bit
-    uni = _seq_df(
-        spark, {1: ["a", "a", "b", "b", "a", "b", "b", "a", "a", "b"] * 4}
-    )
-    m2 = transition_matrix(uni, "k", "i", "s").localCheckpoint()
-    pi = stationary_distribution(m2)
-    h2 = m2.groupBy(F.col("src").alias("state")).agg(
-        F.sum(-F.col("p") * F.log2(F.col("p"))).alias("h")
-    )
-    rate = (
-        pi.join(h2, "state")
-        .agg(F.sum(F.col("pi") * F.col("h")).alias("r"))
-        .first()["r"]
-    )
-    assert 0.9 < rate <= 1.0 + 1e-9
-
-
 def test_removal_attribution_empty_transient_returns_empty(spark):
     # ADVICE r8: a chain with no transient states raised IndexError.
     # Only self-transitions at the conversion state -> nothing to remove.
@@ -234,19 +178,6 @@ def test_spark_round_fuzz_matches_engine_round(spark):
     ]
     want = [_spark_round(x, 8) for x in xs]
     assert got == want
-
-
-def test_stationary_preserves_state_dtype(spark):
-    # review repro: bigint states must come back as bigint, not string
-    rows = []
-    for i in range(20):
-        rows.append((1, i, 10 if i % 2 == 0 else 20))
-    df = spark.createDataFrame(rows, "k bigint, i bigint, s bigint")
-    mat = transition_matrix(df, "k", "i", "s")
-    pi = stationary_distribution(mat)
-    assert dict(pi.dtypes)["state"] == "bigint"
-    got = {r["state"]: r["pi"] for r in pi.collect()}
-    assert set(got) == {10, 20}
 
 
 def test_removal_attribution_null_states_tolerated(spark):

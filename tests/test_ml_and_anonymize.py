@@ -1,4 +1,4 @@
-"""U7 MLlib training smoke, F8/F10 anonymization goldens, A21 Dawid-Skene
+"""F8/F10 anonymization goldens, agreement statistics, A21 Dawid-Skene
 EM."""
 
 from __future__ import annotations
@@ -12,7 +12,6 @@ from fireball_data_processing_spark.functions.ids import (
     anonymize_value,
     hashed_id,
 )
-from fireball_data_processing_spark.plans import ml
 
 
 def test_hashed_id_exact_reference_parity():
@@ -25,20 +24,6 @@ def test_hashed_id_exact_reference_parity():
     assert hashed_id("abc") == "152195979970564155"
     # int input renders like its str form, as in the reference
     assert hashed_id(261302296103747584) == "239007750597631721"
-
-
-def test_hashed_id_col_matches_python(spark):
-    from pyspark.sql import functions as F
-
-    from fireball_data_processing_spark.functions.ids import hashed_id_col
-
-    df = spark.createDataFrame(
-        [("261302296103747584",), ("1",), (None,)], "raw string"
-    )
-    got = {r["raw"]: r["h"] for r in df.select("raw", hashed_id_col(F.col("raw")).alias("h")).collect()}
-    assert got["261302296103747584"] == "239007750597631721"
-    assert got["1"] == "206718104415996593"
-    assert got[None] is None
 
 
 def test_hashed_id_shape_and_stability():
@@ -71,192 +56,6 @@ def test_anonymize_json_str_fallback():
     assert "261302296103747584" not in s
     rt = json.loads(anonymize_json_str('{"a": "261302296103747584"}'))
     assert rt["a"] == hashed_id("261302296103747584")
-
-
-def test_logreg_cv_trains_and_scores(spark, sf_dir, monkeypatch):
-    from fireball_data_processing_spark.plans.heuristics import (
-        SIMPLE,
-        heuristics_matrix,
-    )
-    from fireball_data_processing_spark.plans.ml import (
-        predict_positive_ids,
-        train_logreg_cv,
-    )
-    from fireball_data_processing_spark.schema import SYNTHETIC_STREAM
-    from fireball_data_processing_spark.sources.tables import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    feats = heuristics_matrix(ev, SYNTHETIC_STREAM, SIMPLE)
-    # deterministic synthetic target correlated with a feature
-    labeled = feats.withColumn(
-        "y",
-        (F.col("average_message_length")
-         > F.expr("percentile_approx(average_message_length, 0.5) OVER ()")).cast(
-            "double"
-        ),
-    )
-    cols = ["event_count", "message_count", "command_count",
-            "average_message_length", "avg_words_between_commands"]
-    labeled = labeled.na.fill(0.0, cols).cache()
-    # a one-point grid and two folds keep the CV fit short
-    monkeypatch.setattr(ml, "_REG_GRID", (0.1,))
-    monkeypatch.setattr(ml, "_N_FOLDS", 2)
-    model = train_logreg_cv(labeled, cols, "y")
-    preds = model.transform(
-        __import__(
-            "fireball_data_processing_spark.plans.ml", fromlist=["feature_label_frame"]
-        ).feature_label_frame(labeled, cols, "y")
-    )
-    assert preds.count() == labeled.count()
-    assert set(r["prediction"] for r in preds.collect()) <= {0.0, 1.0}
-    pos = predict_positive_ids(model, labeled, cols, "y", "user_id")
-    assert pos.count() <= labeled.count()
-
-
-def test_classify_batches_pluggable_model(spark, sf_dir):
-    # U3/U4/U5 envelope: a deterministic rule-model plugged into the
-    # mapInPandas inference stage must agree with the JVM expression form
-    # of the same rule, and downstream thresholding stays declarative
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    from fireball_data_processing_spark.functions.predicates import is_ooc
-    from fireball_data_processing_spark.plans.inference import classify_batches
-    from fireball_data_processing_spark.sources.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents").limit(200)
-
-    def rule_model(pdf: pd.DataFrame) -> pd.DataFrame:
-        # stands in for the GPT/HF/finetuned call: same signature, batch in
-        # -> (label, prob) out
-        ooc = pdf["text"].str.match(r"^\s*[\(\[]").fillna(False) | pdf[
-            "text"
-        ].str.contains(r"\b(ooc|brb|afk)\b", case=False, regex=True).fillna(False)
-        return pd.DataFrame(
-            {
-                "label": ooc.map({True: "out-of-character", False: "in-character"}),
-                "prob": ooc.map({True: 0.95, False: 0.9}),
-            }
-        )
-
-    scored = classify_batches(d, ["text"], rule_model)
-    kept = scored.filter((F.col("label") == "in-character") & (F.col("prob") > 0.85))
-    got = {r["doc_id"] for r in kept.collect()}
-
-    want = {
-        r["doc_id"]
-        for r in d.filter(~is_ooc(F.col("text"))).collect()
-    }
-    assert got == want
-    assert len(got) > 0
-    # schema passthrough: original columns + (label, prob)
-    assert scored.columns == d.columns + ["label", "prob"]
-
-
-def test_mllib_model_fn_through_classify_batches(spark, monkeypatch):
-    # U4/U5 closed: a *trained* MLlib scaler+logreg pipeline wired through
-    # the mapInPandas envelope must reproduce model.transform exactly —
-    # probabilities to float tolerance, threshold-filtered ids identically
-    import pandas as pd
-
-    from fireball_data_processing_spark.plans.heuristics import (
-        SIMPLE,
-        heuristics_matrix,
-    )
-    from fireball_data_processing_spark.plans.inference import (
-        classify_batches,
-        mllib_model_fn,
-    )
-    from fireball_data_processing_spark.plans.ml import (
-        feature_label_frame,
-        train_logreg_cv,
-    )
-    from fireball_data_processing_spark.schema import SYNTHETIC_STREAM
-    from fireball_data_processing_spark.sources.tables import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    feats = heuristics_matrix(ev, SYNTHETIC_STREAM, SIMPLE)
-    labeled = feats.withColumn(
-        "y",
-        (F.col("average_message_length")
-         > F.expr("percentile_approx(average_message_length, 0.5) OVER ()")).cast(
-            "double"
-        ),
-    )
-    cols = ["event_count", "message_count", "command_count",
-            "average_message_length", "avg_words_between_commands"]
-    labeled = labeled.na.fill(0.0, cols).cache()
-    # a one-point grid and two folds keep the CV fit short
-    monkeypatch.setattr(ml, "_REG_GRID", (0.1,))
-    monkeypatch.setattr(ml, "_N_FOLDS", 2)
-    model = train_logreg_cv(labeled, cols, "y")
-
-    # direct MLlib scoring (the reference's "run the finetuned predictor")
-    direct = model.transform(feature_label_frame(labeled, cols, "y"))
-    want = {
-        r["user_id"]: (float(r["prediction"]), float(r["probability"][1]))
-        for r in direct.collect()
-    }
-
-    # envelope scoring: same trained model, Arrow-batched numpy path
-    scored = classify_batches(
-        labeled, cols, mllib_model_fn(model)
-    )
-    got = {
-        r["user_id"]: (r["label"], float(r["prob"])) for r in scored.collect()
-    }
-
-    assert set(got) == set(want)
-    for uid, (label, prob) in got.items():
-        pred, p1 = want[uid]
-        assert abs(prob - p1) < 1e-9, (uid, prob, p1)
-        assert float(label) == pred, (uid, label, pred)
-    # downstream threshold filtering stays declarative and agrees
-    kept = {r["user_id"] for r in scored.filter(F.col("label") == "1").collect()}
-    assert kept == {u for u, (p, _) in want.items() if p == 1.0}
-    assert 0 < len(kept) < len(want)
-
-
-def test_with_retries_flaky_model(monkeypatch):
-    import pandas as pd
-    import pytest
-
-    from fireball_data_processing_spark.plans import inference
-    from fireball_data_processing_spark.plans.inference import with_retries
-
-    calls = {"n": 0}
-    sleeps: list[float] = []
-
-    def flaky(pdf):
-        calls["n"] += 1
-        if calls["n"] < 3:
-            raise ConnectionError("rate limited")
-        return pd.DataFrame({"label": ["ok"] * len(pdf), "prob": [1.0] * len(pdf)})
-
-    monkeypatch.setattr(inference.time, "sleep", sleeps.append)
-    pdf = pd.DataFrame({"text": ["a", "b"]})
-    wrapped = with_retries(flaky)
-    out = wrapped(pdf)
-    assert calls["n"] == 3 and list(out["label"]) == ["ok", "ok"]
-    assert sleeps == [0.05, 0.1]  # exponential backoff between tries
-
-    # gives up after 3 tries and re-raises the model's error
-    calls["n"] = -10  # would need 13 calls to succeed
-    with pytest.raises(ConnectionError):
-        with_retries(flaky)(pdf)
-    assert calls["n"] == -7
-
-
-def test_classify_batches_rejects_colliding_out_cols(spark):
-    import pandas as pd
-    import pytest
-
-    from fireball_data_processing_spark.plans.inference import classify_batches
-
-    df = spark.createDataFrame([("x", 0.5)], "text string, prob double")
-    with pytest.raises(ValueError, match="prob"):
-        classify_batches(df, ["text"], lambda pdf: pd.DataFrame())
 
 
 def test_krippendorff_alpha_matches_literal_python(spark):

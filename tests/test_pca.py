@@ -66,50 +66,6 @@ def test_pca_partitioning_invariance(spark):
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
-def test_pca_k_components_orthogonal_and_ordered(spark):
-    from fireball_data_processing_spark.operators.pca import (
-        power_iteration_pca_k,
-    )
-
-    # big variance on dim 1, smaller on dim 2, none elsewhere
-    rows = [
-        [3.0 * i, 1.0 * ((i * 7) % 11 - 5), 0.0, 0.0] for i in range(-10, 11)
-    ]
-    out = power_iteration_pca_k(_vecs(spark, rows), "embedding", dim=4).collect()
-    c1 = [r for r in out if r["component"] == 1]
-    c2 = [r for r in out if r["component"] == 2]
-    assert len(c1) == len(c2) == 4
-    l1 = [r["loading"] for r in c1]
-    l2 = [r["loading"] for r in c2]
-    # components recover the two axes (up to sign)
-    assert abs(abs(l1[0]) - 1.0) < 1e-3
-    assert abs(abs(l2[1]) - 1.0) < 1e-3
-    # orthogonal, unit, eigenvalues decreasing, shares sum <= 1
-    dot = sum(a * b for a, b in zip(l1, l2))
-    assert abs(dot) < 1e-3
-    assert c1[0]["eigenvalue"] > c2[0]["eigenvalue"]
-    assert c1[0]["var_share"] + c2[0]["var_share"] <= 1.0 + 1e-9
-
-
-def test_pca_k_first_component_matches_single(spark):
-    from fireball_data_processing_spark.operators.pca import (
-        power_iteration_pca,
-        power_iteration_pca_k,
-    )
-
-    rows = [
-        [math.sin(i * 0.9), (i % 5) / 5.0, math.cos(i * 0.4), 1.0]
-        for i in range(60)
-    ]
-    single = power_iteration_pca(_vecs(spark, rows), "embedding", dim=4).collect()
-    multi = power_iteration_pca_k(_vecs(spark, rows), "embedding", dim=4).collect()
-    assert [(r["dim"], r["loading"], r["eigenvalue"], r["var_share"]) for r in single] == [
-        (r["dim"], r["loading"], r["eigenvalue"], r["var_share"])
-        for r in multi
-        if r["component"] == 1
-    ]
-
-
 def test_pca_zero_variance_corpus_raises_descriptive(spark):
     # ADVICE r8: a constant corpus made every power iterate zero and
     # died with a bare ZeroDivisionError mid-iteration

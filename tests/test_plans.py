@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import contextlib
 import io
-import os
 import re
 
 from pyspark.sql import functions as F
@@ -72,44 +71,6 @@ def test_heuristics_matrix_single_exchange(spark):
 def test_asof_single_exchange(spark):
     df = catalog.REGISTRY["asof_state_backward"].fn(spark, SMOKE)
     assert _count_shuffles(df) == 1
-
-
-def test_bucketed_join_is_shuffle_free(spark, tmp_path, monkeypatch):
-    from fireball_data_processing_spark.sources import bucketing
-    from fireball_data_processing_spark.sources.bucketing import (
-        read_bucketed,
-        write_bucketed,
-    )
-
-    import shutil
-    from urllib.parse import urlparse
-
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    # a stale table dir left by an earlier session fails the write with
-    # LOCATION_ALREADY_EXISTS: clear it in this session's warehouse
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for t in ("ev_bucketed_a", "ev_bucketed_agg"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-    ev = load_table(spark, SMOKE, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    monkeypatch.setattr(bucketing, "_BUCKETS", 8)
-    write_bucketed(ev, "ev_bucketed_a", "user_id")
-    write_bucketed(
-        ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")),
-        "ev_bucketed_agg", "user_id",
-    )
-    a = read_bucketed(spark, "ev_bucketed_a")
-    b = read_bucketed(spark, "ev_bucketed_agg")
-
-    joined = a.join(b, "user_id")
-    assert _count_shuffles(joined) == 0, _explain_str(joined)
-    assert joined.count() == ev.count()
-
-    # groupBy on the bucket key: no exchange either
-    agg = a.groupBy("user_id").agg(F.sum("value").alias("s"))
-    assert _count_shuffles(agg) == 0
 
 
 def test_triples_summary_single_scan_two_shuffles(spark):

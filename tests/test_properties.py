@@ -19,7 +19,7 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from fireball_data_processing_spark.operators.asof import asof_join, nearest_join
+from fireball_data_processing_spark.operators.asof import nearest_join
 
 pytestmark = pytest.mark.slow  # driver-budget split (r13): long
 # end-to-end runs excluded from the default suite; run with -m slow
@@ -46,36 +46,6 @@ def _right_df(right_map):
         (u, ts, u * 1000 + ts) for u, tss in right_map.items() for ts in sorted(tss)
     ]
     return rows
-
-
-@given(left=left_rows, right=right_maps)
-@settings(**SETTINGS)
-def test_asof_join_matches_pandas_merge_asof(spark, left, right):
-    rrows = _right_df(right)
-    lpdf = pd.DataFrame(left, columns=["u", "ts"]).sort_values("ts", kind="stable")
-    rpdf = pd.DataFrame(rrows, columns=["u", "ts", "val"]).sort_values(
-        "ts", kind="stable"
-    )
-    ldf = spark.createDataFrame(
-        [(int(u), int(t)) for u, t in left], "u int, ts int"
-    )
-    rdf = spark.createDataFrame(
-        [(int(u), int(t), int(v)) for u, t, v in rrows], "u int, ts int, val int"
-    )
-    if len(lpdf) == 0:
-        return
-
-    got_df = asof_join(ldf, rdf, ["u"], "ts", ["val"])
-    got = sorted((r["u"], r["ts"], r["val_asof"]) for r in got_df.collect())
-    if len(rpdf) == 0:
-        want = sorted((u, t, None) for u, t in left)
-    else:
-        m = pd.merge_asof(lpdf, rpdf, on="ts", by="u", direction="backward")
-        want = sorted(
-            (int(r.u), int(r.ts), None if pd.isna(r.val) else int(r.val))
-            for r in m.itertuples()
-        )
-    assert got == want
 
 
 @given(left=left_rows, right=right_maps)
@@ -120,10 +90,7 @@ def test_nearest_join_matches_pandas_nearest(spark, left, right):
 )
 @settings(**SETTINGS)
 def test_jaccard_pairs_matches_python_sets(spark, docs):
-    from fireball_data_processing_spark.operators.dedup import (
-        jaccard_pairs,
-        word_shingles,
-    )
+    from fireball_data_processing_spark.operators.dedup import jaccard_pairs
 
     k = 2
     df = spark.createDataFrame(
@@ -162,12 +129,11 @@ def test_jaccard_pairs_matches_python_sets(spark, docs):
         min_size=0,
         max_size=40,
     ),
-    carry=st.tuples(st.integers(0, 5), st.integers(0, 20)),
 )
 @settings(**SETTINGS)
-def test_segment_buffer_flush_matches_naive_fsm(events, carry):
+def test_segment_buffer_flush_matches_naive_fsm(events):
     # the numpy cumulative-segmentation core must equal the literal
-    # buffer/flush state machine for any event sequence and carry-in
+    # buffer/flush state machine for any event sequence
     from fireball_data_processing_spark.schema import SYNTHETIC_STREAM as S
     from fireball_data_processing_spark.streaming.heuristics_stream import (
         _segment_buffer_flush,
@@ -177,14 +143,13 @@ def test_segment_buffer_flush_matches_naive_fsm(events, carry):
         [(i, t, float(v)) for i, (t, v) in enumerate(events)],
         columns=[S.seq_col, S.type_col, S.measure_col],
     )
-    carry_n, carry_sum = carry[0], float(carry[1])
-    anchors, counts, sums, out_n, out_sum = _segment_buffer_flush(
-        pdf, S, ("view",), ("purchase",), carry_n, carry_sum
+    anchors, counts, sums = _segment_buffer_flush(
+        pdf, S, ("view",), ("purchase",)
     )
 
     # naive FSM
     want = []
-    bn, bs = carry_n, carry_sum
+    bn, bs = 0, 0.0
     for i, (t, v) in enumerate(events):
         if t == "view":
             bn += 1
@@ -193,7 +158,6 @@ def test_segment_buffer_flush_matches_naive_fsm(events, carry):
             want.append((i, bn, bs))
             bn, bs = 0, 0.0
     assert [(int(a), int(n), float(s)) for a, n, s in zip(anchors, counts, sums)] == want
-    assert (int(out_n), float(out_sum)) == (bn, bs)
 
 
 @given(
@@ -369,12 +333,11 @@ def test_connected_components_matches_union_find(spark, edges):
     )
 )
 @settings(max_examples=30, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_quantization_error_bound_and_roundtrip(spark, vec):
+def test_quantization_error_bound_and_roundtrip(spark, dequantize, vec):
     """Scalar quantization invariants: codes in [0, 255]; max per-element
     reconstruction error <= scale/2 (+ float slack); constant vectors map
     to all-zero codes with zero error."""
     from fireball_data_processing_spark.operators.similarity import (
-        dequantize_embedding,
         quantize_embedding,
     )
 
@@ -385,7 +348,7 @@ def test_quantization_error_bound_and_roundtrip(spark, vec):
         qz["vmin"].alias("vmin"),
         qz["vmax"].alias("vmax"),
         qz["mse"].alias("mse"),
-        dequantize_embedding(qz["codes"], qz["vmin"], qz["vmax"]).alias("xhat"),
+        dequantize(qz["codes"], qz["vmin"], qz["vmax"]).alias("xhat"),
         F.transform(F.col("v"), lambda x: x.cast("double")).alias("x"),
     ).collect()[0]
     assert all(0 <= c <= 255 for c in row["codes"])

@@ -142,16 +142,22 @@ def test_set_similarity_exact_dup_is_jaccard_one(spark):
     assert got == {(1, 3): 1.0}
 
 
-def test_prefix_length_math():
-    from fireball_data_processing_spark.operators.setjoin import _prefix_length
+def test_prefix_length_fp_boundary(spark):
+    """tau * n landing on an exact integer must NOT shorten the prefix:
+    0.55 * 100 is 55.00000000000001 in IEEE, and an unguarded ceil gives
+    56 -> prefix 45 instead of the mathematically-correct 46."""
+    from fireball_data_processing_spark.operators.setjoin import prefix_candidates
 
-    # tau=1.0: only the first element need be checked; tau->0: whole set
-    assert _prefix_length(10, 1.0) == 1
-    assert _prefix_length(10, 0.5) == 6
-    for n in range(1, 30):
-        for tau in (0.3, 0.5, 0.8, 1.0):
-            p = _prefix_length(n, tau)
-            assert 1 <= p <= n
+    sets = spark.createDataFrame(
+        [(1, f"s{i:03d}") for i in range(100)], "doc_id bigint, shingle string"
+    )
+    pins: list = []
+    prefix_candidates(sets, 0.55, pins).collect()
+    try:
+        assert pins[0].count() == 46
+    finally:
+        for p in pins:
+            p.unpersist()
 
 
 def test_set_similarity_bad_threshold(spark):
@@ -159,24 +165,6 @@ def test_set_similarity_bad_threshold(spark):
 
     with pytest.raises(ValueError):
         set_similarity_join(_docs(spark, SIM_ROWS), threshold=0.0)
-
-
-def test_prefix_length_fp_boundary():
-    """tau * n landing on an exact integer must NOT shorten the prefix:
-    0.9 * 10 is 9.000000000000002 in IEEE, and an unguarded ceil gives
-    10 -> prefix 1 instead of the mathematically-correct 2."""
-    from fireball_data_processing_spark.operators.setjoin import _prefix_length
-
-    assert _prefix_length(10, 0.9) == 2
-    assert _prefix_length(20, 0.3) == 15  # 0.3*20 = 6.000000000000001
-    # exhaustive small grid vs exact Fraction math
-    from fractions import Fraction
-
-    for n in range(1, 50):
-        for num, den in ((3, 10), (1, 2), (7, 10), (9, 10), (1, 1)):
-            tau = num / den
-            exact = n - math.ceil(Fraction(num, den) * n) + 1
-            assert _prefix_length(n, tau) == exact, (n, tau)
 
 
 def test_checkpoint_dir_parity(spark, tmp_path):
@@ -374,6 +362,29 @@ def test_ngram_containment_full_swallow_scores_one(spark):
     assert kept == {1}
 
 
+def py_bleu(pred: str, ref: str) -> float | None:
+    """Literal-Python twin for tests (same smoothing/BP definitions)."""
+    pw = pred.lower().split()
+    rw = ref.lower().split()
+    if not pw:
+        return None
+    logs = []
+    for n in range(1, 3):
+        pg: dict[tuple[str, ...], int] = {}
+        rg: dict[tuple[str, ...], int] = {}
+        for i in range(len(pw) - n + 1):
+            g = tuple(pw[i : i + n])
+            pg[g] = pg.get(g, 0) + 1
+        for i in range(len(rw) - n + 1):
+            g = tuple(rw[i : i + n])
+            rg[g] = rg.get(g, 0) + 1
+        clipped = sum(min(c, rg.get(g, 0)) for g, c in pg.items())
+        denom = sum(pg.values())
+        logs.append(math.log((clipped + 1) / (denom + 1)))
+    bp = min(1.0, math.exp(1 - len(rw) / len(pw)))
+    return round(bp * math.exp(sum(logs) / 2), 6)
+
+
 # ---------------------------------------------------------------------------
 # bleu_pairs
 # ---------------------------------------------------------------------------
@@ -389,10 +400,7 @@ BLEU_ROWS = [
 
 
 def test_bleu_pairs_matches_literal_python(spark):
-    from fireball_data_processing_spark.operators.evalmetrics import (
-        bleu_pairs,
-        py_bleu,
-    )
+    from fireball_data_processing_spark.operators.evalmetrics import bleu_pairs
 
     df = spark.createDataFrame(
         BLEU_ROWS, "pair_id bigint, prediction string, reference string"

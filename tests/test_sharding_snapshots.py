@@ -3,15 +3,11 @@ the CDC snapshot diff (operators/snapshots.py)."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from fireball_data_processing_spark.operators.sharding import (
-    shard_id,
     shard_key,
     shuffle_shards,
-    write_shards,
 )
 from fireball_data_processing_spark.operators.snapshots import (
     fingerprint,
@@ -45,43 +41,6 @@ def test_shard_order_independent_of_shard_id(spark):
     o2 = [r.k for r in s2.orderBy("shard_order").collect()]
     assert sorted(o1) == sorted(o2)
     assert o1 != o2  # salt really changes the permutation
-
-
-def test_write_shards_layout_and_order(spark, tmp_path):
-    df = spark.range(0, 300).withColumnRenamed("id", "k").withColumn(
-        "payload", F.concat(F.lit("p"), F.col("k"))
-    )
-    path = str(tmp_path / "shards")
-    write_shards(df, F.col("k"), path, n_shards=4)
-    # one directory per shard
-    dirs = sorted(d for d in os.listdir(path) if d.startswith("shard="))
-    assert dirs == [f"shard={i}" for i in range(4)]
-    back = spark.read.parquet(path)
-    # lossless round trip
-    assert sorted(r.k for r in back.collect()) == list(range(300))
-    # each shard's contents match the declared shard_id assignment
-    expect = {
-        r.k: r.s
-        for r in df.select(
-            "k", shard_id(F.col("k"), 4).alias("s")
-        ).collect()
-    }
-    for r in back.collect():
-        assert r.shard == expect[r.k], (r.k, r.shard, expect[r.k])
-    # within each shard's files, rows are in shard_order (partition-local
-    # sort survives the parquet round trip per file)
-    import pyarrow.parquet as pq
-
-    for d in dirs:
-        full = os.path.join(path, d)
-        for f in os.listdir(full):
-            if not f.endswith(".parquet"):
-                continue
-            t = pq.read_table(os.path.join(full, f)).to_pydict()
-            keys = [
-                shard_key_py(k, "") for k in t["k"]
-            ]
-            assert keys == sorted(keys)
 
 
 def shard_key_py(k, salt: str) -> str:

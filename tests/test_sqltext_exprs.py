@@ -24,7 +24,7 @@ from fireball_data_processing_spark.operators.clustering import (
     _double_sql,
     kmeans_assign,
     nearest_centroid_expr,
-    nearest_centroids_expr,
+    nearest_centroids_sql,
 )
 from fireball_data_processing_spark.operators.similarity import (
     pq_code_expr,
@@ -98,18 +98,23 @@ def test_nearest_centroid_text_equals_column_path(spark):
     assert a == b
 
 
-def test_nearest_centroids_text_equals_column_path(spark):
-    df = _vec_frame(spark)
+def test_nearest_centroids_text_matches_literal_python(spark):
+    """The n_probe nearest centroids, nearest first, (dist2, cid) order —
+    the duplicate centroid exercises the cid tie-break."""
+    df = _vec_frame(spark, n=120)
     cents = _centroids()
-    col_in = F.col("embedding").cast("array<double>")
-    txt_in = "cast(`embedding` as array<double>)"
-    a = df.select(
-        "vec_id", nearest_centroids_expr(cents, col_in, 3).alias("s")
-    ).orderBy("vec_id").collect()
-    b = df.select(
-        "vec_id", nearest_centroids_expr(cents, txt_in, 3).alias("s")
-    ).orderBy("vec_id").collect()
-    assert a == b
+    probe = nearest_centroids_sql(cents, "cast(`embedding` as array<double>)", 3)
+    got = {
+        r["vec_id"]: [(p["d"], p["cid"]) for p in r["s"]]
+        for r in df.select("vec_id", F.expr(probe).alias("s")).collect()
+    }
+    for i, v in df.toPandas().set_index("vec_id")["embedding"].items():
+        want = sorted(
+            (sum((x - y) * (x - y) for x, y in zip(v, c)), cid)
+            for cid, c in cents
+        )[:3]
+        assert [cid for _, cid in got[i]] == [cid for _, cid in want]
+        assert [d for d, _ in got[i]] == pytest.approx([d for d, _ in want], abs=1e-9)
 
 
 def test_kmeans_assign_matches_literal_python(spark):

@@ -1,19 +1,11 @@
-"""Streaming sinks: exactly-once replay semantics and multi-way routing."""
+"""Streaming sinks: exactly-once replay semantics."""
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import functions as F
 
-from fireball_data_processing_spark.sources.tables import (
-    load_table,
-    raw_table_schema,
-)
+from fireball_data_processing_spark.sources.tables import load_table
 from fireball_data_processing_spark.streaming.sinks_stream import (
-    idempotent_parquet_sink,
-    routed_parquet_sink,
     write_epoch_partition,
 )
 
@@ -35,61 +27,12 @@ def test_epoch_replay_is_idempotent(spark, tmp_path):
     assert got.select("batch_id").distinct().count() == 2
 
 
-def test_idempotent_sink_end_to_end(spark, tmp_path):
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    shutil.copy(os.path.join(SMOKE, "events.parquet"), src)
-    schema = raw_table_schema(spark, SMOKE, "events")
-    stream = spark.readStream.schema(schema).format("parquet").load(src)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = idempotent_parquet_sink(stream, out, ckpt)
-    q.awaitTermination(120)
-    batch_n = load_table(spark, SMOKE, "events").count()
-    assert spark.read.parquet(out).count() == batch_n
-    # restart from the same checkpoint with no new data: no duplicates
-    q2 = idempotent_parquet_sink(
-        spark.readStream.schema(schema).format("parquet").load(src), out, ckpt
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == batch_n
-
-
-def test_routed_sink_single_pass_fanout(spark, tmp_path):
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    shutil.copy(os.path.join(SMOKE, "events.parquet"), src)
-    schema = raw_table_schema(spark, SMOKE, "events")
-    stream = spark.readStream.schema(schema).format("parquet").load(src)
-    paths = {
-        "views": str(tmp_path / "views"),
-        "purchases": str(tmp_path / "purchases"),
-    }
-    q = routed_parquet_sink(
-        stream,
-        routes={
-            "views": F.col("event_type") == "view",
-            "purchases": F.col("event_type") == "purchase",
-        },
-        paths=paths,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-    ev = load_table(spark, SMOKE, "events")
-    for name, etype in (("views", "view"), ("purchases", "purchase")):
-        want = ev.filter(F.col("event_type") == etype).count()
-        assert spark.read.parquet(paths[name]).count() == want
-
-
-def test_routed_sink_missing_path_raises(spark, tmp_path):
-    schema = raw_table_schema(spark, SMOKE, "events")
-    stream = spark.readStream.schema(schema).format("parquet").load(str(tmp_path))
-    try:
-        routed_parquet_sink(
-            stream,
-            routes={"a": F.lit(True)},
-            paths={},
-            checkpoint_dir=str(tmp_path / "c"),
-        )
-        raise AssertionError("expected ValueError")
-    except ValueError as e:
-        assert "routes without a path" in str(e)
+def test_epoch_replay_of_its_own_output(spark, tmp_path):
+    """A replayed epoch whose frame reads the sink's own partition keeps
+    its rows: the write goes to staging before the old files go."""
+    out = str(tmp_path / "out")
+    write_epoch_partition(load_table(spark, SMOKE, "events").limit(100), 0, out)
+    before = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+    own = spark.read.parquet(out).filter(F.col("batch_id") == 0).drop("batch_id")
+    write_epoch_partition(own, 0, out)
+    assert sorted(tuple(r) for r in spark.read.parquet(out).collect()) == before

@@ -8,6 +8,7 @@ import os
 import shutil
 import tempfile
 
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from fireball_data_processing_spark.plans.heuristics import (
@@ -16,16 +17,26 @@ from fireball_data_processing_spark.plans.heuristics import (
     heuristics_matrix,
 )
 from fireball_data_processing_spark.schema import SYNTHETIC_STREAM
-from fireball_data_processing_spark.sources.tables import (
-    load_table,
-    raw_table_schema,
-)
+from fireball_data_processing_spark.sources.tables import load_table
 from fireball_data_processing_spark.streaming.sources_stream import (
     open_event_stream,
 )
 
 SMOKE = "/root/testdata/sf0.001"
 S = SYNTHETIC_STREAM
+
+
+def raw_table_schema(spark: SparkSession, sf_dir: str, name: str):
+    """On-disk schema of a table, BEFORE event-time normalization.
+
+    Streaming readers must declare the file schema exactly as written
+    (``readStream.schema(...)``); the stream builders then apply
+    ``normalize_event_time`` themselves, so batch and streaming plans see
+    the same int64-nanos event time.
+    """
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
 
 
 def _run_to_memory(spark, df, name, mode="complete"):

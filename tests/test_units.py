@@ -6,11 +6,14 @@ from __future__ import annotations
 
 import pytest
 
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from fireball_data_processing_spark import fixtures as FX
 from fireball_data_processing_spark import queries as catalog
 from fireball_data_processing_spark.functions.automation import narrate_tree
+from fireball_data_processing_spark.functions.text import normalize_text
+from fireball_data_processing_spark.operators.dedup import shingles_of_words
 
 ROWS_ONLY = [n for n, s in catalog.REGISTRY.items() if s.oracle is None]
 
@@ -68,9 +71,21 @@ def test_multimodal_features_deterministic(spark, sf_dir):
 # ---------------------------------------------------------------------
 # operator edges
 # ---------------------------------------------------------------------
-def test_word_shingles_short_doc(spark):
-    from fireball_data_processing_spark.operators.dedup import word_shingles
+def word_shingles(c: Column, k: int) -> Column:
+    """Distinct k-word shingles of the normalized text (array<string>).
 
+    Built with transform over the split words — stays in codegen, no UDF.
+
+    PERF: pass a pre-materialized words *column* (see ``_exploded_shingles``)
+    rather than a raw text column — expressions inside a higher-order-
+    function lambda get NO subexpression elimination, so a split/regex child
+    here would re-run once per shingle index.
+    """
+    words = F.split(normalize_text(c), " ")
+    return shingles_of_words(words, k)
+
+
+def test_word_shingles_short_doc(spark):
     df = spark.createDataFrame(
         [("two words",), ("one two three four",), ("",)], "text string"
     )
@@ -78,37 +93,6 @@ def test_word_shingles_short_doc(spark):
     assert got[0]["s"] == []
     assert got[1]["s"] == ["one two three", "two three four"]
     assert got[2]["s"] == []
-
-
-def test_asof_join_strict_vs_inclusive(spark):
-    """A right row tied with the probe counts as at-or-before (inclusive);
-    without a tie the latest strictly earlier row wins."""
-    from fireball_data_processing_spark.operators.asof import asof_join
-
-    left = spark.createDataFrame(
-        [("i", 5, "tie"), ("i", 4, "no_tie")], "inst string, t int, tag string"
-    )
-    right = spark.createDataFrame(
-        [("i", 5, "same"), ("i", 3, "earlier")], "inst string, t int, v string"
-    )
-    got = {
-        r["tag"]: r["v_asof"]
-        for r in asof_join(left, right, ["inst"], "t", ["v"]).collect()
-    }
-    assert got == {"tie": "same", "no_tie": "earlier"}
-
-
-def test_clamp_abnormal_array(spark):
-    from fireball_data_processing_spark.functions.predicates import (
-        clamp_abnormal_array,
-    )
-
-    df = spark.createDataFrame(
-        [(["a"] * 6,), (["b"] * 5,)], "xs array<string>"
-    )
-    got = df.select(clamp_abnormal_array(F.col("xs")).alias("xs")).collect()
-    assert got[0]["xs"] == []  # >5 treated as empty (P7)
-    assert got[1]["xs"] == ["b"] * 5
 
 
 def test_ordered_dedup_preserves_first_occurrence(spark):
@@ -128,121 +112,6 @@ def test_deterministic_split_is_stable_and_disjoint(spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     frac = sum(1 for r in a if r["split"] == "test") / len(a)
     assert 0.15 < frac < 0.45  # hash-uniform, not exact
-
-
-def test_lsh_topk_recall_against_brute_force(spark, sf_dir):
-    from fireball_data_processing_spark.operators.similarity import (
-        brute_force_topk,
-        lsh_topk,
-    )
-    from fireball_data_processing_spark.sources.tables import load_table
-
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5)
-    exact = brute_force_topk(q, e, k=3).collect()
-    approx = lsh_topk(q, e, k=3).collect()
-    exact_pairs = {(r["query_id"], r["neighbor_id"]) for r in exact}
-    approx_pairs = {(r["query_id"], r["neighbor_id"]) for r in approx}
-    # LSH with 8 planes keeps ~1/256 of the corpus per bucket; just require
-    # nonzero overlap and correct shape
-    assert len(approx_pairs) > 0
-    assert all(r["rank"] <= 3 for r in approx)
-    assert len(exact_pairs) == 15
-
-
-def test_substitute_snippet_shlex_quoted(spark):
-    from fireball_data_processing_spark.functions.text import (
-        substitute_snippet_shlex,
-    )
-
-    udf = substitute_snippet_shlex()
-    df = spark.createDataFrame(
-        [
-            ('!a "flame sword" goblin', '"flame sword"', "attack -adv"),
-            ("!cast fireball", "fireball", "fireball -l 5"),
-            ("!cast fireball", "missing", "x"),
-        ],
-        "content string, snippet_name string, content_after string",
-    )
-    got = [
-        r["out"]
-        for r in df.select(
-            udf(F.col("content"), F.col("snippet_name"), F.col("content_after")).alias("out")
-        ).collect()
-    ]
-    assert got[0] == "!a attack -adv goblin"  # quoted token treated as one word
-    assert got[1] == "!cast fireball -l 5"
-    assert got[2] == "!cast fireball"
-
-
-def test_rh_signature_matches_python_reference(spark, sf_dir):
-    # bit p = sign(v . H_p) with the md5-derived hyperplanes — recompute
-    # in pure Python and compare exactly (same doubles, same fold order)
-    import hashlib
-
-    from fireball_data_processing_spark.operators.similarity import rh_signature
-    from fireball_data_processing_spark.sources.tables import load_table
-
-    e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 20)
-    got = {r["vec_id"]: r["rh_sig"] for r in rh_signature(e, num_planes=8).collect()}
-    rows = e.select("vec_id", "embedding").collect()
-    for r in rows:
-        sig = 0
-        for p in range(8):
-            d = 0.0
-            for i, x in enumerate(r["embedding"]):
-                h = int(hashlib.md5(f"{p}:{i}".encode()).hexdigest()[:8], 16)
-                d += float(x) * (h / 2147483648.0 - 1.0)
-            if d > 0:
-                sig += 1 << p
-        assert got[r["vec_id"]] == sig
-
-
-def test_rh_signature_constant_plan_size_at_dim_768(spark):
-    # VERDICT r1 item 1: the signature must compile at real embedding dims.
-    # The hyperplane matrix is one folded literal; the optimized plan must
-    # contain no per-component expression (no element_at chain) and the
-    # lambda-function count must not grow with dim.
-    from fireball_data_processing_spark.operators.similarity import rh_signature
-
-    df = spark.range(6).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(768)),
-            lambda i: F.sin(i.cast("double") * (F.col("id") + 1)),
-        ).alias("embedding"),
-    )
-    out = rh_signature(df, num_planes=16, dim=768)
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "element_at" not in plan
-    # one zip_with + one per-plane transform + one bit transform + folds:
-    # lambdafunction count is O(1), not O(dim) — a handful, never hundreds
-    assert plan.count("lambdafunction") < 20
-    sigs = [r["rh_sig"] for r in out.collect()]
-    assert len(sigs) == 6 and all(0 <= s < (1 << 16) for s in sigs)
-    # distinct inputs should spread over buckets
-    assert len(set(sigs)) > 1
-
-
-def test_rh_signature_length_mismatch_contributes_zero(spark):
-    # shorter vectors pad with 0-contribution; longer truncate at dim —
-    # no ANSI out-of-bounds either way (ADVICE r1, similarity.py:96)
-    from fireball_data_processing_spark.operators.similarity import rh_signature
-
-    df = spark.createDataFrame(
-        [(1, [1.0] * 4), (2, [1.0] * 8)], "vec_id int, embedding array<float>"
-    )
-    short = rh_signature(
-        df.filter(F.col("vec_id") == 1), num_planes=4, dim=8
-    ).collect()[0]["rh_sig"]
-    padded = rh_signature(
-        spark.createDataFrame(
-            [(1, [1.0] * 4 + [0.0] * 4)], "vec_id int, embedding array<float>"
-        ),
-        num_planes=4,
-        dim=8,
-    ).collect()[0]["rh_sig"]
-    assert short == padded
 
 
 def test_ivf_index_partition_pruning(spark, sf_dir, tmp_path):
@@ -381,22 +250,6 @@ def test_simhash_wide_bits_are_populated(spark):
         simhash(df, bits=64)
 
 
-def test_frame_sample_zero_frames_emits_nothing(spark):
-    from fireball_data_processing_spark.operators.multimodal import (
-        frame_sample_plan,
-    )
-
-    df = spark.createDataFrame(
-        [(1, '{"n_frames": 25}'), (2, '{"n_frames": 0}'), (3, "video/mp4")],
-        "media_id bigint, mime string",
-    )
-    got = frame_sample_plan(df).collect()
-    by_media = {}
-    for r in got:
-        by_media.setdefault(r["media_id"], []).append(r["frame_idx"])
-    assert by_media == {1: [0, 10, 20]}  # zero/missing metadata -> no rows
-
-
 def test_dataset_memo_key_includes_names(spark, tmp_path):
     import gzip
     import hashlib
@@ -424,44 +277,6 @@ def test_dataset_memo_key_includes_names(spark, tmp_path):
     assert "message_count" in full.columns
 
 
-def test_render_discord_markdown_goldens():
-    # F18 renderer goldens (reference discord_render.py:15-54 structure:
-    # discord-flavored conversion, span wrapper, HP-band escaping,
-    # break-on-newline, empty -> bare span)
-    from fireball_data_processing_spark.functions.render import (
-        render_discord_markdown_str as r,
-    )
-
-    assert r(None) == "<span></span>"
-    assert r("") == "<span></span>"
-    assert r("a **mighty** blow") == (
-        '<span class="discord-markdown">a <strong>mighty</strong> blow</span>'
-    )
-    # __x__ is underline in discord-flavored markdown, not strong
-    assert r("stand __firm__ now") == (
-        '<span class="discord-markdown">stand <u>firm</u> now</span>'
-    )
-    assert r("a *sharp* blade") == (
-        '<span class="discord-markdown">a <em>sharp</em> blade</span>'
-    )
-    assert r("~~missed~~ landed") == (
-        '<span class="discord-markdown"><del>missed</del> landed</span>'
-    )
-    assert r("try `init next` now") == (
-        '<span class="discord-markdown">try <code>init next</code> now</span>'
-    )
-    assert r("```\nroll 1d20\n```") == (
-        '<span class="discord-markdown"><pre><code>roll 1d20\n</code></pre></span>'
-    )
-    # HP-band tokens escaped AFTER conversion (the reference's dumb hacks)
-    assert r("the goblin is <Bloodied> badly") == (
-        '<span class="discord-markdown">the goblin is &lt;Bloodied&gt; badly</span>'
-    )
-    assert r("line one\nline two") == (
-        '<span class="discord-markdown">line one<br>\nline two</span>'
-    )
-
-
 def test_censor_words_masks_case_insensitive(spark):
     from fireball_data_processing_spark.functions.render import censor_words
 
@@ -474,82 +289,6 @@ def test_censor_words_masks_case_insensitive(spark):
     assert got[1] == "what the ---- was that"
     # word-bounded: hello/shell untouched
     assert got[2] == "hello shell"
-
-
-def test_minhash_index_and_grouped_pairs_parity(spark, sf_dir, tmp_path):
-    # build/query split: candidates and jaccard scores read from the
-    # materialized index equal the one-shot pipeline's exactly
-    from fireball_data_processing_spark.operators.dedup import (
-        build_minhash_index,
-        jaccard_pairs,
-        lsh_candidate_pairs,
-        minhash_signature,
-    )
-    from fireball_data_processing_spark.sources.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signature(d, with_shingles=True)
-    sh = sigs.select("doc_id", F.col("__sh").alias("sh"))
-    want_pairs = sorted(
-        map(tuple, lsh_candidate_pairs(sigs).select("id_a", "id_b").collect())
-    )
-    assert len(want_pairs) > 0
-
-    idx = build_minhash_index(d, str(tmp_path / "mh_idx"))
-    got_pairs = sorted(
-        map(tuple, lsh_candidate_pairs(idx).select("id_a", "id_b").collect())
-    )
-    assert got_pairs == want_pairs
-
-    want_j = sorted(
-        map(
-            tuple,
-            jaccard_pairs(d, lsh_candidate_pairs(sigs), shingle_sets=sh)
-            .select("id_a", "id_b", F.round("jaccard", 6).alias("j"))
-            .collect(),
-        )
-    )
-    idx_sh = idx.select("doc_id", F.col("__sh").alias("sh"))
-    got_j = sorted(
-        map(
-            tuple,
-            jaccard_pairs(d, lsh_candidate_pairs(idx), shingle_sets=idx_sh)
-            .select("id_a", "id_b", F.round("jaccard", 6).alias("j"))
-            .collect(),
-        )
-    )
-    assert got_j == want_j
-
-
-def test_render_nul_and_html_escape_hardening():
-    # review fixes: NUL-bearing input neither crashes nor splices stashed
-    # blocks; code content is HTML-escaped like markdown2
-    from fireball_data_processing_spark.functions.render import (
-        render_discord_markdown_str as r,
-    )
-
-    assert r("text with \x001\x00 weird") == (
-        '<span class="discord-markdown">text with 1 weird</span>'
-    )
-    assert r("`a < b & c`") == (
-        '<span class="discord-markdown"><code>a &lt; b &amp; c</code></span>'
-    )
-    assert r("\x000\x00 and `x`") == (
-        '<span class="discord-markdown">0 and <code>x</code></span>'
-    )
-
-
-def test_hashed_id_col_long_with_nulls(spark):
-    # review fix: long columns with nulls must not take Arrow's float64
-    # coercion path (which would hash scientific-notation reprs)
-    from fireball_data_processing_spark.functions.ids import hashed_id_col
-
-    df = spark.createDataFrame(
-        [(261302296103747584,), (None,)], "raw bigint"
-    )
-    got = [r["h"] for r in df.select(hashed_id_col(F.col("raw")).alias("h")).collect()]
-    assert got[0] == "239007750597631721"
-    assert got[1] is None
 
 
 def test_lsh_grouped_no_self_pairs_on_duplicate_ids(spark):
@@ -582,51 +321,10 @@ def test_correlation_drops_null_partition_keys(spark):
     assert sorted((r["u"], r["kk"]) for r in out) == [(5, 2), (5, 2)]
 
 
-def test_capped_shingles_bottom_k_sample(spark):
-    # cap semantics: docs under the cap untouched; docs over it keep the
-    # max_shingles shingles with smallest md5 (deterministic uniform sample)
-    import hashlib
-
-    from fireball_data_processing_spark.operators.dedup import (
-        minhash_signature,
-        shingles_of_words,
-    )
-
-    text_long = " ".join(f"w{i}" for i in range(40))  # 38 3-shingles
-    text_short = "a b c d"  # 2 3-shingles
-    df = spark.createDataFrame(
-        [("d1", text_long), ("d2", text_short)], "doc_id string, text string"
-    )
-
-    capped = minhash_signature(
-        df, num_hashes=4, with_shingles=True, max_shingles=10
-    ).collect()
-    full = minhash_signature(df, num_hashes=4, with_shingles=True).collect()
-    by_id = lambda rows: {r["doc_id"]: r for r in rows}
-    c, f = by_id(capped), by_id(full)
-
-    # short doc identical under the cap
-    assert sorted(c["d2"]["__sh"]) == sorted(f["d2"]["__sh"])
-    assert [c["d2"][f"mh{i}"] for i in range(4)] == [
-        f["d2"][f"mh{i}"] for i in range(4)
-    ]
-    # long doc: exactly the 10 md5-smallest of the full shingle set
-    want = sorted(f["d1"]["__sh"], key=lambda s: hashlib.md5(s.encode()).hexdigest())[
-        :10
-    ]
-    assert sorted(c["d1"]["__sh"]) == sorted(want)
-    assert len(c["d1"]["__sh"]) == 10
-
-
 def test_infer_dim_from_metadata_and_streaming_refusal(spark, tmp_path):
     import pytest
 
-    from pyspark.sql import functions as F
-
-    from fireball_data_processing_spark.operators.similarity import (
-        _infer_dim,
-        rh_signature,
-    )
+    from fireball_data_processing_spark.operators.similarity import _infer_dim
 
     df = spark.createDataFrame(
         [("a", [1.0, 2.0, 3.0])], "vec_id string, embedding array<double>"
@@ -641,40 +339,8 @@ def test_infer_dim_from_metadata_and_streaming_refusal(spark, tmp_path):
     df.write.mode("overwrite").parquet(p)
     stream = spark.readStream.schema(df.schema).parquet(p)
     with pytest.raises(ValueError, match="streaming"):
-        rh_signature(stream, num_planes=4)
-    out = rh_signature(stream.withMetadata("embedding", {"dim": 3}), num_planes=4)
-    assert "rh_sig" in out.columns and out.isStreaming
-
-
-def test_decode_image_real_codec_branch(spark):
-    # exercises the REAL decoder branch end-to-end where a codec exists;
-    # skipped (not failed) in containers without PIL
-    import pytest
-
-    PIL_Image = pytest.importorskip("PIL.Image")
-    import io
-
-    from fireball_data_processing_spark.operators.multimodal import decode_image
-
-    buf = io.BytesIO()
-    PIL_Image.new("RGB", (4, 2), (255, 0, 0)).save(buf, format="PNG")
-    img = decode_image(buf.getvalue())
-    assert img.size == (4, 2)
-
-
-def test_decode_image_stub_raises_without_codec():
-    import pytest
-
-    from fireball_data_processing_spark.operators import multimodal
-
-    try:
-        import PIL.Image  # noqa: F401
-
-        pytest.skip("PIL present; stub branch not reachable here")
-    except ImportError:
-        pass
-    with pytest.raises(NotImplementedError, match="PIL"):
-        multimodal.decode_image(b"\x89PNG not really")
+        _infer_dim(stream, "embedding")
+    assert _infer_dim(stream.withMetadata("embedding", {"dim": 3}), "embedding") == 3
 
 
 def test_minhash_sig_expr_matches_grouped_signature(spark, sf_dir):
@@ -879,14 +545,13 @@ def test_clean_segments_c4_rules(spark):
     assert c["n_segments"] == 0 and c["kept_text"] == ""
 
 
-def test_quantized_rerank_matches_exact_topk(spark, sf_dir):
+def test_quantized_rerank_matches_exact_topk(spark, sf_dir, dequantize):
     """Int8-quantized vectors must preserve cosine top-k almost exactly —
     the compression is only useful if the re-rank on dequantized vectors
     agrees with the full-precision answer (64-dim synthetic corpus: 255
     levels is far finer than neighbor gaps)."""
     from fireball_data_processing_spark.operators.similarity import (
         brute_force_topk,
-        dequantize_embedding,
         quantize_embedding,
     )
     from fireball_data_processing_spark.sources.tables import load_table
@@ -895,7 +560,7 @@ def test_quantized_rerank_matches_exact_topk(spark, sf_dir):
     qz = quantize_embedding(F.col("embedding"))
     deq = e.select(
         "vec_id",
-        dequantize_embedding(qz["codes"], qz["vmin"], qz["vmax"]).alias(
+        dequantize(qz["codes"], qz["vmin"], qz["vmax"]).alias(
             "embedding"
         ),
     )
