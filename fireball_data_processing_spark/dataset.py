@@ -47,6 +47,7 @@ import shutil
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from fireball_data_processing_spark.plans.heuristics import (
@@ -268,7 +269,13 @@ class FireballDataset:
 
     # -- explorer endpoints -------------------------------------------
     def events(self, instance_id: str) -> DataFrame:
-        """`/events/{id}`: one instance's stream in canonical order, from its files."""
+        """`/events/{id}`: one instance's stream in canonical order, from its files.
+
+        An instance of at most ``spark.sql.adaptive.coalescePartitions.
+        minPartitionSize`` listed chunk bytes (1 MB by default) reads in one
+        task with no exchange: a lookup is one job. A larger one keeps the
+        hash exchange for ``seq`` and a range exchange for the order, whose
+        partitions bound what ``stream_events`` pulls at a time."""
         files = [f for f in self.files() if instance_of(f[0]) == instance_id]
         return load_event_stream(self.spark, files).orderBy("seq")
 
@@ -283,8 +290,12 @@ class FireballDataset:
 
         The reference streams because "big instances can be 250MB+, don't
         consume entire iterator"; the engine analog is ``toLocalIterator``,
-        which pulls ONE partition at a time to the driver (never the whole
-        instance), over a scan of only that instance's files.
+        which pulls ONE partition of ``events(id)`` at a time to the driver,
+        over a scan of only that instance's files. A pull is bounded by the
+        gate of ``events``: an instance under it is one partition of at most
+        ``minPartitionSize`` listed (compressed) bytes; a larger one is
+        range-partitioned on ``seq``, one AQE-sized partition per pull,
+        never the whole instance.
 
         Raises ``KeyError`` for an unknown instance (the endpoint's 404) —
         EAGERLY, from the listing and before any chunk is produced, so an
@@ -295,7 +306,8 @@ class FireballDataset:
 
         def gen():
             buf: list[str] = []
-            for line in self.events(instance_id).toJSON().toLocalIterator():
+            lines = self.events(instance_id).select(F.to_json(F.struct("*")))
+            for (line,) in lines.toLocalIterator():
                 buf.append(line)
                 if len(buf) >= _CHUNK_ROWS:
                     yield "\n".join(buf) + "\n"

@@ -32,7 +32,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window, WindowSpec
+from pyspark.sql.window import Window
 
 _SIDE = "__asof_side"  # 0 = right (lookup source), 1 = left (probe)
 
@@ -63,14 +63,15 @@ def asof_forward_col(
     include_current: bool = True,
 ) -> Column:
     """Value of the first row satisfying ``predicate`` at-or-after this row
-    (G6)."""
-    lo = 0 if include_current else 1
+    (G6): the last such row of a running frame over the reversed order, so
+    each row costs O(1), not the O(n) of a shrinking suffix frame."""
+    hi = 0 if include_current else -1
     w = (
         Window.partitionBy(*partition_cols)
-        .orderBy(order_col)
-        .rowsBetween(lo, Window.unboundedFollowing)
+        .orderBy(F.col(order_col).desc())
+        .rowsBetween(Window.unboundedPreceding, hi)
     )
-    return F.first(F.when(predicate, value), ignorenulls=True).over(w)
+    return F.last(F.when(predicate, value), ignorenulls=True).over(w)
 
 
 def _side_union(
@@ -102,15 +103,59 @@ def _side_union(
     return l_sel.unionByName(r_sel)
 
 
-def _backward_window(part: list[str], order_col: str) -> WindowSpec:
-    """Everything at-or-before the row in its partition. Secondary sort
-    on the side flag sets the tie semantics: right rows (side 0) sort
-    before left rows at equal order value, so a tie is visible to the
-    left row."""
-    return (
-        Window.partitionBy(*part)
-        .orderBy(F.col(order_col).asc(), F.col(_SIDE).asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
+def with_nearest(
+    df: DataFrame,
+    part: Sequence[str],
+    order_col: str,
+    side_col: str,
+    key_col: str,
+    prefer: str = "backward",
+) -> DataFrame:
+    """Add ``__near_key`` and ``__near_ord``: the ``key_col`` and
+    ``order_col`` of the side-0 row (the anchor) nearest each row of its
+    partition by ``abs(order delta)``. An anchor at the row's own order
+    value is visible both backward and forward; an equidistant pair goes
+    backward with ``prefer='backward'``, forward otherwise. Among anchors
+    tied on the order value the key breaks the tie: the backward candidate
+    is the largest key, the forward candidate the smallest. An anchor row
+    finds itself.
+
+    Plan: both candidates are ``last(ignorenulls)`` over a running frame
+    (``unboundedPreceding`` to the current row), the backward one over
+    ``(order, side, key)`` ascending, the forward one over the reversed
+    order ``(order desc, side asc, key desc)``. That is two sorts of the
+    partition and O(1) per row, O(n log n) per partition. The forward
+    candidate as ``first(ignorenulls)`` over a suffix frame would plan
+    Spark's unbounded-following frame, which recomputes the suffix for
+    every row: O(n^2) per partition.
+    """
+    o, side, key = F.col(order_col), F.col(side_col), F.col(key_col)
+    upto = (Window.unboundedPreceding, Window.currentRow)
+    w = Window.partitionBy(*part)
+    w_b = w.orderBy(o.asc(), side.asc(), key.asc()).rowsBetween(*upto)
+    w_f = w.orderBy(o.desc(), side.asc(), key.desc()).rowsBetween(*upto)
+    ak = F.when(side == 0, key)
+    ao = F.when(side == 0, o)
+    tagged = (
+        df.withColumn("__bwd_key", F.last(ak, ignorenulls=True).over(w_b))
+        .withColumn("__bwd_ord", F.last(ao, ignorenulls=True).over(w_b))
+        .withColumn("__fwd_key", F.last(ak, ignorenulls=True).over(w_f))
+        .withColumn("__fwd_ord", F.last(ao, ignorenulls=True).over(w_f))
+    )
+    d_b = o - F.col("__bwd_ord")
+    d_f = F.col("__fwd_ord") - o
+    take_bwd = F.col("__fwd_ord").isNull() | (
+        F.col("__bwd_ord").isNotNull()
+        & ((d_b <= d_f) if prefer == "backward" else (d_b < d_f))
+    )
+    return tagged.select(
+        *df.columns,
+        F.when(take_bwd, F.col("__bwd_key"))
+        .otherwise(F.col("__fwd_key"))
+        .alias("__near_key"),
+        F.when(take_bwd, F.col("__bwd_ord"))
+        .otherwise(F.col("__fwd_ord"))
+        .alias("__near_ord"),
     )
 
 
@@ -127,11 +172,14 @@ def nearest_join(
     (backward) row when ``prefer='backward'`` — the reference uses ``<=`` on
     the backward candidate (``distill1_time_group.py:48-52``).
 
-    Single union + ONE partition exchange: both the backward and the forward
-    candidate come from two window passes (opposite tie orders) over the
-    same hash partitioning, so the union's rows are shuffled once and sorted
-    twice — not unioned/shuffled per direction. At 100 TB the second union
-    of the naive two-pass form would double the windowed volume.
+    Among right rows tied on the order value, the backward candidate is
+    the one with the largest ``right_key``, the forward candidate the one
+    with the smallest (:func:`with_nearest`).
+
+    Plan: one union, ONE exchange on the partition key and two sorts of
+    it, one per candidate, each a running frame (:func:`with_nearest`):
+    O(n log n) per partition. Both candidates come from the same hash
+    partitioning, so the union is shuffled once, not once per direction.
 
     Output adds ``{right_key}_nearest``, ``nearest_delta``, and
     ``nearest_ord`` (the matched right row's own order value, so callers
@@ -143,41 +191,10 @@ def nearest_join(
     u = _side_union(
         left, right, part, order_col, [("__r_key", F.col(right_key), key_t)]
     )
-    # tie orders: at equal order value the right row is visible both
-    # backward (side 0 sorts first) and forward (side 0 sorts after the
-    # probe, window includes it)
-    w_b = _backward_window(part, order_col)
-    w_f = (
-        Window.partitionBy(*part)
-        .orderBy(F.col(order_col).asc(), F.col(_SIDE).desc())
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
-    rk = F.when(F.col(_SIDE) == 0, F.col("__r_key"))
-    ro = F.when(F.col(_SIDE) == 0, F.col(order_col))
-    u = (
-        u.withColumn("__bwd_key", F.last(rk, ignorenulls=True).over(w_b))
-        .withColumn("__bwd_ord", F.last(ro, ignorenulls=True).over(w_b))
-        .withColumn("__fwd_key", F.first(rk, ignorenulls=True).over(w_f))
-        .withColumn("__fwd_ord", F.first(ro, ignorenulls=True).over(w_f))
-    )
-    d_b = F.col(order_col) - F.col("__bwd_ord")
-    d_f = F.col("__fwd_ord") - F.col(order_col)
-    take_bwd = F.col("__fwd_ord").isNull() | (
-        F.col("__bwd_ord").isNotNull()
-        & ((d_b <= d_f) if prefer == "backward" else (d_b < d_f))
-    )
-    out = (
-        u.filter(F.col(_SIDE) == 1)
-        .withColumn(
-            f"{right_key}_nearest",
-            F.when(take_bwd, F.col("__bwd_key")).otherwise(F.col("__fwd_key")),
-        )
-        .withColumn("nearest_delta", F.when(take_bwd, d_b).otherwise(d_f))
-        .withColumn(
-            "nearest_ord",
-            F.when(take_bwd, F.col("__bwd_ord")).otherwise(F.col("__fwd_ord")),
-        )
-    )
-    return out.drop(
-        _SIDE, "__r_key", "__bwd_key", "__bwd_ord", "__fwd_key", "__fwd_ord"
+    near = with_nearest(u, part, order_col, _SIDE, "__r_key", prefer)
+    return near.filter(F.col(_SIDE) == 1).select(
+        *left.columns,
+        F.col("__near_key").alias(f"{right_key}_nearest"),
+        F.abs(F.col(order_col) - F.col("__near_ord")).alias("nearest_delta"),
+        F.col("__near_ord").alias("nearest_ord"),
     )

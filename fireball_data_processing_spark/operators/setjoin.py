@@ -113,11 +113,13 @@ def prefix_candidates(
         F.col("shingle"),
         F.col("__n").alias("__nb"),
     )
-    # length filter: Jaccard >= tau forces tau <= |A|/|B| <= 1/tau
+    # length filter: Jaccard >= tau forces tau <= |A|/|B| <= 1/tau, with
+    # the prefix's downward nudge: 100 * 0.55 is 55.00000000000001 in IEEE,
+    # which would drop a pair of sizes 100 and 55 at Jaccard exactly 0.55
     joined = a.join(b, "shingle").filter(
         (F.col("id_a") < F.col("id_b"))
-        & (F.col("__nb") * threshold <= F.col("__na"))
-        & (F.col("__na") * threshold <= F.col("__nb"))
+        & (F.col("__nb") * threshold - F.lit(1e-9) <= F.col("__na"))
+        & (F.col("__na") * threshold - F.lit(1e-9) <= F.col("__nb"))
     )
     return joined.select("id_a", "id_b").distinct()
 

@@ -18,9 +18,22 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
 __all__ = ["km_curve", "logrank_test"]
+
+
+def _suffix_sum(x: Column, w: WindowSpec) -> Column:
+    """``sum(x)`` from this row to the end of its ordered window ``w``, as
+    the partition total minus the running sum before this row. Both frames
+    share ``w``'s sort and cost O(1) per row; a frame from the current row
+    to ``unboundedFollowing`` would recompute the suffix for every row,
+    O(n^2). Exact while ``x`` holds integers (counts, also as doubles)."""
+    total = F.sum(x).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    upto = F.sum(x).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    return total - upto + x
 
 
 def km_curve(durations: DataFrame) -> DataFrame:
@@ -51,13 +64,10 @@ def km_curve(durations: DataFrame) -> DataFrame:
             ),
         )
     )
-    suffix = Window.orderBy("duration").rowsBetween(
-        Window.currentRow, Window.unboundedFollowing
-    )
+    w = Window.orderBy("duration")
     risked = per.select(
         "duration",
-        F.sum(F.col("n_events") + F.col("n_censored"))
-        .over(suffix)
+        _suffix_sum(F.col("n_events") + F.col("n_censored"), w)
         .cast("bigint")
         .alias("n_risk"),
         "n_events",
@@ -104,8 +114,6 @@ def logrank_test(durations: DataFrame, group_col: str) -> DataFrame:
     suffix-sum windows for the per-group risk sets, then arithmetic on
     the duration-grain frame. Per-bucket terms are rounded so a SQL
     oracle replays the statistic exactly."""
-    from pyspark.sql.window import Window
-
     per = (
         durations.select(
             F.col(group_col).alias("g"),
@@ -130,12 +138,12 @@ def logrank_test(durations: DataFrame, group_col: str) -> DataFrame:
     # exact same pairing the full-outer join produced), and the group
     # totals fold into the final one-row rollup (sum of per-bucket
     # counts IS the group's subject count).
-    suffix = Window.partitionBy("g").orderBy("t").rowsBetween(
-        Window.currentRow, Window.unboundedFollowing
-    )
     wall = Window.partitionBy()
     risked = per.select(
-        "g", "t", "d", "c", F.sum("c").over(suffix).alias("n_risk")
+        "g", "t", "d", "c",
+        _suffix_sum(F.col("c"), Window.partitionBy("g").orderBy("t")).alias(
+            "n_risk"
+        ),
     ).select(
         "g", "t", "d", "c", "n_risk",
         F.min("g").over(wall).alias("__ga"),

@@ -19,8 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from fireball_data_processing_spark.operators.asof import with_nearest
 from fireball_data_processing_spark.schema import StreamSchema
 
 
@@ -36,15 +36,20 @@ def assemble_triples(
     and ordered payload lists.
 
     Output: (instance, anchor_id, n_before, n_after, before_payloads,
-    after_payloads). Plan: ONE scan of the event stream — each row is
-    role-tagged in place (anchor wins if both predicates match), the nearest
-    anchor comes from two window passes (backward/forward, opposite tie
-    orders) over a single hash exchange on the instance key, and one grouped
-    aggregation with order-preserving ``sort_array`` collection finishes the
-    triple. The anchor's own row rides through the groupBy, so anchors with
-    no utterances still emit (no join back, no second scan): at 100 TB the
-    previous nearest-join + left-join formulation scanned the corpus 4x and
-    shuffled 3x; this is 1 scan / 2 shuffles.
+    after_payloads). Each row is role-tagged in place (anchor wins if both
+    predicates match) and each utterance attaches to its nearest anchor
+    (:func:`~..operators.asof.with_nearest`; among anchors tied on the
+    order value, backward means the latest ``seq``, forward the earliest).
+    One grouped aggregation with order-preserving ``sort_array``
+    collection finishes the triple. The anchor's own row rides through
+    the groupBy, so anchors with no utterances still emit (no join back,
+    no second scan).
+
+    Plan: ONE scan of the event stream, one hash exchange on the instance
+    key, two sorts of each instance (the backward and the reversed
+    forward order), each feeding a running window frame that costs O(1)
+    per row, so the nearest anchor is O(n log n) per instance; the
+    groupBy reuses the exchange.
     """
     inst = s.instance_col
     order_col = "__ord"
@@ -64,45 +69,11 @@ def assemble_triples(
             F.when(F.col("__side") == 1, F.col(payload_col)).alias("__payload"),
         )
     )
-    # same tie semantics as nearest_join: an anchor at the same order value
-    # is visible to the utterance in both directions; equidistant goes
-    # backward (reference distill1_time_group.py:48-52)
-    w_b = (
-        Window.partitionBy(inst)
-        .orderBy(F.col(order_col).asc(), F.col("__side").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_f = (
-        Window.partitionBy(inst)
-        .orderBy(F.col(order_col).asc(), F.col("__side").desc())
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
-    ak = F.when(F.col("__side") == 0, F.col("__a_id"))
-    ao = F.when(F.col("__side") == 0, F.col(order_col))
+    # equidistant goes backward (reference distill1_time_group.py:48-52)
     tagged = (
-        base.withColumn("__bwd_key", F.last(ak, ignorenulls=True).over(w_b))
-        .withColumn("__bwd_ord", F.last(ao, ignorenulls=True).over(w_b))
-        .withColumn("__fwd_key", F.first(ak, ignorenulls=True).over(w_f))
-        .withColumn("__fwd_ord", F.first(ao, ignorenulls=True).over(w_f))
-    )
-    d_b = F.col(order_col) - F.col("__bwd_ord")
-    d_f = F.col("__fwd_ord") - F.col(order_col)
-    take_bwd = F.col("__fwd_ord").isNull() | (
-        F.col("__bwd_ord").isNotNull() & (d_b <= d_f)
-    )
-    tagged = (
-        tagged.withColumn(
-            "anchor_id",
-            F.when(F.col("__side") == 0, F.col("__a_id"))
-            .when(take_bwd, F.col("__bwd_key"))
-            .otherwise(F.col("__fwd_key")),
-        )
-        .withColumn(
-            "__a_ord",
-            F.when(F.col("__side") == 0, F.col(order_col))
-            .when(take_bwd, F.col("__bwd_ord"))
-            .otherwise(F.col("__fwd_ord")),
-        )
+        with_nearest(base, [inst], order_col, "__side", "__a_id")
+        .withColumnRenamed("__near_key", "anchor_id")
+        .withColumnRenamed("__near_ord", "__a_ord")
         .filter(F.col("anchor_id").isNotNull())
     )
     # before/after tagging (G9): an utterance later than (or tied with) its

@@ -157,11 +157,15 @@ def with_stream_features(df: DataFrame, s: StreamSchema) -> DataFrame:
 
 _HeuristicFactory = Callable[[StreamSchema], Column]
 _REGISTRY: dict[str, _HeuristicFactory] = {}
+# heuristic_exprs' unbound Columns by (schema, names): building them is
+# ~1,500 py4j calls, about half of a heuristics_matrix build
+_EXPRS: dict[tuple[StreamSchema, tuple[str, ...]], dict[str, Column]] = {}
 
 
 def register_heuristic(name: str) -> Callable[[_HeuristicFactory], _HeuristicFactory]:
     def deco(fn: _HeuristicFactory) -> _HeuristicFactory:
         _REGISTRY[name] = fn
+        _EXPRS.clear()
         return fn
     return deco
 
@@ -302,11 +306,6 @@ SIMPLE = (
     "num_turns",
     "avg_words_between_commands",
 )
-#: SIMPLE with distinct aggregations swapped for mergeable sketches —
-#: the set that runs incrementally on a stream
-STREAM_SAFE = tuple(
-    "num_participants_approx" if n == "num_participants" else n for n in SIMPLE
-)
 #: names that require with_stream_features first
 WINDOWED = (
     "avg_words_between_commands_excl_last",
@@ -321,12 +320,15 @@ def heuristic_exprs(
     s: StreamSchema, names: tuple[str, ...] | None = None
 ) -> dict[str, Column]:
     """Named aggregate Columns; unknown names raise (mirrors the reference's
-    registry validation, ``heuristic_worker.py:124-127``)."""
-    names = names or HEURISTICS
-    missing = [n for n in names if n not in _REGISTRY]
-    if missing:
-        raise RuntimeError(f"unknown heuristics: {missing}")
-    return {n: _REGISTRY[n](s).alias(n) for n in names}
+    registry validation, ``heuristic_worker.py:124-127``). Built once per
+    ``(s, names)``: a Column is unbound, so every frame can reuse it."""
+    key = (s, tuple(names or HEURISTICS))
+    if key not in _EXPRS:
+        missing = [n for n in key[1] if n not in _REGISTRY]
+        if missing:
+            raise RuntimeError(f"unknown heuristics: {missing}")
+        _EXPRS[key] = {n: _REGISTRY[n](s).alias(n) for n in key[1]}
+    return dict(_EXPRS[key])
 
 
 def heuristics_matrix(

@@ -6,14 +6,13 @@ checksum memoization, SURVEY S6). At 100 TB, "the corpus grew by one
 day" must NOT cost a full recompute: keep a per-instance PARTIALS
 table, compute partials for the new chunk only, merge, finalize.
 
-The algebra: every streamable heuristic (``STREAM_SAFE``) decomposes
+The algebra: every heuristic of ``plans.heuristics.SIMPLE``, with
+``num_participants`` replaced by ``num_participants_approx``, decomposes
 into per-instance sums/counts plus a DataSketches HLL sketch for the
 distinct-participants estimate — all order-independent and mergeable,
-which is the same property that makes them streamable
-(:mod:`..streaming.heuristics_stream` is the continuous twin of this
-module's batch merge). The window-dependent heuristics (A12/A14/A15,
-turn changes) carry cross-row state that straddles chunk boundaries
-and are excluded, exactly as they are from streaming.
+which is the same property that would make them streamable. The
+window-dependent heuristics (``WINDOWED``: A12/A14/A15, turn changes)
+carry cross-row state that straddles chunk boundaries and are excluded.
 
 Cost model: partials for a chunk scan ONLY the chunk; the merge is an
 aggregation over two vocabulary-of-instances-sized tables; finalize is
@@ -50,8 +49,8 @@ _SUM_COLS = (
 
 
 def heuristic_partials(events: DataFrame, s: StreamSchema) -> DataFrame:
-    """Per-instance mergeable partials for the ``STREAM_SAFE`` heuristic
-    set: plain sums/counts plus an HLL sketch (binary) of message
+    """Per-instance mergeable partials for the mergeable heuristic set
+    (module docstring): plain sums/counts plus an HLL sketch (binary) of message
     authors. One pass over ``events`` — call it on the NEW chunk only."""
     return events.groupBy(F.col(s.instance_col)).agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -91,8 +90,8 @@ def merge_heuristic_partials(
 
 
 def finalize_heuristics(partials: DataFrame) -> DataFrame:
-    """Project the ``STREAM_SAFE`` heuristic values from a partials
-    table (null-on-zero ratio semantics identical to the batch matrix;
+    """Project the mergeable heuristic values (module docstring) from a
+    partials table (null-on-zero ratio semantics identical to the batch matrix;
     ``num_participants_approx`` here is the DataSketches HLL estimate —
     mergeable by construction, vs the batch matrix's HLL++
     ``approx_count_distinct``, so small estimate differences between

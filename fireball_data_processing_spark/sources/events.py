@@ -28,6 +28,14 @@ whole heuristic suite is one shuffle end-to-end. Instance skew (a few 250MB+
 instances) is handled by AQE skew splitting for joins; for the ordered
 windows the partition is irreducible — exactly like the reference, where one
 process must stream the whole instance.
+
+A small read skips the shuffle: when the listed (compressed) chunk bytes
+are at most ``spark.sql.adaptive.coalescePartitions.minPartitionSize``, the
+floor AQE keeps under one coalesced shuffle partition (reused, so the gate
+adds no setting), the scan is coalesced to one task before
+``with_instance_and_seq``. One partition satisfies the ``seq`` window's
+clustering and any later ``orderBy``, so neither plans an exchange: a
+lookup of one instance is one job.
 """
 
 from __future__ import annotations
@@ -41,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from fireball_data_processing_spark.schema import EVENT_SCHEMA
+from fireball_data_processing_spark.session import conf_bytes
 from fireball_data_processing_spark.sources.checksum import File, list_files
 
 _THRESHOLD_LOCK = threading.Lock()
@@ -99,10 +108,25 @@ def listed_read(spark: SparkSession, n_paths: int) -> Iterator[None]:
             spark.conf.set(key, prev)
 
 
-def load_event_stream(spark: SparkSession, files: list[File]) -> DataFrame:
-    """Read listed chunk files (``chunk_files``) as typed events (S1+S4+S5)."""
+def read_chunks(spark: SparkSession, files: list[File]) -> DataFrame:
+    """The listed chunk files as typed JSON rows, without ``instance_id``
+    or ``seq`` (S1): one ``spark.read.json`` that tolerates corrupt chunks."""
     # S1 bad-gzip tolerance, scoped to this scan rather than session-wide.
     reader = spark.read.schema(EVENT_SCHEMA).option("ignoreCorruptFiles", "true")
     with listed_read(spark, len(files)):
-        df = reader.json([path for path, _, _ in files])
+        return reader.json([path for path, _, _ in files])
+
+
+def load_event_stream(spark: SparkSession, files: list[File]) -> DataFrame:
+    """Read listed chunk files (``chunk_files``) as typed events (S1+S4+S5).
+
+    At most ``minPartitionSize`` listed bytes read in one task with no
+    exchange (module docstring); more keep the shuffle on ``instance_id``.
+    """
+    df = read_chunks(spark, files)
+    gate = conf_bytes(
+        spark, "spark.sql.adaptive.coalescePartitions.minPartitionSize", "1MB"
+    )
+    if sum(size for _, size, _ in files) <= gate:
+        df = df.coalesce(1)
     return with_instance_and_seq(df)

@@ -11,12 +11,16 @@ and count the features that matter at 100 TB:
 - Python execution nodes: BatchEvalPython is the row-at-a-time slow
   path (policy: ZERO anywhere); ArrowEvalPython / MapInPandas /
   FlatMapGroupsInPandas are the sanctioned Arrow-batched edges,
+- shrinking suffix window frames (a bounded start, ``unboundedFollowing``
+  end): Spark recomputes such a frame for every row, O(n^2) per window
+  partition (policy: ZERO anywhere; a suffix is the reversed order's
+  running frame, or the partition total minus a running prefix).
 
 Usage: python scripts/plan_audit.py [--write]
   --write rewrites PLANS.md at the repo root; without it the table
   prints to stdout. Exits non-zero if any query plans a
-  BatchEvalPython node or a CartesianProduct without an explicit
-  allowlist entry below.
+  BatchEvalPython node, a shrinking suffix frame, or a CartesianProduct
+  without an explicit allowlist entry below.
 """
 
 from __future__ import annotations
@@ -36,6 +40,14 @@ ALLOWED_CARTESIAN = {
     # exact brute-force baseline: |Q| x |N| by definition (labeled as such)
     "ann_cosine_topk",
 }
+
+
+# a window frame ending at unboundedFollowing whose start is not
+# unboundedPreceding (the whole-partition frame is evaluated once)
+_SUFFIX_FRAME = re.compile(
+    r"specifiedwindowframe\((?:RowFrame|RangeFrame), "
+    r"(?!unboundedpreceding\$\(\))[^,]+, unboundedfollowing\$\(\)\)"
+)
 
 
 def _global_windows(phys: str) -> int:
@@ -102,6 +114,7 @@ def audit() -> list[dict]:
                 + phys.count("MapInPandas")
                 + phys.count("FlatMapGroupsInPandas"),
                 "gwin": _global_windows(phys),
+                "suffix": len(_SUFFIX_FRAME.findall(phys)),
             }
         )
     spark.stop()
@@ -145,6 +158,8 @@ def render(rows: list[dict]) -> str:
     if ok:
         out += [
             f"- row-at-a-time Python nodes: {sum(r['py_row'] for r in ok)} (policy 0)",
+            f"- shrinking suffix window frames: {sum(r['suffix'] for r in ok)}"
+            " (policy 0)",
             f"- cartesian products: {sum(r['cartesian'] for r in ok)}"
             f" (allowlisted: {sorted(ALLOWED_CARTESIAN)})",
             f"- max shuffles in one query:"
@@ -200,6 +215,9 @@ def main() -> int:
             bad += 1
         elif r["py_row"]:
             print(f"ROW-PYTHON {r['name']}: {r['py_row']} nodes", file=sys.stderr)
+            bad += 1
+        elif r["suffix"]:
+            print(f"SUFFIX-FRAME {r['name']}: {r['suffix']} frames", file=sys.stderr)
             bad += 1
         elif r["cartesian"] and r["name"] not in ALLOWED_CARTESIAN:
             print(f"CARTESIAN {r['name']}", file=sys.stderr)

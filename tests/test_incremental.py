@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from fireball_data_processing_spark.plans.heuristics import (
-    STREAM_SAFE,
+    SIMPLE,
     heuristics_matrix,
 )
 from fireball_data_processing_spark.plans.incremental import (
@@ -49,7 +49,8 @@ def test_chunked_merge_equals_single_pass(spark):
 def test_finalized_matches_batch_matrix_exactly(spark):
     ev = load_table(spark, SMOKE, "events")
     inc = finalize_heuristics(heuristic_partials(ev, S))
-    exact_names = tuple(n for n in STREAM_SAFE if n != "num_participants_approx")
+    # the finalized set minus its one sketch column
+    exact_names = tuple(n for n in SIMPLE if n != "num_participants")
     batch = heuristics_matrix(ev, S, names=exact_names)
     inc_sel = inc.select(inc.columns[0], *exact_names)
     assert _rows(inc_sel) == _rows(batch)

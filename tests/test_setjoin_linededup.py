@@ -160,6 +160,32 @@ def test_prefix_length_fp_boundary(spark):
             p.unpersist()
 
 
+def test_length_filter_keeps_jaccard_exactly_tau(spark):
+    """A pair at Jaccard exactly tau passes the length filter, where
+    tau * |A| rounds up in IEEE: tau = 0.55, |A| = 100 and B the first 55
+    shingles of A (0.55 * 100 is 55.00000000000001 > 55)."""
+    from fireball_data_processing_spark.operators.setjoin import (
+        prefix_candidates,
+        set_similarity_join,
+    )
+
+    words = [f"w{i:03d}" for i in range(100)]
+    sets = spark.createDataFrame(
+        [(d, w) for d, n in ((1, 100), (2, 55)) for w in words[:n]],
+        "doc_id bigint, shingle string",
+    )
+    pins: list = []
+    try:
+        got = [tuple(r) for r in prefix_candidates(sets, 0.55, pins).collect()]
+    finally:
+        for p in pins:
+            p.unpersist()
+    assert got == [(1, 2)]
+    docs = _docs(spark, [(1, " ".join(words)), (2, " ".join(words[:55]))])
+    pairs = set_similarity_join(docs, threshold=0.55, k=1).collect()
+    assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in pairs] == [(1, 2, 0.55)]
+
+
 def test_set_similarity_bad_threshold(spark):
     from fireball_data_processing_spark.operators.setjoin import set_similarity_join
 

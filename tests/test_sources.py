@@ -660,3 +660,65 @@ def test_snapshot_refreshes_of_one_results_dir_serialize(spark, tmp_path):
     assert errors == [] and counts == [18] * len(threads)
     with open(tmp_path / "res" / "snapshot" / "manifest.json") as f:
         assert len(json.load(f)["generations"]) == 1
+
+
+# -- the one-task instance read ----------------------------------------------
+_GATE = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+
+@pytest.fixture()
+def multi_chunk_corpus(tmp_path):
+    """Instance ``m``: three good chunks around a corrupt one; instance
+    ``big``: 4,000 events in 4 chunks."""
+    root = tmp_path / "corpus"
+    for c in (0, 2, 3):
+        _write_chunk(root / "m" / f"chunk-{c:03d}.jsonl.gz",
+                     [_msg("m", c * 10 + k) for k in range(3)])
+    (root / "m" / "chunk-001.jsonl.gz").write_bytes(b"not gzip")
+    for c in range(4):
+        _write_chunk(root / "big" / f"chunk-{c:03d}.jsonl.gz",
+                     [_msg("big", c * 1000 + k) for k in range(1000)])
+    return str(root)
+
+
+def _exchanges(df):
+    return df._jdf.queryExecution().executedPlan().toString().count("Exchange")
+
+
+def test_small_lookup_reads_in_one_task(spark, multi_chunk_corpus, tmp_path):
+    """An instance under the gate plans no exchange and its lookup runs at
+    most 2 jobs; seq is still 1..n in file-then-line order across the
+    corrupt chunk."""
+    from fireball_data_processing_spark.dataset import FireballDataset
+
+    ds = FireballDataset(spark, multi_chunk_corpus, results_dir=str(tmp_path / "res"))
+    assert _exchanges(ds.events("m")) == 0
+    rows = []
+    assert _jobs_started(spark, lambda: rows.extend(ds.events("m").collect())) <= 2
+    assert [r["seq"] for r in rows] == list(range(1, 10))
+    assert [r["timestamp"] for r in rows] == [float(c * 10 + k) for c in (0, 2, 3)
+                                              for k in range(3)]
+    assert _jobs_started(spark, lambda: list(ds.stream_events("m"))) <= 2
+
+
+def test_lookup_above_gate_keeps_range_plan(spark, multi_chunk_corpus, tmp_path):
+    """With the gate below the instance's bytes, the hash and range
+    exchanges return; the stream is line-for-line the one-task stream, and
+    the large instance is pulled in more than one partition."""
+    from fireball_data_processing_spark.dataset import FireballDataset
+
+    ds = FireballDataset(spark, multi_chunk_corpus, results_dir=str(tmp_path / "res"))
+    one_task = {cid: "".join(ds.stream_events(cid)) for cid in ("m", "big")}
+    assert _exchanges(ds.events("big")) == 0
+    prev = spark.conf.get(_GATE)
+    spark.conf.set(_GATE, "1b")
+    try:
+        assert _exchanges(ds.events("big")) == 2
+        assert ds.events("big").rdd.getNumPartitions() > 1
+        for cid in ("m", "big"):
+            assert "".join(ds.stream_events(cid)) == one_task[cid]
+        assert ds.events("m").collect() == _full_scan_events(spark, multi_chunk_corpus, "m")
+    finally:
+        spark.conf.set(_GATE, prev)
+    lines = one_task["big"].splitlines()
+    assert [json.loads(line)["seq"] for line in lines] == list(range(1, 4001))
