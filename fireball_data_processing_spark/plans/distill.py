@@ -118,12 +118,19 @@ def assemble_triples(
 def author_filter(triples: DataFrame, allowed_authors: Column) -> DataFrame:
     """distill2 (reference distill2_authors.py:61-64): keep only
     before/after utterances authored by the command author or a DM.
-    ``allowed_authors`` is an array column of permitted author ids."""
+    ``allowed_authors`` is an array column of permitted author ids. It is
+    evaluated once per row into a scratch column that the filters read:
+    referenced inside the lambda, an expression such as
+    ``array(cmd_author, dm)`` is rebuilt once per array element."""
+    allowed = "__allowed_authors"
     keep = lambda col: F.filter(  # noqa: E731
-        F.col(col), lambda m: F.array_contains(allowed_authors, m["author_id"])
+        F.col(col), lambda m: F.array_contains(F.col(allowed), m["author_id"])
     )
-    return triples.withColumn("before_payloads", keep("before_payloads")).withColumn(
-        "after_payloads", keep("after_payloads")
+    return (
+        triples.withColumn(allowed, allowed_authors)
+        .withColumn("before_payloads", keep("before_payloads"))
+        .withColumn("after_payloads", keep("after_payloads"))
+        .drop(allowed)
     )
 
 

@@ -10500,7 +10500,10 @@ def _pca_oracle(dim: int = 64, n_iter: int = 6, tail: str | None = None) -> str:
     mean, every per-vector projection, every matvec component, the norm,
     and the normalized iterate each step (the kmeans contract).
     ``tail`` overrides the final SELECT (queries that PROJECT with the
-    fitted component instead of reporting it)."""
+    fitted component instead of reporting it). The centered values and
+    each step's projections and iterate are MATERIALIZED: every step
+    reads its iterate twice (the matvec and its norm), so an inlined
+    iterate re-evaluates the whole trajectory behind it."""
     parts = [
         f"""
 WITH x AS (
@@ -10508,7 +10511,7 @@ WITH x AS (
   FROM embeddings, UNNEST(generate_series(1, {dim})) AS t(d)
 ),
 mu AS (SELECT d, ROUND(AVG(val), 8) AS mu FROM x GROUP BY 1),
-c AS (
+c AS MATERIALIZED (
   SELECT x.vec_id, x.d, x.val - mu.mu AS cv
   FROM x JOIN mu USING (d)
 ),
@@ -10518,7 +10521,7 @@ v0 AS (SELECT d, ROUND(1.0 / SQRT({dim}), 8) AS v FROM mu)"""
     for t in range(1, n_iter + 1):
         parts.append(
             """,
-s{t} AS (
+s{t} AS MATERIALIZED (
   SELECT c.vec_id, ROUND(SUM(c.cv * v.v), 8) AS s
   FROM c JOIN v{p} v USING (d) GROUP BY 1
 ),
@@ -10527,7 +10530,7 @@ u{t} AS (
   FROM c JOIN s{t} s USING (vec_id) GROUP BY 1
 ),
 n{t} AS (SELECT ROUND(SQRT(SUM(u * u)), 8) AS nrm FROM u{t}),
-v{t} AS (SELECT d, ROUND(u / nrm, 8) AS v FROM u{t}, n{t})""".format(
+v{t} AS MATERIALIZED (SELECT d, ROUND(u / nrm, 8) AS v FROM u{t}, n{t})""".format(
                 t=t, p=t - 1
             )
         )

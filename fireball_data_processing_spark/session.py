@@ -68,6 +68,19 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # --- generated-class cache (static: read only at session start) ---
+        #     Spark's default keeps 100 compiled classes. An LRU cache
+        #     smaller than a cyclic working set misses on every lookup, so a
+        #     repeated pass would recompile all of its classes (~1 s of
+        #     Janino) and never run warm JIT code. Distinct classes, counted
+        #     with an unbounded cache: 142 over a fireball_batch run, 162
+        #     over catalog_sf0.1, 3,249 for one scan of the whole catalog at
+        #     sf0.01 (+114 new on a second scan). 8192 covers the catalog
+        #     with 2x headroom, and the cap bounds metaspace: after two
+        #     catalog scans it held 222.7 MB with every class kept, 197.1 MB
+        #     under the default (9,971 compiles, most unloaded again), i.e.
+        #     ~8 KB per kept class.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
